@@ -7,6 +7,39 @@ import org.apache.spark.sql.DataFrame
   */
 object BenchProbe {
 
+  /** Parses `SPARK_GRAFT_CONF="k=v,k=v"` — session-conf overrides for
+    * A/B probing without a recompile per value. A comma separates two
+    * entries only when a `key=` token follows it, so a list-valued conf
+    * (`k=a,b`) keeps its commas; text without `=` is ignored.
+    */
+  def parseConf(s: String): Seq[(String, String)] =
+    s.split(",(?=[^,=]+=)").toSeq.filter(_.contains("=")).map { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      k -> v
+    }
+
+  /** One `[stage]` line per completed stage: wall, task run /
+    * deserialize / GC time, input rows, shuffle read and write rows and
+    * MB, shuffle write time and spill.
+    */
+  private def stageListener = new org.apache.spark.scheduler.SparkListener {
+    override def onStageCompleted(
+        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val si = sc.stageInfo
+      val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
+      val m = si.taskMetrics
+      println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
+        f"dur=${ms.getOrElse(-1L)}%6d ms run=${m.executorRunTime}%6d " +
+        f"deser=${m.executorDeserializeTime}%5d gc=${m.jvmGCTime}%5d " +
+        f"in=${m.inputMetrics.recordsRead}%10d " +
+        f"shufR=${m.shuffleReadMetrics.recordsRead}%10d/${m.shuffleReadMetrics.totalBytesRead >> 20}%5d MB " +
+        f"shufW=${m.shuffleWriteMetrics.recordsWritten}%10d/${m.shuffleWriteMetrics.bytesWritten >> 20}%5d MB " +
+        f"shufWms=${m.shuffleWriteMetrics.writeTime / 1000000}%5d " +
+        f"spill=${m.memoryBytesSpilled >> 20}%5d/${m.diskBytesSpilled >> 20}%5d MB " +
+        si.name.take(56))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "ref"
     val reps = if (args.length > 1) args(1).toInt else 5
@@ -18,36 +51,15 @@ object BenchProbe {
     val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
     val mb = sys.env.getOrElse("SPARK_GRAFT_MAXPART_MB", "8").toLong
     spark.conf.set("spark.sql.files.maxPartitionBytes", (mb << 20).toString)
-    // SPARK_GRAFT_CONF="k=v,k=v": arbitrary session-conf overrides for
-    // A/B probing dials (e.g. spark.graft.bpe.partitions) without a
-    // recompile per value
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",")
-      .filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(
+      parseConf(_).foreach { case (k, v) => spark.conf.set(k, v) })
 
-    // SPARK_GRAFT_STAGES=1: per-stage telemetry (duration, input rows,
-    // shuffle read/write rows + bytes) for ANY probe — the generic form
-    // of the scaledstages/pqstages listeners, so an optimization round
-    // can attribute a workload's wall to its exchanges without writing
-    // a bespoke probe per query (guide §1.1/§7.1).
+    // SPARK_GRAFT_STAGES=1: per-stage telemetry for ANY probe, so an
+    // optimization round can attribute a workload's wall to its
+    // exchanges without writing a bespoke probe per query (guide
+    // §1.1/§7.1)
     if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val si = sc.stageInfo
-            val ms = for {s <- si.submissionTime; c <- si.completionTime}
-              yield c - s
-            val m = si.taskMetrics
-            println(f"[stage] id=${si.stageId}%4d tasks=${si.numTasks}%4d " +
-              f"dur=${ms.getOrElse(-1L)}%6d ms in=${m.inputMetrics.recordsRead}%10d " +
-              f"shufR=${m.shuffleReadMetrics.recordsRead}%10d/${m.shuffleReadMetrics.totalBytesRead >> 20}%5d MB " +
-              f"shufW=${m.shuffleWriteMetrics.recordsWritten}%10d/${m.shuffleWriteMetrics.bytesWritten >> 20}%5d MB " +
-              f"spill=${m.memoryBytesSpilled >> 20}%5d MB ${si.name.take(56)}")
-          }
-        })
+      spark.sparkContext.addSparkListener(stageListener)
 
     def mk(): DataFrame =
       if (name == "ref") {
@@ -341,38 +353,6 @@ object BenchProbe {
         spark.read.parquet(p))
       println(s"[probe] ccstats x$factor: docs=$d edges=$e " +
         s"hot_buckets_dropped=$h")
-      spark.stop(); return
-    }
-    if (name == "relax8") {
-      // deep-rounds relaxation probe (r14 verdict #6 closure): bfs /
-      // harmonic / lpa at rounds=8 with checkpointEvery=4 over the x20
-      // pair graph — the rounds dial grown past the gate's 4 with the
-      // lineage cut every 4 rounds (without it, round r's lazy plan
-      // nests all r-1 predecessors and re-analysis cost compounds).
-      // BfsSpec/LpaSpec pin that the checkpointed path is
-      // value-identical; this probe is the wall-clock/lineage evidence.
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      val pairs = graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(p), ordered = false)
-        .select("a_id", "b_id").localCheckpoint(true)
-      // releasable variants (r16 ADVICE #4 closure): consume, then
-      // free the surviving state + edge checkpoints — the probe now
-      // demonstrates the lifecycle a long-lived sweep would need
-      // instead of pinning three state-sized frames until exit
-      def time1(label: String)(mk: => (DataFrame, () => Unit)): Unit = {
-        val t0 = System.nanoTime()
-        val (df, release) = mk
-        df.write.mode("overwrite").format("noop").save()
-        release()
-        println(f"[probe] relax8 $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      time1("bfs rounds=8 cp=4")(graft.queries.Dedup.bfsFromPairsReleasable(
-        pairs, graft.queries.Dedup.BFS_SEEDS, 8, 4))
-      time1("harmonic rounds=8 cp=4")(
-        graft.queries.Dedup.harmonicFromPairsReleasable(
-          pairs, graft.queries.Dedup.BFS_SEEDS, 8, 4))
-      time1("lpa rounds=8 cp=4")(graft.queries.Dedup.lpaFromPairsReleasable(
-        pairs, 8, 4))
       spark.stop(); return
     }
     if (name == "scaledknng") {
@@ -670,33 +650,6 @@ object BenchProbe {
       }
       spark.stop(); return
     }
-    if (name == "simhashstages") {
-      // per-stage timing of the SimHash pair pipeline at x20: where do
-      // the ~38 s go between tokenize+count agg, 60-sum vote agg,
-      // block join, and pair dedup?
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      def mkQ() = Bench.simhashPairs(spark, p)
-      (1 to 2).foreach(_ => mkQ().write.mode("overwrite").format("noop").save())
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          val tm = si.taskMetrics
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  run=${tm.executorRunTime}%6d " +
-            f"gc=${tm.jvmGCTime}%5d spill=${tm.diskBytesSpilled / 1000000}%5d " +
-            f"in=${tm.inputMetrics.recordsRead}%9d " +
-            f"shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-            f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(40)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      mkQ().write.mode("overwrite").format("noop").save()
-      println(f"[probe] simhash total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
     if (name == "scaledparts") {
       // stage-by-stage timing of the CURRENT flat-column pair pipeline
       // (mirrors Dedup.minhashPairsFrom; the array-signature variant
@@ -777,185 +730,13 @@ object BenchProbe {
       (1 to 2).foreach(_ => Bench.refWordcount12m(spark, warmFullPath)
         .write.mode("overwrite").format("noop").save())
       Bench.pageTouch(refPath)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          val tm = si.taskMetrics
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  run=${tm.executorRunTime}%6d " +
-            f"deser=${tm.executorDeserializeTime}%5d gc=${tm.jvmGCTime}%5d " +
-            f"shufWms=${tm.shuffleWriteMetrics.writeTime / 1000000}%5d " +
-            f"in=${tm.inputMetrics.recordsRead}%9d " +
-            f"shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-            f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(40)}")
-        }
-      })
+      spark.sparkContext.addSparkListener(stageListener)
       (1 to 3).foreach { i =>
         val t0 = System.nanoTime()
         Bench.refWordcount12m(spark, refPath)
           .write.mode("overwrite").format("noop").save()
         println(f"[probe] refcold run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       }
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
-    if (name == "refstages" || name == "reffilestages" || name == "refbstages") {
-      // stage-by-stage timing of the BASELINE.md workload-A job: where
-      // do the ~0.9 s go between scan+partial, merge agg, and sort?
-      // (refbstages: same listener over the workload-B skew corpus)
-      val p = if (name == "refbstages") Bench.prepareRefCorpusB(spark)
-              else Bench.prepareRefCorpus(spark)
-      def mkRef() =
-        if (name == "reffilestages") graft.operators.WordCount.fromFile(spark, p)
-        else Bench.refWordcount12m(spark, p)
-      (1 to 3).foreach { _ =>
-        mkRef().write.mode("overwrite").format("noop").save()
-      }
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          val tm = si.taskMetrics
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  run=${tm.executorRunTime}%6d " +
-            f"deser=${tm.executorDeserializeTime}%5d gc=${tm.jvmGCTime}%5d " +
-            f"shufWms=${tm.shuffleWriteMetrics.writeTime / 1000000}%5d " +
-            f"in=${tm.inputMetrics.recordsRead}%9d " +
-            f"shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-            f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(40)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      mkRef().write.mode("overwrite").format("noop").save()
-      println(f"[probe] ref total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
-    if (name == "ccstages") {
-      // per-stage timing of the scaled CC loop (pairs gen + checkpoint
-      // + edge build + label rounds)
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      def mkQ() = graft.queries.Dedup.clustersFrom(
-        spark.read.parquet(p), ordered = false)
-      (1 to 2).foreach(_ => mkQ().write.mode("overwrite").format("noop").save())
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          val tm = si.taskMetrics
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  run=${tm.executorRunTime}%6d " +
-            f"gc=${tm.jvmGCTime}%5d spill=${tm.diskBytesSpilled / 1000000}%5d " +
-            f"in=${tm.inputMetrics.recordsRead}%9d " +
-            f"shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-            f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(40)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      mkQ().write.mode("overwrite").format("noop").save()
-      println(f"[probe] cc total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
-    if (name == "ccseq") {
-      // Reproduce the BENCH session's state when the CC runs start:
-      // ref workloads (7+7+amortized) then minhash x3, then time CC x3
-      // with per-run prints — isolates which predecessor keeps the CC
-      // loop off its fresh-session steady state (~8 s).
-      import org.apache.spark.sql.functions.col
-      def noop(df: DataFrame): Unit =
-        df.write.mode("overwrite").format("noop").save()
-      noop(SparkEntry.queries("q_topk")(spark, sfDir))
-      val refPath = Bench.prepareRefCorpus(spark)
-      (1 to 7).foreach(_ => noop(Bench.refWordcount12m(spark, refPath)))
-      val refBPath = Bench.prepareRefCorpusB(spark)
-      (1 to 7).foreach(_ => noop(Bench.refWordcount12m(spark, refBPath)))
-      (1 to 2).foreach { _ =>
-        val five = (1 to 5).map(_ => spark.read
-          .format("graft.sources.ChunkedTextSource").load(refBPath))
-          .reduce(_ union _)
-        noop(graft.operators.WordCount.counts(five, col("value")))
-      }
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        noop(Bench.scaledMinhash(spark, p))
-        println(f"[probe] ccseq mh run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      (1 to 3).foreach { i =>
-        val t0 = System.nanoTime()
-        noop(graft.queries.Dedup.clustersFrom(
-          spark.read.parquet(p), ordered = false))
-        println(f"[probe] ccseq cc run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      }
-      spark.stop(); return
-    }
-    if (name == "substrstages") {
-      // per-stage timing of the exact-substring span pipeline at x20
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      def mkQ() = graft.queries.Dedup.duplicatedSpansFrom(
-        spark.read.parquet(p), graft.queries.Dedup.SUBSTR_L)
-      (1 to 2).foreach(_ => mkQ().write.mode("overwrite").format("noop").save())
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          val tm = si.taskMetrics
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  run=${tm.executorRunTime}%6d " +
-            f"gc=${tm.jvmGCTime}%5d spill=${tm.diskBytesSpilled / 1000000}%5d " +
-            f"in=${tm.inputMetrics.recordsRead}%9d " +
-            f"shufR=${tm.shuffleReadMetrics.recordsRead}%9d " +
-            f"shufW=${tm.shuffleWriteMetrics.recordsWritten}%9d  ${si.name.take(40)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      mkQ().write.mode("overwrite").format("noop").save()
-      println(f"[probe] substr total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
-    if (name == "scaledstages") {
-      val p = Bench.prepareScaledDocs(spark, sfDir)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  in=${si.taskMetrics.inputMetrics.recordsRead}%10d " +
-            f"shufR=${si.taskMetrics.shuffleReadMetrics.recordsRead}%10d " +
-            f"shufW=${si.taskMetrics.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.take(60)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      Bench.scaledMinhash(spark, p).write.mode("overwrite").format("noop").save()
-      println(f"[probe] scaledmh total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      Thread.sleep(2000)
-      spark.stop(); return
-    }
-    if (name == "pqstages") {
-      val p = Bench.prepareScaledEmb(spark, sfDir)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val si = sc.stageInfo
-          val ms = for {s <- si.submissionTime; c <- si.completionTime} yield c - s
-          println(f"[stage] id=${si.stageId}%3d tasks=${si.numTasks}%4d " +
-            f"dur=${ms.getOrElse(-1L)}%6d ms  in=${si.taskMetrics.inputMetrics.recordsRead}%10d " +
-            f"shufR=${si.taskMetrics.shuffleReadMetrics.recordsRead}%10d " +
-            f"shufW=${si.taskMetrics.shuffleWriteMetrics.recordsWritten}%10d  ${si.name.take(60)}")
-        }
-      })
-      val t0 = System.nanoTime()
-      graft.queries.Similarity.pqTopkFrom(spark.read.parquet(p))
-        .write.mode("overwrite").format("noop").save()
-      println(f"[probe] scaledpq total: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       Thread.sleep(2000)
       spark.stop(); return
     }

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QueryModule, Tables}
 import graft.functions.Text
 import graft.operators.DedupOps
+import graft.plans.RoundLoop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -450,45 +451,21 @@ object Dedup extends QueryModule {
   /** The CC label-propagation loop over an arbitrary (a_id, b_id) pair
     * set — the core [[clustersFrom]] runs on MinHash pairs and
     * dedup_winnow_clusters runs on winnow-fingerprint pairs.
+    *
+    * Empty graph: an empty pair set labels every doc with its own id
+    * (every component a singleton); the convergence count over zero
+    * changed labels reads 0, so the loop runs no round.
     */
   def ccFromPairs(docs: DataFrame, pairs: DataFrame,
       ordered: Boolean = true): DataFrame = {
-    // Phase telemetry behind an env flag (r15 verdict #1 adjudication):
-    // each localCheckpoint below is EAGER, so wall time between marks
-    // is the real cost of that phase. Zero overhead when unset.
-    val ccDiag = sys.env.get("SPARK_GRAFT_CC_DIAG").contains("1")
-    var diagT0 = System.nanoTime()
-    def mark(label: => String): Unit = if (ccDiag) {
-      val sec = (System.nanoTime() - diagT0) / 1e9 // before label's counts
-      System.err.println(f"[cc] $label: $sec%.3f s")
-      diagT0 = System.nanoTime()
-    }
     // label frames are <= |corpus| keys — broadcast them into the edge
     // scan when the corpus is within broadcast reach (size-gated, same
     // policy as the signature re-attach); the EDGE set, |pairs|-sized,
     // must never be the build side. Past reach the hint drops away and
     // every loop join runs as a key shuffle.
     val hint = DedupOps.sizeHint(docs)
-    // The edge list (2x pairs, alive every round) is the loop's big
-    // retained frame. Built in ONE pass: each pair explodes into both
-    // directions inside the same job, so the candidate pipeline
-    // executes exactly once and only one frame is ever materialized
-    // (a pairs.union(pairs.swapped) subplan embedded the pipeline
-    // twice; a pin-pairs-then-union shape paid a second checkpoint).
-    // Stored SERIALIZED unconditionally: UnsafeRows pack ~3x tighter
-    // than deserialized objects — the form that kept the x100 corpus
-    // (50M directed edges) inside a 32 GiB heap where deserialized
-    // OOM'd 8 GiB — and an A/B at x20 showed the per-round
-    // deserialization tax is within measurement noise of the
-    // deserialized form's GC cost.
-    val edges = pairs
-      .select(explode(array(
-        struct(col("a_id").as("src"), col("b_id").as("dst")),
-        struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    mark(s"edges checkpoint${if (ccDiag) s" (${edges.count()} rows)" else ""}")
+    // The edge list (2x pairs) is the loop's big retained frame.
+    val edges = symmetrized(pairs)
     // Round 1 collapsed into a join-free aggregation: with labels
     // initialized to ids, min neighbor LABEL == min neighbor ID, so the
     // heaviest round (every node active) is one groupBy over the edge
@@ -499,7 +476,6 @@ object Dedup extends QueryModule {
       .select(col("id"),
         least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"))
       .localCheckpoint()
-    mark("lab1 (round-1 min + checkpoint)")
     // CONTRACT, then solve (Kiveris et al.'s star-contraction family):
     // lab1 maps every node into its own component (itself or a direct
     // neighbor), so collapsing nodes onto their round-1 labels preserves
@@ -522,50 +498,45 @@ object Dedup extends QueryModule {
       .distinct()
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    mark(s"cEdges contraction${if (ccDiag) s" (${cEdges.count()} rows)" else ""}")
     // the full edge set is dead from here on — release it NOW, so the
     // loop runs with only the contracted remnant + one label frame
     // retained (vs pinning the |pairs|-sized frame for the whole loop)
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(edges)
     val cNodes = lab1.select(col("label").as("id")).distinct()
-    // join-free round 1 again, now on the contracted graph
+    // join-free round 1 again, now on the contracted graph. The state
+    // carries each node's previous label next to its label, so the
+    // convergence count and the next frontier read the checkpoint
+    // instead of re-executing the join; before round 1 "previous" is
+    // the node's own id.
     val cNbr0 = cEdges.groupBy("src").agg(min("dst").as("nbr_min"))
-    var labels = cNodes
+    val init = cNodes
       .join(hint(cNbr0), col("id") === col("src"), "left")
-      .select(col("id"),
+      .select(col("id"), col("id").as("old_label"),
         least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"))
-      .localCheckpoint()
-    // the checkpointed frame of the CURRENT round — the handle the loop
-    // releases once the next round is materialized
-    var labelsCp = labels
-    // frontier = nodes whose label changed last round: only THEIR labels
-    // can improve a neighbor this round, so later rounds join the edge
-    // set against a shrinking frame instead of the whole corpus (the
-    // BFS-frontier refinement of label propagation)
-    var frontier = labels.filter(col("label") < col("id")).select("id", "label")
-    var changed = frontier.count()
-    var rounds = 1
+    val changed = count_if(col("label") < col("old_label")).as("changed")
     val maxRounds = 50
-    while (changed > 0 && rounds < maxRounds) {
+    val res = RoundLoop.run(RoundLoop.checkpoint(init, changed),
+        maxRounds - 1, changed) { state => // the initial state is round 1
+      // frontier = nodes whose label changed last round: only THEIR
+      // labels can improve a neighbor this round, so later rounds join
+      // the edge set against a shrinking frame instead of the whole
+      // corpus (the BFS-frontier refinement of label propagation)
+      val frontier = state.filter(col("label") < col("old_label"))
+        .select(col("id").as("nid"), col("label"))
       val nbr = cEdges
-        .join(hint(frontier.withColumnRenamed("id", "nid")),
-          col("dst") === col("nid"))
+        .join(hint(frontier), col("dst") === col("nid"))
         .groupBy("src").agg(min("label").as("nbr_min"))
       // pointer halving against the PREVIOUS round's materialized
       // mapping: label <- min(label, prevLabel(label)). prevLabel(x)
       // is the label of a node in the same component, so the min stays
       // within-component (sound); composing mappings collapses chain
       // diameter logarithmically, so long chains converge in O(log d)
-      // rounds instead of d — measured on the x20 corpus this cut the
-      // tail rounds (frontiers of 8 then 2 nodes, each still paying a
-      // checkpoint + count job) out of the loop. Using the previous
-      // (already checkpointed) frame instead of this round's own
-      // output avoids re-executing the neighbor join for the lookup.
-      val lut = labels.select(col("id").as("lid"), col("label").as("l2"))
-      // ONE materialization per round: checkpoint carries old + new
-      // label, so the convergence count and the next frontier read the
-      // checkpoint instead of re-executing the join
-      val next = labels.join(hint(nbr), col("id") === col("src"), "left")
+      // rounds instead of d. Using the previous (already checkpointed)
+      // frame instead of this round's own output avoids re-executing
+      // the neighbor join for the lookup.
+      val lut = state.select(col("id").as("lid"), col("label").as("l2"))
+      state.select("id", "label")
+        .join(hint(nbr), col("id") === col("src"), "left")
         .select(col("id"), col("label").as("old_label"),
           least(col("label"), coalesce(col("nbr_min"), col("label")))
             .as("stepped"))
@@ -573,42 +544,31 @@ object Dedup extends QueryModule {
         .select(col("id"), col("old_label"),
           least(col("stepped"), coalesce(col("l2"), col("stepped")))
             .as("label"))
-        .localCheckpoint()
-      // `next` is materialized (localCheckpoint is eager): the previous
-      // round's checkpoint blocks are dead — release them, or a loop of
-      // R rounds pins R corpus-sized frames in the block manager and
-      // starves every query that follows in the session.
-      org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(labelsCp)
-      labelsCp = next
-      frontier = next.filter(col("label") < col("old_label")).select("id", "label")
-      changed = frontier.count()
-      labels = next.select("id", "label")
-      rounds += 1
-    }
-    mark(s"loop ($rounds rounds)")
+    }((_, m) => m("changed") == 0)
     // The cap exists to bound a pathological input (diameter > 50 means
     // chains of thousands of near-identical docs, not dedup cliques);
     // returning silently-unconverged labels would diverge from the
     // transitive-closure semantics, so fail loudly instead. (The
     // contraction above has already collapsed cliques, so the cap
     // budget is spent only on genuine long inter-cluster chains.)
-    if (changed > 0)
+    if (res.metrics("changed") > 0)
       throw new IllegalStateException(
         s"ccFromPairs: label propagation not converged after $maxRounds " +
-          s"rounds ($changed labels still improving); pair-graph diameter " +
-          "exceeds the cap — raise it or pre-contract the long chains")
+          s"rounds (${res.metrics("changed")} labels still improving); " +
+          "pair-graph diameter exceeds the cap — raise it or pre-contract " +
+          "the long chains")
     // Compose: final(id) = ccLabel(lab1(id)). Materialize the composed
     // corpus-sized frame once, then release every loop frame — only the
     // one final label frame outlives the call, whatever the caller does
     // with it.
     val out = lab1
-      .join(hint(labels.select(col("label").as("cluster"),
+      .join(hint(res.state.select(col("label").as("cluster"),
         col("id").as("cid"))), col("label") === col("cid"))
       .select(col("id").as("doc_id"), col("cluster"))
       .localCheckpoint()
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(cEdges)
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(lab1)
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(labelsCp)
+    res.release()
     if (ordered) out.orderBy("doc_id") else out
   }
 
@@ -1382,7 +1342,7 @@ object Dedup extends QueryModule {
 
   /** [[trianglesFromPairs]] plus a release hook for the three
     * checkpoints the pass pins (pairs, degree, adjacency — two of them
-    * edges-sized), the bfs/lpa releaseHook pattern (r17 ADVICE):
+    * edges-sized), a [[graft.plans.RoundLoop.releaser]] (r17 ADVICE):
     * long-lived sweeps call the hook once the result is materialized;
     * session-exiting callers may discard it.
     */
@@ -1456,7 +1416,7 @@ object Dedup extends QueryModule {
       .select(col("c.doc_id").as("doc_id"), col("c.n").as("n"))
       .groupBy("doc_id").agg(sum("n").as("n_tri"))
       .orderBy("doc_id"),
-      releaseHook(pairs, deg, adj))
+      RoundLoop.releaser(pairs, deg, adj))
   }
 
   /** Edge-sampling modulus for [[triEstimateFrom]]: keep ~1/5 of the
@@ -1589,7 +1549,10 @@ object Dedup extends QueryModule {
     * union would duplicate the (possibly expensive, possibly
     * uncheckpointed) upstream pair plan — e.g. the bench feeds the raw
     * minhash pair pipeline here, which a union would compute twice.
-    * Returned eagerly checkpointed (serialized, spillable).
+    * Returned eagerly checkpointed, SERIALIZED: UnsafeRows pack ~3x
+    * tighter than deserialized objects — the form that kept the x100
+    * corpus (50M directed edges) inside a 32 GiB heap — and an A/B at
+    * x20 put the per-round deserialization tax within noise.
     */
   private def symmetrized(pairs0: DataFrame): DataFrame =
     pairs0.select(explode(array(
@@ -1648,8 +1611,7 @@ object Dedup extends QueryModule {
     // by the rounds dial, <= 8 everywhere) — and only a drop big
     // enough to shrink the edge list materially pays a re-checkpoint.
     // The relation per round is identical either way.
-    val cpMinDropped = edges0.sparkSession.conf.get(
-      "spark.graft.graph.kcoreCpMinDropped", "1000000").toLong
+    val cpMinDropped = 1000000L
     var edgesCp = edges0 // last materialized frame (released on replace)
     var edges = edges0 // current, possibly lazy, frame
     // dropped-node checkpoints still read by the lazy anti-join chain;
@@ -1743,23 +1705,22 @@ object Dedup extends QueryModule {
     * later round is the identity — the bounded oracle unroll and the
     * exited loop compute the same relation.
     *
+    * Empty graph: an empty pair set yields zero rows — the degree sum
+    * over no nodes reads 0, and the first round converges on it.
+    *
     * @return (doc_id, coreness) for every node of the pair graph
     */
   def corenessFromPairs(pairs0: DataFrame,
       rounds: Int = CORENESS_ROUNDS): DataFrame = {
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(df)
     val edges = symmetrized(pairs0)
     // sum drives convergence; the node count (constant across rounds)
     // gates the per-round estimate-table broadcast — both ride the
-    // degree checkpoint job as observed metrics (r18: no separate
-    // collect job)
-    val obs0 = new org.apache.spark.sql.Observation()
-    var c = edges.groupBy("src").agg(count(lit(1)).as("c"))
-      .select(col("src").as("id"), col("c"))
-      .observe(obs0, sum(col("c")).as("s"), count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    var cSum = obs0.get("s").asInstanceOf[Long]
+    // degree checkpoint job as observed metrics
+    val sumC = sum(col("c")).as("s")
+    val init = RoundLoop.checkpoint(
+      edges.groupBy("src").agg(count(lit(1)).as("c"))
+        .select(col("src").as("id"), col("c")),
+      sumC, count(lit(1)).as("n"))
     // r17 (guide §2.4/§3.1): the estimate table c is nodes-sized (two
     // longs per node) while the edge list is m-sized — joining them as
     // a shuffle join re-exchanges (and SMJ-sorts) the whole edge list
@@ -1770,12 +1731,9 @@ object Dedup extends QueryModule {
     // the old shuffle shape). Measured x100: 1313 s -> see
     // OPTIMIZATION_r17.md.
     val cHint: DataFrame => DataFrame =
-      if (graphNodesBcast(pairs0.sparkSession,
-        obs0.get("n").asInstanceOf[Long])) broadcast
+      if (graphNodesBcast(pairs0.sparkSession, init._2("n"))) broadcast
       else identity
-    var r = 0
-    var converged = false
-    while (r < rounds && !converged) {
+    val res = RoundLoop.run(init, rounds, sumC) { c =>
       // H per node from the CAPPED VALUE HISTOGRAM, not a raw neighbor
       // array: values clamp to CORENESS_MAX_H (H over clamped values =
       // min(H, cap) — exact whenever coreness <= cap), then one
@@ -1784,14 +1742,7 @@ object Dedup extends QueryModule {
       // buffer on ANY graph, where a raw collect_list row is as wide
       // as a hub's degree. H = max over desc-sorted (v, n) of
       // min(v, cumulative n) — the citation-histogram identity.
-      //
-      // r18 (guide §1.2): the convergence sum rides the checkpoint job
-      // as an observed metric instead of a second per-round job — the
-      // loop is driver-round-bound, so per-round job count is the
-      // fixed cost that multiplies by `rounds`. Values unchanged: the
-      // metric sums the same rows the checkpoint materializes.
-      val obs = new org.apache.spark.sql.Observation()
-      val next = edges
+      edges
         .join(cHint(c.select(col("id").as("dst"),
           least(col("c"), lit(CORENESS_MAX_H.toLong)).as("cv"))), "dst")
         .groupBy(col("src"), col("cv").as("v"))
@@ -1807,16 +1758,10 @@ object Dedup extends QueryModule {
               greatest(acc("best"),
                 least(x("v"), acc("cum") + x("n"))).as("best")),
             acc => acc("best")).as("c"))
-        .observe(obs, sum(col("c")).as("s"))
-        .localCheckpoint(true)
-      val nextSum = obs.get("s").asInstanceOf[Long]
-      release(c)
-      c = next
-      if (nextSum == cSum) converged = true // pointwise <= + equal sum
-      cSum = nextSum
-      r += 1
-    }
-    c.select(col("id").as("doc_id"), col("c").as("coreness"))
+    }((prev, m) => prev.get("s").contains(m("s"))) // pointwise <= + equal sum
+    // the result reads only the final estimate checkpoint
+    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(edges)
+    res.state.select(col("id").as("doc_id"), col("c").as("coreness"))
       .orderBy("doc_id")
   }
 
@@ -1862,61 +1807,27 @@ object Dedup extends QueryModule {
     *
     * @return (doc_id, dist) for every node within `rounds` hops of a
     *         seed; seeds themselves at dist 0
+    *
+    * Join shape (r18, measured): the rounds are a plain fold, so the
+    * whole loop compiles into ONE query and Spark's ReusedExchange
+    * computes the m-row edge exchange ONCE for all rounds; the
+    * per-round state table is a SHUFFLE join against the edge list, NOT
+    * a broadcast — r17's per-round state broadcast paid a broadcast-
+    * build job per round that re-executed the entire state subplan
+    * (the same pattern doubled scaled_lpa_x20, see [[lpaFromPairs]]).
+    * [[corenessFromPairs]] keeps its broadcast because it materializes
+    * every round, so there is no cross-round exchange reuse to lose.
+    * The symmetrized edge checkpoint stays pinned while the lazy result
+    * can still read it.
     */
   def bfsFromPairs(pairs0: DataFrame, seeds: Int = BFS_SEEDS,
-      rounds: Int = BFS_ROUNDS): DataFrame =
-    bfsFromPairs(pairs0, seeds, rounds, 0)
-
-  /** `checkpointEvery > 0` inserts an eager localCheckpoint of the
-    * state table every N rounds (releasing the previous one — the CC
-    * loop's block-manager discipline), so the rounds dial can grow
-    * past the default 4 without accumulating union/agg lineage that
-    * re-plans quadratically. The gate query keeps 0 (4 bounded rounds
-    * need no checkpoint and MUST stay job-free at plan time); the
-    * deep-rounds path is exercised by `BenchProbe relax8` and pinned
-    * value-identical in BfsSpec.
-    *
-    * Lifetime note (r15/r16 ADVICE, closed r17): the LAST surviving
-    * checkpoint is deliberately NOT released here — the lazy result
-    * still reads it. Callers that outlive the result (a long-lived
-    * sweep running deep rounds) should use
-    * [[bfsFromPairsReleasable]]: MATERIALIZE the result (the returned
-    * frame is a few lazy rounds on top of the last checkpoint — the
-    * final round never checkpoints), then call the hook, which frees
-    * the last state checkpoint AND the symmetrized edge checkpoint.
-    * After the hook fires the frame cannot be recomputed (local
-    * checkpoints have no lineage). This 4-arg form discards the hook
-    * — fine for session-exiting probes and tests.
-    */
-  def bfsFromPairs(pairs0: DataFrame, seeds: Int,
-      rounds: Int, checkpointEvery: Int): DataFrame =
-    bfsFromPairsReleasable(pairs0, seeds, rounds, checkpointEvery)._1
-
-  /** See [[bfsFromPairs]]: returns (result, release hook).
-    *
-    * Join shape (r18, measured): the per-round state table stays a
-    * SHUFFLE join against the edge list, NOT a broadcast. With
-    * `checkpointEvery == 0` the whole loop compiles into ONE query, and
-    * Spark's ReusedExchange computes the m-row edge exchange ONCE for
-    * all rounds — the r17 per-round state broadcast removed that
-    * already-amortized exchange but paid a per-round broadcast-build
-    * job that re-executed the entire state subplan (no checkpoint in
-    * between), plus an eager distinct-count gate job that broke this
-    * function's job-free-at-plan-time contract. The same pattern
-    * doubled scaled_lpa_x20 (see [[lpaFromPairsReleasable]]);
-    * [[corenessFromPairs]] keeps its broadcast because its convergence
-    * collect materializes every round, so there is no cross-round
-    * exchange reuse to lose there.
-    */
-  def bfsFromPairsReleasable(pairs0: DataFrame, seeds: Int,
-      rounds: Int, checkpointEvery: Int): (DataFrame, () => Unit) = {
+      rounds: Int = BFS_ROUNDS): DataFrame = {
     val edges = symmetrized(pairs0)
-    var dist = edges.select(col("src").as("id")).distinct()
+    val seed = edges.select(col("src").as("id")).distinct()
       .orderBy("id").limit(seeds)
       .select(col("id"), lit(0L).as("dist"))
-    var distCp: DataFrame = null
-    (1 to rounds).foreach { r =>
-      dist = edges
+    (1 to rounds).foldLeft(seed) { (dist, _) =>
+      edges
         // SHUFFLE_HASH on the nodes-bounded state side — same
         // sort-elision rationale as the LPA round join (guide §3.1)
         .join(dist.select(col("id").as("dst"), col("dist"))
@@ -1924,30 +1835,8 @@ object Dedup extends QueryModule {
         .select(col("src").as("id"), (col("dist") + 1L).as("dist"))
         .union(dist)
         .groupBy("id").agg(min("dist").as("dist"))
-      if (checkpointEvery > 0 && r % checkpointEvery == 0 && r < rounds) {
-        val next = dist.localCheckpoint() // eager: safe to drop the old
-        if (distCp != null)
-          org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(distCp)
-        distCp = next
-        dist = next
-      }
-    }
-    val lastCp = distCp
-    (dist.select(col("id").as("doc_id"), col("dist"))
-      .orderBy("doc_id"),
-      releaseHook(lastCp, edges))
-  }
-
-  /** Release hook over the frames a relaxation loop retains: the final
-    * surviving state checkpoint (if any) + the symmetrized edge
-    * checkpoint. Idempotent; only call once the consumer is done with
-    * the RESULT frame (checkpoints have no lineage to recompute from).
-    */
-  private def releaseHook(cps: DataFrame*): () => Unit = {
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    () => if (released.compareAndSet(false, true))
-      cps.filter(_ != null).foreach(
-        org.apache.spark.sql.GraftShims.releaseLocalCheckpoint)
+    }.select(col("id").as("doc_id"), col("dist"))
+      .orderBy("doc_id")
   }
 
   /** Harmonic centrality from the BFS seed set, bounded depth:
@@ -1960,34 +1849,17 @@ object Dedup extends QueryModule {
     * the state key, so the table is (seed, node, dist) — seeds× the
     * BFS state, same one-join-one-agg round shape, still no windows.
     * Per-term integer floor BEFORE the sum keeps the aggregate
-    * order-free and the unrolled oracle engine-identical.
+    * order-free and the unrolled oracle engine-identical. Fused
+    * shuffle-join round shape as in [[bfsFromPairs]].
     */
   def harmonicFromPairs(pairs0: DataFrame, seeds: Int = BFS_SEEDS,
-      rounds: Int = BFS_ROUNDS): DataFrame =
-    harmonicFromPairs(pairs0, seeds, rounds, 0)
-
-  /** `checkpointEvery` as in [[bfsFromPairs]] — the (seed, node, dist)
-    * state is seeds× larger, so deep rounds need the lineage cut even
-    * sooner here.
-    */
-  def harmonicFromPairs(pairs0: DataFrame, seeds: Int,
-      rounds: Int, checkpointEvery: Int): DataFrame =
-    harmonicFromPairsReleasable(pairs0, seeds, rounds, checkpointEvery)._1
-
-  /** See [[bfsFromPairs]]'s lifetime note: (result, release hook).
-    * Shuffle-join round shape, not broadcast — same fused-query
-    * exchange-reuse rationale as [[bfsFromPairsReleasable]] (r18).
-    */
-  def harmonicFromPairsReleasable(pairs0: DataFrame, seeds: Int,
-      rounds: Int, checkpointEvery: Int): (DataFrame, () => Unit) = {
+      rounds: Int = BFS_ROUNDS): DataFrame = {
     val edges = symmetrized(pairs0)
     val seedIds = edges.select(col("src").as("id")).distinct()
       .orderBy("id").limit(seeds)
-    var dist = seedIds.select(col("id").as("seed"), col("id"),
-      lit(0L).as("dist"))
-    var distCp: DataFrame = null
-    (1 to rounds).foreach { r =>
-      dist = edges
+    (1 to rounds).foldLeft(seedIds.select(col("id").as("seed"), col("id"),
+        lit(0L).as("dist"))) { (dist, _) =>
+      edges
         // SHUFFLE_HASH on the (seeds x nodes)-bounded state side —
         // same sort-elision rationale as the LPA round join
         .join(dist.select(col("seed"), col("id").as("dst"),
@@ -1996,22 +1868,12 @@ object Dedup extends QueryModule {
           (col("dist") + 1L).as("dist"))
         .union(dist)
         .groupBy("seed", "id").agg(min("dist").as("dist"))
-      if (checkpointEvery > 0 && r % checkpointEvery == 0 && r < rounds) {
-        val next = dist.localCheckpoint()
-        if (distCp != null)
-          org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(distCp)
-        distCp = next
-        dist = next
-      }
-    }
-    val lastCp = distCp
-    (dist.filter(col("dist") > 0)
+    }.filter(col("dist") > 0)
       .groupBy(col("id").as("doc_id"))
       .agg(count(lit(1)).as("n_seeds_reached"),
         sum(expr("1000000 DIV dist")).as("harmonic_e6"))
       .orderBy(col("harmonic_e6").desc, col("doc_id"))
-      .limit(25),
-      releaseHook(lastCp, edges))
+      .limit(25)
   }
 
   /** Walk length for [[walksFromPairs]] and its oracle. */
@@ -2085,37 +1947,23 @@ object Dedup extends QueryModule {
     * mirrored in the oracle as max-count-then-min-label.
     *
     * @return (doc_id, community) for every non-isolated node
-    */
-  def lpaFromPairs(pairs0: DataFrame, rounds: Int = LPA_ROUNDS): DataFrame =
-    lpaFromPairs(pairs0, rounds, 0)
-
-  /** `checkpointEvery` as in [[bfsFromPairs]]. */
-  def lpaFromPairs(pairs0: DataFrame, rounds: Int,
-      checkpointEvery: Int): DataFrame =
-    lpaFromPairsReleasable(pairs0, rounds, checkpointEvery)._1
-
-  /** See [[bfsFromPairs]]'s lifetime note: (result, release hook).
     *
     * Join shape (r18, measured — the r17 regression): each round's
-    * label re-attach is a SHUFFLE join, not a broadcast. With
-    * `checkpointEvery == 0` (the gate query and the x20 bench row) the
-    * 4 rounds compile into ONE query and ReusedExchange pays the m-row
-    * edge exchange ONCE for all of them; r17's per-round label
-    * broadcast traded that single amortized exchange for 4 broadcast
-    * -build jobs, each re-executing the whole un-checkpointed label
-    * subplan — driver-measured 9.5 -> 18.0 s at identical stage load
-    * (r17 VERDICT), 7.6 -> ~14 s in quiet-box probes. Reverted; see
-    * [[corenessFromPairs]] for why ITS broadcast stays (per-round
-    * materialization means no exchange reuse to lose).
+    * label re-attach is a SHUFFLE join, not a broadcast. The rounds
+    * are a plain fold, so they compile into ONE query and
+    * ReusedExchange pays the m-row edge exchange ONCE for all of them;
+    * r17's per-round label broadcast traded that single amortized
+    * exchange for 4 broadcast-build jobs, each re-executing the whole
+    * un-checkpointed label subplan — driver-measured 9.5 -> 18.0 s at
+    * identical stage load (r17 VERDICT). See [[corenessFromPairs]] for
+    * why ITS broadcast stays (per-round materialization means no
+    * exchange reuse to lose).
     */
-  def lpaFromPairsReleasable(pairs0: DataFrame, rounds: Int,
-      checkpointEvery: Int): (DataFrame, () => Unit) = {
+  def lpaFromPairs(pairs0: DataFrame, rounds: Int = LPA_ROUNDS): DataFrame = {
     val edges = symmetrized(pairs0)
-    var lab = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-    var labCp: DataFrame = null
-    (1 to rounds).foreach { r =>
-      lab = edges
+    (1 to rounds).foldLeft(edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("lab"))) { (lab, _) =>
+      edges
         // SHUFFLE_HASH on the nodes-sized label side (guide §3.1): the
         // edge exchange is reused across rounds, but SortMergeJoin
         // still re-SORTS the m-row edge partitions EVERY round — a
@@ -2129,21 +1977,10 @@ object Dedup extends QueryModule {
         .groupBy("src")
         .agg(max(struct(col("n"), (-col("lab")).as("neg"))).as("m"))
         .select(col("src").as("id"), (-col("m.neg")).as("lab"))
-      if (checkpointEvery > 0 && r % checkpointEvery == 0 && r < rounds) {
-        val next = lab.localCheckpoint()
-        if (labCp != null)
-          org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(labCp)
-        labCp = next
-        lab = next
-      }
-    }
-    // edges stays checkpointed until the caller consumes the (lazy)
-    // result; the hook releases it together with the last state cp
-    val lastCp = labCp
-    (lab.select(col("id").as("doc_id"), col("lab").as("community"))
-      .orderBy("doc_id"),
-      releaseHook(lastCp, edges))
+    }.select(col("id").as("doc_id"), col("lab").as("community"))
+      .orderBy("doc_id")
   }
+
   /** Per-cluster quality report over the near-dup CC partition — the
     * curation dial for whether cluster-dedup is collapsing genuine
     * duplication communities (dense, low-boundary) or families glued
@@ -2394,7 +2231,7 @@ object Dedup extends QueryModule {
           .as("jacc_mille"))
       .orderBy(col("jacc_mille").desc, col("a_id"), col("b_id"))
       .limit(25),
-      releaseHook(pairs, adj))
+      RoundLoop.releaser(pairs, adj))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -2523,11 +2360,8 @@ object Dedup extends QueryModule {
     //    shape); isolated docs keep the base rank. ----------------------
     "graph_pagerank" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val pairs = minhashPairsFrom(docs, ordered = false).select("a_id", "b_id")
-      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-        .localCheckpoint(true, // serialized: see ccFromPairs
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      val edges = symmetrized(
+        minhashPairsFrom(docs, ordered = false).select("a_id", "b_id"))
       val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       val nodes = docs.select(col("doc_id").as("id"))
       var rank = nodes.select(col("id"), lit(1000000L).as("r"))

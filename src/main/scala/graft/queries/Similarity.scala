@@ -208,25 +208,17 @@ object Similarity extends QueryModule {
     // Materialize the array form ONCE and each round's k-row centroid
     // frame (trivial): as lazy frames the final plan nests every
     // previous round, so the scan and each earlier assign+update
-    // re-execute inside every broadcast build. Same block-manager
-    // discipline as the CC loop: each round releases the previous
-    // centroid checkpoint, and the array form is released once the
-    // final assignment is materialized — nothing outlives the call but
-    // the one returned frame.
+    // re-execute inside every broadcast build. The round loop releases
+    // each superseded centroid checkpoint, and the array form is
+    // released once the final assignment is materialized — nothing
+    // outlives the call but the one returned frame.
     val va = arrayForm(emb).localCheckpoint()
-    val seeds = seedsOf(emb, k)
-    var cent = va.join(seeds, "vec_id").select(col("c"), col("va").as("cv"))
-    var centCp: DataFrame = null
-    (1 to rounds).foreach { _ =>
-      val next = updateStep(va, assignStep(va, cent)).localCheckpoint()
-      if (centCp != null)
-        org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(centCp)
-      centCp = next
-      cent = next
-    }
-    val out = assignStep(va, cent).localCheckpoint()
-    if (centCp != null)
-      org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(centCp)
+    val cent0 = va.join(seedsOf(emb, k), "vec_id")
+      .select(col("c"), col("va").as("cv"))
+    val loop = graft.plans.RoundLoop.run((cent0, Map.empty), rounds)(
+      cent => updateStep(va, assignStep(va, cent)))((_, _) => false)
+    val out = assignStep(va, loop.state).localCheckpoint()
+    loop.release()
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(va)
     out
   }

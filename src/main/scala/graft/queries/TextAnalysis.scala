@@ -177,21 +177,18 @@ object TextAnalysis extends QueryModule {
     // depth stays bounded at CP_EVERY batch layers. Values are
     // untouched — the replace chain is applied identically either way
     // (BpeSpec pins batched == sequential).
-    // Both dials are confs (r17 ADVICE — consistent with the
-    // spark.graft.graph.* discipline) with the measured local defaults:
-    //   checkpointEvery — deeper lineage = fewer materialization jobs
-    //     but more replace batches re-executed per scan (and a longer
-    //     nested call_function("replace") chain: past ~4 batch layers
+    // The two constants are the measured local values:
+    //   CP_EVERY — deeper lineage = fewer materialization jobs but more
+    //     replace batches re-executed per scan (and a longer nested
+    //     call_function("replace") chain: past ~4 batch layers
     //     wide-batch rounds risk codegen-size fallback);
-    //   partitions — the seg table is vocab-sized (~100k short rows at
+    //   SEG_PARTS — the seg table is vocab-sized (~100k short rows at
     //     the deep-merge regime) and every one of the ~hundred rounds
     //     launches tasks over it: 32 partitions paid 4x the task
     //     scheduling for no parallelism gain on rows this small. Kept
-    //     >1 so a giant-vocab corpus still spreads; a cluster sizes it
-    //     to |vocab| / a few hundred k rows per task.
-    val conf = words.sparkSession.conf
-    val CP_EVERY = conf.get("spark.graft.bpe.checkpointEvery", "4").toInt
-    val SEG_PARTS = conf.get("spark.graft.bpe.partitions", "8").toInt
+    //     >1 so a giant-vocab corpus still spreads.
+    val CP_EVERY = 4
+    val SEG_PARTS = 8
     var segCp = words.select(col("freq"), segInit(col("w")).as("seg"))
       .coalesce(SEG_PARTS)
       .localCheckpoint() // vocab-sized; truncates the per-round lineage

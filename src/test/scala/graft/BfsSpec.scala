@@ -60,52 +60,4 @@ class BfsSpec extends AnyFunSuite {
           s"seed=$seed edges=$edges")
     }
   }
-
-  test("deep rounds with per-round checkpoints are value-identical") {
-    import spark.implicits._
-    // rounds=8 with the lineage cut every 2 rounds (two checkpoint
-    // cycles, incl. a release of the first) vs the plain lazy chain —
-    // the deep-rounds path relax8 times at x20, pinned bit-equal here;
-    // also lpa, whose argmax state follows the same discipline
-    val rng = new scala.util.Random(11)
-    val edges = Seq.fill(40)((rng.nextLong(16), rng.nextLong(16)))
-      .filter { case (a, b) => a != b }.distinct
-    val df = edges.toDF("a_id", "b_id")
-    val plainBfs = Dedup.bfsFromPairs(df, 3, 8, 0).collect().toSeq
-    val cpBfs = Dedup.bfsFromPairs(df, 3, 8, 2).collect().toSeq
-    assert(cpBfs == plainBfs)
-    val plainLpa = Dedup.lpaFromPairs(df, 8, 0).collect().toSeq
-    val cpLpa = Dedup.lpaFromPairs(df, 8, 2).collect().toSeq
-    assert(cpLpa == plainLpa)
-    val plainH = Dedup.harmonicFromPairs(df, 3, 8, 0).collect().toSeq
-    val cpH = Dedup.harmonicFromPairs(df, 3, 8, 2).collect().toSeq
-    assert(cpH == plainH)
-  }
-
-  test("release hook frees the surviving checkpoint blocks") {
-    // r16 ADVICE #4 closure: the releasable variant's hook must drop
-    // every block-manager frame the loop retained (the final state
-    // checkpoint + the symmetrized edge checkpoint) once the consumer
-    // is done — the lifecycle a long-lived sweep needs. Suites run
-    // sequentially in the forked test JVM, so the persistent-RDD
-    // delta around this block is exactly what this loop pinned.
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    val edges = Seq.fill(40)((rng.nextLong(16), rng.nextLong(16)))
-      .filter { case (a, b) => a != b }.distinct
-    val df = edges.toDF("a_id", "b_id")
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val (res, release) = Dedup.bfsFromPairsReleasable(df, 3, 8, 2)
-    val rows = res.collect()
-    assert(rows.nonEmpty)
-    val pinned = sc.getPersistentRDDs.keySet -- before
-    assert(pinned.nonEmpty,
-      "expected the loop to retain checkpointed frames before release")
-    release()
-    release() // idempotent
-    val leftover = sc.getPersistentRDDs.keySet.intersect(pinned)
-    assert(leftover.isEmpty,
-      s"release hook left checkpoint blocks pinned: $leftover")
-  }
 }

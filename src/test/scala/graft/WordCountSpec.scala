@@ -25,13 +25,18 @@ class WordCountSpec extends AnyFunSuite {
   private def tmps(content: String): Path =
     tmp(content.getBytes(StandardCharsets.UTF_8))
 
+  // FIXTURES.md §1: the reference's bundled inputs, byte for byte (46 B, 24 B)
+  private lazy val input1 =
+    tmps("word1 word2 w3 4\nword5 w6 dsfg\nword1 word1 w3\n").toString
+  private lazy val input2 = tmps("foo bar qux\nbar bar baz\n").toString
+
   test("golden: reference test_input1") {
-    assert(countFile("/root/reference/test_input1") ==
+    assert(countFile(input1) ==
       Seq("4=1", "dsfg=1", "w3=2", "w6=1", "word1=3", "word2=1", "word5=1"))
   }
 
   test("golden: reference test_input2") {
-    assert(countFile("/root/reference/test_input2") ==
+    assert(countFile(input2) ==
       Seq("bar=3", "baz=1", "foo=1", "qux=1"))
   }
 
@@ -72,8 +77,8 @@ class WordCountSpec extends AnyFunSuite {
   test("cli: wrong argc / bad n / missing file / empty file -> rc 1") {
     assert(WordCountCli.run(Array(), () => spark) == 1)
     assert(WordCountCli.run(Array("x"), () => spark) == 1)
-    assert(WordCountCli.run(Array("/root/reference/test_input1", "0"), () => spark) == 1)
-    assert(WordCountCli.run(Array("/root/reference/test_input1", "abc"), () => spark) == 1)
+    assert(WordCountCli.run(Array(input1, "0"), () => spark) == 1)
+    assert(WordCountCli.run(Array(input1, "abc"), () => spark) == 1)
     assert(WordCountCli.run(Array("/no/such/file", "2"), () => spark) == 1)
     val e = tmp(Array[Byte]())
     assert(WordCountCli.run(Array(e.toString, "2"), () => spark) == 1)
@@ -87,14 +92,14 @@ class WordCountSpec extends AnyFunSuite {
   }
 
   test("cli: happy path returns 0, clamps partitions to file size") {
-    assert(WordCountCli.run(Array("/root/reference/test_input1", "100"), () => spark) == 0)
+    assert(WordCountCli.run(Array(input1, "100"), () => spark) == 0)
   }
 
   test("cli: clamp prints the reference's notice line (main.c:120-124)") {
-    val fileLen = new java.io.File("/root/reference/test_input1").length()
+    val fileLen = new java.io.File(input1).length()
     val out = new java.io.ByteArrayOutputStream()
     val rc = Console.withOut(new java.io.PrintStream(out)) {
-      WordCountCli.run(Array("/root/reference/test_input1", "100"), () => spark)
+      WordCountCli.run(Array(input1, "100"), () => spark)
     }
     assert(rc == 0)
     val first = out.toString.linesIterator.next()
@@ -105,7 +110,7 @@ class WordCountSpec extends AnyFunSuite {
   test("cli: --write-out streams the result to files, no driver collect") {
     val dir = "target/tmp/cli_out"
     val rc = WordCountCli.run(
-      Array("/root/reference/test_input1", "4", "--write-out", dir), () => spark)
+      Array(input1, "4", "--write-out", dir), () => spark)
     assert(rc == 0)
     val lines = spark.read.text(dir).collect().map(_.getString(0)).sorted
     assert(lines.toSeq == Seq("4=1", "dsfg=1", "w3=2", "w6=1",
