@@ -627,7 +627,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_CPUS pins the master width and shuffle partitions;
+    // unset, both follow the machine's core count
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
     // Split file scans finer than the 128 MB default so a single ~100 MB
     // text/parquet file still fans out across all cores.

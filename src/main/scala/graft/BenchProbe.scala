@@ -44,10 +44,11 @@ object BenchProbe {
     val name = if (args.nonEmpty) args(0) else "ref"
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_CPUS: probe at Bench's lower-core leg (the driver
-    // also benches at 8 cores) without a bespoke harness — same
-    // master/shuffle-partition coupling as Bench.main
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // SPARK_GRAFT_CPUS: probe at another core count without a bespoke
+    // harness — same master/shuffle-partition coupling and the same
+    // machine-core-count default as Bench.main
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
     val mb = sys.env.getOrElse("SPARK_GRAFT_MAXPART_MB", "8").toLong
     spark.conf.set("spark.sql.files.maxPartitionBytes", (mb << 20).toString)

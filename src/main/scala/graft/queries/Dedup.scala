@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * shuffle (groupBy hash / band key / block key) + a bucket-local join.
   * Nothing here is O(n^2) in the corpus — the cross-products are
   * confined to LSH buckets / prefix blocks, which is what survives a
-  * 100 TB corpus. At production scale the signature frame would be
-  * persisted before the pair join; at test SF recomputation is cheaper.
+  * 100 TB corpus. The MinHash pairs take this shape literally: one
+  * signature pass, one exchange on the band bucket, and every candidate
+  * pair born once inside its bucket (see [[candidateMatchesFromBase]]),
+  * so no pair-keyed exchange or signature re-attach join follows.
   */
 object Dedup extends QueryModule {
 
@@ -121,162 +123,109 @@ object Dedup extends QueryModule {
     if (ordered) pairs.orderBy("a_id", "b_id") else pairs
   }
 
-  /** The full MinHash+LSH near-dup pair pipeline over any (doc_id, text)
-    * frame — shared by the oracle query and the scaled bench workload.
-    *
-    * Pair generation is the classic LSH band-key SELF-JOIN, staged so
-    * every heavy step moves only primitive columns:
-    *  1. band join carries (band, bkey, doc_id) — no signatures — so a
-    *     clique-heavy corpus streams pairs through codegen'd SMJ with
-    *     AQE skew-splitting, ~24 bytes/row;
-    *  2. dropDuplicates((a,b)) on the two id longs (codegen
-    *     HashAggregate) BEFORE any scoring — each unique candidate is
-    *     scored once, not once per shared band;
-    *  3. signatures join back onto the deduped pairs (the signature
-    *     frame is |corpus|-sized, tiny next to the pair stream; at
-    *     broadcastable sizes AQE turns these into broadcast joins);
-    *  4. unrolled codegen'd estJaccard, threshold filter, total order.
-    * Earlier formulations — collect_list + interpreted nested-transform
-    * combos (quadratic per bucket, interpreted), then a join carrying
-    * both 16-long signatures through the pair dedup (GB-scale shuffle +
-    * non-codegen first(array) aggregate) — collapsed on corpora with
-    * large duplicate cliques: 75-128 s where this takes seconds.
-    */
   /** LSH candidate pairs with their integer signature match count
-    * `m` in [0, K] — the shared core of [[minhashPairsFrom]] (est
-    * Jaccard = m/K) and [[containmentPairsFrom]] (asymmetric overlap).
+    * `m` in [0, K] over any (doc_id, text) frame — the shared core of
+    * [[minhashPairsFrom]] (est Jaccard = m/K), [[containmentPairsFrom]]
+    * (asymmetric overlap) and [[lshRecallFrom]].
     */
   private def candidateMatches(docs: DataFrame,
       maxBucket: Int = MINHASH_MAX_BUCKET): DataFrame = {
     // Signatures stay as k FLAT long columns through this pipeline:
-    // fixed-length UnsafeRows through the re-attach joins, and the
-    // match-count is k direct long compares — the array form cost ~4x
-    // on the scoring stage (header decode + variable-length row copy
-    // per pair, measured on the x20 corpus).
+    // fixed-length struct fields in the bucket lists, and the match
+    // count is k direct long compares — the array form cost ~4x on the
+    // scoring stage (header decode + variable-length row copy per pair,
+    // measured on the x20 corpus).
     val base = DedupOps.minhashSignaturesFlat(docs, "doc_id", col("text"), 3, K)
     candidateMatchesFromBase(base, docs, maxBucket)
   }
 
-  /** The banding + hot-bucket-guard + pair-dedup + signature-scoring
-    * pipeline over ANY prebuilt flat signature frame
+  /** Banded-LSH candidate pairs over ANY prebuilt flat signature frame
     * (doc_id, _m0.._m{K-1}) — shared by the shingle-set pipeline above
-    * and the tf-weighted one ([[wminhashSignaturesFlat]]). `docs` is
-    * consulted only for the broadcast size gate and shuffle width.
+    * and the tf-weighted one ([[wminhashSignaturesFlat]]). Each pair
+    * `a_id < b_id` of docs sharing a band bucket of at most `maxBucket`
+    * members is BORN ONCE, already carrying its match count `m`: no
+    * band self-join, no pair dedup exchange, no signature re-attach.
+    * `docs` is consulted only for the shuffle width.
+    *
+    * Shape — one pass over the signatures, one exchange on the bucket:
+    *  1. one row per doc: doc_id, its BANDS band keys bh0..bh3
+    *     ([[flatBandKey]]), a BANDS-bit hot mask, the K signature longs;
+    *  2. explode the band keys, `repartition(nPart, bh)` and
+    *     `groupBy(bh)` into a doc_id-sorted member list; the hot-bucket
+    *     guard is the free `2 <= size <= maxBucket` filter on that row;
+    *  3. [[graft.functions.PairExplode]] fans each list out into its
+    *     `i < j` (= `a_id < b_id`) member pairs, and one codegen'd
+    *     filter + project keeps a pair only in the bucket of the FIRST
+    *     band where the two docs share a non-hot key, and scores it
+    *     with the unrolled match count of the members' own signatures.
+    *
+    * The hot mask is what makes "first shared band" decidable inside a
+    * bucket: a pair whose earlier-band bucket was over the cap was
+    * never emitted there, so the later band must emit it. Hot set =
+    * buckets with more than `maxBucket` members; there are at most
+    * |docs| x BANDS / `maxBucket` of them (empty on every corpus the
+    * repo measures), collected into ONE row and attached by ONE
+    * broadcast cross join. That set is the signature frame's only
+    * second consumer, and deliberately so: with AQE on, Spark reuses
+    * no exchange above a cached InMemoryTableScan, so over a cached
+    * input every consumer of `base` is one more full signature pass
+    * (a guard join per band would add four). Over a file scan the two
+    * consumers share one signature exchange. MinhashPairsSpec pins
+    * both counts.
+    *
+    * The bucket exchange is FIXED width: pair fan-out is sized by its
+    * quadratic OUTPUT, which AQE cannot see coming from the tiny member
+    * input, and a column-only repartition or a plain
+    * ENSURE_REQUIREMENTS exchange gets coalesced onto a handful of
+    * tasks; REPARTITION_BY_NUM is never coalesced.
+    *
+    * Bucket key = xxhash64(band index, '|'-joined band values): one
+    * long per band. A 2^-64 key collision can merge two buckets (adding
+    * candidates, or firing the guard where the oracle's exact (band,
+    * bkey) groups stay under the cap) — the same accepted collision
+    * surface as candidate generation itself; candidates are gated by
+    * their match count downstream.
     */
   private def candidateMatchesFromBase(base: DataFrame, docs: DataFrame,
       maxBucket: Int): DataFrame = {
-    // Bucket key = xxhash64(band index, band values): a single long the
-    // join sorts/compares ~10x cheaper than the multi-hash strings. A
-    // 2^-64 key collision can only ADD a candidate pair, and candidates
-    // are gated by est_jaccard >= 0.5 downstream — semantics preserved.
-    // (Band values enter the hash as the same '|'-joined decimal string
-    // the array formulation used, so bucketing semantics are unchanged.)
-    val banded = base
-      .select(col("doc_id"),
-        explode(array((0 until BANDS).map(flatBandKey): _*)).as("bh"))
-    // explicit co-partitioning at FIXED width: the pair-generating join
-    // must run across all shuffle partitions — sized by its quadratic
-    // OUTPUT, which AQE cannot see coming. Both a column-only
-    // repartition and plain ENSURE_REQUIREMENTS exchanges get coalesced
-    // down to a handful of tasks by the tiny input size, and the pair
-    // stream inherits that narrow parallelism.
-    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
-    // HOT-BUCKET GUARD: a band bucket with more than MINHASH_MAX_BUCKET
-    // members contributes QUADRATICALLY to the self-join below — the
-    // classic LSH blow-up, where a family of byte-identical docs shares
-    // every band and one bucket emits O(family^2) pairs. Skip such
-    // buckets entirely: genuine near-dup buckets are small by
-    // construction (signature agreement at >= 0.5 Jaccard), and mass
-    // exact-duplicate families belong to the exact pass UPSTREAM
-    // (pipe_dedup_cascade collapses them before LSH ever runs).
-    // Formulation: pre-agg + tiny broadcast anti-join. At most
-    // (corpus x BANDS) / cap buckets can be hot — broadcastable by
-    // construction, the same argument as edgeJaccardFrom's hub set.
-    // A "free" window-count formulation (count over bh riding the
-    // co-partition exchange, r13 verdict #6) was TRIED in round 14 and
-    // MEASURED SLOWER BY 5x: 13.0-13.5 s steady at x20 under idle load
-    // vs 2.2-3.3 s for this form under load ~15 (BenchProbe scaledmh
-    // A/B, same corpus, same session config). The window's required
-    // within-partition sort of the banded stream plus the plan-shape
-    // damage it does downstream dwarf the pre-agg's ~0.5 s — measured,
-    // not assumed; the pre-agg stays. Mirrored in every band-join
-    // oracle (HAVING count > cap on exact (band, bkey) groups), so a
-    // degenerate regenerated corpus cannot flip the gate. Collision
-    // asymmetry note: the engine counts 64-bit bh buckets while the
-    // oracle counts exact (band, bkey) groups — an xxhash64 collision
-    // merging two buckets could fire the guard where the oracle's
-    // separate buckets stay under the cap (or add candidates the
-    // oracle lacks). Both sit on the same accepted 2^-64-per-pair
-    // collision surface as candidate generation itself; keying the
-    // guard pre-hash would re-widen the join rows the single-long bh
-    // exists to narrow.
-    val hot = banded.groupBy("bh").agg(count(lit(1)).as("n"))
-      .filter(col("n") > maxBucket).select("bh")
-    val cool = banded.join(broadcast(hot), Seq("bh"), "left_anti")
-    val a = cool.select(col("bh"), col("doc_id").as("a_id"))
-      .repartition(nPart, col("bh"))
-    val b = cool.select(col("bh"), col("doc_id").as("b_id"))
-      .repartition(nPart, col("bh"))
-    // r18 (guide §5): an explicit repartition on the pair key BEFORE
-    // dropDuplicates. Duplicates come from a pair colliding in SEVERAL
-    // bands, and the stream is partitioned by bucket hash — the same
-    // pair's copies live in different map partitions, so the planner's
-    // map-side partial aggregate collapsed ~nothing while its hash map
-    // spilled the whole candidate stream (x100 measured: 30 GB of
-    // spill on the join stage). With the distribution pre-satisfied
-    // the dedup runs once, reduce-side, where the copies actually meet.
-    // The dedup exchange fans out wider than the session default: its
-    // input is the candidate stream (bands x collisions per pair — the
-    // one frame here that is QUADRATIC-ish in clique density, not
-    // corpus-sized), so at x100 a 32-way final aggregate held 12M rows
-    // per task and spilled ~38 GB. Widened ONLY past broadcast reach
-    // (the same corpus-size signal that flips the signature re-attach
-    // to shuffle joins): within reach the candidate stream fits 32-way
-    // dedup spill-free, and the narrower pair frame keeps downstream
-    // graph passes — which inherit this checkpoint's partitioning — at
-    // session-width tasks (x20 measured: a blanket 6x widened every
-    // triangle stage to 192 near-empty tasks, +4 s). The factor is a
-    // conf; the default 6x keeps 32-core sessions at 192 <
-    // spark.shuffle.sort.bypassMergeThreshold (200), below which the
-    // map side streams to per-partition files instead of sort-spilling
-    // the candidate stream (measured: 256-way re-spilled 10.5 GB).
-    // Widen gate: the SOURCE corpus scan estimate (file-size accurate,
-    // the broadcastReach signal) past a dedicated knee — candidate
-    // volume grows superlinearly with corpus bytes, and the measured
-    // 32-core knee sits between the x20 corpus (~11 MB, spill-free
-    // 32-way) and the x100 one (~55 MB, 38 GB of 32-way agg spill).
-    // Below it the narrow pair frame also keeps downstream graph
-    // passes — which inherit this checkpoint's partitioning — at
-    // session-width tasks (x20 measured: blanket widening cost +4 s of
-    // near-empty triangle tasks); above it the wide frame is what the
-    // m-row graph scans want anyway.
-    val wideMin = docs.sparkSession.conf
-      .get("spark.graft.dedup.widePairsMinBytes", (32L << 20).toString).toLong
-    val dedupParts =
-      if (docs.queryExecution.optimizedPlan.stats.sizeInBytes <= wideMin) nPart
-      else nPart * docs.sparkSession.conf
-        .get("spark.graft.dedup.pairPartsFactor", "6").toInt
-    val pairs = a.join(b, Seq("bh"))
-      .filter(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-      .repartition(dedupParts, col("a_id"), col("b_id"))
-      .dropDuplicates("a_id", "b_id")
-    // signatures re-attach via broadcast of the |corpus|-sized frame —
-    // NEVER the pair stream (AQE, estimating only the deduped row count,
-    // otherwise collects millions of pairs to the driver as a broadcast
-    // table). The hint is size-GATED (DedupOps.broadcastReach): past
-    // broadcast reach the signature frames re-attach as doc_id shuffle
-    // joins instead — the 100 TB path is a code path, not a comment.
-    val hint = DedupOps.sizeHint(docs)
-    val aSig = hint(base.select(col("doc_id").as("a_id") +:
-      (0 until K).map(i => col(s"_m$i").as(s"a_m$i")): _*))
-    val bSig = hint(base.select(col("doc_id").as("b_id") +:
-      (0 until K).map(i => col(s"_m$i").as(s"b_m$i")): _*))
-    val matches = (0 until K)
-      .map(i => when(col(s"a_m$i") === col(s"b_m$i"), 1).otherwise(0))
+    val bh = (0 until BANDS).map(b => s"bh$b")
+    val sig = (0 until K).map(i => s"_m$i")
+    val keyed = base.select(col("doc_id") +:
+      ((0 until BANDS).map(b => flatBandKey(b).as(bh(b))) ++ sig.map(col)): _*)
+    val hot = keyed.select(explode(array(bh.map(col): _*)).as("bh"))
+      .groupBy("bh").agg(count(lit(1)).as("n"))
+      .filter(col("n") > maxBucket)
+      .agg(collect_set(col("bh")).as("hot"))
+    val hmask = (0 until BANDS)
+      .map(b => when(array_contains(col("hot"), col(bh(b))), lit(1 << b))
+        .otherwise(lit(0)))
       .reduce(_ + _)
-    pairs.join(aSig, Seq("a_id")).join(bSig, Seq("b_id"))
-      .select(col("a_id"), col("b_id"), matches.cast("long").as("m"))
+    // doc_id leads the member struct: array_sort orders by it, which
+    // turns graft_pairs' i < j into a_id < b_id
+    val member = struct((Seq(col("doc_id")) ++ bh.map(col) :+ hmask.as("hmask")) ++
+      sig.map(col): _*)
+    val nPart = docs.sparkSession.sessionState.conf.numShufflePartitions
+    val buckets = keyed.crossJoin(broadcast(hot))
+      .select(explode(array(bh.map(col): _*)).as("bh"), member.as("d"))
+      .repartition(nPart, col("bh"))
+      .groupBy("bh").agg(array_sort(collect_list(col("d"))).as("ms"))
+      .filter(size(col("ms")).between(2, maxBucket))
+    // the pair's home bucket: its first band key shared outside the hot
+    // set (a shared key is one bucket, so a's hot bit is b's too)
+    val home = (0 until BANDS).foldRight(lit(null).cast("long")) { (b, later) =>
+      when(col(s"a.${bh(b)}") === col(s"b.${bh(b)}") &&
+        col("a.hmask").bitwiseAND(lit(1 << b)) === 0, col(s"a.${bh(b)}"))
+        .otherwise(later)
+    }
+    val matches = sig
+      .map(m => when(col(s"a.$m") === col(s"b.$m"), 1).otherwise(0))
+      .reduce(_ + _)
+    buckets
+      .select(col("bh"), graft.functions.PairExplode
+        .pairs(docs.sparkSession, col("ms")).as(Seq("a", "b")))
+      .filter(home === col("bh"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        matches.cast("long").as("m"))
   }
 
   def minhashPairsFrom(docs: DataFrame, ordered: Boolean = true,
@@ -332,7 +281,7 @@ object Dedup extends QueryModule {
 
   /** tf-WEIGHTED near-dup pairs: the proven banded-LSH pipeline
     * ([[candidateMatchesFromBase]] — same band keys, same hot-bucket
-    * guard, same size-gated re-attach) run over [[wminhashSignaturesFlat]],
+    * guard, same born-once pairs) run over [[wminhashSignaturesFlat]],
     * emitting estimated WEIGHTED Jaccard >= 0.5. Separates what set
     * MinHash cannot: two docs over the SAME token set but wildly
     * different repetition score 1.0 under set Jaccard and honestly
@@ -459,8 +408,8 @@ object Dedup extends QueryModule {
   def ccFromPairs(docs: DataFrame, pairs: DataFrame,
       ordered: Boolean = true): DataFrame = {
     // label frames are <= |corpus| keys — broadcast them into the edge
-    // scan when the corpus is within broadcast reach (size-gated, same
-    // policy as the signature re-attach); the EDGE set, |pairs|-sized,
+    // scan when the corpus is within broadcast reach (size-gated via
+    // DedupOps.sizeHint); the EDGE set, |pairs|-sized,
     // must never be the build side. Past reach the hint drops away and
     // every loop join runs as a key shuffle.
     val hint = DedupOps.sizeHint(docs)
@@ -2267,9 +2216,9 @@ object Dedup extends QueryModule {
         .orderBy("doc_id")),
 
     // -- MinHash + LSH candidate pairs with estimated Jaccard -------------
-    // See minhashPairsFrom for the staged scale shape (hashed band-key
-    // self-join at fixed width -> id-only pair dedup -> broadcast
-    // signature re-attach -> codegen'd Jaccard estimate).
+    // See candidateMatchesFromBase for the scale shape (fixed-width
+    // bucket exchange -> per-bucket member lists -> each pair born once
+    // in its first shared band, scored from the members' signatures).
     "dedup_minhash_pairs" -> ((s, d) =>
       minhashPairsFrom(Tables.documents(s, d))),
 

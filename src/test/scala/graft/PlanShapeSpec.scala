@@ -70,45 +70,71 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("minhash pairs: fixed-width co-partition kept, signatures broadcast") {
+  // pre-adaptive physical plan (executedPlan is an AdaptiveSparkPlanExec
+  // LEAF that collect() does not descend into)
+  private def physical(name: String): org.apache.spark.sql.execution.SparkPlan =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan
+      case p => p
+    }
+
+  private val pairIds = Set("a_id", "b_id")
+  private val docIds = pairIds + "doc_id"
+
+  private def keyNames(keys: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+    keys.flatMap(_.references.map(_.name)).toSet
+
+  test("minhash pairs: fixed-width buckets, graft_pairs, no pair-keyed agg or join") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     val p = plan("dedup_minhash_pairs")
     // the explicit fixed-width repartition must survive optimization —
-    // it is what stops AQE coalescing the quadratic pair join narrow
-    // (at tiny SF the band join itself may legitimately broadcast;
-    // on real corpora Catalyst picks SMJ over these exchanges)
+    // it is what stops AQE coalescing the quadratic pair fan-out narrow
     assert(p.contains("REPARTITION_BY_NUM"),
-      "explicit co-partitioning was optimized away:\n" + p)
-    assert(p.contains("BroadcastHashJoin"),
-      "signature re-attach must broadcast the corpus-sized frame:\n" + p)
+      "explicit bucket partitioning was optimized away:\n" + p)
+    assert(p.contains("graft_pairs"),
+      "pairs no longer generated inside the bucket lists:\n" + p)
+    // each pair is born once with its signatures at hand: no dedup
+    // aggregate and no re-attach join keyed on the pair ids
+    val exec = physical("dedup_minhash_pairs")
+    val pairAggs = exec.collect {
+      case a: BaseAggregateExec
+          if (keyNames(a.groupingExpressions) & pairIds).nonEmpty => a
+    }
+    assert(pairAggs.isEmpty, "pair-keyed aggregate back in the plan:\n" + exec)
+    val pairJoins = exec.collect {
+      case j: BaseJoinExec
+          if (keyNames(j.leftKeys ++ j.rightKeys) & pairIds).nonEmpty => j
+    }
+    assert(pairJoins.isEmpty, "pair-keyed join back in the plan:\n" + exec)
   }
 
-  test("minhash pairs past broadcast reach: re-attach degrades to shuffle join") {
+  test("minhash pairs past broadcast reach: no doc-keyed join, hot-set broadcast kept") {
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
     // Force the size gate shut (cap = 0 bytes) and disable Spark's own
-    // stats-based broadcast pick: the signature re-attach must plan as a
-    // non-broadcast join — the exact shape a 100 TB corpus gets.
+    // stats-based broadcast pick — the shape a 100 TB corpus gets.
     val conf = spark.conf
     val prevCap = conf.getOption("spark.graft.dedup.broadcastCorpusBytes")
     val prevAuto = conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       conf.set("spark.graft.dedup.broadcastCorpusBytes", "0")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val p = plan("dedup_minhash_pairs")
-      // with the gate shut the ONLY permitted broadcast is the
-      // hot-bucket guard's tiny LeftAnti build side (its size is
-      // bounded by construction: at most corpus*BANDS/cap buckets);
-      // the signature re-attaches must degrade to shuffle joins.
-      // Counted on bare operator occurrences (not a same-line "Build"
-      // conjunction) so a formatter change cannot make this vacuous
-      // (r13 advice), and the guard broadcast is REQUIRED present —
-      // its absence would mean the guard silently vanished.
-      val nBhj = "BroadcastHashJoin LeftAnti".r.findAllIn(p).size
-      assert(nBhj >= 1,
-        "hot-bucket guard LeftAnti broadcast missing from the plan:\n" + p)
-      val nInnerB = "BroadcastHashJoin Inner".r.findAllIn(p).size
-      assert(nInnerB == 0 && !p.contains("BroadcastNestedLoopJoin"),
-        "size gate shut but a non-guard broadcast join still planned:\n" + p)
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        "expected shuffle joins for the signature re-attach:\n" + p)
+      val exec = physical("dedup_minhash_pairs")
+      // no join keyed on a doc id at all: nothing re-attaches
+      // signatures, so nothing degrades to a doc-keyed shuffle join
+      val docJoins = exec.collect {
+        case j: BaseJoinExec
+            if (keyNames(j.leftKeys ++ j.rightKeys) & docIds).nonEmpty => j
+      }
+      assert(docJoins.isEmpty, "doc-keyed join in the pair plan:\n" + exec)
+      // the hot-bucket set attaches as ONE one-row broadcast — REQUIRED
+      // present, so the guard cannot vanish silently
+      val hotSet = exec.collect { case j: BroadcastNestedLoopJoinExec => j }
+      assert(hotSet.size == 1,
+        s"expected exactly one hot-set broadcast, got ${hotSet.size}:\n" + exec)
+      assert(hotSet.head.children.exists(_.toString.contains("collect_set")),
+        "the one broadcast is not the hot-set collect:\n" + exec)
     } finally {
       prevCap.fold(conf.unset("spark.graft.dedup.broadcastCorpusBytes"))(
         conf.set("spark.graft.dedup.broadcastCorpusBytes", _))
