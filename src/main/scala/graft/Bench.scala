@@ -520,18 +520,12 @@ object Bench {
     path
   }
 
-  def scaledMinhash(spark: SparkSession, path: String): DataFrame =
-    graft.queries.Dedup.minhashPairsFrom(spark.read.parquet(path),
-      ordered = false)
-
-  /** The gate's complete SimHash Hamming-LSH pair pipeline
-    * ([[graft.queries.Dedup.simhashPairsFrom]], unordered) over a
-    * prepared docs corpus. Timed per-round as scaled_simhash_x20; the
-    * scaledsimhash[100] probes reuse it.
+  /** The near-dup pair graph (a_id, b_id) of a docs corpus: the unordered
+    * MinHash pairs every scaled graph workload runs over.
     */
-  def simhashPairs(spark: SparkSession, path: String): DataFrame =
-    graft.queries.Dedup.simhashPairsFrom(spark,
-      spark.read.parquet(path), ordered = false)
+  def pairGraph(docs: DataFrame): DataFrame =
+    graft.queries.Dedup.minhashPairsFrom(docs, ordered = false)
+      .select("a_id", "b_id")
 
   /** Tiny warm corpus (1/16 of workload A, 8 partitions): exercises
     * the COLLAPSED small-input plan shape — the one workload B's 12 MB
@@ -556,9 +550,10 @@ object Bench {
     * data-scale cost forward untimed (full-size per-task token
     * maps/arenas, allocation-GC state, full-sized shuffle writes, C2
     * at real trip counts) while the first timed run still reads data
-    * the process has NEVER seen. The refcold stage probe attributed
-    * ~0.35 s of the ~0.5 s cold-vs-steady gap to exactly these
-    * first-full-scale-run costs.
+    * the process has NEVER seen. Stage telemetry of the first run after
+    * [[warmUp]] (BenchProbe `ref_wordcount_12m` with
+    * SPARK_GRAFT_STAGES=1) attributed ~0.35 s of the ~0.5 s
+    * cold-vs-steady gap to exactly these first-full-scale-run costs.
     */
   def prepareWarmCorpusFull(spark: SparkSession): String = {
     val path = "target/bench_scratch/ref_corpus_warmfull"
@@ -625,16 +620,280 @@ object Bench {
   private def runOnce(df: DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
+  val noRelease: () => Unit = () => ()
+
+  /** A workload as its untimed prepare step hands it to the timer. Each
+    * `run()` executes the workload once and returns that run's release
+    * hook ([[noRelease]] when the run pins nothing); `plan` builds the
+    * frame a run executes, for plan printing (None for a driver loop or
+    * a printed diagnostic); `done` frees what prepare pinned, once the
+    * last run is over.
+    */
+  final case class Job(run: () => (() => Unit),
+      plan: Option[() => DataFrame] = None, done: () => Unit = noRelease)
+
+  /** One named workload. `prepare(spark, sfDir, factor)` writes its
+    * corpus at scale `factor` (once per source fingerprint) or finds it,
+    * and returns the [[Job]] that `reps` timed runs execute.
+    */
+  final case class Workload(name: String, reps: Int,
+      prepare: (SparkSession, String, Int) => Job)
+
+  /** Each run builds `mk`'s frame, executes it into the noop sink, and
+    * then releases what building it pinned. */
+  def releasableJob(mk: () => (DataFrame, () => Unit)): Job =
+    Job(() => { val (df, release) = mk(); runOnce(df); release },
+      Some(() => mk()._1))
+
+  def frameJob(mk: => DataFrame): Job = releasableJob(() => (mk, noRelease))
+
+  /** Times `reps` runs of `job` with `time`, calls each run's release
+    * hook once its timing has ended, then `job.done`. The per-run
+    * seconds, in run order.
+    */
+  def measure(job: Job, reps: Int)(time: (=> Unit) => Double): Seq[Double] =
+    try (1 to reps).map { _ =>
+      var release = noRelease
+      val t = time { release = job.run() }
+      release()
+      t
+    } finally job.done()
+
+  private def docsRow(name: String, reps: Int)(
+      mk: DataFrame => DataFrame): Workload =
+    Workload(name, reps, (s, d, f) => {
+      val p = prepareScaledDocs(s, d, f)
+      frameJob(mk(s.read.parquet(p)))
+    })
+
+  private def embRow(name: String, reps: Int)(
+      mk: DataFrame => DataFrame): Workload =
+    Workload(name, reps, (s, d, f) => {
+      val p = prepareScaledEmb(s, d, f)
+      frameJob(mk(s.read.parquet(p)))
+    })
+
+  /** A graph operator over [[pairGraph]] of the docs corpus; `op`
+    * returns its result and the hook releasing what it pinned. */
+  private def pairsRow(name: String)(
+      op: DataFrame => (DataFrame, () => Unit)): Workload =
+    Workload(name, 2, (s, d, f) => {
+      val p = prepareScaledDocs(s, d, f)
+      releasableJob(() => op(pairGraph(s.read.parquet(p))))
+    })
+
+  /** A stream replay over the events corpus. A replay returns a
+    * checkpointed frame (the sink view is dropped inside it), released
+    * after each run so ~1.9M session rows per run don't accumulate.
+    */
+  private def streamRow(name: String)(replay: (SparkSession,
+      org.apache.spark.sql.types.StructType, String) => DataFrame): Workload =
+    Workload(name, 2, (s, d, f) => {
+      val p = prepareScaledEvents(s, d, f)
+      val schema = s.read.parquet(p).schema
+      releasableJob(() => {
+        val df = replay(s, schema, p)
+        (df, graft.plans.RoundLoop.releaser(df))
+      })
+    })
+
+  /** 200 BPE merges trained off a word-frequency table that prepare
+    * builds and checkpoints (untimed: production trains many merge
+    * schedules off one persisted word table). */
+  private def bpeRow(name: String, reps: Int, textCol: String)(
+      corpus: (SparkSession, String, Int) => DataFrame): Workload =
+    Workload(name, reps, (s, d, f) => {
+      val words = corpus(s, d, f)
+        .select(graft.functions.TokenizeExplode
+          .tokenize(s, lower(col(textCol))).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq"))
+        .localCheckpoint()
+      Job(() => {
+        graft.queries.TextAnalysis.bpeTrainRounds(words, 200)
+        noRelease
+      }, done = graft.plans.RoundLoop.releaser(words))
+    })
+
+  /** The scaled workloads, in sweep order, each with its rep count: the
+    * sweep runs every row at factor 20 and reports its min (and its
+    * first run in the cold total); BenchProbe runs one row at factor 20,
+    * or at 100 under its `_x100` name.
+    *
+    * They run before the headline queries: they are the biggest
+    * allocators, i.e. the entries most sensitive to accumulated heap
+    * state. Min of 3: at steady state each rep is seconds, and a single
+    * outside-load spike can no longer spoil the reported minimum
+    * (observed once: a transient tripled one rep of the CC loop, whose
+    * per-round barriers are the most load-sensitive shape here; its
+    * first run also pays Janino compiles for every per-round plan).
+    */
+  val scaled: Seq[Workload] = {
+    import graft.queries.{Dedup, EventsTime, Similarity}
+    Seq(
+      docsRow("scaled_minhash_x20", 3)(Dedup.minhashPairsFrom(_, ordered = false)),
+      docsRow("scaled_cc_x20", 3)(Dedup.clustersFrom(_, ordered = false)),
+      // decontamination at x20: the shingle join against a 1-in-50
+      // benchmark slice, 100k docs / ~20M shingles
+      docsRow("scaled_contam_x20", 3)(docs => Dedup.contaminationFrom(
+        docs, docs.filter(col("doc_id") % 50 === 0))),
+      // the same decontamination behind the Bloom semi-join pushdown:
+      // corpus shingles that miss the one-row broadcast bitset never
+      // reach the exact join
+      docsRow("scaled_bloom_x20", 3)(docs => Dedup.bloomContaminationFrom(
+        docs, docs.filter(col("doc_id") % 50 === 0))),
+      // sparse-hit decontamination: bench slice = 1/200 of the corpus, so
+      // only ~10% of corpus docs share shingles with it — the regime the
+      // bloom pushdown is FOR (the dense pair above, where every doc is a
+      // near-dup of a bench doc, shows its overhead bound instead: ~100%
+      // of shingles pass the filter and the exact join does full work)
+      docsRow("scaled_contam_sparse_x20", 3)(docs => Dedup.contaminationFrom(
+        docs, docs.filter(col("doc_id") % 1000 === 0))),
+      docsRow("scaled_bloom_sparse_x20", 3)(docs =>
+        Dedup.bloomContaminationFrom(
+          docs, docs.filter(col("doc_id") % 1000 === 0))),
+      // context-window chunking at x20: pure generator throughput over
+      // ~20M tokens (map-only, no shuffle)
+      docsRow("scaled_chunk_x20", 3)(docs => docs.select(col("doc_id"),
+        graft.functions.ChunkExplode.chunks(docs.sparkSession, col("text"), 64, 48)
+          .as(Seq("chunk_idx", "chunk", "n_tokens")))),
+      // winnowing fingerprints at x20: WinnowExplode generator throughput
+      // (byte scan + window fold per doc, ~45 fps/doc emitted)
+      docsRow("scaled_winnow_x20", 3)(graft.queries.TextAnalysis.winnowFrom),
+      // EXACT similarity join at x20, in its production regime (t=0.9,
+      // 5-gram shingles — see ppjoinPairsFrom on saturated shingle
+      // spaces): prefix + length filtering must keep candidates bounded
+      // on a corpus that is one giant pile of 20-member dup cliques
+      docsRow("scaled_ppjoin_x20", 3)(
+        Dedup.ppjoinPairsFrom(_, tNum = 9, tDen = 10, shingleN = 5)),
+      // sorted-neighborhood blocking at x20: two partition-parallel rank
+      // windows + the offset equi-join + exact verification over 100k
+      // docs — the pair-generation shape the LSH/prefix rows don't time
+      docsRow("scaled_snm_x20", 3)(Dedup.sortedNeighborhoodPairsFrom(_)),
+      // inverted-index sparse cosine at x20: df cap bounds every posting
+      // bucket even when replication inflates every term's frequency
+      docsRow("scaled_sparse_x20", 3)(Similarity.sparseCosinePairsFrom(_)),
+      // incremental ingest at x20: doc_id % 50 == 0 picks exactly rep 0
+      // of every 20-replica pack = a 5% new batch vs the 95% index —
+      // cost must track the BATCH, not the corpus
+      docsRow("scaled_inc_x20", 3)(docs => Dedup.incrementalPairsFrom(
+        docs.filter(col("doc_id") % 50 =!= 0),
+        docs.filter(col("doc_id") % 50 === 0))),
+      // exact-substring span dedup at x20 (~20M token positions through
+      // the rolling-fingerprint pass; the 20-replica packs make nearly
+      // every window a duplicate — worst case for the verify stage)
+      docsRow("scaled_substr_x20", 3)(
+        Dedup.duplicatedSpansFrom(_, Dedup.SUBSTR_L)),
+      // ANN at x20 (40k vectors, 20 distinct probes, planted jittered
+      // near-dup cliques — see prepareScaledEmb): IVF = index assignment
+      // + nprobe-pruned scan; PQ = full subspace-k-means index build +
+      // ADC shortlist + exact re-rank, the build dominating by design
+      // (production amortizes it across queries; timing it keeps the
+      // whole cost honest). Recall@10 >= 0.9 vs brute force at this exact
+      // regime is gated in AnnRecallSpec.
+      embRow("scaled_ivf_x20", 3)(e => Similarity.ivfTopkFrom(e.sparkSession,
+        e, scaledEmbQueryPred, topK = 10)),
+      embRow("scaled_pq_x20", 2)(
+        Similarity.pqTopkFrom(_, scaledEmbQueryPred, topK = 10)),
+      embRow("scaled_sq_x20", 2)(
+        Similarity.sqTopkFrom(_, scaledEmbQueryPred, topK = 10)),
+      // Structured Streaming at x20 (2M events / 30k users replayed via
+      // AvailableNow): exercises the real state-store path — watermark
+      // advance, window eviction, merging session state — at 20x the
+      // gate's volume, not just the logical plan.
+      streamRow("scaled_stream_window_x20")(EventsTime.windowedReplayOn),
+      streamRow("scaled_stream_session_x20")(EventsTime.sessionReplayOn),
+      // chained stateful (dedup -> window agg) and transformWithState
+      // (typed state in RocksDB) at the same 20x volume: state for BOTH
+      // operators of the chain, and the RocksDB column-family path, under
+      // real data pressure rather than the sf0.1 gate's 100k events
+      streamRow("scaled_stream_chain_x20")(EventsTime.chainReplayOn),
+      streamRow("scaled_stream_tws_x20")(EventsTime.twsReplayOn),
+      // BPE training at x20, driven to the 31-word-vocab corpus's merge
+      // EXHAUSTION (~100 merges in ~64 batched driver rounds): times the
+      // distributed pair-count + batched-merge loop per round. The
+      // deep-merge regime is scaled_bpe_deep200 below.
+      bpeRow("scaled_bpe_x20", 2, "text")(
+        (s, d, f) => s.read.parquet(prepareScaledDocs(s, d, f))),
+      // SimHash Hamming-LSH pairs at x20: the sf0.1 gate query times
+      // signatures only; this runs the banded pair join + popcount gate
+      // over 100k docs
+      docsRow("scaled_simhash_x20", 3)(docs =>
+        Dedup.simhashPairsFrom(docs.sparkSession, docs, ordered = false)),
+      // SemDeDup at x20 (flagship semantic-dedup shape): k = sqrt(n)
+      // Lloyd centroids through the array-form assign, intra-cluster
+      // pairs only — the O(n^1.5) pair-work bound, timed per-round
+      embRow("scaled_semantic_x20", 2)(e =>
+        Similarity.semanticDedupFrom(e.sparkSession, e)),
+      // k-NN graph at x20 (40k vectors, k = floor(sqrt(n)) = 200 Lloyd
+      // clusters, exact top-k within cluster): the partitioned O(n^1.5)
+      // build timed at 20x the gate's corpus; the BenchProbe diagnostic
+      // `scaledknng` additionally ASSERTS the scored-pair bound from the
+      // actual cluster sizes.
+      embRow("scaled_knng_x20", 2)(e => Similarity.knnGraphFrom(e.sparkSession, e)),
+      // Graph operators over the x20 near-dup pair graph — the 20-replica
+      // packs plus the corpus's natural dup families make it one pile of
+      // dense communities (maxDeg ~358, ~264M oriented wedges), the worst
+      // case the degree-ordered triangle orientation exists for; the
+      // BenchProbe diagnostic `scaledtribound` asserts the oriented wedge
+      // count stays at the clique-math 3x under the naive sum-of-deg^2
+      // stream. All are min-of-2 (r14 verdict #3): these are exactly the
+      // rows box load swings ~2x (README A/B: tri 16.5<->30.1 s, lpa
+      // 11.1<->21.6 s tracking tel loads 15-26), so a single attempt can
+      // fake a round-over-round regression. The releasable operators
+      // (r17 ADVICE) free their pinned pairs/deg/adj checkpoints after
+      // each run instead of stacking them for the rest of the sweep.
+      pairsRow("scaled_tri_x20")(Dedup.trianglesFromPairsReleasable),
+      pairsRow("scaled_ejacc_x20")(Dedup.edgeJaccardFromReleasable(_)),
+      pairsRow("scaled_kcore_x20")(p =>
+        (Dedup.kcoreFromPairs(p, k = 3, rounds = 8), noRelease)),
+      pairsRow("scaled_coreness_x20")(p =>
+        (Dedup.corenessFromPairs(p), noRelease)),
+      pairsRow("scaled_lpa_x20")(p => (Dedup.lpaFromPairs(p), noRelease)),
+      // DEEP-merge BPE regime: 200 merges on the 100k-vocabulary
+      // workload-A corpus — the wide-vocabulary regime a real tokenizer
+      // trains on, where batched non-interfering selection must keep
+      // driver rounds sublinear in merges. One rep: the loop is
+      // driver-round-bound (~100 distributed jobs), not JIT-bound, so a
+      // second rep would double sweep cost to confirm what
+      // round-over-round JSONs already track.
+      bpeRow("scaled_bpe_deep200", 1, "value")(
+        (s, _, _) => s.read.text(prepareRefCorpus(s))))
+  }
+
+  /** The untimed warm-up before the reference rows. A cheap query warms
+    * the JVM/codegen paths; then the ref-workload plan SHAPE runs on a
+    * 1/16-size corpus: Janino compiles the generated TokenCountsExec/sort
+    * classes and C2 promotes the byte-FSM hot loops here, so the first
+    * timed run pays data-scale costs only — the C baseline's "cold" run
+    * doesn't include compiling the binary either. Two reps: the second
+    * triggers C2 on the loops the first only profiled. The warm corpus is
+    * under the tiny-input threshold, so a plain refWordcount12m over it
+    * would warm ONLY the collapsed tiny plan — and the 83 MB workload-A
+    * corpus runs the distributed shape, whose generated classes would
+    * then compile inside the first timed run (observed: cold 13 s); both
+    * shapes are warmed explicitly. Last, the full-size warm on the
+    * disjoint-vocabulary twin corpus (see prepareWarmCorpusFull):
+    * data-scale JIT/arena/shuffle costs land here, untimed, while the
+    * timed corpus itself stays unseen.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    runOnce(SparkEntry.queries("q_topk")(spark, sfDir))
+    val warmPath = prepareWarmCorpus(spark)
+    (1 to 2).foreach { _ =>
+      val warmLines = spark.read
+        .format("graft.sources.ChunkedTextSource").load(warmPath)
+      runOnce(graft.plans.TokenCounts.partialCounts(warmLines, col("value"))
+        .groupBy("word").agg(sum(col("cnt")).as("cnt"))
+        .repartition(1).sortWithinPartitions("word"))
+      runOnce(refWordcount12m(spark, warmPath))
+    }
+    val warmFullPath = prepareWarmCorpusFull(spark)
+    (1 to 2).foreach(_ => runOnce(refWordcount12m(spark, warmFullPath)))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // SPARK_GRAFT_CPUS pins the master width and shuffle partitions;
-    // unset, both follow the machine's core count
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
-    // Split file scans finer than the 128 MB default so a single ~100 MB
-    // text/parquet file still fans out across all cores.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
+    val spark = session()
 
     val (nTimed, nExcl) = checkSweepCoverage()
     System.err.println(s"[bench] sweep coverage: timed=$nTimed " +
@@ -655,8 +914,6 @@ object Bench {
       stageTel(stage) = (loadNow, (rt.totalMemory - rt.freeMemory) >> 20)
     }
 
-    // Warm the JVM/codegen paths once with a cheap query.
-    runOnce(SparkEntry.queries("q_topk")(spark, sfDir))
     val refPath = prepareRefCorpus(spark)
     // Re-time the C binary FIRST, while the JVM heap is still small —
     // the r16 A/B measured the same binary at 0.886 s standalone vs
@@ -665,34 +922,9 @@ object Bench {
     // conservative denominator; timeRefCMidSweep adds the contrast
     // sample after the engine's own headline rows.
     val (refCLiveA, refCLiveB) = timeRefC(refPath, prepareRefCorpusB(spark))
-
-    // Warm the ref-workload plan SHAPE on a 1/16-size corpus (untimed):
-    // Janino compiles the generated TokenCountsExec/sort classes and C2
-    // promotes the byte-FSM hot loops here, so the first timed run pays
-    // data-scale costs only — the C baseline's "cold" run doesn't include
-    // compiling the binary either. Two reps: the second triggers C2 on
-    // the loops the first only profiled.
-    val warmPath = prepareWarmCorpus(spark)
-    // The warm corpus is under the tiny-input threshold, so a plain
-    // refWordcount12m over it would warm ONLY the collapsed tiny plan —
-    // and the 83 MB workload-A corpus runs the distributed shape, whose
-    // generated classes would then compile inside the first timed run
-    // (observed: cold 13 s). Warm BOTH shapes explicitly.
-    (1 to 2).foreach { _ =>
-      val warmLines = spark.read
-        .format("graft.sources.ChunkedTextSource").load(warmPath)
-      runOnce(graft.plans.TokenCounts.partialCounts(warmLines, col("value"))
-        .groupBy("word").agg(sum(col("cnt")).as("cnt"))
-        .repartition(1).sortWithinPartitions("word"))
-      runOnce(refWordcount12m(spark, warmPath))
-    }
-    // Full-size warm on the disjoint-vocabulary twin corpus (see
-    // prepareWarmCorpusFull): data-scale JIT/arena/shuffle costs land
-    // here, untimed; the timed corpus itself stays unseen. Then touch
-    // the timed corpora into the page cache — the C baseline's walls
-    // are repeated-run (cached-file) numbers too.
-    val warmFullPath = prepareWarmCorpusFull(spark)
-    (1 to 2).foreach(_ => runOnce(refWordcount12m(spark, warmFullPath)))
+    warmUp(spark, sfDir)
+    // the C baseline's walls are repeated-run (cached-file) numbers, so
+    // the timed corpora are touched into the page cache too
     pageTouch(refPath)
 
     val toRun: Seq[(String, () => DataFrame)] =
@@ -776,21 +1008,16 @@ object Bench {
     // the C binary again, now under the engine rows' own conditions
     val refCLiveAMid = timeRefCMidSweep(refPath)
 
-    // Scaled workloads also run pre-sweep: they are the biggest
-    // allocators, i.e. the entries most sensitive to accumulated heap
-    // state. Min of 2 = steady state for both; the CC loop's first run
-    // additionally pays Janino compiles for every per-round plan.
-    // Min of 3: at steady state each rep is seconds, and a single
-    // outside-load spike can no longer spoil the reported minimum
-    // (observed once: a transient tripled one rep of the CC loop,
-    // whose per-round barriers are the most load-sensitive shape here).
+    // Every scaled workload's full rep list ONCE — results (min), the
+    // warm total (min), and the cold total (head) all derive from this
+    // sequence, so a row added to the table can never be silently
+    // missing from a total (r16 ADVICE: scaled_snm/sq/lpa had drifted
+    // out of the hand-maintained total lists while present in results).
+    val scaledReps: Seq[(String, Seq[Double])] = scaled.map { w =>
+      w.name -> measure(w.prepare(spark, sfDir, 20), w.reps)(timeThunk(w.name))
+    }
     val scaledPath = prepareScaledDocs(spark, sfDir)
-    val mh = (1 to 3).map(_ =>
-      timeOne("scaled_minhash_x20", () => scaledMinhash(spark, scaledPath)))
-    val cc = (1 to 3).map(_ => timeOne("scaled_cc_x20", () =>
-      graft.queries.Dedup.clustersFrom(
-        spark.read.parquet(scaledPath), ordered = false)))
-    // Pair-graph density NEXT TO the timing (r15 verdict #1): the
+    // Pair-graph density next to the timing (r15 verdict #1): the
     // cc/minhash/cascade rows cost ~linearly in the EDGE count, and
     // the driver regenerates the corpus between rounds — r15's
     // scaled_cc_x20 2.3x move was unadjudicable because nothing in
@@ -798,206 +1025,17 @@ object Bench {
     // One untimed diagnostic pass; rides a tail "info" line.
     val (ccStatDocs, ccStatEdges, ccStatHot) =
       graft.queries.Dedup.pairGraphStats(spark.read.parquet(scaledPath))
+    val ccReps = scaledReps.toMap.apply("scaled_cc_x20")
     System.err.println(s"[bench] scaled x20 pair graph: docs=$ccStatDocs " +
       s"edges=$ccStatEdges hot_buckets_dropped=$ccStatHot " +
-      f"cc_reps=${cc.map(v => f"$v%.2f").mkString(",")}")
-    // decontamination at x20: the shingle join against a 1-in-50
-    // benchmark slice, 100k docs / ~20M shingles
-    val contam = (1 to 3).map(_ => timeOne("scaled_contam_x20", () => {
-      val docs = spark.read.parquet(scaledPath)
-      graft.queries.Dedup.contaminationFrom(
-        docs, docs.filter(col("doc_id") % 50 === 0))
-    }))
-    // the same decontamination behind the Bloom semi-join pushdown:
-    // corpus shingles that miss the one-row broadcast bitset never
-    // reach the exact join
-    val bloomC = (1 to 3).map(_ => timeOne("scaled_bloom_x20", () => {
-      val docs = spark.read.parquet(scaledPath)
-      graft.queries.Dedup.bloomContaminationFrom(
-        docs, docs.filter(col("doc_id") % 50 === 0))
-    }))
-    // sparse-hit decontamination: bench slice = 1/200 of the corpus, so
-    // only ~10% of corpus docs share shingles with it — the regime the
-    // bloom pushdown is FOR (the dense pair above, where every doc is a
-    // near-dup of a bench doc, shows its overhead bound instead: ~100%
-    // of shingles pass the filter and the exact join does full work)
-    val contamS = (1 to 3).map(_ => timeOne("scaled_contam_sparse_x20", () => {
-      val docs = spark.read.parquet(scaledPath)
-      graft.queries.Dedup.contaminationFrom(
-        docs, docs.filter(col("doc_id") % 1000 === 0))
-    }))
-    val bloomS = (1 to 3).map(_ => timeOne("scaled_bloom_sparse_x20", () => {
-      val docs = spark.read.parquet(scaledPath)
-      graft.queries.Dedup.bloomContaminationFrom(
-        docs, docs.filter(col("doc_id") % 1000 === 0))
-    }))
-    // context-window chunking at x20: pure generator throughput over
-    // ~20M tokens (map-only, no shuffle)
-    val chunk = (1 to 3).map(_ => timeOne("scaled_chunk_x20", () =>
-      spark.read.parquet(scaledPath)
-        .select(col("doc_id"), graft.functions.ChunkExplode
-          .chunks(spark, col("text"), 64, 48)
-          .as(Seq("chunk_idx", "chunk", "n_tokens")))))
-    // winnowing fingerprints at x20: WinnowExplode generator throughput
-    // (byte scan + window fold per doc, ~45 fps/doc emitted)
-    val winnow = (1 to 3).map(_ => timeOne("scaled_winnow_x20", () =>
-      graft.queries.TextAnalysis.winnowFrom(spark.read.parquet(scaledPath))))
-    // EXACT similarity join at x20, in its production regime (t=0.9,
-    // 5-gram shingles — see ppjoinPairsFrom on saturated shingle
-    // spaces): prefix + length filtering must keep candidates bounded
-    // on a corpus that is one giant pile of 20-member dup cliques
-    val ppjoin = (1 to 3).map(_ => timeOne("scaled_ppjoin_x20", () =>
-      graft.queries.Dedup.ppjoinPairsFrom(spark.read.parquet(scaledPath),
-        tNum = 9, tDen = 10, shingleN = 5)))
-    // sorted-neighborhood blocking at x20: two partition-parallel rank
-    // windows + the offset equi-join + exact verification over 100k
-    // docs — the pair-generation shape the LSH/prefix probes don't time
-    val snm = (1 to 3).map(_ => timeOne("scaled_snm_x20", () =>
-      graft.queries.Dedup.sortedNeighborhoodPairsFrom(
-        spark.read.parquet(scaledPath))))
-    // inverted-index sparse cosine at x20: df cap bounds every posting
-    // bucket even when replication inflates every term's frequency
-    val sparse = (1 to 3).map(_ => timeOne("scaled_sparse_x20", () =>
-      graft.queries.Similarity.sparseCosinePairsFrom(
-        spark.read.parquet(scaledPath))))
-    // incremental ingest probe at x20: doc_id % 50 == 0 picks exactly
-    // rep 0 of every 20-replica pack = a 5% new batch vs the 95% index
-    // — cost must track the BATCH, not the corpus
-    val inc = (1 to 3).map(_ => timeOne("scaled_inc_x20", () => {
-      val docs = spark.read.parquet(scaledPath)
-      graft.queries.Dedup.incrementalPairsFrom(
-        docs.filter(col("doc_id") % 50 =!= 0),
-        docs.filter(col("doc_id") % 50 === 0))
-    }))
-    // exact-substring span dedup at x20 (~20M token positions through
-    // the rolling-fingerprint pass; the 20-replica packs make nearly
-    // every window a duplicate — worst case for the verify stage)
-    val substr = (1 to 3).map(_ => timeOne("scaled_substr_x20", () =>
-      graft.queries.Dedup.duplicatedSpansFrom(
-        spark.read.parquet(scaledPath), graft.queries.Dedup.SUBSTR_L)))
-    // ANN at x20 (40k vectors, 20 distinct probes, planted jittered
-    // near-dup cliques — see prepareScaledEmb): IVF = index assignment
-    // + nprobe-pruned scan; PQ = full subspace-k-means index build +
-    // ADC shortlist + exact re-rank, the build dominating by design
-    // (production amortizes it across queries; timing it keeps the
-    // whole cost honest). Recall@10 >= 0.9 vs brute force at this exact
-    // regime is gated in AnnRecallSpec.
-    val embPath = prepareScaledEmb(spark, sfDir)
-    val ivf = (1 to 3).map(_ => timeOne("scaled_ivf_x20", () =>
-      graft.queries.Similarity.ivfTopkFrom(spark,
-        spark.read.parquet(embPath), scaledEmbQueryPred, topK = 10)))
-    val pq = (1 to 2).map(_ => timeOne("scaled_pq_x20", () =>
-      graft.queries.Similarity.pqTopkFrom(
-        spark.read.parquet(embPath), scaledEmbQueryPred, topK = 10)))
-    val sq = (1 to 2).map(_ => timeOne("scaled_sq_x20", () =>
-      graft.queries.Similarity.sqTopkFrom(
-        spark.read.parquet(embPath), scaledEmbQueryPred, topK = 10)))
-    // Structured Streaming at x20 (2M events / 30k users replayed via
-    // AvailableNow): exercises the real state-store path — watermark
-    // advance, window eviction, merging session state — at 20x the
-    // gate's volume, not just the logical plan.
-    val evPath = prepareScaledEvents(spark, sfDir)
-    val evSchema = spark.read.parquet(evPath).schema
-    // stream replays return a checkpointed frame (the sink view is
-    // dropped inside the replay); release each rep's blocks so ~1.9M
-    // session rows per rep don't accumulate across the sweep
-    def timeStream(name: String, mk: () => DataFrame): Double = {
-      var df: DataFrame = null
-      val t = timeThunk(name) { df = mk(); runOnce(df) }
-      if (df != null)
-        org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(df)
-      t
-    }
-    val stw = (1 to 2).map(_ => timeStream("scaled_stream_window_x20", () =>
-      graft.queries.EventsTime.windowedReplayOn(spark, evSchema, evPath)))
-    val sts = (1 to 2).map(_ => timeStream("scaled_stream_session_x20", () =>
-      graft.queries.EventsTime.sessionReplayOn(spark, evSchema, evPath)))
-    // chained stateful (dedup -> window agg) and transformWithState
-    // (typed state in RocksDB) at the same 20x volume: state for BOTH
-    // operators of the chain, and the RocksDB column-family path, under
-    // real data pressure rather than the sf0.1 gate's 100k events
-    val stc = (1 to 2).map(_ => timeStream("scaled_stream_chain_x20", () =>
-      graft.queries.EventsTime.chainReplayOn(spark, evSchema, evPath)))
-    val stt = (1 to 2).map(_ => timeStream("scaled_stream_tws_x20", () =>
-      graft.queries.EventsTime.twsReplayOn(spark, evSchema, evPath)))
-    // BPE training at x20, driven to the 31-word-vocab corpus's merge
-    // EXHAUSTION (~100 merges in ~64 batched driver rounds): times the
-    // distributed pair-count + batched-merge loop per round. The
-    // deep-merge regime lives in the manual bpewide probe (500 merges
-    // in 234 rounds on the 100k-vocab workload-A corpus). The word-
-    // frequency table build is untimed — production trains many merge
-    // schedules off one persisted word table.
-    val bpeWords = spark.read.parquet(scaledPath)
-      .select(graft.functions.TokenizeExplode
-        .tokenize(spark, lower(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    val bpe = (1 to 2).map(_ => timeThunk("scaled_bpe_x20") {
-      graft.queries.TextAnalysis.bpeTrainRounds(bpeWords, 200)
-      ()
-    })
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(bpeWords)
-    // SimHash Hamming-LSH pairs at x20: the last dedup family without a
-    // per-round scaled row (the sf0.1 gate query times signatures only;
-    // this runs the banded pair join + popcount gate over 100k docs)
-    val simh = (1 to 3).map(_ => timeOne("scaled_simhash_x20", () =>
-      simhashPairs(spark, scaledPath)))
-    // SemDeDup at x20 (flagship semantic-dedup shape): k = sqrt(n)
-    // Lloyd centroids through the array-form assign, intra-cluster
-    // pairs only — the O(n^1.5) pair-work bound, timed per-round
-    val sem = (1 to 2).map(_ => timeOne("scaled_semantic_x20", () =>
-      graft.queries.Similarity.semanticDedupFrom(
-        spark, spark.read.parquet(embPath))))
-    // k-NN graph at x20 (40k vectors, k = floor(sqrt(n)) = 200 Lloyd
-    // clusters, exact top-k within cluster): the partitioned O(n^1.5)
-    // build timed at 20x the gate's corpus; BenchProbe `scaledknng`
-    // additionally ASSERTS the scored-pair bound from the actual
-    // cluster sizes.
-    val knng = (1 to 2).map(_ => timeOne("scaled_knng_x20", () =>
-      graft.queries.Similarity.knnGraphFrom(spark,
-        spark.read.parquet(embPath))))
-    // triangle counting at x20 over the near-dup pair graph — the
-    // 20-replica packs plus the corpus's natural dup families make
-    // the graph one pile of dense communities (maxDeg ~358, ~264M
-    // oriented wedges), the worst case the degree-ordered orientation
-    // exists for; BenchProbe `scaledtribound` asserts the oriented
-    // wedge count stays at the clique-math 3x under the naive
-    // sum-of-deg^2 stream.
-    //
-    // ALL the heavy graph rows below are min-of-2 (r14 verdict #3,
-    // extending the ejacc precedent): these are exactly the rows box
-    // load swings ~2x (README A/B: tri 16.5<->30.1 s, lpa
-    // 11.1<->21.6 s tracking tel loads 15-26; ejacc's r13 triage
-    // 6.8/7.4/23.1 s across same-code sweeps), so a single attempt can
-    // fake a round-over-round regression. Two attempts bound the
-    // weather; the min is the comparable number.
-    // releasable variants (r17 ADVICE): each rep frees its pinned
-    // pairs/deg/adj checkpoints after the timed materialization instead
-    // of stacking them in the block manager for the rest of the sweep
-    def timeReleasable(name: String,
-        mk: () => (DataFrame, () => Unit)): Double = {
-      var hook: () => Unit = null
-      val t = timeThunk(name) {
-        val (df, h) = mk(); hook = h; runOnce(df)
-      }
-      if (hook != null) hook()
-      t
-    }
-    def triOnce() = timeReleasable("scaled_tri_x20", () =>
-      graft.queries.Dedup.trianglesFromPairsReleasable(
-        graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-          .select("a_id", "b_id")))
-    val tri = Seq(triOnce(), triOnce())
+      f"cc_reps=${ccReps.map(v => f"$v%.2f").mkString(",")}")
     // DOULION agreement at x20 (r15 verdict #5): exact T vs the
     // edge-sampled estimate over the SAME pair graph — the statistical
     // validation the gate-scale oracle row cannot provide (its sampled
     // triangle count is ~0 at sf0.01). Untimed diagnostic; the numbers
     // ride a tail info line so every round re-proves the estimator.
     val (triExactX20, triEstX20) = {
-      val p = graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-        .select("a_id", "b_id")
+      val p = pairGraph(spark.read.parquet(scaledPath))
         .localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
       val (triDf, triHook) =
@@ -1014,48 +1052,6 @@ object Bench {
         "per-mille of exact)")
       (exact, est)
     }
-    def ejaccOnce() = timeReleasable("scaled_ejacc_x20", () =>
-      graft.queries.Dedup.edgeJaccardFromReleasable(
-        graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-          .select("a_id", "b_id")))
-    val ejacc = Seq(ejaccOnce(), ejaccOnce())
-    def kcoreOnce() = timeOne("scaled_kcore_x20", () =>
-      graft.queries.Dedup.kcoreFromPairs(
-        graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-          .select("a_id", "b_id"), k = 3, rounds = 8))
-    val kcore = Seq(kcoreOnce(), kcoreOnce())
-    def corenessOnce() = timeOne("scaled_coreness_x20", () =>
-      graft.queries.Dedup.corenessFromPairs(
-        graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-          .select("a_id", "b_id")))
-    val coreness = Seq(corenessOnce(), corenessOnce())
-    def lpaOnce() = timeOne("scaled_lpa_x20", () =>
-      graft.queries.Dedup.lpaFromPairs(
-        graft.queries.Dedup.minhashPairsFrom(
-          spark.read.parquet(scaledPath), ordered = false)
-          .select("a_id", "b_id")))
-    val lpa = Seq(lpaOnce(), lpaOnce())
-    // DEEP-merge BPE regime, tracked per-round (previously the manual
-    // bpewide probe only): 200 merges on the 100k-vocabulary workload-A
-    // corpus — the wide-vocabulary regime a real tokenizer trains on,
-    // where batched non-interfering selection must keep driver rounds
-    // sublinear in merges. One rep: the loop is driver-round-bound
-    // (~100 distributed jobs), not JIT-bound, so a second rep would
-    // double sweep cost to confirm what round-over-round JSONs already
-    // track.
-    val bpeWordsWide = spark.read.text(refPath)
-      .select(graft.functions.TokenizeExplode
-        .tokenize(spark, lower(col("value"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
-    val bpeDeep = Seq(timeThunk("scaled_bpe_deep200") {
-      graft.queries.TextAnalysis.bpeTrainRounds(bpeWordsWide, 200)
-      ()
-    })
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(bpeWordsWide)
     System.gc()
 
     // Steady-state per query (min of 2): the baseline's C binary has no
@@ -1072,8 +1068,7 @@ object Bench {
     }
 
     // survives-100x triangle row (r10 verdict #6): the wedge-volume
-    // guard promoted from the manual scaledtri100 probe to per-round
-    // evidence. Measure the oriented wedge volume FIRST (degree join +
+    // guard as per-round evidence. Measure the oriented wedge volume FIRST (degree join +
     // agg — no wedge materialization); only when it fits the 2e9
     // budget is the full adjacency-intersection pass timed, else the
     // refusal itself is the recorded result (the x100 planted-clique
@@ -1097,9 +1092,7 @@ object Bench {
     val docs100 = prepareScaledDocs(spark, sfDir, factor = 100)
     snap("scaled_tri_x100_bound")
     val triBoundT0 = System.nanoTime()
-    val pairs100 = graft.queries.Dedup.minhashPairsFrom(
-        spark.read.parquet(docs100), ordered = false)
-      .select("a_id", "b_id")
+    val pairs100 = pairGraph(spark.read.parquet(docs100))
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val wedges2x100 = graft.queries.Dedup.orientedWedgeVolume2(pairs100)
@@ -1113,8 +1106,9 @@ object Bench {
       Seq("scaled_tri_x100_wedges2" -> wedges2x100.toDouble,
         "scaled_tri_x100_bound_sec" -> triBoundSec) ++
       (if (!triX100skipped)
-        Seq("scaled_tri_x100" -> timeReleasable("scaled_tri_x100", () =>
-          graft.queries.Dedup.trianglesFromPairsReleasable(pairs100)))
+        Seq("scaled_tri_x100" -> measure(releasableJob(() =>
+          graft.queries.Dedup.trianglesFromPairsReleasable(pairs100)), 1)(
+          timeThunk("scaled_tri_x100")).head)
       else Seq.empty)
     // Bounded-work ESTIMATE in the refusal regime (r15 verdict #5 —
     // "a real user still wants a number"): the md5 edge sample keeps
@@ -1217,42 +1211,6 @@ object Bench {
         (Double.NaN, -1L, -1L)
     }
 
-    // Every scaled workload's full rep list ONCE — results (min), the
-    // warm total (min), and the cold total (head) all derive from this
-    // sequence, so a row added here can never be silently missing from
-    // a total (r16 ADVICE: scaled_snm/sq/lpa had drifted out of the
-    // hand-maintained total lists while present in results).
-    val scaledReps: Seq[(String, Seq[Double])] = Seq(
-      "scaled_minhash_x20" -> mh,
-      "scaled_cc_x20" -> cc,
-      "scaled_contam_x20" -> contam,
-      "scaled_bloom_x20" -> bloomC,
-      "scaled_contam_sparse_x20" -> contamS,
-      "scaled_bloom_sparse_x20" -> bloomS,
-      "scaled_chunk_x20" -> chunk,
-      "scaled_winnow_x20" -> winnow,
-      "scaled_ppjoin_x20" -> ppjoin,
-      "scaled_snm_x20" -> snm,
-      "scaled_sparse_x20" -> sparse,
-      "scaled_inc_x20" -> inc,
-      "scaled_substr_x20" -> substr,
-      "scaled_ivf_x20" -> ivf,
-      "scaled_pq_x20" -> pq,
-      "scaled_sq_x20" -> sq,
-      "scaled_stream_window_x20" -> stw,
-      "scaled_stream_session_x20" -> sts,
-      "scaled_stream_chain_x20" -> stc,
-      "scaled_stream_tws_x20" -> stt,
-      "scaled_bpe_x20" -> bpe,
-      "scaled_simhash_x20" -> simh,
-      "scaled_semantic_x20" -> sem,
-      "scaled_knng_x20" -> knng,
-      "scaled_tri_x20" -> tri,
-      "scaled_ejacc_x20" -> ejacc,
-      "scaled_kcore_x20" -> kcore,
-      "scaled_coreness_x20" -> coreness,
-      "scaled_lpa_x20" -> lpa,
-      "scaled_bpe_deep200" -> bpeDeep)
     val results = results0 ++ Seq(
       "ref_wordcount_12m" -> refRuns.min,
       "ref_wordcount_12m_median" -> median(refRuns),
@@ -1383,10 +1341,23 @@ object Bench {
     // Pair-graph density + per-rep times for the regeneration-sensitive
     // rows (r15 verdict #1/#3/#5): the numbers that adjudicate a
     // timing move as corpus-density vs plan-regression vs load.
-    println(s"""{"metric":"info","scaled_x20_docs":$ccStatDocs,"scaled_x20_edges":$ccStatEdges,"scaled_x20_hot_buckets":$ccStatHot,"scaled_cc_x20_reps":[${cc.map(jNum).mkString(",")}]}""")
+    println(s"""{"metric":"info","scaled_x20_docs":$ccStatDocs,"scaled_x20_edges":$ccStatEdges,"scaled_x20_hot_buckets":$ccStatHot,"scaled_cc_x20_reps":[${ccReps.map(jNum).mkString(",")}]}""")
     println(s"""{"metric":"info","ref_wordcount_2m_skew_reps":[${refBRuns.map(jNum).mkString(",")}],"ref_wordcount_12m_reps":[${refRuns.map(jNum).mkString(",")}],"ref_c_live_12m_midsweep":${jNum(refCLiveAMid)}}""")
     println(summaryLine)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** The session Bench and BenchProbe run in: `local[N]` with N shuffle
+    * partitions, N = SPARK_GRAFT_CPUS or, unset, the machine's core
+    * count; file scans split at 8 MB instead of the 128 MB default so a
+    * single ~100 MB text/parquet file still fans out across all cores.
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = Engine.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (8L << 20).toString)
+    spark
   }
 }

@@ -75,15 +75,6 @@ object DedupOps {
       .select(col(idCol),
         array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
 
-  /** LSH band keys: split the k-signature into `bands` groups of
-    * `rowsPer`; the group's joined values are the bucket key. Docs
-    * sharing ANY band key are candidate pairs.
-    */
-  def bandKeys(sigCol: Column, bands: Int, rowsPer: Int): Column =
-    array((0 until bands).map { b =>
-      array_join(slice(sigCol, b * rowsPer + 1, rowsPer).cast("array<string>"), "|")
-    }: _*)
-
   /** Estimated Jaccard from two k-signatures: matching fraction.
     * Unrolled to k element_at comparisons — Spark's array HOFs
     * (aggregate/zip_with) are CodegenFallback, and on millions of

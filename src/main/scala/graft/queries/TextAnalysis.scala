@@ -149,24 +149,15 @@ object TextAnalysis extends QueryModule {
     * adapt to the corpus: early character merges (where the created
     * symbol immediately dominates) batch little, the long tail batches
     * heavily — round-trips stay well sublinear in nMerges at the scale
-    * regime (see `scaledbpe` in BenchProbe) with zero output drift.
+    * regime (the `scaled_bpe_*` Bench rows) with zero output drift.
     */
   def bpeTrain(words: DataFrame, nMerges: Int): Seq[(Long, String, String, Long)] =
     bpeTrainRounds(words, nMerges)._1
 
   /** [[bpeTrain]] plus the number of distributed rounds it took — the
-    * driver-round-trip count the batching exists to shrink. `onRound`
-    * observes (round, mergesAccepted, wallSec) after each distributed
-    * round for profiling (BenchProbe `bpeprofile`); it must not touch
-    * the returned state. `topK` sizes the per-round candidate collect:
-    * a larger K lowers the count FLOOR assumed for uncollected
-    * adjacent pairs (top.last's count), tightening the created-pair
-    * bound and so lengthening the provably-safe batch prefix — at the
-    * cost of a bigger driver collect (K rows of symbol strings).
+    * driver-round-trip count the batching exists to shrink.
     */
-  def bpeTrainRounds(words: DataFrame, nMerges: Int,
-      topK: Int = 256,
-      onRound: (Int, Int, Double) => Unit = (_, _, _) => ())
+  def bpeTrainRounds(words: DataFrame, nMerges: Int)
       : (Seq[(Long, String, String, Long)], Int) = {
     // r17 (guide §1.2 — per-round fixed cost dominates this
     // driver-round-bound loop): the segmentation table is checkpointed
@@ -187,8 +178,16 @@ object TextAnalysis extends QueryModule {
     //     launches tasks over it: 32 partitions paid 4x the task
     //     scheduling for no parallelism gain on rows this small. Kept
     //     >1 so a giant-vocab corpus still spreads.
+    //   TOP_K — the per-round candidate collect: a larger K lowers the
+    //     count FLOOR assumed for uncollected adjacent pairs (the K-th
+    //     count), tightening the created-pair bound and so lengthening
+    //     the provably-safe batch prefix, at the cost of a bigger driver
+    //     collect; on the deep-merge regime K = 1024 and 4096 took the
+    //     same rounds as 256 (OPTIMIZATION_r17/r18), so the floor is
+    //     symbol-conflict limited, not bound limited.
     val CP_EVERY = 4
     val SEG_PARTS = 8
+    val TOP_K = 256
     var segCp = words.select(col("freq"), segInit(col("w")).as("seg"))
       .coalesce(SEG_PARTS)
       .localCheckpoint() // vocab-sized; truncates the per-round lineage
@@ -199,7 +198,6 @@ object TextAnalysis extends QueryModule {
     var rounds = 0
     var exhausted = false
     while (k <= nMerges && !exhausted) {
-      val roundT0 = System.nanoTime()
       // r18: fused adjacent-pair generator (one byte scan per row) in
       // place of regex split + interpreted transform + explode — see
       // graft.functions.BpePairExplode for the bit-exactness argument
@@ -209,15 +207,13 @@ object TextAnalysis extends QueryModule {
         .groupBy("l", "r")
         .agg(sum("freq").as("cnt"))
       val top = pairs.orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(topK).collect()
+        .limit(TOP_K).collect()
         .map(t => (t.getString(0), t.getString(1), t.getLong(2)))
       rounds += 1
-      if (top.isEmpty) {
-        exhausted = true
-        onRound(rounds, 0, (System.nanoTime() - roundT0) / 1e9)
-      } else {
+      if (top.isEmpty) exhausted = true
+      else {
         // count floor for pairs the K-row collect didn't see
-        val floorCnt = if (top.length == topK) top.last._3 else 0L
+        val floorCnt = if (top.length == TOP_K) top.last._3 else 0L
         val accepted = scala.collection.mutable.ArrayBuffer[(String, String)]()
         val usedSyms = scala.collection.mutable.Set.empty[String]
         var newPairBound = Long.MinValue
@@ -251,7 +247,6 @@ object TextAnalysis extends QueryModule {
           seg = next
           sinceCp = 0
         }
-        onRound(rounds, accepted.length, (System.nanoTime() - roundT0) / 1e9)
       }
     }
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(segCp)

@@ -9,4 +9,69 @@ class BenchProbeSpec extends AnyFunSuite {
       "spark.a" -> "1", "spark.sql.x" -> "p,q,r", "spark.b" -> "k=v,junk"))
     assert(BenchProbe.parseConf("noequals") == Seq.empty)
   }
+
+  test("the scaled table is the sweep's scaled rows, in sweep order, with their reps") {
+    val rows = Bench.scaled.map(w => w.name -> w.reps)
+    assert(rows.map(_._1).distinct.size == rows.size)
+    assert(rows == Seq(
+      "scaled_minhash_x20" -> 3, "scaled_cc_x20" -> 3,
+      "scaled_contam_x20" -> 3, "scaled_bloom_x20" -> 3,
+      "scaled_contam_sparse_x20" -> 3, "scaled_bloom_sparse_x20" -> 3,
+      "scaled_chunk_x20" -> 3, "scaled_winnow_x20" -> 3,
+      "scaled_ppjoin_x20" -> 3, "scaled_snm_x20" -> 3,
+      "scaled_sparse_x20" -> 3, "scaled_inc_x20" -> 3,
+      "scaled_substr_x20" -> 3, "scaled_ivf_x20" -> 3,
+      "scaled_pq_x20" -> 2, "scaled_sq_x20" -> 2,
+      "scaled_stream_window_x20" -> 2, "scaled_stream_session_x20" -> 2,
+      "scaled_stream_chain_x20" -> 2, "scaled_stream_tws_x20" -> 2,
+      "scaled_bpe_x20" -> 2, "scaled_simhash_x20" -> 3,
+      "scaled_semantic_x20" -> 2, "scaled_knng_x20" -> 2,
+      "scaled_tri_x20" -> 2, "scaled_ejacc_x20" -> 2,
+      "scaled_kcore_x20" -> 2, "scaled_coreness_x20" -> 2,
+      "scaled_lpa_x20" -> 2, "scaled_bpe_deep200" -> 1))
+    // sweep rows, not registry queries the headline loop also times
+    assert(rows.map(_._1).forall(n => !SparkEntry.queries.contains(n)))
+  }
+
+  test("every table row resolves by its sweep name and its _x100 twin") {
+    Bench.scaled.foreach { w =>
+      assert(BenchProbe.resolve(w.name) == (w -> 20))
+    }
+    val x20 = Bench.scaled.filter(_.name.endsWith("_x20"))
+    // the deep-merge BPE row reads the fixed-size workload-A corpus
+    assert(Bench.scaled.diff(x20).map(_.name) == Seq("scaled_bpe_deep200"))
+    x20.foreach { w =>
+      assert(BenchProbe.resolve(w.name.stripSuffix("_x20") + "_x100") ==
+        (w -> 100))
+    }
+    assert(BenchProbe.resolve("ref_wordcount_12m")._1.name == "ref_wordcount_12m")
+    assert(BenchProbe.resolve("q_topk")._1.name == "q_topk")
+    BenchProbe.diagnostics.foreach(d => assert(BenchProbe.resolve(d.name) == (d -> 20)))
+  }
+
+  test("a probe prepares once before its first run and releases every run") {
+    val events = scala.collection.mutable.ArrayBuffer.empty[String]
+    val fake = Bench.Workload("fake", 3, (_, _, f) => {
+      events += s"prepare x$f"
+      Bench.Job(() => {
+        events += "run"
+        () => events += "release"
+      }, done = () => events += "done")
+    })
+    val secs = BenchProbe.probe("fake", fake, 100, 3, null, "unused")
+    assert(secs.size == 3)
+    assert(events == Seq("prepare x100") ++
+      Seq.fill(3)(Seq("run", "release")).flatten :+ "done")
+  }
+
+  test("an unknown probe name fails with where names are looked up") {
+    val e = intercept[IllegalArgumentException](BenchProbe.resolve("scaledcc"))
+    val msg = e.getMessage
+    assert(msg.contains("'scaledcc'"))
+    assert(msg.contains("SparkEntry.queries"))
+    (Bench.scaled ++ BenchProbe.refRows ++ BenchProbe.diagnostics)
+      .foreach(w => assert(msg.contains(w.name), w.name))
+    // a row's _x100 twin resolves, but nothing else is guessed
+    intercept[IllegalArgumentException](BenchProbe.resolve("scaled_bpe_deep200_x100"))
+  }
 }

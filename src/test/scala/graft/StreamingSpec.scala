@@ -597,9 +597,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("RocksDB state store yields the same session windows as the default store") {
-    // The provider swap the scaledstreamsrocks probes time: prove the
-    // results are identical, not just that the query runs. Same
-    // events, same session-window aggregation, both providers.
+    // The provider swap OPTIMIZATION_r18 timed on the x20/x100 session
+    // replays: prove the results are identical, not just that the
+    // query runs. Same events, same session-window aggregation, both
+    // providers.
     import java.nio.file.Files
     val in = Files.createTempDirectory("graft_rocks_in").toString
     val events = Tables.events(spark, TestSpark.sf0001)
