@@ -647,6 +647,11 @@ object Bench {
 
   def frameJob(mk: => DataFrame): Job = releasableJob(() => (mk, noRelease))
 
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
   /** Times `reps` runs of `job` with `time`, calls each run's release
     * hook once its timing has ended, then `job.done`. The per-run
     * seconds, in run order.
@@ -914,6 +919,9 @@ object Bench {
       stageTel(stage) = (loadNow, (rt.totalMemory - rt.freeMemory) >> 20)
     }
 
+    // 1-minute system load at sweep start, next to the end-of-sweep
+    // load_avg: a sweep that began on a loaded box reads as such
+    val loadAvgStart = loadNow
     val refPath = prepareRefCorpus(spark)
     // Re-time the C binary FIRST, while the JVM heap is still small —
     // the r16 A/B measured the same binary at 0.886 s standalone vs
@@ -1062,11 +1070,6 @@ object Bench {
     val results0 = toRun.map { case (name, mk) =>
       name -> math.min(cold.toMap.apply(name), timeOne(name, mk))
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-
     // survives-100x triangle row (r10 verdict #6): the wedge-volume
     // guard as per-round evidence. Measure the oriented wedge volume FIRST (degree join +
     // agg — no wedge materialization); only when it fits the 2e9
@@ -1264,11 +1267,11 @@ object Bench {
     // timed attempt (+ the ref_cold_* attempt boundaries)
     val telJson = stageTel.map { case (k, (l, h)) =>
       f""""$k":[$l%.2f,$h]""" }.mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total%.3f,"value_cold":$totalCold%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"load_avg":$loadAvg%.2f,"stage_tel":$telJson,"sf":"$sfDir"}""")
+    println(f"""{"metric":"total","value":$total%.3f,"value_cold":$totalCold%.3f,"unit":"sec","queries":$qs,"failed":$failedJson,"load_avg_start":$loadAvgStart%.2f,"load_avg":$loadAvg%.2f,"stage_tel":$telJson,"sf":"$sfDir"}""")
     // The full line above outgrew tail-capture windows once (r09:
     // "parsed": null) — so a SHORT summary line always comes LAST,
     // carrying the headline numbers a capped tail capture needs.
-    val summaryLine = f"""{"metric":"summary","value":$total%.3f,"value_cold":$totalCold%.3f,"value_scaled":$totalScaled%.3f,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"ref_wordcount_12m":${jNum(refRuns.min)},"ref_wordcount_12m_cold":${jNum(coldRuns.min)},"ref_wordcount_2m_skew":${jNum(refBRuns.min)},"ref_c_live_12m":${jNum(refCLiveA)},"ref_c_live_2m_skew":${jNum(refCLiveB)},"load_avg":$loadAvg%.2f,"sf":"$sfDir"}"""
+    val summaryLine = f"""{"metric":"summary","value":$total%.3f,"value_cold":$totalCold%.3f,"value_scaled":$totalScaled%.3f,"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"ref_wordcount_12m":${jNum(refRuns.min)},"ref_wordcount_12m_median":${jNum(median(refRuns))},"ref_wordcount_12m_cold":${jNum(coldRuns.min)},"ref_wordcount_2m_skew":${jNum(refBRuns.min)},"ref_c_live_12m":${jNum(refCLiveA)},"ref_c_live_2m_skew":${jNum(refCLiveB)},"load_avg_start":$loadAvgStart%.2f,"load_avg":$loadAvg%.2f,"sf":"$sfDir"}"""
     println(summaryLine)
     // TAIL EMISSION ORDER (r13 verdict #1, REVISED r16 after r15's
     // artifact lost every tel/info line): the driver keeps only the

@@ -14,7 +14,9 @@ import graft.queries.{Dedup, Similarity}
   * after the sweep's [[Bench.warmUp]]), a registry query, or one of the
   * [[diagnostics]]. Its prepare step runs once, untimed, and prints its
   * own line; then `reps` runs (default: the workload's own count) are
-  * timed, each followed by its release hook.
+  * timed, each followed by its release hook. Run 1 is printed as
+  * `run 1 (cold)`, and a closing `warm:` line gives the min and median
+  * of runs 2..N (see [[warmLine]]).
   *
   * SPARK_GRAFT_STAGES=1 prints one line per stage of the timed runs;
   * SPARK_GRAFT_EXPLAIN=<path> writes the formatted physical plan of one
@@ -237,14 +239,25 @@ object BenchProbe {
         if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
           spark.sparkContext.addSparkListener(stageListener)
         var i = 0
-        Bench.measure(job, reps) { body =>
+        val secs = Bench.measure(job, reps) { body =>
           i += 1
           val t = System.nanoTime()
           body
           val sec = (System.nanoTime() - t) / 1e9
-          println(f"[probe] $name run $i: $sec%.3f s")
+          val run = if (i == 1) "run 1 (cold)" else s"run $i"
+          println(f"[probe] $name $run: $sec%.3f s")
           sec
         }
+        println(warmLine(name, secs))
+        secs
     }
   }
+
+  /** Run 1 of a fresh JVM pays first-execution cost (class loading,
+    * codegen, JIT) on top of the query, so the probe's steady-state
+    * reading is over runs 2..N only. */
+  def warmLine(name: String, secs: Seq[Double]): String =
+    if (secs.size < 2) s"[probe] $name warm: cold only"
+    else f"[probe] $name warm: min ${secs.tail.min}%.3f s, median " +
+      f"${Bench.median(secs.tail)}%.3f s over runs 2..${secs.size}"
 }

@@ -1,0 +1,109 @@
+package graft.plans
+
+/** Connected components of ONE partition's edge rows, solved in memory
+  * with no exchange — the local pass in front of
+  * [[graft.queries.Dedup.ccFromPairs]]' round loop.
+  *
+  * Every edge of the partition is unioned with the smaller id always the
+  * root, so each root is its set's minimum. The partition's components
+  * then leave as stars: for every non-root node `v` with root `r`, the
+  * edges `(v, r)` and `(r, v)`. Each star edge lies inside one component
+  * and every input edge's endpoints share one star, so the union of all
+  * partitions' stars has exactly the input's components; a component
+  * that sits whole in one partition is solved in one round of min-label
+  * propagation, and the round loop only stitches components that span
+  * partitions.
+  */
+object LocalUnionFind {
+
+  /** The star edges of `edges`' components (see the object doc). Each
+    * non-root node appears once as `(v, r)` and once as `(r, v)`; an
+    * empty partition yields nothing.
+    */
+  def stars(edges: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val uf = new LocalUnionFind
+    edges.foreach { case (a, b) => uf.union(a, b) }
+    uf.stars
+  }
+}
+
+/** Open-addressing (id -> node) table over primitive arrays with a parent
+  * array on the node indices — no boxed map, and O(distinct ids) state.
+  * Linear probing; doubles at 60% load (the `ByteSliceCounter` shape).
+  */
+private final class LocalUnionFind {
+  private var cap = 2048
+  private var mask = cap - 1
+  private var table = new Array[Int](cap) // 0 = empty, node n stored as n+1
+  private var size = 0
+
+  // parallel node arrays (index = insertion order)
+  private var ids = new Array[Long](cap / 2)
+  private var parent = new Array[Int](cap / 2)
+
+  @inline private def hash(id: Long): Int = {
+    val h = id * 0x9E3779B97F4A7C15L // Fibonacci mix: sequential ids spread
+    (h ^ (h >>> 32)).toInt
+  }
+
+  /** The node index of `id`, inserted as its own root when new. */
+  private def node(id: Long): Int = {
+    var idx = hash(id) & mask
+    while (true) {
+      val slot = table(idx)
+      if (slot == 0) return insert(idx, id)
+      if (ids(slot - 1) == id) return slot - 1
+      idx = (idx + 1) & mask
+    }
+    -1 // unreachable
+  }
+
+  private def insert(idx: Int, id: Long): Int = {
+    if (size == ids.length) {
+      ids = java.util.Arrays.copyOf(ids, size * 2)
+      parent = java.util.Arrays.copyOf(parent, size * 2)
+    }
+    val n = size
+    ids(n) = id; parent(n) = n
+    table(idx) = n + 1
+    size += 1
+    if (size * 5 > cap * 3) grow()
+    n
+  }
+
+  private def grow(): Unit = {
+    cap *= 2; mask = cap - 1
+    table = new Array[Int](cap)
+    var n = 0
+    while (n < size) {
+      var idx = hash(ids(n)) & mask
+      while (table(idx) != 0) idx = (idx + 1) & mask
+      table(idx) = n + 1
+      n += 1
+    }
+  }
+
+  /** Root of `n0`, halving the path on the way up. */
+  private def find(n0: Int): Int = {
+    var n = n0
+    while (parent(n) != n) {
+      parent(n) = parent(parent(n))
+      n = parent(n)
+    }
+    n
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val ra = find(node(a))
+    val rb = find(node(b))
+    // the smaller id is always the root: each root is its set's minimum
+    if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+  }
+
+  def stars: Iterator[(Long, Long)] =
+    Iterator.range(0, size).flatMap { n =>
+      val r = find(n)
+      if (r == n) Iterator.empty
+      else Iterator((ids(n), ids(r)), (ids(r), ids(n)))
+    }
+}

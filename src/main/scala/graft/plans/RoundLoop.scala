@@ -13,6 +13,11 @@ import org.apache.spark.sql.GraftShims.releaseLocalCheckpoint
   * then releases the checkpoint the new state supersedes, so a loop of R
   * rounds pins one state frame in the block manager, not R.
   *
+  * Rounds are the cost to cut, so an operator solves what it can before
+  * the loop: connected components runs a per-partition union-find pass
+  * ([[LocalUnionFind]]) first, and its rounds only stitch the components
+  * that span partitions — one round when the edges fit one partition.
+  *
   * Fused loops (lpa/bfs/harmonic) are plain folds instead: their rounds
   * compile into one query whose edge exchange is reused across rounds,
   * which a per-round checkpoint would break.

@@ -3,8 +3,8 @@ package graft.queries
 import graft.{QueryModule, Tables}
 import graft.functions.Text
 import graft.operators.DedupOps
-import graft.plans.RoundLoop
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.plans.{LocalUnionFind, RoundLoop}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication query surface over `documents` / `embeddings`:
@@ -383,23 +383,39 @@ object Dedup extends QueryModule {
     * label themselves). This is the step that turns pairwise dedup
     * output into keep/drop decisions.
     *
-    * Algorithm: iterative min-label propagation — each round every node
-    * takes the min of its own and its neighbors' labels, until a round
-    * changes nothing (<= graph diameter rounds; near-dup clusters are
-    * clique-ish, so 2-4 in practice). This is the standard shuffle-based
-    * large-graph CC shape (one edges-labels join + min-agg per round —
-    * cf. Kiveris et al., "Connected Components in MapReduce and
-    * Beyond"); `localCheckpoint` truncates lineage so the loop's plan
-    * stays flat instead of growing by one join per round.
+    * Algorithm ([[ccFromPairs]]): star contraction, a per-partition
+    * union-find pass that solves what each partition holds, then
+    * iterative min-label propagation that stitches components spanning
+    * partitions — each round every node takes the min of its own and its
+    * neighbors' labels, until a round changes nothing. This is the
+    * standard shuffle-based large-graph CC shape (one edges-labels join
+    * + min-agg per round — cf. Kiveris et al., "Connected Components in
+    * MapReduce and Beyond") with a local solve in front to cut the
+    * round count, the first cost of a MapReduce algorithm;
+    * `localCheckpoint` truncates lineage so the loop's plan stays flat
+    * instead of growing by one join per round.
     */
   def clustersFrom(docs: DataFrame, ordered: Boolean = true): DataFrame =
     ccFromPairs(docs,
       minhashPairsFrom(docs, ordered = false).select("a_id", "b_id"),
       ordered)
 
-  /** The CC label-propagation loop over an arbitrary (a_id, b_id) pair
-    * set — the core [[clustersFrom]] runs on MinHash pairs and
+  /** Connected components over an arbitrary (a_id, b_id) pair set — the
+    * core [[clustersFrom]] runs on MinHash pairs and
     * dedup_winnow_clusters runs on winnow-fingerprint pairs.
+    *
+    * Three steps, each exact on its own:
+    *  1. contract: one join-free min-neighbor round labels every node
+    *     with itself or a neighbor, and the edges between those round-1
+    *     clusters are kept once each (`distinct`);
+    *  2. solve locally: a union-find pass per partition of the
+    *     contracted edges ([[graft.plans.LocalUnionFind]]) turns each
+    *     partition's edges into stars rooted at their sets' minimum ids
+    *     — in one partition the whole graph is solved here;
+    *  3. stitch: the [[graft.plans.RoundLoop]] frontier + pointer-halving
+    *     min-label propagation over the stars, which joins components
+    *     that span partitions (one round confirms an already-solved
+    *     star set).
     *
     * Empty graph: an empty pair set labels every doc with its own id
     * (every component a singleton); the convergence count over zero
@@ -437,6 +453,12 @@ object Dedup extends QueryModule {
     // this projection). The global min id m of a component satisfies
     // lab1(m)=m, so it survives contraction and min-label propagation
     // still converges to it.
+    //
+    // Then SOLVE LOCALLY: each partition's contracted edges become the
+    // min-rooted stars of its components (LocalUnionFind), which keeps
+    // every component and its minimum id; the loop below only stitches
+    // components across partitions.
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     val cEdges = edges
       .join(hint(lab1.select(col("id").as("src"), col("label").as("csrc"))),
         Seq("src"))
@@ -445,6 +467,9 @@ object Dedup extends QueryModule {
       .filter(col("csrc") =!= col("cdst"))
       .select(col("csrc").as("src"), col("cdst").as("dst"))
       .distinct()
+      .as(longPair)
+      .mapPartitions(LocalUnionFind.stars)(longPair)
+      .toDF("src", "dst")
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     // the full edge set is dead from here on — release it NOW, so the
@@ -452,7 +477,7 @@ object Dedup extends QueryModule {
     // retained (vs pinning the |pairs|-sized frame for the whole loop)
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(edges)
     val cNodes = lab1.select(col("label").as("id")).distinct()
-    // join-free round 1 again, now on the contracted graph. The state
+    // join-free round 1 again, now on the star set. The state
     // carries each node's previous label next to its label, so the
     // convergence count and the next frontier read the checkpoint
     // instead of re-executing the join; before round 1 "previous" is
@@ -498,8 +523,9 @@ object Dedup extends QueryModule {
     // chains of thousands of near-identical docs, not dedup cliques);
     // returning silently-unconverged labels would diverge from the
     // transitive-closure semantics, so fail loudly instead. (The
-    // contraction above has already collapsed cliques, so the cap
-    // budget is spent only on genuine long inter-cluster chains.)
+    // contraction and the local pass above have already solved every
+    // component inside one partition, so the cap budget is spent only on
+    // stitching components across partitions.)
     if (res.metrics("changed") > 0)
       throw new IllegalStateException(
         s"ccFromPairs: label propagation not converged after $maxRounds " +
@@ -1889,11 +1915,16 @@ object Dedup extends QueryModule {
     * instead of per component.
     *
     * Scale shape: the symmetrized edge list is checkpointed ONCE; each
-    * round is one edges-to-labels join plus two hash aggs updating an
-    * n-row label table — the PageRank round cost, never a window, and
-    * the (src, lab) frequency rows are bounded by the edge count. The
-    * argmax is `max(struct(n, -lab))` — one agg, no per-node sort;
-    * mirrored in the oracle as max-count-then-min-label.
+    * round is one edges-to-labels join, one exchange of the joined
+    * (src, lab) rows on `src`, then a (src, lab) hash count and the
+    * argmax over it, both on that one `src` partitioning — the PageRank
+    * round cost, never a window, and the (src, lab) frequency rows are
+    * bounded by the edge count. The argmax is `max(struct(n, -lab))`,
+    * one agg and no window rank; its struct buffer plans as a
+    * SortAggregate (a struct max has no fixed-width hash-agg buffer).
+    * Its output is already hashed on `src`, which the next round's
+    * label side needs. Mirrored in the oracle as
+    * max-count-then-min-label.
     *
     * @return (doc_id, community) for every non-isolated node
     *
@@ -1921,6 +1952,11 @@ object Dedup extends QueryModule {
         // the size a cluster tunes its partition count to anyway)
         .join(lab.select(col("id").as("dst"), col("lab"))
           .hint("shuffle_hash"), "dst")
+        // one exchange per round: hashed on src, the count, the argmax
+        // and the next round's label side all share it (no (src, lab)
+        // exchange in front of the count)
+        .select(col("src"), col("lab"))
+        .repartition(col("src"))
         .groupBy(col("src"), col("lab"))
         .agg(count(lit(1)).as("n"))
         .groupBy("src")

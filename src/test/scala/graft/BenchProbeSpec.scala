@@ -64,6 +64,14 @@ class BenchProbeSpec extends AnyFunSuite {
       Seq.fill(3)(Seq("run", "release")).flatten :+ "done")
   }
 
+  test("the warm line reads runs 2..N only, and says so for one run") {
+    assert(BenchProbe.warmLine("w", Seq(11.0, 5.0, 4.0, 6.0, 3.0)) ==
+      "[probe] w warm: min 3.000 s, median 4.500 s over runs 2..5")
+    assert(BenchProbe.warmLine("w", Seq(11.0, 5.0)) ==
+      "[probe] w warm: min 5.000 s, median 5.000 s over runs 2..2")
+    assert(BenchProbe.warmLine("w", Seq(11.0)) == "[probe] w warm: cold only")
+  }
+
   test("an unknown probe name fails with where names are looked up") {
     val e = intercept[IllegalArgumentException](BenchProbe.resolve("scaledcc"))
     val msg = e.getMessage

@@ -201,23 +201,26 @@ class DedupGuardSpec extends AnyFunSuite {
     assert(withNulls.isNullAt(1))
   }
 
-  test("ccFromPairs matches union-find on adversarial graph shapes") {
-    // Pins the contraction + pointer-halving loop against brute-force
-    // transitive closure on shapes where round-1 contraction does NOT
-    // collapse the graph: long paths (contracting a path yields another
-    // path — the loop's halving does the work), stars, bridged cliques,
-    // isolated nodes, and a seeded random graph.
-    def unionFind(ids: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
-      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
-      def find(x: Long): Long =
-        if (parent(x) == x) x
-        else { val r = find(parent(x)); parent(x) = r; r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(ra max rb) = ra min rb
-      }
-      ids.map(i => i -> find(i)).toMap
+  // Brute-force transitive closure: every id mapped to its component's
+  // minimum id.
+  private def unionFind(ids: Seq[Long],
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x
+      else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra max rb) = ra min rb
     }
+    ids.map(i => i -> find(i)).toMap
+  }
+
+  // Shapes where round-1 contraction does NOT collapse the graph: long
+  // paths (contracting a path yields another path — the loop's halving
+  // does the work), stars, bridged cliques, isolated nodes, and a seeded
+  // random graph.
+  private def checkCcShapes(): Unit = {
     def check(ids: Seq[Long], edges: Seq[(Long, Long)]): Unit = {
       val docs = ids.toDF("doc_id")
       val pairs = edges.toDF("a_id", "b_id")
@@ -240,6 +243,44 @@ class DedupGuardSpec extends AnyFunSuite {
     val rndEdges = Seq.fill(45)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter { case (a, b) => a != b }
     check(ids, rndEdges)
+  }
+
+  test("ccFromPairs matches union-find on adversarial graph shapes") {
+    checkCcShapes()
+  }
+
+  test("ccFromPairs stitches components that span shuffle partitions") {
+    // Small contracted edge sets coalesce into one partition, where the
+    // local union-find pass solves them whole. Without coalescing they
+    // spread over every shuffle partition, so the stitching round loop
+    // (frontier + pointer halving) has to join the partitions' stars.
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try checkCcShapes()
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("local union-find pass: stars rooted at each set's minimum") {
+    def stars(edges: (Long, Long)*): Seq[(Long, Long)] =
+      graft.plans.LocalUnionFind.stars(edges.iterator).toSeq
+    // every non-root node once as (v, r) with r its set's min, and the
+    // reverse edge once
+    def assertStars(edges: Seq[(Long, Long)]): Unit = {
+      val got = stars(edges: _*)
+      val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val want = unionFind(ids, edges).toSeq.filter { case (v, r) => v != r }
+      assert(got.filter { case (a, b) => a > b }.sorted === want.sorted)
+      assert(got.filter { case (a, b) => a < b }.map(_.swap).sorted ===
+        want.sorted)
+    }
+    assert(stars().isEmpty) // empty partition
+    assert(stars((7L, 3L)) === Seq((7L, 3L), (3L, 7L)))
+    assertStars(Seq((5L, 9L), (9L, 5L), (5L, 9L), (9L, 2L), (9L, 2L)))
+    // star centred on the highest id
+    assertStars((0L until 19L).map(i => (19L, i)))
+    // long path fed high end first, past the table's initial capacity
+    assertStars((3000L until 0L by -1L).map(i => (i, i - 1L)))
   }
 
   test("cluster labels equal transitive closure on a chain within the round cap") {

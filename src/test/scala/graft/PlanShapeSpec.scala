@@ -376,10 +376,20 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("lpa: round argmax is a hash agg, never a window") {
+  test("lpa: round argmax is one struct-max aggregate, never a window") {
     val p = plan("graph_lpa")
     assert(!p.contains("Window"),
       "max(struct(n, -lab)) argmax replaced by a window rank:\n" + p)
+  }
+
+  test("lpa: one exchange per round, keyed on src alone") {
+    // the (src, lab) count and the argmax share the src partitioning;
+    // an exchange keyed on (src, lab) in front of the count is the
+    // extra per-round shuffle this shape removes
+    val p = plan("graph_lpa")
+    assert("""hashpartitioning\(src#\d+L?, \d+""".r.findFirstIn(p).isDefined, p)
+    assert("""hashpartitioning\(src#\d+L?, lab#""".r.findFirstIn(p).isEmpty,
+      "(src, lab) exchange in front of the round count:\n" + p)
   }
 
   test("bfs: relaxation is equi-joins + min aggs, never a window") {
