@@ -118,7 +118,7 @@ object Bench {
       "sim_pq_topk", "sim_sq_topk", "sim_sparse_pairs"),
     "iterative fixed-round graph loops (PageRank power iteration, " +
       "k-core peel): the per-round agg+join plan is the one timed by " +
-      "scaled_cc_x20's contract-then-solve loop family; gate-scale graph " +
+      "scaled_cc_x20's CC round loop family; gate-scale graph " +
       "is tiny; LPA's round cost is timed at 20x by scaled_lpa_x20" ->
       Seq("graph_pagerank", "graph_kcore", "graph_coreness", "graph_lpa",
       "graph_bfs", "graph_walks", "graph_cluster_quality",

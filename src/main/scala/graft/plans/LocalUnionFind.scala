@@ -1,18 +1,24 @@
 package graft.plans
 
-/** Connected components of ONE partition's edge rows, solved in memory
-  * with no exchange — the local pass in front of
-  * [[graft.queries.Dedup.ccFromPairs]]' round loop.
+/** Connected components of ONE partition's pair rows, solved in memory
+  * with no exchange — the local pass of
+  * [[graft.queries.Dedup.ccFromPairs]], run over the caller's own pair
+  * partitions.
   *
-  * Every edge of the partition is unioned with the smaller id always the
+  * Every pair of the partition is unioned with the smaller id always the
   * root, so each root is its set's minimum. The partition's components
   * then leave as stars: for every non-root node `v` with root `r`, the
   * edges `(v, r)` and `(r, v)`. Each star edge lies inside one component
-  * and every input edge's endpoints share one star, so the union of all
-  * partitions' stars has exactly the input's components; a component
-  * that sits whole in one partition is solved in one round of min-label
-  * propagation, and the round loop only stitches components that span
+  * and every input pair's endpoints share one star, so the union of all
+  * partitions' stars has exactly the input's components. When no
+  * component spans two partitions those stars are disjoint and
+  * min-centred, the labels they give are final, and the round loop
+  * runs no round; otherwise it only stitches the components that span
   * partitions.
+  *
+  * State is O(distinct ids in the partition), at most
+  * min(2 * pairs in the partition, |docs|) nodes when every pair
+  * endpoint is a doc id.
   */
 object LocalUnionFind {
 

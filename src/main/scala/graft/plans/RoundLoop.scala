@@ -14,9 +14,10 @@ import org.apache.spark.sql.GraftShims.releaseLocalCheckpoint
   * rounds pins one state frame in the block manager, not R.
   *
   * Rounds are the cost to cut, so an operator solves what it can before
-  * the loop: connected components runs a per-partition union-find pass
-  * ([[LocalUnionFind]]) first, and its rounds only stitch the components
-  * that span partitions — one round when the edges fit one partition.
+  * the loop: connected components runs a union-find pass over each of
+  * the caller's pair partitions ([[LocalUnionFind]]) first, observes a
+  * conflict count on its initial state, and its rounds only stitch the
+  * components that span partitions — no round when none does.
   *
   * Fused loops (lpa/bfs/harmonic) are plain folds instead: their rounds
   * compile into one query whose edge exchange is reused across rounds,

@@ -383,15 +383,16 @@ object Dedup extends QueryModule {
     * label themselves). This is the step that turns pairwise dedup
     * output into keep/drop decisions.
     *
-    * Algorithm ([[ccFromPairs]]): star contraction, a per-partition
-    * union-find pass that solves what each partition holds, then
-    * iterative min-label propagation that stitches components spanning
-    * partitions — each round every node takes the min of its own and its
-    * neighbors' labels, until a round changes nothing. This is the
-    * standard shuffle-based large-graph CC shape (one edges-labels join
-    * + min-agg per round — cf. Kiveris et al., "Connected Components in
-    * MapReduce and Beyond") with a local solve in front to cut the
-    * round count, the first cost of a MapReduce algorithm;
+    * Algorithm ([[ccFromPairs]]): a union-find pass over each partition
+    * of the pairs, where the pairs already are, solves what that
+    * partition holds; min-label propagation then stitches only the
+    * components that span partitions — each round every node takes the
+    * min of its own and its neighbors' labels, until a round changes
+    * nothing. This is the standard shuffle-based large-graph CC shape
+    * (one edges-labels join + min-agg per round — cf. Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond") with a local solve
+    * in front to cut the round count, the first cost of a MapReduce
+    * algorithm; when no component spans two partitions no round runs.
     * `localCheckpoint` truncates lineage so the loop's plan stays flat
     * instead of growing by one join per round.
     */
@@ -402,24 +403,37 @@ object Dedup extends QueryModule {
 
   /** Connected components over an arbitrary (a_id, b_id) pair set — the
     * core [[clustersFrom]] runs on MinHash pairs and
-    * dedup_winnow_clusters runs on winnow-fingerprint pairs.
+    * dedup_winnow_clusters runs on winnow-fingerprint pairs. Every
+    * non-null pair endpoint must be a doc_id of `docs`; a pair with a
+    * null endpoint is ignored.
     *
     * Three steps, each exact on its own:
-    *  1. contract: one join-free min-neighbor round labels every node
-    *     with itself or a neighbor, and the edges between those round-1
-    *     clusters are kept once each (`distinct`);
-    *  2. solve locally: a union-find pass per partition of the
-    *     contracted edges ([[graft.plans.LocalUnionFind]]) turns each
-    *     partition's edges into stars rooted at their sets' minimum ids
-    *     — in one partition the whole graph is solved here;
-    *  3. stitch: the [[graft.plans.RoundLoop]] frontier + pointer-halving
-    *     min-label propagation over the stars, which joins components
-    *     that span partitions (one round confirms an already-solved
-    *     star set).
+    *  1. local pass: a union-find pass over each of the caller's own
+    *     pair partitions ([[graft.plans.LocalUnionFind]]), with no
+    *     exchange, turns the partition's pairs into stars rooted at
+    *     their sets' minimum ids. Its state is O(distinct ids in the
+    *     partition) <= min(2 * pairs in the partition, |docs|). The
+    *     union of all partitions' stars has exactly the input's
+    *     components.
+    *  2. conflict check: one hash aggregate per `src` over the stars
+    *     gives each node its initial label (the min of itself and its
+    *     neighbors) and flags it as a conflict when it has a smaller
+    *     neighbor and either a larger one or two different smaller
+    *     ones. With no conflict the labels are final: a node with a
+    *     smaller neighbor `r` is a leaf whose only neighbor is `r`, and
+    *     `r`, which has a larger neighbor, has no smaller one. A leaf and
+    *     its `r` therefore form a min-centred star, every component of
+    *     the stars is such a star, and each leaf's label `r` is its
+    *     component's minimum id.
+    *  3. stitch: otherwise the [[graft.plans.RoundLoop]] frontier +
+    *     pointer-halving min-label propagation over the stars joins the
+    *     components that span partitions. The conflict count is the
+    *     initial state's convergence metric, so a star set that is
+    *     already solved runs no round.
     *
-    * Empty graph: an empty pair set labels every doc with its own id
-    * (every component a singleton); the convergence count over zero
-    * changed labels reads 0, so the loop runs no round.
+    * The result is a projection of the loop state's checkpoint, the one
+    * frame the call leaves pinned. Empty graph: every doc labels itself
+    * (every component a singleton) and no round runs.
     */
   def ccFromPairs(docs: DataFrame, pairs: DataFrame,
       ordered: Boolean = true): DataFrame = {
@@ -429,67 +443,42 @@ object Dedup extends QueryModule {
     // must never be the build side. Past reach the hint drops away and
     // every loop join runs as a key shuffle.
     val hint = DedupOps.sizeHint(docs)
-    // The edge list (2x pairs) is the loop's big retained frame.
-    val edges = symmetrized(pairs)
-    // Round 1 collapsed into a join-free aggregation: with labels
-    // initialized to ids, min neighbor LABEL == min neighbor ID, so the
-    // heaviest round (every node active) is one groupBy over the edge
-    // list instead of an edges-x-labels join.
-    val nbr0 = edges.groupBy("src").agg(min("dst").as("nbr_min"))
-    val lab1 = docs.select(col("doc_id").as("id"))
-      .join(hint(nbr0), col("id") === col("src"), "left")
-      .select(col("id"),
-        least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"))
-      .localCheckpoint()
-    // CONTRACT, then solve (Kiveris et al.'s star-contraction family):
-    // lab1 maps every node into its own component (itself or a direct
-    // neighbor), so collapsing nodes onto their round-1 labels preserves
-    // components exactly; the surviving graph keeps only edges BETWEEN
-    // round-1 clusters. Near-dup graphs are clique-ish, so this is
-    // typically a >100x edge reduction — the iterative loop below then
-    // scans the contracted remnant per round instead of the full edge
-    // set, which is what keeps per-round cost flat as the corpus grows
-    // (the full edge set is touched exactly twice: the round-1 min and
-    // this projection). The global min id m of a component satisfies
-    // lab1(m)=m, so it survives contraction and min-label propagation
-    // still converges to it.
-    //
-    // Then SOLVE LOCALLY: each partition's contracted edges become the
-    // min-rooted stars of its components (LocalUnionFind), which keeps
-    // every component and its minimum id; the loop below only stitches
-    // components across partitions.
     val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
-    val cEdges = edges
-      .join(hint(lab1.select(col("id").as("src"), col("label").as("csrc"))),
-        Seq("src"))
-      .join(hint(lab1.select(col("id").as("dst"), col("label").as("cdst"))),
-        Seq("dst"))
-      .filter(col("csrc") =!= col("cdst"))
-      .select(col("csrc").as("src"), col("cdst").as("dst"))
-      .distinct()
-      .as(longPair)
+    // The star set (at most two rows per input pair, far fewer on
+    // clique-ish near-dup graphs) is the loop's retained edge frame; the
+    // caller's pairs are read once, here.
+    val stars = pairs
+      .filter(col("a_id").isNotNull && col("b_id").isNotNull)
+      .select("a_id", "b_id").as(longPair)
       .mapPartitions(LocalUnionFind.stars)(longPair)
       .toDF("src", "dst")
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // the full edge set is dead from here on — release it NOW, so the
-    // loop runs with only the contracted remnant + one label frame
-    // retained (vs pinning the |pairs|-sized frame for the whole loop)
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(edges)
-    val cNodes = lab1.select(col("label").as("id")).distinct()
-    // join-free round 1 again, now on the star set. The state
-    // carries each node's previous label next to its label, so the
-    // convergence count and the next frontier read the checkpoint
-    // instead of re-executing the join; before round 1 "previous" is
-    // the node's own id.
-    val cNbr0 = cEdges.groupBy("src").agg(min("dst").as("nbr_min"))
-    val init = cNodes
-      .join(hint(cNbr0), col("id") === col("src"), "left")
+    // One aggregate per node over the stars: its smallest neighbor, and
+    // whether it is a conflict (a smaller neighbor plus a larger one or a
+    // second, different smaller one — step 2 above).
+    val starNbr = stars.groupBy("src")
+      .agg(min("dst").as("nbr_min"), max("dst").as("nbr_max"),
+        max(when(col("dst") < col("src"), col("dst"))).as("lo_max"))
+      .select(col("src"), col("nbr_min"),
+        (col("nbr_min") < col("src") &&
+          (col("nbr_max") > col("src") || col("lo_max") =!= col("nbr_min")))
+          .as("conflict"))
+    // The state carries each node's previous label next to its label, so
+    // the convergence count and the next frontier read the checkpoint
+    // instead of re-executing the join; before round 1 "previous" is the
+    // node's own id.
+    val init = docs.select(col("doc_id").as("id"))
+      .join(hint(starNbr), col("id") === col("src"), "left")
       .select(col("id"), col("id").as("old_label"),
-        least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"))
-    val changed = count_if(col("label") < col("old_label")).as("changed")
+        least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"),
+        col("conflict"))
+    // "open": nodes whose label may still improve — the conflicts for the
+    // initial state, the labels a round lowered after that
+    val conflicts = count_if(col("conflict")).as("open")
+    val changed = count_if(col("label") < col("old_label")).as("open")
     val maxRounds = 50
-    val res = RoundLoop.run(RoundLoop.checkpoint(init, changed),
+    val res = RoundLoop.run(RoundLoop.checkpoint(init, conflicts),
         maxRounds - 1, changed) { state => // the initial state is round 1
       // frontier = nodes whose label changed last round: only THEIR
       // labels can improve a neighbor this round, so later rounds join
@@ -497,7 +486,7 @@ object Dedup extends QueryModule {
       // corpus (the BFS-frontier refinement of label propagation)
       val frontier = state.filter(col("label") < col("old_label"))
         .select(col("id").as("nid"), col("label"))
-      val nbr = cEdges
+      val nbr = stars
         .join(hint(frontier), col("dst") === col("nid"))
         .groupBy("src").agg(min("label").as("nbr_min"))
       // pointer halving against the PREVIOUS round's materialized
@@ -518,32 +507,24 @@ object Dedup extends QueryModule {
         .select(col("id"), col("old_label"),
           least(col("stepped"), coalesce(col("l2"), col("stepped")))
             .as("label"))
-    }((_, m) => m("changed") == 0)
+    }((_, m) => m("open") == 0)
     // The cap exists to bound a pathological input (diameter > 50 means
     // chains of thousands of near-identical docs, not dedup cliques);
     // returning silently-unconverged labels would diverge from the
-    // transitive-closure semantics, so fail loudly instead. (The
-    // contraction and the local pass above have already solved every
-    // component inside one partition, so the cap budget is spent only on
-    // stitching components across partitions.)
-    if (res.metrics("changed") > 0)
+    // transitive-closure semantics, so fail loudly instead. (The local
+    // pass has already solved every component inside one partition, so
+    // the cap budget is spent only on stitching components across
+    // partitions.)
+    if (res.metrics("open") > 0)
       throw new IllegalStateException(
         s"ccFromPairs: label propagation not converged after $maxRounds " +
-          s"rounds (${res.metrics("changed")} labels still improving); " +
+          s"rounds (${res.metrics("open")} labels still improving); " +
           "pair-graph diameter exceeds the cap — raise it or pre-contract " +
           "the long chains")
-    // Compose: final(id) = ccLabel(lab1(id)). Materialize the composed
-    // corpus-sized frame once, then release every loop frame — only the
-    // one final label frame outlives the call, whatever the caller does
-    // with it.
-    val out = lab1
-      .join(hint(res.state.select(col("label").as("cluster"),
-        col("id").as("cid"))), col("label") === col("cid"))
-      .select(col("id").as("doc_id"), col("cluster"))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(cEdges)
-    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(lab1)
-    res.release()
+    // the state checkpoint has no lineage back to the stars: only it
+    // outlives the call, whatever the caller does with the labels
+    org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(stars)
+    val out = res.state.select(col("id").as("doc_id"), col("label").as("cluster"))
     if (ordered) out.orderBy("doc_id") else out
   }
 
@@ -1979,7 +1960,7 @@ object Dedup extends QueryModule {
     * (cut / (2 e_in + cut)) — all integer arithmetic, mirrored
     * verbatim by the oracle. Top 25 clusters by (n_nodes desc, id).
     *
-    * Scale shape: one CC solve (contract-then-solve, see
+    * Scale shape: one CC solve (local union-find, then stitching, see
     * [[ccFromPairs]]), two label re-attaches onto the pair list
     * (broadcast while the corpus is inside broadcast reach — the
     * size-gated [[graft.operators.DedupOps.sizeHint]] policy), then

@@ -216,10 +216,10 @@ class DedupGuardSpec extends AnyFunSuite {
     ids.map(i => i -> find(i)).toMap
   }
 
-  // Shapes where round-1 contraction does NOT collapse the graph: long
-  // paths (contracting a path yields another path — the loop's halving
-  // does the work), stars, bridged cliques, isolated nodes, and a seeded
-  // random graph.
+  // Shapes that are not already min-centred stars: long paths (the
+  // loop's halving does the work wherever the path spans partitions),
+  // stars on the highest id, bridged cliques, isolated nodes, and a
+  // seeded random graph.
   private def checkCcShapes(): Unit = {
     def check(ids: Seq[Long], edges: Seq[(Long, Long)]): Unit = {
       val docs = ids.toDF("doc_id")
@@ -228,7 +228,8 @@ class DedupGuardSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(got === unionFind(ids, edges))
     }
-    // path: diameter 129 — needs the halving loop, not just contraction
+    // path: diameter 129 — one partition solves it locally; spread
+    // over several it needs the halving loop
     check(0L until 130L, (0L until 129L).map(i => (i, i + 1L)))
     // star centered on the HIGHEST id: every leaf must still win the min
     check(0L until 20L, (0L until 19L).map(i => (19L, i)))
@@ -250,15 +251,72 @@ class DedupGuardSpec extends AnyFunSuite {
   }
 
   test("ccFromPairs stitches components that span shuffle partitions") {
-    // Small contracted edge sets coalesce into one partition, where the
-    // local union-find pass solves them whole. Without coalescing they
-    // spread over every shuffle partition, so the stitching round loop
-    // (frontier + pointer halving) has to join the partitions' stars.
+    // The local union-find pass runs over the caller's pair partitions:
+    // a local relation's rows are sliced over the default parallelism,
+    // so the long path and the random graph span pair partitions and the
+    // stitching round loop (frontier + pointer halving) joins their
+    // stars. Without coalescing, the star aggregate and the loop's
+    // exchanges also spread over every shuffle partition.
     val key = "spark.sql.adaptive.coalescePartitions.enabled"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "false")
     try checkCcShapes()
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("ccFromPairs stitches a path whose edges are spread over 16 partitions") {
+    // repartition(16) scatters the path's 129 edges round-robin, so each
+    // partition's local pass sees a few disconnected edges and the
+    // stitching loop does the work
+    val ids = 0L until 130L
+    val edges = (0L until 129L).map(i => (i, i + 1L))
+    val got = Dedup.ccFromPairs(ids.toDF("doc_id"),
+        edges.toDF("a_id", "b_id").repartition(16), ordered = false)
+      .as[(Long, Long)].collect().toMap
+    assert(got === unionFind(ids, edges))
+  }
+
+  test("ccFromPairs ignores pairs with a null endpoint") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)))
+      .toDF("a_id", "b_id")
+    val got = Dedup.ccFromPairs(Seq(1L, 2L, 3L).toDF("doc_id"), pairs)
+      .as[(Long, Long)].collect().toSeq
+    assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 3L))
+  }
+
+  test("ccFromPairs runs no stitching round when each component sits in one partition") {
+    // 4 partitions, each generating 5 whole components (a 12-node path
+    // plus chords), so the local pass solves everything and the conflict
+    // count on the initial labels is 0. A stitching round costs a
+    // frontier join, a min aggregate, a lookup join and a checkpoint:
+    // several jobs on top of the stars checkpoint, the star aggregate
+    // and the initial checkpoint.
+    def component(c: Long): Seq[(Long, Long)] = {
+      val base = c * 100
+      (0L until 11L).map(i => (base + i + 1, base + i)) ++
+        Seq((base + 11, base), (base + 3, base + 9))
+    }
+    val pairs = spark.range(0, 20, 1, 4).as[Long]
+      .flatMap(component).toDF("a_id", "b_id")
+    val edges = (0L until 20L).flatMap(component)
+    val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val labels = try {
+      val out = Dedup.ccFromPairs(ids.toDF("doc_id"), pairs, ordered = false)
+      org.apache.spark.sql.GraftShims.waitListenerBusEmpty(spark)
+      out
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(labels.as[(Long, Long)].collect().toMap === unionFind(ids, edges))
+    // Measured: 4 jobs with no round, 9 with one forced round.
+    assert(jobs.get <= 6, s"ccFromPairs ran ${jobs.get} jobs")
   }
 
   test("local union-find pass: stars rooted at each set's minimum") {
