@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.DoubleType
-import graft.functions.{CosineSimilarity, ShingleHashes, TokenizeExplode}
+import graft.functions.{CosineSimilarity, GkQuantile, HllDistinct, KmvDistinct,
+  KmvSketchAgg, ShingleHashes, TokenizeExplode, Vectors}
 
 /** Catalyst optimizer rule: cosine(x, x) is identically 1.0 — fold it
   * to a literal so self-similarity terms (common in generated pair
@@ -28,45 +29,19 @@ object SimplifySelfCosine extends Rule[LogicalPlan] {
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_tokenize"),
-      new ExpressionInfo(classOf[TokenizeExplode].getName, "graft_tokenize"),
-      (exprs: Seq[Expression]) => TokenizeExplode(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "graft_shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_distinct"),
-      new ExpressionInfo(classOf[graft.functions.KmvDistinct].getName,
-        "graft_kmv_distinct"),
-      (exprs: Seq[Expression]) => graft.functions.KmvDistinct(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("graft_kmv_sketch"),
-      new ExpressionInfo(classOf[graft.functions.KmvSketchAgg].getName,
-        "graft_kmv_sketch"),
-      (exprs: Seq[Expression]) => graft.functions.KmvSketchAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((
-      FunctionIdentifier("graft_gk_quantile"),
-      new ExpressionInfo(classOf[graft.functions.GkQuantile].getName,
-        "graft_gk_quantile"),
-      (exprs: Seq[Expression]) => graft.functions.GkQuantile(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].doubleValue(),
-        exprs(2).eval().asInstanceOf[Number].doubleValue())))
-    e.injectFunction((
-      FunctionIdentifier("graft_hll_distinct"),
-      new ExpressionInfo(classOf[graft.functions.HllDistinct].getName,
-        "graft_hll_distinct"),
-      (exprs: Seq[Expression]) => graft.functions.HllDistinct(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 12)))
+    // each builder is the one its object's `register` uses
+    Seq[(String, Class[_], Seq[Expression] => Expression)](
+      ("graft_cosine", classOf[CosineSimilarity], Vectors.cosineBuilder),
+      ("graft_tokenize", classOf[TokenizeExplode], TokenizeExplode.builder),
+      ("graft_shingle_hashes", classOf[ShingleHashes], ShingleHashes.builder),
+      ("graft_kmv_distinct", classOf[KmvDistinct], KmvDistinct.builder),
+      ("graft_kmv_sketch", classOf[KmvSketchAgg], KmvSketchAgg.builder),
+      ("graft_gk_quantile", classOf[GkQuantile], GkQuantile.builder),
+      ("graft_hll_distinct", classOf[HllDistinct], HllDistinct.builder)
+    ).foreach { case (name, cls, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     e.injectOptimizerRule(_ => SimplifySelfCosine)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }

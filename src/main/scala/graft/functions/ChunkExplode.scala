@@ -33,27 +33,12 @@ case class ChunkExplode(child: Expression, width: Int, stride: Int)
 
   override def prettyName: String = "graft_chunks"
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    var tokStart = -1
-    while (i <= len) {
-      val isWord = i < len && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        starts.add(tokStart); ends.add(i); tokStart = -1
-      }
-      i += 1
-    }
-    val nTok = starts.size()
+    val sp = Tokens.spans(bytes)
+    val nTok = sp.size
     if (nTok == 0) return Iterator.empty
     // offsets 0, stride, 2*stride, ...; stop at the first window whose
     // end reaches the last token
@@ -62,20 +47,7 @@ case class ChunkExplode(child: Expression, width: Int, stride: Int)
     Iterator.tabulate(nChunks) { k =>
       val from = k * stride
       val until = math.min(from + width, nTok)
-      var size = until - from - 1 // joining spaces
-      var j = from
-      while (j < until) { size += ends.get(j) - starts.get(j); j += 1 }
-      val out = new Array[Byte](size)
-      var pos = 0
-      j = from
-      while (j < until) {
-        if (j > from) { out(pos) = ' '; pos += 1 }
-        val l = ends.get(j) - starts.get(j)
-        System.arraycopy(bytes, starts.get(j), out, pos, l)
-        pos += l
-        j += 1
-      }
-      new GenericInternalRow(Array[Any](k, UTF8String.fromBytes(out),
+      new GenericInternalRow(Array[Any](k, Tokens.joined(bytes, sp, from, until),
         until - from)): InternalRow
     }
   }

@@ -208,13 +208,16 @@ object GkQuantile {
     }
   }
 
+  /** SQL argument decoding of `graft_gk_quantile(x, eps, phi)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => GkQuantile(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].doubleValue(),
+      exprs(2).eval().asInstanceOf[Number].doubleValue())
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gk_quantile",
-      exprs => GkQuantile(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].doubleValue(),
-        exprs(2).eval().asInstanceOf[Number].doubleValue()),
-      "scala_udf")
+      "graft_gk_quantile", builder, "scala_udf")
 
   /** ε-approximate φ-quantile of numeric column `c`. */
   def gk(spark: SparkSession, c: Column, eps: Double, phi: Double): Column = {

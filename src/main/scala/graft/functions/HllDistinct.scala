@@ -115,13 +115,16 @@ case class HllDistinct(child: Expression, p: Int = 12,
 
 object HllDistinct {
 
+  /** SQL argument decoding of `graft_hll_distinct(s [, p])`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => HllDistinct(exprs.head,
+      if (exprs.length > 1) exprs(1).eval().asInstanceOf[Number].intValue()
+      else 12)
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hll_distinct",
-      exprs => HllDistinct(exprs.head,
-        if (exprs.length > 1) exprs(1).eval().asInstanceOf[Number].intValue()
-        else 12),
-      "scala_udf")
+      "graft_hll_distinct", builder, "scala_udf")
 
   /** Approximate distinct count of string column `c`, 2^p registers. */
   def hll(spark: SparkSession, c: Column, p: Int = 12): Column = {

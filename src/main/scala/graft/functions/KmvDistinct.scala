@@ -114,12 +114,15 @@ case class KmvDistinct(child: Expression, k: Int,
 
 object KmvDistinct {
 
+  /** SQL argument decoding of `graft_kmv_distinct(s, k)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => KmvDistinct(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue())
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_distinct",
-      exprs => KmvDistinct(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+      "graft_kmv_distinct", builder, "scala_udf")
 
   /** Approximate distinct count of string column `c` (k-minimum-values). */
   def kmv(spark: SparkSession, c: Column, k: Int): Column = {
@@ -236,12 +239,15 @@ case class KmvSketchAgg(child: Expression, k: Int,
 
 object KmvSketchAgg {
 
+  /** SQL argument decoding of `graft_kmv_sketch(s, k)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => KmvSketchAgg(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue())
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv_sketch",
-      exprs => KmvSketchAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+      "graft_kmv_sketch", builder, "scala_udf")
 
   /** The KMV synopsis (sorted array of the k smallest distinct hashes)
     * of string column `c`. */

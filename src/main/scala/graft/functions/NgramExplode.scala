@@ -9,7 +9,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused word n-gram Generator: one output row per n consecutive
-  * `[A-Za-z0-9]+` tokens of the input, joined by single spaces.
+  * tokens (`functions/Tokens.scala`) of the input, joined by single
+  * spaces.
   *
   * Replaces the `transform(sequence(...), i -> array_join(slice(...)))`
   * higher-order formulation, which is interpreted AND O(tokens^2) per
@@ -25,43 +26,13 @@ case class NgramExplode(child: Expression, n: Int)
 
   override def prettyName: String = "graft_ngrams"
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    var tokStart = -1
-    while (i <= len) {
-      val isWord = i < len && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        starts.add(tokStart); ends.add(i); tokStart = -1
-      }
-      i += 1
-    }
-    val nTok = starts.size()
-    if (nTok < n) return Iterator.empty
-    Iterator.tabulate(nTok - n + 1) { k =>
-      var size = n - 1 // the joining spaces
-      var j = 0
-      while (j < n) { size += ends.get(k + j) - starts.get(k + j); j += 1 }
-      val out = new Array[Byte](size)
-      var pos = 0
-      j = 0
-      while (j < n) {
-        if (j > 0) { out(pos) = ' '; pos += 1 }
-        val l = ends.get(k + j) - starts.get(k + j)
-        System.arraycopy(bytes, starts.get(k + j), out, pos, l)
-        pos += l
-        j += 1
-      }
-      new GenericInternalRow(Array[Any](UTF8String.fromBytes(out))): InternalRow
+    val sp = Tokens.spans(bytes)
+    Iterator.tabulate(math.max(sp.size - n + 1, 0)) { k =>
+      new GenericInternalRow(Array[Any](Tokens.joined(bytes, sp, k, k + n))): InternalRow
     }
   }
 

@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * n-gram of the input string, carrying the two 48-bit halves of the
   * shingle's md5 — i.e. the exact values of
   * `('0x'||substr(md5(shingle),1,12))::BIGINT` and bytes 7-12, where
-  * `shingle` is n consecutive `[A-Za-z0-9]+` tokens joined by ' '.
+  * `shingle` is n consecutive tokens (`functions/Tokens.scala`) joined
+  * by ' '.
   *
   * Collapses tokenize (HOF filter — interpreted), n-gram assembly (HOF
   * transform — interpreted), explode, hex md5 and two conv() parses
@@ -34,9 +35,6 @@ case class ShingleHashes(child: Expression, n: Int)
 
   override def prettyName: String = "graft_shingle_hashes"
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   @transient private lazy val digestTL: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
@@ -44,22 +42,8 @@ case class ShingleHashes(child: Expression, n: Int)
     val v = child.eval(input)
     if (v == null) return Iterator.empty
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-
-    // Token boundary scan: collect (start, end) of every token.
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    var tokStart = -1
-    while (i <= len) {
-      val isWord = i < len && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        starts.add(tokStart); ends.add(i); tokStart = -1
-      }
-      i += 1
-    }
-    val nTok = starts.size()
+    val sp = Tokens.spans(bytes)
+    val nTok = sp.size
     if (nTok < n) return Iterator.empty
 
     val md = digestTL.get()
@@ -69,7 +53,7 @@ case class ShingleHashes(child: Expression, n: Int)
       var j = 0
       while (j < n) {
         if (j > 0) md.update(space)
-        md.update(bytes, starts.get(k + j), ends.get(k + j) - starts.get(k + j))
+        md.update(bytes, sp.start(k + j), sp.len(k + j))
         j += 1
       }
       val d = md.digest()
@@ -91,12 +75,15 @@ case class ShingleHashes(child: Expression, n: Int)
 
 object ShingleHashes {
 
+  /** SQL argument decoding of `graft_shingle_hashes(s, n)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => ShingleHashes(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue())
+
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "scala_udf")
+      "graft_shingle_hashes", builder, "scala_udf")
 
   /** Generator Column: (h1, h2) per word n-gram of `c`. */
   def shingleHashes(spark: SparkSession, c: Column, n: Int): Column = {

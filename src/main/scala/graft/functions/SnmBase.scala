@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructField,
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Fused per-document base pass of the sorted-neighborhood blocker:
-  * ONE byte scan of the (already lowercased) text producing
+  * one key scan and one [[Tokens]] scan of the (already lowercased)
+  * text producing
   *
   *   k1 = substring(regexp_replace(s, "[^a-z0-9]+", ""), 1, 12)
   *   k2 = substring(reverse(regexp_replace(s, "[^a-z0-9]+", "")), 1, 12)
@@ -32,7 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     (the scan keeps the first 12 and last 12 surviving bytes — the
   *     full norm string is never built);
   *   - `split` on the complement class + empty-filter == maximal
-  *     [A-Za-z0-9] byte runs (the TokenizeExplode FSM argument: every
+  *     [A-Za-z0-9] byte runs (the [[Tokens]] argument: every
   *     byte >= 0x80 is a separator, and ASCII bytes never occur inside
   *     multi-byte UTF-8 sequences);
   *   - array_sort on array<string> orders by UTF8String.compareTo
@@ -72,13 +73,13 @@ object SnmBase {
 
   private val KEY_LEN = 12
 
-  @inline private def isTokByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
+  /** The key alphabet: `[a-z0-9]`, a different rule from the token
+    * class (the input is already lowercased; keys drop every other
+    * byte). */
   @inline private def isNormByte(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= '0' && b <= '9')
 
-  /** Single-pass (k1, k2, sorted distinct tokens) — see the case class
+  /** (k1, k2, sorted distinct tokens) — see the case class
     * scaladoc for the contract. Called from generated code; must stay
     * a pure static function of its argument.
     */
@@ -89,18 +90,9 @@ object SnmBase {
     var nFirst = 0
     val ring = new Array[Byte](KEY_LEN)
     var kept = 0L
-    val toks = new java.util.ArrayList[UTF8String]()
-    var tokStart = -1
     var i = 0
-    while (i <= n) {
-      val inTok = i < n && isTokByte(bytes(i))
-      if (inTok) {
-        if (tokStart < 0) tokStart = i
-      } else if (tokStart >= 0) {
-        toks.add(UTF8String.fromBytes(bytes, tokStart, i - tokStart))
-        tokStart = -1
-      }
-      if (i < n && isNormByte(bytes(i))) {
+    while (i < n) {
+      if (isNormByte(bytes(i))) {
         if (nFirst < KEY_LEN) { first(nFirst) = bytes(i); nFirst += 1 }
         ring((kept % KEY_LEN).toInt) = bytes(i)
         kept += 1
@@ -116,7 +108,7 @@ object SnmBase {
       j += 1
     }
     val k2 = UTF8String.fromBytes(tail, 0, m)
-    val arr = toks.toArray(new Array[UTF8String](toks.size()))
+    val arr = Tokens.strings(bytes).toArray
     java.util.Arrays.sort(arr.asInstanceOf[Array[Object]])
     var w = 0
     var r = 0

@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * 217-266): a token is a maximal run of ASCII `[A-Za-z0-9]`; every other
   * byte (incl. `_` and all bytes >= 0x80) is a separator; case-sensitive;
   * no normalization. `split` on the complement class + empty-filter is
-  * exactly the C FSM for every input (argument in SURVEY §1.4).
+  * exactly the C FSM for every input (argument in SURVEY §1.4). The
+  * byte-level form of the rule that the engine's own operators run
+  * lives in `functions/Tokens.scala`; these Columns are its
+  * oracle-mirrored SQL form.
   *
   * All pure `org.apache.spark.sql.functions` — whole-stage-codegen'd,
   * no UDFs in the hot path.

@@ -8,19 +8,17 @@ import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused tokenizer Generator: one output row per `[A-Za-z0-9]+` run of
-  * the input string — replacing `explode(split(regex))` on the hot path.
+/** Fused tokenizer Generator: one output row per token of the input
+  * string (the rule in `functions/Tokens.scala`) — replacing
+  * `explode(split(regex))` on the hot path.
   *
   * Why: Java-regex `split` costs ~26 us/line (pattern machinery + a
   * String[] allocation per row) and dominated the word-count profile
   * (10 of 11 s at 12M tokens). This generator is the reference's FSM
-  * (/root/reference/src/main.c:221-266) re-expressed over Spark's
-  * UTF8String: a single byte scan per row, emitting zero-copy slices of
-  * the underlying byte array (the analog of the reference's (ptr,len)
-  * tokens, main.c:242). Byte-level classification is correct for UTF-8
-  * input because every byte >= 0x80 is a separator by the token contract
-  * (SURVEY §1.4) and ASCII bytes never occur inside multi-byte
-  * sequences.
+  * (main.c:221-266) re-expressed over Spark's UTF8String: a lazy
+  * [[Tokens.strings]] scan per row, emitting zero-copy slices of the
+  * underlying byte array (the analog of the reference's (ptr,len)
+  * tokens, main.c:242).
   *
   * CodegenFallback only breaks the stage at the Generate operator
   * (Spark codegens only its built-in explode/stack generators); the
@@ -36,42 +34,11 @@ case class TokenizeExplode(child: Expression)
 
   override def prettyName: String = "graft_tokenize"
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
-    if (v == null) return Iterator.empty
-    val s = v.asInstanceOf[UTF8String]
-    val bytes = s.getBytes // underlying array (copied only if offset != 0)
-    val n = bytes.length
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var tokStart = -1
-      private var nextTok: UTF8String = _
-      private def advance(): Unit = {
-        nextTok = null
-        while (i <= n && nextTok == null) {
-          if (i == n) {
-            if (tokStart >= 0) { nextTok = UTF8String.fromBytes(bytes, tokStart, n - tokStart); tokStart = -1 }
-            i += 1
-          } else if (isWordByte(bytes(i))) {
-            if (tokStart < 0) tokStart = i
-            i += 1
-          } else {
-            if (tokStart >= 0) { nextTok = UTF8String.fromBytes(bytes, tokStart, i - tokStart); tokStart = -1 }
-            i += 1
-          }
-        }
-      }
-      advance()
-      override def hasNext: Boolean = nextTok != null
-      override def next(): InternalRow = {
-        val r = new GenericInternalRow(Array[Any](nextTok))
-        advance()
-        r
-      }
-    }
+    if (v == null) Iterator.empty
+    else Tokens.strings(v.asInstanceOf[UTF8String].getBytes)
+      .map(t => new GenericInternalRow(Array[Any](t)))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -80,10 +47,15 @@ case class TokenizeExplode(child: Expression)
 
 object TokenizeExplode {
 
+  /** SQL argument decoding of `graft_tokenize(s)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val builder: Seq[Expression] => Expression =
+    exprs => TokenizeExplode(exprs.head)
+
   /** Idempotent registration; also SQL-callable: `graft_tokenize(s)`. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokenize", exprs => TokenizeExplode(exprs.head), "scala_udf")
+      "graft_tokenize", builder, "scala_udf")
 
   /** Generator Column: one `word` row per token of `c`. */
   def tokenize(spark: SparkSession, c: Column): Column = {

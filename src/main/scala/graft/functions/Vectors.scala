@@ -182,7 +182,12 @@ object Vectors {
     */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
+      "graft_cosine", cosineBuilder, "scala_udf")
+
+  /** SQL argument decoding of `graft_cosine(a, b)`, shared by
+    * [[register]] and [[graft.GraftExtensions]]. */
+  val cosineBuilder: Seq[Expression] => Expression =
+    exprs => CosineSimilarity(exprs(0), exprs(1))
 
   /** Cosine similarity Column over two array<float> columns. */
   def cosine(spark: SparkSession, a: Column, b: Column): Column = {

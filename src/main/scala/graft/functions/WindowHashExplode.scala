@@ -32,8 +32,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * HOF slices + per-row string allocation caused a GC storm) for a
   * guarantee no stronger than this one.
   *
-  * Token contract: maximal `[A-Za-z0-9]+` runs (the engine-wide FSM,
-  * SURVEY §1.4). Docs with fewer than L tokens emit nothing.
+  * Token contract: the engine-wide rule in `functions/Tokens.scala`.
+  * Docs with fewer than L tokens emit nothing.
   */
 case class WindowHashExplode(child: Expression, n: Int)
     extends UnaryExpression with Generator with CodegenFallback {
@@ -44,9 +44,6 @@ case class WindowHashExplode(child: Expression, n: Int)
     StructField("h2", LongType, nullable = false) :: Nil)
 
   override def prettyName: String = "graft_window_hashes"
-
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
 
   // distinct odd multipliers (golden-ratio and a SplitMix64-style
   // constant) for the two mod-2^64 polynomial streams
@@ -66,20 +63,8 @@ case class WindowHashExplode(child: Expression, n: Int)
     val v = child.eval(input)
     if (v == null) return Iterator.empty
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    var tokStart = -1
-    while (i <= len) {
-      val isWord = i < len && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        starts.add(tokStart); ends.add(i); tokStart = -1
-      }
-      i += 1
-    }
-    val nTok = starts.size()
+    val sp = Tokens.spans(bytes)
+    val nTok = sp.size
     if (nTok < n) return Iterator.empty
 
     // per-token hashes (each token byte-scanned exactly once): TWO
@@ -95,8 +80,8 @@ case class WindowHashExplode(child: Expression, n: Int)
     while (t < nTok) {
       var ha = 0xcbf29ce484222325L
       var hb = 0x27D4EB2F165667C5L
-      var j = starts.get(t)
-      val e = ends.get(t)
+      var j = sp.start(t)
+      val e = sp.end(t)
       while (j < e) {
         val b = bytes(j) & 0xffL
         ha = (ha ^ b) * 0x100000001b3L

@@ -12,8 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one output row per DISTINCT selected fingerprint of the input text,
   * where fingerprints are the minima of every `w`-wide window over the
   * polynomial hashes (mod 1e9+7, base 31 over the gram string's bytes)
-  * of the text's `k`-token grams — tokens being maximal `[A-Za-z0-9]+`
-  * runs, grams joined by a single space.
+  * of the text's `k`-token grams — tokens as in `functions/Tokens.scala`,
+  * grams joined by a single space.
   *
   * Value-identical to the HOF formulation (tokens -> transform gram
   * strings -> aggregate char fold -> window mins -> array_distinct ->
@@ -34,28 +34,12 @@ case class WinnowExplode(child: Expression, k: Int, w: Int)
 
   private val Mod = 1000000007L
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = child.eval(input)
     if (v == null) return Iterator.empty
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val len = bytes.length
-
-    val starts = new java.util.ArrayList[Int]()
-    val ends = new java.util.ArrayList[Int]()
-    var i = 0
-    var tokStart = -1
-    while (i <= len) {
-      val isWord = i < len && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        starts.add(tokStart); ends.add(i); tokStart = -1
-      }
-      i += 1
-    }
-    val nTok = starts.size()
+    val sp = Tokens.spans(bytes)
+    val nTok = sp.size
     if (nTok < k + w - 1) return Iterator.empty
 
     // hash of each k-gram: fold over "tok tok tok" bytes, mod 1e9+7
@@ -67,8 +51,8 @@ case class WinnowExplode(child: Expression, k: Int, w: Int)
       var j = 0
       while (j < k) {
         if (j > 0) acc = (acc * 31 + ' ') % Mod
-        var p = starts.get(g + j)
-        val e = ends.get(g + j)
+        var p = sp.start(g + j)
+        val e = sp.end(g + j)
         while (p < e) {
           acc = (acc * 31 + (bytes(p) & 0xff)) % Mod
           p += 1

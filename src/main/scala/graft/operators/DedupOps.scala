@@ -40,15 +40,6 @@ object DedupOps {
   def shingles(textCol: Column, n: Int = 3): Column =
     array_distinct(Text.ngrams(Text.tokensLower(textCol), n))
 
-  /** MinHash signatures, computed with ONE md5 per (doc, shingle) and k
-    * universal integer hashes g_i = h1 + i*h2 derived from the digest
-    * (h1, h2 are 48-bit, so g_i < 2^52 — exact in long on any engine).
-    * Shape: explode shingles -> hash -> single hash-agg of k `min`s per
-    * doc. One shuffle on doc id; k-fold cheaper than per-seed md5 and
-    * immune to expression re-inlining blowup.
-    *
-    * Returns (idCol, sig: array<long>[k]); docs with no shingles drop.
-    */
   /** [[minhashSignatures]] with the signature as k FLAT long columns
     * `_m0.._m{k-1}` instead of one array column. The flat shape is what
     * the pair pipeline wants: fixed-length UnsafeRows through the
@@ -69,6 +60,15 @@ object DedupOps {
     hashed.groupBy(idCol).agg(mins.head, mins.tail: _*)
   }
 
+  /** MinHash signatures, computed with ONE md5 per (doc, shingle) and k
+    * universal integer hashes g_i = h1 + i*h2 derived from the digest
+    * (h1, h2 are 48-bit, so g_i < 2^52 — exact in long on any engine).
+    * Shape: explode shingles -> hash -> single hash-agg of k `min`s per
+    * doc. One shuffle on doc id; k-fold cheaper than per-seed md5 and
+    * immune to expression re-inlining blowup.
+    *
+    * Returns (idCol, sig: array<long>[k]); docs with no shingles drop.
+    */
   def minhashSignatures(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: Column, n: Int = 3, k: Int = 16): org.apache.spark.sql.DataFrame =
     minhashSignaturesFlat(df, idCol, textCol, n, k)

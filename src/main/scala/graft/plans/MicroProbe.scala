@@ -2,28 +2,16 @@ package graft.plans
 
 import java.nio.file.Files
 
-/** Scratch micro-benchmark: raw FSM+map throughput of the fused
-  * word-count inner loop over one corpus file, outside Spark — used to
+/** Scratch micro-benchmark: raw throughput of the fused word-count
+  * inner loop (`ByteSliceCounter.addTokens`, the loop TokenCountsExec
+  * runs) over one corpus file, outside Spark — used to
   * attribute scan-stage task time between our loop and Spark plumbing.
   * Usage: runMain graft.plans.MicroProbe
   */
 object MicroProbe {
-  @inline def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   private def countOne(bytes: Array[Byte]): Int = {
     val counts = new ByteSliceCounter(1 << 15)
-    var i = 0
-    val n = bytes.length
-    var tokStart = -1
-    while (i <= n) {
-      val isWord = i < n && isWordByte(bytes(i))
-      if (isWord && tokStart < 0) tokStart = i
-      else if (!isWord && tokStart >= 0) {
-        counts.add(bytes, tokStart, i - tokStart); tokStart = -1
-      }
-      i += 1
-    }
+    counts.addTokens(bytes)
     counts.entryCount
   }
 

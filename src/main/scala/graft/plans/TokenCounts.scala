@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions.{col, count => fcount, lit, sum}
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.Tokens
 
 /** Fused tokenize + partial-count physical operator: the reference's
   * entire worker pipeline (scan range -> FSM -> upsert into a count map,
@@ -122,6 +123,19 @@ private final class ByteSliceCounter(initialCapacity: Int) {
     }
   }
 
+  /** Count every token of `b` ([[graft.functions.Tokens]]): the
+    * engine's one counting loop, timed as-is by [[MicroProbe]]. */
+  def addTokens(b: Array[Byte]): Unit = {
+    val len = b.length
+    var t = Tokens.next(b, 0, len)
+    while (t >= 0) {
+      val s = Tokens.start(t)
+      val e = Tokens.end(t)
+      add(b, s, e - s)
+      t = Tokens.next(b, e, len)
+    }
+  }
+
   def entryCount: Int = size
   def entryKey(e: Int): UTF8String = UTF8String.fromBytes(arena, offs(e), lens(e))
   def entryCnt(e: Int): Long = cnts(e)
@@ -133,9 +147,6 @@ case class TokenCountsExec(text: Expression, output: Seq[Attribute],
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
 
-  @inline private def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   override protected def doExecute(): RDD[InternalRow] = {
     val textExpr = text
     val childOutput = child.output
@@ -144,21 +155,7 @@ case class TokenCountsExec(text: Expression, output: Seq[Attribute],
       val counts = new ByteSliceCounter(1 << 15)
       rows.foreach { row =>
         val s = bound.eval(row).asInstanceOf[UTF8String]
-        if (s != null) {
-          val bytes = s.getBytes
-          val n = bytes.length
-          var i = 0
-          var tokStart = -1
-          while (i <= n) {
-            val isWord = i < n && isWordByte(bytes(i))
-            if (isWord && tokStart < 0) tokStart = i
-            else if (!isWord && tokStart >= 0) {
-              counts.add(bytes, tokStart, i - tokStart)
-              tokStart = -1
-            }
-            i += 1
-          }
-        }
+        if (s != null) counts.addTokens(s.getBytes)
       }
       // emit UnsafeRows (downstream agg/exchange consume without
       // per-row conversion); projection buffer is safely reused

@@ -1306,29 +1306,14 @@ object Dedup extends QueryModule {
       pairs0: DataFrame): (DataFrame, () => Unit) = {
     val s = pairs0.sparkSession
     val pairs = pairs0.localCheckpoint(true) // consumed three times below
-    // metadata-cheap on the materialized checkpoint; gates the degree
-    // and adjacency broadcasts below (r17, guide §2.4/§3.1): without
-    // hints BOTH deg joins re-shuffled the full pair list, and the
-    // second adjacency join dragged every src-side neighbor array
-    // through the dst exchange — the wedge volume in bytes
+    // metadata-cheap on the materialized checkpoint; gates the
+    // adjacency broadcasts below (r17, guide §2.4/§3.1): without a
+    // hint the second adjacency join dragged every src-side neighbor
+    // array through the dst exchange — the wedge volume in bytes
     val nEdges = pairs.count()
-    val deg = pairs.select(col("a_id").as("id"))
-      .union(pairs.select(col("b_id").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true) // nodes-sized; shared by both join legs
-    val degHint: DataFrame => DataFrame =
-      if (graphNodesBcast(s, deg.count())) broadcast else identity
+    val (o, deg) = degreeOriented(pairs)
     val adjHint: DataFrame => DataFrame =
       if (graphAdjBcast(s, nEdges)) broadcast else identity
-    val aLower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a_id") < col("b_id"))
-    val o = pairs
-      .join(degHint(deg.select(col("id").as("a"), col("degree").as("da"))),
-        col("a_id") === col("a"))
-      .join(degHint(deg.select(col("id").as("b"), col("degree").as("db"))),
-        col("b_id") === col("b"))
-      .select(when(aLower, col("a_id")).otherwise(col("b_id")).as("src"),
-        when(aLower, col("b_id")).otherwise(col("a_id")).as("dst"))
     // ADJACENCY-INTERSECTION instead of a wedge join: each node's
     // forward neighbors as one SORTED array (bounded by forward degree
     // = O(sqrt m) under the orientation, so never a fat row), then for
@@ -1373,6 +1358,34 @@ object Dedup extends QueryModule {
       .groupBy("doc_id").agg(sum("n").as("n_tri"))
       .orderBy("doc_id"),
       RoundLoop.releaser(pairs, deg, adj))
+  }
+
+  /** The degree-ordered orientation [[trianglesFromPairs]] and
+    * [[orientedWedgeVolume2]] share: each pair as (src, dst) with src
+    * the end of lower (degree, id). Returns it with the nodes-sized
+    * degree checkpoint it reads, which the caller releases. Both degree
+    * joins are size-gated broadcasts (r17, guide §2.4/§3.1): without
+    * the hint each re-shuffled the full pair list just to attach one
+    * long per node.
+    */
+  private def degreeOriented(pairs: DataFrame): (DataFrame, DataFrame) = {
+    val deg = pairs.select(col("a_id").as("id"))
+      .union(pairs.select(col("b_id").as("id")))
+      .groupBy("id").agg(count(lit(1)).as("degree"))
+      .localCheckpoint(true) // nodes-sized; shared by both join legs
+    val degHint: DataFrame => DataFrame =
+      if (graphNodesBcast(pairs.sparkSession, deg.count())) broadcast
+      else identity
+    val aLower = col("da") < col("db") ||
+      (col("da") === col("db") && col("a_id") < col("b_id"))
+    (pairs
+      .join(degHint(deg.select(col("id").as("a"), col("degree").as("da"))),
+        col("a_id") === col("a"))
+      .join(degHint(deg.select(col("id").as("b"), col("degree").as("db"))),
+        col("b_id") === col("b"))
+      .select(when(aLower, col("a_id")).otherwise(col("b_id")).as("src"),
+        when(aLower, col("b_id")).otherwise(col("a_id")).as("dst")),
+      deg)
   }
 
   /** Edge-sampling modulus for [[triEstimateFrom]]: keep ~1/5 of the
@@ -1445,25 +1458,8 @@ object Dedup extends QueryModule {
     * triangle output is cubic in planted-clique size.
     */
   def orientedWedgeVolume2(pairs: DataFrame): Long = {
-    // same degree-broadcast shape as trianglesFromPairs (r17): the
-    // guard measurement was paying two full SMJ re-shuffles of the
-    // x100 pair list just to attach two longs per node
-    val deg = pairs.select(col("a_id").as("id"))
-      .union(pairs.select(col("b_id").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-    val degHint: DataFrame => DataFrame =
-      if (graphNodesBcast(pairs.sparkSession, deg.count())) broadcast
-      else identity
-    val aLower = col("da") < col("db") ||
-      (col("da") === col("db") && col("a_id") < col("b_id"))
-    val w = pairs
-      .join(degHint(deg.select(col("id").as("a"), col("degree").as("da"))),
-        col("a_id") === col("a"))
-      .join(degHint(deg.select(col("id").as("b"), col("degree").as("db"))),
-        col("b_id") === col("b"))
-      .select(when(aLower, col("a_id")).otherwise(col("b_id")).as("src"))
-      .groupBy("src").agg(count(lit(1)).as("fd"))
+    val (o, deg) = degreeOriented(pairs)
+    val w = o.groupBy("src").agg(count(lit(1)).as("fd"))
       // coalesce: sum() over ZERO rows is NULL — an empty pair graph
       // must report 0 wedges, not NPE the caller's unboxing getAs[Long]
       .agg(coalesce(sum(col("fd") * (col("fd") - 1)), lit(0L)).as("w"))
@@ -1472,34 +1468,6 @@ object Dedup extends QueryModule {
     w
   }
 
-  /** k-core of an undirected pair graph (Seidman, "Network structure
-    * and minimum degree", Social Networks 1983) via BOUNDED-round
-    * degree peeling: each round drops every node with degree < k and
-    * the edges touching it. `rounds` is a fixed UPPER BOUND (the
-    * graph_pagerank fixed-round discipline) so the DuckDB oracle can
-    * unroll the same computation CTE-for-CTE; the loop exits at the
-    * peel fixpoint (edge count unchanged), which is result-identical
-    * because post-fixpoint rounds are the identity — and on the
-    * clique-heavy near-dup graphs the fixpoint arrives in 1-2 rounds.
-    *
-    * Per round the peel is driven by the DROPPED node set, not the
-    * kept one: degrees are one hash agg over the edges, but the nodes
-    * that fall below k each round are a small fraction of the graph,
-    * so removing their edges is two BROADCAST anti-joins — the full
-    * edge set never crosses an exchange after the degree agg (the old
-    * keep-side semi joins shuffled all edges twice per round; this is
-    * where the round budget went). When a round's dropped set is too
-    * big to broadcast (first peel of a mostly-sparse corpus graph at
-    * cluster scale), the same anti-joins run as shuffles — the
-    * threshold is exact because the dropped count is already known.
-    * Edges re-checkpointed serialized per round so lineage can't
-    * double (the ccFromPairs discipline); `rounds` is the
-    * driver-roundtrip bound — each round costs one count() on the
-    * small dropped frame plus the checkpoint job, nothing per-edge on
-    * the driver.
-    *
-    * @return (doc_id, core_deg) for every node surviving the peel
-    */
   /** Symmetrize an undirected (a_id, b_id) pair list into a directed
     * (src, dst) edge list via ONE explode pass, not a self-union: a
     * union would duplicate the (possibly expensive, possibly
@@ -1616,6 +1584,34 @@ object Dedup extends QueryModule {
     edges
   }
 
+  /** k-core of an undirected pair graph (Seidman, "Network structure
+    * and minimum degree", Social Networks 1983) via BOUNDED-round
+    * degree peeling: each round drops every node with degree < k and
+    * the edges touching it. `rounds` is a fixed UPPER BOUND (the
+    * graph_pagerank fixed-round discipline) so the DuckDB oracle can
+    * unroll the same computation CTE-for-CTE; the loop exits on the
+    * first round that drops no node, which is result-identical because
+    * such a round drops no edge and every later round is the identity —
+    * and on the clique-heavy near-dup graphs that arrives in 1-2 rounds.
+    *
+    * Per round the peel is driven by the DROPPED node set, not the
+    * kept one: degrees are one hash agg over the edges, but the nodes
+    * that fall below k each round are a small fraction of the graph,
+    * so removing their edges is two BROADCAST anti-joins — the full
+    * edge set never crosses an exchange after the degree agg (the old
+    * keep-side semi joins shuffled all edges twice per round; this is
+    * where the round budget went). When a round's dropped set is too
+    * big to broadcast (first peel of a mostly-sparse corpus graph at
+    * cluster scale), the same anti-joins run as shuffles — the
+    * threshold is exact because the dropped count is already known.
+    * Edges are re-checkpointed (serialized) only when a round drops
+    * >= 1M nodes ([[peelToCore]]); smaller drops stay a lazy anti-join
+    * chain over the last checkpoint. `rounds` is the driver-roundtrip
+    * bound — each round costs the small dropped frame's checkpoint job
+    * and its count(), nothing per-edge on the driver.
+    *
+    * @return (doc_id, core_deg) for every node surviving the peel
+    */
   def kcoreFromPairs(pairs0: DataFrame, k: Int, rounds: Int): DataFrame =
     peelToCore(symmetrized(pairs0), k, rounds)
       .groupBy("src").agg(count(lit(1)).as("core_deg"))

@@ -44,12 +44,9 @@ object ChunkedText {
   val DEFAULT_CHUNK_BYTES: Long = 16L << 20
   val ROW_BYTES: Int = 1 << 20
 
-  @inline def isWordByte(b: Byte): Boolean =
-    (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
   /** Bytes a chunk boundary may not separate from their predecessor. */
   @inline def glued(b: Byte): Boolean =
-    isWordByte(b) || (b & 0xC0) == 0x80
+    graft.functions.Tokens.isWordByte(b) || (b & 0xC0) == 0x80
 
   /** Regular files under `path` (a file, or one directory level —
     * mirroring spark.read.text's non-recursive listing), skipping

@@ -30,33 +30,116 @@ class TokenizerSpec extends AnyFunSuite {
     assert(sparkTokens(cases) == cases.map(oracle))
   }
 
-  test("property: tokens match oracle on random strings incl. high chars") {
+  /** `n` random strings of alphanumerics, separators (`_` included)
+    * and chars >= 0x80 — the inputs every property below checks. */
+  private def randomStrings(n: Int): Seq[String] = {
     val charGen = Gen.frequency(
       (5, Gen.alphaNumChar),
       (2, Gen.oneOf(' ', '\t', '\n', '_', '.', ',', '-')),
       (1, Gen.choose(0x80.toChar, 0x2FFF.toChar)))
-    val strGen = Gen.listOf(charGen).map(_.mkString)
+    Gen.listOfN(n, Gen.listOf(charGen).map(_.mkString)).sample.get
+  }
+
+  /** Per-row outputs of generator `gen` over `samples` as id -> rows,
+    * rows with no output absent; `row` reads one output row. */
+  private def generated[T](samples: Seq[String],
+      gen: org.apache.spark.sql.Column, names: Seq[String])(
+      row: org.apache.spark.sql.Row => T): Map[Long, Seq[T]] = {
+    import spark.implicits._
+    samples.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
+      .select(col("id"), gen.as(names))
+      .collect().toSeq.map(r => r.getLong(0) -> row(r))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+  }
+
+  /** Oracle-side non-empty id -> value map. */
+  private def expected[T](samples: Seq[String])(f: String => Seq[T]): Map[Long, Seq[T]] =
+    samples.zipWithIndex.map { case (s, i) => i.toLong -> f(s) }
+      .filter(_._2.nonEmpty).toMap
+
+  /** Adjacent `n`-token windows of the oracle tokens, space-joined. */
+  private def oracleGrams(s: String, n: Int): Seq[String] = {
+    val t = oracle(s)
+    if (t.size < n) Nil else t.sliding(n).map(_.mkString(" ")).toSeq
+  }
+
+  test("property: tokens match oracle on random strings incl. high chars") {
     // Batch: collect 50 random strings, compare in one Spark job.
-    val samples = Gen.listOfN(50, strGen).sample.get
+    val samples = randomStrings(50)
     assert(sparkTokens(samples) == samples.map(oracle))
   }
 
   test("property: TokenizeExplode generator matches regex oracle") {
-    import spark.implicits._
-    val charGen = Gen.frequency(
-      (5, Gen.alphaNumChar),
-      (2, Gen.oneOf(' ', '\t', '\n', '_', '.', ',', '-')),
-      (1, Gen.choose(0x80.toChar, 0x2FFF.toChar)))
-    val strGen = Gen.listOf(charGen).map(_.mkString)
-    val samples = Gen.listOfN(40, strGen).sample.get.zipWithIndex
-    val df = samples.map { case (s, i) => (i.toLong, s) }.toDF("id", "s")
-    val got = df.select(col("id"),
-        graft.functions.TokenizeExplode.tokenize(spark, col("s")).as("w"))
-      .collect().map(r => r.getLong(0) -> r.getString(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
-    val want = samples.map { case (s, i) => i.toLong -> oracle(s) }
-      .filter(_._2.nonEmpty).toMap
-    assert(got == want)
+    val samples = randomStrings(40)
+    val got = generated(samples,
+      graft.functions.TokenizeExplode.tokenize(spark, col("s")), Seq("w"))(
+      _.getString(1))
+    assert(got == expected(samples)(oracle))
+  }
+
+  test("property: graft_ngrams n = 1..3 match a sliding join of oracle tokens") {
+    val samples = randomStrings(40)
+    for (n <- 1 to 3) {
+      val got = generated(samples,
+        graft.functions.NgramExplode.ngrams(spark, col("s"), n), Seq("g"))(
+        _.getString(1))
+      assert(got == expected(samples)(oracleGrams(_, n)), s"n = $n")
+    }
+  }
+
+  test("property: graft_shingle_hashes match out-of-band md5 6-byte halves") {
+    val samples = randomStrings(40)
+    def halves(shingle: String): (Long, Long) = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val hex = md.digest(shingle.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      (java.lang.Long.parseLong(hex.substring(0, 12), 16),
+       java.lang.Long.parseLong(hex.substring(12, 24), 16))
+    }
+    for (n <- Seq(1, 3)) {
+      val got = generated(samples,
+        graft.functions.ShingleHashes.shingleHashes(spark, col("s"), n),
+        Seq("h1", "h2"))(r => (r.getLong(1), r.getLong(2)))
+      assert(got == expected(samples)(oracleGrams(_, n).map(halves)), s"n = $n")
+    }
+  }
+
+  test("property: graft_winnow matches the base-31 mod 1e9+7 fold and window minima") {
+    val samples = randomStrings(40) :+ (1 to 30).map(i => s"w${i % 7}").mkString(" ")
+    val mod = 1000000007L
+    def fold(gram: String): Long =
+      gram.getBytes("UTF-8").foldLeft(0L)((acc, b) => (acc * 31 + (b & 0xff)) % mod)
+    for ((k, w) <- Seq((1, 1), (2, 3), (3, 4))) {
+      val got = generated(samples,
+        graft.functions.WinnowExplode.fingerprints(spark, col("s"), k, w),
+        Seq("fp"))(_.getLong(1))
+      val want = expected(samples) { s =>
+        val hs = oracleGrams(s, k).map(fold)
+        if (hs.size < w) Nil else hs.sliding(w).map(_.min).toSeq.distinct
+      }
+      assert(got == want, s"k = $k, w = $w")
+    }
+  }
+
+  test("Tokens cursor: empty, separator-only, token at end, 1-byte token") {
+    import graft.functions.Tokens
+    def spansOf(s: String): Seq[(Int, Int)] = {
+      val b = s.getBytes("UTF-8")
+      Iterator.iterate(Tokens.next(b, 0, b.length))(t =>
+          Tokens.next(b, Tokens.end(t), b.length))
+        .takeWhile(_ >= 0).map(t => (Tokens.start(t), Tokens.end(t))).toSeq
+    }
+    assert(Tokens.next(Array.emptyByteArray, 0, 0) == -1L)
+    assert(spansOf("") == Nil)
+    assert(spansOf(" _\t.é,") == Nil)
+    assert(spansOf("ab_cd") == Seq((0, 2), (3, 5)))
+    assert(spansOf("..xyz") == Seq((2, 5)))
+    assert(spansOf("x") == Seq((0, 1)))
+    assert(spansOf("é7") == Seq((2, 3)))
+    val b = "a bb_ccc".getBytes("UTF-8")
+    val sp = Tokens.spans(b)
+    assert(sp.size == 3 && sp.start(2) == 5 && sp.end(2) == 8)
+    assert(Tokens.joined(b, sp, 0, 3).toString == "a bb ccc")
+    assert(Tokens.joined(b, sp, 1, 2).toString == "bb")
   }
 
   test("property: sum of counts equals token count; keys ascending") {
