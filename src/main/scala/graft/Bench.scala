@@ -866,32 +866,24 @@ object Bench {
   }
 
   /** The untimed warm-up before the reference rows. A cheap query warms
-    * the JVM/codegen paths; then the ref-workload plan SHAPE runs on a
-    * 1/16-size corpus: Janino compiles the generated TokenCountsExec/sort
-    * classes and C2 promotes the byte-FSM hot loops here, so the first
-    * timed run pays data-scale costs only — the C baseline's "cold" run
-    * doesn't include compiling the binary either. Two reps: the second
-    * triggers C2 on the loops the first only profiled. The warm corpus is
-    * under the tiny-input threshold, so a plain refWordcount12m over it
-    * would warm ONLY the collapsed tiny plan — and the 83 MB workload-A
-    * corpus runs the distributed shape, whose generated classes would
-    * then compile inside the first timed run (observed: cold 13 s); both
-    * shapes are warmed explicitly. Last, the full-size warm on the
-    * disjoint-vocabulary twin corpus (see prepareWarmCorpusFull):
+    * the JVM/codegen paths; then the reference word count runs on a
+    * 1/16-size corpus: Janino compiles the generated sort classes and C2
+    * promotes the byte-FSM hot loops here, so the first timed run pays
+    * data-scale costs only — the C baseline's "cold" run doesn't include
+    * compiling the binary either. Two reps: the second triggers C2 on
+    * the loops the first only profiled. The small corpus is under the
+    * tiny-input threshold, so it warms the collapsed tiny plan; the
+    * full-size warm on the disjoint-vocabulary twin corpus (see
+    * prepareWarmCorpusFull) then runs the distributed shape that the
+    * 83 MB workload-A corpus takes (TokenCounts -> hash exchange ->
+    * TokenCountsMerge -> single-partition sort), so its classes and
     * data-scale JIT/arena/shuffle costs land here, untimed, while the
     * timed corpus itself stays unseen.
     */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
     runOnce(SparkEntry.queries("q_topk")(spark, sfDir))
     val warmPath = prepareWarmCorpus(spark)
-    (1 to 2).foreach { _ =>
-      val warmLines = spark.read
-        .format("graft.sources.ChunkedTextSource").load(warmPath)
-      runOnce(graft.plans.TokenCounts.partialCounts(warmLines, col("value"))
-        .groupBy("word").agg(sum(col("cnt")).as("cnt"))
-        .repartition(1).sortWithinPartitions("word"))
-      runOnce(refWordcount12m(spark, warmPath))
-    }
+    (1 to 2).foreach(_ => runOnce(refWordcount12m(spark, warmPath)))
     val warmFullPath = prepareWarmCorpusFull(spark)
     (1 to 2).foreach(_ => runOnce(refWordcount12m(spark, warmFullPath)))
   }

@@ -19,8 +19,9 @@ import graft.queries.{Dedup, Similarity}
   * of runs 2..N (see [[warmLine]]).
   *
   * SPARK_GRAFT_STAGES=1 prints one line per stage of the timed runs;
-  * SPARK_GRAFT_EXPLAIN=<path> writes the formatted physical plan of one
-  * run's frame to `path` (`/dev/stdout` works) instead of timing;
+  * SPARK_GRAFT_EXPLAIN=<path> runs one frame once, untimed, and writes
+  * its formatted final (adaptive) plan, with the custom operators'
+  * metrics, to `path` (`/dev/stdout` works) instead of timing;
   * SPARK_GRAFT_CONF sets session confs (see [[parseConf]]).
   */
 object BenchProbe {
@@ -215,8 +216,8 @@ object BenchProbe {
   }
 
   /** Prepares `w` at `factor` once — untimed, its wall printed on its own
-    * line — then times `reps` runs, or writes one run's plan when
-    * SPARK_GRAFT_EXPLAIN is set. The per-run seconds.
+    * line — then times `reps` runs, or runs once and writes the final
+    * plan when SPARK_GRAFT_EXPLAIN is set. The per-run seconds.
     */
   def probe(name: String, w: Workload, factor: Int, reps: Int,
       spark: SparkSession, sfDir: String): Seq[Double] = {
@@ -227,8 +228,9 @@ object BenchProbe {
       case Some(out) =>
         try {
           require(job.plan.isDefined, s"$name runs no single frame to explain")
-          val plan = job.plan.get().queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+          val qe = job.plan.get().queryExecution
+          qe.toRdd.foreach(_ => ())
+          val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
           java.nio.file.Files.write(java.nio.file.Paths.get(out),
             plan.getBytes("UTF-8"))
           println(s"[probe] $name plan -> $out")

@@ -14,13 +14,15 @@ import org.apache.spark.sql.functions._
   * ORDER  BY word ASC            -- bytewise; ASCII tokens => binary orderBy
   * }}}
   *
-  * Physical shape (by construction, verified via explain):
-  * FileScan -> WSCG[Generate(split+explode)+Filter+PartialHashAgg]
-  *   -> Exchange(hash word) -> FinalHashAgg -> Exchange(range) -> Sort.
-  * The reference's shared concurrent hash map (/root/reference/src/chash.c:
-  * 100-153) becomes the shuffle between partial and final aggregation; its
-  * thread-range boundary realignment (main.c:202-229) is the text source's
-  * line-record splitting. Scales by partition count with no shared state.
+  * Physical shape (pinned in PlanShapeSpec):
+  * Scan -> TokenCounts -> Exchange(hash word) -> TokenCountsMerge
+  *   -> Exchange(SinglePartition) -> Sort,
+  * with no HashAggregate: each task's TokenCounts table is the combiner,
+  * and the merge sums the partials with the same table. The reference's
+  * shared concurrent hash map (its `src/chash.c:100-153`) becomes the
+  * hash exchange between the two; its thread-range boundary
+  * realignment (main.c:202-229) is [[graft.sources.ChunkedTextSource]]'s
+  * split rule. Scales by partition count with no shared state.
   */
 object WordCount {
 
@@ -28,12 +30,15 @@ object WordCount {
     *
     * Runs the fused [[graft.plans.TokenCounts]] physical operator — the
     * reference's scan+FSM+partial-count worker as one SparkPlan — then
-    * the reference-parity merge: one distributed merge agg and a single-
-    * partition sort of the aggregated vocabulary
-    * ([[graft.plans.TokenCounts.sortedCounts]] — no RangePartitioning
-    * sampling pass; rationale + scale contract there). For a
-    * DISTRIBUTED sorted result over huge vocabularies use
-    * [[graft.plans.TokenCounts.counts]]. (An `explode(split(regex))`
+    * the reference-parity tail: one distributed merge of the partials
+    * (TokenCountsMerge, no aggregate) and a single-partition sort of the
+    * merged vocabulary ([[graft.plans.TokenCounts.sortedCounts]] — no
+    * RangePartitioning sampling pass; rationale + scale contract there;
+    * tiny inputs skip the hash exchange). For a
+    * DISTRIBUTED sorted result (downstream parallel reads) use
+    * [[graft.plans.TokenCounts.counts]]; both hold each merge task's
+    * share of the vocabulary in memory, with no spill (see
+    * [[graft.plans.TokenCountsMergeExec]]). (An `explode(split(regex))`
     * formulation was ~10x slower: per-row regex + String[] allocation +
     * a per-token Generate hop; see TokenizeExplode for the intermediate
     * generator form, kept for general tokenization.) Semantics

@@ -35,7 +35,7 @@ object LocalUnionFind {
 
 /** Open-addressing (id -> node) table over primitive arrays with a parent
   * array on the node indices — no boxed map, and O(distinct ids) state.
-  * Linear probing; doubles at 60% load (the `ByteSliceCounter` shape).
+  * Linear probing; doubles at 60% load.
   */
 private final class LocalUnionFind {
   private var cap = 2048

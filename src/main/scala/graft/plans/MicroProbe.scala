@@ -2,46 +2,50 @@ package graft.plans
 
 import java.nio.file.Files
 
-/** Scratch micro-benchmark: raw throughput of the fused word-count
-  * inner loop (`ByteSliceCounter.addTokens`, the loop TokenCountsExec
-  * runs) over one corpus file, outside Spark — used to
-  * attribute scan-stage task time between our loop and Spark plumbing.
-  * Usage: runMain graft.plans.MicroProbe
+import graft.functions.Tokens
+
+/** Layer probe of the word count's map-side kernel, outside Spark: over
+  * one corpus, single-threaded, the MB/s of the tokenize-only loop
+  * (`Tokens.next`, nothing counted) next to the counting loop
+  * (`ByteSliceCounter.addTokens`, the loop TokenCountsExec runs, one
+  * counter per file as one per task). The gap between the two is the
+  * table's share of a TokenCounts task.
+  * Usage: runMain graft.plans.MicroProbe [file-or-dir]
+  * (default: target/bench_scratch/ref_corpus_12m, which graft.Bench
+  * writes). Eight reps, one line each.
   */
 object MicroProbe {
-  private def countOne(bytes: Array[Byte]): Int = {
+  private def scanOnly(b: Array[Byte]): Long = {
+    var n = 0L
+    var t = Tokens.next(b, 0, b.length)
+    while (t >= 0) { n += 1; t = Tokens.next(b, Tokens.end(t), b.length) }
+    n
+  }
+
+  private def countOnly(b: Array[Byte]): Long = {
     val counts = new ByteSliceCounter(1 << 15)
-    counts.addTokens(bytes)
+    counts.addTokens(b, 0, b.length)
     counts.entryCount
   }
 
   def main(args: Array[String]): Unit = {
-    val threads = if (args.nonEmpty) args(0).toInt else 1
-    val dir = new java.io.File("target/bench_scratch/ref_corpus_12m")
-    val files = Option(dir.listFiles)
-      .getOrElse(sys.error(s"$dir missing — run graft.Bench once to create it"))
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val path = args.headOption.getOrElse("target/bench_scratch/ref_corpus_12m")
+    val files = graft.sources.ChunkedText.listFiles(path)
+    require(files.nonEmpty,
+      s"$path: no input files (graft.Bench writes the default corpus)")
     val all = files.map(f => Files.readAllBytes(f.toPath))
-    // report the bytes of the TIMED subset (1 file single-threaded,
-    // `threads` files otherwise) — per-byte throughput read off this
-    // probe must divide by what the loop actually scanned
-    val timed = all.take(math.max(1, threads))
-    println(s"files=${all.length} timed_files=${timed.length} " +
-      s"timed_bytes=${timed.map(_.length.toLong).sum}")
-    for (rep <- 1 to 8) {
+    val mb = all.map(_.length.toLong).sum / 1e6
+    println(f"[micro] $path: ${all.length} files, $mb%.1f MB")
+    def mbPerS(loop: Array[Byte] => Long): (Double, Long) = {
       val t0 = System.nanoTime()
-      if (threads <= 1) countOne(all(0))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        val futs = all.take(threads).map(b =>
-          pool.submit(new java.util.concurrent.Callable[Int] {
-            def call(): Int = countOne(b)
-          }))
-        futs.foreach(_.get())
-        pool.shutdown()
-      }
-      val dt = (System.nanoTime() - t0) / 1e6
-      println(f"[micro] rep $rep threads=$threads: $dt%.1f ms")
+      val n = all.map(loop).sum
+      (mb / ((System.nanoTime() - t0) / 1e9), n)
+    }
+    for (rep <- 1 to 8) {
+      val (scan, tokens) = mbPerS(scanOnly)
+      val (count, words) = mbPerS(countOnly)
+      println(f"[micro] rep $rep: tokenize $scan%.0f MB/s, count $count%.0f MB/s " +
+        s"($tokens tokens, $words words summed over files)")
     }
   }
 }

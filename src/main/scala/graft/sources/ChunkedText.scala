@@ -33,9 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * separator boundaries: downstream per-row operators see bounded
   * strings, never a 32 MiB (or 1 GiB) single row.
   *
-  * Options: `chunkBytes` (split granularity, default 16 MiB),
-  * `minChunks` (lower bound on split count — the reference's
-  * num_threads knob maps here).
+  * Options: `chunkBytes` (widest split, default 16 MiB), `minChunks`
+  * (lower bound on split count — the reference's num_threads knob maps
+  * here); see [[ChunkedText.splits]].
   */
 object ChunkedText {
   val SCHEMA: StructType =
@@ -47,6 +47,24 @@ object ChunkedText {
   /** Bytes a chunk boundary may not separate from their predecessor. */
   @inline def glued(b: Byte): Boolean =
     graft.functions.Tokens.isWordByte(b) || (b & 0xC0) == 0x80
+
+  /** Split plan over files of lengths `lens`: `(file, start, end)` per
+    * split. The input gets `n = max(minChunks, ceil(total / chunkBytes))`
+    * splits, shared among the files in proportion to their lengths (at
+    * least one per file, at most one per byte), and each file's splits
+    * are of equal width to within one byte — so no split is wider than
+    * `chunkBytes`, and no remainder split leaves slots idle in a second
+    * wave of full-width tasks.
+    */
+  def splits(lens: Seq[Long], minChunks: Int, chunkBytes: Long): Seq[(Int, Long, Long)] = {
+    val total = BigInt(math.max(1L, lens.sum))
+    val n = (total + chunkBytes - 1) / chunkBytes max minChunks
+    lens.zipWithIndex.flatMap { case (len, f) =>
+      val k = ((BigInt(len) * n + total - 1) / total).toLong.min(len).max(1L)
+      val (q, r) = (len / k, len % k)
+      (0L until k).map(i => (f, i * q + math.min(i, r), (i + 1) * q + math.min(i + 1, r)))
+    }
+  }
 
   /** Regular files under `path` (a file, or one directory level —
     * mirroring spark.read.text's non-recursive listing), skipping
@@ -113,17 +131,9 @@ class ChunkedTextTable(properties: util.Map[String, String])
           throw new IllegalArgumentException(
             s"chunked-text: path does not exist: $path")
         val files = ChunkedText.listFiles(path)
-        val totalLen = math.max(1L, files.map(_.length()).sum)
-        // honor minChunks across the whole input, but never plan splits
-        // finer than one byte or coarser than chunkBytes
-        val width = math.max(1L, math.min(chunkBytes,
-          (totalLen + minChunks - 1) / minChunks))
-        files.flatMap { f =>
-          val len = f.length()
-          (0L until math.max(1L, (len + width - 1) / width)).map { i =>
-            ChunkedTextPartition(f.getPath, i * width,
-              math.min((i + 1) * width, len), len)
-          }
+        val lens = files.map(_.length())
+        ChunkedText.splits(lens, minChunks, chunkBytes).map { case (i, start, end) =>
+          ChunkedTextPartition(files(i).getPath, start, end, lens(i))
         }.toArray
       }
 

@@ -79,6 +79,33 @@ class ChunkedTextSpec extends AnyFunSuite {
     }
   }
 
+  test("split plan: max(minChunks, ceil(len / chunkBytes)) contiguous chunks of equal width") {
+    import graft.sources.ChunkedText
+    for ((len, minChunks, chunkBytes) <- Seq((85135610L, 1, 16L << 20),
+        (85135610L, 8, 16L << 20), (100L, 3, 7L), (100L, 1, 100L), (101L, 1, 100L),
+        ((1L << 33) + 5, 3, 1L << 30), (40L, 40, 16L << 20))) {
+      val sp = ChunkedText.splits(Seq(len), minChunks, chunkBytes)
+      val n = math.max(minChunks.toLong, (len + chunkBytes - 1) / chunkBytes)
+      val case_ = s"len=$len minChunks=$minChunks chunkBytes=$chunkBytes"
+      assert(sp.size == n, case_)
+      assert(sp.head._2 == 0L && sp.last._3 == len, case_)
+      assert(sp.zip(sp.tail).forall { case (a, b) => a._3 == b._2 }, case_)
+      val widths = sp.map(c => c._3 - c._2)
+      assert(widths.max - widths.min <= 1 && widths.max <= chunkBytes, s"$case_: $widths")
+    }
+    // never finer than a byte; an empty file is one empty chunk
+    assert(ChunkedText.splits(Seq(5L), 32, 16L << 20).map(c => c._3 - c._2) == Seq.fill(5)(1L))
+    assert(ChunkedText.splits(Seq(0L), 4, 16L << 20) == Seq((0, 0L, 0L)))
+    // several files share the chunks by length, each at least one
+    val multi = ChunkedText.splits(Seq(300L, 100L, 1L), 4, 1000L)
+    assert(multi.map(_._1) == Seq(0, 0, 0, 1, 2), multi)
+    // the source plans exactly these splits
+    val path = writeTemp("splits.txt", ("abc " * 2500).getBytes(StandardCharsets.UTF_8))
+    val df = spark.read.format("graft.sources.ChunkedTextSource")
+      .option("chunkBytes", "3000").load(path)
+    assert(df.rdd.getNumPartitions == 4)
+  }
+
   test("newline files read identically to spark.read.text") {
     val text = (1 to 5000).map(i => s"alpha beta w$i").mkString("\n")
     val path = writeTemp("lines.txt", text.getBytes(StandardCharsets.UTF_8))

@@ -65,6 +65,44 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("SinglePartition"), s"expected single-partition sort tail:\n$p")
   }
 
+  test("wordcount merges partials in TokenCountsMerge: no HashAggregate, one hash exchange") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import spark.implicits._
+    val rows = (1 to 50).map(i => s"w$i a b")
+    // an RDD-backed frame has unknown size: sortedCounts' distributed path
+    val unknown = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(Row(_)), 4),
+      StructType(StructField("value", StringType) :: Nil))
+    val tiny = rows.toDF("value")
+    /** The exchanges of `input`'s word count, from its final adaptive
+      * plan once run (EnsureRequirements' exchanges are planted inside
+      * AQE, so the pre-adaptive plan does not hold them). */
+    def exchanges(name: String, input: DataFrame): Seq[Partitioning] = {
+      val wc = graft.operators.WordCount.counts(input, col("value"))
+      wc.collect()
+      val p = wc.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(p.contains("isFinalPlan=true") && p.contains("TokenCountsMerge"), s"$name:\n$p")
+      assert(!p.contains("HashAggregate") && !p.contains("partial_sum"),
+        s"$name path aggregates partials twice:\n$p")
+      new AdaptiveSparkPlanHelper {}.collect(wc.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e.outputPartitioning
+      }
+    }
+    val dist = exchanges("distributed", unknown)
+    assert(dist.size == 2 && dist.count(_ == SinglePartition) == 1, dist)
+    assert(dist.count {
+      case HashPartitioning(Seq(w: Attribute), _) => w.name == "word"
+      case _ => false
+    } == 1, dist)
+    assert(exchanges("tiny", tiny) == Seq(SinglePartition))
+  }
+
   test("q_topk plans as TakeOrderedAndProject, not global sort") {
     val p = plan("q_topk")
     assert(p.contains("TakeOrderedAndProject"), p)
