@@ -8,15 +8,14 @@ import graft.queries.{Dedup, Similarity}
 /** Times one named workload repeatedly to find its steady state.
   * Usage: runMain graft.BenchProbe <name> [reps]
   *
-  * A name is looked up as, in order: a [[Bench.scaled]] row by its sweep
-  * name (`scaled_cc_x20`; `scaled_cc_x100` runs the same row at factor
-  * 100), a reference row (`ref_wordcount_12m` / `ref_wordcount_2m_skew`,
-  * after the sweep's [[Bench.warmUp]]), a registry query, or one of the
-  * [[diagnostics]]. Its prepare step runs once, untimed, and prints its
-  * own line; then `reps` runs (default: the workload's own count) are
-  * timed, each followed by its release hook. Run 1 is printed as
-  * `run 1 (cold)`, and a closing `warm:` line gives the min and median
-  * of runs 2..N (see [[warmLine]]).
+  * A name is looked up (see [[resolve]]) as a row of [[Bench.table]],
+  * a registry query, or one of the [[probeOnly]] checks; a reference
+  * row runs after the sweep's [[Bench.warmUp]]. Its prepare step runs
+  * once, untimed, and prints its own line; then `reps` runs (default:
+  * the row's own count) are timed, each followed by its release hook.
+  * Run 1 is printed as `run 1 (cold)`, a closing `warm:` line gives the
+  * min and median of runs 2..N (see [[warmLine]]), and the row's report
+  * entries follow, one line each. A refused row prints its reason.
   *
   * SPARK_GRAFT_STAGES=1 prints one line per stage of the timed runs;
   * SPARK_GRAFT_EXPLAIN=<path> runs one frame once, untimed, and writes
@@ -67,42 +66,14 @@ object BenchProbe {
     val spark = Bench.session()
     sys.env.get("SPARK_GRAFT_CONF").foreach(
       parseConf(_).foreach { case (k, v) => spark.conf.set(k, v) })
-    try probe(name, w, factor, reps, spark, sfDir)
-    finally spark.stop()
+    try {
+      if (Bench.reference.contains(w)) Bench.warmUp(spark, sfDir)
+      probe(name, w, factor, reps, spark, sfDir)
+    } finally spark.stop()
   }
 
-  /** The reference word counts, each run in the state the sweep times it
-    * in: after [[Bench.warmUp]], with the corpus in the page cache. Run
-    * 1 of `ref_wordcount_12m` is therefore a first run like the sweep's
-    * cold attempts.
-    */
-  val refRows: Seq[Workload] = Seq(
-    "ref_wordcount_12m" -> (Bench.prepareRefCorpus(_: SparkSession)),
-    "ref_wordcount_2m_skew" -> (Bench.prepareRefCorpusB(_: SparkSession)))
-    .map { case (name, corpus) =>
-      Workload(name, 5, (s, d, _) => {
-        val p = corpus(s)
-        Bench.warmUp(s, d)
-        Bench.pageTouch(p)
-        frameJob(Bench.refWordcount12m(s, p))
-      })
-    }
-
   /** Checks that are not sweep rows; each prints what it measured. */
-  val diagnostics: Seq[Workload] = Seq(
-    // Pair-graph density of the x20 corpus (r15 verdict #1): docs /
-    // surviving est>=0.5 edges / guard-dropped hot buckets — the numbers
-    // that adjudicate a scaled_cc_x20 timing move as corpus density vs
-    // plan regression.
-    Workload("ccstats", 1, (s, d, f) => {
-      val p = Bench.prepareScaledDocs(s, d, f)
-      Job(() => {
-        val (docs, edges, hot) = Dedup.pairGraphStats(s.read.parquet(p))
-        println(s"[probe] ccstats x$f: docs=$docs edges=$edges " +
-          s"hot_buckets_dropped=$hot")
-        noRelease
-      })
-    }),
+  val probeOnly: Seq[Workload] = Seq(
     // The x20 k-NN graph, timed after asserting the O(n^1.5) pair bound
     // from the REALIZED cluster sizes: the scored-pair count is the sum
     // over clusters of sz*(sz-1), which for balanced k = sqrt(n) clusters
@@ -196,22 +167,25 @@ object BenchProbe {
       })
     }))
 
-  /** The workload `name` names and the scale factor to prepare it at. */
+  /** The workload `name` names and the scale factor to prepare it at:
+    * the `_x100` twin of a [[Bench.scaled]] row (that row at factor 100,
+    * ahead of the sweep's own x100 rows of the same name), a row of
+    * [[Bench.table]], a registry query, or a [[probeOnly]] check.
+    */
   def resolve(name: String): (Workload, Int) = {
-    def row(n: String) = Bench.scaled.find(_.name == n)
-    val found = row(name).map(_ -> 20)
-      .orElse(Some(name).filter(_.endsWith("_x100"))
-        .flatMap(n => row(n.stripSuffix("_x100") + "_x20")).map(_ -> 100))
-      .orElse(refRows.find(_.name == name).map(_ -> 20))
-      .orElse(Some(name).filter(SparkEntry.queries.contains).map(n =>
-        Workload(n, 5, (s, d, _) => frameJob(SparkEntry.queries(n)(s, d))) -> 20))
-      .orElse(diagnostics.find(_.name == name).map(_ -> 20))
+    val twin = Some(name).filter(_.endsWith("_x100")).flatMap(n =>
+      Bench.scaled.find(_.name == n.stripSuffix("_x100") + "_x20"))
+    val found = twin.map(_ -> 100)
+      .orElse(Bench.table.find(_.name == name).map(_ -> 20))
+      .orElse(Some(name).filter(SparkEntry.queries.contains)
+        .map(Bench.queryRow(_, 5) -> 20))
+      .orElse(probeOnly.find(_.name == name).map(_ -> 20))
+    val rows = Bench.table.map(_.name).filterNot(Bench.headline.contains)
     require(found.isDefined, s"unknown probe name '$name'; a name is looked " +
-      "up as (1) a Bench.scaled row, by its sweep name or with _x100 for " +
-      s"factor 100: ${Bench.scaled.map(_.name).mkString(", ")}; (2) a " +
-      s"reference row: ${refRows.map(_.name).mkString(", ")}; (3) a " +
-      "SparkEntry.queries name; (4) a diagnostic: " +
-      diagnostics.map(_.name).mkString(", "))
+      "up as (1) a Bench.scaled row's _x20 name with _x100, for factor 100; " +
+      s"(2) a sweep row: ${rows.mkString(", ")}; (3) a SparkEntry.queries " +
+      "name (the sweep's headline queries among them); (4) a probe-only " +
+      s"check: ${probeOnly.map(_.name).mkString(", ")}")
     found.get
   }
 
@@ -222,10 +196,13 @@ object BenchProbe {
   def probe(name: String, w: Workload, factor: Int, reps: Int,
       spark: SparkSession, sfDir: String): Seq[Double] = {
     val t0 = System.nanoTime()
-    val job = w.prepare(spark, sfDir, factor)
+    val prepared = w.prepare(spark, sfDir, factor)
     println(f"[probe] $name prepare: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-    sys.env.get("SPARK_GRAFT_EXPLAIN") match {
-      case Some(out) =>
+    (prepared, sys.env.get("SPARK_GRAFT_EXPLAIN")) match {
+      case (Bench.Refused(why), _) =>
+        println(s"[probe] $name refused: $why")
+        Seq.empty
+      case (job: Job, Some(out)) =>
         try {
           require(job.plan.isDefined, s"$name runs no single frame to explain")
           val qe = job.plan.get().queryExecution
@@ -236,21 +213,24 @@ object BenchProbe {
           println(s"[probe] $name plan -> $out")
         } finally job.done()
         Seq.empty
-      case None =>
+      case (job: Job, None) =>
         // registered after prepare, so the stage lines are the runs'
         if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
           spark.sparkContext.addSparkListener(stageListener)
         var i = 0
         val secs = Bench.measure(job, reps) { body =>
           i += 1
-          val t = System.nanoTime()
-          body
-          val sec = (System.nanoTime() - t) / 1e9
+          val sec = Bench.seconds(body)
           val run = if (i == 1) "run 1 (cold)" else s"run $i"
           println(f"[probe] $name $run: $sec%.3f s")
           sec
         }
         println(warmLine(name, secs))
+        if (secs.nonEmpty) {
+          val r = job.report(secs)
+          (r.queries.map { case (k, v) => k -> Bench.jNum(v) } ++ r.info)
+            .foreach { case (k, v) => println(s"[probe] $name $k=$v") }
+        }
         secs
     }
   }

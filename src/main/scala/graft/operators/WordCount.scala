@@ -34,10 +34,8 @@ object WordCount {
     * (TokenCountsMerge, no aggregate) and a single-partition sort of the
     * merged vocabulary ([[graft.plans.TokenCounts.sortedCounts]] — no
     * RangePartitioning sampling pass; rationale + scale contract there;
-    * tiny inputs skip the hash exchange). For a
-    * DISTRIBUTED sorted result (downstream parallel reads) use
-    * [[graft.plans.TokenCounts.counts]]; both hold each merge task's
-    * share of the vocabulary in memory, with no spill (see
+    * tiny inputs skip the hash exchange). The merge holds each merge
+    * task's share of the vocabulary in memory, with no spill (see
     * [[graft.plans.TokenCountsMergeExec]]). (An `explode(split(regex))`
     * formulation was ~10x slower: per-row regex + String[] allocation +
     * a per-token Generate hop; see TokenizeExplode for the intermediate

@@ -405,15 +405,6 @@ object TokenCounts {
       TokenCountsMerge(plan.output(0), plan.output(1), plan))
   }
 
-  /** Full fused word count: partials -> merge -> bytewise order.
-    *
-    * Declarative tail, kept as the general path: Catalyst plans
-    * Exchange(hash) + merge + Exchange(rangepartitioning) + Sort, where
-    * the range exchange's sampling job re-executes the merge.
-    */
-  def counts(df: DataFrame, textCol: Column): DataFrame =
-    merged(partialCounts(df, textCol)).orderBy("word")
-
   /** Inputs below this are "tiny": the whole job floor (task launch,
     * shuffle-file churn, per-stage scheduling) dominates compute, so
     * the plan collapses to few-tasks-then-one. 64 MB = a handful of

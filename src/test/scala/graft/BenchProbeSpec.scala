@@ -44,9 +44,20 @@ class BenchProbeSpec extends AnyFunSuite {
       assert(BenchProbe.resolve(w.name.stripSuffix("_x20") + "_x100") ==
         (w -> 100))
     }
-    assert(BenchProbe.resolve("ref_wordcount_12m")._1.name == "ref_wordcount_12m")
     assert(BenchProbe.resolve("q_topk")._1.name == "q_topk")
-    BenchProbe.diagnostics.foreach(d => assert(BenchProbe.resolve(d.name) == (d -> 20)))
+    assert(BenchProbe.resolve("q_topk")._1.reps == 5)
+    // the sweep's other rows resolve to themselves, except the two x100
+    // rows whose names are x20 rows' _x100 twins
+    val twins = Seq("scaled_tri_x100", "scaled_coreness_x100")
+    Bench.table.filterNot(w => twins.contains(w.name))
+      .foreach(w => assert(BenchProbe.resolve(w.name) == (w -> 20), w.name))
+    assert(Bench.x100.map(_.name).filter(twins.contains) == twins)
+    BenchProbe.probeOnly.foreach(d => assert(BenchProbe.resolve(d.name) == (d -> 20)))
+  }
+
+  test("a refused row prints its reason and runs nothing") {
+    val refused = Bench.Workload("nope", 3, (_, _, _) => Bench.Refused("absent"))
+    assert(BenchProbe.probe("nope", refused, 20, 3, null, "unused").isEmpty)
   }
 
   test("a probe prepares once before its first run and releases every run") {
@@ -77,8 +88,8 @@ class BenchProbeSpec extends AnyFunSuite {
     val msg = e.getMessage
     assert(msg.contains("'scaledcc'"))
     assert(msg.contains("SparkEntry.queries"))
-    (Bench.scaled ++ BenchProbe.refRows ++ BenchProbe.diagnostics)
-      .foreach(w => assert(msg.contains(w.name), w.name))
+    (Bench.table.filterNot(w => Bench.headline.contains(w.name)) ++
+      BenchProbe.probeOnly).foreach(w => assert(msg.contains(w.name), w.name))
     // a row's _x100 twin resolves, but nothing else is guessed
     intercept[IllegalArgumentException](BenchProbe.resolve("scaled_bpe_deep200_x100"))
   }

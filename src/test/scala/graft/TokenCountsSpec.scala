@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import graft.functions.Tokens
 import graft.operators.WordCount
-import graft.plans.{ByteSliceCounter, TokenCounts}
+import graft.plans.ByteSliceCounter
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -31,17 +31,15 @@ class TokenCountsSpec extends AnyFunSuite {
   private def counted(df: DataFrame): Seq[(String, Long)] =
     df.collect().toSeq.map(r => r.getString(0) -> r.getLong(1))
 
-  /** Both word-count tails over `df`, checked against the oracle and
-    * for bytewise order. */
+  /** The word count over `df`, checked against the oracle and for
+    * bytewise order. */
   private def assertCounts(df: DataFrame, rows: Seq[String]): Unit = {
     val expected = oracle(rows)
-    for (got <- Seq(counted(WordCount.counts(df, col("value"))),
-        counted(TokenCounts.counts(df, col("value"))))) {
-      assert(got.toMap == expected)
-      assert(got.size == expected.size, "a word was emitted twice")
-      val keys = got.map(_._1)
-      assert(keys == keys.sorted, "not in bytewise order")
-    }
+    val got = counted(WordCount.counts(df, col("value")))
+    assert(got.toMap == expected)
+    assert(got.size == expected.size, "a word was emitted twice")
+    val keys = got.map(_._1)
+    assert(keys == keys.sorted, "not in bytewise order")
   }
 
   /** Random tokens of every length 1..40, separated by spaces, `_`,
