@@ -962,13 +962,7 @@ object Dedup extends QueryModule {
     val docs = graft.Tables.documents(s, d)
     val index = docs.filter(col("doc_id") % 5 =!= 0)
     val newDocs = docs.filter(col("doc_id") % 5 === 0)
-    val scratch =
-      s"target/verify_scratch/stream_probe_${new java.io.File(d).getName}"
-    // ALWAYS rewrite: memoizing keyed on the dir basename would replay
-    // stale input if the dataset is regenerated in place (or two
-    // datasets share a basename) while batch + oracle read fresh data —
-    // the batch is sf-sized, the rewrite is cheap insurance
-    newDocs.write.mode("overwrite").parquet(scratch)
+    val scratch = Io.streamScratch("stream_probe", d, "documents", newDocs)
     val stream = s.readStream.schema(newDocs.schema).parquet(scratch)
     // per-row scalar minhash: md5 halves per shingle (identical values
     // to ShingleHashes), k universal mins via array_min — stateless
@@ -989,21 +983,9 @@ object Dedup extends QueryModule {
     val idxSigs = flatSigsOf(index).localCheckpoint(true,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val idxBands = flatBanded(idxSigs, "idx_id")
-    val sink = "dedup_stream_probe_" + System.nanoTime()
-    val q = streamBands.join(idxBands, Seq("bh"))
-      .select("new_id", "idx_id")
-      .writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    // materialize the deduped candidates, then DROP the memory-sink
-    // table — otherwise every invocation leaks its full band-match row
-    // set into the session catalog for the session lifetime
-    val cand = s.table(sink).dropDuplicates("new_id", "idx_id")
-      .localCheckpoint()
-    s.catalog.dropTempView(sink)
+    val cand = graft.streaming.Streaming.drain(
+      streamBands.join(idxBands, Seq("bh")).select("new_id", "idx_id"))(
+      _.dropDuplicates("new_id", "idx_id"))
     scoreProbeCandidates(index, newDocs, cand, idxSigs, flatSigsOf(newDocs))
   }
 

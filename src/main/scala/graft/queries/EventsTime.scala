@@ -2,9 +2,12 @@ package graft.queries
 
 import graft.{QueryModule, Tables}
 import graft.operators.AsofJoin
+import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
+import org.apache.spark.sql.types.StructType
 
 /** Event-time operators over the `events` table: tumbling and sliding
   * windows (the batch twins of the Structured Streaming ops in
@@ -32,85 +35,52 @@ object EventsTime extends QueryModule {
     */
   private val SEQ_CAP = 1000
 
-  /** The events table REPLAYED through the real Structured Streaming
-    * plan: file stream -> watermark -> tumbling window -> APPEND-mode
-    * memory sink, driven to completion by Trigger.AvailableNow. Append
-    * mode emits exactly the windows the final watermark (max event time
-    * minus the 30-minute delay) has closed — so the oracle mirrors the
-    * watermark rule itself, which puts late-data semantics under the
-    * driver's value-compare rather than only under ScalaTest.
-    */
-  /** Micros-typed scratch copy of the events table for file-stream
+  /** The gate's events table and its micros-typed copy for file-stream
     * replay (the raw table is TIMESTAMP(NANOS), which a schema-pinned
-    * file stream can't read). Cached per (SF dir, source file sizes +
-    * mtimes): regenerated testdata changes the fingerprint, so a stale
-    * copy can never silently replay old events against a new oracle.
+    * file stream can't read), written once per source fingerprint and
+    * normalised schema (see Io.streamScratch).
     */
-  private def replayScratch(s: SparkSession, d: String): (DataFrame, String) = {
+  private[graft] def replayScratch(s: SparkSession, d: String): (DataFrame, String) = {
     val batch = Tables.events(s, d)
-    val src = new java.io.File(d, "events.parquet")
-    val sig = {
-      val parts = (if (src.isDirectory)
-        Option(src.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
-      else Seq(src)).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      // the normalized schema is part of the fingerprint: a scratch copy
-      // written before a ts-encoding change (e.g. the NTZ regeneration)
-      // must not replay against a schema-pinned stream expecting the new
-      // normalized type
-      java.lang.Long.toHexString(
-        (parts.mkString("|") + "|" + batch.schema.catalogString)
-          .hashCode.toLong & 0xffffffffL)
-    }
-    val scratch = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_stream_replay_${new java.io.File(d).getName}_$sig").getPath
-    if (!new java.io.File(scratch, "_SUCCESS").exists())
-      batch.write.mode("overwrite").parquet(scratch)
-    (batch, scratch)
+    (batch, Io.streamScratch("stream_replay", d, "events", batch))
   }
 
-  /** The reusable core of [[streamReplay]]: tumbling-window replay of
-    * an arbitrary events scratch dir through the real file-stream ->
-    * watermark -> window-agg -> append-memory-sink plan. Bench's
-    * `scaled_stream_window_x20` probe drives this same code over the
-    * x20 events corpus — the probe measures the actual state-store
-    * path, not a plan read-off.
-    */
-  def windowedReplayOn(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      scratch: String): DataFrame = {
-    val stream = s.readStream.schema(schema).parquet(scratch)
-    val agg = graft.streaming.Streaming
-      .windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
-    val sink = "ev_stream_replay_" + System.nanoTime()
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
-          col("event_type"), col("n"))
-        .orderBy("hour", "event_type")
-    }
+  /** A file stream over the gate's events scratch. */
+  private def replayStream(s: SparkSession, d: String): DataFrame = {
+    val (batch, scratch) = replayScratch(s, d)
+    s.readStream.schema(batch.schema).parquet(scratch)
   }
 
-  /** Materialize a memory-sink-derived result, then DROP the sink's
-    * temp view so its rows don't stay pinned in driver memory for the
-    * session's lifetime — each replay registers a fresh nanoTime-named
-    * sink, and a bench/probe session replays the x20/x100 corpora
-    * repeatedly (millions of emitted rows per rep; undropped, they
-    * accumulate as permanent driver heap). localCheckpoint first: the
-    * returned frame must outlive the dropped view.
-    */
-  private def dropSinkAfter(s: SparkSession, sink: String)(
-      mk: => DataFrame): DataFrame = {
-    val out = mk.localCheckpoint()
-    s.catalog.dropTempView(sink)
-    out
+  /** A `*ReplayOn` core over the gate's events scratch: the registry
+    * entry of a replay that Bench's x20 stream rows also drive. */
+  private def onScratch(replay: (SparkSession, StructType, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    val (batch, scratch) = replayScratch(s, d)
+    replay(s, batch.schema, scratch)
   }
+
+  private def hourlyCounts(stream: DataFrame): DataFrame =
+    Streaming.windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
+
+  private def byHour(counts: DataFrame): DataFrame =
+    counts.select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
+        col("event_type"), col("n"))
+      .orderBy("hour", "event_type")
+
+  /** `ev_stream_replay`: the events scratch replayed through the real
+    * Structured Streaming plan: file stream -> watermark -> tumbling
+    * window -> append-mode memory sink, drained by AvailableNow. Append
+    * mode emits exactly the windows the final watermark (max event time
+    * minus the 30-minute delay) has closed, so the oracle mirrors the
+    * watermark rule itself, which puts late-data semantics under the
+    * oracle value-compare rather than only under ScalaTest. Bench's
+    * `scaled_stream_window_x20` row drives this same core over the x20
+    * events corpus.
+    */
+  def windowedReplayOn(s: SparkSession, schema: StructType,
+      scratch: String): DataFrame =
+    Streaming.drain(hourlyCounts(s.readStream.schema(schema).parquet(scratch)))(
+      byHour)
 
   /** Pin the single-micro-batch drain some oracles DEPEND on.
     * `chainReplayOn`'s global-DISTINCT oracle and `streamUpdateReplay`'s
@@ -120,20 +90,15 @@ object EventsTime extends QueryModule {
     * only within the 30-min delay, and update-mode max-folding breaks if
     * evicted window state is re-opened by a later batch. That holds
     * today because the file source has no `maxFilesPerTrigger` option
-    * set — this assertion turns the silent assumption into a loud
-    * failure if a future source-option change splits the replay.
+    * set — this check turns the silent assumption into a loud failure
+    * if a future source-option change splits the replay.
     */
-  private def assertSingleDataBatch(
-      q: org.apache.spark.sql.streaming.StreamingQuery, what: String): Unit = {
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+  private def assertSingleDataBatch(what: String)(
+      progress: Array[StreamingQueryProgress]): Unit = {
+    val dataBatches = progress.count(_.numInputRows > 0)
     require(dataBatches <= 1,
       s"$what: replay ran $dataBatches data micro-batches; its oracle is " +
         "only valid for a single-batch AvailableNow drain (see scaladoc)")
-  }
-
-  def streamReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    windowedReplayOn(s, batch.schema, scratch)
   }
 
   /** Time-contiguous multi-file copy of the replay scratch for
@@ -205,29 +170,17 @@ object EventsTime extends QueryModule {
     */
   def streamMultiBatchReplay(s: SparkSession, d: String): DataFrame = {
     val (batch, scratch) = replayScratch(s, d)
-    val mbDir = multiBatchScratch(batch, scratch, nChunks = 4)
     val stream = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(mbDir)
-    val agg = graft.streaming.Streaming
-      .windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
-    val sink = "ev_stream_multibatch_" + System.nanoTime()
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 3 && q.lastProgress.batchId >= 2,
-      s"ev_stream_multibatch: expected >= 3 data micro-batches " +
-        s"(got $dataBatches, last batchId ${q.lastProgress.batchId}) — " +
-        "the multi-file scratch or maxFilesPerTrigger sequencing broke")
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
-          col("event_type"), col("n"))
-        .orderBy("hour", "event_type")
-    }
+      .option("maxFilesPerTrigger", "1")
+      .parquet(multiBatchScratch(batch, scratch, nChunks = 4))
+    Streaming.drain(hourlyCounts(stream), check = p => {
+      val dataBatches = p.count(_.numInputRows > 0)
+      val lastBatch = p.lastOption.fold(-1L)(_.batchId)
+      require(dataBatches >= 3 && lastBatch >= 2,
+        s"ev_stream_multibatch: expected >= 3 data micro-batches " +
+          s"(got $dataBatches, last batchId $lastBatch) — " +
+          "the multi-file scratch or maxFilesPerTrigger sequencing broke")
+    })(byHour)
   }
 
   /** Chunk scratch for [[streamLateDropReplay]]: the four time-monotone
@@ -327,35 +280,20 @@ object EventsTime extends QueryModule {
     */
   def streamLateDropReplay(s: SparkSession, d: String): DataFrame = {
     val (batch, scratch) = replayScratch(s, d)
-    val mbDir = lateDropScratch(s, batch, scratch)
     val stream = s.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(mbDir)
-    val agg = graft.streaming.Streaming
-      .windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
-    val sink = "ev_stream_late_drop_" + System.nanoTime()
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 5,
-      s"ev_stream_late_drop: expected >= 5 data micro-batches " +
-        s"(got $dataBatches) — the multi-file sequencing broke")
-    val droppedByWm = q.recentProgress
-      .flatMap(p => Option(p.stateOperators).toSeq.flatten)
-      .map(_.numRowsDroppedByWatermark).sum
-    require(droppedByWm > 0,
-      "ev_stream_late_drop: numRowsDroppedByWatermark == 0 — the " +
-        "genuinely-late chunk-5 row was not dropped; the late-data " +
-        "path this query exists to execute did not run")
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
-          col("event_type"), col("n"))
-        .orderBy("hour", "event_type")
-    }
+      .option("maxFilesPerTrigger", "1").parquet(lateDropScratch(s, batch, scratch))
+    Streaming.drain(hourlyCounts(stream), check = p => {
+      val dataBatches = p.count(_.numInputRows > 0)
+      require(dataBatches >= 5,
+        s"ev_stream_late_drop: expected >= 5 data micro-batches " +
+          s"(got $dataBatches) — the multi-file sequencing broke")
+      val droppedByWm = p.flatMap(q => Option(q.stateOperators).toSeq.flatten)
+        .map(_.numRowsDroppedByWatermark).sum
+      require(droppedByWm > 0,
+        "ev_stream_late_drop: numRowsDroppedByWatermark == 0 — the " +
+          "genuinely-late chunk-5 row was not dropped; the late-data " +
+          "path this query exists to execute did not run")
+    })(byHour)
   }
 
   /** Streaming dedup under the oracle gate: the events table replayed
@@ -365,82 +303,32 @@ object EventsTime extends QueryModule {
     * row per key, so the gate compares the key set, not the payload.
     */
   def streamDedupReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    val stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val deduped = graft.streaming.Streaming
-      .dedupStream(stream, Seq("user_id", "event_type"), "30 minutes")
-    val sink = "ev_stream_dedup_" + System.nanoTime()
-    val q = deduped.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_types"))
-        .orderBy("user_id")
-    }
+    val stream = replayStream(s, d)
+    Streaming.drain(Streaming.dedupStream(stream, Seq("user_id", "event_type"),
+        "30 minutes"))(
+      _.groupBy("user_id").agg(count(lit(1)).as("n_types")).orderBy("user_id"))
   }
 
-  /** Streaming SESSION windows under the oracle gate: the events table
-    * replayed through the native `session_window` aggregation (real
-    * merging session state), append mode — emitted sessions are exactly
-    * those whose end cleared the final watermark. The oracle reproduces
-    * gap-sessionization AND the watermark rule, including Spark's
-    * millisecond watermark truncation (`wm_us = (max_us DIV 1000 -
-    * delay_ms) * 1000`): event times carry sub-millisecond micros, so
-    * an un-truncated mirror misclassifies boundary sessions.
-    */
-  /** The reusable core of [[streamSessionReplay]]: session-window
-    * replay of an arbitrary events scratch dir (merging session state,
-    * append mode). Bench's `scaled_stream_session_x20` probe drives it
-    * over the x20 corpus, where the session store carries 20x the
+  /** `ev_stream_session`: streaming SESSION windows under the oracle
+    * gate: the events scratch replayed through the native
+    * `session_window` aggregation (real merging session state), append
+    * mode — emitted sessions are exactly those whose end cleared the
+    * final watermark. The oracle reproduces gap-sessionization AND the
+    * watermark rule, including Spark's millisecond watermark truncation
+    * (`wm_us = (max_us DIV 1000 - delay_ms) * 1000`): event times carry
+    * sub-millisecond micros, so an un-truncated mirror misclassifies
+    * boundary sessions. Bench's `scaled_stream_session_x20` row drives
+    * it over the x20 corpus, where the session store carries 20x the
     * per-user state of the gate query.
     */
-  def sessionReplayOn(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      scratch: String): DataFrame = {
-    val stream = s.readStream.schema(schema).parquet(scratch)
-    val sess = graft.streaming.Streaming.sessionCounts(stream)
-    val sink = "ev_stream_session_" + System.nanoTime()
-    val q = sess.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(unix_micros(col("ss")).as("start_us"),
+  def sessionReplayOn(s: SparkSession, schema: StructType,
+      scratch: String): DataFrame =
+    Streaming.drain(Streaming.sessionCounts(s.readStream.schema(schema).parquet(scratch)))(
+      _.select(unix_micros(col("ss")).as("start_us"),
           unix_micros(col("se")).as("end_us"),
           col("user_id"), col("n_events"))
-        .orderBy("user_id", "start_us")
-    }
-  }
+        .orderBy("user_id", "start_us"))
 
-  def streamSessionReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    sessionReplayOn(s, batch.schema, scratch)
-  }
-
-  /** Stream-stream time-bounded JOIN under the oracle gate: clicks and
-    * purchases replayed as two streams, inner-joined per user within a
-    * 10-minute trailing window (real symmetric join state on both
-    * sides), then batch-aggregated from the sink to a per-user match
-    * count. Inner-join append emits every match eagerly (watermarks
-    * bound STATE, not emission), so the oracle is the plain time-
-    * bounded self-join.
-    */
-  /** Arbitrary stateful processing under the oracle gate: the events
-    * table replayed through `flatMapGroupsWithState` carrying a custom
-    * per-user state (count, max event time, distinct-type set). Every
-    * emission is monotone in every output column, so the per-user MAX
-    * over the sink equals the final state under ANY micro-batching of
-    * the file source — which is what lets a custom state machine be
-    * value-compared against a plain batch aggregate.
-    */
   /** Stream-STATIC enrichment under the oracle gate: the events table
     * replayed as a stream, left-joined against the static customer
     * dimension via [[graft.streaming.Streaming.streamStaticEnrich]]
@@ -452,51 +340,39 @@ object EventsTime extends QueryModule {
     * (the q1_agg fixed-point discipline).
     */
   def streamEnrichReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    val stream = s.readStream.schema(batch.schema).parquet(scratch)
+    val stream = replayStream(s, d)
     val dim = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val enriched = graft.streaming.Streaming.streamStaticEnrich(
-      stream, dim, "user_id", "c_custkey")
-    val sink = "ev_stream_enrich_" + System.nanoTime()
-    val q = enriched.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      // segment is NULL for a user_id with no customer row; coalesce to
-      // a sentinel on BOTH sides (here and the oracle) so engine null
-      // ORDER BY placement (Spark NULLS FIRST vs DuckDB NULLS LAST)
-      // can never flip the positional compare on regenerated testdata
-      s.table(sink)
-        .groupBy(coalesce(col("c_mktsegment"), lit("(none)")).as("segment"),
+    // segment is NULL for a user_id with no customer row; coalesce to
+    // a sentinel on BOTH sides (here and the oracle) so engine null
+    // ORDER BY placement (Spark NULLS FIRST vs DuckDB NULLS LAST)
+    // can never flip the positional compare on regenerated testdata
+    Streaming.drain(Streaming.streamStaticEnrich(stream, dim, "user_id", "c_custkey"))(
+      _.groupBy(coalesce(col("c_mktsegment"), lit("(none)")).as("segment"),
           col("event_type"))
         .agg(count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("value_cents"))
-        .orderBy("segment", "event_type")
-    }
+        .orderBy("segment", "event_type"))
   }
 
+  /** The per-user maxima of a user-summary stream's emissions. */
+  private def finalSummary(sink: DataFrame): DataFrame =
+    sink.groupBy("user_id")
+      .agg(max("n_events").as("n_events"), max("last_us").as("last_us"),
+        max("n_types").as("n_types"))
+      .orderBy("user_id")
+
+  /** Arbitrary stateful processing under the oracle gate: the events
+    * table replayed through `flatMapGroupsWithState` carrying a custom
+    * per-user state (count, max event time, distinct-type set). Every
+    * emission is monotone in every output column, so the per-user MAX
+    * over the sink equals the final state under ANY micro-batching of
+    * the file source — which is what lets a custom state machine be
+    * value-compared against a plain batch aggregate.
+    */
   def streamStateReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    val stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val summary = graft.streaming.Streaming.userStateSummary(stream)
-    val sink = "ev_stream_state_" + System.nanoTime()
-    val q = summary.toDF().writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(max("n_events").as("n_events"), max("last_us").as("last_us"),
-          max("n_types").as("n_types"))
-        .orderBy("user_id")
-    }
+    val stream = replayStream(s, d)
+    Streaming.drain(Streaming.userStateSummary(stream).toDF())(finalSummary)
   }
 
   /** [[streamStateReplay]]'s twin on the `transformWithState` API
@@ -505,40 +381,20 @@ object EventsTime extends QueryModule {
     * around just this query). Same monotone emissions, same final-max
     * aggregation, same oracle shape as ev_stream_state.
     */
-  def twsReplayOn(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
+  def twsReplayOn(s: SparkSession, schema: StructType,
       scratch: String): DataFrame = {
     val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val stream = s.readStream.schema(schema).parquet(scratch)
-      val summary = graft.streaming.Streaming.userStateSummaryTws(stream)
-      val sink = "ev_stream_tws_" + System.nanoTime()
-      val q = summary.toDF().writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      dropSinkAfter(s, sink) {
-        s.table(sink)
-          .groupBy("user_id")
-          .agg(max("n_events").as("n_events"), max("last_us").as("last_us"),
-            max("n_types").as("n_types"))
-          .orderBy("user_id")
-      }
+      Streaming.drain(Streaming.userStateSummaryTws(stream).toDF())(finalSummary)
     } finally prev match {
       case Some(p) =>
         s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
       case None =>
         s.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
-  }
-
-  def streamTwsReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    twsReplayOn(s, batch.schema, scratch)
   }
 
   /** CHAINED stateful streaming under the oracle gate: watermarked
@@ -553,11 +409,10 @@ object EventsTime extends QueryModule {
     * input watermark through) is mirrored in the oracle, ms-truncated
     * like the engine computes it.
     */
-  def chainReplayOn(s: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
+  def chainReplayOn(s: SparkSession, schema: StructType,
       scratch: String): DataFrame = {
     val stream = s.readStream.schema(schema).parquet(scratch)
-    val dedup = graft.streaming.Streaming.dedupStream(
+    val dedup = Streaming.dedupStream(
       stream.withColumn("hr", date_trunc("hour", col("ts"))),
       Seq("user_id", "event_type", "hr"), "30 minutes")
     val agg = dedup
@@ -565,26 +420,10 @@ object EventsTime extends QueryModule {
       .agg(count(lit(1)).as("n_users"))
       .select(col("window.start").as("ws"), col("event_type"),
         col("n_users"))
-    val sink = "ev_stream_chain_" + System.nanoTime()
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      assertSingleDataBatch(q, "ev_stream_chain")
-    } finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
+    Streaming.drain(agg, check = assertSingleDataBatch("ev_stream_chain"))(
+      _.select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
           col("event_type"), col("n_users"))
-        .orderBy("hour", "event_type")
-    }
-  }
-
-  def streamChainReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    chainReplayOn(s, batch.schema, scratch)
+        .orderBy("hour", "event_type"))
   }
 
   /** UPDATE-mode windowed aggregation under the gate — the third
@@ -597,50 +436,40 @@ object EventsTime extends QueryModule {
     * semantic difference from append, under the value compare.
     */
   def streamUpdateReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    val stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val agg = graft.streaming.Streaming
-      .windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
-    val sink = "ev_stream_update_" + System.nanoTime()
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("update")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      assertSingleDataBatch(q, "ev_stream_update")
-    } finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
+    val stream = replayStream(s, d)
+    Streaming.drain(hourlyCounts(stream), "update",
+        assertSingleDataBatch("ev_stream_update"))(
+      _.groupBy(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
           col("event_type"))
         .agg(max("n").as("n"))
-        .orderBy("hour", "event_type")
-    }
+        .orderBy("hour", "event_type"))
   }
 
-  def streamJoinReplay(s: SparkSession, d: String): DataFrame = {
+  /** Clicks joined to purchases as two replayed streams by
+    * [[graft.streaming.Streaming.streamStreamJoin]] (real symmetric join
+    * state on both sides), drained, and aggregated per user as `aggs`.
+    */
+  private def clickPurchaseReplay(s: SparkSession, d: String, joinType: String)(
+      aggs: Column*): DataFrame = {
     val (batch, scratch) = replayScratch(s, d)
-    def stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val joined = graft.streaming.Streaming.streamStreamJoin(
-      stream.filter(col("event_type") === "click"),
-      stream.filter(col("event_type") === "purchase"))
-    val sink = "ev_stream_join_" + System.nanoTime()
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          min(unix_micros(col("l_ts"))).as("first_us"),
-          max(unix_micros(col("r_ts"))).as("last_us"))
-        .orderBy("user_id")
-    }
+    def stream(t: String) = s.readStream.schema(batch.schema).parquet(scratch)
+      .filter(col("event_type") === t)
+    Streaming.drain(
+      Streaming.streamStreamJoin(stream("click"), stream("purchase"), joinType))(
+      _.groupBy("user_id").agg(aggs.head, aggs.tail: _*).orderBy("user_id"))
   }
+
+  /** Stream-stream time-bounded JOIN under the oracle gate: each
+    * click's purchases within its trailing 10 minutes, as a per-user
+    * match count. Inner-join append emits every match eagerly
+    * (watermarks bound STATE, not emission), so the oracle is the plain
+    * time-bounded self-join.
+    */
+  def streamJoinReplay(s: SparkSession, d: String): DataFrame =
+    clickPurchaseReplay(s, d, "inner")(
+      count(lit(1)).as("n_pairs"),
+      min(unix_micros(col("l_ts"))).as("first_us"),
+      max(unix_micros(col("r_ts"))).as("last_us"))
 
   /** Stream-stream LEFT OUTER join under the oracle gate. Unlike the
     * inner join (emit-on-match), outer null-padded rows materialize only
@@ -652,67 +481,43 @@ object EventsTime extends QueryModule {
     * Clicks inside the final watermark horizon never emit; the oracle
     * reproduces exactly that eviction rule.
     */
-  def streamLeftOuterReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    def stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val joined = graft.streaming.Streaming.streamStreamLeftOuter(
-      stream.filter(col("event_type") === "click"),
-      stream.filter(col("event_type") === "purchase"))
-    val sink = "ev_stream_outer_" + System.nanoTime()
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(count(col("r_ts")).as("n_pairs"),
-          (count(lit(1)) - count(col("r_ts"))).as("n_outer"),
-          min(unix_micros(col("l_ts"))).as("first_us"),
-          max(unix_micros(col("r_ts"))).as("last_us"))
-        .orderBy("user_id")
-    }
-  }
+  def streamLeftOuterReplay(s: SparkSession, d: String): DataFrame =
+    clickPurchaseReplay(s, d, "leftOuter")(
+      count(col("r_ts")).as("n_pairs"),
+      (count(lit(1)) - count(col("r_ts"))).as("n_outer"),
+      min(unix_micros(col("l_ts"))).as("first_us"),
+      max(unix_micros(col("r_ts"))).as("last_us"))
 
-  /** Stream-stream FULL OUTER join under the oracle gate (see
-    * Streaming.streamStreamFullOuter): clicks AND purchases each emit
-    * null-padded when the final watermark proves no counterpart. Left
-    * rows evict at wm > l_ts (same rule as the left-outer replay);
-    * right rows evict at wm > r_ts + 10 min — a future click can match
-    * a purchase up to 10 minutes back, so purchases stay in state a
-    * full window longer than clicks. The oracle reproduces both
-    * eviction boundaries (ms-truncated watermark, strict compare).
+  /** Stream-stream FULL OUTER join under the oracle gate: clicks AND
+    * purchases each emit null-padded when the final watermark proves
+    * no counterpart. Left rows evict at wm > l_ts (same rule as the
+    * left-outer replay); right rows evict at wm > r_ts + 10 min — a
+    * future click can match a purchase up to 10 minutes back, so
+    * purchases stay in state a full window longer than clicks. The
+    * oracle reproduces both eviction boundaries (ms-truncated
+    * watermark, strict compare).
     */
-  def streamFullOuterReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    def stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val joined = graft.streaming.Streaming.streamStreamFullOuter(
-      stream.filter(col("event_type") === "click"),
-      stream.filter(col("event_type") === "purchase"))
-    val sink = "ev_stream_full_" + System.nanoTime()
-    val q = joined.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(
-          count(when(col("l_ts").isNotNull && col("r_ts").isNotNull,
-            lit(1))).as("n_pairs"),
-          count(when(col("l_ts").isNotNull && col("r_ts").isNull,
-            lit(1))).as("n_left_outer"),
-          count(when(col("l_ts").isNull && col("r_ts").isNotNull,
-            lit(1))).as("n_right_outer"),
-          min(unix_micros(col("l_ts"))).as("first_us"),
-          max(unix_micros(col("r_ts"))).as("last_us"))
-        .orderBy("user_id")
-    }
-  }
+  def streamFullOuterReplay(s: SparkSession, d: String): DataFrame =
+    clickPurchaseReplay(s, d, "fullOuter")(
+      count(when(col("l_ts").isNotNull && col("r_ts").isNotNull,
+        lit(1))).as("n_pairs"),
+      count(when(col("l_ts").isNotNull && col("r_ts").isNull,
+        lit(1))).as("n_left_outer"),
+      count(when(col("l_ts").isNull && col("r_ts").isNotNull,
+        lit(1))).as("n_right_outer"),
+      min(unix_micros(col("l_ts"))).as("first_us"),
+      max(unix_micros(col("r_ts"))).as("last_us"))
+
+  /** Stream-stream LEFT SEMI join under the oracle gate: clicks with at
+    * least one purchase in their 10-minute lookback, each click emitted
+    * at most once — the dedup the inner join's pair multiplication
+    * can't give.
+    */
+  def streamSemiReplay(s: SparkSession, d: String): DataFrame =
+    clickPurchaseReplay(s, d, "leftSemi")(
+      count(lit(1)).as("n_clicks"),
+      min(unix_micros(col("l_ts"))).as("first_us"),
+      max(unix_micros(col("l_ts"))).as("last_us"))
 
   /** Multi-SOURCE streaming union under the oracle gate: the events
     * corpus split by event_id parity into two independent file-stream
@@ -725,68 +530,20 @@ object EventsTime extends QueryModule {
     * counts keep each branch's lineage visible in the compare.
     */
   def streamUnionReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    // parity-split scratch copies, fingerprint-keyed like replayScratch
-    // (the driver regenerates testdata between rounds)
-    val base = new java.io.File(scratch).getName
-    def half(tag: Int): String = {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        s"${base}_half$tag").getPath
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        batch.filter(col("event_id") % 2 === tag)
-          .write.mode("overwrite").parquet(p)
-      p
-    }
-    val (pa, pb) = (half(0), half(1))
-    def src(p: String, tag: Int) =
-      s.readStream.schema(batch.schema).parquet(p)
-        .withColumn("src", lit(tag.toLong))
-    val unioned = src(pa, 0).unionByName(src(pb, 1))
+    val batch = Tables.events(s, d)
+    def src(tag: Int) = s.readStream.schema(batch.schema)
+      .parquet(Io.streamScratch(s"stream_half$tag", d, "events",
+        batch.filter(col("event_id") % 2 === tag)))
+      .withColumn("src", lit(tag.toLong))
+    val unioned = src(0).unionByName(src(1))
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("src"))
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("ws"), col("src"), col("n"))
-    val sink = "ev_stream_union_" + System.nanoTime()
-    val q = unioned.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
+    Streaming.drain(unioned)(
+      _.select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
           col("src"), col("n"))
-        .orderBy("hour", "src")
-    }
-  }
-
-  /** Stream-stream LEFT SEMI join under the oracle gate (see
-    * Streaming.streamStreamLeftSemi): clicks with at least one
-    * purchase in their 10-minute lookback, each click emitted at most
-    * once — the dedup the inner join's pair multiplication can't give.
-    */
-  def streamSemiReplay(s: SparkSession, d: String): DataFrame = {
-    val (batch, scratch) = replayScratch(s, d)
-    def stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val semi = graft.streaming.Streaming.streamStreamLeftSemi(
-      stream.filter(col("event_type") === "click"),
-      stream.filter(col("event_type") === "purchase"))
-    val sink = "ev_stream_semi_" + System.nanoTime()
-    val q = semi.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
-    dropSinkAfter(s, sink) {
-      s.table(sink)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_clicks"),
-          min(unix_micros(col("l_ts"))).as("first_us"),
-          max(unix_micros(col("l_ts"))).as("last_us"))
-        .orderBy("user_id")
-    }
+        .orderBy("hour", "src"))
   }
 
   /** The watermark-closed windowed replay through Spark's
@@ -806,27 +563,21 @@ object EventsTime extends QueryModule {
   def streamFileSinkReplay(s: SparkSession, d: String): DataFrame = {
     val (batch, scratch) = replayScratch(s, d)
     val stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val agg = graft.streaming.Streaming
-      .windowedTypeCounts(stream, "1 hour", "1 hour", "30 minutes")
     val outDir = scratch + "_fsink_out"
-    val ckDir = scratch + "_fsink_ck"
-    val q = agg.writeStream.format("parquet")
+    val q = hourlyCounts(stream).writeStream.format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", ckDir)
+      .option("checkpointLocation", scratch + "_fsink_ck")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination()
     finally q.stop()
-    s.read.parquet(outDir)
-      .select(date_format(col("ws"), "yyyy-MM-dd HH").as("hour"),
-        col("event_type"), col("n"))
-      .orderBy("hour", "event_type")
+    byHour(s.read.parquet(outDir))
   }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- watermark semantics, driver-checked (see streamReplay) -----------
-    "ev_stream_replay" -> ((s, d) => streamReplay(s, d)),
+    // -- watermark semantics, oracle-checked (see windowedReplayOn) -----------
+    "ev_stream_replay" -> onScratch(windowedReplayOn),
     "ev_stream_file_sink" -> ((s, d) => streamFileSinkReplay(s, d)),
     "ev_stream_multibatch" -> ((s, d) => streamMultiBatchReplay(s, d)),
     "ev_stream_late_drop" -> ((s, d) => streamLateDropReplay(s, d)),
@@ -847,7 +598,7 @@ object EventsTime extends QueryModule {
     "ev_stream_union" -> ((s, d) => streamUnionReplay(s, d)),
 
     // -- streaming session windows, driver-checked ------------------------
-    "ev_stream_session" -> ((s, d) => streamSessionReplay(s, d)),
+    "ev_stream_session" -> onScratch(sessionReplayOn),
 
     // -- streaming dedup, driver-checked (see streamDedupReplay) ----------
     "ev_stream_dedup" -> ((s, d) => streamDedupReplay(s, d)),
@@ -859,7 +610,7 @@ object EventsTime extends QueryModule {
     "ev_stream_enrich" -> ((s, d) => streamEnrichReplay(s, d)),
 
     // -- chained stateful operators: dedup -> window agg in one query --
-    "ev_stream_chain" -> ((s, d) => streamChainReplay(s, d)),
+    "ev_stream_chain" -> onScratch(chainReplayOn),
 
     // -- UPDATE-mode windowed agg: eager emission of open windows,
     //    max-folded to the deterministic final value ---------------------
@@ -868,7 +619,7 @@ object EventsTime extends QueryModule {
     // -- transformWithState (Spark 4 arbitrary state API): the
     //    ev_stream_state machine on typed ValueState/MapState variables
     //    in RocksDB column families -------------------------------------
-    "ev_stream_tws" -> ((s, d) => streamTwsReplay(s, d)),
+    "ev_stream_tws" -> onScratch(twsReplayOn),
 
     // -- gap fill / densification: every (hour, event_type) bucket in the
     //    observed time range, zero-filled where no events landed. The

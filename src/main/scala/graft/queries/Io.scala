@@ -37,8 +37,8 @@ object Io extends QueryModule {
     * artifact cached per-JVM (writeOnce keys, bench scratch corpora)
     * must key on the source table's current bytes, not just its dir
     * path, or a long-lived JVM would serve a stale artifact against a
-    * fresh oracle. Bench.prepareScaledDocs keys its corpora through
-    * this same helper.
+    * fresh oracle. Bench's scaled corpora and [[streamScratch]] key
+    * their paths through this same helper.
     */
   private[graft] def srcSig(sfDir: String, table: String): String = {
     val src = new java.io.File(sfDir, s"$table.parquet")
@@ -46,6 +46,24 @@ object Io extends QueryModule {
       Option(src.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
     else Seq(src)).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
     java.lang.Long.toHexString(parts.mkString("|").hashCode.toLong & 0xffffffffL)
+  }
+
+  /** The stream-scratch rule: a file-stream source derived from testdata
+    * table `table` is `frame` written as parquet under java.io.tmpdir,
+    * at a path keyed on `name`, the SF dir's name, the table's
+    * [[srcSig]] and `frame`'s schema. Regenerated testdata or a changed
+    * normalised schema gets a fresh path, so a copy never goes stale;
+    * a complete copy (`_SUCCESS`) is reused, not rewritten per call.
+    */
+  private[graft] def streamScratch(name: String, d: String, table: String,
+      frame: DataFrame): String = {
+    val schemaSig = Integer.toHexString(frame.schema.catalogString.hashCode)
+    val path = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_${name}_${new java.io.File(d).getName}_${srcSig(d, table)}_$schemaSig")
+      .getPath
+    if (!new java.io.File(path, "_SUCCESS").exists())
+      frame.write.mode("overwrite").parquet(path)
+    path
   }
 
   // One write per (dataset, source dir) per JVM: repeated invocations of

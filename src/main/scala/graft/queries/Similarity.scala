@@ -779,33 +779,18 @@ object Similarity extends QueryModule {
       val e = Tables.embeddings(s, d)
       val isDelta = pmod(col("vec_id"), lit(10L)) === 7
       val (cent, asgBase) = ivfIndexFrames(s, e.filter(!isDelta))
-      val scratch = "target/verify_scratch/stream_ingest_" +
-        new java.io.File(d).getName
-      // ALWAYS rewrite (the dedup_stream_probe discipline): memoizing
-      // on the dir basename would replay stale input after a testdata
-      // regeneration while the oracle reads fresh data
-      e.filter(isDelta).write.mode("overwrite").parquet(scratch)
-      val stream = s.readStream.schema(e.schema).parquet(scratch)
+      val stream = s.readStream.schema(e.schema)
+        .parquet(Io.streamScratch("stream_ingest", d, "embeddings", e.filter(isDelta)))
       val scored = stream.join(broadcast(cent))
         .select(col("vec_id"), col("embedding"), col("c_label"),
           Vectors.cosineScaled(s, col("embedding"), col("c_v")).as("a_icos"))
-      val sink = "sim_stream_ingest_" + System.nanoTime()
-      val q = scored.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
-      // batch-side argmax over the sink rows (k rows per vector), then
-      // drop the memory table so repeat invocations don't leak views
-      val delta = s.table(sink)
-        .groupBy("vec_id")
-        .agg(min(struct((-col("a_icos")).as("ni"), col("c_label").as("cl"),
-          col("embedding").as("emb"))).as("m"))
-        .select(col("vec_id"), col("m.emb").as("embedding"),
-          col("m.cl").as("c_label"))
-        .localCheckpoint()
-      s.catalog.dropTempView(sink)
+      // batch-side argmax over the sink rows (k rows per vector)
+      val delta = graft.streaming.Streaming.drain(scored)(
+        _.groupBy("vec_id")
+          .agg(min(struct((-col("a_icos")).as("ni"), col("c_label").as("cl"),
+            col("embedding").as("emb"))).as("m"))
+          .select(col("vec_id"), col("m.emb").as("embedding"),
+            col("m.cl").as("c_label")))
       ivfServe(s, cent, asgBase.unionByName(delta),
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.functions.Text
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryProgress, Trigger}
 
 /** Structured Streaming surface: the reference's one query as an
   * unbounded stream, plus event-time windowed aggregation (tumbling /
@@ -51,24 +52,37 @@ object Streaming {
       .select(col("session_window.start").as("ss"),
         col("session_window.end").as("se"), col("user_id"), col("n_events"))
 
-  /** Stream-stream inner join with event-time bounds: match each left
-    * event to right events of the same user within the trailing
-    * `windowSpec` interval. Both sides carry watermarks so the join
-    * state for expired time ranges is dropped — the only way a
-    * stream-stream join stays bounded on unbounded inputs.
+  /** Stream-stream join of `left` to `right` events of the same user
+    * within the trailing 10 minutes (`r_ts` in `[l_ts - 10 min, l_ts]`),
+    * as `joinType` ("inner", "leftOuter", "fullOuter" or "leftSemi").
+    * Both sides carry watermarks, so join state for expired time ranges
+    * is dropped; with the time bound they also decide when outer rows
+    * emit, null-padded, once the engine can prove no match will come:
+    *   - inner: every match emits eagerly;
+    *   - an unmatched left row emits once wm > l_ts (any future right
+    *     row has r_ts >= wm > l_ts);
+    *   - an unmatched right row (full outer) emits once
+    *     wm > r_ts + 10 min, so its key is coalesce(left, right);
+    *   - leftSemi: each left row emits at most once, with no right
+    *     columns (the streaming EXISTS; no pair multiplication).
     */
   def streamStreamJoin(left: DataFrame, right: DataFrame,
-      watermark: String = "30 minutes"): DataFrame = {
+      joinType: String = "inner", watermark: String = "30 minutes"): DataFrame = {
     val l = left.withWatermark("ts", watermark)
       .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
     val r = right.withWatermark("ts", watermark)
       .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
         col("event_type").as("r_type"))
-    l.join(r,
+    val joined = l.join(r,
       col("user_id") === col("r_user") &&
       col("r_ts") >= col("l_ts") - expr("INTERVAL 10 MINUTES") &&
-      col("r_ts") <= col("l_ts"))
-      .select(col("user_id"), col("l_ts"), col("l_type"), col("r_ts"), col("r_type"))
+      col("r_ts") <= col("l_ts"),
+      joinType)
+    val user =
+      if (joinType == "fullOuter") coalesce(col("user_id"), col("r_user")).as("user_id")
+      else col("user_id")
+    if (joinType == "leftSemi") joined
+    else joined.select(user, col("l_ts"), col("l_type"), col("r_ts"), col("r_type"))
   }
 
   /** Streaming exact dedup: drop re-deliveries of the same key within
@@ -94,73 +108,28 @@ object Streaming {
       eventKey: String, dimKey: String): DataFrame =
     events.join(broadcast(dim), col(eventKey) === col(dimKey), "left")
 
-  /** Stream-stream LEFT OUTER join with event-time bounds: like
-    * [[streamStreamJoin]], but a left event with no match emits
-    * null-padded output once the watermark passes its join window (the
-    * engine can only then prove no future match exists). Both
-    * watermarks + the time-range predicate are mandatory — they bound
-    * the state AND define when outer results materialize.
-    */
-  def streamStreamLeftOuter(left: DataFrame, right: DataFrame,
-      watermark: String = "30 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-        col("event_type").as("r_type"))
-    l.join(r,
-      col("user_id") === col("r_user") &&
-      col("r_ts") >= col("l_ts") - expr("INTERVAL 10 MINUTES") &&
-      col("r_ts") <= col("l_ts"),
-      "leftOuter")
-      .select(col("user_id"), col("l_ts"), col("l_type"), col("r_ts"), col("r_type"))
-  }
+  private val drains = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Stream-stream FULL OUTER join with event-time bounds: both sides'
-    * unmatched rows emit null-padded once the watermark proves no
-    * future counterpart can exist. For a left row that is wm > l_ts
-    * (any future right has r_ts >= wm > l_ts, violating r_ts <= l_ts);
-    * for a right row it is wm > r_ts + window (a future left with
-    * l_ts >= wm can still match while l_ts <= r_ts + window). The
-    * emitted user key must therefore be coalesce(left, right) — each
-    * outer row carries exactly one side.
+  /** Drain a stream to a batch result: run `out` to completion into a
+    * fresh memory sink (Trigger.AvailableNow, output mode `mode`), stop
+    * it, run `check` over its progress, then return `read` of the
+    * sink's rows, local-checkpointed so the result outlives the sink.
+    * The sink's temp view is dropped in every case, after a failed
+    * query or a failed check too, so a drain never leaves its rows in
+    * the session catalog.
     */
-  def streamStreamFullOuter(left: DataFrame, right: DataFrame,
-      watermark: String = "30 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-        col("event_type").as("r_type"))
-    l.join(r,
-      col("user_id") === col("r_user") &&
-      col("r_ts") >= col("l_ts") - expr("INTERVAL 10 MINUTES") &&
-      col("r_ts") <= col("l_ts"),
-      "fullOuter")
-      .select(coalesce(col("user_id"), col("r_user")).as("user_id"),
-        col("l_ts"), col("l_type"), col("r_ts"), col("r_type"))
-  }
-
-  /** Stream-stream LEFT SEMI join: the streaming EXISTS — each left
-    * row emits at most ONCE when a qualifying right row exists, with
-    * no right columns attached (so no pair multiplication: a click
-    * with twenty matching purchases is one output row, where the inner
-    * join is twenty). State follows the same watermark rules as the
-    * inner join; over a complete replay the emitted set is exactly the
-    * batch EXISTS under the same condition, which the oracle mirrors.
-    */
-  def streamStreamLeftSemi(left: DataFrame, right: DataFrame,
-      watermark: String = "30 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts").as("l_ts"), col("event_type").as("l_type"))
-    val r = right.withWatermark("ts", watermark)
-      .select(col("user_id").as("r_user"), col("ts").as("r_ts"),
-        col("event_type").as("r_type"))
-    l.join(r,
-      col("user_id") === col("r_user") &&
-      col("r_ts") >= col("l_ts") - expr("INTERVAL 10 MINUTES") &&
-      col("r_ts") <= col("l_ts"),
-      "leftSemi")
+  def drain(out: DataFrame, mode: String = "append",
+      check: Array[StreamingQueryProgress] => Unit = _ => ())(
+      read: DataFrame => DataFrame): DataFrame = {
+    val s = out.sparkSession
+    val sink = "graft_drain_" + drains.incrementAndGet()
+    try {
+      val q = out.writeStream.format("memory").queryName(sink)
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      check(q.recentProgress)
+      read(s.table(sink)).localCheckpoint()
+    } finally s.catalog.dropTempView(sink)
   }
 
   /** foreachBatch sink: run an arbitrary batch write per micro-batch.

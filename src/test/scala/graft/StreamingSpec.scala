@@ -186,9 +186,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val clicks = MemoryStream[(Long, Timestamp, String)]
     val views = MemoryStream[(Long, Timestamp, String)]
-    val q = Streaming.streamStreamLeftSemi(
+    val q = Streaming.streamStreamJoin(
       clicks.toDF().toDF("user_id", "ts", "event_type"),
-      views.toDF().toDF("user_id", "ts", "event_type"))
+      views.toDF().toDF("user_id", "ts", "event_type"), "leftSemi")
       .writeStream.outputMode("append")
       .format("memory").queryName("sss_out").start()
     try {
@@ -210,15 +210,13 @@ class StreamingSpec extends AnyFunSuite {
 
   test("file sink is exactly-once across restarts: a re-run commits nothing") {
     val d = TestSpark.sf0001
-    def partFiles(): Map[String, Int] = {
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("graft_stream_replay_sf0.001") &&
-          f.getName.endsWith("_fsink_out"))
+    val outDir = new java.io.File(
+      graft.queries.EventsTime.replayScratch(spark, d)._2 + "_fsink_out")
+    def partFiles(): Map[String, Int] =
+      Seq(outDir).filter(_.isDirectory)
         .map(dd => dd.getName ->
           Option(dd.listFiles()).getOrElse(Array.empty)
             .count(_.getName.endsWith(".parquet"))).toMap
-    }
     val first = graft.queries.EventsTime.streamFileSinkReplay(spark, d)
       .collect().map(_.toString).toSeq
     val files1 = partFiles()
@@ -343,9 +341,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val clicks = MemoryStream[(Long, Timestamp, String)]
     val views = MemoryStream[(Long, Timestamp, String)]
-    val q = Streaming.streamStreamLeftOuter(
+    val q = Streaming.streamStreamJoin(
       clicks.toDF().toDF("user_id", "ts", "event_type"),
-      views.toDF().toDF("user_id", "ts", "event_type"),
+      views.toDF().toDF("user_id", "ts", "event_type"), "leftOuter",
       watermark = "10 minutes")
       .writeStream.outputMode("append")
       .format("memory").queryName("sslo_out").start()
