@@ -178,17 +178,18 @@ object Bench {
   /** `rows` lines of 10 words `<prefix><0..99999>` hashed from the line
     * id, written once in `parts` text files (untimed). */
   private def wordCorpus(spark: SparkSession, name: String, prefix: String,
-      rows: Long, parts: Int): String = {
-    val path = s"target/bench_scratch/$name"
-    if (!new java.io.File(path).exists()) {
+      rows: Long, parts: Int): String =
+    Scratch.once(name, Scratch.sig(prefix, rows, parts)) { p =>
       val words = (0 until 10).map(i =>
         concat(lit(prefix), pmod(hash(col("id") * 10 + i), lit(100000))))
       spark.range(0, rows, 1, parts)
-        .select(concat_ws(" ", words: _*).as("value"))
-        .write.mode("overwrite").text(path)
+        .select(concat_ws(" ", words: _*).as("value")).write.text(p)
     }
-    path
-  }
+
+  /** Workload A's corpus path, [[prepareRefCorpus]]'s for prefix "w";
+    * MicroProbe's default input. */
+  def refCorpusPath: String = new java.io.File(Scratch.shared,
+    "ref_corpus_12m_" + Scratch.sig("w", 1200000L, 32)).getPath
 
   /** BASELINE.md workload A: 1.2M lines x 10 words from a 100k
     * vocabulary (~83 MB text). */
@@ -208,9 +209,8 @@ object Bench {
 
   /** BASELINE.md workload B: ~2M tokens from a 24-word vocabulary with
     * mixed separators (~12 MB), the extreme-skew counterpoint to A. */
-  def prepareRefCorpusB(spark: SparkSession): String = {
-    val path = "target/bench_scratch/ref_corpus_2m"
-    if (!new java.io.File(path).exists()) {
+  def prepareRefCorpusB(spark: SparkSession): String =
+    Scratch.once("ref_corpus_2m", Scratch.sig(200000L, 32)) { p =>
       val vocab = array((0 until 24).map(i => lit(s"word$i")): _*)
       val seps = array(lit(" "), lit("  "), lit("\t"), lit(", "), lit(". "))
       val pieces = (0 until 10).flatMap { i =>
@@ -219,23 +219,8 @@ object Bench {
         Seq(w, sp)
       }
       spark.range(0, 200000L, 1, 32)
-        .select(concat(pieces: _*).as("value"))
-        .write.mode("overwrite").text(path)
+        .select(concat(pieces: _*).as("value")).write.text(p)
     }
-    path
-  }
-
-  /** Fingerprint of a file tree (names, sizes, mtimes), so a changed
-    * input is never timed through a stale artifact. */
-  private def dirSig(dir: java.io.File): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val parts = walk(dir).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    java.lang.Long.toHexString(parts.mkString("|").hashCode.toLong & 0xffffffffL)
-  }
 
   private def exec(cmd: String*): Unit = {
     val p = new ProcessBuilder(cmd: _*)
@@ -247,40 +232,22 @@ object Bench {
   /** The reference C program's sources: built and timed, never copied. */
   private val refSources = new java.io.File("/root/reference")
 
-  /** The reference binary, built by its own Makefile in a temp dir
-    * outside the repo tree, once per source fingerprint. */
-  private def refCBinary(): java.io.File = {
-    val build = new java.io.File("target/bench_scratch/refbuild")
-    val bin = new java.io.File(build, s"mapred_woc_${dirSig(refSources)}")
-    if (!bin.exists()) {
-      exec("rm", "-rf", build.getPath) // drop stale-sig binaries too
-      build.mkdirs()
-      val tmp = java.nio.file.Files.createTempDirectory("graft_refbuild")
-        .toFile
-      try {
-        val src = new java.io.File(tmp, "ref")
-        exec("cp", "-r", refSources.getPath, src.getPath)
-        exec("make", "-C", src.getPath)
-        java.nio.file.Files.copy(
-          new java.io.File(src, "mapred_woc").toPath, bin.toPath)
-        bin.setExecutable(true)
-      } finally exec("rm", "-rf", tmp.getPath)
-    }
-    bin
-  }
+  /** The reference binary, built by its own Makefile in a copy of its
+    * sources, once per source fingerprint. */
+  private def refCBinary(): java.io.File =
+    new java.io.File(Scratch.once("mapred_woc", Scratch.sig(refSources)) { p =>
+      exec("cp", "-r", refSources.getPath, p)
+      exec("make", "-C", p)
+    }, "mapred_woc")
 
   /** The binary reads one file: a corpus's parts in name order. */
-  private def concatParts(dir: String): java.io.File = {
-    val d = new java.io.File(dir)
-    val f = new java.io.File(s"target/bench_scratch/${d.getName}_concat_${dirSig(d)}.txt")
-    if (!f.exists()) {
+  private def concatParts(dir: String): String =
+    Scratch.derived(dir, "concat") { f =>
       val os = new java.io.FileOutputStream(f)
-      try d.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .foreach(p => java.nio.file.Files.copy(p.toPath, os))
+      try new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).foreach(p => java.nio.file.Files.copy(p.toPath, os))
       finally os.close()
     }
-    f
-  }
 
   /** `load`'s table with each row repeated `factor` times (column
     * `rep`), shaped by `mk`, written once (untimed) under a path keyed
@@ -290,13 +257,12 @@ object Bench {
       table: String, factor: Int)(load: (SparkSession, String) => DataFrame,
       mk: DataFrame => DataFrame): String = {
     require(1 <= factor && factor <= 100, "rep packs into id * 100")
-    val path = s"target/bench_scratch/${name}_" + new java.io.File(sfDir).getName +
-      "_" + graft.queries.Io.srcSig(sfDir, table)
-    if (!new java.io.File(path).exists())
+    Scratch.once(s"${name}_${new java.io.File(sfDir).getName}",
+        Tables.sig(sfDir, table)) { p =>
       mk(load(spark, sfDir)
         .select(explode(sequence(lit(0), lit(factor - 1))).as("rep"), col("*")))
-        .repartition(32).write.mode("overwrite").parquet(path)
-    path
+        .repartition(32).write.parquet(p)
+    }
   }
 
   /** Documents x20: even replicas exact copies, odd ones near-dups. */
@@ -313,10 +279,7 @@ object Bench {
   def prepareScaledPairs(spark: SparkSession, sfDir: String,
       factor: Int): String = {
     val docs = prepareScaledDocs(spark, sfDir, factor)
-    val path = docs + "_pairs"
-    if (!new java.io.File(path).exists())
-      pairGraph(spark.read.parquet(docs)).write.mode("overwrite").parquet(path)
-    path
+    Scratch.derived(docs, "pairs")(pairGraph(spark.read.parquet(docs)).write.parquet(_))
   }
 
   /** Embeddings x20, vec_id = orig*100 + rep: rep 0 exact, the others
@@ -511,7 +474,7 @@ object Bench {
           Refused(s"the C reference did not build: ${e.getMessage}")
         case scala.util.Success(bin) =>
           val f = concatParts(corpus(s))
-          Job(() => { exec(bin.getAbsolutePath, f.getPath, threads.toString); noRelease },
+          Job(() => { exec(bin.getAbsolutePath, f, threads.toString); noRelease },
             report = secs => Report(secs.min, info = Seq(name -> jNum(secs.min))))
       }, counted = false)
 
@@ -729,12 +692,8 @@ object Bench {
     x100Row("sim_serve_x100") { (s, d) =>
       val emb = prepareScaledEmb(s, d, 100)
       val e = s.read.parquet(emb)
-      val idx = emb + "_ivfidx"
-      val (cent, asg) = Similarity.ivfIndexFrames(s, e)
-      if (!new java.io.File(idx).exists()) {
-        cent.write.mode("overwrite").parquet(s"$idx/centroids")
-        asg.write.mode("overwrite").parquet(s"$idx/assigned")
-      }
+      val (cent, asg) =
+        Similarity.ivfIndexArtifact(s, e)(Scratch.derived(emb, "ivfidx"))
       val nVec = e.count()
       val q = e.filter(scaledEmbQueryPred)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
@@ -743,9 +702,7 @@ object Bench {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       var hits = 0
       Job(() => {
-        hits = Similarity.ivfServe(s,
-          s.read.schema(cent.schema).parquet(s"$idx/centroids"),
-          s.read.schema(asg.schema).parquet(s"$idx/assigned"), q, topK = 10)
+        hits = Similarity.ivfServe(s, cent, asg, q, topK = 10)
           .collect().count(r =>
             exact.contains((r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))))
         noRelease

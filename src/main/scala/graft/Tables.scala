@@ -16,6 +16,19 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** [[Scratch.sig]] of table `name`'s files under `dir`, then `params`:
+    * the key of an artifact derived from that table. */
+  def sig(dir: String, name: String, params: Any*): String =
+    Scratch.sig(new java.io.File(dir, s"$name.parquet") +: params: _*)
+
+  /** `frame`, derived from table `name` under `dir`, written once as the
+    * parquet copy `copy` in the shared [[Scratch]] root (a file stream
+    * reads a directory of its own), keyed on the table's files and
+    * `frame`'s schema. */
+  def copyOf(frame: DataFrame, dir: String, name: String, copy: String): String =
+    Scratch.once(s"${copy}_${new java.io.File(dir).getName}",
+      sig(dir, name, frame.schema.catalogString))(frame.write.parquet(_))
+
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = apply(s, d, "customer")

@@ -22,6 +22,11 @@ object Text {
   /** Separator pattern: complement of the reference's word-char class. */
   val TokenPattern = "[^A-Za-z0-9]+"
 
+  /** DuckDB's twin of [[tokens]] over the SQL expression `e`, for the
+    * oracles: the same split, empties removed. */
+  def sqlTokens(e: String): String =
+    s"list_filter(string_split_regex($e, '$TokenPattern'), t -> t <> '')"
+
   /** `array<string>` of tokens of `c`, empties removed. */
   def tokens(c: Column): Column =
     filter(split(c, TokenPattern), t => length(t) > 0)

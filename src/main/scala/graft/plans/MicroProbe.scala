@@ -11,7 +11,7 @@ import graft.functions.Tokens
   * counter per file as one per task). The gap between the two is the
   * table's share of a TokenCounts task.
   * Usage: runMain graft.plans.MicroProbe [file-or-dir]
-  * (default: target/bench_scratch/ref_corpus_12m, which graft.Bench
+  * (default: workload A's corpus under target/scratch, which graft.Bench
   * writes). Eight reps, one line each.
   */
 object MicroProbe {
@@ -29,7 +29,7 @@ object MicroProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val path = args.headOption.getOrElse("target/bench_scratch/ref_corpus_12m")
+    val path = args.headOption.getOrElse(graft.Bench.refCorpusPath)
     val files = graft.sources.ChunkedText.listFiles(path)
     require(files.nonEmpty,
       s"$path: no input files (graft.Bench writes the default corpus)")

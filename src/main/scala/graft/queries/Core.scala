@@ -13,10 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Core extends QueryModule {
 
-  /** DuckDB-side tokenizer equivalent to Text.tokens. */
-  private val sqlTokens =
-    "list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), t -> t <> '')"
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The reference query itself over documents.text.
     "wordcount" -> ((s, d) =>
@@ -57,26 +53,26 @@ object Core extends QueryModule {
   override def oracles: Map[String, String] = Map(
     "wordcount" -> s"""
       SELECT word, count(1) AS cnt
-      FROM (SELECT unnest($sqlTokens) AS word FROM documents)
+      FROM (SELECT unnest(${Text.sqlTokens("text")}) AS word FROM documents)
       GROUP BY word
       ORDER BY word""",
 
     "wordcount_topk" -> s"""
       SELECT word, count(1) AS cnt
-      FROM (SELECT unnest($sqlTokens) AS word FROM documents)
+      FROM (SELECT unnest(${Text.sqlTokens("text")}) AS word FROM documents)
       GROUP BY word
       ORDER BY cnt DESC, word
       LIMIT 20""",
 
     "wordcount_by_lang" -> s"""
       SELECT lang, word, count(1) AS cnt
-      FROM (SELECT lang, unnest($sqlTokens) AS word FROM documents)
+      FROM (SELECT lang, unnest(${Text.sqlTokens("text")}) AS word FROM documents)
       GROUP BY lang, word
       ORDER BY lang, word""",
 
     "wordcount_salted" -> s"""
       SELECT word, count(1) AS cnt
-      FROM (SELECT unnest($sqlTokens) AS word FROM documents)
+      FROM (SELECT unnest(${Text.sqlTokens("text")}) AS word FROM documents)
       GROUP BY word
       ORDER BY word"""
   )

@@ -962,7 +962,7 @@ object Dedup extends QueryModule {
     val docs = graft.Tables.documents(s, d)
     val index = docs.filter(col("doc_id") % 5 =!= 0)
     val newDocs = docs.filter(col("doc_id") % 5 === 0)
-    val scratch = Io.streamScratch("stream_probe", d, "documents", newDocs)
+    val scratch = Tables.copyOf(newDocs, d, "documents", "stream_probe")
     val stream = s.readStream.schema(newDocs.schema).parquet(scratch)
     // per-row scalar minhash: md5 halves per shingle (identical values
     // to ShingleHashes), k universal mins via array_min — stateless
@@ -1295,7 +1295,7 @@ object Dedup extends QueryModule {
     val nEdges = pairs.count()
     val (o, deg) = degreeOriented(pairs)
     val adjHint: DataFrame => DataFrame =
-      if (graphAdjBcast(s, nEdges)) broadcast else identity
+      if (graphAdjBcast(nEdges)) broadcast else identity
     // ADJACENCY-INTERSECTION instead of a wedge join: each node's
     // forward neighbors as one SORTED array (bounded by forward degree
     // = O(sqrt m) under the orientation, so never a fat row), then for
@@ -1356,7 +1356,7 @@ object Dedup extends QueryModule {
       .groupBy("id").agg(count(lit(1)).as("degree"))
       .localCheckpoint(true) // nodes-sized; shared by both join legs
     val degHint: DataFrame => DataFrame =
-      if (graphNodesBcast(pairs.sparkSession, deg.count())) broadcast
+      if (graphNodesBcast(deg.count())) broadcast
       else identity
     val aLower = col("da") < col("db") ||
       (col("da") === col("db") && col("a_id") < col("b_id"))
@@ -1472,29 +1472,25 @@ object Dedup extends QueryModule {
     * h-estimate tables: two longs per node) joined against an m-sized
     * edge list. A shuffle join re-exchanges the edge list every round;
     * broadcasting the node frame removes that exchange outright (guide
-    * §2.4) at ~24 B/row of build memory. The cap is a conf so cluster
-    * deployments can size it to executor memory; the default 8M rows
-    * (~200 MB built) is far past every bench corpus (x100: 500k nodes)
-    * and far under the 8 GB broadcast hard cap. Past the cap the loops
-    * keep their shuffle-join shape — a code path, not a comment.
+    * §2.4) at ~24 B/row of build memory. The cap, 8M rows (~200 MB
+    * built), is far past every bench corpus (x100: 500k nodes) and far
+    * under the 8 GB broadcast hard cap. Past the cap the loops keep
+    * their shuffle-join shape — a code path, not a comment.
     */
-  private[graft] def graphNodesBcast(s: SparkSession, nodes: Long): Boolean =
-    nodes >= 0 && nodes <= s.conf.get(
-      "spark.graft.graph.broadcastNodes", (8L * 1000 * 1000).toString).toLong
+  private[graft] def graphNodesBcast(nodes: Long): Boolean =
+    nodes >= 0 && nodes <= 8L * 1000 * 1000
 
   /** Broadcast gate for ADJACENCY frames (one row per node carrying its
     * sorted forward-neighbor array — total payload is the EDGE count,
     * ~8 B per edge plus per-row overhead). Joining these by shuffle
     * drags every array through the pair-stream exchanges (the wedge
     * volume in bytes); a broadcast keeps the arrays resident once and
-    * streams the narrow pair rows with no exchange at all. Default cap
+    * streams the narrow pair rows with no exchange at all. The cap is
     * 32M edges (~300 MB built); past it the join degrades to the
     * shuffle shape.
     */
-  private def graphAdjBcast(s: SparkSession, edges: Long): Boolean =
-    edges >= 0 && edges <= s.conf.get(
-      "spark.graft.graph.broadcastAdjEdges",
-      (32L * 1000 * 1000).toString).toLong
+  private def graphAdjBcast(edges: Long): Boolean =
+    edges >= 0 && edges <= 32L * 1000 * 1000
 
   /** Peel a (symmetrized, checkpointed) edge list to its k-core
     * fixpoint in at most `rounds` synchronous remove-all-under-k
@@ -1665,7 +1661,7 @@ object Dedup extends QueryModule {
     // the old shuffle shape). Measured x100: 1313 s -> see
     // OPTIMIZATION_r17.md.
     val cHint: DataFrame => DataFrame =
-      if (graphNodesBcast(pairs0.sparkSession, init._2("n"))) broadcast
+      if (graphNodesBcast(init._2("n"))) broadcast
       else identity
     val res = RoundLoop.run(init, rounds, sumC) { c =>
       // H per node from the CAPPED VALUE HISTOGRAM, not a raw neighbor
@@ -2158,7 +2154,7 @@ object Dedup extends QueryModule {
       .localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val adjHint: DataFrame => DataFrame =
-      if (graphAdjBcast(s, pairs.count() * 2)) broadcast else identity
+      if (graphAdjBcast(pairs.count() * 2)) broadcast else identity
     (pairs
       .join(adjHint(adj.select(col("src").as("a_id"), col("nbrs").as("na"),
         col("deg").as("da"))), "a_id")
@@ -2717,9 +2713,6 @@ object Dedup extends QueryModule {
 
   // ---------- DuckDB oracle fragments (generated to mirror Spark) --------
 
-  private val sqlToksL =
-    "list_filter(string_split_regex(lower(text), '[^A-Za-z0-9]+'), t -> t <> '')"
-
   /** trigram shingles of a token-list expression named `t` */
   private def sqlShingles(t: String): String =
     s"list_distinct(CASE WHEN len($t) >= 3 THEN " +
@@ -2734,7 +2727,7 @@ object Dedup extends QueryModule {
   private def sqlSigCtesFrom(rel: String): String = {
     val mins = (0 until K)
       .map(i => s"min(h1 + $i * h2)").mkString("[", ", ", "]")
-    s"""sh AS (SELECT doc_id, unnest(${sqlShingles(sqlToksL)}) AS s FROM $rel),
+    s"""sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s FROM $rel),
            hh AS (SELECT doc_id,
                          ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
                          ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
@@ -2752,7 +2745,7 @@ object Dedup extends QueryModule {
     * ground-truth leg of dedup_lsh_recall.
     */
   private lazy val ppjoinPairsSqlNoOrder: String = s"""
-      WITH t AS (SELECT doc_id, ${sqlShingles(sqlToksL)} AS ss FROM documents),
+      WITH t AS (SELECT doc_id, ${sqlShingles(Text.sqlTokens("lower(text)"))} AS ss FROM documents),
            sets AS (SELECT doc_id, ss, CAST(len(ss) AS BIGINT) AS n
                     FROM t WHERE len(ss) > 0),
            sh AS (SELECT doc_id, n, unnest(ss) AS s FROM sets),
@@ -2811,7 +2804,7 @@ object Dedup extends QueryModule {
       .map(i => s"min(h1 + $i * h2)").mkString("[", ", ", "]")
     s"""
       WITH tf AS (SELECT doc_id, t AS tok, count(1)::BIGINT AS tf
-                  FROM (SELECT doc_id, unnest($sqlToksL) AS t
+                  FROM (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS t
                         FROM documents) u
                   GROUP BY doc_id, t),
            el AS (SELECT doc_id, tok || '#' || cp::VARCHAR AS e
@@ -2925,7 +2918,7 @@ object Dedup extends QueryModule {
     s"""
       WITH tok AS (
         SELECT doc_id, ('0x' || substr(md5(t.tok), 1, 15))::BIGINT AS h
-        FROM (SELECT doc_id, unnest($sqlToksL) AS tok FROM documents) t),
+        FROM (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS tok FROM documents) t),
       votes AS (
         SELECT doc_id,
                $bitSums
@@ -3035,7 +3028,7 @@ object Dedup extends QueryModule {
                       'sum') AS BIGINT) AS m
              FROM cand),
            sz AS (SELECT doc_id,
-                         CAST(len(${sqlShingles(sqlToksL)}) AS BIGINT) AS n_sh
+                         CAST(len(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS BIGINT) AS n_sh
                   FROM documents)
       SELECT mm.a_id AS a_id, mm.b_id AS b_id,
              sa.n_sh AS na, sb.n_sh AS nb,
@@ -3553,7 +3546,7 @@ object Dedup extends QueryModule {
       sqlEdgeJaccard(sqlHubcapPairs, HUBCAP_MAX_DEG),
 
     "dedup_contamination" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(sqlToksL)}) AS s
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
                   FROM documents),
            hh AS (SELECT doc_id,
                          ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
@@ -3573,7 +3566,7 @@ object Dedup extends QueryModule {
     // The bloom prefilter is transparent to the RESULT (false positives
     // die in the exact join), so the oracle is the plain inner join.
     "dedup_bloom_contam" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(sqlToksL)}) AS s
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
                   FROM documents),
            hh AS (SELECT doc_id,
                          ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
@@ -3587,7 +3580,7 @@ object Dedup extends QueryModule {
       ORDER BY doc_id""",
 
     "pipe_decontaminate" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(sqlToksL)}) AS s
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
                   FROM documents),
            hh AS (SELECT doc_id,
                          ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
@@ -3606,9 +3599,9 @@ object Dedup extends QueryModule {
 
     "dedup_jaccard_pairs" -> s"""
       WITH t AS (
-        SELECT doc_id, list_distinct($sqlToksL) AS ts,
-               array_to_string(($sqlToksL)[1:3], ' ') AS blk
-        FROM documents WHERE len($sqlToksL) > 0),
+        SELECT doc_id, list_distinct(${Text.sqlTokens("lower(text)")}) AS ts,
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
       ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
       SELECT a.doc_id AS a_id, b.doc_id AS b_id,
              len(list_intersect(a.ts, b.ts))::DOUBLE
@@ -3628,8 +3621,8 @@ object Dedup extends QueryModule {
                       1, 12) AS k1,
                substr(reverse(regexp_replace(lower(text), '[^a-z0-9]+', '',
                       'g')), 1, 12) AS k2,
-               list_sort(list_distinct($sqlToksL)) AS ts
-        FROM documents WHERE len($sqlToksL) > 0),
+               list_sort(list_distinct(${Text.sqlTokens("lower(text)")})) AS ts
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
       r1 AS (SELECT doc_id, k1 AS key, substr(k1, 1, 2) AS blk,
                     row_number() OVER (PARTITION BY substr(k1, 1, 2)
                       ORDER BY k1, doc_id) AS rn FROM base),
@@ -3685,9 +3678,9 @@ object Dedup extends QueryModule {
 
     "dedup_weighted_jaccard" -> s"""
       WITH t AS (
-        SELECT doc_id, $sqlToksL AS ts,
-               array_to_string(($sqlToksL)[1:3], ' ') AS blk
-        FROM documents WHERE len($sqlToksL) > 0),
+        SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts,
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
       ok AS (SELECT blk FROM t GROUP BY blk
              HAVING count(1) BETWEEN 2 AND $MAX_BLOCK),
       tf AS (SELECT doc_id, tok, count(1) AS tf
@@ -3710,7 +3703,7 @@ object Dedup extends QueryModule {
       ORDER BY p.a_id, p.b_id""",
 
     "dedup_spans" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToksL AS ts FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
            idx AS (SELECT doc_id, ts, len(ts) AS n,
                           CASE WHEN len(ts) <= $SPAN_W THEN 1
                                ELSE (len(ts) - $SPAN_W + ${SPAN_W - 1}) // $SPAN_W + 1 END AS nch
@@ -3771,7 +3764,7 @@ object Dedup extends QueryModule {
     // stream, first occurrence by packed (doc_id, pos) key, non-first
     // occurrences expand to cut positions, cleaned stream fingerprinted
     "pipe_substr_cut" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToksL AS ts FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
            w AS (SELECT doc_id, i - 1 AS pos,
                         doc_id * ${1L << 20} + i - 1 AS k,
                         array_to_string(ts[i : i + $SUBSTR_L - 1], ' ') AS win
@@ -3903,7 +3896,7 @@ object Dedup extends QueryModule {
     "dedup_levenshtein" -> s"""
       WITH t AS (
         SELECT doc_id, text,
-               array_to_string(($sqlToksL)[1:3], ' ') AS blk
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
         FROM documents),
       ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
       SELECT a.doc_id AS a_id, b.doc_id AS b_id,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 import graft.operators.AsofJoin
 import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -37,12 +37,11 @@ object EventsTime extends QueryModule {
 
   /** The gate's events table and its micros-typed copy for file-stream
     * replay (the raw table is TIMESTAMP(NANOS), which a schema-pinned
-    * file stream can't read), written once per source fingerprint and
-    * normalised schema (see Io.streamScratch).
+    * file stream can't read).
     */
   private[graft] def replayScratch(s: SparkSession, d: String): (DataFrame, String) = {
     val batch = Tables.events(s, d)
-    (batch, Io.streamScratch("stream_replay", d, "events", batch))
+    (batch, Tables.copyOf(batch, d, "events", "stream_replay"))
   }
 
   /** A file stream over the gate's events scratch. */
@@ -101,56 +100,53 @@ object EventsTime extends QueryModule {
         "only valid for a single-batch AvailableNow drain (see scaladoc)")
   }
 
-  /** Time-contiguous multi-file copy of the replay scratch for
-    * [[streamMultiBatchReplay]]: events ntile'd into `nChunks` chunks
-    * in ts order, each written as ONE parquet file with strictly
-    * increasing modification times (4 s apart — the file source orders
-    * oldest-mtime-first, and coarse filesystems have 1 s granularity).
-    * The single-partition ordering window is scratch PREP, built once
-    * per source fingerprint — never a per-query cost.
+  /** Writes `chunks` under `dir` as `chunk-01.parquet`, ...: each
+    * frame ONE parquet file, with strictly increasing modification
+    * times (4 s apart — the file source orders oldest-mtime-first, and
+    * coarse filesystems have 1 s granularity).
     */
-  private def multiBatchScratch(batch: DataFrame, baseScratch: String,
-      nChunks: Int): String = {
-    val dir = new java.io.File(baseScratch + s"_mb$nChunks")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.orderBy(col("ts"), col("user_id"), col("event_type"))
-      val bucketed = batch.withColumn("_b", ntile(nChunks).over(w))
-      dir.mkdirs()
-      val base = System.currentTimeMillis() - 3600000L
-      (1 to nChunks).foreach { i =>
-        val tmp = new java.io.File(dir, s"_tmp_$i")
-        bucketed.filter(col("_b") === i).drop("_b")
-          .coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-        val part = Option(tmp.listFiles()).getOrElse(Array.empty)
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dst = new java.io.File(dir, f"chunk-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        // The whole multi-batch sequencing rides on these mtimes (the
-        // file source orders oldest-first): a filesystem that declines
-        // the write would replay chunks out of ts order, the watermark
-        // would drop rows, and the gate would fail nondeterministically
-        // with no diagnostic — so a declined write fails HERE, loudly.
-        require(dst.setLastModified(base + i * 4000L),
-          s"setLastModified declined on $dst — multi-batch replay " +
-            "ordering cannot be pinned on this filesystem")
-        Option(tmp.listFiles()).foreach(_.foreach(_.delete()))
-        tmp.delete()
-      }
-      // belt-and-braces: re-read the mtimes and assert they strictly
-      // increase chunk-over-chunk (coarse-granularity filesystems could
-      // round two 4 s-apart stamps together)
-      val mtimes = (1 to nChunks)
-        .map(i => new java.io.File(dir, f"chunk-$i%02d.parquet").lastModified)
-      require(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
-        s"multi-batch chunk mtimes not strictly increasing: $mtimes")
-      new java.io.File(dir, "_SUCCESS").createNewFile()
+  private def writeChunks(dir: String, chunks: Seq[DataFrame]): Unit = {
+    val base = System.currentTimeMillis() - 3600000L
+    val files = chunks.zip(LazyList.from(1)).map { case (chunk, i) =>
+      val tmp = new java.io.File(dir, s"_tmp_$i")
+      chunk.coalesce(1).write.parquet(tmp.getPath)
+      val part = Option(tmp.listFiles()).getOrElse(Array.empty)
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      val dst = new java.io.File(dir, f"chunk-$i%02d.parquet")
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      // The whole multi-batch sequencing rides on these mtimes (the
+      // file source orders oldest-first): a filesystem that declines
+      // the write would replay chunks out of ts order, the watermark
+      // would drop rows, and the gate would fail nondeterministically
+      // with no diagnostic — so a declined write fails HERE, loudly.
+      require(dst.setLastModified(base + i * 4000L),
+        s"setLastModified declined on $dst — multi-batch replay " +
+          "ordering cannot be pinned on this filesystem")
+      org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      dst
     }
-    dir.getPath
+    // belt-and-braces: re-read the mtimes and assert they strictly
+    // increase chunk-over-chunk (coarse-granularity filesystems could
+    // round two 4 s-apart stamps together)
+    val mtimes = files.map(_.lastModified)
+    require(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+      s"chunk mtimes not strictly increasing under $dir: $mtimes")
   }
+
+  /** Time-contiguous multi-file copy of the replay scratch for
+    * [[streamMultiBatchReplay]]: events ntile'd into 4 chunks in ts
+    * order, written by [[writeChunks]]. The single-partition ordering
+    * window is scratch PREP, built once per source fingerprint — never
+    * a per-query cost.
+    */
+  private def multiBatchScratch(batch: DataFrame, baseScratch: String): String =
+    Scratch.derived(baseScratch, "mb4") { dir =>
+      val w = Window.orderBy(col("ts"), col("user_id"), col("event_type"))
+      val bucketed = batch.withColumn("_b", ntile(4).over(w))
+      writeChunks(dir, (1 to 4).map(i => bucketed.filter(col("_b") === i).drop("_b")))
+    }
 
   /** MULTI-batch windowed replay under the oracle gate — the path
     * [[assertSingleDataBatch]] fences off elsewhere, exercised for
@@ -172,7 +168,7 @@ object EventsTime extends QueryModule {
     val (batch, scratch) = replayScratch(s, d)
     val stream = s.readStream.schema(batch.schema)
       .option("maxFilesPerTrigger", "1")
-      .parquet(multiBatchScratch(batch, scratch, nChunks = 4))
+      .parquet(multiBatchScratch(batch, scratch))
     Streaming.drain(hourlyCounts(stream), check = p => {
       val dataBatches = p.count(_.numInputRows > 0)
       val lastBatch = p.lastOption.fold(-1L)(_.batchId)
@@ -184,7 +180,7 @@ object EventsTime extends QueryModule {
   }
 
   /** Chunk scratch for [[streamLateDropReplay]]: the four time-monotone
-    * real-event chunks of [[multiBatchScratch]] hard-copied, plus TWO
+    * real-event chunks of [[multiBatchScratch]] rewritten, plus TWO
     * synthetic chunks replayed last (newest mtimes) planting the
     * late-arrival cases against mx = max real ts:
     *   - chunk 5: ts = mx - 20 min, 'late_probe' — out-of-order but
@@ -207,63 +203,30 @@ object EventsTime extends QueryModule {
     */
   private def lateDropScratch(s: SparkSession, batch: DataFrame,
       baseScratch: String): String = {
-    val mb = multiBatchScratch(batch, baseScratch, nChunks = 4)
-    val dir = new java.io.File(baseScratch + "_mb4late")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
-      dir.mkdirs()
-      val base = System.currentTimeMillis() - 3600000L
-      def pin(f: java.io.File, i: Int): Unit =
-        require(f.setLastModified(base + i * 4000L),
-          s"setLastModified declined on $f — multi-batch replay " +
-            "ordering cannot be pinned on this filesystem")
-      (1 to 4).foreach { i =>
-        val dst = new java.io.File(dir, f"chunk-$i%02d.parquet")
-        java.nio.file.Files.copy(
-          new java.io.File(mb, f"chunk-$i%02d.parquet").toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        pin(dst, i)
-      }
+    val mb = multiBatchScratch(batch, baseScratch)
+    Scratch.derived(baseScratch, "mb4late") { dir =>
       val mxRow = batch.agg(max("ts")).collect()(0)
       require(!mxRow.isNullAt(0),
         "lateDropScratch: events table is empty — max(ts) is NULL and " +
           "no late-arrival plant can be derived")
       val mx = mxRow.getTimestamp(0).toInstant
       def t(i: java.time.Instant) = java.sql.Timestamp.from(i)
-      def writeSyn(i: Int, rows: Seq[org.apache.spark.sql.Row]): Unit = {
-        val syn = s.createDataFrame(
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
-          batch.schema)
-        val tmp = new java.io.File(dir, s"_tmp_$i")
-        syn.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-        val part = Option(tmp.listFiles()).getOrElse(Array.empty)
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val dst = new java.io.File(dir, f"chunk-$i%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        pin(dst, i)
-        Option(tmp.listFiles()).foreach(_.foreach(_.delete()))
-        tmp.delete()
-      }
-      writeSyn(5, Seq(
-        org.apache.spark.sql.Row(9000002L,
-          t(mx.minus(java.time.Duration.ofMinutes(20))),
-          1L, "late_probe", 0.0, "{}"),
-        org.apache.spark.sql.Row(9000003L,
-          t(mx.plus(java.time.Duration.ofHours(2))),
-          1L, "wm_push", 0.0, "{}")))
-      writeSyn(6, Seq(
-        org.apache.spark.sql.Row(9000001L,
-          t(mx.minus(java.time.Duration.ofHours(3))),
-          1L, "late_probe", 0.0, "{}")))
-      val mtimes = (1 to 6)
-        .map(i => new java.io.File(dir, f"chunk-$i%02d.parquet").lastModified)
-      require(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
-        s"late-drop chunk mtimes not strictly increasing: $mtimes")
-      new java.io.File(dir, "_SUCCESS").createNewFile()
+      def rows(rs: org.apache.spark.sql.Row*): DataFrame = s.createDataFrame(
+        scala.jdk.CollectionConverters.SeqHasAsJava(rs).asJava, batch.schema)
+      writeChunks(dir, (1 to 4).map(i =>
+        s.read.schema(batch.schema).parquet(f"$mb/chunk-$i%02d.parquet")) ++ Seq(
+        rows(
+          org.apache.spark.sql.Row(9000002L,
+            t(mx.minus(java.time.Duration.ofMinutes(20))),
+            1L, "late_probe", 0.0, "{}"),
+          org.apache.spark.sql.Row(9000003L,
+            t(mx.plus(java.time.Duration.ofHours(2))),
+            1L, "wm_push", 0.0, "{}")),
+        rows(
+          org.apache.spark.sql.Row(9000001L,
+            t(mx.minus(java.time.Duration.ofHours(3))),
+            1L, "late_probe", 0.0, "{}"))))
     }
-    dir.getPath
   }
 
   /** The LATE-data path of multi-batch replay, executed for real — the
@@ -532,8 +495,8 @@ object EventsTime extends QueryModule {
   def streamUnionReplay(s: SparkSession, d: String): DataFrame = {
     val batch = Tables.events(s, d)
     def src(tag: Int) = s.readStream.schema(batch.schema)
-      .parquet(Io.streamScratch(s"stream_half$tag", d, "events",
-        batch.filter(col("event_id") % 2 === tag)))
+      .parquet(Tables.copyOf(batch.filter(col("event_id") % 2 === tag), d,
+        "events", s"stream_half$tag"))
       .withColumn("src", lit(tag.toLong))
     val unioned = src(0).unionByName(src(1))
       .withWatermark("ts", "30 minutes")

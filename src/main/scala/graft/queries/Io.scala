@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,58 +26,12 @@ object Io extends QueryModule {
   /** Exact integer cents of a 2-decimal money double (Relational's idiom). */
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")
 
-  private[queries] def scratch(s: SparkSession, name: String): String = {
-    // per-JVM scratch; safe under concurrent Verify/Bench processes
-    s"target/io_scratch/${name}_${java.lang.ProcessHandle.current().pid()}"
-  }
-
-  /** Source fingerprint (file names + sizes + mtimes) of a testdata
-    * table — the scratch-artifact discipline (see CLAUDE.md): the
-    * driver REGENERATES /root/testdata between rounds, so any derived
-    * artifact cached per-JVM (writeOnce keys, bench scratch corpora)
-    * must key on the source table's current bytes, not just its dir
-    * path, or a long-lived JVM would serve a stale artifact against a
-    * fresh oracle. Bench's scaled corpora and [[streamScratch]] key
-    * their paths through this same helper.
-    */
-  private[graft] def srcSig(sfDir: String, table: String): String = {
-    val src = new java.io.File(sfDir, s"$table.parquet")
-    val parts = (if (src.isDirectory)
-      Option(src.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
-    else Seq(src)).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-    java.lang.Long.toHexString(parts.mkString("|").hashCode.toLong & 0xffffffffL)
-  }
-
-  /** The stream-scratch rule: a file-stream source derived from testdata
-    * table `table` is `frame` written as parquet under java.io.tmpdir,
-    * at a path keyed on `name`, the SF dir's name, the table's
-    * [[srcSig]] and `frame`'s schema. Regenerated testdata or a changed
-    * normalised schema gets a fresh path, so a copy never goes stale;
-    * a complete copy (`_SUCCESS`) is reused, not rewritten per call.
-    */
-  private[graft] def streamScratch(name: String, d: String, table: String,
-      frame: DataFrame): String = {
-    val schemaSig = Integer.toHexString(frame.schema.catalogString.hashCode)
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${new java.io.File(d).getName}_${srcSig(d, table)}_$schemaSig")
-      .getPath
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      frame.write.mode("overwrite").parquet(path)
-    path
-  }
-
-  // One write per (dataset, source dir) per JVM: repeated invocations of
-  // the same query function (bench reps, explain passes) should time the
-  // read/join leg, not re-pay the scratch write. Keyed on the source dir
-  // too, so switching sf dirs within one JVM cannot reuse stale data.
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[queries] def writeOnce(path: String, d: String)(write: => Unit): Unit = {
-    val key = s"$path|$d"
-    if (!written.contains(key)) synchronized {
-      if (!written.contains(key)) { write; written.add(key) }
-    }
-  }
+  /** This JVM's copy of a layout of table `table`, written once by
+    * `write` (see [[Scratch]]): repeated invocations (bench reps,
+    * explain passes) time the read leg, not the scratch write. */
+  private def layout(name: String, d: String, table: String)(
+      write: String => Unit): String =
+    Scratch.once(name, Tables.sig(d, table), Scratch.jvm)(write)
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // CSV out + back: quoting (names/comments may carry delimiters),
@@ -85,8 +39,8 @@ object Io extends QueryModule {
     // doubles with round-trip-exact digits).
     "io_csv_roundtrip" -> ((s, d) => {
       val src = Tables.customer(s, d)
-      val path = scratch(s, "csv_customer")
-      src.write.mode("overwrite").option("header", "true").csv(path)
+      val path = layout("csv_customer", d, "customer")(
+        src.write.option("header", "true").csv(_))
       s.read.schema(src.schema).option("header", "true").csv(path)
         .orderBy("c_custkey")
     }),
@@ -102,9 +56,8 @@ object Io extends QueryModule {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
       val frames = Seq("zstd", "gzip").map { codec =>
-        val path = scratch(s, s"codec_${codec}_lineitem")
-        src.write.mode("overwrite").option("compression", codec)
-          .parquet(path)
+        val path = layout(s"codec_${codec}_lineitem", d, "lineitem")(
+          src.write.option("compression", codec).parquet(_))
         s.read.parquet(path)
           .agg(count(lit(1)).as("n_rows"),
             sum(round(col("l_quantity")).cast("long")).as("sum_qty"))
@@ -117,8 +70,7 @@ object Io extends QueryModule {
     // web-crawl / training-data pipelines).
     "io_json_roundtrip" -> ((s, d) => {
       val src = Tables.nation(s, d)
-      val path = scratch(s, "json_nation")
-      src.write.mode("overwrite").json(path)
+      val path = layout("json_nation", d, "nation")(src.write.json(_))
       s.read.schema(src.schema).json(path).orderBy("n_nationkey")
     }),
 
@@ -128,8 +80,7 @@ object Io extends QueryModule {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity",
           "l_extendedprice")
-      val path = scratch(s, "orc_lineitem")
-      src.write.mode("overwrite").orc(path)
+      val path = layout("orc_lineitem", d, "lineitem")(src.write.orc(_))
       s.read.schema(src.schema).orc(path)
         .filter(col("l_quantity") >= 30)
         .groupBy("l_returnflag")
@@ -155,11 +106,8 @@ object Io extends QueryModule {
     "io_file_stats" -> ((s, d) => {
       val src = Tables.lineitem(s, d)
         .withColumn("l_shard", (col("l_orderkey") % 8).cast("int"))
-      val path = scratch(s, "filestats_lineitem")
-      writeOnce(path, d) {
-        src.repartition(col("l_shard")).write.mode("overwrite")
-          .partitionBy("l_shard").parquet(path)
-      }
+      val path = layout("filestats_lineitem", d, "lineitem")(
+        src.repartition(col("l_shard")).write.partitionBy("l_shard").parquet(_))
       // input_file_name() is nondeterministic to Catalyst, so it must
       // materialize in a projection before any aggregate touches it
       s.read.parquet(path)
@@ -195,17 +143,12 @@ object Io extends QueryModule {
     "io_compaction" -> ((s, d) => {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
-      val frag = scratch(s, "frag_lineitem")
-      writeOnce(frag, d) {
-        src.repartition(64).write.mode("overwrite").parquet(frag)
-      }
-      val fragDf = s.read.parquet(frag)
+      val fragDf = s.read.parquet(layout("frag_lineitem", d, "lineitem")(
+        src.repartition(64).write.parquet(_)))
       val rows = fragDf.count()
       val target = ((rows + 19999L) / 20000L).max(1L).toInt
-      val comp = scratch(s, "compact_lineitem")
-      writeOnce(comp, d) {
-        fragDf.repartition(target).write.mode("overwrite").parquet(comp)
-      }
+      val comp = layout("compact_lineitem", d, "lineitem")(
+        fragDf.repartition(target).write.parquet(_))
       s.read.parquet(comp)
         .select(col("*"),
           conv(substring(md5(concat_ws("|", col("l_orderkey"),
@@ -226,10 +169,8 @@ object Io extends QueryModule {
     // scan; only 1 of 5 directories is listed/read).
     "io_partitioned_prune" -> ((s, d) => {
       val src = Tables.orders(s, d)
-      val path = scratch(s, "part_orders")
-      writeOnce(path, d) {
-        src.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-      }
+      val path = layout("part_orders", d, "orders")(
+        src.write.partitionBy("o_orderpriority").parquet(_))
       s.read.parquet(path)
         .filter(col("o_orderpriority") === "1-URGENT")
         .groupBy("o_orderstatus")
@@ -244,18 +185,17 @@ object Io extends QueryModule {
     // 100 TB corpus hits — readers must not require a rewrite of every
     // historical batch to pick up a new field.
     "io_schema_merge" -> ((s, d) => {
-      val path = scratch(s, "schema_orders")
-      writeOnce(path, d) {
+      val path = layout("schema_orders", d, "orders") { p =>
         val src = Tables.orders(s, d)
         src.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_orderstatus"),
             cents(col("o_totalprice")).as("price_cents"))
-          .write.mode("overwrite").parquet(s"$path/b1")
+          .write.parquet(s"$p/b1")
         src.filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_orderstatus"),
             cents(col("o_totalprice")).as("price_cents"),
             lit("v2").as("source_tag")) // the evolved column
-          .write.mode("overwrite").parquet(s"$path/b2")
+          .write.parquet(s"$p/b2")
       }
       s.read.option("mergeSchema", "true").parquet(s"$path/b1", s"$path/b2")
         .groupBy("o_orderstatus")
@@ -275,14 +215,16 @@ object Io extends QueryModule {
       val tag = s"${java.lang.ProcessHandle.current().pid()}_${(d.hashCode & 0x7fffffff).toHexString}"
       val liT = s"graft_li_bq_$tag"
       val ordT = s"graft_ord_bq_$tag"
-      writeOnce(s"table:$liT", d) {
+      // the session catalog, not a path, holds these: written once per
+      // (JVM, sf dir) like the layouts above
+      synchronized { if (!s.catalog.tableExists(ordT)) {
         graft.operators.Bucketing.writeBucketed(
           Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"),
           liT, "l_orderkey", 8, Some("l_orderkey"))
         graft.operators.Bucketing.writeBucketed(
           Tables.orders(s, d).select("o_orderkey", "o_orderstatus"),
           ordT, "o_orderkey", 8, Some("o_orderkey"))
-      }
+      }}
       graft.operators.Bucketing.bucketedJoin(s, liT, ordT,
           "l_orderkey", "o_orderkey")
         .groupBy("o_orderstatus")
@@ -298,14 +240,12 @@ object Io extends QueryModule {
     // only; results are independent of it, so the oracle is the same
     // filter over the raw table.
     "io_zorder_box" -> ((s, d) => {
-      val path = scratch(s, "zorder_orders")
-      writeOnce(path, d) {
+      val path = layout("zorder_orders", d, "orders")(p =>
         graft.operators.ZOrder.writeZOrdered(
           Tables.orders(s, d),
           pmod(col("o_custkey"), lit(65536L)),
           datediff(col("o_orderdate"), lit("1992-01-01")),
-          files = 16, path = path)
-      }
+          files = 16, path = p))
       s.read.parquet(path)
         .filter(col("o_custkey").between(100, 300) &&
           col("o_orderdate").between("1995-01-01", "1995-12-31"))
@@ -324,12 +264,8 @@ object Io extends QueryModule {
     // against partitioned fact tables affordable without hand-written
     // static filters. PlanShapeSpec asserts the pruning subquery.
     "q_dpp" -> ((s, d) => {
-      val path = scratch(s, "dpp_orders")
-      writeOnce(path, d) {
-        Tables.orders(s, d).write.mode("overwrite")
-          .partitionBy("o_orderpriority").parquet(path)
-      }
-      val fact = s.read.parquet(path)
+      val fact = s.read.parquet(layout("dpp_orders", d, "orders")(
+        Tables.orders(s, d).write.partitionBy("o_orderpriority").parquet(_)))
       val dim = Tables.orders(s, d)
         .select("o_orderpriority").distinct()
         .filter(col("o_orderpriority") < "3")

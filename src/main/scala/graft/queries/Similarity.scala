@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
-import graft.functions.Vectors
+import graft.{QueryModule, Scratch, Tables}
+import graft.functions.{Text, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -473,7 +473,7 @@ object Similarity extends QueryModule {
     // Size-gated like every nodes-sized broadcast (graphNodesBcast cap).
     val n = emb.count()
     val aHint: DataFrame => DataFrame =
-      if (graft.queries.Dedup.graphNodesBcast(s, n)) broadcast else identity
+      if (graft.queries.Dedup.graphNodesBcast(n)) broadcast else identity
     val t = emb
       .join(aHint(kmeansAssignFrom(emb, semanticDedupKOf(n))), "vec_id")
       .select(col("vec_id"), col("c"), col("embedding"))
@@ -499,7 +499,7 @@ object Similarity extends QueryModule {
     val n = emb.count()
     val k = semanticDedupKOf(n)
     val aHint: DataFrame => DataFrame =
-      if (graft.queries.Dedup.graphNodesBcast(s, n)) broadcast else identity
+      if (graft.queries.Dedup.graphNodesBcast(n)) broadcast else identity
     val t = emb.join(aHint(kmeansAssignFrom(emb, k)), "vec_id")
       .select(col("vec_id"), col("c"), col("embedding"))
     val l = t.select(col("c"), col("vec_id").as("a_id"),
@@ -717,21 +717,8 @@ object Similarity extends QueryModule {
     //    inline oracle stays valid for the loaded path).
     "sim_index_persist" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val base = Io.scratch(s, "ivf_index")
-      val (centB, asgB) = ivfIndexFrames(s, e)
-      // writeOnce key folds in the SOURCE fingerprint (r15 ADVICE):
-      // the driver regenerates /root/testdata between rounds, and a
-      // key of (path, sf dir) alone would let a long-lived JVM serve
-      // a stale index against a fresh oracle.
-      Io.writeOnce(base, d + "|" + Io.srcSig(d, "embeddings")) {
-        centB.write.mode("overwrite").parquet(s"$base/centroids")
-        asgB.write.mode("overwrite").parquet(s"$base/assigned")
-      }
-      // schema from the (lazy) build frames: plan-only, so the serve
-      // path never opens a footer for inference
-      ivfServe(s,
-        s.read.schema(centB.schema).parquet(s"$base/centroids"),
-        s.read.schema(asgB.schema).parquet(s"$base/assigned"),
+      val (cent, asg) = gateIvfIndex(s, e, d)
+      ivfServe(s, cent, asg,
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))
     }),
@@ -780,7 +767,7 @@ object Similarity extends QueryModule {
       val isDelta = pmod(col("vec_id"), lit(10L)) === 7
       val (cent, asgBase) = ivfIndexFrames(s, e.filter(!isDelta))
       val stream = s.readStream.schema(e.schema)
-        .parquet(Io.streamScratch("stream_ingest", d, "embeddings", e.filter(isDelta)))
+        .parquet(Tables.copyOf(e.filter(isDelta), d, "embeddings", "stream_ingest"))
       val scored = stream.join(broadcast(cent))
         .select(col("vec_id"), col("embedding"), col("c_label"),
           Vectors.cosineScaled(s, col("embedding"), col("c_v")).as("a_icos"))
@@ -814,16 +801,15 @@ object Similarity extends QueryModule {
     "sim_index_compact" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val isDead = pmod(col("vec_id"), lit(10L)) === 3
-      val root = Io.scratch(s, "ivf_index_compact")
       val (centB, asgB) = ivfIndexFrames(s, e)
-      Io.writeOnce(root, d + "|" + Io.srcSig(d, "embeddings")) {
-        centB.write.mode("overwrite").parquet(s"$root/v1/centroids")
-        asgB.write.mode("overwrite").parquet(s"$root/v1/assigned")
+      val root = jvmOnce("ivf_index_compact", d) { p =>
+        centB.write.parquet(s"$p/v1/centroids")
+        asgB.write.parquet(s"$p/v1/assigned")
         // compaction: rewrite the LOADED v1 posting lists minus the
         // tombstoned rows — no retraining, no full-corpus pass
-        s.read.schema(asgB.schema).parquet(s"$root/v1/assigned")
+        s.read.schema(asgB.schema).parquet(s"$p/v1/assigned")
           .filter(!isDead)
-          .write.mode("overwrite").parquet(s"$root/v3/assigned")
+          .write.parquet(s"$p/v3/assigned")
       }
       ivfServe(s,
         s.read.schema(centB.schema).parquet(s"$root/v1/centroids"),
@@ -879,16 +865,9 @@ object Similarity extends QueryModule {
     //    The unpartitioned window is over the |cells| post-agg frame
     //    (= nlist, constant-size — the pipe_drift 16-bucket shape).
     "pipe_embed_drift" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val base = Io.scratch(s, "ivf_index")
-      val (centB, asgB) = ivfIndexFrames(s, e)
-      // same artifact + key as sim_index_persist: whichever runs first
-      // pays the one-time build, the other serves from it
-      Io.writeOnce(base, d + "|" + Io.srcSig(d, "embeddings")) {
-        centB.write.mode("overwrite").parquet(s"$base/centroids")
-        asgB.write.mode("overwrite").parquet(s"$base/assigned")
-      }
-      val asg = s.read.schema(asgB.schema).parquet(s"$base/assigned")
+      // sim_index_persist's artifact: whichever runs first pays the
+      // one-time build, the other serves from it
+      val (_, asg) = gateIvfIndex(s, Tables.embeddings(s, d), d)
       psiOverCells(asg.select(col("c_label"),
         pmod(col("vec_id"), lit(2L)).as("half")))
     }),
@@ -924,19 +903,12 @@ object Similarity extends QueryModule {
     //    proportional to the probed cells' occupancy, so a cell at
     //    balance 4000 means nprobe hits pay 4x the uniform estimate;
     //    skew here is what drives IVF re-training decisions). Reads
-    //    the SAME persisted artifact sim_index_persist serves (shared
-    //    writeOnce key — whichever runs first pays the build); the
+    //    the SAME persisted artifact sim_index_persist serves (one
+    //    artifact — whichever runs first pays the build); the
     //    windows run over the |cells| post-agg frame (= nlist,
     //    constant-size).
     "sim_index_stats" -> ((s, d) => {
-      val e = Tables.embeddings(s, d)
-      val base = Io.scratch(s, "ivf_index")
-      val (centB, asgB) = ivfIndexFrames(s, e)
-      Io.writeOnce(base, d + "|" + Io.srcSig(d, "embeddings")) {
-        centB.write.mode("overwrite").parquet(s"$base/centroids")
-        asgB.write.mode("overwrite").parquet(s"$base/assigned")
-      }
-      val asg = s.read.schema(asgB.schema).parquet(s"$base/assigned")
+      val (_, asg) = gateIvfIndex(s, Tables.embeddings(s, d), d)
       val w = org.apache.spark.sql.expressions.Window
         .rowsBetween(Long.MinValue, Long.MaxValue)
       asg.groupBy("c_label").agg(count(lit(1)).as("n_vecs"))
@@ -956,13 +928,10 @@ object Similarity extends QueryModule {
     //    pays only the ADC scan + PQ_R exact re-rank.
     "sim_pq_persist" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val base = Io.scratch(s, "pq_index")
-      // source-fingerprinted key — same stale-artifact guard as
-      // sim_index_persist above
-      Io.writeOnce(base, d + "|" + Io.srcSig(d, "embeddings")) {
+      val base = jvmOnce("pq_index", d) { p =>
         val (codes, books) = pqIndex(e)
-        codes.write.mode("overwrite").parquet(s"$base/codes")
-        books.write.mode("overwrite").parquet(s"$base/books")
+        codes.write.parquet(s"$p/codes")
+        books.write.parquet(s"$p/books")
         org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(codes)
         org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(books)
       }
@@ -977,25 +946,23 @@ object Similarity extends QueryModule {
     * new batch assigned against the LOADED frozen v1 centroids) and
     * return (root, centroid schema, assignment schema). Shared by
     * sim_index_append (serves v1 ∪ v2) and pipe_embed_drift_v2
-    * (compares v1 vs v2 occupancy) — one writeOnce key, so whichever
-    * runs first pays the build. Keyed by the SOURCE fingerprint: the
-    * driver regenerates testdata between rounds.
+    * (compares v1 vs v2 occupancy) — one artifact, so whichever runs
+    * first pays the build.
     */
   private def ivfAppendArtifact(s: SparkSession, d: String): (String,
       org.apache.spark.sql.types.StructType,
       org.apache.spark.sql.types.StructType) = {
     val e = Tables.embeddings(s, d)
     val isDelta = pmod(col("vec_id"), lit(10L)) === 7
-    val root = Io.scratch(s, "ivf_index_versions")
     val (centB, asgB) = ivfIndexFrames(s, e.filter(!isDelta))
-    Io.writeOnce(root, d + "|" + Io.srcSig(d, "embeddings")) {
-      centB.write.mode("overwrite").parquet(s"$root/v1/centroids")
-      asgB.write.mode("overwrite").parquet(s"$root/v1/assigned")
+    val root = jvmOnce("ivf_index_versions", d) { p =>
+      centB.write.parquet(s"$p/v1/centroids")
+      asgB.write.parquet(s"$p/v1/assigned")
       // the append pass itself: assign the new batch against the
       // LOADED v1 centroids — the only index input is the artifact
       ivfAssign(s, e.filter(isDelta),
-          s.read.schema(centB.schema).parquet(s"$root/v1/centroids"))
-        .write.mode("overwrite").parquet(s"$root/v2/assigned_delta")
+          s.read.schema(centB.schema).parquet(s"$p/v1/centroids"))
+        .write.parquet(s"$p/v2/assigned_delta")
     }
     (root, centB.schema, asgB.schema)
   }
@@ -1151,6 +1118,36 @@ object Similarity extends QueryModule {
         .select(col("vec_id").as("q_id"), col("embedding").as("q_v")),
       topK)
   }
+
+  /** This JVM's index artifact `name` over the gate's embeddings,
+    * trained once by `write` (see [[Scratch]]): keyed by the SOURCE
+    * fingerprint, since the testdata is regenerated between runs and
+    * a long-lived JVM must not serve a stale index against it.
+    */
+  private def jvmOnce(name: String, d: String)(write: String => Unit): String =
+    Scratch.once(name, Tables.sig(d, "embeddings"), Scratch.jvm)(write)
+
+  /** [[ivfIndexFrames]] of `e` persisted once into the artifact that
+    * `publish` fills, read back as (centroids, assigned) with the build
+    * frames' schemas: plan-only, so the serve path never opens a footer
+    * for inference and never retrains. */
+  def ivfIndexArtifact(s: SparkSession, e: DataFrame)(
+      publish: (String => Unit) => String): (DataFrame, DataFrame) = {
+    val (cent, asg) = ivfIndexFrames(s, e)
+    val p = publish { tmp =>
+      cent.write.parquet(s"$tmp/centroids")
+      asg.write.parquet(s"$tmp/assigned")
+    }
+    (s.read.schema(cent.schema).parquet(s"$p/centroids"),
+      s.read.schema(asg.schema).parquet(s"$p/assigned"))
+  }
+
+  /** The IVF artifact over the gate's embeddings `e` (read from `d`)
+    * that sim_index_persist, pipe_embed_drift and sim_index_stats
+    * share. */
+  private def gateIvfIndex(s: SparkSession, e: DataFrame,
+      d: String): (DataFrame, DataFrame) =
+    ivfIndexArtifact(s, e)(jvmOnce("ivf_index", d))
 
   /** The IVF index ARTIFACTS, as two lazy frames:
     * `centroids(c_label, c_v)` and `assigned(vec_id, embedding,
@@ -1348,15 +1345,13 @@ object Similarity extends QueryModule {
            ${kmeansRoundSql(2)}"""
 
   /** DuckDB mirrors of the sparse-text fragments (documents table). */
-  private val sqlToksLowerDoc =
-    "list_filter(string_split_regex(lower(text), '[^A-Za-z0-9]+'), t -> t <> '')"
   private def sqlNgrams3(t: String): String =
     s"CASE WHEN len($t) >= 3 THEN list_transform(range(1, len($t) - 1), " +
       s"i -> $t[i] || ' ' || $t[i+1] || ' ' || $t[i+2]) ELSE [] END"
 
   override def oracles: Map[String, String] = Map(
     "sim_sparse_pairs" -> s"""
-      WITH tok AS (SELECT doc_id, unnest(${sqlNgrams3(sqlToksLowerDoc)}) AS t
+      WITH tok AS (SELECT doc_id, unnest(${sqlNgrams3(Text.sqlTokens("lower(text)"))}) AS t
                    FROM documents),
            terms AS (SELECT doc_id, t, count(1) AS tf
                      FROM tok GROUP BY doc_id, t),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -277,7 +277,8 @@ object TextAnalysis extends QueryModule {
     "rank BIGINT, l STRING, r STRING, cnt BIGINT"
 
   /** Ensure the persisted merge-table artifact exists (one-time train
-    * inside writeOnce, keyed by the documents source fingerprint) and
+    * into a per-JVM [[Scratch]] artifact keyed by the documents source
+    * fingerprint) and
     * return the LOADED merges in rank order — the only tokenizer input
     * of every serve-path consumer (txt_bpe_persist, txt_bpe_stats):
     * an explicit-schema read (no inference footer job) + one collect
@@ -285,13 +286,13 @@ object TextAnalysis extends QueryModule {
     */
   private def loadBpeMerges(s: SparkSession,
       d: String): Seq[(Long, String, String, Long)] = {
-    val base = Io.scratch(s, "bpe_merges")
-    Io.writeOnce(base, d + "|" + Io.srcSig(d, "documents")) {
+    val base = Scratch.once("bpe_merges", Tables.sig(d, "documents"),
+        Scratch.jvm) { p =>
       val words = bpeWords(s, d).localCheckpoint()
       val sp = s
       import sp.implicits._
       bpeTrain(words, BPE_MERGES).toDF("rank", "l", "r", "cnt")
-        .coalesce(1).write.mode("overwrite").parquet(base)
+        .coalesce(1).write.parquet(p)
       org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(words)
     }
     s.read.schema(BPE_MERGES_DDL).parquet(base)
@@ -423,7 +424,7 @@ object TextAnalysis extends QueryModule {
     //    parquet artifact, apply it many times (r16 verdict #2) --------
     //    The sim_index_persist discipline on the repo's most expensive
     //    trained artifact: bpeTrain's per-round collect+checkpoint
-    //    chain runs only inside the one-time writeOnce (keyed by the
+    //    chain runs only inside the one-time artifact write (keyed by the
     //    SOURCE fingerprint — the driver regenerates testdata between
     //    rounds); every later invocation LOADS the nMerges-row merge
     //    table (one tiny explicit-schema parquet read — the only job
@@ -1432,7 +1433,7 @@ object TextAnalysis extends QueryModule {
     */
   private def bm25CtesSql: String = s"""tf AS (
         SELECT doc_id, term, count(1)::BIGINT AS tf
-        FROM (SELECT doc_id, unnest($sqlToks) AS term FROM documents)
+        FROM (SELECT doc_id, unnest(${Text.sqlTokens("text")}) AS term FROM documents)
         GROUP BY doc_id, term),
       df AS (SELECT term, count(1)::BIGINT AS df FROM tf GROUP BY term),
       dl AS (SELECT doc_id, sum(tf)::BIGINT AS dl FROM tf GROUP BY doc_id),
@@ -1756,11 +1757,6 @@ object TextAnalysis extends QueryModule {
       .orderBy("doc_id")
   }
 
-  private val sqlToks =
-    "list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), t -> t <> '')"
-  private val sqlToksLower =
-    "list_filter(string_split_regex(lower(text), '[^A-Za-z0-9]+'), t -> t <> '')"
-
   /** DuckDB mirror of [[bpeTrain]]: the word-frequency CTE, the char
     * segmentation, then one (pairs -> argmax -> replace) CTE chain per
     * merge round, unrolled [[BPE_MERGES]] times (the kmeansRoundSql
@@ -1772,7 +1768,7 @@ object TextAnalysis extends QueryModule {
     val head = s"""
       WITH wf AS (
         SELECT w, count(1)::BIGINT AS freq
-        FROM (SELECT unnest($sqlToksLower) AS w FROM documents)
+        FROM (SELECT unnest(${Text.sqlTokens("lower(text)")}) AS w FROM documents)
         GROUP BY w),
       s0 AS (
         SELECT w, freq,
@@ -1809,7 +1805,7 @@ object TextAnalysis extends QueryModule {
     * hash base 31 mod 1e9+7). Shared with Dedup's winnow-pair oracle.
     */
   val sqlWinnowFps: String = s"""
-      (WITH wt AS (SELECT doc_id, $sqlToksLower AS ts FROM documents),
+      (WITH wt AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
        wg AS (SELECT doc_id,
                      list_transform(range(1, len(ts) - 1),
                        i -> list_reduce(
@@ -1835,7 +1831,7 @@ object TextAnalysis extends QueryModule {
       ws AS (SELECT w,
                     (length(seg) - length(replace(seg, '|', ''))) // 2 AS n_sub
              FROM s$BPE_MERGES),
-      tok AS (SELECT doc_id, unnest($sqlToksLower) AS w FROM documents),
+      tok AS (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS w FROM documents),
       agg AS (SELECT t.doc_id, count(1)::BIGINT AS n_words,
                      sum(ws.n_sub)::BIGINT AS n_bpe
               FROM tok t JOIN ws USING (w)
@@ -1848,7 +1844,7 @@ object TextAnalysis extends QueryModule {
 
   override def oracles: Map[String, String] = Map(
     "txt_chunk" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToks AS ts FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM documents),
            idx AS (SELECT doc_id, ts, len(ts) AS n,
                           CASE WHEN len(ts) <= 64 THEN 1
                                ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
@@ -1867,29 +1863,29 @@ object TextAnalysis extends QueryModule {
 
     "txt_pack" -> s"""
       SELECT doc_id, n_tok, CAST(cum - n_tok AS BIGINT) // 1000 AS pack_id
-      FROM (SELECT doc_id, len($sqlToks) AS n_tok,
-                   sum(len($sqlToks)) OVER (ORDER BY doc_id
+      FROM (SELECT doc_id, len(${Text.sqlTokens("text")}) AS n_tok,
+                   sum(len(${Text.sqlTokens("text")})) OVER (ORDER BY doc_id
                      ROWS UNBOUNDED PRECEDING) AS cum
             FROM documents)
       ORDER BY doc_id""",
 
     "txt_token_stats" -> s"""
       SELECT doc_id,
-             len($sqlToks) AS n_tokens,
-             len(list_distinct($sqlToks)) AS n_distinct,
+             len(${Text.sqlTokens("text")}) AS n_tokens,
+             len(list_distinct(${Text.sqlTokens("text")})) AS n_distinct,
              length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS n_alnum_chars,
-             CASE WHEN len($sqlToks) = 0 THEN NULL
+             CASE WHEN len(${Text.sqlTokens("text")}) = 0 THEN NULL
                   ELSE length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))::DOUBLE
-                         / len($sqlToks) END AS avg_token_len
+                         / len(${Text.sqlTokens("text")}) END AS avg_token_len
       FROM documents
       ORDER BY doc_id""",
 
     "txt_quality" -> s"""
       WITH t AS (
         SELECT doc_id,
-               len($sqlToks) AS n_tokens,
-               len(list_filter($sqlToks, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct($sqlToks)) AS n_dist
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
         FROM documents)
       SELECT doc_id, n_tokens,
              CASE WHEN n_tokens = 0 THEN NULL
@@ -1907,11 +1903,11 @@ object TextAnalysis extends QueryModule {
     "txt_lang_id" -> {
       val hitCols = langProfiles.map { case (lg, ws) =>
         val set = ws.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter($sqlToksLower, t -> t IN ($set))) AS n_$lg"
+        s"len(list_filter(${Text.sqlTokens("lower(text)")}, t -> t IN ($set))) AS n_$lg"
       }.mkString(",\n               ")
       s"""
       WITH t AS (
-        SELECT doc_id, lang, len($sqlToksLower) AS n_tokens,
+        SELECT doc_id, lang, len(${Text.sqlTokens("lower(text)")}) AS n_tokens,
                $hitCols
         FROM documents)
       SELECT doc_id, lang,
@@ -1928,10 +1924,10 @@ object TextAnalysis extends QueryModule {
 
     "txt_token_estimate" -> s"""
       SELECT doc_id,
-             len($sqlToks) AS n_words,
+             len(${Text.sqlTokens("text")}) AS n_words,
              length(text) AS n_chars,
              ceil(length(text)::DOUBLE / 4)::BIGINT AS est_bpe_chars4,
-             len($sqlToks) + floor(length(text)::DOUBLE / 8)::BIGINT AS est_bpe_blend
+             len(${Text.sqlTokens("text")}) + floor(length(text)::DOUBLE / 8)::BIGINT AS est_bpe_blend
       FROM documents
       ORDER BY doc_id""",
 
@@ -1974,7 +1970,7 @@ object TextAnalysis extends QueryModule {
       SELECT doc_id,
              list_reduce(
                list_prepend(0::BIGINT,
-                 list_transform(string_split(array_to_string($sqlToksLower, ' '), ''),
+                 list_transform(string_split(array_to_string(${Text.sqlTokens("lower(text)")}, ' '), ''),
                                 c -> ord(c)::BIGINT)),
                (a, b) -> (a * 31 + b) % 1000000007) AS rhash
       FROM documents
@@ -1987,7 +1983,7 @@ object TextAnalysis extends QueryModule {
       ORDER BY doc_id""",
 
     "txt_repetition" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToksLower AS toks FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS toks FROM documents),
       g AS (SELECT doc_id,
                    unnest(list_transform(range(1, len(toks) - 1),
                      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
@@ -2065,9 +2061,9 @@ object TextAnalysis extends QueryModule {
     "pipe_curation" -> s"""
       WITH t AS (
         SELECT doc_id, lang, text,
-               len($sqlToks) AS n_tokens,
-               len(list_filter($sqlToks, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct($sqlToks)) AS n_dist
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
         FROM documents),
       scored AS (
         SELECT doc_id, lang, text, n_tokens,
@@ -2116,7 +2112,7 @@ object TextAnalysis extends QueryModule {
     // islands differ by a constant per doc (1-based vs 0-based
     // positions) — grouping keys, not values, so the phrases agree
     "txt_rake" -> s"""
-      WITH d AS (SELECT doc_id, $sqlToksLower AS ts FROM documents),
+      WITH d AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
            pos AS (SELECT doc_id, ts,
                           unnest(range(1, len(ts) + 1)) AS i FROM d),
            tok AS (SELECT doc_id, i, ts[i] AS w FROM pos),
@@ -2146,7 +2142,7 @@ object TextAnalysis extends QueryModule {
       LIMIT 25""",
 
     "txt_pmi" -> s"""
-      WITH t AS (SELECT $sqlToks AS toks FROM documents),
+      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
            b AS (SELECT unnest(list_transform(range(1, len(toks)),
                         i -> toks[i] || ' ' || toks[i + 1])) AS bg
                  FROM t WHERE len(toks) >= 2),
@@ -2181,7 +2177,7 @@ object TextAnalysis extends QueryModule {
       LIMIT 50""",
 
     "txt_bigrams" -> s"""
-      WITH t AS (SELECT $sqlToks AS toks FROM documents),
+      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
            b AS (SELECT unnest(list_transform(range(1, len(toks)),
                         i -> toks[i] || ' ' || toks[i + 1])) AS bigram
                  FROM t WHERE len(toks) >= 2)
@@ -2192,7 +2188,7 @@ object TextAnalysis extends QueryModule {
       LIMIT 30""",
 
     "txt_heavy_hitters" -> s"""
-      WITH w AS (SELECT unnest($sqlToksLower) AS word FROM documents),
+      WITH w AS (SELECT unnest(${Text.sqlTokens("lower(text)")}) AS word FROM documents),
            c AS (SELECT word, count(1) AS cnt FROM w GROUP BY word),
            t AS (SELECT sum(cnt) AS n FROM c)
       SELECT word, cnt
@@ -2203,9 +2199,9 @@ object TextAnalysis extends QueryModule {
     "pipe_training_batches" -> s"""
       WITH t AS (
         SELECT doc_id, text,
-               len($sqlToks) AS n_tokens,
-               len(list_filter($sqlToks, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct($sqlToks)) AS n_dist
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
         FROM documents),
       scored AS (
         SELECT doc_id, text,
@@ -2222,7 +2218,7 @@ object TextAnalysis extends QueryModule {
                    ORDER BY doc_id) AS rn
           FROM scored WHERE q >= 0.30)
         WHERE rn = 1),
-      ktoks AS (SELECT doc_id, $sqlToks AS ts FROM kept),
+      ktoks AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM kept),
       idx AS (SELECT doc_id, len(ts) AS n,
                      CASE WHEN len(ts) <= 64 THEN 1
                           ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
@@ -2245,7 +2241,7 @@ object TextAnalysis extends QueryModule {
       ORDER BY pack_id""",
 
     "txt_dup_ngrams" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
            g AS (SELECT doc_id,
                         unnest(list_transform(range(1, len(toks) - 6),
                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -2263,7 +2259,7 @@ object TextAnalysis extends QueryModule {
     "txt_tfidf" -> s"""
       WITH tf AS (
         SELECT doc_id, term, count(1) AS tf
-        FROM (SELECT doc_id, unnest($sqlToks) AS term FROM documents)
+        FROM (SELECT doc_id, unnest(${Text.sqlTokens("text")}) AS term FROM documents)
         GROUP BY doc_id, term),
       df AS (SELECT term, count(1) AS df FROM tf GROUP BY term),
       n AS (SELECT count(1)::DOUBLE AS n_docs FROM documents),
@@ -2334,7 +2330,7 @@ object TextAnalysis extends QueryModule {
     // Novelty over raw grams (the Spark side's xxhash64 key is an
     // internal fixed-width shuffle key, transparent to the result).
     "txt_ngram_novelty" -> s"""
-      WITH t AS (SELECT doc_id, $sqlToks AS toks FROM documents),
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
            g0 AS (SELECT doc_id,
                          unnest(list_transform(range(1, len(toks) - 6),
                            i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
@@ -2410,7 +2406,7 @@ object TextAnalysis extends QueryModule {
       s"""
       WITH lab AS (SELECT doc_id, gopher_pass FROM $sqlGopherFlags),
            tf AS (SELECT doc_id, w, count(1)::BIGINT AS tf
-                  FROM (SELECT doc_id, unnest($sqlToksLower) AS w
+                  FROM (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS w
                         FROM documents)
                   GROUP BY doc_id, w),
            byc AS (SELECT w,
@@ -2688,9 +2684,9 @@ object TextAnalysis extends QueryModule {
 
     "pipe_mix_weights" -> s"""
       WITH ps AS (SELECT source, count(1) AS n_docs,
-                         CAST(sum(len($sqlToks)) AS BIGINT) AS n_tokens
+                         CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) AS n_tokens
                   FROM documents GROUP BY source
-                  HAVING CAST(sum(len($sqlToks)) AS BIGINT) > 0),
+                  HAVING CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) > 0),
            t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
                         count(1) AS n_sources
                  FROM ps)
@@ -2772,12 +2768,12 @@ object TextAnalysis extends QueryModule {
   private def sqlGopherFlags: String = s"""
       (WITH gt AS (
         SELECT doc_id,
-               len($sqlToks) AS n_tokens,
-               len(list_filter($sqlToks,
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")},
                  w -> regexp_matches(w, '[A-Za-z]'))) AS n_alpha_words,
-               coalesce(list_aggregate(list_transform($sqlToks,
+               coalesce(list_aggregate(list_transform(${Text.sqlTokens("text")},
                  w -> length(w)), 'sum'), 0)::BIGINT AS word_chars,
-               len(list_filter($sqlToks, t -> t IN ($stopwordsSql))) AS n_stop
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop
         FROM documents)
       SELECT doc_id, n_tokens, word_chars, n_alpha_words, n_stop,
              (n_tokens BETWEEN 50 AND 100000) AS r_wordcount,
@@ -2795,14 +2791,14 @@ object TextAnalysis extends QueryModule {
     * avg_micronat) — the mirror of [[lmScoreFrom]].
     */
   private def sqlLmScores: String = s"""
-      (WITH lt AS (SELECT doc_id, $sqlToksLower AS ts FROM documents),
+      (WITH lt AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
            lbi AS (SELECT doc_id,
                           unnest(list_transform(range(1, len(ts)),
                             i -> ts[i] || ' ' || ts[i+1])) AS bg
                    FROM lt WHERE len(ts) >= 2),
            lc12 AS (SELECT bg, count(1) AS c12 FROM lbi GROUP BY bg),
            luni AS (SELECT w, count(1) AS c1
-                    FROM (SELECT unnest($sqlToksLower) AS w FROM documents)
+                    FROM (SELECT unnest(${Text.sqlTokens("lower(text)")}) AS w FROM documents)
                     GROUP BY w),
            lsc0 AS (SELECT doc_id, c1::DOUBLE AS xa, c12::DOUBLE AS xb
                     FROM lbi

@@ -26,7 +26,7 @@ class BpePersistSpec extends AnyFunSuite {
   }
 
   test("serving the persisted tokenizer runs zero training jobs") {
-    // ensure the artifact exists (writeOnce keys per JVM + source sig)
+    // ensure the artifact exists (Scratch.once keys per JVM + source sig)
     SparkEntry.queries("txt_bpe_persist")(spark, TestSpark.sf0001)
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val counter = new org.apache.spark.scheduler.SparkListener {

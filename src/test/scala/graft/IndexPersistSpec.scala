@@ -76,8 +76,8 @@ class IndexPersistSpec extends AnyFunSuite {
   }
 
   test("serve plans launch ZERO training jobs once the artifact exists") {
-    // ensure the artifacts exist (writeOnce is keyed per JVM + sf dir,
-    // so these calls build at most once even across the suite)
+    // ensure the artifacts exist (Scratch.once keys them per JVM + source
+    // sig, so these calls build at most once even across the suite)
     SparkEntry.queries("sim_index_persist")(spark, TestSpark.sf0001)
     SparkEntry.queries("sim_pq_persist")(spark, TestSpark.sf0001)
     SparkEntry.queries("sim_index_append")(spark, TestSpark.sf0001)

@@ -3,20 +3,22 @@ package graft
 import java.nio.file.Files
 
 import graft.sources.Sources
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip every supported format and confirm values + schema
   * survive, including partitioned parquet layout.
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
+  private val root = Files.createTempDirectory("graft_sources_spec")
 
-  private def scratch(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_src_$name")
-    d.toFile.deleteOnExit()
-    s"$d/out"
-  }
+  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
+
+  private def scratch(name: String): String =
+    s"${Files.createTempDirectory(root, s"graft_src_$name")}/out"
 
   private def sample = Tables.customer(spark, TestSpark.sf0001)
     .select(col("c_custkey"), col("c_name"), col("c_nationkey"), col("c_acctbal"))

@@ -3,16 +3,22 @@ package graft
 import java.sql.Timestamp
 
 import graft.streaming.Streaming
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structured Streaming smoke: each transform runs as a real streaming
   * query over a MemoryStream, with watermark/late-data behavior checked
   * across multiple micro-batches.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
+  // every input/state/output dir of the suite lives under this root
+  private val root = java.nio.file.Files.createTempDirectory("graft_streaming_spec")
+
+  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
@@ -250,8 +256,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("events parquet replayed as a file-source stream") {
     import java.nio.file.{Files, Paths}
-    val tmp = Files.createTempDirectory("graft_stream_in")
-    tmp.toFile.deleteOnExit()
+    val tmp = Files.createTempDirectory(root, "graft_stream_in")
     Files.copy(Paths.get(s"${TestSpark.sf0001}/events.parquet"),
       tmp.resolve("events.parquet"))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -455,7 +460,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("Trigger.AvailableNow drains a file source then stops on its own") {
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_avnow_in").toString
+    val in = Files.createTempDirectory(root, "graft_avnow_in").toString
     Tables.events(spark, TestSpark.sf0001).write.mode("overwrite").parquet(in)
     val stream = spark.readStream
       .schema(Tables.events(spark, TestSpark.sf0001).schema)
@@ -483,9 +488,9 @@ class StreamingSpec extends AnyFunSuite {
     // events — and the final result must equal the one-shot batch
     // aggregation of the whole input.
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_ckpt_in").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt_state").toString
-    val out = Files.createTempDirectory("graft_ckpt_out").toString
+    val in = Files.createTempDirectory(root, "graft_ckpt_in").toString
+    val ckpt = Files.createTempDirectory(root, "graft_ckpt_state").toString
+    val out = Files.createTempDirectory(root, "graft_ckpt_out").toString
     val events = Tables.events(spark, TestSpark.sf0001)
     // time-RANGED files written SEQUENTIALLY (oldest range first): the
     // file source replays files in modification-time order, so arrival
@@ -600,7 +605,7 @@ class StreamingSpec extends AnyFunSuite {
     // query runs. Same events, same session-window aggregation, both
     // providers.
     import java.nio.file.Files
-    val in = Files.createTempDirectory("graft_rocks_in").toString
+    val in = Files.createTempDirectory(root, "graft_rocks_in").toString
     val events = Tables.events(spark, TestSpark.sf0001)
     events.write.mode("overwrite").parquet(in)
     def run(): Array[(Long, Long, Long, Long)] = {
@@ -676,7 +681,7 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch sink writes idempotently by batch id") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("graft_febatch").toString
+    val tmp = java.nio.file.Files.createTempDirectory(root, "graft_febatch").toString
     val in = MemoryStream[String]
     val q = Streaming.sinkForeachBatch(in.toDF()) { (batch, id) =>
       // idempotent location derived from batchId: a replayed batch

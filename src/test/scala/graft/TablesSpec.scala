@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `Tables.normalizeTs` must yield identical `TimestampType` epoch
@@ -21,8 +23,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * The generator has changed encoding twice across rounds; this pins the
   * loader against a third drift.
   */
-class TablesSpec extends AnyFunSuite {
+class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
+  private val root = java.nio.file.Files.createTempDirectory("graft_tables_spec")
+
+  override def afterAll(): Unit = FileUtils.deleteDirectory(root.toFile)
 
   // sub-millisecond micros on purpose: truncation bugs show up here
   private val epochMicros = Seq(
@@ -30,11 +35,8 @@ class TablesSpec extends AnyFunSuite {
     1704067200123456L, // 2024-01-01 00:00:00.123456
     1704070800999999L) // 2024-01-01 01:00:00.999999
 
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_tables_$tag")
-    d.toFile.deleteOnExit()
-    d.toString
-  }
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(root, s"graft_tables_$tag").toString
 
   private def readNormalized(path: String): DataFrame =
     Tables.normalizeTs(spark.read.parquet(path))
