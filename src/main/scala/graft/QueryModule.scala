@@ -2,18 +2,19 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** A named group of driver-checkable queries.
-  *
-  * `queries` maps name -> (session, sfDir) -> result DataFrame.
-  * `oracles` maps the same names to equivalent DuckDB SQL over the same
-  * parquet tables; names absent from `oracles` get the driver's weaker
-  * rows-only check (reserved for ops not expressible in ANSI SQL).
+/** One oracle-checked query: `run` builds its result from a session and
+  * an sf dir, and `oracle` is equivalent DuckDB SQL over the same parquet
+  * tables, with the same column aliases (the compare, `tools/check.py`,
+  * sorts columns by name).
   *
   * Determinism contract: every query ends in a total ORDER BY (all ties
   * broken by a unique key) and every floating aggregate is rounded, so
-  * the driver's row/hash compare is stable across engines and runs.
+  * the row/hash compare is stable across engines and runs.
   */
+final case class Query(name: String, run: (SparkSession, String) => DataFrame,
+    oracle: String)
+
+/** A named group of queries, built on each access. */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracles: Map[String, String]
+  def rows: Seq[Query]
 }

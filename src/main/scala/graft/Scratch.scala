@@ -24,7 +24,10 @@ import org.apache.commons.io.FileUtils
   * Two lifetimes: [[shared]] artifacts outlive the JVM and are reused by
   * every later one (corpora, stream copies); [[jvm]] artifacts (whatever
   * a registry query lays out or trains) live in a per-JVM root, so a
-  * rebuilt engine never serves an index older code trained. A shutdown
+  * rebuilt engine never serves an index older code trained. State a
+  * query changes between its own runs (a stream checkpoint and sink, a
+  * bucketed table) is not an artifact: it lives directly in [[jvm]],
+  * without [[once]], so its absolute paths never outlive it. A shutdown
   * hook removes that root; a JVM killed before its hook ran leaves it
   * behind, and the next JVM sweeps every root, and every temp sibling,
   * whose pid is no longer alive.

@@ -75,16 +75,6 @@ object DedupOps {
       .select(col(idCol),
         array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
 
-  /** Estimated Jaccard from two k-signatures: matching fraction.
-    * Unrolled to k element_at comparisons — Spark's array HOFs
-    * (aggregate/zip_with) are CodegenFallback, and on millions of
-    * candidate pairs the interpreted fold dominated the profile; the
-    * unrolled form stays inside whole-stage codegen.
-    */
-  def estJaccard(a: Column, b: Column, k: Int): Column =
-    (1 to k).map(i => when(element_at(a, i) === element_at(b, i), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / k.toDouble
-
   /** Exact Jaccard similarity of two pre-deduplicated string arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /

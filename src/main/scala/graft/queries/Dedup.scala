@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import graft.functions.Text
 import graft.operators.DedupOps
 import graft.plans.{LocalUnionFind, RoundLoop}
@@ -2174,9 +2174,9 @@ object Dedup extends QueryModule {
       RoundLoop.releaser(pairs, adj))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // -- exact dedup over raw text (with injected duplicates) -------------
-    "dedup_exact" -> ((s, d) => {
+    Query("dedup_exact", (s, d) => {
       val docs = Tables.documents(s, d)
         .select(dupGuardedId.as("doc_id"), col("text"))
       // Inject one duplicate per 10 docs so the op has real work to do.
@@ -2186,17 +2186,32 @@ object Dedup extends QueryModule {
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_copies"))
         .orderBy("text_hash")
-    }),
+    },
+      """
+      WITH all_docs AS (
+        SELECT doc_id, text FROM documents
+        UNION ALL
+        SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0)
+      SELECT md5(text) AS text_hash, min(doc_id) AS keeper, count(1) AS n_copies
+      FROM all_docs
+      GROUP BY 1
+      ORDER BY text_hash"""),
 
     // -- exact dedup on normalized content fingerprint --------------------
-    "dedup_fingerprint" -> ((s, d) =>
+    Query("dedup_fingerprint", (s, d) =>
       Tables.documents(s, d)
         .groupBy(DedupOps.fingerprint(col("text")).as("fingerprint"))
         .agg(min("doc_id").as("keeper"), count(lit(1)).as("n_copies"))
-        .orderBy("fingerprint")),
+        .orderBy("fingerprint"),
+      s"""
+      SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint,
+             min(doc_id) AS keeper, count(1) AS n_copies
+      FROM documents
+      GROUP BY 1
+      ORDER BY fingerprint"""),
 
     // -- minhash signatures (spot-checkable scalar projection) ------------
-    "dedup_minhash_sig" -> ((s, d) =>
+    Query("dedup_minhash_sig", (s, d) =>
       DedupOps.minhashSignatures(
         Tables.documents(s, d), "doc_id", col("text"), 3, K)
         .select(
@@ -2204,14 +2219,21 @@ object Dedup extends QueryModule {
           element_at(col("sig"), 1).as("mh0"),
           md5(array_join(col("sig").cast("array<string>"), "|")
             .cast("binary")).as("sig_hash"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      WITH $sqlSigCtes
+      SELECT doc_id, sig[1] AS mh0,
+             md5(array_to_string(sig, '|')) AS sig_hash
+      FROM sg
+      ORDER BY doc_id"""),
 
     // -- MinHash + LSH candidate pairs with estimated Jaccard -------------
     // See candidateMatchesFromBase for the scale shape (fixed-width
     // bucket exchange -> per-bucket member lists -> each pair born once
     // in its first shared band, scored from the members' signatures).
-    "dedup_minhash_pairs" -> ((s, d) =>
-      minhashPairsFrom(Tables.documents(s, d))),
+    Query("dedup_minhash_pairs", (s, d) =>
+      minhashPairsFrom(Tables.documents(s, d)),
+      minhashPairsSql(ordered = true)),
 
     // -- dedup threshold TUNING CURVE: the artifact a pipeline owner
     //    actually reads before picking tau — for every threshold
@@ -2231,7 +2253,7 @@ object Dedup extends QueryModule {
     //    hash agg; corpus size attaches as a broadcast 1-row agg. The
     //    drop rate is monotone in tau by construction, which the
     //    oracle compare re-proves value-for-value every round.
-    "pipe_dedup_rate_curve" -> ((s, d) => {
+    Query("pipe_dedup_rate_curve", (s, d) => {
       val docs = Tables.documents(s, d)
       val nd = docs.agg(count(lit(1)).as("n_docs"))
       minhashPairsFrom(docs, ordered = false)
@@ -2251,15 +2273,86 @@ object Dedup extends QueryModule {
         .select(col("tau_deci"), col("n_pairs"), col("n_docs_dropped"),
           expr("(1000 * n_docs_dropped) DIV n_docs").as("drop_per_mille"))
         .orderBy("tau_deci")
-    }),
+    },
+      // the pair statement embeds as a CTE'd derived table (the
+      // sqlGopherFlags pattern); floor(est*10) is exact on both engines
+      // (est = m/16 is a dyadic rational). n_docs_dropped mirrors the
+      // engine's PAIRWISE larger-id greedy rule (count of distinct b_id
+      // over surviving pairs) — NOT the cluster min-id rule; see the
+      // plan's comment above. The explicit est >= 0.5 predicate mirrors
+      // the engine's local guard (Spark's sequence() would descend on a
+      // sub-0.5 pair where this range() is empty).
+      s"""
+      WITH curve AS (
+             SELECT unnest(range(5, floor(p.est_jaccard * 10)::BIGINT + 1))
+                      AS tau_deci,
+                    p.b_id
+             FROM (${minhashPairsSql(ordered = false)}) p
+             WHERE p.est_jaccard >= 0.5),
+           n AS (SELECT count(1) AS n_docs FROM documents)
+      SELECT c.tau_deci, count(1) AS n_pairs,
+             count(DISTINCT c.b_id) AS n_docs_dropped,
+             ((1000 * count(DISTINCT c.b_id)) // n.n_docs)::BIGINT
+               AS drop_per_mille
+      FROM curve c, n
+      GROUP BY c.tau_deci, n.n_docs
+      ORDER BY tau_deci"""),
 
     // -- MinHash containment: asymmetric overlap per candidate pair ------
-    "dedup_containment" -> ((s, d) =>
-      containmentPairsFrom(Tables.documents(s, d))),
+    Query("dedup_containment", (s, d) =>
+      containmentPairsFrom(Tables.documents(s, d)),
+      s"""
+      WITH $sqlSigCtes,
+           bands AS (
+             SELECT doc_id, sig, bb.b AS band,
+                    array_to_string(list_slice(sig, bb.b * $ROWS + 1, bb.b * $ROWS + $ROWS), '|') AS bkey
+             FROM sg CROSS JOIN (SELECT unnest(range(0, $BANDS)) AS b) bb),
+           hotb AS (SELECT band, bkey FROM bands
+                    GROUP BY band, bkey HAVING count(1) > $MINHASH_MAX_BUCKET),
+           cool AS (SELECT b.* FROM bands b
+                    WHERE NOT EXISTS (SELECT 1 FROM hotb h
+                                      WHERE h.band = b.band
+                                        AND h.bkey = b.bkey)),
+           cand AS (
+             SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
+                    a.sig AS a_sig, b.sig AS b_sig
+             FROM cool a JOIN cool b
+               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+           mm AS (
+             SELECT a_id, b_id,
+                    CAST(list_aggregate(list_transform(range(1, ${K + 1}),
+                      i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END),
+                      'sum') AS BIGINT) AS m
+             FROM cand),
+           sz AS (SELECT doc_id,
+                         CAST(len(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS BIGINT) AS n_sh
+                  FROM documents)
+      SELECT mm.a_id AS a_id, mm.b_id AS b_id,
+             sa.n_sh AS na, sb.n_sh AS nb,
+             (1000 * m * (sa.n_sh + sb.n_sh)) // (($K + m) * sa.n_sh) AS cont_a_mille,
+             (1000 * m * (sa.n_sh + sb.n_sh)) // (($K + m) * sb.n_sh) AS cont_b_mille
+      FROM mm JOIN sz sa ON mm.a_id = sa.doc_id
+              JOIN sz sb ON mm.b_id = sb.doc_id
+      WHERE m >= ${K / 4}
+      ORDER BY a_id, b_id"""),
 
     // -- dedup clustering: pair graph -> connected components -------------
-    "dedup_clusters" -> ((s, d) =>
-      clustersFrom(Tables.documents(s, d))),
+    Query("dedup_clusters", (s, d) =>
+      clustersFrom(Tables.documents(s, d)),
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        e AS (SELECT a_id AS src, b_id AS dst FROM p
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM p),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src)
+      SELECT id AS doc_id, min(r) AS cluster
+      FROM reach
+      GROUP BY id
+      ORDER BY doc_id"""),
 
     // -- leakage-safe train/val/test split: the split key is the
     //    near-dup CLUSTER label, not the doc id, so every member of a
@@ -2268,7 +2361,7 @@ object Dedup extends QueryModule {
     //    own near-duplicates (the failure mode a doc-keyed split like
     //    pipe_split cannot prevent). Same deterministic md5 per-mille
     //    arithmetic as pipe_split, applied to the cluster label --------
-    "pipe_cluster_split" -> ((s, d) => {
+    Query("pipe_cluster_split", (s, d) => {
       val docs = Tables.documents(s, d)
       val cc = clustersFrom(docs, ordered = false)
       val mille = conv(substring(md5(concat(lit("csplit|"),
@@ -2283,7 +2376,33 @@ object Dedup extends QueryModule {
           countDistinct(col("cluster")).as("n_clusters"),
           sum("n_chars").as("total_chars"))
         .orderBy("split")
-    }),
+    },
+      // cluster-keyed split: same recursive-CTE labels as dedup_clusters,
+      // split arithmetic mirrored from pipe_split but over the label
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        e AS (SELECT a_id AS src, b_id AS dst FROM p
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM p),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
+        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
+        s AS (SELECT d.doc_id, d.n_chars, cc.cluster,
+                     ('0x' || substr(md5('csplit|' || cc.cluster::VARCHAR),
+                       1, 12))::BIGINT % 1000 AS m
+              FROM documents d JOIN cc ON d.doc_id = cc.doc_id)
+      SELECT CASE WHEN m < 980 THEN 'train'
+                  WHEN m < 990 THEN 'val'
+                  ELSE 'test' END AS split,
+             count(1)::BIGINT AS n_docs,
+             count(DISTINCT cluster)::BIGINT AS n_clusters,
+             sum(n_chars)::BIGINT AS total_chars
+      FROM s
+      GROUP BY 1
+      ORDER BY split"""),
 
     // -- pair-graph degree histogram: how duplicated is the corpus? ------
     //    degree(node) over the near-dup pair graph, then the histogram
@@ -2298,7 +2417,7 @@ object Dedup extends QueryModule {
     //    in-neighbors — floor arithmetic the oracle reproduces exactly.
     //    Each round is one join + one agg on the edge list (the CC
     //    shape); isolated docs keep the base rank. ----------------------
-    "graph_pagerank" -> ((s, d) => {
+    Query("graph_pagerank", (s, d) => {
       val docs = Tables.documents(s, d)
       val edges = symmetrized(
         minhashPairsFrom(docs, ordered = false).select("a_id", "b_id"))
@@ -2318,16 +2437,51 @@ object Dedup extends QueryModule {
       // result — the one frame this call retains, like CC's final labels
       rank.select(col("id").as("doc_id"), col("r").as("rank"))
         .orderBy("doc_id")
+    },
+      {
+      def round(n: Int): String = s"""
+           c$n AS (SELECT e.dst, CAST(sum(r.r // d.deg) AS BIGINT) AS s
+                   FROM e JOIN d ON e.src = d.src
+                   JOIN r${n - 1} r ON e.src = r.id
+                   GROUP BY e.dst),
+           r$n AS (SELECT nd.id,
+                          150000 + (85 * coalesce(c.s, 0)) // 100 AS r
+                   FROM nodes nd LEFT JOIN c$n c ON nd.id = c.dst)"""
+      s"""
+      WITH p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+           e AS (SELECT a_id AS src, b_id AS dst FROM p
+                 UNION ALL
+                 SELECT b_id AS src, a_id AS dst FROM p),
+           d AS (SELECT src, count(1) AS deg FROM e GROUP BY src),
+           nodes AS (SELECT doc_id AS id FROM documents),
+           r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes),
+           ${round(1)},
+           ${round(2)},
+           ${round(3)}
+      SELECT id AS doc_id, CAST(r AS BIGINT) AS rank
+      FROM r3
+      ORDER BY doc_id"""
     }),
 
-    "dedup_pair_degrees" -> ((s, d) => {
+    Query("dedup_pair_degrees", (s, d) => {
       val pairs = minhashPairsFrom(Tables.documents(s, d), ordered = false)
       val deg = pairs.select(col("a_id").as("id"))
         .union(pairs.select(col("b_id").as("id")))
         .groupBy("id").agg(count(lit(1)).as("degree"))
       deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))
         .orderBy("degree")
-    }),
+    },
+      s"""
+      WITH mp AS (${minhashPairsSql(ordered = false)}),
+           deg AS (SELECT id, count(1) AS degree FROM (
+                     SELECT a_id AS id FROM mp
+                     UNION ALL
+                     SELECT b_id AS id FROM mp)
+                   GROUP BY id)
+      SELECT degree, count(1) AS n_nodes
+      FROM deg
+      GROUP BY degree
+      ORDER BY degree"""),
 
     // -- triangle counting over the near-dup pair graph (how clique-like
     //    is each duplication community?) via DEGREE-ORDERED edge
@@ -2338,19 +2492,82 @@ object Dedup extends QueryModule {
     //    hub node's join fan-out is bounded by its FORWARD degree
     //    (O(sqrt(m)) on skewed graphs) instead of its full degree —
     //    the shape that survives the "last reducer" at 100 TB ----------
-    "graph_triangles" -> ((s, d) =>
+    Query("graph_triangles", (s, d) =>
       trianglesFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // degree-ordered triangle orientation mirrored edge-for-edge; the
+      // closing-edge join direction makes each triangle count exactly once
+      s"""
+      WITH mp AS (SELECT a_id, b_id
+                  FROM (${minhashPairsSql(ordered = false)}) p),
+           deg AS (SELECT id, count(1) AS degree FROM (
+                     SELECT a_id AS id FROM mp
+                     UNION ALL
+                     SELECT b_id AS id FROM mp)
+                   GROUP BY id),
+           o AS (SELECT CASE WHEN da.degree < db.degree
+                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
+                        THEN mp.a_id ELSE mp.b_id END AS src,
+                        CASE WHEN da.degree < db.degree
+                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
+                        THEN mp.b_id ELSE mp.a_id END AS dst
+                 FROM mp
+                 JOIN deg da ON mp.a_id = da.id
+                 JOIN deg db ON mp.b_id = db.id),
+           tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
+                   FROM o e1
+                   JOIN o e2 ON e1.src = e2.src AND e1.dst <> e2.dst
+                   JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
+           x AS (SELECT u AS doc_id FROM tri
+                 UNION ALL SELECT v FROM tri
+                 UNION ALL SELECT w FROM tri)
+      SELECT doc_id, count(1) AS n_tri
+      FROM x
+      GROUP BY doc_id
+      ORDER BY doc_id"""),
 
     // -- DOULION edge-sampled triangle ESTIMATE (see triEstimateFrom):
     //    the bounded-work answer where exact counting exceeds the
     //    wedge budget — deterministic md5 edge sampling keeps the
     //    oracle mirror bit-exact, k^3 scale-up in exact integers ------
-    "graph_tri_estimate" -> ((s, d) =>
+    Query("graph_tri_estimate", (s, d) =>
       triEstimateFrom(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // the graph_triangles orientation mirrored over the md5-sampled
+      // edge set; tri counts each triangle ONCE (at its base edge), so
+      // no DIV 3 is needed here — count(1) over tri IS T_sampled
+      s"""
+      WITH mp AS (SELECT a_id, b_id
+                  FROM (${minhashPairsSql(ordered = false)}) p
+                  WHERE ('0x' || substr(md5('triest|' || a_id::VARCHAR
+                          || '|' || b_id::VARCHAR), 1, 12))::BIGINT
+                        % $TRI_EST_MOD = 0),
+           deg AS (SELECT id, count(1) AS degree FROM (
+                     SELECT a_id AS id FROM mp
+                     UNION ALL
+                     SELECT b_id AS id FROM mp)
+                   GROUP BY id),
+           o AS (SELECT CASE WHEN da.degree < db.degree
+                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
+                        THEN mp.a_id ELSE mp.b_id END AS src,
+                        CASE WHEN da.degree < db.degree
+                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
+                        THEN mp.b_id ELSE mp.a_id END AS dst
+                 FROM mp
+                 JOIN deg da ON mp.a_id = da.id
+                 JOIN deg db ON mp.b_id = db.id),
+           tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
+                   FROM o e1
+                   JOIN o e2 ON e1.src = e2.src AND e1.dst <> e2.dst
+                   JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
+           t AS (SELECT count(1) AS n_tri_sampled FROM tri),
+           e AS (SELECT count(1) AS n_edges_kept FROM mp)
+      SELECT e.n_edges_kept, t.n_tri_sampled,
+             t.n_tri_sampled * ${TRI_EST_MOD * TRI_EST_MOD * TRI_EST_MOD}
+               AS tri_estimate
+      FROM e, t"""),
 
     // -- SCAN-style structural similarity of every near-dup edge (Xu et
     //    al., "SCAN: a structural clustering algorithm for networks",
@@ -2361,10 +2578,14 @@ object Dedup extends QueryModule {
     //    Adjacency arrays + the codegen'd sorted-intersect count do the
     //    work in O(deg_a + deg_b) per edge with only O(m) rows through
     //    the exchanges — no wedge stream, no pair blowup ----------------
-    "graph_edge_jaccard" -> ((s, d) =>
+    Query("graph_edge_jaccard", (s, d) =>
       edgeJaccardFrom(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // common neighbors via the (oracle-scale-fine) co-neighbor wedge
+      // enumeration, under the SAME hub cap as edgeJaccardFrom
+      sqlEdgeJaccard(s"SELECT a_id, b_id FROM (${
+        minhashPairsSql(ordered = false)}) mp", EDGE_JACC_MAX_DEG)),
 
     // -- cap-parity probe: the same operator at a deliberately tiny cap
     //    over a synthetic star+clique graph whose hub (degree 30)
@@ -2372,68 +2593,292 @@ object Dedup extends QueryModule {
     //    truncated adjacency, -1 marker — is exercised against the
     //    oracle mirror every round, not only when a regenerated corpus
     //    happens to grow a genuine hub ----------------------------------
-    "graph_ejacc_hubcap" -> ((s, d) =>
-      edgeJaccardFrom(hubcapPairs(Tables.documents(s, d)), HUBCAP_MAX_DEG)),
+    Query("graph_ejacc_hubcap", (s, d) =>
+      edgeJaccardFrom(hubcapPairs(Tables.documents(s, d)), HUBCAP_MAX_DEG),
+      // cap-parity probe: same operator, tiny synthetic star+clique
+      // graph with a genuine over-cap hub (see the comment above)
+      sqlEdgeJaccard(sqlHubcapPairs, HUBCAP_MAX_DEG)),
 
     // -- 3-core of the near-dup pair graph (see kcoreFromPairs): the
     //    dense duplication communities with chains/pendants peeled
     //    away — what's left is what cluster-dedup must actually break
     //    up. 8 peel rounds, fixpoint on this graph family ----------------
-    "graph_kcore" -> ((s, d) =>
+    Query("graph_kcore", (s, d) =>
       kcoreFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"), k = 3, rounds = 8)),
+          .select("a_id", "b_id"), k = 3, rounds = 8),
+      // the same 8 bounded peel rounds unrolled CTE-for-CTE (the
+      // graph_pagerank discipline). Every CTE is MATERIALIZED: each
+      // round references the previous edge set three times, so DuckDB's
+      // default inline expansion is ~3^8 scans of the base table (it
+      // exhausts file handles before it exhausts patience)
+      {
+      def peel(n: Int): String = s"""
+           k$n AS MATERIALIZED (SELECT src AS node FROM e${n - 1}
+                   GROUP BY src HAVING count(1) >= 3),
+           e$n AS MATERIALIZED (SELECT e.src, e.dst FROM e${n - 1} e
+                   JOIN k$n ka ON e.src = ka.node
+                   JOIN k$n kb ON e.dst = kb.node)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           ${(1 to 8).map(peel).mkString(",")}
+      SELECT src AS doc_id, count(1) AS core_deg
+      FROM e8
+      GROUP BY src
+      ORDER BY doc_id"""
+    }),
 
     // -- full core decomposition of the near-dup pair graph (see
     //    corenessFromPairs): per-node coreness, the density signal a
     //    curation pipeline thresholds on directly ("keep one doc per
     //    cluster of coreness >= c") instead of re-peeling per k --------
-    "graph_coreness" -> ((s, d) =>
+    Query("graph_coreness", (s, d) =>
       corenessFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // coreness via the identical bounded h-index chain, unrolled:
+      // c0 = degree; round r computes, per node, the H-index of its
+      // neighbors' round-(r-1) values from the clamped value histogram
+      // (max over desc-ordered values of least(value, cumulative count)
+      // — the citation-histogram identity, clamp mirrored verbatim).
+      // Engine-identical to the Spark loop by construction: Spark's
+      // sum-unchanged early exit only skips identity rounds, and both
+      // sides run at most CORENESS_ROUNDS rounds.
+      {
+      def round(r: Int): String = s"""
+           j$r AS (SELECT e.src, least(c.c, $CORENESS_MAX_H) AS cv
+                   FROM e0 e JOIN c${r - 1} c ON c.id = e.dst),
+           g$r AS (SELECT src, cv AS v, count(1)::BIGINT AS n
+                   FROM j$r GROUP BY src, cv),
+           r$r AS (SELECT src, v,
+                          sum(n) OVER (PARTITION BY src
+                                       ORDER BY v DESC) AS cum
+                   FROM g$r),
+           c$r AS MATERIALIZED (SELECT src AS id,
+                          max(least(v, cum))::BIGINT AS c
+                   FROM r$r GROUP BY src)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           c0 AS MATERIALIZED (SELECT src AS id, count(1)::BIGINT AS c
+                  FROM e0 GROUP BY src),
+           ${(1 to CORENESS_ROUNDS).map(round).mkString(",")}
+      SELECT id AS doc_id, c AS coreness
+      FROM c$CORENESS_ROUNDS
+      ORDER BY doc_id"""
+    }),
 
     // -- deterministic random walks (see walksFromPairs): the DeepWalk/
     //    node2vec sampling primitive with md5-derived neighbor picks
     //    both engines reproduce exactly -------------------------------
-    "graph_walks" -> ((s, d) =>
+    Query("graph_walks", (s, d) =>
       walksFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // walks mirrored pick-for-pick: identical dst-sorted ranks
+      // (row_number per node), identical md5(start|at|i) mod degree
+      // neighbor selection, one CTE per step
+      {
+      def step(i: Int): String = s"""
+           s$i AS (SELECT w.start, r.dst AS at, ${i}::BIGINT AS step
+                   FROM s${i - 1} w
+                   JOIN dg d ON w.at = d.src
+                   JOIN rk r ON r.src = w.at
+                    AND r.rk = 1 + ('0x' || substr(md5(
+                          w.start::VARCHAR || '|' || w.at::VARCHAR
+                            || '|$i'), 1, 12))::BIGINT % d.deg)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           rk AS MATERIALIZED (SELECT src, dst,
+                  row_number() OVER (PARTITION BY src ORDER BY dst) AS rk
+                  FROM e0),
+           dg AS MATERIALIZED (SELECT src, count(1)::BIGINT AS deg
+                  FROM e0 GROUP BY src),
+           s0 AS (SELECT DISTINCT src AS start, src AS at, 0::BIGINT AS step
+                  FROM e0),
+           ${(1 to WALK_STEPS).map(step).mkString(",")}
+      SELECT start AS doc_id, step, at AS at_node
+      FROM (${(0 to WALK_STEPS).map(i => s"SELECT * FROM s$i")
+        .mkString(" UNION ALL ")}) u
+      ORDER BY doc_id, step"""
+    }),
 
     // -- multi-source BFS hop distance from the graph's 10 smallest
     //    doc_ids, depth 4 (see bfsFromPairs): how far every document
     //    sits from a seed set over the near-dup graph ------------------
-    "graph_bfs" -> ((s, d) =>
+    Query("graph_bfs", (s, d) =>
       bfsFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // the same bounded Bellman-Ford relaxation unrolled CTE-for-CTE:
+      // min is order-insensitive, so the mirror is engine-identical by
+      // construction; seeds rank-derived so corpus re-keying can't empty
+      // the set
+      {
+      def round(r: Int): String = s"""
+           p$r AS (SELECT e.src AS id, min(d.dist) + 1 AS dist
+                   FROM e0 e JOIN d${r - 1} d ON e.dst = d.id
+                   GROUP BY e.src),
+           d$r AS MATERIALIZED (SELECT id, min(dist)::BIGINT AS dist FROM (
+                     SELECT id, dist FROM d${r - 1}
+                     UNION ALL
+                     SELECT id, dist FROM p$r) u
+                   GROUP BY id)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           d0 AS MATERIALIZED (SELECT id, 0::BIGINT AS dist FROM (
+                  SELECT DISTINCT src AS id FROM e0
+                  ORDER BY id LIMIT $BFS_SEEDS) s),
+           ${(1 to BFS_ROUNDS).map(round).mkString(",")}
+      SELECT id AS doc_id, dist
+      FROM d$BFS_ROUNDS
+      ORDER BY doc_id"""
+    }),
 
     // -- harmonic centrality from the same seed set, per-seed distance
     //    state (see harmonicFromPairs): which docs sit closest to the
     //    whole trusted/flagged set, robust to disconnection ------------
-    "graph_harmonic" -> ((s, d) =>
+    Query("graph_harmonic", (s, d) =>
       harmonicFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // the BFS relaxation chain with the seed carried in the state key,
+      // then the per-term-floored harmonic sum
+      {
+      def round(r: Int): String = s"""
+           p$r AS (SELECT d.seed, e.src AS id, min(d.dist) + 1 AS dist
+                   FROM e0 e JOIN d${r - 1} d ON e.dst = d.id
+                   GROUP BY d.seed, e.src),
+           d$r AS MATERIALIZED (SELECT seed, id, min(dist)::BIGINT AS dist
+                   FROM (
+                     SELECT seed, id, dist FROM d${r - 1}
+                     UNION ALL
+                     SELECT seed, id, dist FROM p$r) u
+                   GROUP BY seed, id)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           d0 AS MATERIALIZED (SELECT id AS seed, id, 0::BIGINT AS dist
+                  FROM (
+                  SELECT DISTINCT src AS id FROM e0
+                  ORDER BY id LIMIT $BFS_SEEDS) s),
+           ${(1 to BFS_ROUNDS).map(round).mkString(",")}
+      SELECT id AS doc_id, count(1) AS n_seeds_reached,
+             sum(1000000 // dist)::BIGINT AS harmonic_e6
+      FROM d$BFS_ROUNDS
+      WHERE dist > 0
+      GROUP BY id
+      ORDER BY harmonic_e6 DESC, doc_id
+      LIMIT 25""" }),
 
     // -- label-propagation communities over the near-dup pair graph
     //    (see lpaFromPairs): density-aware partition that keeps two
     //    duplication families distinct even when a boilerplate bridge
     //    edge glues them into one connected component ------------------
-    "graph_lpa" -> ((s, d) =>
+    Query("graph_lpa", (s, d) =>
       lpaFromPairs(
         minhashPairsFrom(Tables.documents(s, d), ordered = false)
-          .select("a_id", "b_id"))),
+          .select("a_id", "b_id")),
+      // the same fixed synchronous label-propagation rounds unrolled
+      // CTE-for-CTE: per (node, neighbor-label) counts, then max count
+      // with ties to the smallest label — Spark's max(struct(n, -lab))
+      // argmax expressed as a window max + min(lab) filter. MATERIALIZED
+      // per the graph_kcore file-handle discipline.
+      {
+      def round(r: Int): String = s"""
+           f$r AS (SELECT e.src, c.lab, count(1)::BIGINT AS n
+                   FROM e0 e JOIN c${r - 1} c ON e.dst = c.id
+                   GROUP BY e.src, c.lab),
+           c$r AS MATERIALIZED (SELECT src AS id, min(lab) AS lab FROM (
+                     SELECT src, lab, n,
+                            max(n) OVER (PARTITION BY src) AS mx
+                     FROM f$r) t
+                   WHERE n = mx
+                   GROUP BY src)"""
+      s"""
+      WITH p AS MATERIALIZED (SELECT a_id, b_id
+                 FROM (${minhashPairsSql(ordered = false)}) mp),
+           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
+                  UNION ALL
+                  SELECT b_id AS src, a_id AS dst FROM p),
+           c0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lab
+                  FROM e0),
+           ${(1 to LPA_ROUNDS).map(round).mkString(",")}
+      SELECT id AS doc_id, lab AS community
+      FROM c$LPA_ROUNDS
+      ORDER BY doc_id"""
+    }),
 
     // -- per-cluster quality report (see clusterQualityFrom): density
     //    and conductance of every near-dup community — is cluster-dedup
     //    collapsing real duplication families or boilerplate bridges? --
-    "graph_cluster_quality" -> ((s, d) => {
+    Query("graph_cluster_quality", (s, d) => {
       val docs = Tables.documents(s, d)
       clusterQualityFrom(docs,
         minhashPairsFrom(docs, ordered = false).select("a_id", "b_id"))
-    }),
+    },
+      // per-cluster quality: the same recursive-CTE labels as
+      // dedup_clusters, then the integer density/conductance arithmetic
+      // mirrored from clusterQualityFrom verbatim (cut is structurally 0
+      // for CC labels over the same pair set — see the scaladoc)
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        e AS (SELECT a_id AS src, b_id AS dst FROM p
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM p),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
+        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
+        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
+              FROM p
+              JOIN cc ca ON ca.doc_id = p.a_id
+              JOIN cc cb ON cb.doc_id = p.b_id),
+        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
+                FROM t WHERE ca = cb GROUP BY ca),
+        cut AS (SELECT cluster, count(1)::BIGINT AS cut
+                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
+                      UNION ALL
+                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
+                GROUP BY cluster),
+        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
+               FROM cc GROUP BY cluster),
+        j AS (SELECT nn.cluster, nn.n_nodes,
+                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
+                     COALESCE(cut.cut, 0)::BIGINT AS cut
+              FROM nn
+              LEFT JOIN ein ON ein.cluster = nn.cluster
+              LEFT JOIN cut ON cut.cluster = nn.cluster)
+      SELECT cluster, n_nodes, e_in, cut,
+             (CASE WHEN n_nodes >= 2
+                   THEN e_in * 2000 // (n_nodes * (n_nodes - 1))
+                   ELSE 0 END)::BIGINT AS density_mille,
+             (CASE WHEN 2 * e_in + cut > 0
+                   THEN cut * 1000 // (2 * e_in + cut)
+                   ELSE 0 END)::BIGINT AS conductance_mille
+      FROM j
+      ORDER BY n_nodes DESC, cluster
+      LIMIT 25"""),
 
     // -- cross-labelset cluster quality (see clusterQualityLabeled):
     //    winnow-CC labels scored against the MINHASH pair graph. The
@@ -2441,47 +2886,175 @@ object Dedup extends QueryModule {
     //    cluster edges exist and the cut / conductance arithmetic is
     //    value-checked by the oracle instead of structurally 0 as in
     //    graph_cluster_quality (r13 verdict #3) -----------------------
-    "graph_cluster_xquality" -> ((s, d) => {
+    Query("graph_cluster_xquality", (s, d) => {
       val docs = Tables.documents(s, d)
       val mh = minhashPairsFrom(docs, ordered = false)
         .select("a_id", "b_id").localCheckpoint(true)
       clusterQualityLabeled(docs, mh,
         ccFromPairs(docs, winnowPairsFrom(docs).select("a_id", "b_id"),
           ordered = false))
-    }),
+    },
+      // cross-labelset quality: winnow-CC labels (the dedup_winnow_clusters
+      // CTE) scored against MINHASH pairs — cut > 0 for real, the same
+      // integer density/conductance arithmetic as graph_cluster_quality
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        wp AS (SELECT a_id, b_id FROM $sqlWinnowPairs w),
+        e AS (SELECT a_id AS src, b_id AS dst FROM wp
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM wp),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
+        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
+        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
+              FROM p
+              JOIN cc ca ON ca.doc_id = p.a_id
+              JOIN cc cb ON cb.doc_id = p.b_id),
+        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
+                FROM t WHERE ca = cb GROUP BY ca),
+        cut AS (SELECT cluster, count(1)::BIGINT AS cut
+                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
+                      UNION ALL
+                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
+                GROUP BY cluster),
+        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
+               FROM cc GROUP BY cluster),
+        j AS (SELECT nn.cluster, nn.n_nodes,
+                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
+                     COALESCE(cut.cut, 0)::BIGINT AS cut
+              FROM nn
+              LEFT JOIN ein ON ein.cluster = nn.cluster
+              LEFT JOIN cut ON cut.cluster = nn.cluster)
+      SELECT cluster, n_nodes, e_in, cut,
+             (CASE WHEN n_nodes >= 2
+                   THEN e_in * 2000 // (n_nodes * (n_nodes - 1))
+                   ELSE 0 END)::BIGINT AS density_mille,
+             (CASE WHEN 2 * e_in + cut > 0
+                   THEN cut * 1000 // (2 * e_in + cut)
+                   ELSE 0 END)::BIGINT AS conductance_mille
+      FROM j
+      ORDER BY n_nodes DESC, cluster
+      LIMIT 25"""),
 
     // -- Newman modularity of the winnow-CC partition against the
     //    MinHash pair graph (see modularityLabeled): the single score
     //    that ranks alternative clusterings of the same near-dup
     //    graph; same cross-labelset framing as graph_cluster_xquality
     //    so the degree-penalty term sees genuine cross edges ----------
-    "graph_modularity" -> ((s, d) => {
+    Query("graph_modularity", (s, d) => {
       val docs = Tables.documents(s, d)
       modularityLabeled(docs,
         minhashPairsFrom(docs, ordered = false).select("a_id", "b_id"),
         ccFromPairs(docs, winnowPairsFrom(docs).select("a_id", "b_id"),
           ordered = false))
-    }),
+    },
+      // same cross-labelset CTE chain as graph_cluster_xquality, with the
+      // quantized modularity arithmetic (t <= 1e6 by construction — no
+      // 128-bit anywhere, identical on both engines)
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        wp AS (SELECT a_id, b_id FROM $sqlWinnowPairs w),
+        e AS (SELECT a_id AS src, b_id AS dst FROM wp
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM wp),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
+        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
+        mm AS (SELECT count(1)::BIGINT AS m FROM p),
+        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
+              FROM p
+              JOIN cc ca ON ca.doc_id = p.a_id
+              JOIN cc cb ON cb.doc_id = p.b_id),
+        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
+                FROM t WHERE ca = cb GROUP BY ca),
+        cut AS (SELECT cluster, count(1)::BIGINT AS cut
+                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
+                      UNION ALL
+                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
+                GROUP BY cluster),
+        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
+               FROM cc GROUP BY cluster),
+        j AS (SELECT nn.cluster, nn.n_nodes,
+                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
+                     COALESCE(cut.cut, 0)::BIGINT AS cut,
+                     mm.m
+              FROM nn
+              LEFT JOIN ein ON ein.cluster = nn.cluster
+              LEFT JOIN cut ON cut.cluster = nn.cluster
+              CROSS JOIN mm),
+        k AS (SELECT *, (2 * e_in + cut) AS d_sum,
+                     (CASE WHEN m > 0
+                           THEN ((2 * e_in + cut) * 1000000) // (2 * m)
+                           ELSE 0 END)::BIGINT AS t
+              FROM j),
+        c AS (SELECT *,
+                     (CASE WHEN m > 0
+                           THEN (e_in * 1000000) // m - (t * t) // 1000000
+                           ELSE 0 END)::BIGINT AS contrib_ppm
+              FROM k)
+      SELECT cluster, n_nodes, e_in, d_sum, contrib_ppm,
+             (sum(contrib_ppm) OVER ())::BIGINT AS q_ppm
+      FROM c
+      ORDER BY n_nodes DESC, cluster
+      LIMIT 25"""),
 
     // -- benchmark decontamination (see contaminationFrom) ----------------
-    "dedup_contamination" -> ((s, d) => {
+    Query("dedup_contamination", (s, d) => {
       val docs = Tables.documents(s, d)
       contaminationFrom(docs, docs.filter(col("doc_id") % 50 === 0))
-    }),
+    },
+      s"""
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
+                  FROM documents),
+           hh AS (SELECT doc_id,
+                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
+                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
+                  FROM sh),
+           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0),
+           agg AS (SELECT hh.doc_id AS doc_id, count(1) AS n_sh,
+                          count(bh.h1) AS n_hit
+                   FROM hh LEFT JOIN bh
+                     ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
+                   GROUP BY hh.doc_id)
+      SELECT doc_id, n_sh, n_hit, (n_hit * 1000) // n_sh AS mille
+      FROM agg
+      WHERE n_hit >= 3
+      ORDER BY doc_id"""),
 
     // -- Bloom-prefiltered decontamination (see bloomContaminationFrom):
     //    same hits as the exact join, with a one-row broadcast bitset
     //    dropping ~all non-contaminated shingles at the scan -------------
-    "dedup_bloom_contam" -> ((s, d) => {
+    Query("dedup_bloom_contam", (s, d) => {
       val docs = Tables.documents(s, d)
       bloomContaminationFrom(docs, docs.filter(col("doc_id") % 50 === 0))
-    }),
+    },
+      // The bloom prefilter is transparent to the RESULT (false positives
+      // die in the exact join), so the oracle is the plain inner join.
+      s"""
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
+                  FROM documents),
+           hh AS (SELECT doc_id,
+                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
+                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
+                  FROM sh),
+           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0)
+      SELECT hh.doc_id AS doc_id, count(1) AS n_hit
+      FROM hh JOIN bh ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
+      GROUP BY hh.doc_id
+      HAVING count(1) >= 3
+      ORDER BY doc_id"""),
 
     // -- composed decontamination: the corpus with flagged docs REMOVED
     //    (bloom prefilter -> exact verify -> anti-join), reported as
     //    per-language survivor counts — what a training run actually
     //    consumes downstream of the detector ------------------------------
-    "pipe_decontaminate" -> ((s, d) => {
+    Query("pipe_decontaminate", (s, d) => {
       val docs = Tables.documents(s, d)
       val flagged = bloomContaminationFrom(
         docs, docs.filter(col("doc_id") % 50 === 0)).select("doc_id")
@@ -2489,24 +3062,84 @@ object Dedup extends QueryModule {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"))
         .orderBy("lang")
-    }),
+    },
+      s"""
+      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
+                  FROM documents),
+           hh AS (SELECT doc_id,
+                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
+                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
+                  FROM sh),
+           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0),
+           flagged AS (SELECT hh.doc_id
+                       FROM hh JOIN bh ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
+                       GROUP BY hh.doc_id
+                       HAVING count(1) >= 3)
+      SELECT lang, count(1) AS n_docs
+      FROM documents
+      WHERE doc_id NOT IN (SELECT doc_id FROM flagged)
+      GROUP BY lang
+      ORDER BY lang"""),
 
     // -- exact n-gram Jaccard over prefix-blocked candidates --------------
     // Blocks over MAX_BLOCK members are dropped (boilerplate-prefix
     // guard — see blockedPairs); the oracle mirrors the cap.
-    "dedup_jaccard_pairs" -> ((s, d) =>
-      jaccardPairsFrom(Tables.documents(s, d))),
+    Query("dedup_jaccard_pairs", (s, d) =>
+      jaccardPairsFrom(Tables.documents(s, d)),
+      s"""
+      WITH t AS (
+        SELECT doc_id, list_distinct(${Text.sqlTokens("lower(text)")}) AS ts,
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
+      ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
+      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+             len(list_intersect(a.ts, b.ts))::DOUBLE
+               / len(list_distinct(a.ts || b.ts))::DOUBLE AS jac
+      FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
+      WHERE a.blk IN (SELECT blk FROM ok)
+        AND len(list_intersect(a.ts, b.ts))::DOUBLE
+              / len(list_distinct(a.ts || b.ts))::DOUBLE >= 0.5
+      ORDER BY a_id, b_id"""),
 
     // -- exact WEIGHTED (multiset) Jaccard: tf-aware similarity over
     //    the same prefix blocks (see weightedJaccardPairsFrom) ----------
-    "dedup_weighted_jaccard" -> ((s, d) =>
-      weightedJaccardPairsFrom(Tables.documents(s, d))),
+    Query("dedup_weighted_jaccard", (s, d) =>
+      weightedJaccardPairsFrom(Tables.documents(s, d)),
+      s"""
+      WITH t AS (
+        SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts,
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
+      ok AS (SELECT blk FROM t GROUP BY blk
+             HAVING count(1) BETWEEN 2 AND $MAX_BLOCK),
+      tf AS (SELECT doc_id, tok, count(1) AS tf
+             FROM (SELECT doc_id, unnest(ts) AS tok FROM t)
+             GROUP BY doc_id, tok),
+      pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                       len(a.ts) AS ta, len(b.ts) AS tb
+                FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
+                WHERE a.blk IN (SELECT blk FROM ok)),
+      sm AS (SELECT p.a_id, p.b_id, sum(least(fa.tf, fb.tf)) AS smin
+             FROM pairs p
+             JOIN tf fa ON fa.doc_id = p.a_id
+             JOIN tf fb ON fb.doc_id = p.b_id AND fb.tok = fa.tok
+             GROUP BY p.a_id, p.b_id)
+      SELECT p.a_id, p.b_id,
+             ((1000 * sm.smin) // (p.ta + p.tb - sm.smin))::BIGINT
+               AS wjac_mille
+      FROM pairs p JOIN sm ON p.a_id = sm.a_id AND p.b_id = sm.b_id
+      WHERE (1000 * sm.smin) // (p.ta + p.tb - sm.smin) >= 500
+      ORDER BY p.a_id, p.b_id"""),
 
     // -- tf-WEIGHTED MinHash pairs (see wminhashPairsFrom): the sketch
     //    counterpart of dedup_weighted_jaccard's exact arithmetic,
     //    through the same banded-LSH pipeline as dedup_minhash_pairs --
-    "dedup_wminhash_pairs" -> ((s, d) =>
-      wminhashPairsFrom(Tables.documents(s, d))),
+    Query("dedup_wminhash_pairs", (s, d) =>
+      wminhashPairsFrom(Tables.documents(s, d)),
+      // multiset intersection mirrored as sum(least(tf_a, tf_b)) over
+      // per-doc token frequencies; pairs with no common token never get a
+      // smin row but score 0 < 500 in the engine, so both sides drop them
+      wminhashPairsSql),
 
     // -- URL canonicalization dedup: the crawl-frontier step that
     //    collapses scheme/host case, fragments, and tracking params
@@ -2516,7 +3149,7 @@ object Dedup extends QueryModule {
     //    touching payloads). URLs are synthesized deterministically
     //    with noisy variants; the normalization chain (strip fragment,
     //    lowercase, drop utm_* params) is mirrored regex-for-regex. ----
-    "dedup_url_canonical" -> ((s, d) => {
+    Query("dedup_url_canonical", (s, d) => {
       val raw = concat(
         when(col("doc_id") % 3 === 0, lit("HTTP://EX.COM"))
           .otherwise(lit("http://ex.com")),
@@ -2534,50 +3167,215 @@ object Dedup extends QueryModule {
         .agg(count(lit(1)).as("n_variants"))
         .filter(col("n_variants") >= 2)
         .orderBy("url")
-    }),
+    },
+      // normalization chain mirrored regex-for-regex ('g' matches Spark's
+      // replace-all default)
+      """
+      WITH u AS (
+        SELECT regexp_replace(
+                 lower(regexp_replace(
+                   (CASE WHEN doc_id % 3 = 0 THEN 'HTTP://EX.COM'
+                         ELSE 'http://ex.com' END)
+                   || '/' || lang || '/doc' || (doc_id % 100)::VARCHAR
+                   || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=x&id=7'
+                            ELSE '?id=7' END)
+                   || (CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END),
+                   '#.*', '', 'g')),
+                 'utm_[a-z]+=[^&]*&', '', 'g') AS url
+        FROM documents)
+      SELECT url, count(1) AS n_variants
+      FROM u
+      GROUP BY url
+      HAVING count(1) >= 2
+      ORDER BY url"""),
 
     // -- C4-style span-level dedup report (see spanDedupFrom) -------------
-    "dedup_spans" -> ((s, d) =>
-      spanDedupFrom(Tables.documents(s, d))),
+    Query("dedup_spans", (s, d) =>
+      spanDedupFrom(Tables.documents(s, d)),
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
+           idx AS (SELECT doc_id, ts, len(ts) AS n,
+                          CASE WHEN len(ts) <= $SPAN_W THEN 1
+                               ELSE (len(ts) - $SPAN_W + ${SPAN_W - 1}) // $SPAN_W + 1 END AS nch
+                   FROM t WHERE len(ts) > 0),
+           sp AS (SELECT doc_id, g.k AS span_idx,
+                         array_to_string(
+                           ts[g.k * $SPAN_W + 1 : least(g.k * $SPAN_W + $SPAN_W, n)], ' ')
+                           AS span,
+                         doc_id * ${1L << 20} + g.k AS key
+                  FROM idx
+                  CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
+                  WHERE g.k < nch),
+           fk AS (SELECT doc_id, key,
+                         min(key) OVER (PARTITION BY span) AS first_k
+                  FROM sp)
+      SELECT doc_id, count(1) AS n_spans,
+             CAST(sum(CASE WHEN key = first_k THEN 0 ELSE 1 END) AS BIGINT) AS n_dup_spans,
+             ((count(1) - CAST(sum(CASE WHEN key = first_k THEN 0 ELSE 1 END) AS BIGINT)) * 1000)
+               // count(1) AS kept_mille
+      FROM fk
+      GROUP BY doc_id
+      ORDER BY doc_id"""),
 
     // -- maximal duplicated-substring spans (Lee et al. exact-substring
     //    dedup; see duplicatedSpansFrom). L=SUBSTR_L on this short-doc
     //    corpus; production default is the paper's 50 ------------------
-    "dedup_substrings" -> ((s, d) =>
-      duplicatedSpansFrom(Tables.documents(s, d), SUBSTR_L)),
+    Query("dedup_substrings", (s, d) =>
+      duplicatedSpansFrom(Tables.documents(s, d), SUBSTR_L),
+      // self-join-on-expanded-windows mirror of duplicatedSpansFrom: the
+      // oracle pays the O(positions * L) window-text blowup the Spark
+      // side's rolling fingerprints avoid — affordable at sf0.01, which
+      // is exactly why the engine side doesn't do it this way
+      s"""
+      WITH t AS (SELECT doc_id,
+                        list_filter(string_split_regex(text, '[^A-Za-z0-9]+'),
+                                    x -> x <> '') AS ts
+                 FROM documents),
+           w AS (SELECT doc_id, i - 1 AS pos,
+                        array_to_string(ts[i : i + $SUBSTR_L - 1], ' ') AS win
+                 FROM (SELECT doc_id, ts,
+                              unnest(range(1, len(ts) - $SUBSTR_L + 2)) AS i
+                       FROM t WHERE len(ts) >= $SUBSTR_L)),
+           d AS (SELECT win FROM w GROUP BY win HAVING count(1) >= 2),
+           s AS (SELECT doc_id, pos FROM w WHERE win IN (SELECT win FROM d)),
+           m AS (SELECT doc_id, pos,
+                        CASE WHEN lag(pos) OVER
+                               (PARTITION BY doc_id ORDER BY pos) IS NULL
+                             OR pos - lag(pos) OVER
+                               (PARTITION BY doc_id ORDER BY pos) > $SUBSTR_L
+                             THEN 1 ELSE 0 END AS brk
+                 FROM s),
+           g AS (SELECT doc_id, pos,
+                        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
+                 FROM m)
+      SELECT doc_id, min(pos)::BIGINT AS span_start,
+             (max(pos) + $SUBSTR_L)::BIGINT AS span_end,
+             (max(pos) + $SUBSTR_L - min(pos))::BIGINT AS span_tokens
+      FROM g
+      GROUP BY doc_id, gid
+      ORDER BY doc_id, span_start"""),
 
     // -- the CUT step: remove non-first duplicated-substring spans and
     //    fingerprint the cleaned token stream (see substrCutFrom) ------
-    "pipe_substr_cut" -> ((s, d) =>
-      substrCutFrom(Tables.documents(s, d), SUBSTR_L)),
+    Query("pipe_substr_cut", (s, d) =>
+      substrCutFrom(Tables.documents(s, d), SUBSTR_L),
+      // mirror of substrCutFrom: windows over the LOWERCASED token
+      // stream, first occurrence by packed (doc_id, pos) key, non-first
+      // occurrences expand to cut positions, cleaned stream fingerprinted
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
+           w AS (SELECT doc_id, i - 1 AS pos,
+                        doc_id * ${1L << 20} + i - 1 AS k,
+                        array_to_string(ts[i : i + $SUBSTR_L - 1], ' ') AS win
+                 FROM (SELECT doc_id, ts,
+                              unnest(range(1, len(ts) - $SUBSTR_L + 2)) AS i
+                       FROM t WHERE len(ts) >= $SUBSTR_L)),
+           g AS (SELECT win, min(k) AS first_k FROM w
+                 GROUP BY win HAVING count(1) >= 2),
+           c AS (SELECT w.doc_id, w.pos FROM w JOIN g USING (win)
+                 WHERE w.k <> g.first_k),
+           m AS (SELECT doc_id, pos,
+                        CASE WHEN lag(pos) OVER
+                               (PARTITION BY doc_id ORDER BY pos) IS NULL
+                             OR pos - lag(pos) OVER
+                               (PARTITION BY doc_id ORDER BY pos) > $SUBSTR_L
+                             THEN 1 ELSE 0 END AS brk
+                 FROM c),
+           gg AS (SELECT doc_id, pos,
+                         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
+                  FROM m),
+           sp AS (SELECT doc_id, min(pos) AS s, max(pos) + $SUBSTR_L AS e
+                  FROM gg GROUP BY doc_id, gid),
+           cutpos AS (SELECT doc_id, unnest(range(s, e)) AS p FROM sp),
+           tokpos AS (SELECT doc_id, i - 1 AS p, ts[i] AS tok
+                      FROM (SELECT doc_id, ts,
+                                   unnest(range(1, len(ts) + 1)) AS i
+                            FROM t)),
+           ka AS (SELECT tp.doc_id,
+                         count(1)::BIGINT AS n_tokens,
+                         count(1) FILTER (WHERE cp.p IS NOT NULL)::BIGINT AS n_cut,
+                         md5(coalesce(
+                           string_agg(tp.tok, ' ' ORDER BY tp.p)
+                             FILTER (WHERE cp.p IS NULL), '')) AS cleaned_md5
+                  FROM tokpos tp
+                  LEFT JOIN cutpos cp ON tp.doc_id = cp.doc_id AND tp.p = cp.p
+                  GROUP BY tp.doc_id)
+      SELECT d.doc_id,
+             coalesce(ka.n_tokens, 0)::BIGINT AS n_tokens,
+             coalesce(ka.n_cut, 0)::BIGINT AS n_cut,
+             coalesce(ka.cleaned_md5, md5('')) AS cleaned_md5
+      FROM documents d LEFT JOIN ka USING (doc_id)
+      ORDER BY d.doc_id"""),
 
     // -- incremental ingest probe: new batch (doc_id % 5 == 0) screened
     //    against the existing corpus (the rest) without touching the
     //    corpus's own pair graph (see incrementalPairsFrom) --------------
-    "dedup_incremental" -> ((s, d) => {
+    Query("dedup_incremental", (s, d) => {
       val docs = Tables.documents(s, d)
       incrementalPairsFrom(
         docs.filter(col("doc_id") % 5 =!= 0),
         docs.filter(col("doc_id") % 5 === 0))
-    }),
+    },
+      incrementalSql),
 
     // -- the SAME probe as a real Structured Streaming query (stream-
     //    static band join, stateless per-row signatures, memory sink,
     //    batch-side scoring; see streamProbeReplay). Driver-checked
     //    against the identical batch oracle ------------------------------
-    "dedup_stream_probe" -> ((s, d) => streamProbeReplay(s, d)),
+    Query("dedup_stream_probe", (s, d) => streamProbeReplay(s, d),
+      // the streaming twin produces the identical row set by construction
+      incrementalSql),
 
     // -- EXACT set-similarity join via prefix filtering (PPJoin): every
     //    pair with trigram Jaccard >= 0.5, no LSH false negatives (see
     //    ppjoinPairsFrom) -------------------------------------------------
-    "dedup_ppjoin_pairs" -> ((s, d) =>
-      ppjoinPairsFrom(Tables.documents(s, d))),
+    Query("dedup_ppjoin_pairs", (s, d) =>
+      ppjoinPairsFrom(Tables.documents(s, d)),
+      (ppjoinPairsSqlNoOrder + """
+      ORDER BY a_id, b_id""")),
 
     // -- sorted-neighborhood blocking (multi-pass SNM): rank-window
     //    candidates over two independent sort keys, exact-Jaccard
     //    verified (see sortedNeighborhoodPairsFrom) ---------------------
-    "dedup_sorted_neighborhood" -> ((s, d) =>
-      sortedNeighborhoodPairsFrom(Tables.documents(s, d))),
+    Query("dedup_sorted_neighborhood", (s, d) =>
+      sortedNeighborhoodPairsFrom(Tables.documents(s, d)),
+      // both SNM passes mirrored: per-block rank windows, W-1 neighbor
+      // offsets, exact distinct-token Jaccard in integer per-mille
+      s"""
+      WITH base AS (
+        SELECT doc_id,
+               substr(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g'),
+                      1, 12) AS k1,
+               substr(reverse(regexp_replace(lower(text), '[^a-z0-9]+', '',
+                      'g')), 1, 12) AS k2,
+               list_sort(list_distinct(${Text.sqlTokens("lower(text)")})) AS ts
+        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
+      r1 AS (SELECT doc_id, k1 AS key, substr(k1, 1, 2) AS blk,
+                    row_number() OVER (PARTITION BY substr(k1, 1, 2)
+                      ORDER BY k1, doc_id) AS rn FROM base),
+      r2 AS (SELECT doc_id, k2 AS key, substr(k2, 1, 2) AS blk,
+                    row_number() OVER (PARTITION BY substr(k2, 1, 2)
+                      ORDER BY k2, doc_id) AS rn FROM base),
+      cand AS (
+        SELECT least(a.doc_id, b.doc_id) AS a_id,
+               greatest(a.doc_id, b.doc_id) AS b_id
+        FROM r1 a JOIN r1 b ON a.blk = b.blk
+          AND b.rn BETWEEN a.rn + 1 AND a.rn + ${SNM_W - 1}
+        UNION
+        SELECT least(a.doc_id, b.doc_id), greatest(a.doc_id, b.doc_id)
+        FROM r2 a JOIN r2 b ON a.blk = b.blk
+          AND b.rn BETWEEN a.rn + 1 AND a.rn + ${SNM_W - 1}),
+      scored AS (
+        SELECT c.a_id, c.b_id,
+               ((1000 * len(list_intersect(ta.ts, tb.ts)))
+                 // (len(ta.ts) + len(tb.ts)
+                     - len(list_intersect(ta.ts, tb.ts))))::BIGINT
+                 AS jac_mille
+        FROM cand c JOIN base ta ON ta.doc_id = c.a_id
+                    JOIN base tb ON tb.doc_id = c.b_id)
+      SELECT a_id, b_id, jac_mille
+      FROM scored WHERE jac_mille >= 300
+      ORDER BY a_id, b_id"""),
 
     // -- the LSH pipeline's RECALL/PRECISION as a first-class gated
     //    query: exact PPJoin pairs at the matching J >= 0.5 threshold
@@ -2590,7 +3388,7 @@ object Dedup extends QueryModule {
     //    twin lives in BenchProbe lshrecall; LshRecallSpec pins a 0.8
     //    floor on a seeded-twins corpus.) Cost: both pair pipelines +
     //    three 1-row aggs ----------------------------------------------
-    "dedup_lsh_recall" -> ((s, d) => {
+    Query("dedup_lsh_recall", (s, d) => {
       val docs = Tables.documents(s, d)
       val truth = ppjoinPairsFrom(docs).select("a_id", "b_id")
         .localCheckpoint(true) // n_true agg + hit join
@@ -2607,7 +3405,25 @@ object Dedup extends QueryModule {
             "ELSE 1000 END").as("recall_mille"),
           expr("CASE WHEN n_est > 0 THEN (1000 * n_hit) DIV n_est " +
             "ELSE 1000 END").as("precision_mille"))
-    }),
+    },
+      // quality metric AS a gated query: exact PPJoin truth vs the LSH
+      // estimate pipeline, joined on the id pair — both pipelines are
+      // deterministic, so recall/precision themselves hash-compare
+      s"""
+      WITH tr AS (SELECT a_id, b_id FROM ($ppjoinPairsSqlNoOrder) t0),
+           es AS (SELECT a_id, b_id
+                  FROM (${minhashPairsSql(ordered = false)}) mp),
+           h AS (SELECT tr.a_id FROM tr JOIN es
+                 ON tr.a_id = es.a_id AND tr.b_id = es.b_id),
+           c AS (SELECT (SELECT count(1) FROM tr)::BIGINT AS n_true,
+                        (SELECT count(1) FROM es)::BIGINT AS n_est,
+                        (SELECT count(1) FROM h)::BIGINT AS n_hit)
+      SELECT n_true, n_est, n_hit,
+             (CASE WHEN n_true > 0 THEN (1000 * n_hit) // n_true
+                   ELSE 1000 END)::BIGINT AS recall_mille,
+             (CASE WHEN n_est > 0 THEN (1000 * n_hit) // n_est
+                   ELSE 1000 END)::BIGINT AS precision_mille
+      FROM c"""),
 
     // -- the production dedup CASCADE: collapse byte-identical texts to
     //    one canonical doc (min doc_id) FIRST, run the MinHash near-dup
@@ -2617,13 +3433,51 @@ object Dedup extends QueryModule {
     //    web scale the exact-dup factor (often 2-5x) comes straight off
     //    the LSH bill. Same dup injection as dedup_exact so the
     //    cascade has real work at test SFs ----------------------------
-    "pipe_dedup_cascade" -> ((s, d) => {
+    Query("pipe_dedup_cascade", (s, d) => {
       val base = Tables.documents(s, d)
         .select(dupGuardedId.as("doc_id"), col("text"))
       val dups = base.filter(col("doc_id") % 10 === 0)
         .select((col("doc_id") + DUP_OFFSET).as("doc_id"), col("text"))
       cascadeFrom(base.union(dups))
-    }),
+    },
+      s"""
+      WITH all_docs AS (
+             SELECT doc_id, text FROM documents
+             UNION ALL
+             SELECT doc_id + 1000000 AS doc_id, text FROM documents
+             WHERE doc_id % 10 = 0),
+           g AS (SELECT md5(text) AS h, min(doc_id) AS doc_id,
+                        count(1) AS n_copies
+                 FROM all_docs GROUP BY md5(text)),
+           canon AS (SELECT g.doc_id, a.text, g.n_copies
+                     FROM g JOIN all_docs a ON g.doc_id = a.doc_id),
+           ${sqlSigCtesFrom("canon")},
+           bands AS (
+             SELECT doc_id, sig, bb.b AS band,
+                    array_to_string(list_slice(sig, bb.b * $ROWS + 1, bb.b * $ROWS + $ROWS), '|') AS bkey
+             FROM sg CROSS JOIN (SELECT unnest(range(0, $BANDS)) AS b) bb),
+           hotb AS (SELECT band, bkey FROM bands
+                    GROUP BY band, bkey HAVING count(1) > $MINHASH_MAX_BUCKET),
+           cool AS (SELECT b.* FROM bands b
+                    WHERE NOT EXISTS (SELECT 1 FROM hotb h
+                                      WHERE h.band = b.band
+                                        AND h.bkey = b.bkey)),
+           cand AS (
+             SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
+                    a.sig AS a_sig, b.sig AS b_sig
+             FROM cool a JOIN cool b
+               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
+      SELECT c.a_id, c.b_id,
+             list_aggregate(list_transform(range(1, ${K + 1}),
+               i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END), 'sum')::DOUBLE
+               / $K.0 AS est_jaccard,
+             ga.n_copies AS a_copies, gb.n_copies AS b_copies
+      FROM cand c JOIN canon ga ON c.a_id = ga.doc_id
+                  JOIN canon gb ON c.b_id = gb.doc_id
+      WHERE list_aggregate(list_transform(range(1, ${K + 1}),
+              i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END), 'sum')::DOUBLE
+              / $K.0 >= 0.5
+      ORDER BY a_id, b_id"""),
 
     // -- winnowing near-dup pairs (MOSS report): docs sharing >= 3
     //    selected fingerprints, candidate-blocked on the fingerprint
@@ -2635,17 +3489,34 @@ object Dedup extends QueryModule {
     //    the cap. Shapes: generator scan -> fp hash-agg -> bounded
     //    per-block pair explode -> pair count agg — never quadratic in
     //    the corpus --------------------------------------------------------
-    "dedup_winnow_pairs" -> ((s, d) =>
-      winnowPairsFrom(Tables.documents(s, d))),
+    Query("dedup_winnow_pairs", (s, d) =>
+      winnowPairsFrom(Tables.documents(s, d)),
+      s"""
+      SELECT a_id, b_id, n_shared FROM $sqlWinnowPairs
+      ORDER BY a_id, b_id"""),
 
     // -- transitive winnow-dup clusters: the same frontier CC loop as
     //    dedup_clusters, over the winnow pair graph instead of the
     //    MinHash one — shared-passage communities rather than
     //    whole-doc near-dup cliques ---------------------------------------
-    "dedup_winnow_clusters" -> ((s, d) => {
+    Query("dedup_winnow_clusters", (s, d) => {
       val docs = Tables.documents(s, d)
       ccFromPairs(docs, winnowPairsFrom(docs).select("a_id", "b_id"))
-    }),
+    },
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM $sqlWinnowPairs wp),
+        e AS (SELECT a_id AS src, b_id AS dst FROM p
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM p),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src)
+      SELECT id AS doc_id, min(r) AS cluster
+      FROM reach
+      GROUP BY id
+      ORDER BY doc_id"""),
 
     // -- the dedup DECISION: near-dup clusters -> keep ONE doc per
     //    cluster (longest text, ties to the smallest doc_id — integer
@@ -2655,7 +3526,7 @@ object Dedup extends QueryModule {
     //    row per doc) join the doc metadata, a cluster-max agg + an
     //    equality filter + a min agg pick keepers without any window,
     //    and the final left join is |keepers|-sized ---------------------
-    "pipe_cluster_dedup" -> ((s, d) => {
+    Query("pipe_cluster_dedup", (s, d) => {
       val docs = Tables.documents(s, d)
       val meta = docs.select(col("doc_id"), col("lang"), col("n_chars"))
       val labeled = clustersFrom(docs, ordered = false).join(meta, "doc_id")
@@ -2669,15 +3540,40 @@ object Dedup extends QueryModule {
         .agg(count(lit(1)).as("n_docs"), count(col("_k")).as("n_kept"),
           (count(lit(1)) - count(col("_k"))).as("n_dropped"))
         .orderBy("lang")
-    }),
+    },
+      s"""
+      WITH RECURSIVE
+        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
+        e AS (SELECT a_id AS src, b_id AS dst FROM p
+              UNION ALL
+              SELECT b_id AS src, a_id AS dst FROM p),
+        reach(id, r) AS (
+          SELECT doc_id, doc_id FROM documents
+          UNION
+          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
+        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
+        lab AS (SELECT d.doc_id, d.lang, d.n_chars, cc.cluster
+                FROM documents d JOIN cc ON d.doc_id = cc.doc_id),
+        cmax AS (SELECT cluster, max(n_chars) AS mx FROM lab GROUP BY cluster),
+        keep AS (SELECT lab.cluster, min(lab.doc_id) AS doc_id
+                 FROM lab JOIN cmax ON lab.cluster = cmax.cluster
+                 WHERE lab.n_chars = cmax.mx
+                 GROUP BY lab.cluster)
+      SELECT d.lang, count(1) AS n_docs,
+             count(k.doc_id) AS n_kept,
+             count(1) - count(k.doc_id) AS n_dropped
+      FROM documents d LEFT JOIN keep k ON d.doc_id = k.doc_id
+      GROUP BY d.lang
+      ORDER BY d.lang"""),
 
     // -- SimHash (60-bit, paired with 4x15-bit Hamming-LSH blocks below).
     //    One hex->long parse per token, then the 60 per-bit +-1 votes are
     //    pure long bitwise ops inside whole-stage codegen (the earlier
     //    per-hex-digit substr/instr formulation did one string op per
     //    bit per token and dominated the profile) --------------------------
-    "dedup_simhash" -> ((s, d) =>
-      simhashFrom(s, Tables.documents(s, d)).orderBy("doc_id")),
+    Query("dedup_simhash", (s, d) =>
+      simhashFrom(s, Tables.documents(s, d)).orderBy("doc_id"),
+      (simhashSql + "\n      ORDER BY doc_id")),
 
     // -- SimHash near-dup pairs: Hamming-distance LSH over the 60-bit
     //    hashes. 4 blocks of 15 bits: by pigeonhole, any pair within
@@ -2685,17 +3581,41 @@ object Dedup extends QueryModule {
     //    each block finds ALL such pairs (complete, not approximate);
     //    candidates verify with a codegen'd popcount on the XOR. 15-bit
     //    block keys keep buckets sparse at corpus scale ------------------
-    "dedup_simhash_pairs" -> ((s, d) =>
-      simhashPairsFrom(s, Tables.documents(s, d))),
+    Query("dedup_simhash_pairs", (s, d) =>
+      simhashPairsFrom(s, Tables.documents(s, d)),
+      s"""
+      WITH sh AS ($simhashSql),
+      blocks AS (
+        SELECT doc_id, simhash, bb.b AS blk,
+               (simhash >> (bb.b * 15)) & 32767 AS blk_val
+        FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb)
+      SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
+             bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
+      FROM blocks a JOIN blocks b
+        ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+      ORDER BY a_id, b_id"""),
 
     // -- edit-distance near-dup: levenshtein over prefix-blocked pairs ----
     // Same blocking + MAX_BLOCK discipline as dedup_jaccard_pairs; the
     // O(|a|*|b|) distance runs only on surviving candidates.
-    "dedup_levenshtein" -> ((s, d) =>
-      levenshteinPairsFrom(Tables.documents(s, d))),
+    Query("dedup_levenshtein", (s, d) =>
+      levenshteinPairsFrom(Tables.documents(s, d)),
+      s"""
+      WITH t AS (
+        SELECT doc_id, text,
+               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
+        FROM documents),
+      ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
+      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+             levenshtein(a.text, b.text)::BIGINT AS edit_dist
+      FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
+      WHERE a.blk IN (SELECT blk FROM ok)
+        AND levenshtein(a.text, b.text) <= 50
+      ORDER BY a_id, b_id"""),
 
     // -- embedding near-dup: top-20 within-label pairs by cosine ----------
-    "dedup_embedding_topk" -> ((s, d) => {
+    Query("dedup_embedding_topk", (s, d) => {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("label"), col("embedding"))
       val a = e.select(col("vec_id").as("a_id"), col("label"),
@@ -2708,7 +3628,16 @@ object Dedup extends QueryModule {
           graft.functions.Vectors.cosineScaled(s, col("a_v"), col("b_v")).as("icos_e6"))
         .orderBy(col("icos_e6").desc, col("a_id"), col("b_id"))
         .limit(20)
-    })
+    },
+      """
+      WITH e AS (SELECT vec_id, label,
+                        list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings)
+      SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.label,
+             round(list_cosine_similarity(a.v, b.v) * 1e6)::BIGINT AS icos_e6
+      FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+      ORDER BY icos_e6 DESC, a_id, b_id
+      LIMIT 20""")
   )
 
   // ---------- DuckDB oracle fragments (generated to mirror Spark) --------
@@ -2952,984 +3881,5 @@ object Dedup extends QueryModule {
               i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END), 'sum')::DOUBLE
               / $K.0 >= 0.5
       ORDER BY new_id, idx_id"""
-
-  override def oracles: Map[String, String] = Map(
-    "dedup_exact" -> """
-      WITH all_docs AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0)
-      SELECT md5(text) AS text_hash, min(doc_id) AS keeper, count(1) AS n_copies
-      FROM all_docs
-      GROUP BY 1
-      ORDER BY text_hash""",
-
-    "dedup_fingerprint" -> s"""
-      SELECT md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint,
-             min(doc_id) AS keeper, count(1) AS n_copies
-      FROM documents
-      GROUP BY 1
-      ORDER BY fingerprint""",
-
-    "dedup_minhash_sig" -> s"""
-      WITH $sqlSigCtes
-      SELECT doc_id, sig[1] AS mh0,
-             md5(array_to_string(sig, '|')) AS sig_hash
-      FROM sg
-      ORDER BY doc_id""",
-
-    "dedup_minhash_pairs" -> minhashPairsSql(ordered = true),
-
-    // the pair statement embeds as a CTE'd derived table (the
-    // sqlGopherFlags pattern); floor(est*10) is exact on both engines
-    // (est = m/16 is a dyadic rational). n_docs_dropped mirrors the
-    // engine's PAIRWISE larger-id greedy rule (count of distinct b_id
-    // over surviving pairs) — NOT the cluster min-id rule; see the
-    // queries-side comment. The explicit est >= 0.5 predicate mirrors
-    // the engine's local guard (Spark's sequence() would descend on a
-    // sub-0.5 pair where this range() is empty).
-    "pipe_dedup_rate_curve" -> s"""
-      WITH curve AS (
-             SELECT unnest(range(5, floor(p.est_jaccard * 10)::BIGINT + 1))
-                      AS tau_deci,
-                    p.b_id
-             FROM (${minhashPairsSql(ordered = false)}) p
-             WHERE p.est_jaccard >= 0.5),
-           n AS (SELECT count(1) AS n_docs FROM documents)
-      SELECT c.tau_deci, count(1) AS n_pairs,
-             count(DISTINCT c.b_id) AS n_docs_dropped,
-             ((1000 * count(DISTINCT c.b_id)) // n.n_docs)::BIGINT
-               AS drop_per_mille
-      FROM curve c, n
-      GROUP BY c.tau_deci, n.n_docs
-      ORDER BY tau_deci""",
-
-    "dedup_containment" -> s"""
-      WITH $sqlSigCtes,
-           bands AS (
-             SELECT doc_id, sig, bb.b AS band,
-                    array_to_string(list_slice(sig, bb.b * $ROWS + 1, bb.b * $ROWS + $ROWS), '|') AS bkey
-             FROM sg CROSS JOIN (SELECT unnest(range(0, $BANDS)) AS b) bb),
-           hotb AS (SELECT band, bkey FROM bands
-                    GROUP BY band, bkey HAVING count(1) > $MINHASH_MAX_BUCKET),
-           cool AS (SELECT b.* FROM bands b
-                    WHERE NOT EXISTS (SELECT 1 FROM hotb h
-                                      WHERE h.band = b.band
-                                        AND h.bkey = b.bkey)),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-                    a.sig AS a_sig, b.sig AS b_sig
-             FROM cool a JOIN cool b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-           mm AS (
-             SELECT a_id, b_id,
-                    CAST(list_aggregate(list_transform(range(1, ${K + 1}),
-                      i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END),
-                      'sum') AS BIGINT) AS m
-             FROM cand),
-           sz AS (SELECT doc_id,
-                         CAST(len(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS BIGINT) AS n_sh
-                  FROM documents)
-      SELECT mm.a_id AS a_id, mm.b_id AS b_id,
-             sa.n_sh AS na, sb.n_sh AS nb,
-             (1000 * m * (sa.n_sh + sb.n_sh)) // (($K + m) * sa.n_sh) AS cont_a_mille,
-             (1000 * m * (sa.n_sh + sb.n_sh)) // (($K + m) * sb.n_sh) AS cont_b_mille
-      FROM mm JOIN sz sa ON mm.a_id = sa.doc_id
-              JOIN sz sb ON mm.b_id = sb.doc_id
-      WHERE m >= ${K / 4}
-      ORDER BY a_id, b_id""",
-
-    "dedup_clusters" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM p),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src)
-      SELECT id AS doc_id, min(r) AS cluster
-      FROM reach
-      GROUP BY id
-      ORDER BY doc_id""",
-
-    // per-cluster quality: the same recursive-CTE labels as
-    // dedup_clusters, then the integer density/conductance arithmetic
-    // mirrored from clusterQualityFrom verbatim (cut is structurally 0
-    // for CC labels over the same pair set — see the scaladoc)
-    "graph_cluster_quality" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM p),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
-        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
-              FROM p
-              JOIN cc ca ON ca.doc_id = p.a_id
-              JOIN cc cb ON cb.doc_id = p.b_id),
-        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
-                FROM t WHERE ca = cb GROUP BY ca),
-        cut AS (SELECT cluster, count(1)::BIGINT AS cut
-                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
-                      UNION ALL
-                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
-                GROUP BY cluster),
-        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
-               FROM cc GROUP BY cluster),
-        j AS (SELECT nn.cluster, nn.n_nodes,
-                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
-                     COALESCE(cut.cut, 0)::BIGINT AS cut
-              FROM nn
-              LEFT JOIN ein ON ein.cluster = nn.cluster
-              LEFT JOIN cut ON cut.cluster = nn.cluster)
-      SELECT cluster, n_nodes, e_in, cut,
-             (CASE WHEN n_nodes >= 2
-                   THEN e_in * 2000 // (n_nodes * (n_nodes - 1))
-                   ELSE 0 END)::BIGINT AS density_mille,
-             (CASE WHEN 2 * e_in + cut > 0
-                   THEN cut * 1000 // (2 * e_in + cut)
-                   ELSE 0 END)::BIGINT AS conductance_mille
-      FROM j
-      ORDER BY n_nodes DESC, cluster
-      LIMIT 25""",
-
-    // cross-labelset quality: winnow-CC labels (the dedup_winnow_clusters
-    // CTE) scored against MINHASH pairs — cut > 0 for real, the same
-    // integer density/conductance arithmetic as graph_cluster_quality
-    "graph_cluster_xquality" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        wp AS (SELECT a_id, b_id FROM $sqlWinnowPairs w),
-        e AS (SELECT a_id AS src, b_id AS dst FROM wp
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM wp),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
-        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
-              FROM p
-              JOIN cc ca ON ca.doc_id = p.a_id
-              JOIN cc cb ON cb.doc_id = p.b_id),
-        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
-                FROM t WHERE ca = cb GROUP BY ca),
-        cut AS (SELECT cluster, count(1)::BIGINT AS cut
-                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
-                      UNION ALL
-                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
-                GROUP BY cluster),
-        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
-               FROM cc GROUP BY cluster),
-        j AS (SELECT nn.cluster, nn.n_nodes,
-                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
-                     COALESCE(cut.cut, 0)::BIGINT AS cut
-              FROM nn
-              LEFT JOIN ein ON ein.cluster = nn.cluster
-              LEFT JOIN cut ON cut.cluster = nn.cluster)
-      SELECT cluster, n_nodes, e_in, cut,
-             (CASE WHEN n_nodes >= 2
-                   THEN e_in * 2000 // (n_nodes * (n_nodes - 1))
-                   ELSE 0 END)::BIGINT AS density_mille,
-             (CASE WHEN 2 * e_in + cut > 0
-                   THEN cut * 1000 // (2 * e_in + cut)
-                   ELSE 0 END)::BIGINT AS conductance_mille
-      FROM j
-      ORDER BY n_nodes DESC, cluster
-      LIMIT 25""",
-
-    // same cross-labelset CTE chain as graph_cluster_xquality, with the
-    // quantized modularity arithmetic (t <= 1e6 by construction — no
-    // 128-bit anywhere, identical on both engines)
-    "graph_modularity" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        wp AS (SELECT a_id, b_id FROM $sqlWinnowPairs w),
-        e AS (SELECT a_id AS src, b_id AS dst FROM wp
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM wp),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
-        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-        mm AS (SELECT count(1)::BIGINT AS m FROM p),
-        t AS (SELECT ca.cluster AS ca, cb.cluster AS cb
-              FROM p
-              JOIN cc ca ON ca.doc_id = p.a_id
-              JOIN cc cb ON cb.doc_id = p.b_id),
-        ein AS (SELECT ca AS cluster, count(1)::BIGINT AS e_in
-                FROM t WHERE ca = cb GROUP BY ca),
-        cut AS (SELECT cluster, count(1)::BIGINT AS cut
-                FROM (SELECT ca AS cluster FROM t WHERE ca <> cb
-                      UNION ALL
-                      SELECT cb AS cluster FROM t WHERE ca <> cb) x
-                GROUP BY cluster),
-        nn AS (SELECT cluster, count(1)::BIGINT AS n_nodes
-               FROM cc GROUP BY cluster),
-        j AS (SELECT nn.cluster, nn.n_nodes,
-                     COALESCE(ein.e_in, 0)::BIGINT AS e_in,
-                     COALESCE(cut.cut, 0)::BIGINT AS cut,
-                     mm.m
-              FROM nn
-              LEFT JOIN ein ON ein.cluster = nn.cluster
-              LEFT JOIN cut ON cut.cluster = nn.cluster
-              CROSS JOIN mm),
-        k AS (SELECT *, (2 * e_in + cut) AS d_sum,
-                     (CASE WHEN m > 0
-                           THEN ((2 * e_in + cut) * 1000000) // (2 * m)
-                           ELSE 0 END)::BIGINT AS t
-              FROM j),
-        c AS (SELECT *,
-                     (CASE WHEN m > 0
-                           THEN (e_in * 1000000) // m - (t * t) // 1000000
-                           ELSE 0 END)::BIGINT AS contrib_ppm
-              FROM k)
-      SELECT cluster, n_nodes, e_in, d_sum, contrib_ppm,
-             (sum(contrib_ppm) OVER ())::BIGINT AS q_ppm
-      FROM c
-      ORDER BY n_nodes DESC, cluster
-      LIMIT 25""",
-
-    // cluster-keyed split: same recursive-CTE labels as dedup_clusters,
-    // split arithmetic mirrored from pipe_split but over the label
-    "pipe_cluster_split" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM p),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
-        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-        s AS (SELECT d.doc_id, d.n_chars, cc.cluster,
-                     ('0x' || substr(md5('csplit|' || cc.cluster::VARCHAR),
-                       1, 12))::BIGINT % 1000 AS m
-              FROM documents d JOIN cc ON d.doc_id = cc.doc_id)
-      SELECT CASE WHEN m < 980 THEN 'train'
-                  WHEN m < 990 THEN 'val'
-                  ELSE 'test' END AS split,
-             count(1)::BIGINT AS n_docs,
-             count(DISTINCT cluster)::BIGINT AS n_clusters,
-             sum(n_chars)::BIGINT AS total_chars
-      FROM s
-      GROUP BY 1
-      ORDER BY split""",
-
-    "pipe_cluster_dedup" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM p),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src),
-        cc AS (SELECT id AS doc_id, min(r) AS cluster FROM reach GROUP BY id),
-        lab AS (SELECT d.doc_id, d.lang, d.n_chars, cc.cluster
-                FROM documents d JOIN cc ON d.doc_id = cc.doc_id),
-        cmax AS (SELECT cluster, max(n_chars) AS mx FROM lab GROUP BY cluster),
-        keep AS (SELECT lab.cluster, min(lab.doc_id) AS doc_id
-                 FROM lab JOIN cmax ON lab.cluster = cmax.cluster
-                 WHERE lab.n_chars = cmax.mx
-                 GROUP BY lab.cluster)
-      SELECT d.lang, count(1) AS n_docs,
-             count(k.doc_id) AS n_kept,
-             count(1) - count(k.doc_id) AS n_dropped
-      FROM documents d LEFT JOIN keep k ON d.doc_id = k.doc_id
-      GROUP BY d.lang
-      ORDER BY d.lang""",
-
-    "graph_pagerank" -> {
-      def round(n: Int): String = s"""
-           c$n AS (SELECT e.dst, CAST(sum(r.r // d.deg) AS BIGINT) AS s
-                   FROM e JOIN d ON e.src = d.src
-                   JOIN r${n - 1} r ON e.src = r.id
-                   GROUP BY e.dst),
-           r$n AS (SELECT nd.id,
-                          150000 + (85 * coalesce(c.s, 0)) // 100 AS r
-                   FROM nodes nd LEFT JOIN c$n c ON nd.id = c.dst)"""
-      s"""
-      WITH p AS (SELECT a_id, b_id FROM (${minhashPairsSql(ordered = false)}) mp),
-           e AS (SELECT a_id AS src, b_id AS dst FROM p
-                 UNION ALL
-                 SELECT b_id AS src, a_id AS dst FROM p),
-           d AS (SELECT src, count(1) AS deg FROM e GROUP BY src),
-           nodes AS (SELECT doc_id AS id FROM documents),
-           r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS r FROM nodes),
-           ${round(1)},
-           ${round(2)},
-           ${round(3)}
-      SELECT id AS doc_id, CAST(r AS BIGINT) AS rank
-      FROM r3
-      ORDER BY doc_id"""
-    },
-
-    "dedup_pair_degrees" -> s"""
-      WITH mp AS (${minhashPairsSql(ordered = false)}),
-           deg AS (SELECT id, count(1) AS degree FROM (
-                     SELECT a_id AS id FROM mp
-                     UNION ALL
-                     SELECT b_id AS id FROM mp)
-                   GROUP BY id)
-      SELECT degree, count(1) AS n_nodes
-      FROM deg
-      GROUP BY degree
-      ORDER BY degree""",
-
-    // degree-ordered triangle orientation mirrored edge-for-edge; the
-    // closing-edge join direction makes each triangle count exactly once
-    "graph_triangles" -> s"""
-      WITH mp AS (SELECT a_id, b_id
-                  FROM (${minhashPairsSql(ordered = false)}) p),
-           deg AS (SELECT id, count(1) AS degree FROM (
-                     SELECT a_id AS id FROM mp
-                     UNION ALL
-                     SELECT b_id AS id FROM mp)
-                   GROUP BY id),
-           o AS (SELECT CASE WHEN da.degree < db.degree
-                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
-                        THEN mp.a_id ELSE mp.b_id END AS src,
-                        CASE WHEN da.degree < db.degree
-                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
-                        THEN mp.b_id ELSE mp.a_id END AS dst
-                 FROM mp
-                 JOIN deg da ON mp.a_id = da.id
-                 JOIN deg db ON mp.b_id = db.id),
-           tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
-                   FROM o e1
-                   JOIN o e2 ON e1.src = e2.src AND e1.dst <> e2.dst
-                   JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
-           x AS (SELECT u AS doc_id FROM tri
-                 UNION ALL SELECT v FROM tri
-                 UNION ALL SELECT w FROM tri)
-      SELECT doc_id, count(1) AS n_tri
-      FROM x
-      GROUP BY doc_id
-      ORDER BY doc_id""",
-
-    // the graph_triangles orientation mirrored over the md5-sampled
-    // edge set; tri counts each triangle ONCE (at its base edge), so
-    // no DIV 3 is needed here — count(1) over tri IS T_sampled
-    "graph_tri_estimate" -> s"""
-      WITH mp AS (SELECT a_id, b_id
-                  FROM (${minhashPairsSql(ordered = false)}) p
-                  WHERE ('0x' || substr(md5('triest|' || a_id::VARCHAR
-                          || '|' || b_id::VARCHAR), 1, 12))::BIGINT
-                        % $TRI_EST_MOD = 0),
-           deg AS (SELECT id, count(1) AS degree FROM (
-                     SELECT a_id AS id FROM mp
-                     UNION ALL
-                     SELECT b_id AS id FROM mp)
-                   GROUP BY id),
-           o AS (SELECT CASE WHEN da.degree < db.degree
-                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
-                        THEN mp.a_id ELSE mp.b_id END AS src,
-                        CASE WHEN da.degree < db.degree
-                             OR (da.degree = db.degree AND mp.a_id < mp.b_id)
-                        THEN mp.b_id ELSE mp.a_id END AS dst
-                 FROM mp
-                 JOIN deg da ON mp.a_id = da.id
-                 JOIN deg db ON mp.b_id = db.id),
-           tri AS (SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
-                   FROM o e1
-                   JOIN o e2 ON e1.src = e2.src AND e1.dst <> e2.dst
-                   JOIN o e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
-           t AS (SELECT count(1) AS n_tri_sampled FROM tri),
-           e AS (SELECT count(1) AS n_edges_kept FROM mp)
-      SELECT e.n_edges_kept, t.n_tri_sampled,
-             t.n_tri_sampled * ${TRI_EST_MOD * TRI_EST_MOD * TRI_EST_MOD}
-               AS tri_estimate
-      FROM e, t""",
-
-    // the same 8 bounded peel rounds unrolled CTE-for-CTE (the
-    // graph_pagerank discipline). Every CTE is MATERIALIZED: each
-    // round references the previous edge set three times, so DuckDB's
-    // default inline expansion is ~3^8 scans of the base table (it
-    // exhausts file handles before it exhausts patience)
-    "graph_kcore" -> {
-      def peel(n: Int): String = s"""
-           k$n AS MATERIALIZED (SELECT src AS node FROM e${n - 1}
-                   GROUP BY src HAVING count(1) >= 3),
-           e$n AS MATERIALIZED (SELECT e.src, e.dst FROM e${n - 1} e
-                   JOIN k$n ka ON e.src = ka.node
-                   JOIN k$n kb ON e.dst = kb.node)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           ${(1 to 8).map(peel).mkString(",")}
-      SELECT src AS doc_id, count(1) AS core_deg
-      FROM e8
-      GROUP BY src
-      ORDER BY doc_id"""
-    },
-
-    // coreness via the identical bounded h-index chain, unrolled:
-    // c0 = degree; round r computes, per node, the H-index of its
-    // neighbors' round-(r-1) values from the clamped value histogram
-    // (max over desc-ordered values of least(value, cumulative count)
-    // — the citation-histogram identity, clamp mirrored verbatim).
-    // Engine-identical to the Spark loop by construction: Spark's
-    // sum-unchanged early exit only skips identity rounds, and both
-    // sides run at most CORENESS_ROUNDS rounds.
-    "graph_coreness" -> {
-      def round(r: Int): String = s"""
-           j$r AS (SELECT e.src, least(c.c, $CORENESS_MAX_H) AS cv
-                   FROM e0 e JOIN c${r - 1} c ON c.id = e.dst),
-           g$r AS (SELECT src, cv AS v, count(1)::BIGINT AS n
-                   FROM j$r GROUP BY src, cv),
-           r$r AS (SELECT src, v,
-                          sum(n) OVER (PARTITION BY src
-                                       ORDER BY v DESC) AS cum
-                   FROM g$r),
-           c$r AS MATERIALIZED (SELECT src AS id,
-                          max(least(v, cum))::BIGINT AS c
-                   FROM r$r GROUP BY src)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           c0 AS MATERIALIZED (SELECT src AS id, count(1)::BIGINT AS c
-                  FROM e0 GROUP BY src),
-           ${(1 to CORENESS_ROUNDS).map(round).mkString(",")}
-      SELECT id AS doc_id, c AS coreness
-      FROM c$CORENESS_ROUNDS
-      ORDER BY doc_id"""
-    },
-
-    // walks mirrored pick-for-pick: identical dst-sorted ranks
-    // (row_number per node), identical md5(start|at|i) mod degree
-    // neighbor selection, one CTE per step
-    "graph_walks" -> {
-      def step(i: Int): String = s"""
-           s$i AS (SELECT w.start, r.dst AS at, ${i}::BIGINT AS step
-                   FROM s${i - 1} w
-                   JOIN dg d ON w.at = d.src
-                   JOIN rk r ON r.src = w.at
-                    AND r.rk = 1 + ('0x' || substr(md5(
-                          w.start::VARCHAR || '|' || w.at::VARCHAR
-                            || '|$i'), 1, 12))::BIGINT % d.deg)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           rk AS MATERIALIZED (SELECT src, dst,
-                  row_number() OVER (PARTITION BY src ORDER BY dst) AS rk
-                  FROM e0),
-           dg AS MATERIALIZED (SELECT src, count(1)::BIGINT AS deg
-                  FROM e0 GROUP BY src),
-           s0 AS (SELECT DISTINCT src AS start, src AS at, 0::BIGINT AS step
-                  FROM e0),
-           ${(1 to WALK_STEPS).map(step).mkString(",")}
-      SELECT start AS doc_id, step, at AS at_node
-      FROM (${(0 to WALK_STEPS).map(i => s"SELECT * FROM s$i")
-        .mkString(" UNION ALL ")}) u
-      ORDER BY doc_id, step"""
-    },
-
-    // the same bounded Bellman-Ford relaxation unrolled CTE-for-CTE:
-    // min is order-insensitive, so the mirror is engine-identical by
-    // construction; seeds rank-derived so corpus re-keying can't empty
-    // the set
-    "graph_bfs" -> {
-      def round(r: Int): String = s"""
-           p$r AS (SELECT e.src AS id, min(d.dist) + 1 AS dist
-                   FROM e0 e JOIN d${r - 1} d ON e.dst = d.id
-                   GROUP BY e.src),
-           d$r AS MATERIALIZED (SELECT id, min(dist)::BIGINT AS dist FROM (
-                     SELECT id, dist FROM d${r - 1}
-                     UNION ALL
-                     SELECT id, dist FROM p$r) u
-                   GROUP BY id)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           d0 AS MATERIALIZED (SELECT id, 0::BIGINT AS dist FROM (
-                  SELECT DISTINCT src AS id FROM e0
-                  ORDER BY id LIMIT $BFS_SEEDS) s),
-           ${(1 to BFS_ROUNDS).map(round).mkString(",")}
-      SELECT id AS doc_id, dist
-      FROM d$BFS_ROUNDS
-      ORDER BY doc_id"""
-    },
-
-    // the BFS relaxation chain with the seed carried in the state key,
-    // then the per-term-floored harmonic sum
-    "graph_harmonic" -> {
-      def round(r: Int): String = s"""
-           p$r AS (SELECT d.seed, e.src AS id, min(d.dist) + 1 AS dist
-                   FROM e0 e JOIN d${r - 1} d ON e.dst = d.id
-                   GROUP BY d.seed, e.src),
-           d$r AS MATERIALIZED (SELECT seed, id, min(dist)::BIGINT AS dist
-                   FROM (
-                     SELECT seed, id, dist FROM d${r - 1}
-                     UNION ALL
-                     SELECT seed, id, dist FROM p$r) u
-                   GROUP BY seed, id)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           d0 AS MATERIALIZED (SELECT id AS seed, id, 0::BIGINT AS dist
-                  FROM (
-                  SELECT DISTINCT src AS id FROM e0
-                  ORDER BY id LIMIT $BFS_SEEDS) s),
-           ${(1 to BFS_ROUNDS).map(round).mkString(",")}
-      SELECT id AS doc_id, count(1) AS n_seeds_reached,
-             sum(1000000 // dist)::BIGINT AS harmonic_e6
-      FROM d$BFS_ROUNDS
-      WHERE dist > 0
-      GROUP BY id
-      ORDER BY harmonic_e6 DESC, doc_id
-      LIMIT 25""" },
-
-    // the same fixed synchronous label-propagation rounds unrolled
-    // CTE-for-CTE: per (node, neighbor-label) counts, then max count
-    // with ties to the smallest label — Spark's max(struct(n, -lab))
-    // argmax expressed as a window max + min(lab) filter. MATERIALIZED
-    // per the graph_kcore file-handle discipline.
-    "graph_lpa" -> {
-      def round(r: Int): String = s"""
-           f$r AS (SELECT e.src, c.lab, count(1)::BIGINT AS n
-                   FROM e0 e JOIN c${r - 1} c ON e.dst = c.id
-                   GROUP BY e.src, c.lab),
-           c$r AS MATERIALIZED (SELECT src AS id, min(lab) AS lab FROM (
-                     SELECT src, lab, n,
-                            max(n) OVER (PARTITION BY src) AS mx
-                     FROM f$r) t
-                   WHERE n = mx
-                   GROUP BY src)"""
-      s"""
-      WITH p AS MATERIALIZED (SELECT a_id, b_id
-                 FROM (${minhashPairsSql(ordered = false)}) mp),
-           e0 AS MATERIALIZED (SELECT a_id AS src, b_id AS dst FROM p
-                  UNION ALL
-                  SELECT b_id AS src, a_id AS dst FROM p),
-           c0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS lab
-                  FROM e0),
-           ${(1 to LPA_ROUNDS).map(round).mkString(",")}
-      SELECT id AS doc_id, lab AS community
-      FROM c$LPA_ROUNDS
-      ORDER BY doc_id"""
-    },
-
-    // common neighbors via the (oracle-scale-fine) co-neighbor wedge
-    // enumeration, under the SAME hub cap as edgeJaccardFrom
-    "graph_edge_jaccard" ->
-      sqlEdgeJaccard(s"SELECT a_id, b_id FROM (${
-        minhashPairsSql(ordered = false)}) mp", EDGE_JACC_MAX_DEG),
-
-    // cap-parity probe: same operator, tiny synthetic star+clique
-    // graph with a genuine over-cap hub (see the queries entry)
-    "graph_ejacc_hubcap" ->
-      sqlEdgeJaccard(sqlHubcapPairs, HUBCAP_MAX_DEG),
-
-    "dedup_contamination" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
-                  FROM documents),
-           hh AS (SELECT doc_id,
-                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
-                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
-                  FROM sh),
-           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0),
-           agg AS (SELECT hh.doc_id AS doc_id, count(1) AS n_sh,
-                          count(bh.h1) AS n_hit
-                   FROM hh LEFT JOIN bh
-                     ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
-                   GROUP BY hh.doc_id)
-      SELECT doc_id, n_sh, n_hit, (n_hit * 1000) // n_sh AS mille
-      FROM agg
-      WHERE n_hit >= 3
-      ORDER BY doc_id""",
-
-    // The bloom prefilter is transparent to the RESULT (false positives
-    // die in the exact join), so the oracle is the plain inner join.
-    "dedup_bloom_contam" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
-                  FROM documents),
-           hh AS (SELECT doc_id,
-                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
-                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
-                  FROM sh),
-           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0)
-      SELECT hh.doc_id AS doc_id, count(1) AS n_hit
-      FROM hh JOIN bh ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
-      GROUP BY hh.doc_id
-      HAVING count(1) >= 3
-      ORDER BY doc_id""",
-
-    "pipe_decontaminate" -> s"""
-      WITH sh AS (SELECT doc_id, unnest(${sqlShingles(Text.sqlTokens("lower(text)"))}) AS s
-                  FROM documents),
-           hh AS (SELECT doc_id,
-                         ('0x' || substr(md5(s), 1, 12))::BIGINT AS h1,
-                         ('0x' || substr(md5(s), 13, 12))::BIGINT AS h2
-                  FROM sh),
-           bh AS (SELECT DISTINCT h1, h2 FROM hh WHERE doc_id % 50 = 0),
-           flagged AS (SELECT hh.doc_id
-                       FROM hh JOIN bh ON hh.h1 = bh.h1 AND hh.h2 = bh.h2
-                       GROUP BY hh.doc_id
-                       HAVING count(1) >= 3)
-      SELECT lang, count(1) AS n_docs
-      FROM documents
-      WHERE doc_id NOT IN (SELECT doc_id FROM flagged)
-      GROUP BY lang
-      ORDER BY lang""",
-
-    "dedup_jaccard_pairs" -> s"""
-      WITH t AS (
-        SELECT doc_id, list_distinct(${Text.sqlTokens("lower(text)")}) AS ts,
-               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
-        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
-      ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             len(list_intersect(a.ts, b.ts))::DOUBLE
-               / len(list_distinct(a.ts || b.ts))::DOUBLE AS jac
-      FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-      WHERE a.blk IN (SELECT blk FROM ok)
-        AND len(list_intersect(a.ts, b.ts))::DOUBLE
-              / len(list_distinct(a.ts || b.ts))::DOUBLE >= 0.5
-      ORDER BY a_id, b_id""",
-
-    // both SNM passes mirrored: per-block rank windows, W-1 neighbor
-    // offsets, exact distinct-token Jaccard in integer per-mille
-    "dedup_sorted_neighborhood" -> s"""
-      WITH base AS (
-        SELECT doc_id,
-               substr(regexp_replace(lower(text), '[^a-z0-9]+', '', 'g'),
-                      1, 12) AS k1,
-               substr(reverse(regexp_replace(lower(text), '[^a-z0-9]+', '',
-                      'g')), 1, 12) AS k2,
-               list_sort(list_distinct(${Text.sqlTokens("lower(text)")})) AS ts
-        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
-      r1 AS (SELECT doc_id, k1 AS key, substr(k1, 1, 2) AS blk,
-                    row_number() OVER (PARTITION BY substr(k1, 1, 2)
-                      ORDER BY k1, doc_id) AS rn FROM base),
-      r2 AS (SELECT doc_id, k2 AS key, substr(k2, 1, 2) AS blk,
-                    row_number() OVER (PARTITION BY substr(k2, 1, 2)
-                      ORDER BY k2, doc_id) AS rn FROM base),
-      cand AS (
-        SELECT least(a.doc_id, b.doc_id) AS a_id,
-               greatest(a.doc_id, b.doc_id) AS b_id
-        FROM r1 a JOIN r1 b ON a.blk = b.blk
-          AND b.rn BETWEEN a.rn + 1 AND a.rn + ${SNM_W - 1}
-        UNION
-        SELECT least(a.doc_id, b.doc_id), greatest(a.doc_id, b.doc_id)
-        FROM r2 a JOIN r2 b ON a.blk = b.blk
-          AND b.rn BETWEEN a.rn + 1 AND a.rn + ${SNM_W - 1}),
-      scored AS (
-        SELECT c.a_id, c.b_id,
-               ((1000 * len(list_intersect(ta.ts, tb.ts)))
-                 // (len(ta.ts) + len(tb.ts)
-                     - len(list_intersect(ta.ts, tb.ts))))::BIGINT
-                 AS jac_mille
-        FROM cand c JOIN base ta ON ta.doc_id = c.a_id
-                    JOIN base tb ON tb.doc_id = c.b_id)
-      SELECT a_id, b_id, jac_mille
-      FROM scored WHERE jac_mille >= 300
-      ORDER BY a_id, b_id""",
-
-    // normalization chain mirrored regex-for-regex ('g' matches Spark's
-    // replace-all default)
-    "dedup_url_canonical" -> """
-      WITH u AS (
-        SELECT regexp_replace(
-                 lower(regexp_replace(
-                   (CASE WHEN doc_id % 3 = 0 THEN 'HTTP://EX.COM'
-                         ELSE 'http://ex.com' END)
-                   || '/' || lang || '/doc' || (doc_id % 100)::VARCHAR
-                   || (CASE WHEN doc_id % 2 = 0 THEN '?utm_source=x&id=7'
-                            ELSE '?id=7' END)
-                   || (CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END),
-                   '#.*', '', 'g')),
-                 'utm_[a-z]+=[^&]*&', '', 'g') AS url
-        FROM documents)
-      SELECT url, count(1) AS n_variants
-      FROM u
-      GROUP BY url
-      HAVING count(1) >= 2
-      ORDER BY url""",
-
-    // multiset intersection mirrored as sum(least(tf_a, tf_b)) over
-    // per-doc token frequencies; pairs with no common token never get a
-    // smin row but score 0 < 500 in the engine, so both sides drop them
-    "dedup_wminhash_pairs" -> wminhashPairsSql,
-
-    "dedup_weighted_jaccard" -> s"""
-      WITH t AS (
-        SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts,
-               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
-        FROM documents WHERE len(${Text.sqlTokens("lower(text)")}) > 0),
-      ok AS (SELECT blk FROM t GROUP BY blk
-             HAVING count(1) BETWEEN 2 AND $MAX_BLOCK),
-      tf AS (SELECT doc_id, tok, count(1) AS tf
-             FROM (SELECT doc_id, unnest(ts) AS tok FROM t)
-             GROUP BY doc_id, tok),
-      pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                       len(a.ts) AS ta, len(b.ts) AS tb
-                FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-                WHERE a.blk IN (SELECT blk FROM ok)),
-      sm AS (SELECT p.a_id, p.b_id, sum(least(fa.tf, fb.tf)) AS smin
-             FROM pairs p
-             JOIN tf fa ON fa.doc_id = p.a_id
-             JOIN tf fb ON fb.doc_id = p.b_id AND fb.tok = fa.tok
-             GROUP BY p.a_id, p.b_id)
-      SELECT p.a_id, p.b_id,
-             ((1000 * sm.smin) // (p.ta + p.tb - sm.smin))::BIGINT
-               AS wjac_mille
-      FROM pairs p JOIN sm ON p.a_id = sm.a_id AND p.b_id = sm.b_id
-      WHERE (1000 * sm.smin) // (p.ta + p.tb - sm.smin) >= 500
-      ORDER BY p.a_id, p.b_id""",
-
-    "dedup_spans" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
-           idx AS (SELECT doc_id, ts, len(ts) AS n,
-                          CASE WHEN len(ts) <= $SPAN_W THEN 1
-                               ELSE (len(ts) - $SPAN_W + ${SPAN_W - 1}) // $SPAN_W + 1 END AS nch
-                   FROM t WHERE len(ts) > 0),
-           sp AS (SELECT doc_id, g.k AS span_idx,
-                         array_to_string(
-                           ts[g.k * $SPAN_W + 1 : least(g.k * $SPAN_W + $SPAN_W, n)], ' ')
-                           AS span,
-                         doc_id * ${1L << 20} + g.k AS key
-                  FROM idx
-                  CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
-                  WHERE g.k < nch),
-           fk AS (SELECT doc_id, key,
-                         min(key) OVER (PARTITION BY span) AS first_k
-                  FROM sp)
-      SELECT doc_id, count(1) AS n_spans,
-             CAST(sum(CASE WHEN key = first_k THEN 0 ELSE 1 END) AS BIGINT) AS n_dup_spans,
-             ((count(1) - CAST(sum(CASE WHEN key = first_k THEN 0 ELSE 1 END) AS BIGINT)) * 1000)
-               // count(1) AS kept_mille
-      FROM fk
-      GROUP BY doc_id
-      ORDER BY doc_id""",
-
-    // self-join-on-expanded-windows mirror of duplicatedSpansFrom: the
-    // oracle pays the O(positions * L) window-text blowup the Spark
-    // side's rolling fingerprints avoid — affordable at sf0.01, which
-    // is exactly why the engine side doesn't do it this way
-    "dedup_substrings" -> s"""
-      WITH t AS (SELECT doc_id,
-                        list_filter(string_split_regex(text, '[^A-Za-z0-9]+'),
-                                    x -> x <> '') AS ts
-                 FROM documents),
-           w AS (SELECT doc_id, i - 1 AS pos,
-                        array_to_string(ts[i : i + $SUBSTR_L - 1], ' ') AS win
-                 FROM (SELECT doc_id, ts,
-                              unnest(range(1, len(ts) - $SUBSTR_L + 2)) AS i
-                       FROM t WHERE len(ts) >= $SUBSTR_L)),
-           d AS (SELECT win FROM w GROUP BY win HAVING count(1) >= 2),
-           s AS (SELECT doc_id, pos FROM w WHERE win IN (SELECT win FROM d)),
-           m AS (SELECT doc_id, pos,
-                        CASE WHEN lag(pos) OVER
-                               (PARTITION BY doc_id ORDER BY pos) IS NULL
-                             OR pos - lag(pos) OVER
-                               (PARTITION BY doc_id ORDER BY pos) > $SUBSTR_L
-                             THEN 1 ELSE 0 END AS brk
-                 FROM s),
-           g AS (SELECT doc_id, pos,
-                        sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
-                 FROM m)
-      SELECT doc_id, min(pos)::BIGINT AS span_start,
-             (max(pos) + $SUBSTR_L)::BIGINT AS span_end,
-             (max(pos) + $SUBSTR_L - min(pos))::BIGINT AS span_tokens
-      FROM g
-      GROUP BY doc_id, gid
-      ORDER BY doc_id, span_start""",
-
-    // mirror of substrCutFrom: windows over the LOWERCASED token
-    // stream, first occurrence by packed (doc_id, pos) key, non-first
-    // occurrences expand to cut positions, cleaned stream fingerprinted
-    "pipe_substr_cut" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
-           w AS (SELECT doc_id, i - 1 AS pos,
-                        doc_id * ${1L << 20} + i - 1 AS k,
-                        array_to_string(ts[i : i + $SUBSTR_L - 1], ' ') AS win
-                 FROM (SELECT doc_id, ts,
-                              unnest(range(1, len(ts) - $SUBSTR_L + 2)) AS i
-                       FROM t WHERE len(ts) >= $SUBSTR_L)),
-           g AS (SELECT win, min(k) AS first_k FROM w
-                 GROUP BY win HAVING count(1) >= 2),
-           c AS (SELECT w.doc_id, w.pos FROM w JOIN g USING (win)
-                 WHERE w.k <> g.first_k),
-           m AS (SELECT doc_id, pos,
-                        CASE WHEN lag(pos) OVER
-                               (PARTITION BY doc_id ORDER BY pos) IS NULL
-                             OR pos - lag(pos) OVER
-                               (PARTITION BY doc_id ORDER BY pos) > $SUBSTR_L
-                             THEN 1 ELSE 0 END AS brk
-                 FROM c),
-           gg AS (SELECT doc_id, pos,
-                         sum(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS gid
-                  FROM m),
-           sp AS (SELECT doc_id, min(pos) AS s, max(pos) + $SUBSTR_L AS e
-                  FROM gg GROUP BY doc_id, gid),
-           cutpos AS (SELECT doc_id, unnest(range(s, e)) AS p FROM sp),
-           tokpos AS (SELECT doc_id, i - 1 AS p, ts[i] AS tok
-                      FROM (SELECT doc_id, ts,
-                                   unnest(range(1, len(ts) + 1)) AS i
-                            FROM t)),
-           ka AS (SELECT tp.doc_id,
-                         count(1)::BIGINT AS n_tokens,
-                         count(1) FILTER (WHERE cp.p IS NOT NULL)::BIGINT AS n_cut,
-                         md5(coalesce(
-                           string_agg(tp.tok, ' ' ORDER BY tp.p)
-                             FILTER (WHERE cp.p IS NULL), '')) AS cleaned_md5
-                  FROM tokpos tp
-                  LEFT JOIN cutpos cp ON tp.doc_id = cp.doc_id AND tp.p = cp.p
-                  GROUP BY tp.doc_id)
-      SELECT d.doc_id,
-             coalesce(ka.n_tokens, 0)::BIGINT AS n_tokens,
-             coalesce(ka.n_cut, 0)::BIGINT AS n_cut,
-             coalesce(ka.cleaned_md5, md5('')) AS cleaned_md5
-      FROM documents d LEFT JOIN ka USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    "dedup_incremental" -> incrementalSql,
-
-    // the streaming twin produces the identical row set by construction
-    "dedup_stream_probe" -> incrementalSql,
-
-    "dedup_ppjoin_pairs" -> (ppjoinPairsSqlNoOrder + """
-      ORDER BY a_id, b_id"""),
-
-    // quality metric AS a gated query: exact PPJoin truth vs the LSH
-    // estimate pipeline, joined on the id pair — both pipelines are
-    // deterministic, so recall/precision themselves hash-compare
-    "dedup_lsh_recall" -> s"""
-      WITH tr AS (SELECT a_id, b_id FROM ($ppjoinPairsSqlNoOrder) t0),
-           es AS (SELECT a_id, b_id
-                  FROM (${minhashPairsSql(ordered = false)}) mp),
-           h AS (SELECT tr.a_id FROM tr JOIN es
-                 ON tr.a_id = es.a_id AND tr.b_id = es.b_id),
-           c AS (SELECT (SELECT count(1) FROM tr)::BIGINT AS n_true,
-                        (SELECT count(1) FROM es)::BIGINT AS n_est,
-                        (SELECT count(1) FROM h)::BIGINT AS n_hit)
-      SELECT n_true, n_est, n_hit,
-             (CASE WHEN n_true > 0 THEN (1000 * n_hit) // n_true
-                   ELSE 1000 END)::BIGINT AS recall_mille,
-             (CASE WHEN n_est > 0 THEN (1000 * n_hit) // n_est
-                   ELSE 1000 END)::BIGINT AS precision_mille
-      FROM c""",
-
-    "pipe_dedup_cascade" -> s"""
-      WITH all_docs AS (
-             SELECT doc_id, text FROM documents
-             UNION ALL
-             SELECT doc_id + 1000000 AS doc_id, text FROM documents
-             WHERE doc_id % 10 = 0),
-           g AS (SELECT md5(text) AS h, min(doc_id) AS doc_id,
-                        count(1) AS n_copies
-                 FROM all_docs GROUP BY md5(text)),
-           canon AS (SELECT g.doc_id, a.text, g.n_copies
-                     FROM g JOIN all_docs a ON g.doc_id = a.doc_id),
-           ${sqlSigCtesFrom("canon")},
-           bands AS (
-             SELECT doc_id, sig, bb.b AS band,
-                    array_to_string(list_slice(sig, bb.b * $ROWS + 1, bb.b * $ROWS + $ROWS), '|') AS bkey
-             FROM sg CROSS JOIN (SELECT unnest(range(0, $BANDS)) AS b) bb),
-           hotb AS (SELECT band, bkey FROM bands
-                    GROUP BY band, bkey HAVING count(1) > $MINHASH_MAX_BUCKET),
-           cool AS (SELECT b.* FROM bands b
-                    WHERE NOT EXISTS (SELECT 1 FROM hotb h
-                                      WHERE h.band = b.band
-                                        AND h.bkey = b.bkey)),
-           cand AS (
-             SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-                    a.sig AS a_sig, b.sig AS b_sig
-             FROM cool a JOIN cool b
-               ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
-      SELECT c.a_id, c.b_id,
-             list_aggregate(list_transform(range(1, ${K + 1}),
-               i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END), 'sum')::DOUBLE
-               / $K.0 AS est_jaccard,
-             ga.n_copies AS a_copies, gb.n_copies AS b_copies
-      FROM cand c JOIN canon ga ON c.a_id = ga.doc_id
-                  JOIN canon gb ON c.b_id = gb.doc_id
-      WHERE list_aggregate(list_transform(range(1, ${K + 1}),
-              i -> CASE WHEN a_sig[i] = b_sig[i] THEN 1 ELSE 0 END), 'sum')::DOUBLE
-              / $K.0 >= 0.5
-      ORDER BY a_id, b_id""",
-
-    "dedup_winnow_pairs" -> s"""
-      SELECT a_id, b_id, n_shared FROM $sqlWinnowPairs
-      ORDER BY a_id, b_id""",
-
-    "dedup_winnow_clusters" -> s"""
-      WITH RECURSIVE
-        p AS (SELECT a_id, b_id FROM $sqlWinnowPairs wp),
-        e AS (SELECT a_id AS src, b_id AS dst FROM p
-              UNION ALL
-              SELECT b_id AS src, a_id AS dst FROM p),
-        reach(id, r) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT e.dst, reach.r FROM reach JOIN e ON reach.id = e.src)
-      SELECT id AS doc_id, min(r) AS cluster
-      FROM reach
-      GROUP BY id
-      ORDER BY doc_id""",
-
-    "dedup_levenshtein" -> s"""
-      WITH t AS (
-        SELECT doc_id, text,
-               array_to_string((${Text.sqlTokens("lower(text)")})[1:3], ' ') AS blk
-        FROM documents),
-      ok AS (SELECT blk FROM t GROUP BY blk HAVING count(1) <= $MAX_BLOCK)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             levenshtein(a.text, b.text)::BIGINT AS edit_dist
-      FROM t a JOIN t b ON a.blk = b.blk AND a.doc_id < b.doc_id
-      WHERE a.blk IN (SELECT blk FROM ok)
-        AND levenshtein(a.text, b.text) <= 50
-      ORDER BY a_id, b_id""",
-
-    "dedup_simhash" -> (simhashSql + "\n      ORDER BY doc_id"),
-
-    "dedup_simhash_pairs" -> s"""
-      WITH sh AS ($simhashSql),
-      blocks AS (
-        SELECT doc_id, simhash, bb.b AS blk,
-               (simhash >> (bb.b * 15)) & 32767 AS blk_val
-        FROM sh CROSS JOIN (SELECT unnest(range(0, 4)) AS b) bb)
-      SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-             bit_count(xor(a.simhash, b.simhash))::BIGINT AS hamming
-      FROM blocks a JOIN blocks b
-        ON a.blk = b.blk AND a.blk_val = b.blk_val AND a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      ORDER BY a_id, b_id""",
-
-    "dedup_embedding_topk" -> """
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings)
-      SELECT a.vec_id AS a_id, b.vec_id AS b_id, a.label,
-             round(list_cosine_similarity(a.v, b.v) * 1e6)::BIGINT AS icos_e6
-      FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-      ORDER BY icos_e6 DESC, a_id, b_id
-      LIMIT 20"""
-  )
 }
 

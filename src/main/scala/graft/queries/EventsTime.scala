@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Scratch, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import graft.operators.AsofJoin
 import graft.streaming.Streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -517,19 +517,22 @@ object EventsTime extends QueryModule {
     * checkpoint commits nothing, so the read-back is idempotent — the
     * property the memory sink cannot show). The batch read-back of the
     * output dir honors the commit log, so uncommitted/orphan files are
-    * invisible. Dirs are siblings of the replay scratch, so they
-    * inherit its source fingerprint: regenerated testdata gets fresh
-    * dirs, and a same-corpus re-run is a restart, not a duplicate.
-    * Result = the same closed-window counts as ev_stream_replay
-    * (shared oracle arithmetic).
+    * invisible. The checkpoint and output are mutable state whose logs
+    * record absolute paths, so they live in [[Scratch.jvm]], named after
+    * the replay copy (`<copy>_fsink_ck`, `<copy>_fsink_out`, see
+    * [[fileSinkDir]]): they inherit its source fingerprint, and they go
+    * when the JVM does, so no other checkout or JVM ever restores them.
+    * The first call in a JVM is a fresh run; a later call in that JVM is
+    * a restart, not a duplicate. Result = the same closed-window counts
+    * as ev_stream_replay (shared oracle arithmetic).
     */
   def streamFileSinkReplay(s: SparkSession, d: String): DataFrame = {
     val (batch, scratch) = replayScratch(s, d)
     val stream = s.readStream.schema(batch.schema).parquet(scratch)
-    val outDir = scratch + "_fsink_out"
+    val outDir = fileSinkDir(scratch, "out")
     val q = hourlyCounts(stream).writeStream.format("parquet")
       .option("path", outDir)
-      .option("checkpointLocation", scratch + "_fsink_ck")
+      .option("checkpointLocation", fileSinkDir(scratch, "ck"))
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
@@ -538,51 +541,323 @@ object EventsTime extends QueryModule {
     byHour(s.read.parquet(outDir))
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** `<Scratch.jvm>/<copy>_fsink_<part>`: the file-sink replay's state
+    * for the replay copy at `scratch` (`part` is `out` or `ck`). */
+  private[graft] def fileSinkDir(scratch: String, part: String): String =
+    new java.io.File(Scratch.jvm, s"${new java.io.File(scratch).getName}_fsink_$part").getPath
+
+  override def rows: Seq[Query] = Seq(
     // -- watermark semantics, oracle-checked (see windowedReplayOn) -----------
-    "ev_stream_replay" -> onScratch(windowedReplayOn),
-    "ev_stream_file_sink" -> ((s, d) => streamFileSinkReplay(s, d)),
-    "ev_stream_multibatch" -> ((s, d) => streamMultiBatchReplay(s, d)),
-    "ev_stream_late_drop" -> ((s, d) => streamLateDropReplay(s, d)),
+    Query("ev_stream_replay", onScratch(windowedReplayOn),
+      // append-mode emission rule in SQL: a tumbling window materializes
+      // iff the final watermark (max ts - 30 min) passed its end
+      """
+      WITH m AS (SELECT max(ts) AS mx FROM events)
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n
+      FROM events, m
+      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
+      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
+               <= mx - INTERVAL 30 MINUTE
+      ORDER BY hour, event_type"""),
+    Query("ev_stream_file_sink", (s, d) => streamFileSinkReplay(s, d),
+      // file sink: same emission rule as the memory-sink replay — the
+      // sink changes durability (commit log + checkpoint), not content
+      """
+      WITH m AS (SELECT max(ts) AS mx FROM events)
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n
+      FROM events, m
+      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
+      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
+               <= mx - INTERVAL 30 MINUTE
+      ORDER BY hour, event_type"""),
+    Query("ev_stream_multibatch", (s, d) => streamMultiBatchReplay(s, d),
+      // multi-batch replay over time-monotone chunks drops nothing and
+      // emits exactly the windows the FINAL watermark closed — the same
+      // batching-invariant emission rule as the single-batch replay
+      """
+      WITH m AS (SELECT max(ts) AS mx FROM events)
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n
+      FROM events, m
+      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
+      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
+               <= mx - INTERVAL 30 MINUTE
+      ORDER BY hour, event_type"""),
+    Query("ev_stream_late_drop", (s, d) => streamLateDropReplay(s, d),
+      // the late-data path, drop rule EXPLICIT: the three synthetic
+      // chunk-5/6 rows (see lateDropScratch) are reconstructed from
+      // max(ts) with the same interval arithmetic; a synthetic row
+      // survives iff its hourly window end > its batch's late-events
+      // watermark (mx - 30 min for the chunk-6 row — chunks 5/6 rows are
+      // all well inside their filters except the mx - 3 h plant) — that
+      // predicate IS Spark's numRowsDroppedByWatermark filter, and it
+      // kills the mx - 3 h row. Emission = windows the FINAL watermark
+      // (mx + 2 h - 30 min, courtesy of the wm_push row) closed, which
+      // is every real window plus the accepted late_probe's — and never
+      // wm_push's own.
+      """
+      WITH m AS (SELECT max(ts) AS mx FROM events),
+           syn AS (SELECT mx - INTERVAL 3 HOUR AS ts,
+                          'late_probe' AS event_type FROM m
+                   UNION ALL
+                   SELECT mx - INTERVAL 20 MINUTE, 'late_probe' FROM m
+                   UNION ALL
+                   SELECT mx + INTERVAL 2 HOUR, 'wm_push' FROM m),
+           kept AS (SELECT s.ts, s.event_type FROM syn s, m
+                    WHERE date_trunc('hour', s.ts) + INTERVAL 1 HOUR
+                            > mx - INTERVAL 30 MINUTE),
+           aug AS (SELECT ts::TIMESTAMP AS ts, event_type FROM events
+                   UNION ALL
+                   SELECT ts, event_type FROM kept)
+      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n
+      FROM aug, m
+      GROUP BY date_trunc('hour', ts), event_type, mx
+      HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
+               <= mx + INTERVAL 2 HOUR - INTERVAL 30 MINUTE
+      ORDER BY hour, event_type"""),
 
     // -- stream-stream join, driver-checked (see streamJoinReplay) --------
-    "ev_stream_join" -> ((s, d) => streamJoinReplay(s, d)),
-    "ev_stream_semi" -> ((s, d) => streamSemiReplay(s, d)),
+    Query("ev_stream_join", (s, d) => streamJoinReplay(s, d),
+      // inner stream-stream joins emit every match (state-bounding only),
+      // so the mirror is the plain time-bounded self-join
+      """
+      SELECT l.user_id AS user_id, count(1) AS n_pairs,
+             min(epoch_us(l.ts)) AS first_us, max(epoch_us(r.ts)) AS last_us
+      FROM events l JOIN events r
+        ON l.user_id = r.user_id
+       AND l.event_type = 'click' AND r.event_type = 'purchase'
+       AND epoch_us(r.ts) >= epoch_us(l.ts) - 600000000
+       AND epoch_us(r.ts) <= epoch_us(l.ts)
+      GROUP BY l.user_id
+      ORDER BY user_id"""),
+    Query("ev_stream_semi", (s, d) => streamSemiReplay(s, d),
+      // semi = batch EXISTS over a complete replay: each click row emits
+      // at most once, no pair multiplication, no eviction rows
+      """
+      SELECT c.user_id AS user_id, count(1) AS n_clicks,
+             min(epoch_us(c.ts)) AS first_us, max(epoch_us(c.ts)) AS last_us
+      FROM events c
+      WHERE c.event_type = 'click'
+        AND EXISTS (
+          SELECT 1 FROM events p
+          WHERE p.event_type = 'purchase' AND p.user_id = c.user_id
+            AND epoch_us(p.ts) >= epoch_us(c.ts) - 600000000
+            AND epoch_us(p.ts) <= epoch_us(c.ts))
+      GROUP BY c.user_id
+      ORDER BY user_id"""),
 
     // -- stream-stream left outer, driver-checked (see above) -------------
-    "ev_stream_outer" -> ((s, d) => streamLeftOuterReplay(s, d)),
+    Query("ev_stream_outer", (s, d) => streamLeftOuterReplay(s, d),
+      // left-outer emission rule mirrored: matched pairs emit eagerly;
+      // a null-padded row emits only for clicks strictly below the final
+      // global watermark = least over both inputs of (ms-truncated max
+      // event time - 30 min). Clicks in the last 30 minutes of either
+      // stream never emit an outer row.
+      """
+      WITH c AS (SELECT user_id, epoch_us(ts) AS us FROM events
+                 WHERE event_type = 'click'),
+           p AS (SELECT user_id, epoch_us(ts) AS us FROM events
+                 WHERE event_type = 'purchase'),
+           wm AS (SELECT least(
+                    ((SELECT max(us) FROM c) // 1000 - 1800000) * 1000,
+                    ((SELECT max(us) FROM p) // 1000 - 1800000) * 1000)
+                    AS wm_us),
+           m AS (SELECT c.user_id, c.us AS l_us, p.us AS r_us
+                 FROM c JOIN p ON c.user_id = p.user_id
+                  AND p.us >= c.us - 600000000 AND p.us <= c.us),
+           o AS (SELECT c.user_id, c.us AS l_us, NULL::BIGINT AS r_us
+                 FROM c, wm
+                 WHERE c.us < wm.wm_us
+                   AND NOT EXISTS (
+                     SELECT 1 FROM p WHERE p.user_id = c.user_id
+                      AND p.us >= c.us - 600000000 AND p.us <= c.us)),
+           a AS (SELECT * FROM m UNION ALL SELECT * FROM o)
+      SELECT user_id,
+             count(r_us) AS n_pairs,
+             count(1) - count(r_us) AS n_outer,
+             min(l_us) AS first_us,
+             max(r_us) AS last_us
+      FROM a
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- stream-stream FULL OUTER join: both sides' watermark-proven
     //    non-matches emit null-padded (see streamFullOuterReplay) ------
-    "ev_stream_full" -> ((s, d) => streamFullOuterReplay(s, d)),
+    Query("ev_stream_full", (s, d) => streamFullOuterReplay(s, d),
+      // full outer: the left-outer rule (click outer iff wm > l_us) plus
+      // the right eviction boundary (purchase outer iff wm > r_us + 10min
+      // — a future click can reach 10 minutes back)
+      """
+      WITH c AS (SELECT user_id, epoch_us(ts) AS us FROM events
+                 WHERE event_type = 'click'),
+           p AS (SELECT user_id, epoch_us(ts) AS us FROM events
+                 WHERE event_type = 'purchase'),
+           wm AS (SELECT least(
+                    ((SELECT max(us) FROM c) // 1000 - 1800000) * 1000,
+                    ((SELECT max(us) FROM p) // 1000 - 1800000) * 1000)
+                    AS wm_us),
+           m AS (SELECT c.user_id, c.us AS l_us, p.us AS r_us
+                 FROM c JOIN p ON c.user_id = p.user_id
+                  AND p.us >= c.us - 600000000 AND p.us <= c.us),
+           lo AS (SELECT c.user_id, c.us AS l_us, NULL::BIGINT AS r_us
+                  FROM c, wm
+                  WHERE c.us < wm.wm_us
+                    AND NOT EXISTS (
+                      SELECT 1 FROM p WHERE p.user_id = c.user_id
+                       AND p.us >= c.us - 600000000 AND p.us <= c.us)),
+           ro AS (SELECT p.user_id, NULL::BIGINT AS l_us, p.us AS r_us
+                  FROM p, wm
+                  WHERE p.us + 600000000 < wm.wm_us
+                    AND NOT EXISTS (
+                      SELECT 1 FROM c WHERE c.user_id = p.user_id
+                       AND p.us >= c.us - 600000000 AND p.us <= c.us)),
+           a AS (SELECT * FROM m UNION ALL SELECT * FROM lo
+                 UNION ALL SELECT * FROM ro)
+      SELECT user_id,
+             sum(CASE WHEN l_us IS NOT NULL AND r_us IS NOT NULL
+                 THEN 1 ELSE 0 END)::BIGINT AS n_pairs,
+             sum(CASE WHEN l_us IS NOT NULL AND r_us IS NULL
+                 THEN 1 ELSE 0 END)::BIGINT AS n_left_outer,
+             sum(CASE WHEN l_us IS NULL AND r_us IS NOT NULL
+                 THEN 1 ELSE 0 END)::BIGINT AS n_right_outer,
+             min(l_us) AS first_us,
+             max(r_us) AS last_us
+      FROM a
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- multi-source streaming union: two file-stream sources, one
     //    query, shared post-union watermark (see streamUnionReplay) ----
-    "ev_stream_union" -> ((s, d) => streamUnionReplay(s, d)),
+    Query("ev_stream_union", (s, d) => streamUnionReplay(s, d),
+      // multi-source union: append rule over the COMBINED stream (the
+      // final watermark is the max event time across both halves), with
+      // source identity = event_id parity
+      """
+      WITH m AS (SELECT max(ts) AS mx FROM events)
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H')
+               AS hour,
+             (event_id % 2) AS src, count(1) AS n
+      FROM events, m
+      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_id % 2, mx
+      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
+               <= mx - INTERVAL 30 MINUTE
+      ORDER BY hour, src"""),
 
     // -- streaming session windows, driver-checked ------------------------
-    "ev_stream_session" -> onScratch(sessionReplayOn),
+    Query("ev_stream_session", onScratch(sessionReplayOn),
+      // gap sessionization + the append-mode emission rule: only sessions
+      // whose end cleared the final watermark, which Spark tracks at
+      // MILLISECOND precision (max event ms - delay ms) — mirrored here
+      // with the same truncation
+      s"""
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+           flagged AS (
+             SELECT user_id, event_id, us,
+                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
+                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) >= $GAP_US
+                         THEN 1 ELSE 0 END AS new_s
+             FROM e),
+           sess AS (
+             SELECT user_id, us,
+                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+             FROM flagged),
+           agg AS (
+             SELECT min(us) AS start_us, max(us) + $GAP_US AS end_us,
+                    user_id, count(1) AS n_events
+             FROM sess GROUP BY user_id, sid),
+           m AS (SELECT ((max(epoch_us(ts)) // 1000) - 1800000) * 1000 AS wm_us
+                 FROM events)
+      SELECT start_us, end_us, user_id, n_events
+      FROM agg, m
+      WHERE end_us <= wm_us
+      ORDER BY user_id, start_us"""),
 
     // -- streaming dedup, driver-checked (see streamDedupReplay) ----------
-    "ev_stream_dedup" -> ((s, d) => streamDedupReplay(s, d)),
+    Query("ev_stream_dedup", (s, d) => streamDedupReplay(s, d),
+      // single-replay dedup keeps every first-seen (user, type) pair, so
+      // the surviving key set equals the batch distinct — per-user
+      // distinct-type counts are the deterministic compare
+      """
+      SELECT user_id, count(DISTINCT event_type) AS n_types
+      FROM events
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- custom state machine (flatMapGroupsWithState) under the gate:
     //    per-user count / last event time / distinct-type set carried
     //    in state; monotone emissions -> batch-invariant final maxima --
-    "ev_stream_state" -> ((s, d) => streamStateReplay(s, d)),
-    "ev_stream_enrich" -> ((s, d) => streamEnrichReplay(s, d)),
+    Query("ev_stream_state", (s, d) => streamStateReplay(s, d),
+      """
+      SELECT user_id, count(1) AS n_events, max(epoch_us(ts)) AS last_us,
+             count(DISTINCT event_type) AS n_types
+      FROM events
+      GROUP BY user_id
+      ORDER BY user_id"""),
+    Query("ev_stream_enrich", (s, d) => streamEnrichReplay(s, d),
+      // stateless broadcast enrichment emits every row exactly once
+      // under AvailableNow, so the mirror is the plain batch join + agg;
+      // unmatched user_ids coalesce to '(none)' on both sides so null
+      // ORDER BY placement differences can't flip the positional compare
+      """
+      SELECT coalesce(c.c_mktsegment, '(none)') AS segment, e.event_type,
+             count(1) AS n_events,
+             sum(round(e.value * 100)::BIGINT)::BIGINT AS value_cents
+      FROM events e
+      LEFT JOIN customer c ON e.user_id = c.c_custkey
+      GROUP BY 1, 2
+      ORDER BY segment, event_type"""),
 
     // -- chained stateful operators: dedup -> window agg in one query --
-    "ev_stream_chain" -> onScratch(chainReplayOn),
+    Query("ev_stream_chain", onScratch(chainReplayOn),
+      // chained dedup -> window agg: dedup keys include the hour bucket,
+      // so the downstream count is distinct users per (hour, type); the
+      // append emission rule (window end <= ms-truncated final watermark
+      // over SOURCE event times) mirrors ev_stream_session's
+      """
+      WITH k AS (SELECT DISTINCT user_id, event_type,
+                        date_trunc('hour', ts::TIMESTAMP) AS hr
+                 FROM events),
+           m AS (SELECT ((max(epoch_us(ts)) // 1000) - 1800000) * 1000
+                   AS wm_us
+                 FROM events)
+      SELECT strftime(hr, '%Y-%m-%d %H') AS hour, event_type,
+             count(1) AS n_users
+      FROM k, m
+      WHERE epoch_us(hr + INTERVAL 1 HOUR) <= wm_us
+      GROUP BY hr, event_type
+      ORDER BY hour, event_type"""),
 
     // -- UPDATE-mode windowed agg: eager emission of open windows,
     //    max-folded to the deterministic final value ---------------------
-    "ev_stream_update" -> ((s, d) => streamUpdateReplay(s, d)),
+    Query("ev_stream_update", (s, d) => streamUpdateReplay(s, d),
+      // update mode emits EVERY window (open ones too), so the mirror is
+      // the plain count with no watermark clause — the semantic line
+      // between update and append, under the value compare
+      """
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H')
+               AS hour,
+             event_type, count(1) AS n
+      FROM events
+      GROUP BY 1, 2
+      ORDER BY hour, event_type"""),
 
     // -- transformWithState (Spark 4 arbitrary state API): the
     //    ev_stream_state machine on typed ValueState/MapState variables
     //    in RocksDB column families -------------------------------------
-    "ev_stream_tws" -> onScratch(twsReplayOn),
+    Query("ev_stream_tws", onScratch(twsReplayOn),
+      // transformWithState runs the same per-user machine as
+      // ev_stream_state, so its monotone final maxima mirror the same
+      // batch aggregate
+      """
+      SELECT user_id, count(1) AS n_events, max(epoch_us(ts)) AS last_us,
+             count(DISTINCT event_type) AS n_types
+      FROM events
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- gap fill / densification: every (hour, event_type) bucket in the
     //    observed time range, zero-filled where no events landed. The
@@ -591,7 +866,7 @@ object EventsTime extends QueryModule {
     //    + a distinct-types frame, then left-joined against the real
     //    per-bucket counts — at 100 TB the grid stays tiny and
     //    broadcasts while the counts side is one hash agg over the scan.
-    "ev_gap_fill" -> ((s, d) => {
+    Query("ev_gap_fill", (s, d) => {
       val e = ev(s, d)
       val hours = e
         .agg(date_trunc("hour", min(col("ts"))).as("lo"),
@@ -606,27 +881,57 @@ object EventsTime extends QueryModule {
         .select(date_format(col("h"), "yyyy-MM-dd HH").as("hour"),
           col("event_type"), coalesce(col("cnt"), lit(0L)).as("n"))
         .orderBy("hour", "event_type")
-    }),
+    },
+      """
+      WITH b AS (SELECT date_trunc('hour', min(ts)::TIMESTAMP) AS lo,
+                        date_trunc('hour', max(ts)::TIMESTAMP) AS hi
+                 FROM events),
+           h AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
+                 FROM b),
+           t AS (SELECT DISTINCT event_type FROM events),
+           c AS (SELECT date_trunc('hour', ts::TIMESTAMP) AS h, event_type,
+                        count(1) AS cnt
+                 FROM events GROUP BY 1, 2)
+      SELECT strftime(h.h, '%Y-%m-%d %H') AS hour,
+             t.event_type AS event_type, coalesce(c.cnt, 0) AS n
+      FROM h CROSS JOIN t
+      LEFT JOIN c ON c.h = h.h AND c.event_type = t.event_type
+      ORDER BY hour, t.event_type"""),
 
     // -- tumbling window (batch twin of streaming groupBy(window)) --------
-    "ev_tumbling" -> ((s, d) =>
+    Query("ev_tumbling", (s, d) =>
       ev(s, d)
         .groupBy(
           date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH").as("hour"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), (sum(valE2) / 100.0).as("total_value"))
-        .orderBy("hour", "event_type")),
+        .orderBy("hour", "event_type"),
+      """
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n,
+             sum(round(value * 100)::BIGINT) / 100.0 AS total_value
+      FROM events
+      GROUP BY 1, 2
+      ORDER BY hour, event_type"""),
 
     // -- sliding window via native window() (10 min size, 5 min slide) ----
-    "ev_sliding" -> ((s, d) =>
+    Query("ev_sliding", (s, d) =>
       ev(s, d)
         .select(col("event_type"), window(col("ts"), "10 minutes", "5 minutes").as("w"))
         .groupBy(unix_micros(col("w.start")).as("ws_us"), col("event_type"))
         .agg(count(lit(1)).as("n"))
-        .orderBy("ws_us", "event_type")),
+        .orderBy("ws_us", "event_type"),
+      """
+      WITH x AS (SELECT event_type, epoch_us(ts) AS us FROM events),
+           w AS (SELECT event_type, (us // 300000000 - i.i) * 300000000 AS ws_us
+                 FROM x CROSS JOIN (SELECT unnest(range(0, 2)) AS i) i)
+      SELECT ws_us, event_type, count(1) AS n
+      FROM w
+      GROUP BY ws_us, event_type
+      ORDER BY ws_us, event_type"""),
 
     // -- per-user profile --------------------------------------------------
-    "ev_user_stats" -> ((s, d) =>
+    Query("ev_user_stats", (s, d) =>
       ev(s, d)
         .groupBy("user_id")
         .agg(
@@ -635,7 +940,16 @@ object EventsTime extends QueryModule {
           min(us).as("first_us"),
           max(us).as("last_us"),
           (sum(valE2) / 100.0).as("total_value"))
-        .orderBy("user_id")),
+        .orderBy("user_id"),
+      """
+      SELECT user_id, count(1) AS n_events,
+             count(DISTINCT event_type) AS n_types,
+             min(epoch_us(ts)) AS first_us,
+             max(epoch_us(ts)) AS last_us,
+             sum(round(value * 100)::BIGINT) / 100.0 AS total_value
+      FROM events
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- trailing-window outlier detection, EXACT: flag events whose
     //    value sits > 3 population-sigmas from the mean of the previous
@@ -644,7 +958,7 @@ object EventsTime extends QueryModule {
     //    cents — so both engines decide every boundary identically
     //    (bounds: n <= 20, v <= ~1e5 cents keeps every product far from
     //    Long range). One partitioned window, no shuffle beyond it. -------
-    "ev_outliers" -> ((s, d) => {
+    Query("ev_outliers", (s, d) => {
       val w = Window.partitionBy("user_id")
         .orderBy(col("us"), col("event_id"))
         .rowsBetween(-20, -1)
@@ -659,10 +973,29 @@ object EventsTime extends QueryModule {
         .select(col("user_id"), col("us"), col("event_id"),
           col("v").as("val_e2"), col("wn").as("win_n"))
         .orderBy("user_id", "us", "event_id")
-    }),
+    },
+      // the z-test in DuckDB runs in HUGEINT (sum over BIGINT); values are
+      // bounded far inside int64, so the comparisons agree with Spark's
+      // long arithmetic exactly
+      """
+      WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+                        round(value * 100)::BIGINT AS v
+                 FROM events),
+           w AS (SELECT user_id, event_id, us, v,
+                        count(v) OVER win AS wn,
+                        sum(v) OVER win AS ws,
+                        sum(v * v) OVER win AS wss
+                 FROM b
+                 WINDOW win AS (PARTITION BY user_id ORDER BY us, event_id
+                                ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
+      SELECT user_id, us, event_id, v AS val_e2, wn AS win_n
+      FROM w
+      WHERE wn >= 10
+        AND (wn*v - ws) * (wn*v - ws) > 9 * (wn*wss - ws*ws)
+      ORDER BY user_id, us, event_id"""),
 
     // -- sessionization: 30-min inactivity gap ----------------------------
-    "ev_sessionize" -> ((s, d) => {
+    Query("ev_sessionize", (s, d) => {
       val wOrd = Window.partitionBy("user_id").orderBy("us", "event_id")
       val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       ev(s, d)
@@ -679,7 +1012,29 @@ object EventsTime extends QueryModule {
           max("n_ev").as("max_session_events"),
           max("span_us").as("max_session_span_us"))
         .orderBy("user_id")
-    }),
+    },
+      s"""
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+           flagged AS (
+             SELECT user_id, event_id, us,
+                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
+                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > $GAP_US
+                         THEN 1 ELSE 0 END AS new_s
+             FROM e),
+           sess AS (
+             SELECT user_id, us,
+                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+             FROM flagged),
+           per_sess AS (
+             SELECT user_id, sid, count(1) AS n_ev, max(us) - min(us) AS span_us
+             FROM sess GROUP BY user_id, sid)
+      SELECT user_id, max(sid)::BIGINT AS n_sessions,
+             max(n_ev) AS max_session_events,
+             max(span_us) AS max_session_span_us
+      FROM per_sess
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- event-sequence pattern match (the MATCH_RECOGNIZE family):
     //    each user's event stream folds into a bounded type-initial
@@ -693,7 +1048,7 @@ object EventsTime extends QueryModule {
     //    oracle. One user-partitioned window (the sort sessionization
     //    already pays) + one hash agg; the regex runs on |users| rows,
     //    never event rows. ----------------------------------------------
-    "ev_seqmatch" -> ((s, d) => {
+    Query("ev_seqmatch", (s, d) => {
       val wOrd = Window.partitionBy("user_id").orderBy("us", "event_id")
       ev(s, d)
         .select(col("user_id"), col("event_id"), us.as("us"),
@@ -713,7 +1068,27 @@ object EventsTime extends QueryModule {
           sum(when(col("seq").like("s%"), 1L).otherwise(0L))
             .as("n_first_signup"),
           max(length(col("seq"))).cast("long").as("max_len"))
-    }),
+    },
+      s"""
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+                        substr(event_type, 1, 1) AS c
+                 FROM events),
+           r AS (SELECT user_id, c,
+                        row_number() OVER (PARTITION BY user_id
+                          ORDER BY us, event_id) AS rk
+                 FROM e),
+           sq AS (SELECT user_id, string_agg(c, '' ORDER BY rk) AS seq
+                  FROM r WHERE rk <= $SEQ_CAP
+                  GROUP BY user_id)
+      SELECT count(1) AS n_users,
+             sum(CASE WHEN regexp_matches(seq, 's.*v.*p')
+                 THEN 1 ELSE 0 END)::BIGINT AS n_svp,
+             sum(CASE WHEN seq LIKE '%ee%' THEN 1 ELSE 0 END)::BIGINT
+               AS n_ee,
+             sum(CASE WHEN seq LIKE 's%' THEN 1 ELSE 0 END)::BIGINT
+               AS n_first_signup,
+             max(length(seq)) AS max_len
+      FROM sq"""),
 
     // -- first-order Markov transition matrix over per-user event
     //    streams (the behavioral-model / anomaly-baseline primitive):
@@ -726,7 +1101,7 @@ object EventsTime extends QueryModule {
     //    user-partitioned window sort sessionization already pays;
     //    everything after the agg is |types|^2 rows at any corpus
     //    size. ----------------------------------------------------------
-    "ev_markov" -> ((s, d) => {
+    Query("ev_markov", (s, d) => {
       val wOrd = Window.partitionBy("user_id").orderBy("us", "event_id")
       ev(s, d)
         .select(col("user_id"), col("event_id"), us.as("us"),
@@ -740,7 +1115,22 @@ object EventsTime extends QueryModule {
         .select(col("from_type"), col("to_type"), col("n"),
           expr("(1000 * n) DIV n_from").as("p_mille"))
         .orderBy("from_type", "to_type")
-    }),
+    },
+      """
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type
+                 FROM events),
+           t AS (SELECT event_type AS from_type,
+                        lead(event_type) OVER (PARTITION BY user_id
+                          ORDER BY us, event_id) AS to_type
+                 FROM e),
+           c AS (SELECT from_type, to_type, count(1) AS n
+                 FROM t WHERE to_type IS NOT NULL
+                 GROUP BY from_type, to_type)
+      SELECT from_type, to_type, n,
+             ((1000 * n) // (sum(n) OVER (PARTITION BY from_type)))::BIGINT
+               AS p_mille
+      FROM c
+      ORDER BY from_type, to_type"""),
 
     // -- interval-overlap join: sessions x incident windows ---------------
     // True interval x interval overlap (vs ev_range_join's point-in-
@@ -749,7 +1139,7 @@ object EventsTime extends QueryModule {
     // sets explode into coarse time buckets -> equi-join on
     // (user, bucket) -> residual overlap predicate -> dedup (a pair can
     // co-occur in several buckets). No nested-loop over intervals.
-    "ev_interval_join" -> ((s, d) => {
+    Query("ev_interval_join", (s, d) => {
       val B = 3600000000L // 1 h buckets
       val wOrd = Window.partitionBy("user_id").orderBy("us", "event_id")
       val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -777,14 +1167,41 @@ object EventsTime extends QueryModule {
           col("s_start").as("s_start_us"), col("s_end").as("s_end_us"))
         .dropDuplicates("inc_id", "user_id", "sid")
         .orderBy("inc_id", "user_id", "sid")
-    }),
+    },
+      s"""
+      WITH e AS (SELECT user_id, event_id, us FROM
+                   (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)),
+           flagged AS (
+             SELECT user_id, event_id, us,
+                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
+                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > $GAP_US
+                         THEN 1 ELSE 0 END AS new_s
+             FROM e),
+           sids AS (
+             SELECT user_id, us,
+                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+             FROM flagged),
+           sess AS (
+             SELECT user_id, sid, min(us) AS s_start, max(us) AS s_end
+             FROM sids GROUP BY user_id, sid),
+           inc AS (
+             SELECT event_id AS inc_id, user_id,
+                    epoch_us(ts) - $W_US AS i_start, epoch_us(ts) AS i_end
+             FROM events WHERE event_type = 'error')
+      SELECT i.inc_id, s.user_id, s.sid::BIGINT AS sid,
+             s.s_start AS s_start_us, s.s_end AS s_end_us
+      FROM sess s JOIN inc i
+        ON s.user_id = i.user_id
+       AND s.s_start <= i.i_end AND i.i_start <= s.s_end
+      ORDER BY inc_id, s.user_id, sid"""),
 
     // -- typed per-group imperative logic (Dataset mapGroups slot) --------
     // Longest gap between consecutive events per user, computed by
     // sorting each group's timestamps imperatively — the API shape for
     // per-key logic that window functions can't express (here they
     // could, which is exactly what makes it oracle-checkable).
-    "ev_typed_gaps" -> ((s, d) => {
+    Query("ev_typed_gaps", (s, d) => {
       import s.implicits._
       ev(s, d).select(col("user_id"), us.as("us"))
         .as[(Long, Long)]
@@ -802,13 +1219,23 @@ object EventsTime extends QueryModule {
         }
         .toDF("user_id", "n_events", "max_gap_us")
         .orderBy("user_id")
-    }),
+    },
+      """
+      WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
+           g AS (SELECT user_id,
+                        us - lag(us) OVER (PARTITION BY user_id ORDER BY us) AS gap
+                 FROM e)
+      SELECT user_id, count(1) AS n_events,
+             coalesce(max(gap), 0)::BIGINT AS max_gap_us
+      FROM g
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- funnel analysis: signup -> click -> purchase, strictly ordered ---
     // Stage timestamps chain through three window passes over ONE
     // user-partitioned shuffle (t2 = first click at-or-after t1, etc.);
     // integer epoch-us comparisons keep it engine-exact.
-    "ev_funnel" -> ((s, d) => {
+    Query("ev_funnel", (s, d) => {
       val wu = Window.partitionBy("user_id")
       ev(s, d).select(col("user_id"), col("event_type"), us.as("us"))
         .withColumn("t1",
@@ -826,10 +1253,27 @@ object EventsTime extends QueryModule {
           sum(when(col("t1").isNotNull, 1L).otherwise(0L)).as("n_signup"),
           sum(when(col("t2").isNotNull, 1L).otherwise(0L)).as("n_signup_click"),
           sum(when(col("t3").isNotNull, 1L).otherwise(0L)).as("n_full_funnel"))
-    }),
+    },
+      """
+      WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
+           w1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN us END)
+                              OVER (PARTITION BY user_id) AS t1 FROM e),
+           w2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us >= t1 THEN us END)
+                              OVER (PARTITION BY user_id) AS t2 FROM w1),
+           w3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us >= t2 THEN us END)
+                              OVER (PARTITION BY user_id) AS t3 FROM w2),
+           per_user AS (
+             SELECT user_id, any_value(t1) AS t1, any_value(t2) AS t2,
+                    any_value(t3) AS t3
+             FROM w3 GROUP BY user_id)
+      SELECT count(1) AS n_users,
+             sum(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_signup,
+             sum(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_signup_click,
+             sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_full_funnel
+      FROM per_user"""),
 
     // -- cohort retention: users active N days after their first day ------
-    "ev_retention" -> ((s, d) => {
+    Query("ev_retention", (s, d) => {
       val DAY_US = 86400000000L
       val days = ev(s, d)
         .select(col("user_id"), us.as("us"))
@@ -841,7 +1285,17 @@ object EventsTime extends QueryModule {
         .agg(countDistinct("user_id").as("n_active"))
         .filter(col("day_offset") <= 7)
         .orderBy("cohort_day", "day_offset")
-    }),
+    },
+      """
+      WITH d AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
+                 FROM events),
+           c AS (SELECT user_id, min(day) AS d0 FROM d GROUP BY user_id)
+      SELECT c.d0 AS cohort_day, (d.day - c.d0) AS day_offset,
+             count(DISTINCT d.user_id) AS n_active
+      FROM d JOIN c ON d.user_id = c.user_id
+      WHERE d.day - c.d0 <= 7
+      GROUP BY 1, 2
+      ORDER BY 1, 2"""),
 
     // -- rolling active users: DAU / trailing-7-day WAU / stickiness ------
     //    The product-analytics staple, built WITHOUT a sliding window
@@ -851,7 +1305,7 @@ object EventsTime extends QueryModule {
     //    aggs. No WindowExec anywhere; every frame is user-day-scale
     //    or smaller. Stickiness = DAU/WAU in integer per-mille —
     //    the "how habitual is usage" dial.
-    "ev_wau" -> ((s, d) => {
+    Query("ev_wau", (s, d) => {
       val DAY_US = 86400000000L
       val ud = ev(s, d)
         .select(col("user_id"), expr(s"unix_micros(ts) div $DAY_US").as("day"))
@@ -869,7 +1323,25 @@ object EventsTime extends QueryModule {
         .select(col("day"), col("dau"), col("wau"),
           expr("(1000 * dau) DIV wau").as("stickiness_mille"))
         .orderBy("day")
-    }),
+    },
+      // distinct user-days -> bounded 7-day contribution explode ->
+      // distinct -> per-day aggs; no window on either engine
+      """
+      WITH ud AS (SELECT DISTINCT user_id,
+                         (epoch_us(ts) // 86400000000)::BIGINT AS day
+                  FROM events),
+           days AS (SELECT DISTINCT day FROM ud),
+           dau AS (SELECT day, count(1) AS dau FROM ud GROUP BY day),
+           w AS (SELECT DISTINCT u.user_id, (u.day + o.o)::BIGINT AS day
+                 FROM ud u
+                 CROSS JOIN (SELECT unnest(range(0, 7)) AS o) o),
+           wau AS (SELECT w.day, count(1) AS wau
+                   FROM w JOIN days USING (day)
+                   GROUP BY w.day)
+      SELECT d.day, d.dau, wau.wau,
+             ((1000 * d.dau) // wau.wau)::BIGINT AS stickiness_mille
+      FROM dau d JOIN wau USING (day)
+      ORDER BY day"""),
 
     // -- cohort LTV curves: cumulative purchase revenue per (first-
     //    activity-week cohort, age week) — the revenue-side companion
@@ -880,7 +1352,7 @@ object EventsTime extends QueryModule {
     //    PARTITIONED BY cohort and ordered by age — frames are
     //    |weeks|-sized per cohort, never user- or event-scale. Integer
     //    cents + DIV throughout.
-    "ev_cohort_ltv" -> ((s, d) => {
+    Query("ev_cohort_ltv", (s, d) => {
       val WEEK_US = 604800000000L
       val first = ev(s, d).select(col("user_id"), us.as("us"))
         .groupBy("user_id")
@@ -901,10 +1373,34 @@ object EventsTime extends QueryModule {
           col("n_buyers"), col("rev_cents"), col("cum_cents"),
           expr("cum_cents DIV n_users").as("ltv_cents"))
         .orderBy("cohort_wk", "age_wk")
-    }),
+    },
+      // cohort = first-activity week; cumulative window partitioned by
+      // cohort (|weeks|-sized frames); all arithmetic integer
+      """
+      WITH f AS (SELECT user_id,
+                        (min(epoch_us(ts)) // 604800000000)::BIGINT AS cohort_wk
+                 FROM events GROUP BY user_id),
+           sz AS (SELECT cohort_wk, count(1) AS n_users
+                  FROM f GROUP BY cohort_wk),
+           cell AS (SELECT f.cohort_wk,
+                           ((epoch_us(e.ts) // 604800000000)
+                             - f.cohort_wk)::BIGINT AS age_wk,
+                           sum(round(e.value * 100)::BIGINT)::BIGINT AS rev_cents,
+                           count(DISTINCT e.user_id) AS n_buyers
+                    FROM events e JOIN f ON e.user_id = f.user_id
+                    WHERE e.event_type = 'purchase'
+                    GROUP BY 1, 2),
+           cum AS (SELECT *, sum(rev_cents) OVER (PARTITION BY cohort_wk
+                     ORDER BY age_wk ROWS BETWEEN UNBOUNDED PRECEDING
+                     AND CURRENT ROW)::BIGINT AS cum_cents
+                   FROM cell)
+      SELECT c.cohort_wk, c.age_wk, s.n_users, c.n_buyers, c.rev_cents,
+             c.cum_cents, (c.cum_cents // s.n_users)::BIGINT AS ltv_cents
+      FROM cum c JOIN sz s USING (cohort_wk)
+      ORDER BY cohort_wk, age_wk"""),
 
     // -- pivot: event_type counts per day (conditional aggregation) -------
-    "ev_pivot" -> ((s, d) => {
+    Query("ev_pivot", (s, d) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       ev(s, d)
         .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
@@ -913,11 +1409,22 @@ object EventsTime extends QueryModule {
           types.map(t =>
             sum(when(col("event_type") === t, 1L).otherwise(0L)).as(s"n_$t")): _*)
         .orderBy("day")
-    }),
+    },
+      """
+      SELECT strftime(date_trunc('day', ts::TIMESTAMP), '%Y-%m-%d') AS day,
+             count(1) AS n_total,
+             sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS n_click,
+             sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT AS n_error,
+             sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS n_purchase,
+             sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)::BIGINT AS n_signup,
+             sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)::BIGINT AS n_view
+      FROM events
+      GROUP BY 1
+      ORDER BY day"""),
 
     // -- dynamic pivot: RelationalGroupedDataset.pivot discovers the
     //    spread values itself (two-pass: distinct scan, then pivot agg) ----
-    "ev_pivot_dynamic" -> ((s, d) =>
+    Query("ev_pivot_dynamic", (s, d) =>
       ev(s, d)
         .groupBy(date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
         .pivot("event_type")
@@ -926,10 +1433,21 @@ object EventsTime extends QueryModule {
           Seq("click", "error", "purchase", "signup", "view")
             .map(t => t -> s"v_$t").toMap)
         .na.fill(0L)
-        .orderBy("day")),
+        .orderBy("day"),
+      {
+      val cols = Seq("click", "error", "purchase", "signup", "view").map(t =>
+        s"coalesce(sum(CASE WHEN event_type = '$t' THEN round(value * 100)::BIGINT END), 0)::BIGINT AS v_$t")
+        .mkString(",\n             ")
+      s"""
+      SELECT strftime(date_trunc('day', ts::TIMESTAMP), '%Y-%m-%d') AS day,
+             $cols
+      FROM events
+      GROUP BY 1
+      ORDER BY day"""
+    }),
 
     // -- as-of join: latest purchase at or before each event --------------
-    "ev_asof_join" -> ((s, d) => {
+    Query("ev_asof_join", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), us.as("us"))
       val purchases = ev(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"), us.as("us"), valE2.as("pval"))
@@ -940,10 +1458,20 @@ object EventsTime extends QueryModule {
         .select(col("event_id"), col("user_id"),
           col("prev_purchase_us"), col("prev_purchase_e2"))
         .orderBy("event_id")
-    }),
+    },
+      """
+      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+           p AS (SELECT user_id, epoch_us(ts) AS us,
+                        round(value * 100)::BIGINT AS pval
+                 FROM events WHERE event_type = 'purchase')
+      SELECT e.event_id, e.user_id,
+             p.us AS prev_purchase_us,
+             p.pval AS prev_purchase_e2
+      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.us
+      ORDER BY event_id"""),
 
     // -- forward as-of: next purchase at-or-after each event --------------
-    "ev_asof_forward" -> ((s, d) => {
+    Query("ev_asof_forward", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), us.as("us"))
       val purchases = ev(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"), us.as("us"), valE2.as("pval"))
@@ -954,10 +1482,20 @@ object EventsTime extends QueryModule {
         .select(col("event_id"), col("user_id"),
           col("next_purchase_us"), col("next_purchase_e2"))
         .orderBy("event_id")
-    }),
+    },
+      """
+      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+           p AS (SELECT user_id, epoch_us(ts) AS us,
+                        round(value * 100)::BIGINT AS pval
+                 FROM events WHERE event_type = 'purchase')
+      SELECT e.event_id, e.user_id,
+             p.us AS next_purchase_us,
+             p.pval AS next_purchase_e2
+      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us <= p.us
+      ORDER BY event_id"""),
 
     // -- backward as-of with 1 h lookback tolerance -----------------------
-    "ev_asof_tolerance" -> ((s, d) => {
+    Query("ev_asof_tolerance", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), us.as("us"))
       val purchases = ev(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"), us.as("us"), valE2.as("pval"))
@@ -968,14 +1506,24 @@ object EventsTime extends QueryModule {
         toleranceUs = 3600L * 1000000L)
         .select(col("event_id"), col("user_id"), col("recent_purchase_e2"))
         .orderBy("event_id")
-    }),
+    },
+      """
+      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+           p AS (SELECT user_id, epoch_us(ts) AS us,
+                        round(value * 100)::BIGINT AS pval
+                 FROM events WHERE event_type = 'purchase')
+      SELECT e.event_id, e.user_id,
+             CASE WHEN e.us - p.us <= 3600000000 THEN p.pval END
+               AS recent_purchase_e2
+      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.us
+      ORDER BY event_id"""),
 
     // -- nearest as-of: closest purchase in EITHER direction --------------
     //    (pandas merge_asof direction='nearest'; completes the as-of
     //    family next to backward/forward/tolerance). Two linear
     //    union-tag passes joined on the unique event id; ties go
     //    backward; no interval cross-product anywhere.
-    "ev_asof_nearest" -> ((s, d) => {
+    Query("ev_asof_nearest", (s, d) => {
       val e = ev(s, d).select(col("event_id"), col("user_id"), us.as("us"))
       val purchases = ev(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"), us.as("us"), valE2.as("pval"))
@@ -987,7 +1535,28 @@ object EventsTime extends QueryModule {
         .select(col("event_id"), col("user_id"),
           col("near_purchase_us"), col("near_purchase_e2"))
         .orderBy("event_id")
-    }),
+    },
+      """
+      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
+           p AS (SELECT user_id, epoch_us(ts) AS us,
+                        round(value * 100)::BIGINT AS pval
+                 FROM events WHERE event_type = 'purchase'),
+           b AS (SELECT e.event_id, e.user_id, e.us,
+                        p.us AS b_us, p.pval AS b_pval
+                 FROM e ASOF LEFT JOIN p
+                   ON e.user_id = p.user_id AND e.us >= p.us),
+           f AS (SELECT e.event_id, p.us AS f_us, p.pval AS f_pval
+                 FROM e ASOF LEFT JOIN p
+                   ON e.user_id = p.user_id AND e.us <= p.us)
+      SELECT b.event_id, b.user_id,
+             CASE WHEN f.f_us IS NULL OR (b.b_us IS NOT NULL
+                        AND (b.us - b.b_us) <= (f.f_us - b.us))
+                  THEN b.b_us ELSE f.f_us END AS near_purchase_us,
+             CASE WHEN f.f_us IS NULL OR (b.b_us IS NOT NULL
+                        AND (b.us - b.b_us) <= (f.f_us - b.us))
+                  THEN b.b_pval ELSE f.f_pval END AS near_purchase_e2
+      FROM b JOIN f ON b.event_id = f.event_id
+      ORDER BY b.event_id"""),
 
     // -- inter-event dwell-time histogram: per-user lag deltas bucketed
     //    into power-of-ten bands per event type — the engagement-shape
@@ -995,7 +1564,7 @@ object EventsTime extends QueryModule {
     //    actually sit in the dwell distribution?). One key-partitioned
     //    lag window + one hash agg; integer microsecond deltas and
     //    integer log bands keep both engines bit-identical. ---------------
-    "ev_dwell_hist" -> ((s, d) => {
+    Query("ev_dwell_hist", (s, d) => {
       val w = Window.partitionBy("user_id").orderBy("us", "event_id")
       // band MUST read the materialized delta column: a fresh window
       // expression above the null filter would re-run lag over the
@@ -1016,13 +1585,32 @@ object EventsTime extends QueryModule {
         .groupBy("event_type", "band")
         .agg(count(lit(1)).as("n"))
         .orderBy("event_type", "band")
-    }),
+    },
+      """
+      WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us
+                 FROM events),
+           d AS (SELECT event_type,
+                        us - lag(us) OVER (PARTITION BY user_id
+                                           ORDER BY us, event_id) AS delta
+                 FROM e)
+      SELECT event_type,
+             (CASE WHEN delta < 1000000 THEN 0
+                   WHEN delta < 10000000 THEN 1
+                   WHEN delta < 60000000 THEN 2
+                   WHEN delta < 600000000 THEN 3
+                   WHEN delta < 3600000000 THEN 4
+                   ELSE 5 END)::BIGINT AS band,
+             count(1) AS n
+      FROM d
+      WHERE delta IS NOT NULL
+      GROUP BY 1, 2
+      ORDER BY event_type, band"""),
 
     // -- range join: clicks in the 10 min before each error ---------------
     // Bucketed equi-join formulation: theta-join -> equi-join on
     // (user, time bucket) + residual filter. Scales as a hash join on a
     // uniform key instead of a nested-loop interval join.
-    "ev_range_join" -> ((s, d) => {
+    Query("ev_range_join", (s, d) => {
       val e = ev(s, d)
       val err = e.filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id"), us.as("err_us"))
@@ -1039,10 +1627,19 @@ object EventsTime extends QueryModule {
         .select(col("event_id"), col("user_id"),
           coalesce(col("n"), lit(0L)).as("n_recent_clicks"))
         .orderBy("event_id")
-    }),
+    },
+      s"""
+      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events)
+      SELECT e.event_id, e.user_id,
+             (SELECT count(1) FROM e c
+              WHERE c.event_type = 'click' AND c.user_id = e.user_id
+                AND c.us >= e.us - $W_US AND c.us < e.us) AS n_recent_clicks
+      FROM e
+      WHERE e.event_type = 'error'
+      ORDER BY event_id"""),
 
     // -- native session_window (same op Structured Streaming uses) --------
-    "ev_session_window" -> ((s, d) =>
+    Query("ev_session_window", (s, d) =>
       ev(s, d)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -1050,7 +1647,26 @@ object EventsTime extends QueryModule {
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
           col("user_id"), col("n_events"))
-        .orderBy("user_id", "start_us")),
+        .orderBy("user_id", "start_us"),
+      s"""
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+           flagged AS (
+             SELECT user_id, event_id, us,
+                    -- session_window merges on STRICT overlap (diff < gap)
+                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
+                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) >= $GAP_US
+                         THEN 1 ELSE 0 END AS new_s
+             FROM e),
+           sess AS (
+             SELECT user_id, us,
+                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+             FROM flagged)
+      SELECT min(us) AS start_us, max(us) + $GAP_US AS end_us,
+             user_id, count(1) AS n_events
+      FROM sess
+      GROUP BY user_id, sid
+      ORDER BY user_id, start_us"""),
 
     // -- DYNAMIC-gap session windows: the gap is a per-event expression
     //    (purchases close a session in 10 minutes, everything else 30)
@@ -1062,7 +1678,7 @@ object EventsTime extends QueryModule {
     //    us >= max over previous ends) — a boundary event at exactly
     //    the session end starts a NEW session ([start, end) is
     //    half-open on both engines). ------------------------------------
-    "ev_session_dynamic" -> ((s, d) =>
+    Query("ev_session_dynamic", (s, d) =>
       ev(s, d)
         .groupBy(session_window(col("ts"),
           when(col("event_type") === "purchase", "10 minutes")
@@ -1072,12 +1688,34 @@ object EventsTime extends QueryModule {
           unix_micros(col("session_window.start")).as("start_us"),
           unix_micros(col("session_window.end")).as("end_us"),
           col("user_id"), col("n_events"))
-        .orderBy("user_id", "start_us")),
+        .orderBy("user_id", "start_us"),
+      // dynamic gap as a per-event CASE; merge rule = running max of
+      // event ends, new session iff us >= that max (half-open windows)
+      """
+      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
+                        CASE WHEN event_type = 'purchase' THEN 600000000
+                             ELSE 1800000000 END AS gap
+                 FROM events),
+           w AS (SELECT *, max(us + gap) OVER (PARTITION BY user_id
+                   ORDER BY us, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   AS prev_end
+                 FROM e),
+           f AS (SELECT *, CASE WHEN prev_end IS NULL OR us >= prev_end
+                   THEN 1 ELSE 0 END AS new_s FROM w),
+           s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
+                   ORDER BY us, event_id
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                   AS sid FROM f)
+      SELECT min(us) AS start_us, max(us + gap) AS end_us, user_id,
+             count(1) AS n_events
+      FROM s GROUP BY user_id, sid
+      ORDER BY user_id, start_us"""),
 
     // -- MapType surface: build per-user type->count maps, extract back --
     // (map construction + map_keys/element_at; scalar outputs so the
     // oracle compares values, not engine-specific map encodings)
-    "ev_map_funcs" -> ((s, d) =>
+    Query("ev_map_funcs", (s, d) =>
       ev(s, d)
         .groupBy("user_id", "event_type")
         .agg(count(lit(1)).as("n"))
@@ -1089,15 +1727,29 @@ object EventsTime extends QueryModule {
           size(map_keys(col("type_counts"))).cast("long").as("n_types"),
           coalesce(element_at(col("type_counts"), "click"), lit(0L)).as("n_click"),
           coalesce(element_at(col("type_counts"), "purchase"), lit(0L)).as("n_purchase"))
-        .orderBy("user_id")),
+        .orderBy("user_id"),
+      """
+      SELECT user_id,
+             count(DISTINCT event_type) AS n_types,
+             coalesce(sum(CASE WHEN event_type = 'click' THEN 1 END), 0)::BIGINT AS n_click,
+             coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 END), 0)::BIGINT AS n_purchase
+      FROM events
+      GROUP BY user_id
+      ORDER BY user_id"""),
 
     // -- top-k users by activity ------------------------------------------
-    "ev_topk_users" -> ((s, d) =>
+    Query("ev_topk_users", (s, d) =>
       ev(s, d)
         .groupBy("user_id")
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("user_id"))
-        .limit(5)),
+        .limit(5),
+      """
+      SELECT user_id, count(1) AS n
+      FROM events
+      GROUP BY user_id
+      ORDER BY n DESC, user_id
+      LIMIT 5"""),
 
     // -- RFM segmentation (recency / frequency / monetary quintiles) ------
     //    The classic CRM/user-quality partition, built WITHOUT a
@@ -1115,7 +1767,7 @@ object EventsTime extends QueryModule {
     //    pattern) over deterministic min/max range shards — mon_cents'
     //    distinct-value count can approach |users|, so an unpartitioned
     //    window here would be a single-task sort at scale.
-    "ev_rfm" -> ((s, d) => {
+    Query("ev_rfm", (s, d) => {
       val u = ev(s, d)
         .groupBy("user_id")
         .agg(max(us).as("last_us"), count(lit(1)).as("freq"),
@@ -1155,7 +1807,35 @@ object EventsTime extends QueryModule {
         .agg(count(lit(1)).as("n_users"),
           sum("mon_cents").as("seg_cents"))
         .orderBy("r_q", "f_q", "m_q")
-    }),
+    },
+      // quintiles from distinct-value histograms (no user-scale sort);
+      // ties share a score: 1 + 5*n_strictly_worse // n_users (worse
+      // values first in the cumulative order, so score 5 = best)
+      """
+      WITH u AS (SELECT user_id, max(epoch_us(ts)) AS last_us,
+                        count(1) AS freq,
+                        coalesce(sum(CASE WHEN event_type = 'purchase'
+                          THEN round(value * 100)::BIGINT END), 0)::BIGINT
+                          AS mon_cents
+                 FROM events GROUP BY user_id),
+           tot AS (SELECT max(last_us) AS g_us, count(1) AS n_users FROM u),
+           ur AS (SELECT u.*, (tot.g_us - u.last_us) // 86400000000
+                    AS rec_day FROM u, tot),
+           hr AS (SELECT rec_day, count(1) AS c FROM ur GROUP BY rec_day),
+           qr AS (SELECT rec_day, (1 + (5 * (sum(c) OVER (ORDER BY rec_day DESC) - c))
+                    // (SELECT n_users FROM tot))::BIGINT AS r_q FROM hr),
+           hf AS (SELECT freq, count(1) AS c FROM ur GROUP BY freq),
+           qf AS (SELECT freq, (1 + (5 * (sum(c) OVER (ORDER BY freq ASC) - c))
+                    // (SELECT n_users FROM tot))::BIGINT AS f_q FROM hf),
+           hm AS (SELECT mon_cents, count(1) AS c FROM ur GROUP BY mon_cents),
+           qm AS (SELECT mon_cents, (1 + (5 * (sum(c) OVER (ORDER BY mon_cents ASC) - c))
+                    // (SELECT n_users FROM tot))::BIGINT AS m_q FROM hm)
+      SELECT r_q, f_q, m_q, count(1) AS n_users,
+             sum(mon_cents)::BIGINT AS seg_cents
+      FROM ur JOIN qr USING (rec_day) JOIN qf USING (freq)
+              JOIN qm USING (mon_cents)
+      GROUP BY r_q, f_q, m_q
+      ORDER BY r_q, f_q, m_q"""),
 
     // -- robust outlier detection: per-type median + MAD ------------------
     //    Median and MAD computed from the per-(type, cents) HISTOGRAM,
@@ -1166,7 +1846,7 @@ object EventsTime extends QueryModule {
     //    so both engines agree on even counts; the outlier rule
     //    |x - med| > 3 * MAD is the classical robust z-score. The only
     //    event-scale ops are two hash aggs.
-    "ev_anomaly_mad" -> ((s, d) => {
+    Query("ev_anomaly_mad", (s, d) => {
       val h = ev(s, d)
         .groupBy(col("event_type"), valE2.as("cents"))
         .agg(count(lit(1)).as("c"))
@@ -1199,7 +1879,36 @@ object EventsTime extends QueryModule {
         .select(col("event_type"), col("n"), col("med_cents"),
           col("mad_cents"), col("n_outliers"))
         .orderBy("event_type")
-    }),
+    },
+      // lower-median convention: smallest value whose cumulative count
+      // reaches ceil(n/2) = (n+1)//2, over the (type, cents) histogram
+      """
+      WITH h AS (SELECT event_type, round(value * 100)::BIGINT AS cents,
+                        count(1) AS c
+                 FROM events GROUP BY 1, 2),
+           n AS (SELECT event_type, sum(c)::BIGINT AS n FROM h GROUP BY 1),
+           cum AS (SELECT h.*, sum(c) OVER (PARTITION BY event_type
+                     ORDER BY cents)::BIGINT AS cum FROM h),
+           med AS (SELECT c2.event_type, min(cents) AS med_cents
+                   FROM cum c2 JOIN n USING (event_type)
+                   WHERE cum >= (n + 1) // 2 GROUP BY 1),
+           dev AS (SELECT h.event_type, abs(cents - med_cents) AS adev,
+                          sum(c)::BIGINT AS c
+                   FROM h JOIN med USING (event_type) GROUP BY 1, 2),
+           dcum AS (SELECT dev.*, sum(c) OVER (PARTITION BY event_type
+                      ORDER BY adev)::BIGINT AS cum FROM dev),
+           mad AS (SELECT d2.event_type, min(adev) AS mad_cents
+                   FROM dcum d2 JOIN n USING (event_type)
+                   WHERE cum >= (n + 1) // 2 GROUP BY 1)
+      SELECT h.event_type, any_value(n.n) AS n,
+             any_value(med_cents) AS med_cents,
+             any_value(mad_cents) AS mad_cents,
+             coalesce(sum(CASE WHEN abs(cents - med_cents) >
+               3 * mad_cents THEN c END), 0)::BIGINT AS n_outliers
+      FROM h JOIN med USING (event_type) JOIN mad USING (event_type)
+             JOIN n USING (event_type)
+      GROUP BY h.event_type
+      ORDER BY event_type"""),
 
     // -- forecast baseline backtest (seasonal-naive vs persistence) -------
     //    The capacity-planning primitive: on the gap-filled hourly
@@ -1212,7 +1921,7 @@ object EventsTime extends QueryModule {
     //    missing hour is y = 0, and lag(24) must mean 24 HOURS, not 24
     //    existing rows); windows run per-type over the post-agg hourly
     //    frame, never event rows.
-    "ev_forecast_eval" -> ((s, d) => {
+    Query("ev_forecast_eval", (s, d) => {
       val e = ev(s, d)
       val hours = e
         .agg(date_trunc("hour", min(col("ts"))).as("lo"),
@@ -1246,741 +1955,10 @@ object EventsTime extends QueryModule {
                   WHEN sum(abs(y - f24)) > sum(abs(y - f1))
                   THEN 'persistence' ELSE 'tie' END""").as("better"))
         .orderBy("event_type")
-    }),
-
-    // -- multi-touch attribution (last-touch + linear credit) -------------
-    //    Each click/view attributes to the user's NEXT purchase within
-    //    a 7-day lookback: the purchase timestamp arrives as a
-    //    min-over-following window (no interval self-join, no fan-out),
-    //    then touches group by (user, purchase-time) so credit splits
-    //    over the touch set. Linear credit is integer-exact: cents DIV
-    //    n_touch per touch, remainder to the last touch, so per-type
-    //    sums reconcile to the purchase total to the cent. Purchases
-    //    sharing (user, us) merge into one credit pool (deterministic
-    //    on any corpus). Event-scale cost: the user window sort
-    //    sessionization already pays + one (user, time) shuffle join.
-    "ev_attribution" -> ((s, d) => {
-      val L = 604800000000L // 7-day lookback
-      val wNext = Window.partitionBy("user_id").orderBy("us", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-      val e = ev(s, d).select(col("user_id"), col("event_id"),
-        us.as("us"), col("event_type"), valE2.as("cents"))
-      val touches = e
-        .withColumn("np_us",
-          min(when(col("event_type") === "purchase", col("us")))
-            .over(wNext))
-        .filter(col("event_type").isin("click", "view") &&
-          col("np_us").isNotNull && col("np_us") - col("us") <= L)
-      val p = e.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("us").as("np_us"))
-        .agg(sum("cents").as("p_cents"))
-      val wG = Window.partitionBy("user_id", "np_us")
-      val t = touches
-        .withColumn("rk", row_number().over(
-          wG.orderBy(col("us").desc, col("event_id").desc)))
-        .withColumn("n_touch", count(lit(1)).over(wG))
-        .join(p, Seq("user_id", "np_us"))
-      t.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_touches"),
-          sum(when(col("rk") === 1, col("p_cents")).otherwise(lit(0L)))
-            .as("last_cents"),
-          sum(expr("p_cents DIV n_touch") +
-            when(col("rk") === 1, expr("p_cents % n_touch"))
-              .otherwise(lit(0L))).as("linear_cents"))
-        .orderBy("event_type")
-    })
-  )
-
-  override def oracles: Map[String, String] = Map(
-    // append-mode emission rule in SQL: a tumbling window materializes
-    // iff the final watermark (max ts - 30 min) passed its end
-    "ev_stream_replay" -> """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type""",
-
-    // file sink: same emission rule as the memory-sink replay — the
-    // sink changes durability (commit log + checkpoint), not content
-    "ev_stream_file_sink" -> """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type""",
-
-    // multi-batch replay over time-monotone chunks drops nothing and
-    // emits exactly the windows the FINAL watermark closed — the same
-    // batching-invariant emission rule as the single-batch replay
-    "ev_stream_multibatch" -> """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type""",
-
-    // the late-data path, drop rule EXPLICIT: the three synthetic
-    // chunk-5/6 rows (see lateDropScratch) are reconstructed from
-    // max(ts) with the same interval arithmetic; a synthetic row
-    // survives iff its hourly window end > its batch's late-events
-    // watermark (mx - 30 min for the chunk-6 row — chunks 5/6 rows are
-    // all well inside their filters except the mx - 3 h plant) — that
-    // predicate IS Spark's numRowsDroppedByWatermark filter, and it
-    // kills the mx - 3 h row. Emission = windows the FINAL watermark
-    // (mx + 2 h - 30 min, courtesy of the wm_push row) closed, which
-    // is every real window plus the accepted late_probe's — and never
-    // wm_push's own.
-    "ev_stream_late_drop" -> """
-      WITH m AS (SELECT max(ts) AS mx FROM events),
-           syn AS (SELECT mx - INTERVAL 3 HOUR AS ts,
-                          'late_probe' AS event_type FROM m
-                   UNION ALL
-                   SELECT mx - INTERVAL 20 MINUTE, 'late_probe' FROM m
-                   UNION ALL
-                   SELECT mx + INTERVAL 2 HOUR, 'wm_push' FROM m),
-           kept AS (SELECT s.ts, s.event_type FROM syn s, m
-                    WHERE date_trunc('hour', s.ts) + INTERVAL 1 HOUR
-                            > mx - INTERVAL 30 MINUTE),
-           aug AS (SELECT ts::TIMESTAMP AS ts, event_type FROM events
-                   UNION ALL
-                   SELECT ts, event_type FROM kept)
-      SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM aug, m
-      GROUP BY date_trunc('hour', ts), event_type, mx
-      HAVING date_trunc('hour', ts) + INTERVAL 1 HOUR
-               <= mx + INTERVAL 2 HOUR - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type""",
-
-    // inner stream-stream joins emit every match (state-bounding only),
-    // so the mirror is the plain time-bounded self-join
-    "ev_stream_join" -> """
-      SELECT l.user_id AS user_id, count(1) AS n_pairs,
-             min(epoch_us(l.ts)) AS first_us, max(epoch_us(r.ts)) AS last_us
-      FROM events l JOIN events r
-        ON l.user_id = r.user_id
-       AND l.event_type = 'click' AND r.event_type = 'purchase'
-       AND epoch_us(r.ts) >= epoch_us(l.ts) - 600000000
-       AND epoch_us(r.ts) <= epoch_us(l.ts)
-      GROUP BY l.user_id
-      ORDER BY user_id""",
-
-    // semi = batch EXISTS over a complete replay: each click row emits
-    // at most once, no pair multiplication, no eviction rows
-    "ev_stream_semi" -> """
-      SELECT c.user_id AS user_id, count(1) AS n_clicks,
-             min(epoch_us(c.ts)) AS first_us, max(epoch_us(c.ts)) AS last_us
-      FROM events c
-      WHERE c.event_type = 'click'
-        AND EXISTS (
-          SELECT 1 FROM events p
-          WHERE p.event_type = 'purchase' AND p.user_id = c.user_id
-            AND epoch_us(p.ts) >= epoch_us(c.ts) - 600000000
-            AND epoch_us(p.ts) <= epoch_us(c.ts))
-      GROUP BY c.user_id
-      ORDER BY user_id""",
-
-    // left-outer emission rule mirrored: matched pairs emit eagerly;
-    // a null-padded row emits only for clicks strictly below the final
-    // global watermark = least over both inputs of (ms-truncated max
-    // event time - 30 min). Clicks in the last 30 minutes of either
-    // stream never emit an outer row.
-    "ev_stream_outer" -> """
-      WITH c AS (SELECT user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'click'),
-           p AS (SELECT user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'purchase'),
-           wm AS (SELECT least(
-                    ((SELECT max(us) FROM c) // 1000 - 1800000) * 1000,
-                    ((SELECT max(us) FROM p) // 1000 - 1800000) * 1000)
-                    AS wm_us),
-           m AS (SELECT c.user_id, c.us AS l_us, p.us AS r_us
-                 FROM c JOIN p ON c.user_id = p.user_id
-                  AND p.us >= c.us - 600000000 AND p.us <= c.us),
-           o AS (SELECT c.user_id, c.us AS l_us, NULL::BIGINT AS r_us
-                 FROM c, wm
-                 WHERE c.us < wm.wm_us
-                   AND NOT EXISTS (
-                     SELECT 1 FROM p WHERE p.user_id = c.user_id
-                      AND p.us >= c.us - 600000000 AND p.us <= c.us)),
-           a AS (SELECT * FROM m UNION ALL SELECT * FROM o)
-      SELECT user_id,
-             count(r_us) AS n_pairs,
-             count(1) - count(r_us) AS n_outer,
-             min(l_us) AS first_us,
-             max(r_us) AS last_us
-      FROM a
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    // full outer: the left-outer rule (click outer iff wm > l_us) plus
-    // the right eviction boundary (purchase outer iff wm > r_us + 10min
-    // — a future click can reach 10 minutes back)
-    "ev_stream_full" -> """
-      WITH c AS (SELECT user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'click'),
-           p AS (SELECT user_id, epoch_us(ts) AS us FROM events
-                 WHERE event_type = 'purchase'),
-           wm AS (SELECT least(
-                    ((SELECT max(us) FROM c) // 1000 - 1800000) * 1000,
-                    ((SELECT max(us) FROM p) // 1000 - 1800000) * 1000)
-                    AS wm_us),
-           m AS (SELECT c.user_id, c.us AS l_us, p.us AS r_us
-                 FROM c JOIN p ON c.user_id = p.user_id
-                  AND p.us >= c.us - 600000000 AND p.us <= c.us),
-           lo AS (SELECT c.user_id, c.us AS l_us, NULL::BIGINT AS r_us
-                  FROM c, wm
-                  WHERE c.us < wm.wm_us
-                    AND NOT EXISTS (
-                      SELECT 1 FROM p WHERE p.user_id = c.user_id
-                       AND p.us >= c.us - 600000000 AND p.us <= c.us)),
-           ro AS (SELECT p.user_id, NULL::BIGINT AS l_us, p.us AS r_us
-                  FROM p, wm
-                  WHERE p.us + 600000000 < wm.wm_us
-                    AND NOT EXISTS (
-                      SELECT 1 FROM c WHERE c.user_id = p.user_id
-                       AND p.us >= c.us - 600000000 AND p.us <= c.us)),
-           a AS (SELECT * FROM m UNION ALL SELECT * FROM lo
-                 UNION ALL SELECT * FROM ro)
-      SELECT user_id,
-             sum(CASE WHEN l_us IS NOT NULL AND r_us IS NOT NULL
-                 THEN 1 ELSE 0 END)::BIGINT AS n_pairs,
-             sum(CASE WHEN l_us IS NOT NULL AND r_us IS NULL
-                 THEN 1 ELSE 0 END)::BIGINT AS n_left_outer,
-             sum(CASE WHEN l_us IS NULL AND r_us IS NOT NULL
-                 THEN 1 ELSE 0 END)::BIGINT AS n_right_outer,
-             min(l_us) AS first_us,
-             max(r_us) AS last_us
-      FROM a
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    // multi-source union: append rule over the COMBINED stream (the
-    // final watermark is the max event time across both halves), with
-    // source identity = event_id parity
-    "ev_stream_union" -> """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H')
-               AS hour,
-             (event_id % 2) AS src, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_id % 2, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, src""",
-
-    // gap sessionization + the append-mode emission rule: only sessions
-    // whose end cleared the final watermark, which Spark tracks at
-    // MILLISECOND precision (max event ms - delay ms) — mirrored here
-    // with the same truncation
-    "ev_stream_session" -> s"""
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-           flagged AS (
-             SELECT user_id, event_id, us,
-                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) >= $GAP_US
-                         THEN 1 ELSE 0 END AS new_s
-             FROM e),
-           sess AS (
-             SELECT user_id, us,
-                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             FROM flagged),
-           agg AS (
-             SELECT min(us) AS start_us, max(us) + $GAP_US AS end_us,
-                    user_id, count(1) AS n_events
-             FROM sess GROUP BY user_id, sid),
-           m AS (SELECT ((max(epoch_us(ts)) // 1000) - 1800000) * 1000 AS wm_us
-                 FROM events)
-      SELECT start_us, end_us, user_id, n_events
-      FROM agg, m
-      WHERE end_us <= wm_us
-      ORDER BY user_id, start_us""",
-
-    // single-replay dedup keeps every first-seen (user, type) pair, so
-    // the surviving key set equals the batch distinct — per-user
-    // distinct-type counts are the deterministic compare
-    "ev_stream_dedup" -> """
-      SELECT user_id, count(DISTINCT event_type) AS n_types
-      FROM events
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    "ev_stream_state" -> """
-      SELECT user_id, count(1) AS n_events, max(epoch_us(ts)) AS last_us,
-             count(DISTINCT event_type) AS n_types
-      FROM events
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    // stateless broadcast enrichment emits every row exactly once
-    // under AvailableNow, so the mirror is the plain batch join + agg;
-    // unmatched user_ids coalesce to '(none)' on both sides so null
-    // ORDER BY placement differences can't flip the positional compare
-    "ev_stream_enrich" -> """
-      SELECT coalesce(c.c_mktsegment, '(none)') AS segment, e.event_type,
-             count(1) AS n_events,
-             sum(round(e.value * 100)::BIGINT)::BIGINT AS value_cents
-      FROM events e
-      LEFT JOIN customer c ON e.user_id = c.c_custkey
-      GROUP BY 1, 2
-      ORDER BY segment, event_type""",
-
-    // update mode emits EVERY window (open ones too), so the mirror is
-    // the plain count with no watermark clause — the semantic line
-    // between update and append, under the value compare
-    "ev_stream_update" -> """
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H')
-               AS hour,
-             event_type, count(1) AS n
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY hour, event_type""",
-
-    // transformWithState runs the same per-user machine as
-    // ev_stream_state, so its monotone final maxima mirror the same
-    // batch aggregate
-    "ev_stream_tws" -> """
-      SELECT user_id, count(1) AS n_events, max(epoch_us(ts)) AS last_us,
-             count(DISTINCT event_type) AS n_types
-      FROM events
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    // chained dedup -> window agg: dedup keys include the hour bucket,
-    // so the downstream count is distinct users per (hour, type); the
-    // append emission rule (window end <= ms-truncated final watermark
-    // over SOURCE event times) mirrors ev_stream_session's
-    "ev_stream_chain" -> """
-      WITH k AS (SELECT DISTINCT user_id, event_type,
-                        date_trunc('hour', ts::TIMESTAMP) AS hr
-                 FROM events),
-           m AS (SELECT ((max(epoch_us(ts)) // 1000) - 1800000) * 1000
-                   AS wm_us
-                 FROM events)
-      SELECT strftime(hr, '%Y-%m-%d %H') AS hour, event_type,
-             count(1) AS n_users
-      FROM k, m
-      WHERE epoch_us(hr + INTERVAL 1 HOUR) <= wm_us
-      GROUP BY hr, event_type
-      ORDER BY hour, event_type""",
-
-    "ev_gap_fill" -> """
-      WITH b AS (SELECT date_trunc('hour', min(ts)::TIMESTAMP) AS lo,
-                        date_trunc('hour', max(ts)::TIMESTAMP) AS hi
-                 FROM events),
-           h AS (SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS h
-                 FROM b),
-           t AS (SELECT DISTINCT event_type FROM events),
-           c AS (SELECT date_trunc('hour', ts::TIMESTAMP) AS h, event_type,
-                        count(1) AS cnt
-                 FROM events GROUP BY 1, 2)
-      SELECT strftime(h.h, '%Y-%m-%d %H') AS hour,
-             t.event_type AS event_type, coalesce(c.cnt, 0) AS n
-      FROM h CROSS JOIN t
-      LEFT JOIN c ON c.h = h.h AND c.event_type = t.event_type
-      ORDER BY hour, t.event_type""",
-
-    "ev_tumbling" -> """
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n,
-             sum(round(value * 100)::BIGINT) / 100.0 AS total_value
-      FROM events
-      GROUP BY 1, 2
-      ORDER BY hour, event_type""",
-
-    "ev_sliding" -> """
-      WITH x AS (SELECT event_type, epoch_us(ts) AS us FROM events),
-           w AS (SELECT event_type, (us // 300000000 - i.i) * 300000000 AS ws_us
-                 FROM x CROSS JOIN (SELECT unnest(range(0, 2)) AS i) i)
-      SELECT ws_us, event_type, count(1) AS n
-      FROM w
-      GROUP BY ws_us, event_type
-      ORDER BY ws_us, event_type""",
-
-    // the z-test in DuckDB runs in HUGEINT (sum over BIGINT); values are
-    // bounded far inside int64, so the comparisons agree with Spark's
-    // long arithmetic exactly
-    "ev_outliers" -> """
-      WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-                        round(value * 100)::BIGINT AS v
-                 FROM events),
-           w AS (SELECT user_id, event_id, us, v,
-                        count(v) OVER win AS wn,
-                        sum(v) OVER win AS ws,
-                        sum(v * v) OVER win AS wss
-                 FROM b
-                 WINDOW win AS (PARTITION BY user_id ORDER BY us, event_id
-                                ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-      SELECT user_id, us, event_id, v AS val_e2, wn AS win_n
-      FROM w
-      WHERE wn >= 10
-        AND (wn*v - ws) * (wn*v - ws) > 9 * (wn*wss - ws*ws)
-      ORDER BY user_id, us, event_id""",
-
-    "ev_user_stats" -> """
-      SELECT user_id, count(1) AS n_events,
-             count(DISTINCT event_type) AS n_types,
-             min(epoch_us(ts)) AS first_us,
-             max(epoch_us(ts)) AS last_us,
-             sum(round(value * 100)::BIGINT) / 100.0 AS total_value
-      FROM events
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    "ev_sessionize" -> s"""
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-           flagged AS (
-             SELECT user_id, event_id, us,
-                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > $GAP_US
-                         THEN 1 ELSE 0 END AS new_s
-             FROM e),
-           sess AS (
-             SELECT user_id, us,
-                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             FROM flagged),
-           per_sess AS (
-             SELECT user_id, sid, count(1) AS n_ev, max(us) - min(us) AS span_us
-             FROM sess GROUP BY user_id, sid)
-      SELECT user_id, max(sid)::BIGINT AS n_sessions,
-             max(n_ev) AS max_session_events,
-             max(span_us) AS max_session_span_us
-      FROM per_sess
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    "ev_seqmatch" -> s"""
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-                        substr(event_type, 1, 1) AS c
-                 FROM events),
-           r AS (SELECT user_id, c,
-                        row_number() OVER (PARTITION BY user_id
-                          ORDER BY us, event_id) AS rk
-                 FROM e),
-           sq AS (SELECT user_id, string_agg(c, '' ORDER BY rk) AS seq
-                  FROM r WHERE rk <= $SEQ_CAP
-                  GROUP BY user_id)
-      SELECT count(1) AS n_users,
-             sum(CASE WHEN regexp_matches(seq, 's.*v.*p')
-                 THEN 1 ELSE 0 END)::BIGINT AS n_svp,
-             sum(CASE WHEN seq LIKE '%ee%' THEN 1 ELSE 0 END)::BIGINT
-               AS n_ee,
-             sum(CASE WHEN seq LIKE 's%' THEN 1 ELSE 0 END)::BIGINT
-               AS n_first_signup,
-             max(length(seq)) AS max_len
-      FROM sq""",
-
-    "ev_markov" -> """
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type
-                 FROM events),
-           t AS (SELECT event_type AS from_type,
-                        lead(event_type) OVER (PARTITION BY user_id
-                          ORDER BY us, event_id) AS to_type
-                 FROM e),
-           c AS (SELECT from_type, to_type, count(1) AS n
-                 FROM t WHERE to_type IS NOT NULL
-                 GROUP BY from_type, to_type)
-      SELECT from_type, to_type, n,
-             ((1000 * n) // (sum(n) OVER (PARTITION BY from_type)))::BIGINT
-               AS p_mille
-      FROM c
-      ORDER BY from_type, to_type""",
-
-    "ev_typed_gaps" -> """
-      WITH e AS (SELECT user_id, epoch_us(ts) AS us FROM events),
-           g AS (SELECT user_id,
-                        us - lag(us) OVER (PARTITION BY user_id ORDER BY us) AS gap
-                 FROM e)
-      SELECT user_id, count(1) AS n_events,
-             coalesce(max(gap), 0)::BIGINT AS max_gap_us
-      FROM g
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    "ev_funnel" -> """
-      WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
-           w1 AS (SELECT *, min(CASE WHEN event_type = 'signup' THEN us END)
-                              OVER (PARTITION BY user_id) AS t1 FROM e),
-           w2 AS (SELECT *, min(CASE WHEN event_type = 'click' AND us >= t1 THEN us END)
-                              OVER (PARTITION BY user_id) AS t2 FROM w1),
-           w3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' AND us >= t2 THEN us END)
-                              OVER (PARTITION BY user_id) AS t3 FROM w2),
-           per_user AS (
-             SELECT user_id, any_value(t1) AS t1, any_value(t2) AS t2,
-                    any_value(t3) AS t3
-             FROM w3 GROUP BY user_id)
-      SELECT count(1) AS n_users,
-             sum(CASE WHEN t1 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_signup,
-             sum(CASE WHEN t2 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_signup_click,
-             sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_full_funnel
-      FROM per_user""",
-
-    "ev_retention" -> """
-      WITH d AS (SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day
-                 FROM events),
-           c AS (SELECT user_id, min(day) AS d0 FROM d GROUP BY user_id)
-      SELECT c.d0 AS cohort_day, (d.day - c.d0) AS day_offset,
-             count(DISTINCT d.user_id) AS n_active
-      FROM d JOIN c ON d.user_id = c.user_id
-      WHERE d.day - c.d0 <= 7
-      GROUP BY 1, 2
-      ORDER BY 1, 2""",
-
-    // distinct user-days -> bounded 7-day contribution explode ->
-    // distinct -> per-day aggs; no window on either engine
-    "ev_wau" -> """
-      WITH ud AS (SELECT DISTINCT user_id,
-                         (epoch_us(ts) // 86400000000)::BIGINT AS day
-                  FROM events),
-           days AS (SELECT DISTINCT day FROM ud),
-           dau AS (SELECT day, count(1) AS dau FROM ud GROUP BY day),
-           w AS (SELECT DISTINCT u.user_id, (u.day + o.o)::BIGINT AS day
-                 FROM ud u
-                 CROSS JOIN (SELECT unnest(range(0, 7)) AS o) o),
-           wau AS (SELECT w.day, count(1) AS wau
-                   FROM w JOIN days USING (day)
-                   GROUP BY w.day)
-      SELECT d.day, d.dau, wau.wau,
-             ((1000 * d.dau) // wau.wau)::BIGINT AS stickiness_mille
-      FROM dau d JOIN wau USING (day)
-      ORDER BY day""",
-
-    // cohort = first-activity week; cumulative window partitioned by
-    // cohort (|weeks|-sized frames); all arithmetic integer
-    "ev_cohort_ltv" -> """
-      WITH f AS (SELECT user_id,
-                        (min(epoch_us(ts)) // 604800000000)::BIGINT AS cohort_wk
-                 FROM events GROUP BY user_id),
-           sz AS (SELECT cohort_wk, count(1) AS n_users
-                  FROM f GROUP BY cohort_wk),
-           cell AS (SELECT f.cohort_wk,
-                           ((epoch_us(e.ts) // 604800000000)
-                             - f.cohort_wk)::BIGINT AS age_wk,
-                           sum(round(e.value * 100)::BIGINT)::BIGINT AS rev_cents,
-                           count(DISTINCT e.user_id) AS n_buyers
-                    FROM events e JOIN f ON e.user_id = f.user_id
-                    WHERE e.event_type = 'purchase'
-                    GROUP BY 1, 2),
-           cum AS (SELECT *, sum(rev_cents) OVER (PARTITION BY cohort_wk
-                     ORDER BY age_wk ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)::BIGINT AS cum_cents
-                   FROM cell)
-      SELECT c.cohort_wk, c.age_wk, s.n_users, c.n_buyers, c.rev_cents,
-             c.cum_cents, (c.cum_cents // s.n_users)::BIGINT AS ltv_cents
-      FROM cum c JOIN sz s USING (cohort_wk)
-      ORDER BY cohort_wk, age_wk""",
-
-    "ev_interval_join" -> s"""
-      WITH e AS (SELECT user_id, event_id, us FROM
-                   (SELECT user_id, event_id, epoch_us(ts) AS us FROM events)),
-           flagged AS (
-             SELECT user_id, event_id, us,
-                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) > $GAP_US
-                         THEN 1 ELSE 0 END AS new_s
-             FROM e),
-           sids AS (
-             SELECT user_id, us,
-                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             FROM flagged),
-           sess AS (
-             SELECT user_id, sid, min(us) AS s_start, max(us) AS s_end
-             FROM sids GROUP BY user_id, sid),
-           inc AS (
-             SELECT event_id AS inc_id, user_id,
-                    epoch_us(ts) - $W_US AS i_start, epoch_us(ts) AS i_end
-             FROM events WHERE event_type = 'error')
-      SELECT i.inc_id, s.user_id, s.sid::BIGINT AS sid,
-             s.s_start AS s_start_us, s.s_end AS s_end_us
-      FROM sess s JOIN inc i
-        ON s.user_id = i.user_id
-       AND s.s_start <= i.i_end AND i.i_start <= s.s_end
-      ORDER BY inc_id, s.user_id, sid""",
-
-    "ev_pivot" -> """
-      SELECT strftime(date_trunc('day', ts::TIMESTAMP), '%Y-%m-%d') AS day,
-             count(1) AS n_total,
-             sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)::BIGINT AS n_click,
-             sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)::BIGINT AS n_error,
-             sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)::BIGINT AS n_purchase,
-             sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END)::BIGINT AS n_signup,
-             sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)::BIGINT AS n_view
-      FROM events
-      GROUP BY 1
-      ORDER BY day""",
-
-    "ev_pivot_dynamic" -> {
-      val cols = Seq("click", "error", "purchase", "signup", "view").map(t =>
-        s"coalesce(sum(CASE WHEN event_type = '$t' THEN round(value * 100)::BIGINT END), 0)::BIGINT AS v_$t")
-        .mkString(",\n             ")
-      s"""
-      SELECT strftime(date_trunc('day', ts::TIMESTAMP), '%Y-%m-%d') AS day,
-             $cols
-      FROM events
-      GROUP BY 1
-      ORDER BY day"""
     },
-
-    "ev_asof_join" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-           p AS (SELECT user_id, epoch_us(ts) AS us,
-                        round(value * 100)::BIGINT AS pval
-                 FROM events WHERE event_type = 'purchase')
-      SELECT e.event_id, e.user_id,
-             p.us AS prev_purchase_us,
-             p.pval AS prev_purchase_e2
-      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.us
-      ORDER BY event_id""",
-
-    "ev_asof_forward" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-           p AS (SELECT user_id, epoch_us(ts) AS us,
-                        round(value * 100)::BIGINT AS pval
-                 FROM events WHERE event_type = 'purchase')
-      SELECT e.event_id, e.user_id,
-             p.us AS next_purchase_us,
-             p.pval AS next_purchase_e2
-      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us <= p.us
-      ORDER BY event_id""",
-
-    "ev_asof_tolerance" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-           p AS (SELECT user_id, epoch_us(ts) AS us,
-                        round(value * 100)::BIGINT AS pval
-                 FROM events WHERE event_type = 'purchase')
-      SELECT e.event_id, e.user_id,
-             CASE WHEN e.us - p.us <= 3600000000 THEN p.pval END
-               AS recent_purchase_e2
-      FROM e ASOF LEFT JOIN p ON e.user_id = p.user_id AND e.us >= p.us
-      ORDER BY event_id""",
-
-    "ev_asof_nearest" -> """
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events),
-           p AS (SELECT user_id, epoch_us(ts) AS us,
-                        round(value * 100)::BIGINT AS pval
-                 FROM events WHERE event_type = 'purchase'),
-           b AS (SELECT e.event_id, e.user_id, e.us,
-                        p.us AS b_us, p.pval AS b_pval
-                 FROM e ASOF LEFT JOIN p
-                   ON e.user_id = p.user_id AND e.us >= p.us),
-           f AS (SELECT e.event_id, p.us AS f_us, p.pval AS f_pval
-                 FROM e ASOF LEFT JOIN p
-                   ON e.user_id = p.user_id AND e.us <= p.us)
-      SELECT b.event_id, b.user_id,
-             CASE WHEN f.f_us IS NULL OR (b.b_us IS NOT NULL
-                        AND (b.us - b.b_us) <= (f.f_us - b.us))
-                  THEN b.b_us ELSE f.f_us END AS near_purchase_us,
-             CASE WHEN f.f_us IS NULL OR (b.b_us IS NOT NULL
-                        AND (b.us - b.b_us) <= (f.f_us - b.us))
-                  THEN b.b_pval ELSE f.f_pval END AS near_purchase_e2
-      FROM b JOIN f ON b.event_id = f.event_id
-      ORDER BY b.event_id""",
-
-    "ev_dwell_hist" -> """
-      WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS us
-                 FROM events),
-           d AS (SELECT event_type,
-                        us - lag(us) OVER (PARTITION BY user_id
-                                           ORDER BY us, event_id) AS delta
-                 FROM e)
-      SELECT event_type,
-             (CASE WHEN delta < 1000000 THEN 0
-                   WHEN delta < 10000000 THEN 1
-                   WHEN delta < 60000000 THEN 2
-                   WHEN delta < 600000000 THEN 3
-                   WHEN delta < 3600000000 THEN 4
-                   ELSE 5 END)::BIGINT AS band,
-             count(1) AS n
-      FROM d
-      WHERE delta IS NOT NULL
-      GROUP BY 1, 2
-      ORDER BY event_type, band""",
-
-    "ev_range_join" -> s"""
-      WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS us, event_type FROM events)
-      SELECT e.event_id, e.user_id,
-             (SELECT count(1) FROM e c
-              WHERE c.event_type = 'click' AND c.user_id = e.user_id
-                AND c.us >= e.us - $W_US AND c.us < e.us) AS n_recent_clicks
-      FROM e
-      WHERE e.event_type = 'error'
-      ORDER BY event_id""",
-
-    "ev_session_window" -> s"""
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-           flagged AS (
-             SELECT user_id, event_id, us,
-                    -- session_window merges on STRICT overlap (diff < gap)
-                    CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) IS NULL
-                              OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us, event_id) >= $GAP_US
-                         THEN 1 ELSE 0 END AS new_s
-             FROM e),
-           sess AS (
-             SELECT user_id, us,
-                    sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             FROM flagged)
-      SELECT min(us) AS start_us, max(us) + $GAP_US AS end_us,
-             user_id, count(1) AS n_events
-      FROM sess
-      GROUP BY user_id, sid
-      ORDER BY user_id, start_us""",
-
-    "ev_map_funcs" -> """
-      SELECT user_id,
-             count(DISTINCT event_type) AS n_types,
-             coalesce(sum(CASE WHEN event_type = 'click' THEN 1 END), 0)::BIGINT AS n_click,
-             coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 END), 0)::BIGINT AS n_purchase
-      FROM events
-      GROUP BY user_id
-      ORDER BY user_id""",
-
-    "ev_topk_users" -> """
-      SELECT user_id, count(1) AS n
-      FROM events
-      GROUP BY user_id
-      ORDER BY n DESC, user_id
-      LIMIT 5""",
-
-    // dynamic gap as a per-event CASE; merge rule = running max of
-    // event ends, new session iff us >= that max (half-open windows)
-    "ev_session_dynamic" -> """
-      WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us,
-                        CASE WHEN event_type = 'purchase' THEN 600000000
-                             ELSE 1800000000 END AS gap
-                 FROM events),
-           w AS (SELECT *, max(us + gap) OVER (PARTITION BY user_id
-                   ORDER BY us, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS prev_end
-                 FROM e),
-           f AS (SELECT *, CASE WHEN prev_end IS NULL OR us >= prev_end
-                   THEN 1 ELSE 0 END AS new_s FROM w),
-           s AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
-                   ORDER BY us, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS sid FROM f)
-      SELECT min(us) AS start_us, max(us + gap) AS end_us, user_id,
-             count(1) AS n_events
-      FROM s GROUP BY user_id, sid
-      ORDER BY user_id, start_us""",
-
-    // gap-filled hourly spine, then the two lag baselines and integer
-    // per-mille MAE — mirrored clause-for-clause
-    "ev_forecast_eval" -> """
+      // gap-filled hourly spine, then the two lag baselines and integer
+      // per-mille MAE — mirrored clause-for-clause
+      """
       WITH b AS (SELECT date_trunc('hour', min(ts)) AS lo,
                         date_trunc('hour', max(ts)) AS hi FROM events),
            hours AS (SELECT unnest(generate_series(lo, hi,
@@ -2014,70 +1992,52 @@ object EventsTime extends QueryModule {
                   THEN 'seasonal'
                   WHEN sum(abs(y - f24)) > sum(abs(y - f1))
                   THEN 'persistence' ELSE 'tie' END AS better
-      FROM t GROUP BY event_type ORDER BY event_type""",
+      FROM t GROUP BY event_type ORDER BY event_type"""),
 
-    // quintiles from distinct-value histograms (no user-scale sort);
-    // ties share a score: 1 + 5*n_strictly_worse // n_users (worse
-    // values first in the cumulative order, so score 5 = best)
-    "ev_rfm" -> """
-      WITH u AS (SELECT user_id, max(epoch_us(ts)) AS last_us,
-                        count(1) AS freq,
-                        coalesce(sum(CASE WHEN event_type = 'purchase'
-                          THEN round(value * 100)::BIGINT END), 0)::BIGINT
-                          AS mon_cents
-                 FROM events GROUP BY user_id),
-           tot AS (SELECT max(last_us) AS g_us, count(1) AS n_users FROM u),
-           ur AS (SELECT u.*, (tot.g_us - u.last_us) // 86400000000
-                    AS rec_day FROM u, tot),
-           hr AS (SELECT rec_day, count(1) AS c FROM ur GROUP BY rec_day),
-           qr AS (SELECT rec_day, (1 + (5 * (sum(c) OVER (ORDER BY rec_day DESC) - c))
-                    // (SELECT n_users FROM tot))::BIGINT AS r_q FROM hr),
-           hf AS (SELECT freq, count(1) AS c FROM ur GROUP BY freq),
-           qf AS (SELECT freq, (1 + (5 * (sum(c) OVER (ORDER BY freq ASC) - c))
-                    // (SELECT n_users FROM tot))::BIGINT AS f_q FROM hf),
-           hm AS (SELECT mon_cents, count(1) AS c FROM ur GROUP BY mon_cents),
-           qm AS (SELECT mon_cents, (1 + (5 * (sum(c) OVER (ORDER BY mon_cents ASC) - c))
-                    // (SELECT n_users FROM tot))::BIGINT AS m_q FROM hm)
-      SELECT r_q, f_q, m_q, count(1) AS n_users,
-             sum(mon_cents)::BIGINT AS seg_cents
-      FROM ur JOIN qr USING (rec_day) JOIN qf USING (freq)
-              JOIN qm USING (mon_cents)
-      GROUP BY r_q, f_q, m_q
-      ORDER BY r_q, f_q, m_q""",
-
-    // lower-median convention: smallest value whose cumulative count
-    // reaches ceil(n/2) = (n+1)//2, over the (type, cents) histogram
-    "ev_anomaly_mad" -> """
-      WITH h AS (SELECT event_type, round(value * 100)::BIGINT AS cents,
-                        count(1) AS c
-                 FROM events GROUP BY 1, 2),
-           n AS (SELECT event_type, sum(c)::BIGINT AS n FROM h GROUP BY 1),
-           cum AS (SELECT h.*, sum(c) OVER (PARTITION BY event_type
-                     ORDER BY cents)::BIGINT AS cum FROM h),
-           med AS (SELECT c2.event_type, min(cents) AS med_cents
-                   FROM cum c2 JOIN n USING (event_type)
-                   WHERE cum >= (n + 1) // 2 GROUP BY 1),
-           dev AS (SELECT h.event_type, abs(cents - med_cents) AS adev,
-                          sum(c)::BIGINT AS c
-                   FROM h JOIN med USING (event_type) GROUP BY 1, 2),
-           dcum AS (SELECT dev.*, sum(c) OVER (PARTITION BY event_type
-                      ORDER BY adev)::BIGINT AS cum FROM dev),
-           mad AS (SELECT d2.event_type, min(adev) AS mad_cents
-                   FROM dcum d2 JOIN n USING (event_type)
-                   WHERE cum >= (n + 1) // 2 GROUP BY 1)
-      SELECT h.event_type, any_value(n.n) AS n,
-             any_value(med_cents) AS med_cents,
-             any_value(mad_cents) AS mad_cents,
-             coalesce(sum(CASE WHEN abs(cents - med_cents) >
-               3 * mad_cents THEN c END), 0)::BIGINT AS n_outliers
-      FROM h JOIN med USING (event_type) JOIN mad USING (event_type)
-             JOIN n USING (event_type)
-      GROUP BY h.event_type
-      ORDER BY event_type""",
-
-    // next-purchase via min-over-following; linear credit integer-exact
-    // (cents // n_touch each, remainder to the last touch)
-    "ev_attribution" -> """
+    // -- multi-touch attribution (last-touch + linear credit) -------------
+    //    Each click/view attributes to the user's NEXT purchase within
+    //    a 7-day lookback: the purchase timestamp arrives as a
+    //    min-over-following window (no interval self-join, no fan-out),
+    //    then touches group by (user, purchase-time) so credit splits
+    //    over the touch set. Linear credit is integer-exact: cents DIV
+    //    n_touch per touch, remainder to the last touch, so per-type
+    //    sums reconcile to the purchase total to the cent. Purchases
+    //    sharing (user, us) merge into one credit pool (deterministic
+    //    on any corpus). Event-scale cost: the user window sort
+    //    sessionization already pays + one (user, time) shuffle join.
+    Query("ev_attribution", (s, d) => {
+      val L = 604800000000L // 7-day lookback
+      val wNext = Window.partitionBy("user_id").orderBy("us", "event_id")
+        .rowsBetween(1, Window.unboundedFollowing)
+      val e = ev(s, d).select(col("user_id"), col("event_id"),
+        us.as("us"), col("event_type"), valE2.as("cents"))
+      val touches = e
+        .withColumn("np_us",
+          min(when(col("event_type") === "purchase", col("us")))
+            .over(wNext))
+        .filter(col("event_type").isin("click", "view") &&
+          col("np_us").isNotNull && col("np_us") - col("us") <= L)
+      val p = e.filter(col("event_type") === "purchase")
+        .groupBy(col("user_id"), col("us").as("np_us"))
+        .agg(sum("cents").as("p_cents"))
+      val wG = Window.partitionBy("user_id", "np_us")
+      val t = touches
+        .withColumn("rk", row_number().over(
+          wG.orderBy(col("us").desc, col("event_id").desc)))
+        .withColumn("n_touch", count(lit(1)).over(wG))
+        .join(p, Seq("user_id", "np_us"))
+      t.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_touches"),
+          sum(when(col("rk") === 1, col("p_cents")).otherwise(lit(0L)))
+            .as("last_cents"),
+          sum(expr("p_cents DIV n_touch") +
+            when(col("rk") === 1, expr("p_cents % n_touch"))
+              .otherwise(lit(0L))).as("linear_cents"))
+        .orderBy("event_type")
+    },
+      // next-purchase via min-over-following; linear credit integer-exact
+      // (cents // n_touch each, remainder to the last touch)
+      """
       WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us, event_type,
                         round(value * 100)::BIGINT AS cents FROM events),
            t0 AS (SELECT *, min(CASE WHEN event_type = 'purchase' THEN us END)
@@ -2103,6 +2063,6 @@ object EventsTime extends QueryModule {
                AS last_cents,
              sum(p_cents // n_touch + CASE WHEN rk = 1
                THEN p_cents % n_touch ELSE 0 END)::BIGINT AS linear_cents
-      FROM j GROUP BY event_type ORDER BY event_type"""
+      FROM j GROUP BY event_type ORDER BY event_type""")
   )
 }

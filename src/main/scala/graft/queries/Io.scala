@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Scratch, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Query, QueryModule, Scratch, Tables}
 import org.apache.spark.sql.functions._
 
 /** Source/sink format coverage: every round-trip WRITES a table out in a
@@ -33,17 +32,20 @@ object Io extends QueryModule {
       write: String => Unit): String =
     Scratch.once(name, Tables.sig(d, table), Scratch.jvm)(write)
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // CSV out + back: quoting (names/comments may carry delimiters),
     // header handling, and double text-round-trip (Java/Spark print
     // doubles with round-trip-exact digits).
-    "io_csv_roundtrip" -> ((s, d) => {
+    Query("io_csv_roundtrip", (s, d) => {
       val src = Tables.customer(s, d)
       val path = layout("csv_customer", d, "customer")(
         src.write.option("header", "true").csv(_))
       s.read.schema(src.schema).option("header", "true").csv(path)
         .orderBy("c_custkey")
-    }),
+    },
+      """
+      SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
+      FROM customer ORDER BY c_custkey"""),
 
     // Compression-codec control: the same projection written as zstd
     // AND gzip parquet, read back, and aggregated per codec — at
@@ -52,7 +54,7 @@ object Io extends QueryModule {
     // can set it per write and read either transparently. The oracle
     // computes the expected per-codec aggregates straight from the
     // base table (both codecs must decode to identical data).
-    "io_codec_roundtrip" -> ((s, d) => {
+    Query("io_codec_roundtrip", (s, d) => {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
       val frames = Seq("zstd", "gzip").map { codec =>
@@ -64,19 +66,31 @@ object Io extends QueryModule {
           .select(lit(codec).as("codec"), col("n_rows"), col("sum_qty"))
       }
       frames.reduce(_.unionByName(_)).orderBy("codec")
-    }),
+    },
+      """
+      WITH a AS (SELECT count(1)::BIGINT AS n_rows,
+                        sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty
+                 FROM lineitem)
+      SELECT codec, n_rows, sum_qty
+      FROM (SELECT 'gzip' AS codec FROM (VALUES (1))
+            UNION ALL
+            SELECT 'zstd' FROM (VALUES (1))), a
+      ORDER BY codec"""),
 
     // JSON lines out + back (the interchange format of most
     // web-crawl / training-data pipelines).
-    "io_json_roundtrip" -> ((s, d) => {
+    Query("io_json_roundtrip", (s, d) => {
       val src = Tables.nation(s, d)
       val path = layout("json_nation", d, "nation")(src.write.json(_))
       s.read.schema(src.schema).json(path).orderBy("n_nationkey")
-    }),
+    },
+      """
+      SELECT n_nationkey, n_name, n_regionkey
+      FROM nation ORDER BY n_nationkey"""),
 
     // ORC out + back, with a post-read filter+agg so ORC's own
     // predicate pushdown path runs too.
-    "io_orc_roundtrip" -> ((s, d) => {
+    Query("io_orc_roundtrip", (s, d) => {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_returnflag", "l_quantity",
           "l_extendedprice")
@@ -87,7 +101,14 @@ object Io extends QueryModule {
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("l_extendedprice"))) / 100.0).as("sum_price"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """
+      SELECT l_returnflag, count(1) AS n,
+             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_price
+      FROM lineitem
+      WHERE l_quantity >= 30
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // Per-FILE min/max statistics manifest — the data-skipping index
     // (Delta/Iceberg stats, parquet row-group pruning's file-level
@@ -103,7 +124,7 @@ object Io extends QueryModule {
     // (a 2-file shard would mean the manifest silently went per-dir).
     // One scan + one hash agg at any scale; the manifest is what a
     // 100 TB reader consults INSTEAD of listing data files.
-    "io_file_stats" -> ((s, d) => {
+    Query("io_file_stats", (s, d) => {
       val src = Tables.lineitem(s, d)
         .withColumn("l_shard", (col("l_orderkey") % 8).cast("int"))
       val path = layout("filestats_lineitem", d, "lineitem")(
@@ -124,7 +145,19 @@ object Io extends QueryModule {
           min(unix_micros(col("l_shipdate"))).as("min_ship_us"),
           max(unix_micros(col("l_shipdate"))).as("max_ship_us"))
         .orderBy("shard")
-    }),
+    },
+      // shard identity is deterministic (l_orderkey % 8), so the oracle
+      // rebuilds every per-file stat from the logical table; n_files = 1
+      // pins the one-file-per-shard physical layout
+      """
+      SELECT (l_orderkey % 8) AS shard, 1::BIGINT AS n_files,
+             count(1) AS n_rows,
+             min(l_orderkey) AS min_key, max(l_orderkey) AS max_key,
+             min(epoch_us(l_shipdate)) AS min_ship_us,
+             max(epoch_us(l_shipdate)) AS max_ship_us
+      FROM lineitem
+      GROUP BY 1
+      ORDER BY shard"""),
 
     // Small-file COMPACTION — the 100 TB table-maintenance operation
     // (a streaming ingest or over-parallel write leaves thousands of
@@ -140,7 +173,7 @@ object Io extends QueryModule {
     // md5s) proves the rewrite lost nothing. The count() that sizes
     // the rewrite is metadata-scale driver work (one long), the same
     // planning job any real compaction runs.
-    "io_compaction" -> ((s, d) => {
+    Query("io_compaction", (s, d) => {
       val src = Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity")
       val fragDf = s.read.parquet(layout("frag_lineitem", d, "lineitem")(
@@ -161,13 +194,27 @@ object Io extends QueryModule {
           expr("bit_xor(h)").as("content_sig"))
         .select(lit(64L).as("n_files_before"), col("n_files_after"),
           col("n_rows"), col("content_sig"))
-    }),
+    },
+      // the oracle recomputes the target count and the order-free digest
+      // from the logical table; n_files_after = ceil(rows/20000) pins the
+      // physical rewrite
+      """
+      WITH h AS (SELECT ('0x' || substr(md5(l_orderkey::VARCHAR || '|' ||
+                   l_linenumber::VARCHAR || '|' ||
+                   round(l_quantity)::BIGINT::VARCHAR), 1, 12))::BIGINT
+                   AS hv
+                 FROM lineitem)
+      SELECT 64::BIGINT AS n_files_before,
+             ((count(1) + 19999) // 20000)::BIGINT AS n_files_after,
+             count(1) AS n_rows,
+             bit_xor(hv)::BIGINT AS content_sig
+      FROM h"""),
 
     // Hive-style partitioned parquet: write orders bucketed into
     // o_orderpriority=... directories, read back filtering on the
     // partition column -> directory pruning (PartitionFilters in the
     // scan; only 1 of 5 directories is listed/read).
-    "io_partitioned_prune" -> ((s, d) => {
+    Query("io_partitioned_prune", (s, d) => {
       val src = Tables.orders(s, d)
       val path = layout("part_orders", d, "orders")(
         src.write.partitionBy("o_orderpriority").parquet(_))
@@ -177,14 +224,21 @@ object Io extends QueryModule {
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("o_totalprice"))) / 100.0).as("total_price"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """
+      SELECT o_orderstatus, count(1) AS n,
+             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total_price
+      FROM orders
+      WHERE o_orderpriority = '1-URGENT'
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus"""),
 
     // Schema evolution: a corpus written over time gains a column in a
     // later batch; mergeSchema reconciles the footers at read (old rows
     // surface NULL for the new column). The shape every long-lived
     // 100 TB corpus hits — readers must not require a rewrite of every
     // historical batch to pick up a new field.
-    "io_schema_merge" -> ((s, d) => {
+    Query("io_schema_merge", (s, d) => {
       val path = layout("schema_orders", d, "orders") { p =>
         val src = Tables.orders(s, d)
         src.filter(col("o_orderkey") % 2 === 0)
@@ -203,7 +257,14 @@ object Io extends QueryModule {
           count(col("source_tag")).as("n_v2"),
           sum("price_cents").as("cents_sum"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """
+      SELECT o_orderstatus, count(1) AS n,
+             CAST(sum(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_v2,
+             CAST(sum(round(o_totalprice * 100)::BIGINT) AS BIGINT) AS cents_sum
+      FROM orders
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus"""),
 
     // Bucketed co-located join: both sides pre-shuffled on the join key
     // at WRITE time (8 buckets, sorted within buckets), so the join
@@ -211,12 +272,12 @@ object Io extends QueryModule {
     // either side (BucketingSpec asserts the plan). At 100 TB this is
     // how a fact table joined on the same key by every query in a
     // workload pays its shuffle once, at ingest, instead of per query.
-    "io_bucketed_join" -> ((s, d) => {
-      val tag = s"${java.lang.ProcessHandle.current().pid()}_${(d.hashCode & 0x7fffffff).toHexString}"
+    Query("io_bucketed_join", (s, d) => {
+      val tag = (d.hashCode & 0x7fffffff).toHexString
       val liT = s"graft_li_bq_$tag"
       val ordT = s"graft_ord_bq_$tag"
-      // the session catalog, not a path, holds these: written once per
-      // (JVM, sf dir) like the layouts above
+      // written once per (session, sf dir); the files live under
+      // Scratch.jvm like the layouts above
       synchronized { if (!s.catalog.tableExists(ordT)) {
         graft.operators.Bucketing.writeBucketed(
           Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice"),
@@ -231,7 +292,13 @@ object Io extends QueryModule {
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("l_extendedprice"))) / 100.0).as("sum_price"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """
+      SELECT o_orderstatus, count(1) AS n,
+             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_price
+      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus"""),
 
     // Z-order layout: orders written morton-ordered on (customer, order
     // day), then a 2-D box predicate reads back — files prune on BOTH
@@ -239,7 +306,7 @@ object Io extends QueryModule {
     // rectangle tightness vs a one-key sort). The z-value is layout-
     // only; results are independent of it, so the oracle is the same
     // filter over the raw table.
-    "io_zorder_box" -> ((s, d) => {
+    Query("io_zorder_box", (s, d) => {
       val path = layout("zorder_orders", d, "orders")(p =>
         graft.operators.ZOrder.writeZOrdered(
           Tables.orders(s, d),
@@ -253,7 +320,15 @@ object Io extends QueryModule {
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("o_totalprice"))) / 100.0).as("total_price"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      """
+      SELECT o_orderstatus, count(1) AS n,
+             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total_price
+      FROM orders
+      WHERE o_custkey BETWEEN 100 AND 300
+        AND o_orderdate BETWEEN '1995-01-01' AND '1995-12-31'
+      GROUP BY o_orderstatus
+      ORDER BY o_orderstatus"""),
 
     // Dynamic partition pruning: the filter lives on the DIM side of a
     // join, so which fact partitions survive is only known at runtime —
@@ -263,7 +338,7 @@ object Io extends QueryModule {
     // At 100 TB this is THE mechanism that makes star-schema joins
     // against partitioned fact tables affordable without hand-written
     // static filters. PlanShapeSpec asserts the pruning subquery.
-    "q_dpp" -> ((s, d) => {
+    Query("q_dpp", (s, d) => {
       val fact = s.read.parquet(layout("dpp_orders", d, "orders")(
         Tables.orders(s, d).write.partitionBy("o_orderpriority").parquet(_)))
       val dim = Tables.orders(s, d)
@@ -274,97 +349,8 @@ object Io extends QueryModule {
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("o_totalprice"))) / 100.0).as("total_price"))
         .orderBy("o_orderpriority")
-    })
-  )
-
-  override def oracles: Map[String, String] = Map(
-    "io_csv_roundtrip" -> """
-      SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-      FROM customer ORDER BY c_custkey""",
-
-    "io_codec_roundtrip" -> """
-      WITH a AS (SELECT count(1)::BIGINT AS n_rows,
-                        sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty
-                 FROM lineitem)
-      SELECT codec, n_rows, sum_qty
-      FROM (SELECT 'gzip' AS codec FROM (VALUES (1))
-            UNION ALL
-            SELECT 'zstd' FROM (VALUES (1))), a
-      ORDER BY codec""",
-
-    "io_json_roundtrip" -> """
-      SELECT n_nationkey, n_name, n_regionkey
-      FROM nation ORDER BY n_nationkey""",
-
-    "io_orc_roundtrip" -> """
-      SELECT l_returnflag, count(1) AS n,
-             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_price
-      FROM lineitem
-      WHERE l_quantity >= 30
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    // shard identity is deterministic (l_orderkey % 8), so the oracle
-    // rebuilds every per-file stat from the logical table; n_files = 1
-    // pins the one-file-per-shard physical layout
-    "io_file_stats" -> """
-      SELECT (l_orderkey % 8) AS shard, 1::BIGINT AS n_files,
-             count(1) AS n_rows,
-             min(l_orderkey) AS min_key, max(l_orderkey) AS max_key,
-             min(epoch_us(l_shipdate)) AS min_ship_us,
-             max(epoch_us(l_shipdate)) AS max_ship_us
-      FROM lineitem
-      GROUP BY 1
-      ORDER BY shard""",
-
-    // the oracle recomputes the target count and the order-free digest
-    // from the logical table; n_files_after = ceil(rows/20000) pins the
-    // physical rewrite
-    "io_compaction" -> """
-      WITH h AS (SELECT ('0x' || substr(md5(l_orderkey::VARCHAR || '|' ||
-                   l_linenumber::VARCHAR || '|' ||
-                   round(l_quantity)::BIGINT::VARCHAR), 1, 12))::BIGINT
-                   AS hv
-                 FROM lineitem)
-      SELECT 64::BIGINT AS n_files_before,
-             ((count(1) + 19999) // 20000)::BIGINT AS n_files_after,
-             count(1) AS n_rows,
-             bit_xor(hv)::BIGINT AS content_sig
-      FROM h""",
-
-    "io_partitioned_prune" -> """
-      SELECT o_orderstatus, count(1) AS n,
-             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total_price
-      FROM orders
-      WHERE o_orderpriority = '1-URGENT'
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-
-    "io_schema_merge" -> """
-      SELECT o_orderstatus, count(1) AS n,
-             CAST(sum(CASE WHEN o_orderkey % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_v2,
-             CAST(sum(round(o_totalprice * 100)::BIGINT) AS BIGINT) AS cents_sum
-      FROM orders
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-
-    "io_bucketed_join" -> """
-      SELECT o_orderstatus, count(1) AS n,
-             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_price
-      FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-
-    "io_zorder_box" -> """
-      SELECT o_orderstatus, count(1) AS n,
-             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total_price
-      FROM orders
-      WHERE o_custkey BETWEEN 100 AND 300
-        AND o_orderdate BETWEEN '1995-01-01' AND '1995-12-31'
-      GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-
-    "q_dpp" -> """
+    },
+      """
       WITH dim AS (
         SELECT DISTINCT o_orderpriority FROM orders
         WHERE o_orderpriority < '3')
@@ -372,6 +358,6 @@ object Io extends QueryModule {
              sum(round(f.o_totalprice * 100)::BIGINT) / 100.0 AS total_price
       FROM orders f JOIN dim USING (o_orderpriority)
       GROUP BY f.o_orderpriority
-      ORDER BY f.o_orderpriority"""
+      ORDER BY f.o_orderpriority""")
   )
 }

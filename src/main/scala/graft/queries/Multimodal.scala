@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import graft.operators.MultimodalOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,21 +13,30 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal extends QueryModule {
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // binary payload -> partition-batched decode -> typed metadata
-    "mm_meta" -> ((s, d) =>
+    Query("mm_meta", (s, d) =>
       MultimodalOps.decode(MultimodalOps.toMedia(Tables.documents(s, d)))
         .toDF()
         .select(col("doc_id"), col("kind"), col("n_bytes"),
           col("width"), col("height"), col("n_frames"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      SELECT doc_id, kind, n_bytes, width, height, n_frames
+      FROM ($sqlMeta)
+      ORDER BY doc_id"""),
 
     // metadata -> frame sampling generator (every 3rd frame)
-    "mm_frames" -> ((s, d) =>
+    Query("mm_frames", (s, d) =>
       MultimodalOps.sampleFrames(
         MultimodalOps.decode(MultimodalOps.toMedia(Tables.documents(s, d))), 3)
         .toDF()
-        .orderBy("doc_id", "frame_idx")),
+        .orderBy("doc_id", "frame_idx"),
+      s"""
+      SELECT doc_id, unnest(range(0, n_frames, 3)) AS frame_idx,
+             unnest(range(0, n_frames, 3)) * 1000 AS byte_off
+      FROM ($sqlMeta)
+      ORDER BY doc_id, frame_idx"""),
 
     // scene-cut detection: consecutive sampled-frame signature jumps
     // above an absolute threshold — the shot-boundary primitive of
@@ -35,7 +44,7 @@ object Multimodal extends QueryModule {
     // pass + one per-payload lag window; the signature is the stub
     // frame hash (frameSignatures), swapped for a real decoder hash in
     // production with the same plan shape.
-    "mm_scene_cuts" -> ((s, d) => {
+    Query("mm_scene_cuts", (s, d) => {
       val sigs = MultimodalOps.frameSignatures(
         MultimodalOps.toMedia(Tables.documents(s, d)), 1).toDF()
       val w = Window.partitionBy("doc_id").orderBy("frame_idx")
@@ -45,25 +54,72 @@ object Multimodal extends QueryModule {
         .filter(col("jump") >= MultimodalOps.SCENE_TAU)
         .select(col("doc_id"), col("frame_idx"), col("jump"))
         .orderBy("doc_id", "frame_idx")
-    }),
+    },
+      // frame windows summed char-by-char (ASCII corpus: ord == byte,
+      // the same equivalence mm_features already rides); empty tail
+      // window coalesces to 0 like the engine's fold
+      s"""
+      WITH f AS (
+        SELECT doc_id, text,
+               unnest(range(0, length(text) // ${MultimodalOps.SIG_FRAME_W}
+                 + 1, 1)) AS fi
+        FROM documents),
+      s AS (
+        SELECT doc_id, fi,
+               coalesce(list_aggregate(list_transform(
+                 range(fi * ${MultimodalOps.SIG_FRAME_W} + 1,
+                       least(fi * ${MultimodalOps.SIG_FRAME_W}
+                               + ${MultimodalOps.SIG_FRAME_W},
+                             length(text)) + 1),
+                 j -> ord(text[j])), 'sum'), 0)::BIGINT AS sig
+        FROM f),
+      d AS (
+        SELECT doc_id, fi, sig,
+               lag(sig) OVER (PARTITION BY doc_id ORDER BY fi) AS prev
+        FROM s)
+      SELECT doc_id, fi AS frame_idx, abs(sig - prev)::BIGINT AS jump
+      FROM d
+      WHERE prev IS NOT NULL AND abs(sig - prev) >= ${MultimodalOps.SCENE_TAU}
+      ORDER BY doc_id, frame_idx"""),
 
     // feature-extraction stage: 8-dim integer embedding per payload
-    "mm_features" -> ((s, d) =>
+    Query("mm_features", (s, d) =>
       MultimodalOps.extractFeatures(MultimodalOps.toMedia(Tables.documents(s, d)))
         .toDF()
         .select(col("doc_id") +:
           (0 until 8).map(i => element_at(col("features"), i + 1).as(s"f$i")): _*)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      {
+      val cols = (0 until 8).map(i =>
+        s"""list_aggregate(list_transform(range(1, length(text) + 1),
+              j -> CASE WHEN (j - 1) % 8 = $i THEN ord(text[j]) ELSE 0 END),
+              'sum')::BIGINT AS f$i""").mkString(",\n             ")
+      s"""
+      SELECT doc_id,
+             $cols
+      FROM documents
+      ORDER BY doc_id"""
+    }),
 
     // batched stub inference: fixed-size batches through the "model";
     // values oracle-checked, batch composition checked in MultimodalSpec
-    "mm_batch_embed" -> ((s, d) =>
+    Query("mm_batch_embed", (s, d) =>
       MultimodalOps.batchEmbed(
         MultimodalOps.toMedia(Tables.documents(s, d)), batchSize = 32)
         .toDF()
         .select(col("doc_id") +:
           (0 until 8).map(i => element_at(col("emb"), i + 1).as(s"e$i")): _*)
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      {
+      val cols = (0 until 8).map(i =>
+        s"(('0x' || substr(md5(text), ${4 * i + 1}, 4))::BIGINT - 32768) AS e$i")
+        .mkString(",\n             ")
+      s"""
+      SELECT doc_id,
+             $cols
+      FROM documents
+      ORDER BY doc_id"""
+    }),
 
     // multimodal RETRIEVAL: exact top-5 neighbors per probe by integer
     // dot product over the stub embeddings — the compose-step after
@@ -71,7 +127,7 @@ object Multimodal extends QueryModule {
     // corpus never shuffled, rank filter rides WindowGroupLimit — the
     // sim_brute_topk scale shape over media-derived vectors. All-integer
     // scores: exact in both engines, total tie order by doc_id.
-    "mm_embed_topk" -> ((s, d) => {
+    Query("mm_embed_topk", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       def embed(docs: org.apache.spark.sql.DataFrame) =
         MultimodalOps.batchEmbed(MultimodalOps.toMedia(docs), batchSize = 32)
@@ -98,17 +154,44 @@ object Multimodal extends QueryModule {
         .filter(col("rk") <= 5)
         .select("q_id", "rk", "doc_id", "dot")
         .orderBy("q_id", "rk")
+    },
+      {
+      val eCols = (0 until 8).map(i =>
+        s"(('0x' || substr(md5(text), ${4 * i + 1}, 4))::BIGINT - 32768) AS e$i")
+        .mkString(",\n                        ")
+      val qCols = (0 until 8).map(i => s"e$i AS q$i").mkString(", ")
+      val dotExpr = (0 until 8).map(i => s"e.e$i * q.q$i").mkString(" + ")
+      s"""
+      WITH e AS (SELECT doc_id,
+                        $eCols
+                 FROM documents),
+           q AS (SELECT doc_id AS q_id, $qCols FROM e WHERE doc_id < 3),
+           sc AS (SELECT q.q_id, e.doc_id, ($dotExpr)::BIGINT AS dot
+                  FROM e JOIN q ON e.doc_id <> q.q_id),
+           r AS (SELECT *, row_number() OVER (PARTITION BY q_id
+                            ORDER BY dot DESC, doc_id) AS rk
+                 FROM sc)
+      SELECT q_id, CAST(rk AS BIGINT) AS rk, doc_id, dot
+      FROM r
+      WHERE rk <= 5
+      ORDER BY q_id, rk"""
     }),
 
     // resize planning from decoded dims to a 224x224 target
-    "mm_resize" -> ((s, d) =>
+    Query("mm_resize", (s, d) =>
       MultimodalOps.resizePlan(
         MultimodalOps.decode(MultimodalOps.toMedia(Tables.documents(s, d))))
         .toDF()
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      SELECT doc_id, 224::BIGINT AS new_w, 224::BIGINT AS new_h,
+             (224000 // width)::BIGINT AS scale_x_e3,
+             (224000 // height)::BIGINT AS scale_y_e3
+      FROM ($sqlMeta)
+      ORDER BY doc_id"""),
 
     // per-kind aggregate over decoded metadata
-    "mm_kind_stats" -> ((s, d) =>
+    Query("mm_kind_stats", (s, d) =>
       MultimodalOps.decode(MultimodalOps.toMedia(Tables.documents(s, d)))
         .toDF()
         .groupBy("kind")
@@ -117,22 +200,33 @@ object Multimodal extends QueryModule {
           sum("n_bytes").as("total_bytes"),
           max("width").as("max_width"),
           sum("n_frames").as("total_frames"))
-        .orderBy("kind")),
+        .orderBy("kind"),
+      s"""
+      SELECT kind, count(1) AS n,
+             sum(n_bytes)::BIGINT AS total_bytes,
+             max(width) AS max_width,
+             sum(n_frames)::BIGINT AS total_frames
+      FROM ($sqlMeta)
+      GROUP BY kind
+      ORDER BY kind"""),
 
     // perceptual-hash signatures: real DCT pHash (32x32 luma -> Q14
     // 2-D DCT-II -> 60 low-frequency AC bits vs their median; see
     // MultimodalOps.phashOf) — the NEAR-dup counterpart of mm_dedup's
     // exact byte hash. Only the luma step is a synthetic decode; the
     // resize/DCT/median-threshold pipeline is the published algorithm.
-    "mm_phash" -> ((s, d) =>
+    Query("mm_phash", (s, d) =>
       MultimodalOps.phash(MultimodalOps.toMedia(Tables.documents(s, d)))
         .toDF()
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      SELECT doc_id, phash FROM $sqlPhash
+      ORDER BY doc_id"""),
 
     // pHash near-dup pairs: Hamming<=3 over the 60-bit signatures via
     // the 4x15-bit pigeonhole blocks (complete, same discipline as
     // dedup_simhash_pairs); the re-ingested copies guarantee hits
-    "mm_phash_pairs" -> ((s, d) => {
+    Query("mm_phash_pairs", (s, d) => {
       val media = MultimodalOps.toMedia(Tables.documents(s, d)).toDF()
       val reingested = media.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
@@ -163,7 +257,18 @@ object Multimodal extends QueryModule {
         .filter(col("hamming") <= 3)
         .dropDuplicates("a_id", "b_id")
         .orderBy("a_id", "b_id")
-    }),
+    },
+      s"""
+      WITH ph AS (SELECT doc_id, phash FROM $sqlPhash),
+           u AS (SELECT doc_id, phash FROM ph
+                 UNION ALL
+                 SELECT doc_id + 100000 AS doc_id, phash
+                 FROM ph WHERE doc_id % 7 = 0)
+      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+             bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
+      FROM u a JOIN u b ON a.doc_id < b.doc_id
+      WHERE bit_count(xor(a.phash, b.phash)) <= 3
+      ORDER BY a_id, b_id"""),
 
     // exact binary dedup over opaque payloads: the ingest-time pass that
     // drops byte-identical media fetched from multiple sources. The
@@ -172,7 +277,7 @@ object Multimodal extends QueryModule {
     // md5(payload) only, one hash agg, and at 100 TB the md5 shuffles
     // instead of the payload bytes (the only scalable key choice for
     // multi-MB binaries)
-    "mm_dedup" -> ((s, d) => {
+    Query("mm_dedup", (s, d) => {
       val media = MultimodalOps.toMedia(Tables.documents(s, d)).toDF()
       val reingested = media.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 100000).as("doc_id"),
@@ -186,7 +291,21 @@ object Multimodal extends QueryModule {
         .select(col("rep_id"), col("payload_md5"), col("n_copies"),
           col("n_bytes"))
         .orderBy("rep_id")
-    })
+    },
+      """
+      WITH m AS (
+        SELECT doc_id, md5(text) AS payload_md5,
+               octet_length(encode(text)) AS n_bytes
+        FROM documents
+        UNION ALL
+        SELECT doc_id + 100000 AS doc_id, md5(text) AS payload_md5,
+               octet_length(encode(text)) AS n_bytes
+        FROM documents WHERE doc_id % 7 = 0)
+      SELECT min(doc_id) AS rep_id, payload_md5,
+             count(1) AS n_copies, min(n_bytes) AS n_bytes
+      FROM m
+      GROUP BY payload_md5
+      ORDER BY rep_id""")
   )
 
   /** DuckDB mirror of MultimodalOps.phashOf — the SAME fixed-point DCT
@@ -245,136 +364,4 @@ object Multimodal extends QueryModule {
            octet_length(encode(text)) % 480 + 16 AS height,
            octet_length(encode(text)) // 1000 + 1 AS n_frames
     FROM documents"""
-
-  override def oracles: Map[String, String] = Map(
-    "mm_meta" -> s"""
-      SELECT doc_id, kind, n_bytes, width, height, n_frames
-      FROM ($sqlMeta)
-      ORDER BY doc_id""",
-
-    "mm_frames" -> s"""
-      SELECT doc_id, unnest(range(0, n_frames, 3)) AS frame_idx,
-             unnest(range(0, n_frames, 3)) * 1000 AS byte_off
-      FROM ($sqlMeta)
-      ORDER BY doc_id, frame_idx""",
-
-    // frame windows summed char-by-char (ASCII corpus: ord == byte,
-    // the same equivalence mm_features already rides); empty tail
-    // window coalesces to 0 like the engine's fold
-    "mm_scene_cuts" -> s"""
-      WITH f AS (
-        SELECT doc_id, text,
-               unnest(range(0, length(text) // ${MultimodalOps.SIG_FRAME_W}
-                 + 1, 1)) AS fi
-        FROM documents),
-      s AS (
-        SELECT doc_id, fi,
-               coalesce(list_aggregate(list_transform(
-                 range(fi * ${MultimodalOps.SIG_FRAME_W} + 1,
-                       least(fi * ${MultimodalOps.SIG_FRAME_W}
-                               + ${MultimodalOps.SIG_FRAME_W},
-                             length(text)) + 1),
-                 j -> ord(text[j])), 'sum'), 0)::BIGINT AS sig
-        FROM f),
-      d AS (
-        SELECT doc_id, fi, sig,
-               lag(sig) OVER (PARTITION BY doc_id ORDER BY fi) AS prev
-        FROM s)
-      SELECT doc_id, fi AS frame_idx, abs(sig - prev)::BIGINT AS jump
-      FROM d
-      WHERE prev IS NOT NULL AND abs(sig - prev) >= ${MultimodalOps.SCENE_TAU}
-      ORDER BY doc_id, frame_idx""",
-
-    "mm_features" -> {
-      val cols = (0 until 8).map(i =>
-        s"""list_aggregate(list_transform(range(1, length(text) + 1),
-              j -> CASE WHEN (j - 1) % 8 = $i THEN ord(text[j]) ELSE 0 END),
-              'sum')::BIGINT AS f$i""").mkString(",\n             ")
-      s"""
-      SELECT doc_id,
-             $cols
-      FROM documents
-      ORDER BY doc_id"""
-    },
-
-    "mm_batch_embed" -> {
-      val cols = (0 until 8).map(i =>
-        s"(('0x' || substr(md5(text), ${4 * i + 1}, 4))::BIGINT - 32768) AS e$i")
-        .mkString(",\n             ")
-      s"""
-      SELECT doc_id,
-             $cols
-      FROM documents
-      ORDER BY doc_id"""
-    },
-
-    "mm_embed_topk" -> {
-      val eCols = (0 until 8).map(i =>
-        s"(('0x' || substr(md5(text), ${4 * i + 1}, 4))::BIGINT - 32768) AS e$i")
-        .mkString(",\n                        ")
-      val qCols = (0 until 8).map(i => s"e$i AS q$i").mkString(", ")
-      val dotExpr = (0 until 8).map(i => s"e.e$i * q.q$i").mkString(" + ")
-      s"""
-      WITH e AS (SELECT doc_id,
-                        $eCols
-                 FROM documents),
-           q AS (SELECT doc_id AS q_id, $qCols FROM e WHERE doc_id < 3),
-           sc AS (SELECT q.q_id, e.doc_id, ($dotExpr)::BIGINT AS dot
-                  FROM e JOIN q ON e.doc_id <> q.q_id),
-           r AS (SELECT *, row_number() OVER (PARTITION BY q_id
-                            ORDER BY dot DESC, doc_id) AS rk
-                 FROM sc)
-      SELECT q_id, CAST(rk AS BIGINT) AS rk, doc_id, dot
-      FROM r
-      WHERE rk <= 5
-      ORDER BY q_id, rk"""
-    },
-
-    "mm_resize" -> s"""
-      SELECT doc_id, 224::BIGINT AS new_w, 224::BIGINT AS new_h,
-             (224000 // width)::BIGINT AS scale_x_e3,
-             (224000 // height)::BIGINT AS scale_y_e3
-      FROM ($sqlMeta)
-      ORDER BY doc_id""",
-
-    "mm_kind_stats" -> s"""
-      SELECT kind, count(1) AS n,
-             sum(n_bytes)::BIGINT AS total_bytes,
-             max(width) AS max_width,
-             sum(n_frames)::BIGINT AS total_frames
-      FROM ($sqlMeta)
-      GROUP BY kind
-      ORDER BY kind""",
-
-    "mm_phash" -> s"""
-      SELECT doc_id, phash FROM $sqlPhash
-      ORDER BY doc_id""",
-
-    "mm_phash_pairs" -> s"""
-      WITH ph AS (SELECT doc_id, phash FROM $sqlPhash),
-           u AS (SELECT doc_id, phash FROM ph
-                 UNION ALL
-                 SELECT doc_id + 100000 AS doc_id, phash
-                 FROM ph WHERE doc_id % 7 = 0)
-      SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-             bit_count(xor(a.phash, b.phash))::BIGINT AS hamming
-      FROM u a JOIN u b ON a.doc_id < b.doc_id
-      WHERE bit_count(xor(a.phash, b.phash)) <= 3
-      ORDER BY a_id, b_id""",
-
-    "mm_dedup" -> """
-      WITH m AS (
-        SELECT doc_id, md5(text) AS payload_md5,
-               octet_length(encode(text)) AS n_bytes
-        FROM documents
-        UNION ALL
-        SELECT doc_id + 100000 AS doc_id, md5(text) AS payload_md5,
-               octet_length(encode(text)) AS n_bytes
-        FROM documents WHERE doc_id % 7 = 0)
-      SELECT min(doc_id) AS rep_id, payload_md5,
-             count(1) AS n_copies, min(n_bytes) AS n_bytes
-      FROM m
-      GROUP BY payload_md5
-      ORDER BY rep_id"""
-  )
 }

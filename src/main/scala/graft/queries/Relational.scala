@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Tables}
+import graft.{Query, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,9 +60,9 @@ object Relational extends QueryModule {
     conv(substring(md5(concat_ws("|", keys: _*).cast("binary")), 1, 12), 16, 10)
       .cast("long") % 1000
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // -- TPC-H Q1-style pricing summary: scan + filter + hash agg ---------
-    "q1_agg" -> ((s, d) =>
+    Query("q1_agg", (s, d) =>
       li(s, d)
         .filter(col("l_shipdate") <= to_timestamp(lit("2001-09-01")))
         .groupBy("l_returnflag", "l_linestatus")
@@ -73,7 +73,20 @@ object Relational extends QueryModule {
           avg("l_quantity").as("avg_qty"),
           (sum(pct(col("l_discount"))) / 100.0 / count(lit(1))).as("avg_disc"),
           count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      """
+      SELECT l_returnflag, l_linestatus,
+             sum(l_quantity) AS sum_qty,
+             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_base_price,
+             sum(round(l_extendedprice * 100)::BIGINT
+                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS sum_disc_price,
+             avg(l_quantity) AS avg_qty,
+             sum(round(l_discount * 100)::BIGINT) / 100.0 / count(1) AS avg_disc,
+             count(1) AS count_order
+      FROM lineitem
+      WHERE l_shipdate <= TIMESTAMP '2001-09-01'
+      GROUP BY l_returnflag, l_linestatus
+      ORDER BY l_returnflag, l_linestatus"""),
 
     // -- exact 128-bit DECIMAL money pipeline ------------------------------
     //    The fixed-point type surface itself, not the integer-cents
@@ -90,7 +103,7 @@ object Relational extends QueryModule {
     //    literal per-row, THEN sum, and keep product scale <= 6; (3) the
     //    final scale is pinned by an explicit CAST on both engines (the
     //    driver compares str(Decimal), so scale is part of the value).
-    "q_decimal_exact" -> ((s, d) =>
+    Query("q_decimal_exact", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -111,7 +124,29 @@ object Relational extends QueryModule {
                     * CAST(0.000001 AS DECIMAL(7, 6)))
                   AS DECIMAL(38, 6))""").as("charge_usd"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      // decimals built from integer casts; per-row scale literal applied
+      // BEFORE the sum (see the query's scaladoc); final scale pinned
+      """
+      SELECT l_returnflag, l_linestatus,
+             CAST(sum(CAST(round(l_extendedprice * 100)::BIGINT
+                           AS DECIMAL(16, 0))
+                      * CAST(100 - round(l_discount * 100)::BIGINT
+                             AS DECIMAL(3, 0))
+                      * CAST(0.0001 AS DECIMAL(5, 4)))
+               AS DECIMAL(38, 4)) AS rev_usd,
+             CAST(sum(CAST(round(l_extendedprice * 100)::BIGINT
+                           AS DECIMAL(14, 0))
+                      * CAST(100 - round(l_discount * 100)::BIGINT
+                             AS DECIMAL(3, 0))
+                      * CAST(100 + round(l_tax * 100)::BIGINT
+                             AS DECIMAL(3, 0))
+                      * CAST(0.000001 AS DECIMAL(7, 6)))
+               AS DECIMAL(38, 6)) AS charge_usd,
+             count(1) AS n
+      FROM lineitem
+      GROUP BY l_returnflag, l_linestatus
+      ORDER BY l_returnflag, l_linestatus"""),
 
     // -- bitwise aggregate + scalar surface -------------------------------
     //    bit_and / bit_or / bit_xor aggregates over a derived bitmask
@@ -120,7 +155,7 @@ object Relational extends QueryModule {
     //    them. Dialect note pinned by the oracle: Spark's ^ is XOR
     //    while DuckDB's ^ is POWER — the oracle uses xor() — so the
     //    value compare is what guarantees the semantics match.
-    "q_bitwise_agg" -> ((s, d) =>
+    Query("q_bitwise_agg", (s, d) =>
       li(s, d)
         .select(col("l_returnflag"),
           expr("(l_partkey & 255) ^ shiftleft(l_suppkey & 15, 2)")
@@ -131,7 +166,22 @@ object Relational extends QueryModule {
           expr("bit_xor(mx)").as("parity_xor"),
           expr("CAST(bit_count(bit_or(mx)) AS BIGINT)").as("or_popcount"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      // DuckDB's ^ is power, so XOR spells xor() here
+      """
+      WITH b AS (SELECT l_returnflag,
+                        xor(l_partkey & 255,
+                            ((l_suppkey & 15) << 2))::BIGINT AS mx
+                 FROM lineitem)
+      SELECT l_returnflag,
+             bit_and(mx)::BIGINT AS all_and,
+             bit_or(mx)::BIGINT AS any_or,
+             bit_xor(mx)::BIGINT AS parity_xor,
+             bit_count(bit_or(mx))::BIGINT AS or_popcount,
+             count(1) AS n
+      FROM b
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- IGNORE NULLS window navigation -----------------------------------
     //    The gap-carrying surface (last-observation-carried-forward +
@@ -140,7 +190,7 @@ object Relational extends QueryModule {
     //    across null gaps within their order. Spark's `IGNORE NULLS`
     //    maps to DuckDB's argument-position form; values must agree
     //    row-for-row including the all-null leading prefix.
-    "q_window_ignore_nulls" -> ((s, d) => {
+    Query("q_window_ignore_nulls", (s, d) => {
       // (l_orderkey, l_linenumber) is NOT unique in this data, and a
       // ROWS frame over a non-total order is engine-nondeterministic —
       // so the order gets a content-digest tiebreak (md5 over the
@@ -161,20 +211,42 @@ object Relational extends QueryModule {
           lead(col("v"), 1, null, ignoreNulls = true).over(w)
             .as("next_v"))
         .orderBy("l_orderkey", "l_linenumber", "rk_key")
-    }),
+    },
+      """
+      SELECT l_orderkey, l_linenumber, rk_key, v,
+             last_value(v IGNORE NULLS) OVER (PARTITION BY l_orderkey
+               ORDER BY l_linenumber, rk_key
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carry,
+             lead(v IGNORE NULLS) OVER (PARTITION BY l_orderkey
+               ORDER BY l_linenumber, rk_key) AS next_v
+      FROM (SELECT l_orderkey, l_linenumber,
+                   md5(concat_ws('|', l_partkey, l_suppkey,
+                     round(l_extendedprice * 100)::BIGINT,
+                     l_returnflag)) AS rk_key,
+                   CASE WHEN l_returnflag = 'R'
+                        THEN round(l_extendedprice * 100)::BIGINT END AS v
+            FROM lineitem)
+      ORDER BY l_orderkey, l_linenumber, rk_key"""),
 
     // -- filter + projection with computed column (pushdown check) --------
-    "q2_filter" -> ((s, d) =>
+    Query("q2_filter", (s, d) =>
       li(s, d)
         .filter(col("l_quantity") > 45 && col("l_discount") >= 0.05 &&
           col("l_shipdate") < to_timestamp(lit("1997-01-01")))
         .select(
           col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           (col("l_extendedprice") * (lit(1) - col("l_discount"))).as("net_price"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber"),
+      """
+      SELECT l_orderkey, l_linenumber, l_quantity,
+             l_extendedprice * (1 - l_discount) AS net_price
+      FROM lineitem
+      WHERE l_quantity > 45 AND l_discount >= 0.05
+        AND l_shipdate < TIMESTAMP '1997-01-01'
+      ORDER BY l_orderkey, l_linenumber"""),
 
     // -- TPC-H Q3-style: 3-way join + agg + top-k -------------------------
-    "q3_topk_join" -> ((s, d) => {
+    Query("q3_topk_join", (s, d) => {
       val c = cust(s, d).filter(col("c_mktsegment") === "BUILDING")
       val o = ord(s, d).filter(col("o_orderdate") < to_timestamp(lit("1999-01-01")))
       val l = li(s, d).filter(col("l_shipdate") > to_timestamp(lit("1998-01-01")))
@@ -184,10 +256,23 @@ object Relational extends QueryModule {
         .agg((sum(revUnits) / 10000.0).as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey"))
         .limit(10)
-    }),
+    },
+      """
+      SELECT l_orderkey,
+             sum(round(l_extendedprice * 100)::BIGINT
+                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS revenue
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN customer ON o_custkey = c_custkey
+      WHERE c_mktsegment = 'BUILDING'
+        AND o_orderdate < TIMESTAMP '1999-01-01'
+        AND l_shipdate > TIMESTAMP '1998-01-01'
+      GROUP BY l_orderkey
+      ORDER BY revenue DESC, l_orderkey
+      LIMIT 10"""),
 
     // -- TPC-H Q5-style: 6-way join, broadcast dims, agg by nation --------
-    "q5_multijoin" -> ((s, d) => {
+    Query("q5_multijoin", (s, d) => {
       val r = Tables.region(s, d).filter(col("r_name") === "ASIA")
       val n = Tables.nation(s, d)
       val sup = Tables.supplier(s, d)
@@ -206,7 +291,22 @@ object Relational extends QueryModule {
         .groupBy("n_name")
         .agg((sum(revUnits) / 10000.0).as("revenue"))
         .orderBy("n_name")
-    }),
+    },
+      """
+      SELECT n_name,
+             sum(round(l_extendedprice * 100)::BIGINT
+                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS revenue
+      FROM lineitem
+      JOIN orders ON l_orderkey = o_orderkey
+      JOIN customer ON o_custkey = c_custkey
+      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+      JOIN nation ON s_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      WHERE r_name = 'ASIA'
+        AND o_orderdate >= TIMESTAMP '1996-01-01'
+        AND o_orderdate < TIMESTAMP '1999-01-01'
+      GROUP BY n_name
+      ORDER BY n_name"""),
 
     // -- salted shuffle join: the manual skew-mitigation pattern ----------
     //    When one probe-side key carries a disproportionate share of rows,
@@ -220,7 +320,7 @@ object Relational extends QueryModule {
     //    stats, and AQE's skew-join handles the sort-merge case without
     //    salting (this pattern covers hash-partitioned aggs/joins AQE
     //    cannot split).
-    "q_salted_join" -> ((s, d) => {
+    Query("q_salted_join", (s, d) => {
       val R = 8
       val l = li(s, d).withColumn("_salt",
         pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(R)))
@@ -236,10 +336,17 @@ object Relational extends QueryModule {
         .agg(count(lit(1)).as("n_items"),
           (sum(cents(col("l_extendedprice"))) / 100.0).as("total_price"))
         .orderBy("s_nationkey")
-    }),
+    },
+      """
+      SELECT s_nationkey, count(1) AS n_items,
+             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS total_price
+      FROM lineitem
+      JOIN supplier ON l_suppkey = s_suppkey
+      GROUP BY s_nationkey
+      ORDER BY s_nationkey"""),
 
     // -- left semi join (EXISTS) ------------------------------------------
-    "q_semi_join" -> ((s, d) => {
+    Query("q_semi_join", (s, d) => {
       val o96 = ord(s, d).filter(
         col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
         col("o_orderdate") < to_timestamp(lit("1997-01-01")))
@@ -248,20 +355,36 @@ object Relational extends QueryModule {
         .join(o96, col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_mktsegment"))
         .orderBy("c_custkey")
-    }),
+    },
+      """
+      SELECT c_custkey, c_mktsegment
+      FROM customer
+      WHERE EXISTS (
+        SELECT 1 FROM orders
+        WHERE o_custkey = c_custkey
+          AND o_orderdate >= TIMESTAMP '1996-01-01'
+          AND o_orderdate < TIMESTAMP '1997-01-01')
+      ORDER BY c_custkey"""),
 
     // -- left anti join (NOT EXISTS) --------------------------------------
-    "q_anti_join" -> ((s, d) => {
+    Query("q_anti_join", (s, d) => {
       val highVal = ord(s, d).filter(col("o_totalprice") > 400000)
         .select(col("o_custkey"))
       cust(s, d)
         .join(highVal, col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_acctbal"))
         .orderBy("c_custkey")
-    }),
+    },
+      """
+      SELECT c_custkey, c_acctbal
+      FROM customer
+      WHERE NOT EXISTS (
+        SELECT 1 FROM orders
+        WHERE o_custkey = c_custkey AND o_totalprice > 400000)
+      ORDER BY c_custkey"""),
 
     // -- left outer join + zero-preserving agg ----------------------------
-    "q_outer_join" -> ((s, d) => {
+    Query("q_outer_join", (s, d) => {
       val o = ord(s, d)
       cust(s, d)
         .join(o, col("c_custkey") === col("o_custkey"), "left")
@@ -270,10 +393,18 @@ object Relational extends QueryModule {
           count(col("o_orderkey")).as("n_orders"),
           (coalesce(sum(cents(col("o_totalprice"))), lit(0L)) / 100.0).as("total_spend"))
         .orderBy("c_custkey")
-    }),
+    },
+      """
+      SELECT c_custkey,
+             count(o_orderkey) AS n_orders,
+             coalesce(sum(round(o_totalprice * 100)::BIGINT), 0) / 100.0 AS total_spend
+      FROM customer
+      LEFT JOIN orders ON c_custkey = o_custkey
+      GROUP BY c_custkey
+      ORDER BY c_custkey"""),
 
     // -- window: ranking (top-3 orders per customer) ----------------------
-    "q_window_rank" -> ((s, d) => {
+    Query("q_window_rank", (s, d) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       ord(s, d)
@@ -281,10 +412,19 @@ object Relational extends QueryModule {
         .filter(col("rk") <= 3)
         .select(col("o_custkey"), col("rk"), col("o_orderkey"), col("o_totalprice"))
         .orderBy("o_custkey", "rk")
-    }),
+    },
+      """
+      SELECT o_custkey, rk, o_orderkey, o_totalprice
+      FROM (
+        SELECT o_custkey, o_orderkey, o_totalprice,
+               row_number() OVER (PARTITION BY o_custkey
+                                  ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        FROM orders)
+      WHERE rk <= 3
+      ORDER BY o_custkey, rk"""),
 
     // -- window: analytic frame (running total per customer) --------------
-    "q_window_running" -> ((s, d) => {
+    Query("q_window_running", (s, d) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -292,10 +432,17 @@ object Relational extends QueryModule {
         .select(col("o_custkey"), col("o_orderkey"),
           (sum(cents(col("o_totalprice"))).over(w) / 100.0).as("running_spend"))
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      """
+      SELECT o_custkey, o_orderkey,
+             sum(round(o_totalprice * 100)::BIGINT) OVER (
+               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS running_spend
+      FROM orders
+      ORDER BY o_custkey, o_orderkey"""),
 
     // -- window: lag (days between consecutive orders) --------------------
-    "q_window_lag" -> ((s, d) => {
+    Query("q_window_lag", (s, d) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       ord(s, d)
@@ -303,10 +450,18 @@ object Relational extends QueryModule {
           datediff(col("o_orderdate"), lag("o_orderdate", 1).over(w))
             .cast("long").as("days_since_prev"))
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      """
+      SELECT o_custkey, o_orderkey,
+             date_diff('day',
+               lag(o_orderdate, 1) OVER (PARTITION BY o_custkey
+                                         ORDER BY o_orderdate, o_orderkey),
+               o_orderdate) AS days_since_prev
+      FROM orders
+      ORDER BY o_custkey, o_orderkey"""),
 
     // -- window: navigation functions (first/last/nth over a full frame) --
-    "q_window_nav" -> ((s, d) => {
+    Query("q_window_nav", (s, d) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -316,10 +471,19 @@ object Relational extends QueryModule {
           last(cents(col("o_totalprice"))).over(wFull).as("last_price_c"),
           nth_value(cents(col("o_totalprice")), 2).over(wFull).as("second_price_c"))
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      """
+      SELECT o_custkey, o_orderkey,
+             first_value(round(o_totalprice * 100)::BIGINT) OVER w AS first_price_c,
+             last_value(round(o_totalprice * 100)::BIGINT) OVER w AS last_price_c,
+             nth_value(round(o_totalprice * 100)::BIGINT, 2) OVER w AS second_price_c
+      FROM orders
+      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+      ORDER BY o_custkey, o_orderkey"""),
 
     // -- window: distribution functions (ntile / percent_rank / cume_dist)
-    "q_window_dist" -> ((s, d) => {
+    Query("q_window_dist", (s, d) => {
       val w = Window.partitionBy("o_orderstatus")
         .orderBy(col("o_totalprice"), col("o_orderkey")) // unique -> deterministic
       ord(s, d)
@@ -328,10 +492,18 @@ object Relational extends QueryModule {
           percent_rank().over(w).as("pr"),
           cume_dist().over(w).as("cd"))
         .orderBy("o_orderkey")
-    }),
+    },
+      """
+      SELECT o_orderkey, o_orderstatus,
+             (ntile(4) OVER w)::BIGINT AS quartile,
+             percent_rank() OVER w AS pr,
+             cume_dist() OVER w AS cd
+      FROM orders
+      WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
+      ORDER BY o_orderkey"""),
 
     // -- rollup -----------------------------------------------------------
-    "q_rollup" -> ((s, d) =>
+    Query("q_rollup", (s, d) =>
       li(s, d)
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), sum("l_quantity").as("qty"))
@@ -339,10 +511,17 @@ object Relational extends QueryModule {
           coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
           coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
           col("n"), col("qty"))
-        .orderBy("returnflag", "linestatus")),
+        .orderBy("returnflag", "linestatus"),
+      """
+      SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
+             coalesce(l_linestatus, 'ALL') AS linestatus,
+             count(1) AS n, sum(l_quantity) AS qty
+      FROM lineitem
+      GROUP BY ROLLUP (l_returnflag, l_linestatus)
+      ORDER BY returnflag, linestatus"""),
 
     // -- cube -------------------------------------------------------------
-    "q_cube" -> ((s, d) =>
+    Query("q_cube", (s, d) =>
       ord(s, d)
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"),
@@ -351,10 +530,18 @@ object Relational extends QueryModule {
           coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
           coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
           col("n"), col("avg_price"))
-        .orderBy("status", "priority")),
+        .orderBy("status", "priority"),
+      """
+      SELECT coalesce(o_orderstatus, 'ALL') AS status,
+             coalesce(o_orderpriority, 'ALL') AS priority,
+             count(1) AS n,
+             sum(round(o_totalprice * 100)::BIGINT) / 100.0 / count(1) AS avg_price
+      FROM orders
+      GROUP BY CUBE (o_orderstatus, o_orderpriority)
+      ORDER BY status, priority"""),
 
     // -- grouping sets (SQL surface) --------------------------------------
-    "q_grouping_sets" -> ((s, d) => {
+    Query("q_grouping_sets", (s, d) => {
       ord(s, d).createOrReplaceTempView("graft_orders_gs")
       s.sql("""
         SELECT coalesce(o_orderstatus, 'ALL') AS status,
@@ -363,27 +550,47 @@ object Relational extends QueryModule {
         FROM graft_orders_gs
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         ORDER BY status, priority""")
-    }),
+    },
+      """
+      SELECT coalesce(o_orderstatus, 'ALL') AS status,
+             coalesce(o_orderpriority, 'ALL') AS priority,
+             count(1) AS n
+      FROM orders
+      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+      ORDER BY status, priority"""),
 
     // -- distinct aggregation ---------------------------------------------
-    "q_distinct_agg" -> ((s, d) =>
+    Query("q_distinct_agg", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
           countDistinct(col("l_suppkey")).as("n_supp"),
           countDistinct(col("l_partkey")).as("n_part"),
           count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      SELECT l_returnflag,
+             count(DISTINCT l_suppkey) AS n_supp,
+             count(DISTINCT l_partkey) AS n_part,
+             count(1) AS n_rows
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- top-k (TakeOrderedAndProject) ------------------------------------
-    "q_topk" -> ((s, d) =>
+    Query("q_topk", (s, d) =>
       ord(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)),
+        .limit(10),
+      """
+      SELECT o_orderkey, o_totalprice
+      FROM orders
+      ORDER BY o_totalprice DESC, o_orderkey
+      LIMIT 10"""),
 
     // -- set ops: union / intersect / except ------------------------------
-    "q_setops" -> ((s, d) => {
+    Query("q_setops", (s, d) => {
       val c = cust(s, d)
       val build = c.filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       val rich = c.filter(col("c_acctbal") > 5000).select(col("c_custkey"))
@@ -394,11 +601,21 @@ object Relational extends QueryModule {
         .groupBy("op").agg(count(lit(1)).as("n"),
           sum("c_custkey").as("key_sum"))
         .orderBy("op")
-    }),
+    },
+      """
+      WITH build AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
+           rich AS (SELECT c_custkey FROM customer WHERE c_acctbal > 5000),
+           u AS (SELECT c_custkey, 'union' AS op FROM (SELECT c_custkey FROM build UNION SELECT c_custkey FROM rich)),
+           i AS (SELECT c_custkey, 'intersect' AS op FROM (SELECT c_custkey FROM build INTERSECT SELECT c_custkey FROM rich)),
+           e AS (SELECT c_custkey, 'except' AS op FROM (SELECT c_custkey FROM build EXCEPT SELECT c_custkey FROM rich))
+      SELECT op, count(1) AS n, sum(c_custkey)::BIGINT AS key_sum
+      FROM (SELECT * FROM u UNION ALL SELECT * FROM i UNION ALL SELECT * FROM e)
+      GROUP BY op
+      ORDER BY op"""),
 
     // -- scalar subquery: above-average customers (exact integer compare:
     //    cents*n > sum_cents avoids float-boundary divergence) -----------
-    "q_scalar_subquery" -> ((s, d) => {
+    Query("q_scalar_subquery", (s, d) => {
       val c = cust(s, d)
       val stats = c.agg(
         sum(cents(col("c_acctbal"))).as("sum_cents"),
@@ -407,10 +624,19 @@ object Relational extends QueryModule {
         .filter(cents(col("c_acctbal")) * col("n") > col("sum_cents"))
         .select(col("c_custkey"), col("c_acctbal"))
         .orderBy("c_custkey")
-    }),
+    },
+      """
+      WITH stats AS (
+        SELECT sum(round(c_acctbal * 100)::BIGINT)::BIGINT AS sum_cents,
+               count(1) AS n
+        FROM customer)
+      SELECT c_custkey, c_acctbal
+      FROM customer CROSS JOIN stats
+      WHERE round(c_acctbal * 100)::BIGINT * n > sum_cents
+      ORDER BY c_custkey"""),
 
     // -- correlated scalar subquery (decorrelated by Catalyst to a join) --
-    "q_correlated_scalar" -> ((s, d) => {
+    Query("q_correlated_scalar", (s, d) => {
       cust(s, d).createOrReplaceTempView("graft_cust_cs")
       ord(s, d).createOrReplaceTempView("graft_ord_cs")
       s.sql("""
@@ -420,12 +646,19 @@ object Relational extends QueryModule {
                 WHERE o_custkey = c_custkey) AS last_order
         FROM graft_cust_cs
         ORDER BY c_custkey""")
-    }),
+    },
+      """
+      SELECT c_custkey,
+             (SELECT count(1) FROM orders WHERE o_custkey = c_custkey) AS n_orders,
+             (SELECT coalesce(max(o_orderkey), -1) FROM orders
+              WHERE o_custkey = c_custkey) AS last_order
+      FROM customer
+      ORDER BY c_custkey"""),
 
     // -- window: RANGE frame (value-based, not row-based) -----------------
     // For each order: count of same-customer orders within the preceding
     // 90 days (inclusive). Day-granularity longs -> exact frame edges.
-    "q_window_range" -> ((s, d) => {
+    Query("q_window_range", (s, d) => {
       val days = datediff(col("o_orderdate"), to_date(lit("1995-01-01"))).cast("long")
       val w = Window.partitionBy("o_custkey").orderBy("day_no")
         .rangeBetween(-90, 0)
@@ -434,10 +667,18 @@ object Relational extends QueryModule {
         .select(col("o_custkey"), col("o_orderkey"), col("day_no"),
           count(lit(1)).over(w).as("n_90d"))
         .orderBy("o_custkey", "o_orderkey")
-    }),
+    },
+      """
+      SELECT o_custkey, o_orderkey,
+             date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) AS day_no,
+             count(1) OVER (PARTITION BY o_custkey ORDER BY
+               date_diff('day', TIMESTAMP '1995-01-01', o_orderdate)
+               RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS n_90d
+      FROM orders
+      ORDER BY o_custkey, o_orderkey"""),
 
     // -- multiset set ops: EXCEPT ALL / INTERSECT ALL ---------------------
-    "q_setops_all" -> ((s, d) => {
+    Query("q_setops_all", (s, d) => {
       val o = ord(s, d)
       val a = o.filter(col("o_totalprice") > 150000).select(col("o_custkey"))
       val b = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
@@ -446,10 +687,21 @@ object Relational extends QueryModule {
       val ia = a.intersectAll(b).groupBy("o_custkey")
         .agg(count(lit(1)).as("n")).withColumn("op", lit("intersect_all"))
       ea.union(ia).orderBy("op", "o_custkey")
-    }),
+    },
+      """
+      WITH a AS (SELECT o_custkey FROM orders WHERE o_totalprice > 150000),
+           b AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
+           ea AS (SELECT o_custkey, count(1) AS n, 'except_all' AS op
+                  FROM (SELECT o_custkey FROM a EXCEPT ALL SELECT o_custkey FROM b)
+                  GROUP BY o_custkey),
+           ia AS (SELECT o_custkey, count(1) AS n, 'intersect_all' AS op
+                  FROM (SELECT o_custkey FROM a INTERSECT ALL SELECT o_custkey FROM b)
+                  GROUP BY o_custkey)
+      SELECT * FROM (SELECT * FROM ea UNION ALL SELECT * FROM ia)
+      ORDER BY op, o_custkey"""),
 
     // -- min_by / max_by (deterministic via unique encoded score) ---------
-    "q_minmax_by" -> ((s, d) => {
+    Query("q_minmax_by", (s, d) => {
       val score = cents(col("o_totalprice")) * 100000000L +
         (lit(100000000L) - col("o_orderkey"))
       ord(s, d)
@@ -459,10 +711,23 @@ object Relational extends QueryModule {
           min_by(col("o_orderkey"), score).as("worst_order"),
           count(lit(1)).as("n"))
         .orderBy("o_custkey")
-    }),
+    },
+      """
+      WITH scored AS (
+        SELECT o_custkey, o_orderkey,
+               round(o_totalprice * 100)::BIGINT * 100000000
+                 + (100000000 - o_orderkey) AS score
+        FROM orders)
+      SELECT o_custkey,
+             arg_max(o_orderkey, score) AS best_order,
+             arg_min(o_orderkey, score) AS worst_order,
+             count(1) AS n
+      FROM scored
+      GROUP BY o_custkey
+      ORDER BY o_custkey"""),
 
     // -- string function family -------------------------------------------
-    "q_string_funcs" -> ((s, d) =>
+    Query("q_string_funcs", (s, d) =>
       Tables.part(s, d)
         .select(
           col("p_partkey"),
@@ -474,10 +739,22 @@ object Relational extends QueryModule {
           regexp_replace(col("p_name"), "[aeiou]", "_").as("name_devowel"),
           trim(lpad(col("p_brand"), 12, " ")).as("brand_trim"),
           when(col("p_name").contains("red"), lit(1L)).otherwise(lit(0L)).as("has_red"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      """
+      SELECT p_partkey,
+             upper(p_brand) AS brand_upper,
+             lower(p_type) AS type_lower,
+             substring(p_name, 1, 8) AS name_prefix,
+             length(p_name) AS name_len,
+             concat_ws('|', p_brand, p_type) AS brand_type,
+             regexp_replace(p_name, '[aeiou]', '_', 'g') AS name_devowel,
+             trim(lpad(p_brand, 12, ' ')) AS brand_trim,
+             (CASE WHEN p_name LIKE '%red%' THEN 1 ELSE 0 END)::BIGINT AS has_red
+      FROM part
+      ORDER BY p_partkey"""),
 
     // -- date/time function family ----------------------------------------
-    "q_date_funcs" -> ((s, d) =>
+    Query("q_date_funcs", (s, d) =>
       ord(s, d)
         .select(
           col("o_orderkey"),
@@ -486,18 +763,34 @@ object Relational extends QueryModule {
           dayofmonth(col("o_orderdate")).cast("long").as("dom"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("ymd"),
           date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd").as("month_start"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """
+      SELECT o_orderkey,
+             EXTRACT(year FROM o_orderdate) AS yr,
+             EXTRACT(month FROM o_orderdate) AS mo,
+             EXTRACT(day FROM o_orderdate) AS dom,
+             strftime(o_orderdate, '%Y-%m-%d') AS ymd,
+             strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS month_start
+      FROM orders
+      ORDER BY o_orderkey"""),
 
     // -- date agg: orders per month ---------------------------------------
-    "q_date_agg" -> ((s, d) =>
+    Query("q_date_agg", (s, d) =>
       ord(s, d)
         .groupBy(date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM").as("ym"))
         .agg(count(lit(1)).as("n"),
           (sum(cents(col("o_totalprice"))) / 100.0).as("total"))
-        .orderBy("ym")),
+        .orderBy("ym"),
+      """
+      SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS ym,
+             count(1) AS n,
+             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total
+      FROM orders
+      GROUP BY 1
+      ORDER BY ym"""),
 
     // -- math function family ---------------------------------------------
-    "q_math_funcs" -> ((s, d) =>
+    Query("q_math_funcs", (s, d) =>
       Tables.part(s, d)
         .select(
           col("p_partkey"),
@@ -512,15 +805,39 @@ object Relational extends QueryModule {
           rnd(graft.functions.DetMath.lnColumn(
             col("p_retailprice")), 4).as("price_ln"),
           pmod(col("p_partkey"), lit(7)).as("key_mod7"))
-        .orderBy("p_partkey")),
+        .orderBy("p_partkey"),
+      // price_ln via the staged DetMath mirror (not DuckDB's libm ln) so
+      // both engines round the identical double — see DetMath scaladoc
+      s"""
+      WITH m0 AS (SELECT p_partkey, p_size, p_retailprice,
+                         p_retailprice::DOUBLE AS x FROM part),
+           m1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM m0),
+           m2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM m1),
+           m3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM m2),
+           m4 AS (SELECT *, (z * z) AS z2 FROM m3)
+      SELECT p_partkey,
+             abs(p_size - 25)::BIGINT AS size_dev,
+             ceil(p_retailprice / 100)::BIGINT AS price_bucket,
+             floor(p_retailprice / 100)::BIGINT AS price_floor,
+             floor(sqrt(p_retailprice) * 10000.0 + 0.5) / 10000.0 AS price_sqrt,
+             pow(p_size, 2) AS size_sq,
+             floor(${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
+                   * 10000.0 + 0.5) / 10000.0 AS price_ln,
+             p_partkey % 7 AS key_mod7
+      FROM m4
+      ORDER BY p_partkey"""),
 
     // -- JSON scalar functions (events.props) -----------------------------
-    "q_json_funcs" -> ((s, d) =>
+    Query("q_json_funcs", (s, d) =>
       Tables.events(s, d)
         .select(
           col("event_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """
+      SELECT event_id, json_extract_string(props, '$.k')::BIGINT AS k
+      FROM events
+      ORDER BY event_id"""),
 
     // -- VARIANT (Spark 4 semi-structured type): parse_json once into
     //    the binary variant encoding, then TYPED extraction with
@@ -528,16 +845,22 @@ object Relational extends QueryModule {
     //    re-parsing a JSON string on every access and decoding a
     //    field-indexed binary; try_variant_get on an absent path
     //    yields NULL (mirrored literally). ------------------------------
-    "q_variant_json" -> ((s, d) =>
+    Query("q_variant_json", (s, d) =>
       Tables.events(s, d)
         .select(col("event_id"),
           expr("variant_get(parse_json(props), '$.k', 'bigint')").as("k"),
           expr("try_variant_get(parse_json(props), '$.missing', 'bigint')")
             .as("missing"))
-        .orderBy("event_id")),
+        .orderBy("event_id"),
+      """
+      SELECT event_id,
+             json_extract_string(props, '$.k')::BIGINT AS k,
+             NULL::BIGINT AS missing
+      FROM events
+      ORDER BY event_id"""),
 
     // -- JSON + agg: distribution of extracted key by event type ----------
-    "q_json_agg" -> ((s, d) => {
+    Query("q_json_agg", (s, d) => {
       val k = get_json_object(col("props"), "$.k").cast("long")
       Tables.events(s, d)
         .groupBy("event_type")
@@ -546,10 +869,18 @@ object Relational extends QueryModule {
           max(k).as("max_k"),
           count(lit(1)).as("n"))
         .orderBy("event_type")
-    }),
+    },
+      """
+      SELECT event_type,
+             sum(json_extract_string(props, '$.k')::BIGINT) / count(1) AS avg_k,
+             max(json_extract_string(props, '$.k')::BIGINT) AS max_k,
+             count(1) AS n
+      FROM events
+      GROUP BY event_type
+      ORDER BY event_type"""),
 
     // -- array scalar functions (embeddings.embedding) --------------------
-    "q_array_funcs" -> ((s, d) =>
+    Query("q_array_funcs", (s, d) =>
       Tables.embeddings(s, d)
         .select(
           col("vec_id"),
@@ -559,41 +890,86 @@ object Relational extends QueryModule {
             lit(0.0), (acc, x) => acc + x.cast("double")), 3).as("vec_sum"),
           rnd(aggregate(col("embedding"),
             lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")), 3).as("sq_norm"))
-        .orderBy("vec_id")),
+        .orderBy("vec_id"),
+      """
+      SELECT vec_id,
+             len(embedding) AS dim,
+             embedding[1]::DOUBLE AS first_val,
+             floor(list_aggregate(list_transform(embedding, x -> x::DOUBLE), 'sum')
+                   * 1000.0 + 0.5) / 1000.0 AS vec_sum,
+             floor(list_aggregate(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE), 'sum')
+                   * 1000.0 + 0.5) / 1000.0 AS sq_norm
+      FROM embeddings
+      ORDER BY vec_id"""),
 
     // -- custom physical operator: heap-based per-key top-k ---------------
     // Same rows as q_window_rank's top-3, but via graft.plans.TopKPerKey
     // (bounded heaps, no SortExec) — see that file for the plan ladder.
     // Score encodes the (totalprice DESC, orderkey ASC) tie-break
     // uniquely in one long.
-    "q_topk_per_key" -> ((s, d) => {
+    Query("q_topk_per_key", (s, d) => {
       val score = round(col("o_totalprice") * 100).cast("long") * 100000000L +
         (lit(100000000L) - col("o_orderkey"))
       graft.plans.TopK.perKey(ord(s, d), Seq("o_custkey"), score, 3)
         .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
-    }),
+    },
+      """
+      SELECT o_custkey, o_orderkey, o_totalprice
+      FROM (
+        SELECT o_custkey, o_orderkey, o_totalprice,
+               row_number() OVER (PARTITION BY o_custkey
+                                  ORDER BY o_totalprice DESC, o_orderkey) AS rk
+        FROM orders)
+      WHERE rk <= 3
+      ORDER BY o_custkey, o_totalprice DESC, o_orderkey"""),
 
     // -- typed UDAF: exact weighted mean (Aggregator[IN,BUF,OUT]) ---------
-    "q_udaf_wavg" -> ((s, d) => {
+    Query("q_udaf_wavg", (s, d) => {
       val wavg = udaf(graft.functions.Aggregators.WeightedMean)
       li(s, d)
         .groupBy("l_returnflag")
         .agg(wavg(cents(col("l_extendedprice")),
           round(col("l_quantity")).cast("long")).as("wavg_price"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """
+      SELECT l_returnflag,
+             (sum(round(l_extendedprice * 100)::BIGINT * round(l_quantity)::BIGINT)::DOUBLE
+              / sum(round(l_quantity)::BIGINT)::DOUBLE) / 100.0 AS wavg_price
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- deterministic sketch: KMV distinct-count (TypedImperativeAggregate,
     //    oracle-exact unlike HLL — see functions/KmvDistinct.scala) -------
-    "q_kmv_distinct" -> ((s, d) =>
+    Query("q_kmv_distinct", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
           graft.functions.KmvDistinct.kmv(s,
             col("l_partkey").cast("string"), 16).as("kmv_parts"),
           countDistinct(col("l_partkey")).as("exact_parts"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      WITH h AS (
+        SELECT DISTINCT l_returnflag,
+               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h
+        FROM lineitem),
+      ranked AS (
+        SELECT l_returnflag, h,
+               row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn,
+               count(1) OVER (PARTITION BY l_returnflag) AS n
+        FROM h)
+      SELECT r.l_returnflag,
+             CASE WHEN r.n < 16 THEN r.n::DOUBLE
+                  ELSE 15.0 * 281474976710656.0 / kth.h::DOUBLE END AS kmv_parts,
+             (SELECT count(DISTINCT l_partkey) FROM lineitem li
+              WHERE li.l_returnflag = r.l_returnflag) AS exact_parts
+      FROM (SELECT DISTINCT l_returnflag, n FROM ranked) r
+      LEFT JOIN (SELECT l_returnflag, h FROM ranked WHERE rn = 16) kth
+        ON r.l_returnflag = kth.l_returnflag
+      ORDER BY r.l_returnflag"""),
 
     // -- KMV sketch ALGEBRA: set-operation cardinalities from synopses ----
     //    (Beyer et al. 2007). Two per-group KMV synopses (k smallest
@@ -607,7 +983,7 @@ object Relational extends QueryModule {
     //    At 100 TB: each group's synopsis is k longs, built in one
     //    pass through the standard partial/merge aggregate path; the
     //    set algebra touches one row per group pair.
-    "q_kmv_setops" -> ((s, d) => {
+    Query("q_kmv_setops", (s, d) => {
       val k = 16
       val liAR = li(s, d).filter(col("l_returnflag").isin("A", "R"))
       val sk = liAR.groupBy("l_returnflag")
@@ -639,10 +1015,50 @@ object Relational extends QueryModule {
       one.crossJoin(exact) // 1 row x 1 row
         .select(unionEst.as("union_est"), interEst.as("inter_est"),
           col("union_exact"), col("inter_exact"))
-    }),
+    },
+      // KMV set-operation algebra mirrored rank-for-rank: per-side
+      // synopses as rn<=k ranked distinct hashes, union synopsis as the
+      // k smallest of their union, estimates as the same single-division
+      // doubles Spark computes (constant 15*2^48 folds exactly in both
+      // engines; every hash < 2^48 is double-exact)
+      """
+      WITH ar AS (
+        SELECT DISTINCT l_returnflag AS f,
+               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h
+        FROM lineitem WHERE l_returnflag IN ('A', 'R')),
+      ranked AS (
+        SELECT f, h, row_number() OVER (PARTITION BY f ORDER BY h) AS rn
+        FROM ar),
+      ska AS (SELECT h FROM ranked WHERE f = 'A' AND rn <= 16),
+      skr AS (SELECT h FROM ranked WHERE f = 'R' AND rn <= 16),
+      u AS (SELECT DISTINCT h
+            FROM (SELECT h FROM ska UNION ALL SELECT h FROM skr)),
+      m AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM u),
+      mk AS (SELECT h FROM m WHERE rn <= 16),
+      stats AS (SELECT
+          (SELECT count(1) FROM u) AS usz,
+          (SELECT max(h) FROM mk) AS hk,
+          (SELECT count(1) FROM mk
+           WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skr))
+            AS icnt),
+      ex AS (SELECT count(1)::BIGINT AS union_exact,
+                    sum(CASE WHEN nf = 2 THEN 1 ELSE 0 END)::BIGINT
+                      AS inter_exact
+             FROM (SELECT l_partkey, count(DISTINCT l_returnflag) AS nf
+                   FROM lineitem WHERE l_returnflag IN ('A', 'R')
+                   GROUP BY l_partkey))
+      SELECT CASE WHEN usz < 16 THEN usz::DOUBLE
+                  ELSE (15.0 * 281474976710656.0) / hk::DOUBLE
+             END AS union_est,
+             CASE WHEN usz < 16 THEN icnt::DOUBLE
+                  ELSE icnt::DOUBLE *
+                       ((15.0 * 281474976710656.0) / hk::DOUBLE) / 16.0
+             END AS inter_est,
+             union_exact, inter_exact
+      FROM stats, ex"""),
 
     // -- scalar comparison + regex group extraction -----------------------
-    "q_scalar_misc" -> ((s, d) =>
+    Query("q_scalar_misc", (s, d) =>
       li(s, d)
         .filter(col("l_orderkey") <= 100)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -653,14 +1069,25 @@ object Relational extends QueryModule {
             "^(\\d{4})-(\\d{2})", 1).as("ship_year"),
           regexp_extract(col("l_shipdate").cast("string"),
             "^(\\d{4})-(\\d{2})", 2).as("ship_month"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber"),
+      """
+      SELECT l_orderkey, l_linenumber,
+             greatest(round(l_extendedprice * 100)::BIGINT,
+                      round(l_quantity * 100)::BIGINT * 100) AS hi_c,
+             least(round(l_discount * 100)::BIGINT,
+                   round(l_tax * 100)::BIGINT) AS lo_c,
+             regexp_extract(l_shipdate::VARCHAR, '^(\d{4})-(\d{2})', 1) AS ship_year,
+             regexp_extract(l_shipdate::VARCHAR, '^(\d{4})-(\d{2})', 2) AS ship_month
+      FROM lineitem
+      WHERE l_orderkey <= 100
+      ORDER BY l_orderkey, l_linenumber"""),
 
     // -- URL functions (the web-crawl pipeline staple): parse_url
     //    component extraction — host, path, and a named query param —
     //    over deterministically constructed URLs; the oracle computes
     //    the expected components from the base columns (same style as
     //    the io round-trips: the parse must land back on its inputs).
-    "q_url_funcs" -> ((s, d) =>
+    Query("q_url_funcs", (s, d) =>
       cust(s, d)
         .select(col("c_custkey"),
           concat(lit("https://ex.com/"), lower(col("c_mktsegment")),
@@ -670,23 +1097,38 @@ object Relational extends QueryModule {
           expr("parse_url(url, 'HOST')").as("host"),
           expr("parse_url(url, 'PATH')").as("path"),
           expr("parse_url(url, 'QUERY', 'id')").as("qid"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      """
+      SELECT c_custkey,
+             'ex.com' AS host,
+             '/' || lower(c_mktsegment) || '/p' AS path,
+             c_custkey::VARCHAR AS qid
+      FROM customer
+      ORDER BY c_custkey"""),
 
     // -- collation support (Spark 4): DISTINCT under the UTF8_LCASE
     //    collation folds case variants into one key while the default
     //    binary collation keeps them apart — collation-aware compare
     //    semantics as a COLUMN property, not an expression rewrite
     //    (the oracle mirrors the semantics with lower()). -----------------
-    "q_collation" -> ((s, d) => {
+    Query("q_collation", (s, d) => {
       val mixed = when(col("c_custkey") % 2 === 0,
         upper(col("c_mktsegment"))).otherwise(lower(col("c_mktsegment")))
       cust(s, d).select(mixed.as("seg"))
         .agg(countDistinct(col("seg")).as("n_binary"),
           countDistinct(collate(col("seg"), "UTF8_LCASE")).as("n_ci"))
-    }),
+    },
+      """
+      WITH s AS (SELECT CASE WHEN c_custkey % 2 = 0
+                             THEN upper(c_mktsegment)
+                             ELSE lower(c_mktsegment) END AS seg
+                 FROM customer)
+      SELECT count(DISTINCT seg)::BIGINT AS n_binary,
+             count(DISTINCT lower(seg))::BIGINT AS n_ci
+      FROM s"""),
 
     // -- binary encodings: base64 / hex round-trips (payload plumbing) ----
-    "q_encode_funcs" -> ((s, d) =>
+    Query("q_encode_funcs", (s, d) =>
       cust(s, d)
         .filter(col("c_custkey") <= 100)
         .select(col("c_custkey"),
@@ -694,7 +1136,15 @@ object Relational extends QueryModule {
           hex(col("c_name").cast("binary")).as("name_hex"),
           decode(unbase64(base64(col("c_name").cast("binary"))), "UTF-8")
             .as("name_roundtrip"))
-        .orderBy("c_custkey")),
+        .orderBy("c_custkey"),
+      """
+      SELECT c_custkey,
+             base64(c_name::BLOB) AS name_b64,
+             hex(c_name::BLOB) AS name_hex,
+             c_name AS name_roundtrip
+      FROM customer
+      WHERE c_custkey <= 100
+      ORDER BY c_custkey"""),
 
     // -- scalar serde functions: Spark 4 native XML (to_xml/from_xml)
     //    and per-row CSV (to_csv/from_csv) round-tripped through their
@@ -703,7 +1153,7 @@ object Relational extends QueryModule {
     //    columns — which is exactly the property worth pinning: a
     //    serde that drops precision, mangles encoding or reorders
     //    fields breaks the hash ------------------------------------------
-    "q_serde_funcs" -> ((s, d) => {
+    Query("q_serde_funcs", (s, d) => {
       val base = cust(s, d)
         .filter(col("c_custkey") <= 100)
         .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
@@ -720,23 +1170,42 @@ object Relational extends QueryModule {
           col("c.c_name").as("csv_name"),
           col("c.c_nationkey").as("csv_nation"))
         .orderBy("c_custkey")
-    }),
+    },
+      // serde roundtrip identity: a to_xml/from_xml or to_csv/from_csv
+      // pass that drops precision, mangles encoding or reorders fields
+      // diverges from the raw columns and breaks the hash
+      """
+      SELECT c_custkey,
+             c_name AS xml_name,
+             c_nationkey AS xml_nation,
+             c_name AS csv_name,
+             c_nationkey AS csv_nation
+      FROM customer
+      WHERE c_custkey <= 100
+      ORDER BY c_custkey"""),
 
     // -- explicit null ordering: customers without orders sort under
     //    NULLS LAST / NULLS FIRST control (left-join-produced nulls) ------
-    "q_null_order" -> ((s, d) => {
+    Query("q_null_order", (s, d) => {
       val spend = ord(s, d).groupBy("o_custkey")
         .agg(sum(cents(col("o_totalprice"))).as("spend_c"))
       cust(s, d)
         .join(spend, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey"), col("spend_c"))
         .orderBy(col("spend_c").desc_nulls_last, col("c_custkey"))
-    }),
+    },
+      """
+      WITH spend AS (
+        SELECT o_custkey, sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS spend_c
+        FROM orders GROUP BY o_custkey)
+      SELECT c_custkey, spend_c
+      FROM customer LEFT JOIN spend ON c_custkey = o_custkey
+      ORDER BY spend_c DESC NULLS LAST, c_custkey"""),
 
     // -- calendar functions round 2: quarter / ISO weekday / ISO week /
     //    month arithmetic / month-end (all integer-or-date exact;
     //    weekday numbering normalized to ISO Mon=1 on both engines) -------
-    "q_date_funcs2" -> ((s, d) =>
+    Query("q_date_funcs2", (s, d) =>
       ord(s, d)
         .filter(col("o_orderkey") <= 500)
         .select(col("o_orderkey"),
@@ -747,10 +1216,20 @@ object Relational extends QueryModule {
           weekofyear(col("od")).cast("long").as("iso_week"),
           add_months(col("od"), 3).as("plus_3m"),
           last_day(col("od")).as("month_end"))
-        .orderBy("o_orderkey")),
+        .orderBy("o_orderkey"),
+      """
+      SELECT o_orderkey, o_orderdate::DATE AS od,
+             quarter(o_orderdate::DATE)::BIGINT AS qtr,
+             isodow(o_orderdate::DATE)::BIGINT AS isodow,
+             weekofyear(o_orderdate::DATE)::BIGINT AS iso_week,
+             (o_orderdate::DATE + INTERVAL 3 MONTH)::DATE AS plus_3m,
+             last_day(o_orderdate::DATE) AS month_end
+      FROM orders
+      WHERE o_orderkey <= 500
+      ORDER BY o_orderkey"""),
 
     // -- boolean / bitwise aggregates (exact integer+bool semantics) ------
-    "q_misc_aggs" -> ((s, d) =>
+    Query("q_misc_aggs", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -760,11 +1239,22 @@ object Relational extends QueryModule {
           bit_and(col("l_partkey")).as("pk_and"),
           bit_or(col("l_partkey")).as("pk_or"),
           bit_xor(col("l_partkey")).as("pk_xor"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      SELECT l_returnflag,
+             count(CASE WHEN l_quantity > 25 THEN 1 END)::BIGINT AS n_bulk,
+             bool_and(l_quantity > 0) AS all_positive,
+             bool_or(l_discount > 0.09) AS any_deep_discount,
+             bit_and(l_partkey)::BIGINT AS pk_and,
+             bit_or(l_partkey)::BIGINT AS pk_or,
+             bit_xor(l_partkey)::BIGINT AS pk_xor
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- try_* error-handling family: malformed input -> NULL, not
     //    failure (the semantics batch pipelines need on dirty data) -------
-    "q_try_funcs" -> ((s, d) =>
+    Query("q_try_funcs", (s, d) =>
       li(s, d)
         .filter(col("l_orderkey") <= 200)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -772,7 +1262,16 @@ object Relational extends QueryModule {
           expr("try_divide(round(l_extendedprice * 100), 7)").as("div7"),
           expr("try_cast(l_returnflag AS INT)").as("bad_int"),
           expr("try_cast(round(l_quantity) AS INT)").cast("long").as("ok_int"))
-        .orderBy("l_orderkey", "l_linenumber")),
+        .orderBy("l_orderkey", "l_linenumber"),
+      """
+      SELECT l_orderkey, l_linenumber,
+             CAST(NULL AS DOUBLE) AS div0,
+             round(l_extendedprice * 100) / 7 AS div7,
+             TRY_CAST(l_returnflag AS INTEGER) AS bad_int,
+             round(l_quantity)::BIGINT AS ok_int
+      FROM lineitem
+      WHERE l_orderkey <= 200
+      ORDER BY l_orderkey, l_linenumber"""),
 
     // -- HLL distinct-count sketch (TypedImperativeAggregate; constant
     //    4 KiB mergeable buffer — see functions/HllDistinct.scala).
@@ -783,7 +1282,7 @@ object Relational extends QueryModule {
     //    recomputes exact_parts and emits hll_ok as the literal 1 — a
     //    hash match IS the bound holding. HllSpec gates the tighter
     //    accuracy curve.
-    "q_hll_distinct" -> ((s, d) =>
+    Query("q_hll_distinct", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -793,11 +1292,21 @@ object Relational extends QueryModule {
         .select(col("l_returnflag"), col("exact_parts"),
           when(abs(col("hll_parts") - col("exact_parts")) * 20
             <= col("exact_parts"), 1L).otherwise(0L).as("hll_ok"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      // the ok flags are literal 1 here: Spark emits 1 only when its
+      // sketch landed inside the documented error bound of its own exact
+      // aggregate, so the value compare IS the bound assertion
+      """
+      SELECT l_returnflag,
+             count(DISTINCT l_partkey) AS exact_parts,
+             CAST(1 AS BIGINT) AS hll_ok
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- unpivot / melt: wide measure columns -> (measure, value) rows.
     //    Spark's stack() generator; values in exact integer cents --------
-    "q_unpivot" -> ((s, d) =>
+    Query("q_unpivot", (s, d) =>
       li(s, d)
         .filter(col("l_orderkey") <= 100)
         .select(col("l_orderkey"), col("l_linenumber"),
@@ -806,7 +1315,22 @@ object Relational extends QueryModule {
             'price',     CAST(round(l_extendedprice * 100) AS BIGINT),
             'discount',  CAST(round(l_discount * 100) AS BIGINT))
             AS (measure, v_cents)"""))
-        .orderBy("l_orderkey", "l_linenumber", "measure")),
+        .orderBy("l_orderkey", "l_linenumber", "measure"),
+      """
+      SELECT l_orderkey, l_linenumber, measure, v_cents
+      FROM (
+        SELECT l_orderkey, l_linenumber, 'quantity' AS measure,
+               round(l_quantity * 100)::BIGINT AS v_cents
+        FROM lineitem WHERE l_orderkey <= 100
+        UNION ALL
+        SELECT l_orderkey, l_linenumber, 'price',
+               round(l_extendedprice * 100)::BIGINT
+        FROM lineitem WHERE l_orderkey <= 100
+        UNION ALL
+        SELECT l_orderkey, l_linenumber, 'discount',
+               round(l_discount * 100)::BIGINT
+        FROM lineitem WHERE l_orderkey <= 100)
+      ORDER BY l_orderkey, l_linenumber, measure"""),
 
     // -- approximate/sketch aggregates (engine-specific sketch values) --
     //    Same error-bound-as-output discipline as q_hll_distinct: the
@@ -815,7 +1339,7 @@ object Relational extends QueryModule {
     //    exact p45 and p55 — the rank-error guarantee of
     //    percentile_approx at accuracy 1000 is n/1000, far inside that
     //    band), and the oracle pins the exact values + the literal 1s.
-    "q_approx_sketch" -> ((s, d) =>
+    Query("q_approx_sketch", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -830,7 +1354,15 @@ object Relational extends QueryModule {
             <= col("exact_parts"), 1L).otherwise(0L).as("cd_ok"),
           when(col("approx_p50") >= col("p45") &&
             col("approx_p50") <= col("p55"), 1L).otherwise(0L).as("p50_ok"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      SELECT l_returnflag,
+             count(DISTINCT l_partkey) AS exact_parts,
+             CAST(1 AS BIGINT) AS cd_ok,
+             CAST(1 AS BIGINT) AS p50_ok
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- own Greenwald-Khanna quantile sketch (the last sketch family
     //    riding a built-in, now home-grown like HLL/KMV/MG/Bloom):
@@ -838,7 +1370,7 @@ object Relational extends QueryModule {
     //    band — the error-bound-flag contract of q_hll_distinct. The
     //    summary is O((1/eps) log(eps n)) tuples per group through the
     //    standard partial/merge path: constant-size state at any n.
-    "q_gk_quantile" -> ((s, d) =>
+    Query("q_gk_quantile", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -850,7 +1382,17 @@ object Relational extends QueryModule {
         .select(col("l_returnflag"), col("n_rows"),
           when(col("gk_p50") >= col("p45") &&
             col("gk_p50") <= col("p55"), 1L).otherwise(0L).as("gk_ok"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      // the gk_ok flag is literal 1: Spark emits 1 only when its own GK
+      // sketch's median landed inside the exact p45..p55 band (eps=0.02
+      // against a 0.05 band), so the value compare IS the bound assertion
+      """
+      SELECT l_returnflag,
+             count(1)::BIGINT AS n_rows,
+             CAST(1 AS BIGINT) AS gk_ok
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- own Count-Min Sketch: point-frequency estimates from a d x w
     //    counter matrix (Cormode & Muthukrishnan 2005 — see
@@ -865,7 +1407,7 @@ object Relational extends QueryModule {
     //    one 8-KiB row through the standard partial/merge path — at
     //    100 TB the sketch build is one pass and the probe side is d
     //    codegen'd array lookups per key.
-    "q_cms_freq" -> ((s, d) => {
+    Query("q_cms_freq", (s, d) => {
       val W = 256; val D = 4
       val keyStr = col("l_partkey").cast("string")
       val cnts = li(s, d)
@@ -887,7 +1429,32 @@ object Relational extends QueryModule {
             col("h1"), col("h2"), W, D) >= col("exact_cnt"), 1L)
             .otherwise(0L).as("over_ok"))
         .orderBy(col("exact_cnt").desc, col("part_key"))
-    }),
+    },
+      // CMS mirrored bucket-for-bucket: exact per-key counts, the same
+      // (h1 + i*h2) mod w bucket arithmetic (md5 48-bit halves are
+      // non-negative, so DuckDB's % is Spark's pmod), per-(depth,bucket)
+      // sums = the sketch counters, min over depths = the estimate. The
+      // over_ok literal 1 is CMS's one-sided bound: the value compare IS
+      // the never-under-counts assertion.
+      """
+      WITH cnts AS (
+        SELECT l_partkey::VARCHAR AS part_key,
+               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h1,
+               ('0x' || substr(md5(l_partkey::VARCHAR), 13, 12))::BIGINT AS h2,
+               count(1)::BIGINT AS exact_cnt
+        FROM lineitem GROUP BY 1, 2, 3),
+      depths AS (SELECT * FROM (VALUES (0), (1), (2), (3)) t(i)),
+      buckets AS (
+        SELECT i, (h1 + i * h2) % 256 AS b, sum(exact_cnt)::BIGINT AS tot
+        FROM cnts, depths GROUP BY 1, 2),
+      top AS (SELECT * FROM cnts ORDER BY exact_cnt DESC, part_key LIMIT 20)
+      SELECT t.part_key, t.exact_cnt,
+             (SELECT min(bu.tot) FROM depths dp
+              JOIN buckets bu ON bu.i = dp.i
+                AND bu.b = (t.h1 + dp.i * t.h2) % 256) AS cms_est,
+             CAST(1 AS BIGINT) AS over_ok
+      FROM top t
+      ORDER BY t.exact_cnt DESC, t.part_key"""),
 
     // -- sampling (training-data pipelines). Hash-mod sampling on the
     //    row key instead of engine RNG: md5(key) per-mille under a
@@ -896,27 +1463,39 @@ object Relational extends QueryModule {
     //    re-partitioning — the property a reproducible training-data
     //    pipeline needs that RNG TABLESAMPLE cannot give — and still
     //    uniform per key. ---------------------------------------------------
-    "q_sample" -> ((s, d) =>
+    Query("q_sample", (s, d) =>
       li(s, d)
         .filter(sampleMille(col("l_orderkey"), col("l_linenumber")) < 100) // 10%
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_sampled"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      s"""
+      SELECT l_returnflag, count(1) AS n_sampled
+      FROM lineitem
+      WHERE $sampleMilleSql < 100
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // per-stratum rates: N at 20%, A/R at 5%
-    "q_sample_stratified" -> ((s, d) =>
+    Query("q_sample_stratified", (s, d) =>
       li(s, d)
         .filter(sampleMille(col("l_orderkey"), col("l_linenumber")) <
           when(col("l_returnflag") === "N", 200).otherwise(50))
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n_sampled"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      s"""
+      SELECT l_returnflag, count(1) AS n_sampled
+      FROM lineitem
+      WHERE $sampleMilleSql < CASE WHEN l_returnflag = 'N' THEN 200 ELSE 50 END
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- regression / correlation aggregates ------------------------------
     //    (built-in corr/covar/regr_*; the 3-decimal tie-mode-free
     //    rounding absorbs the last-ulp differences of each engine's
     //    co-moment summation order)
-    "q_regr_stats" -> ((s, d) =>
+    Query("q_regr_stats", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -925,22 +1504,45 @@ object Relational extends QueryModule {
           rnd(expr("regr_slope(l_extendedprice, l_quantity)"), 3).as("slope"),
           rnd(expr("regr_intercept(l_extendedprice, l_quantity)"), 3).as("icept"),
           expr("regr_count(l_extendedprice, l_quantity)").as("n"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      SELECT l_returnflag,
+             floor(corr(l_quantity, l_extendedprice) * 1000 + 0.5) / 1000
+               AS r_qty_price,
+             floor(covar_samp(l_quantity, l_discount) * 1000 + 0.5) / 1000
+               AS cov_qty_disc,
+             floor(regr_slope(l_extendedprice, l_quantity) * 1000 + 0.5) / 1000
+               AS slope,
+             floor(regr_intercept(l_extendedprice, l_quantity) * 1000 + 0.5) / 1000
+               AS icept,
+             regr_count(l_extendedprice, l_quantity) AS n
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- equi-width histogram via width_bucket: the one-pass value-
     //    distribution profile (integer cents domain, fixed [0, 120k)
     //    range, 12 buckets — fully deterministic bucket edges) ------------
-    "q_histogram" -> ((s, d) =>
+    Query("q_histogram", (s, d) =>
       Tables.orders(s, d)
         .select(expr(
           "width_bucket(CAST(round(o_totalprice * 100) AS BIGINT), 0, 12000000, 12)")
           .as("bucket"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n"))
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      // DuckDB has no width_bucket; the arithmetic is mirrored (values
+      // here are non-negative cents, buckets land in [1, 13])
+      """
+      SELECT CASE WHEN c >= 12000000 THEN 13
+                  ELSE 1 + (c * 12) // 12000000 END AS bucket,
+             count(1) AS n
+      FROM (SELECT round(o_totalprice * 100)::BIGINT AS c FROM orders)
+      GROUP BY bucket
+      ORDER BY bucket"""),
 
     // -- statistical aggregates + exact median ----------------------------
-    "q_stats_agg" -> ((s, d) =>
+    Query("q_stats_agg", (s, d) =>
       li(s, d)
         .groupBy("l_returnflag")
         .agg(
@@ -950,7 +1552,18 @@ object Relational extends QueryModule {
           rnd(stddev_samp(col("l_extendedprice")), 2).as("sd_price"),
           expr("percentile(l_quantity, 0.5)").as("p50_qty"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      """
+      SELECT l_returnflag,
+             min(l_extendedprice) AS min_price,
+             max(l_extendedprice) AS max_price,
+             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 / count(1) AS avg_price,
+             floor(stddev_samp(l_extendedprice) * 100.0 + 0.5) / 100.0 AS sd_price,
+             quantile_cont(l_quantity, 0.5) AS p50_qty,
+             count(1) AS n
+      FROM lineitem
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- exact order-statistics quartiles without percentile(): --------
     //    row_number-vs-count selection picks the middle element(s)
@@ -969,7 +1582,7 @@ object Relational extends QueryModule {
     //    The warehouse pattern for dimension tables under late-arriving
     //    rewrites. Two key-partitioned windows, no self-join; version
     //    numbers deterministic via the (date, orderkey) total order ----
-    "q_scd2" -> ((s, d) => {
+    Query("q_scd2", (s, d) => {
       val w = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
       ord(s, d)
@@ -982,9 +1595,24 @@ object Relational extends QueryModule {
         .select(col("o_custkey"), col("version"), col("o_orderpriority"),
           col("o_orderdate").as("valid_from"), col("valid_to"))
         .orderBy("o_custkey", "version")
-    }),
+    },
+      """
+      WITH s AS (
+        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority,
+               lag(o_orderpriority) OVER (PARTITION BY o_custkey
+                 ORDER BY o_orderdate, o_orderkey) AS prev
+        FROM orders),
+      st AS (SELECT * FROM s WHERE prev IS NULL OR prev <> o_orderpriority)
+      SELECT o_custkey,
+             CAST(row_number() OVER w AS BIGINT) AS version,
+             o_orderpriority,
+             o_orderdate AS valid_from,
+             lead(o_orderdate) OVER w AS valid_to
+      FROM st
+      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+      ORDER BY o_custkey, version"""),
 
-    "q_median_exact" -> ((s, d) => {
+    Query("q_median_exact", (s, d) => {
       // Histogram selection, not a row sort: the (group, value) COUNT
       // aggregate is map-side combined, so only distinct-value counts
       // shuffle and the rank walk runs over the tiny histogram (|domain|
@@ -1012,10 +1640,27 @@ object Relational extends QueryModule {
             .as("median_qty"),
           sel("(3 * n + 3) DIV 4").as("p75_qty"))
         .orderBy("l_returnflag")
-    }),
+    },
+      """
+      WITH r AS (
+        SELECT l_returnflag, l_quantity::BIGINT AS q,
+               row_number() OVER (PARTITION BY l_returnflag
+                                  ORDER BY l_quantity) AS rn,
+               count(1) OVER (PARTITION BY l_returnflag) AS n
+        FROM lineitem)
+      SELECT l_returnflag,
+             max(n) AS n_rows,
+             min(CASE WHEN rn = (n + 3) // 4 THEN q END) AS p25_qty,
+             (min(CASE WHEN rn = (n + 1) // 2 THEN q END)
+              + min(CASE WHEN rn = (n + 2) // 2 THEN q END)) / 2.0
+               AS median_qty,
+             min(CASE WHEN rn = (3 * n + 3) // 4 THEN q END) AS p75_qty
+      FROM r
+      GROUP BY l_returnflag
+      ORDER BY l_returnflag"""),
 
     // -- frequent-itemset pairs (market-basket / a-priori first pass) -----
-    "q_copurchase_pairs" -> ((s, d) => {
+    Query("q_copurchase_pairs", (s, d) => {
       // Co-purchase mining over orders-as-baskets: parts that appear
       // together in >= 2 orders, scored by support and lift. The pair
       // fan-out of a basket of k items is O(k^2), so baskets larger than
@@ -1057,7 +1702,30 @@ object Relational extends QueryModule {
         .orderBy(col("support").desc, col("lift_milli").desc,
           col("pa"), col("pb"))
         .limit(200)
-    }),
+    },
+      s"""
+      WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+           sized AS (SELECT l_orderkey FROM items
+                     GROUP BY l_orderkey HAVING count(1) <= $BASKET_CAP),
+           it AS (SELECT i.l_orderkey, i.l_partkey
+                  FROM items i JOIN sized s ON s.l_orderkey = i.l_orderkey),
+           nb AS (SELECT count(DISTINCT l_orderkey) AS n_baskets FROM it),
+           marg AS (SELECT l_partkey, count(1) AS cm FROM it GROUP BY 1),
+           pr AS (SELECT x.l_partkey AS pa, y.l_partkey AS pb,
+                         count(1) AS support
+                  FROM it x JOIN it y
+                    ON x.l_orderkey = y.l_orderkey
+                   AND x.l_partkey < y.l_partkey
+                  GROUP BY 1, 2 HAVING count(1) >= 2)
+      SELECT pr.pa, pr.pb, pr.support,
+             (1000 * nb.n_baskets * pr.support) // (ma.cm * mb.cm)
+               AS lift_milli
+      FROM pr
+      JOIN marg ma ON ma.l_partkey = pr.pa
+      JOIN marg mb ON mb.l_partkey = pr.pb
+      CROSS JOIN nb
+      ORDER BY support DESC, lift_milli DESC, pa, pb
+      LIMIT 200"""),
 
     // -- pareto frontier (skyline): parts not dominated on (cheapest
     //    observed price ASC, total shipped quantity DESC). Dominance:
@@ -1091,7 +1759,7 @@ object Relational extends QueryModule {
     //    are subtotals vs grand totals) — bitmask semantics identical
     //    in Spark and DuckDB (last grouping column = LSB), so the gid
     //    itself is part of the value compare --------------------------
-    "q_grouping_id" -> ((s, d) =>
+    Query("q_grouping_id", (s, d) =>
       li(s, d)
         .cube("l_returnflag", "l_linestatus")
         .agg(grouping_id().cast("long").as("gid"),
@@ -1101,12 +1769,40 @@ object Relational extends QueryModule {
         .select(col("l_returnflag"), col("l_linestatus"), col("gid"),
           col("g_rf"), col("n"), col("sum_qty"))
         .orderBy(col("gid"), col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)),
+          col("l_linestatus").asc_nulls_first),
+      // GROUPING(a, b) bitmask: last column = LSB on both engines
+      """
+      SELECT l_returnflag, l_linestatus,
+             GROUPING(l_returnflag, l_linestatus)::BIGINT AS gid,
+             GROUPING(l_returnflag)::BIGINT AS g_rf,
+             count(1) AS n,
+             sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty
+      FROM lineitem
+      GROUP BY CUBE (l_returnflag, l_linestatus)
+      ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST"""),
 
-    "q_skyline" -> ((s, d) =>
+    Query("q_skyline", (s, d) =>
       gridSkyline(li(s, d).groupBy("l_partkey")
         .agg(min(cents(col("l_extendedprice"))).as("price_c"),
-          sum("l_quantity").cast("long").as("qty"))))
+          sum("l_quantity").cast("long").as("qty"))),
+      """
+      WITH per AS (
+        SELECT l_partkey,
+               min(round(l_extendedprice * 100)::BIGINT) AS price_c,
+               sum(l_quantity)::BIGINT AS qty
+        FROM lineitem
+        GROUP BY l_partkey),
+      w AS (
+        SELECT l_partkey, price_c, qty,
+               max(qty) OVER (ORDER BY price_c RANGE BETWEEN
+                 UNBOUNDED PRECEDING AND 1 PRECEDING) AS best_cheaper,
+               max(qty) OVER (PARTITION BY price_c) AS best_same
+        FROM per)
+      SELECT l_partkey, price_c, qty
+      FROM w
+      WHERE (best_cheaper IS NULL OR best_cheaper < qty)
+        AND qty = best_same
+      ORDER BY price_c, l_partkey""")
   )
 
   /** Grid cells for q_skyline's distributed frontier — a CONSTANT, so
@@ -1157,765 +1853,4 @@ object Relational extends QueryModule {
   /** DuckDB mirror of [[sampleMille]] over the lineitem row key. */
   private val sampleMilleSql =
     "('0x' || substr(md5(l_orderkey || '|' || l_linenumber), 1, 12))::BIGINT % 1000"
-
-  override def oracles: Map[String, String] = Map(
-    // decimals built from integer casts; per-row scale literal applied
-    // BEFORE the sum (see the query's scaladoc); final scale pinned
-    "q_decimal_exact" -> """
-      SELECT l_returnflag, l_linestatus,
-             CAST(sum(CAST(round(l_extendedprice * 100)::BIGINT
-                           AS DECIMAL(16, 0))
-                      * CAST(100 - round(l_discount * 100)::BIGINT
-                             AS DECIMAL(3, 0))
-                      * CAST(0.0001 AS DECIMAL(5, 4)))
-               AS DECIMAL(38, 4)) AS rev_usd,
-             CAST(sum(CAST(round(l_extendedprice * 100)::BIGINT
-                           AS DECIMAL(14, 0))
-                      * CAST(100 - round(l_discount * 100)::BIGINT
-                             AS DECIMAL(3, 0))
-                      * CAST(100 + round(l_tax * 100)::BIGINT
-                             AS DECIMAL(3, 0))
-                      * CAST(0.000001 AS DECIMAL(7, 6)))
-               AS DECIMAL(38, 6)) AS charge_usd,
-             count(1) AS n
-      FROM lineitem
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-
-    // GROUPING(a, b) bitmask: last column = LSB on both engines
-    "q_grouping_id" -> """
-      SELECT l_returnflag, l_linestatus,
-             GROUPING(l_returnflag, l_linestatus)::BIGINT AS gid,
-             GROUPING(l_returnflag)::BIGINT AS g_rf,
-             count(1) AS n,
-             sum(round(l_quantity)::BIGINT)::BIGINT AS sum_qty
-      FROM lineitem
-      GROUP BY CUBE (l_returnflag, l_linestatus)
-      ORDER BY gid, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""",
-
-    // DuckDB's ^ is power, so XOR spells xor() here
-    "q_bitwise_agg" -> """
-      WITH b AS (SELECT l_returnflag,
-                        xor(l_partkey & 255,
-                            ((l_suppkey & 15) << 2))::BIGINT AS mx
-                 FROM lineitem)
-      SELECT l_returnflag,
-             bit_and(mx)::BIGINT AS all_and,
-             bit_or(mx)::BIGINT AS any_or,
-             bit_xor(mx)::BIGINT AS parity_xor,
-             bit_count(bit_or(mx))::BIGINT AS or_popcount,
-             count(1) AS n
-      FROM b
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_window_ignore_nulls" -> """
-      SELECT l_orderkey, l_linenumber, rk_key, v,
-             last_value(v IGNORE NULLS) OVER (PARTITION BY l_orderkey
-               ORDER BY l_linenumber, rk_key
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carry,
-             lead(v IGNORE NULLS) OVER (PARTITION BY l_orderkey
-               ORDER BY l_linenumber, rk_key) AS next_v
-      FROM (SELECT l_orderkey, l_linenumber,
-                   md5(concat_ws('|', l_partkey, l_suppkey,
-                     round(l_extendedprice * 100)::BIGINT,
-                     l_returnflag)) AS rk_key,
-                   CASE WHEN l_returnflag = 'R'
-                        THEN round(l_extendedprice * 100)::BIGINT END AS v
-            FROM lineitem)
-      ORDER BY l_orderkey, l_linenumber, rk_key""",
-
-    "q_regr_stats" -> """
-      SELECT l_returnflag,
-             floor(corr(l_quantity, l_extendedprice) * 1000 + 0.5) / 1000
-               AS r_qty_price,
-             floor(covar_samp(l_quantity, l_discount) * 1000 + 0.5) / 1000
-               AS cov_qty_disc,
-             floor(regr_slope(l_extendedprice, l_quantity) * 1000 + 0.5) / 1000
-               AS slope,
-             floor(regr_intercept(l_extendedprice, l_quantity) * 1000 + 0.5) / 1000
-               AS icept,
-             regr_count(l_extendedprice, l_quantity) AS n
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_sample" -> s"""
-      SELECT l_returnflag, count(1) AS n_sampled
-      FROM lineitem
-      WHERE $sampleMilleSql < 100
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_sample_stratified" -> s"""
-      SELECT l_returnflag, count(1) AS n_sampled
-      FROM lineitem
-      WHERE $sampleMilleSql < CASE WHEN l_returnflag = 'N' THEN 200 ELSE 50 END
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q1_agg" -> """
-      SELECT l_returnflag, l_linestatus,
-             sum(l_quantity) AS sum_qty,
-             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS sum_base_price,
-             sum(round(l_extendedprice * 100)::BIGINT
-                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS sum_disc_price,
-             avg(l_quantity) AS avg_qty,
-             sum(round(l_discount * 100)::BIGINT) / 100.0 / count(1) AS avg_disc,
-             count(1) AS count_order
-      FROM lineitem
-      WHERE l_shipdate <= TIMESTAMP '2001-09-01'
-      GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-
-    "q2_filter" -> """
-      SELECT l_orderkey, l_linenumber, l_quantity,
-             l_extendedprice * (1 - l_discount) AS net_price
-      FROM lineitem
-      WHERE l_quantity > 45 AND l_discount >= 0.05
-        AND l_shipdate < TIMESTAMP '1997-01-01'
-      ORDER BY l_orderkey, l_linenumber""",
-
-    "q3_topk_join" -> """
-      SELECT l_orderkey,
-             sum(round(l_extendedprice * 100)::BIGINT
-                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS revenue
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      WHERE c_mktsegment = 'BUILDING'
-        AND o_orderdate < TIMESTAMP '1999-01-01'
-        AND l_shipdate > TIMESTAMP '1998-01-01'
-      GROUP BY l_orderkey
-      ORDER BY revenue DESC, l_orderkey
-      LIMIT 10""",
-
-    "q5_multijoin" -> """
-      SELECT n_name,
-             sum(round(l_extendedprice * 100)::BIGINT
-                 * (100 - round(l_discount * 100)::BIGINT)) / 10000.0 AS revenue
-      FROM lineitem
-      JOIN orders ON l_orderkey = o_orderkey
-      JOIN customer ON o_custkey = c_custkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      WHERE r_name = 'ASIA'
-        AND o_orderdate >= TIMESTAMP '1996-01-01'
-        AND o_orderdate < TIMESTAMP '1999-01-01'
-      GROUP BY n_name
-      ORDER BY n_name""",
-
-    "q_salted_join" -> """
-      SELECT s_nationkey, count(1) AS n_items,
-             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 AS total_price
-      FROM lineitem
-      JOIN supplier ON l_suppkey = s_suppkey
-      GROUP BY s_nationkey
-      ORDER BY s_nationkey""",
-
-    "q_semi_join" -> """
-      SELECT c_custkey, c_mktsegment
-      FROM customer
-      WHERE EXISTS (
-        SELECT 1 FROM orders
-        WHERE o_custkey = c_custkey
-          AND o_orderdate >= TIMESTAMP '1996-01-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01')
-      ORDER BY c_custkey""",
-
-    "q_anti_join" -> """
-      SELECT c_custkey, c_acctbal
-      FROM customer
-      WHERE NOT EXISTS (
-        SELECT 1 FROM orders
-        WHERE o_custkey = c_custkey AND o_totalprice > 400000)
-      ORDER BY c_custkey""",
-
-    "q_outer_join" -> """
-      SELECT c_custkey,
-             count(o_orderkey) AS n_orders,
-             coalesce(sum(round(o_totalprice * 100)::BIGINT), 0) / 100.0 AS total_spend
-      FROM customer
-      LEFT JOIN orders ON c_custkey = o_custkey
-      GROUP BY c_custkey
-      ORDER BY c_custkey""",
-
-    "q_window_rank" -> """
-      SELECT o_custkey, rk, o_orderkey, o_totalprice
-      FROM (
-        SELECT o_custkey, o_orderkey, o_totalprice,
-               row_number() OVER (PARTITION BY o_custkey
-                                  ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        FROM orders)
-      WHERE rk <= 3
-      ORDER BY o_custkey, rk""",
-
-    "q_window_running" -> """
-      SELECT o_custkey, o_orderkey,
-             sum(round(o_totalprice * 100)::BIGINT) OVER (
-               PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) / 100.0 AS running_spend
-      FROM orders
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_window_lag" -> """
-      SELECT o_custkey, o_orderkey,
-             date_diff('day',
-               lag(o_orderdate, 1) OVER (PARTITION BY o_custkey
-                                         ORDER BY o_orderdate, o_orderkey),
-               o_orderdate) AS days_since_prev
-      FROM orders
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_window_nav" -> """
-      SELECT o_custkey, o_orderkey,
-             first_value(round(o_totalprice * 100)::BIGINT) OVER w AS first_price_c,
-             last_value(round(o_totalprice * 100)::BIGINT) OVER w AS last_price_c,
-             nth_value(round(o_totalprice * 100)::BIGINT, 2) OVER w AS second_price_c
-      FROM orders
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_window_dist" -> """
-      SELECT o_orderkey, o_orderstatus,
-             (ntile(4) OVER w)::BIGINT AS quartile,
-             percent_rank() OVER w AS pr,
-             cume_dist() OVER w AS cd
-      FROM orders
-      WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-      ORDER BY o_orderkey""",
-
-    "q_rollup" -> """
-      SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-             coalesce(l_linestatus, 'ALL') AS linestatus,
-             count(1) AS n, sum(l_quantity) AS qty
-      FROM lineitem
-      GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      ORDER BY returnflag, linestatus""",
-
-    "q_cube" -> """
-      SELECT coalesce(o_orderstatus, 'ALL') AS status,
-             coalesce(o_orderpriority, 'ALL') AS priority,
-             count(1) AS n,
-             sum(round(o_totalprice * 100)::BIGINT) / 100.0 / count(1) AS avg_price
-      FROM orders
-      GROUP BY CUBE (o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""",
-
-    "q_grouping_sets" -> """
-      SELECT coalesce(o_orderstatus, 'ALL') AS status,
-             coalesce(o_orderpriority, 'ALL') AS priority,
-             count(1) AS n
-      FROM orders
-      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-      ORDER BY status, priority""",
-
-    "q_distinct_agg" -> """
-      SELECT l_returnflag,
-             count(DISTINCT l_suppkey) AS n_supp,
-             count(DISTINCT l_partkey) AS n_part,
-             count(1) AS n_rows
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_topk" -> """
-      SELECT o_orderkey, o_totalprice
-      FROM orders
-      ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 10""",
-
-    "q_setops" -> """
-      WITH build AS (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING'),
-           rich AS (SELECT c_custkey FROM customer WHERE c_acctbal > 5000),
-           u AS (SELECT c_custkey, 'union' AS op FROM (SELECT c_custkey FROM build UNION SELECT c_custkey FROM rich)),
-           i AS (SELECT c_custkey, 'intersect' AS op FROM (SELECT c_custkey FROM build INTERSECT SELECT c_custkey FROM rich)),
-           e AS (SELECT c_custkey, 'except' AS op FROM (SELECT c_custkey FROM build EXCEPT SELECT c_custkey FROM rich))
-      SELECT op, count(1) AS n, sum(c_custkey)::BIGINT AS key_sum
-      FROM (SELECT * FROM u UNION ALL SELECT * FROM i UNION ALL SELECT * FROM e)
-      GROUP BY op
-      ORDER BY op""",
-
-    "q_scalar_subquery" -> """
-      WITH stats AS (
-        SELECT sum(round(c_acctbal * 100)::BIGINT)::BIGINT AS sum_cents,
-               count(1) AS n
-        FROM customer)
-      SELECT c_custkey, c_acctbal
-      FROM customer CROSS JOIN stats
-      WHERE round(c_acctbal * 100)::BIGINT * n > sum_cents
-      ORDER BY c_custkey""",
-
-    "q_correlated_scalar" -> """
-      SELECT c_custkey,
-             (SELECT count(1) FROM orders WHERE o_custkey = c_custkey) AS n_orders,
-             (SELECT coalesce(max(o_orderkey), -1) FROM orders
-              WHERE o_custkey = c_custkey) AS last_order
-      FROM customer
-      ORDER BY c_custkey""",
-
-    "q_window_range" -> """
-      SELECT o_custkey, o_orderkey,
-             date_diff('day', TIMESTAMP '1995-01-01', o_orderdate) AS day_no,
-             count(1) OVER (PARTITION BY o_custkey ORDER BY
-               date_diff('day', TIMESTAMP '1995-01-01', o_orderdate)
-               RANGE BETWEEN 90 PRECEDING AND CURRENT ROW) AS n_90d
-      FROM orders
-      ORDER BY o_custkey, o_orderkey""",
-
-    "q_setops_all" -> """
-      WITH a AS (SELECT o_custkey FROM orders WHERE o_totalprice > 150000),
-           b AS (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-           ea AS (SELECT o_custkey, count(1) AS n, 'except_all' AS op
-                  FROM (SELECT o_custkey FROM a EXCEPT ALL SELECT o_custkey FROM b)
-                  GROUP BY o_custkey),
-           ia AS (SELECT o_custkey, count(1) AS n, 'intersect_all' AS op
-                  FROM (SELECT o_custkey FROM a INTERSECT ALL SELECT o_custkey FROM b)
-                  GROUP BY o_custkey)
-      SELECT * FROM (SELECT * FROM ea UNION ALL SELECT * FROM ia)
-      ORDER BY op, o_custkey""",
-
-    "q_minmax_by" -> """
-      WITH scored AS (
-        SELECT o_custkey, o_orderkey,
-               round(o_totalprice * 100)::BIGINT * 100000000
-                 + (100000000 - o_orderkey) AS score
-        FROM orders)
-      SELECT o_custkey,
-             arg_max(o_orderkey, score) AS best_order,
-             arg_min(o_orderkey, score) AS worst_order,
-             count(1) AS n
-      FROM scored
-      GROUP BY o_custkey
-      ORDER BY o_custkey""",
-
-    "q_string_funcs" -> """
-      SELECT p_partkey,
-             upper(p_brand) AS brand_upper,
-             lower(p_type) AS type_lower,
-             substring(p_name, 1, 8) AS name_prefix,
-             length(p_name) AS name_len,
-             concat_ws('|', p_brand, p_type) AS brand_type,
-             regexp_replace(p_name, '[aeiou]', '_', 'g') AS name_devowel,
-             trim(lpad(p_brand, 12, ' ')) AS brand_trim,
-             (CASE WHEN p_name LIKE '%red%' THEN 1 ELSE 0 END)::BIGINT AS has_red
-      FROM part
-      ORDER BY p_partkey""",
-
-    "q_date_funcs" -> """
-      SELECT o_orderkey,
-             EXTRACT(year FROM o_orderdate) AS yr,
-             EXTRACT(month FROM o_orderdate) AS mo,
-             EXTRACT(day FROM o_orderdate) AS dom,
-             strftime(o_orderdate, '%Y-%m-%d') AS ymd,
-             strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS month_start
-      FROM orders
-      ORDER BY o_orderkey""",
-
-    "q_date_agg" -> """
-      SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS ym,
-             count(1) AS n,
-             sum(round(o_totalprice * 100)::BIGINT) / 100.0 AS total
-      FROM orders
-      GROUP BY 1
-      ORDER BY ym""",
-
-    // price_ln via the staged DetMath mirror (not DuckDB's libm ln) so
-    // both engines round the identical double — see DetMath scaladoc
-    "q_math_funcs" -> s"""
-      WITH m0 AS (SELECT p_partkey, p_size, p_retailprice,
-                         p_retailprice::DOUBLE AS x FROM part),
-           m1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM m0),
-           m2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM m1),
-           m3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM m2),
-           m4 AS (SELECT *, (z * z) AS z2 FROM m3)
-      SELECT p_partkey,
-             abs(p_size - 25)::BIGINT AS size_dev,
-             ceil(p_retailprice / 100)::BIGINT AS price_bucket,
-             floor(p_retailprice / 100)::BIGINT AS price_floor,
-             floor(sqrt(p_retailprice) * 10000.0 + 0.5) / 10000.0 AS price_sqrt,
-             pow(p_size, 2) AS size_sq,
-             floor(${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
-                   * 10000.0 + 0.5) / 10000.0 AS price_ln,
-             p_partkey % 7 AS key_mod7
-      FROM m4
-      ORDER BY p_partkey""",
-
-    "q_json_funcs" -> """
-      SELECT event_id, json_extract_string(props, '$.k')::BIGINT AS k
-      FROM events
-      ORDER BY event_id""",
-
-    "q_variant_json" -> """
-      SELECT event_id,
-             json_extract_string(props, '$.k')::BIGINT AS k,
-             NULL::BIGINT AS missing
-      FROM events
-      ORDER BY event_id""",
-
-    "q_url_funcs" -> """
-      SELECT c_custkey,
-             'ex.com' AS host,
-             '/' || lower(c_mktsegment) || '/p' AS path,
-             c_custkey::VARCHAR AS qid
-      FROM customer
-      ORDER BY c_custkey""",
-
-    "q_collation" -> """
-      WITH s AS (SELECT CASE WHEN c_custkey % 2 = 0
-                             THEN upper(c_mktsegment)
-                             ELSE lower(c_mktsegment) END AS seg
-                 FROM customer)
-      SELECT count(DISTINCT seg)::BIGINT AS n_binary,
-             count(DISTINCT lower(seg))::BIGINT AS n_ci
-      FROM s""",
-
-    "q_json_agg" -> """
-      SELECT event_type,
-             sum(json_extract_string(props, '$.k')::BIGINT) / count(1) AS avg_k,
-             max(json_extract_string(props, '$.k')::BIGINT) AS max_k,
-             count(1) AS n
-      FROM events
-      GROUP BY event_type
-      ORDER BY event_type""",
-
-    "q_array_funcs" -> """
-      SELECT vec_id,
-             len(embedding) AS dim,
-             embedding[1]::DOUBLE AS first_val,
-             floor(list_aggregate(list_transform(embedding, x -> x::DOUBLE), 'sum')
-                   * 1000.0 + 0.5) / 1000.0 AS vec_sum,
-             floor(list_aggregate(list_transform(embedding, x -> x::DOUBLE * x::DOUBLE), 'sum')
-                   * 1000.0 + 0.5) / 1000.0 AS sq_norm
-      FROM embeddings
-      ORDER BY vec_id""",
-
-    "q_topk_per_key" -> """
-      SELECT o_custkey, o_orderkey, o_totalprice
-      FROM (
-        SELECT o_custkey, o_orderkey, o_totalprice,
-               row_number() OVER (PARTITION BY o_custkey
-                                  ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        FROM orders)
-      WHERE rk <= 3
-      ORDER BY o_custkey, o_totalprice DESC, o_orderkey""",
-
-    "q_kmv_distinct" -> """
-      WITH h AS (
-        SELECT DISTINCT l_returnflag,
-               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h
-        FROM lineitem),
-      ranked AS (
-        SELECT l_returnflag, h,
-               row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn,
-               count(1) OVER (PARTITION BY l_returnflag) AS n
-        FROM h)
-      SELECT r.l_returnflag,
-             CASE WHEN r.n < 16 THEN r.n::DOUBLE
-                  ELSE 15.0 * 281474976710656.0 / kth.h::DOUBLE END AS kmv_parts,
-             (SELECT count(DISTINCT l_partkey) FROM lineitem li
-              WHERE li.l_returnflag = r.l_returnflag) AS exact_parts
-      FROM (SELECT DISTINCT l_returnflag, n FROM ranked) r
-      LEFT JOIN (SELECT l_returnflag, h FROM ranked WHERE rn = 16) kth
-        ON r.l_returnflag = kth.l_returnflag
-      ORDER BY r.l_returnflag""",
-
-    // KMV set-operation algebra mirrored rank-for-rank: per-side
-    // synopses as rn<=k ranked distinct hashes, union synopsis as the
-    // k smallest of their union, estimates as the same single-division
-    // doubles Spark computes (constant 15*2^48 folds exactly in both
-    // engines; every hash < 2^48 is double-exact)
-    "q_kmv_setops" -> """
-      WITH ar AS (
-        SELECT DISTINCT l_returnflag AS f,
-               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h
-        FROM lineitem WHERE l_returnflag IN ('A', 'R')),
-      ranked AS (
-        SELECT f, h, row_number() OVER (PARTITION BY f ORDER BY h) AS rn
-        FROM ar),
-      ska AS (SELECT h FROM ranked WHERE f = 'A' AND rn <= 16),
-      skr AS (SELECT h FROM ranked WHERE f = 'R' AND rn <= 16),
-      u AS (SELECT DISTINCT h
-            FROM (SELECT h FROM ska UNION ALL SELECT h FROM skr)),
-      m AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM u),
-      mk AS (SELECT h FROM m WHERE rn <= 16),
-      stats AS (SELECT
-          (SELECT count(1) FROM u) AS usz,
-          (SELECT max(h) FROM mk) AS hk,
-          (SELECT count(1) FROM mk
-           WHERE h IN (SELECT h FROM ska) AND h IN (SELECT h FROM skr))
-            AS icnt),
-      ex AS (SELECT count(1)::BIGINT AS union_exact,
-                    sum(CASE WHEN nf = 2 THEN 1 ELSE 0 END)::BIGINT
-                      AS inter_exact
-             FROM (SELECT l_partkey, count(DISTINCT l_returnflag) AS nf
-                   FROM lineitem WHERE l_returnflag IN ('A', 'R')
-                   GROUP BY l_partkey))
-      SELECT CASE WHEN usz < 16 THEN usz::DOUBLE
-                  ELSE (15.0 * 281474976710656.0) / hk::DOUBLE
-             END AS union_est,
-             CASE WHEN usz < 16 THEN icnt::DOUBLE
-                  ELSE icnt::DOUBLE *
-                       ((15.0 * 281474976710656.0) / hk::DOUBLE) / 16.0
-             END AS inter_est,
-             union_exact, inter_exact
-      FROM stats, ex""",
-
-    // the ok flags are literal 1 here: Spark emits 1 only when its
-    // sketch landed inside the documented error bound of its own exact
-    // aggregate, so the value compare IS the bound assertion
-    "q_hll_distinct" -> """
-      SELECT l_returnflag,
-             count(DISTINCT l_partkey) AS exact_parts,
-             CAST(1 AS BIGINT) AS hll_ok
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_approx_sketch" -> """
-      SELECT l_returnflag,
-             count(DISTINCT l_partkey) AS exact_parts,
-             CAST(1 AS BIGINT) AS cd_ok,
-             CAST(1 AS BIGINT) AS p50_ok
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    // the gk_ok flag is literal 1: Spark emits 1 only when its own GK
-    // sketch's median landed inside the exact p45..p55 band (eps=0.02
-    // against a 0.05 band), so the value compare IS the bound assertion
-    "q_gk_quantile" -> """
-      SELECT l_returnflag,
-             count(1)::BIGINT AS n_rows,
-             CAST(1 AS BIGINT) AS gk_ok
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    // CMS mirrored bucket-for-bucket: exact per-key counts, the same
-    // (h1 + i*h2) mod w bucket arithmetic (md5 48-bit halves are
-    // non-negative, so DuckDB's % is Spark's pmod), per-(depth,bucket)
-    // sums = the sketch counters, min over depths = the estimate. The
-    // over_ok literal 1 is CMS's one-sided bound: the value compare IS
-    // the never-under-counts assertion.
-    "q_cms_freq" -> """
-      WITH cnts AS (
-        SELECT l_partkey::VARCHAR AS part_key,
-               ('0x' || substr(md5(l_partkey::VARCHAR), 1, 12))::BIGINT AS h1,
-               ('0x' || substr(md5(l_partkey::VARCHAR), 13, 12))::BIGINT AS h2,
-               count(1)::BIGINT AS exact_cnt
-        FROM lineitem GROUP BY 1, 2, 3),
-      depths AS (SELECT * FROM (VALUES (0), (1), (2), (3)) t(i)),
-      buckets AS (
-        SELECT i, (h1 + i * h2) % 256 AS b, sum(exact_cnt)::BIGINT AS tot
-        FROM cnts, depths GROUP BY 1, 2),
-      top AS (SELECT * FROM cnts ORDER BY exact_cnt DESC, part_key LIMIT 20)
-      SELECT t.part_key, t.exact_cnt,
-             (SELECT min(bu.tot) FROM depths dp
-              JOIN buckets bu ON bu.i = dp.i
-                AND bu.b = (t.h1 + dp.i * t.h2) % 256) AS cms_est,
-             CAST(1 AS BIGINT) AS over_ok
-      FROM top t
-      ORDER BY t.exact_cnt DESC, t.part_key""",
-
-    "q_scalar_misc" -> """
-      SELECT l_orderkey, l_linenumber,
-             greatest(round(l_extendedprice * 100)::BIGINT,
-                      round(l_quantity * 100)::BIGINT * 100) AS hi_c,
-             least(round(l_discount * 100)::BIGINT,
-                   round(l_tax * 100)::BIGINT) AS lo_c,
-             regexp_extract(l_shipdate::VARCHAR, '^(\d{4})-(\d{2})', 1) AS ship_year,
-             regexp_extract(l_shipdate::VARCHAR, '^(\d{4})-(\d{2})', 2) AS ship_month
-      FROM lineitem
-      WHERE l_orderkey <= 100
-      ORDER BY l_orderkey, l_linenumber""",
-
-    "q_encode_funcs" -> """
-      SELECT c_custkey,
-             base64(c_name::BLOB) AS name_b64,
-             hex(c_name::BLOB) AS name_hex,
-             c_name AS name_roundtrip
-      FROM customer
-      WHERE c_custkey <= 100
-      ORDER BY c_custkey""",
-
-    // serde roundtrip identity: a to_xml/from_xml or to_csv/from_csv
-    // pass that drops precision, mangles encoding or reorders fields
-    // diverges from the raw columns and breaks the hash
-    "q_serde_funcs" -> """
-      SELECT c_custkey,
-             c_name AS xml_name,
-             c_nationkey AS xml_nation,
-             c_name AS csv_name,
-             c_nationkey AS csv_nation
-      FROM customer
-      WHERE c_custkey <= 100
-      ORDER BY c_custkey""",
-
-    "q_null_order" -> """
-      WITH spend AS (
-        SELECT o_custkey, sum(round(o_totalprice * 100)::BIGINT)::BIGINT AS spend_c
-        FROM orders GROUP BY o_custkey)
-      SELECT c_custkey, spend_c
-      FROM customer LEFT JOIN spend ON c_custkey = o_custkey
-      ORDER BY spend_c DESC NULLS LAST, c_custkey""",
-
-    "q_date_funcs2" -> """
-      SELECT o_orderkey, o_orderdate::DATE AS od,
-             quarter(o_orderdate::DATE)::BIGINT AS qtr,
-             isodow(o_orderdate::DATE)::BIGINT AS isodow,
-             weekofyear(o_orderdate::DATE)::BIGINT AS iso_week,
-             (o_orderdate::DATE + INTERVAL 3 MONTH)::DATE AS plus_3m,
-             last_day(o_orderdate::DATE) AS month_end
-      FROM orders
-      WHERE o_orderkey <= 500
-      ORDER BY o_orderkey""",
-
-    "q_misc_aggs" -> """
-      SELECT l_returnflag,
-             count(CASE WHEN l_quantity > 25 THEN 1 END)::BIGINT AS n_bulk,
-             bool_and(l_quantity > 0) AS all_positive,
-             bool_or(l_discount > 0.09) AS any_deep_discount,
-             bit_and(l_partkey)::BIGINT AS pk_and,
-             bit_or(l_partkey)::BIGINT AS pk_or,
-             bit_xor(l_partkey)::BIGINT AS pk_xor
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_try_funcs" -> """
-      SELECT l_orderkey, l_linenumber,
-             CAST(NULL AS DOUBLE) AS div0,
-             round(l_extendedprice * 100) / 7 AS div7,
-             TRY_CAST(l_returnflag AS INTEGER) AS bad_int,
-             round(l_quantity)::BIGINT AS ok_int
-      FROM lineitem
-      WHERE l_orderkey <= 200
-      ORDER BY l_orderkey, l_linenumber""",
-
-    "q_unpivot" -> """
-      SELECT l_orderkey, l_linenumber, measure, v_cents
-      FROM (
-        SELECT l_orderkey, l_linenumber, 'quantity' AS measure,
-               round(l_quantity * 100)::BIGINT AS v_cents
-        FROM lineitem WHERE l_orderkey <= 100
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'price',
-               round(l_extendedprice * 100)::BIGINT
-        FROM lineitem WHERE l_orderkey <= 100
-        UNION ALL
-        SELECT l_orderkey, l_linenumber, 'discount',
-               round(l_discount * 100)::BIGINT
-        FROM lineitem WHERE l_orderkey <= 100)
-      ORDER BY l_orderkey, l_linenumber, measure""",
-
-    "q_udaf_wavg" -> """
-      SELECT l_returnflag,
-             (sum(round(l_extendedprice * 100)::BIGINT * round(l_quantity)::BIGINT)::DOUBLE
-              / sum(round(l_quantity)::BIGINT)::DOUBLE) / 100.0 AS wavg_price
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    // DuckDB has no width_bucket; the arithmetic is mirrored (values
-    // here are non-negative cents, buckets land in [1, 13])
-    "q_histogram" -> """
-      SELECT CASE WHEN c >= 12000000 THEN 13
-                  ELSE 1 + (c * 12) // 12000000 END AS bucket,
-             count(1) AS n
-      FROM (SELECT round(o_totalprice * 100)::BIGINT AS c FROM orders)
-      GROUP BY bucket
-      ORDER BY bucket""",
-
-    "q_stats_agg" -> """
-      SELECT l_returnflag,
-             min(l_extendedprice) AS min_price,
-             max(l_extendedprice) AS max_price,
-             sum(round(l_extendedprice * 100)::BIGINT) / 100.0 / count(1) AS avg_price,
-             floor(stddev_samp(l_extendedprice) * 100.0 + 0.5) / 100.0 AS sd_price,
-             quantile_cont(l_quantity, 0.5) AS p50_qty,
-             count(1) AS n
-      FROM lineitem
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_scd2" -> """
-      WITH s AS (
-        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority,
-               lag(o_orderpriority) OVER (PARTITION BY o_custkey
-                 ORDER BY o_orderdate, o_orderkey) AS prev
-        FROM orders),
-      st AS (SELECT * FROM s WHERE prev IS NULL OR prev <> o_orderpriority)
-      SELECT o_custkey,
-             CAST(row_number() OVER w AS BIGINT) AS version,
-             o_orderpriority,
-             o_orderdate AS valid_from,
-             lead(o_orderdate) OVER w AS valid_to
-      FROM st
-      WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-      ORDER BY o_custkey, version""",
-
-    "q_median_exact" -> """
-      WITH r AS (
-        SELECT l_returnflag, l_quantity::BIGINT AS q,
-               row_number() OVER (PARTITION BY l_returnflag
-                                  ORDER BY l_quantity) AS rn,
-               count(1) OVER (PARTITION BY l_returnflag) AS n
-        FROM lineitem)
-      SELECT l_returnflag,
-             max(n) AS n_rows,
-             min(CASE WHEN rn = (n + 3) // 4 THEN q END) AS p25_qty,
-             (min(CASE WHEN rn = (n + 1) // 2 THEN q END)
-              + min(CASE WHEN rn = (n + 2) // 2 THEN q END)) / 2.0
-               AS median_qty,
-             min(CASE WHEN rn = (3 * n + 3) // 4 THEN q END) AS p75_qty
-      FROM r
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-
-    "q_copurchase_pairs" -> s"""
-      WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-           sized AS (SELECT l_orderkey FROM items
-                     GROUP BY l_orderkey HAVING count(1) <= $BASKET_CAP),
-           it AS (SELECT i.l_orderkey, i.l_partkey
-                  FROM items i JOIN sized s ON s.l_orderkey = i.l_orderkey),
-           nb AS (SELECT count(DISTINCT l_orderkey) AS n_baskets FROM it),
-           marg AS (SELECT l_partkey, count(1) AS cm FROM it GROUP BY 1),
-           pr AS (SELECT x.l_partkey AS pa, y.l_partkey AS pb,
-                         count(1) AS support
-                  FROM it x JOIN it y
-                    ON x.l_orderkey = y.l_orderkey
-                   AND x.l_partkey < y.l_partkey
-                  GROUP BY 1, 2 HAVING count(1) >= 2)
-      SELECT pr.pa, pr.pb, pr.support,
-             (1000 * nb.n_baskets * pr.support) // (ma.cm * mb.cm)
-               AS lift_milli
-      FROM pr
-      JOIN marg ma ON ma.l_partkey = pr.pa
-      JOIN marg mb ON mb.l_partkey = pr.pb
-      CROSS JOIN nb
-      ORDER BY support DESC, lift_milli DESC, pa, pb
-      LIMIT 200""",
-
-    "q_skyline" -> """
-      WITH per AS (
-        SELECT l_partkey,
-               min(round(l_extendedprice * 100)::BIGINT) AS price_c,
-               sum(l_quantity)::BIGINT AS qty
-        FROM lineitem
-        GROUP BY l_partkey),
-      w AS (
-        SELECT l_partkey, price_c, qty,
-               max(qty) OVER (ORDER BY price_c RANGE BETWEEN
-                 UNBOUNDED PRECEDING AND 1 PRECEDING) AS best_cheaper,
-               max(qty) OVER (PARTITION BY price_c) AS best_same
-        FROM per)
-      SELECT l_partkey, price_c, qty
-      FROM w
-      WHERE (best_cheaper IS NULL OR best_cheaper < qty)
-        AND qty = best_same
-      ORDER BY price_c, l_partkey"""
-  )
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Scratch, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import graft.functions.{Text, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -570,18 +570,63 @@ object Similarity extends QueryModule {
       .orderBy("a_id", "b_id")
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // -- k-means clustering (see kmeansFrom) ------------------------------
-    "sim_kmeans" -> ((s, d) => kmeansFrom(Tables.embeddings(s, d))),
+    Query("sim_kmeans", (s, d) => kmeansFrom(Tables.embeddings(s, d)),
+      s"""
+      ${kmeansCtesSql("4")}
+      SELECT c, count(1) AS n, min(vec_id) AS min_vec,
+             CAST(sum(vec_id) AS BIGINT) AS id_sum
+      FROM a2
+      GROUP BY c
+      ORDER BY c"""),
 
     // -- sparse weighted-cosine pairs over an inverted index (see
     //    sparseCosinePairsFrom) --------------------------------------------
-    "sim_sparse_pairs" -> ((s, d) =>
-      sparseCosinePairsFrom(Tables.documents(s, d))),
+    Query("sim_sparse_pairs", (s, d) =>
+      sparseCosinePairsFrom(Tables.documents(s, d)),
+      s"""
+      WITH tok AS (SELECT doc_id, unnest(${sqlNgrams3(Text.sqlTokens("lower(text)"))}) AS t
+                   FROM documents),
+           terms AS (SELECT doc_id, t, count(1) AS tf
+                     FROM tok GROUP BY doc_id, t),
+           dfr AS (SELECT t, count(1) AS df FROM terms
+                   GROUP BY t HAVING count(1) <= $SPARSE_DF_CAP),
+           w AS (SELECT doc_id, terms.t AS t, tf * (1000 // df) AS w
+                 FROM terms JOIN dfr ON terms.t = dfr.t),
+           norms AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
+                     FROM w GROUP BY doc_id),
+           dots AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                           CAST(sum(a.w * b.w) AS BIGINT) AS dot,
+                           count(1) AS n_shared
+                    FROM w a JOIN w b ON a.t = b.t AND a.doc_id < b.doc_id
+                    GROUP BY 1, 2)
+      SELECT d.a_id, d.b_id, d.n_shared, d.dot,
+             CAST(floor(((d.dot::DOUBLE / sqrt(na.n2::DOUBLE))
+               / sqrt(nb.n2::DOUBLE)) * 1e6) AS BIGINT) AS cos_e6
+      FROM dots d JOIN norms na ON d.a_id = na.doc_id
+                  JOIN norms nb ON d.b_id = nb.doc_id
+      WHERE d.n_shared >= 3
+        AND (d.dot::DOUBLE / sqrt(na.n2::DOUBLE)) / sqrt(nb.n2::DOUBLE) >= 0.5
+      ORDER BY a_id, b_id"""),
 
     // -- semantic dedup over learned clusters (see semanticDedupFrom) -----
-    "dedup_semantic" -> ((s, d) =>
-      semanticDedupFrom(s, Tables.embeddings(s, d))),
+    Query("dedup_semantic", (s, d) =>
+      semanticDedupFrom(s, Tables.embeddings(s, d)),
+      s"""
+      ${kmeansCtesSql(SEMDEDUP_K_SQL)},
+           ev AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                  FROM embeddings),
+           p AS (SELECT aa.c, b.vec_id AS b_id,
+                        ${sqlCos.format("a.v", "b.v")} AS icos_e6
+                 FROM ev a JOIN a2 aa ON a.vec_id = aa.vec_id
+                 JOIN a2 bb ON aa.c = bb.c AND aa.vec_id < bb.vec_id
+                 JOIN ev b ON b.vec_id = bb.vec_id)
+      SELECT b_id AS vec_id, c, count(1) AS n_dups, max(icos_e6) AS icos_max
+      FROM p
+      WHERE icos_e6 >= $SEMDEDUP_TAU
+      GROUP BY b_id, c
+      ORDER BY vec_id"""),
 
     // -- k-NN GRAPH (every vector's top-k neighbors — the input artifact
     //    of SemDeDup / kNN-clustering / label-propagation pipelines),
@@ -592,10 +637,47 @@ object Similarity extends QueryModule {
     //    candidates are same-cluster by construction (the documented
     //    approximation of this family); the integer-scaled cosine and
     //    (icos desc, nbr_id) tie rule keep every edge oracle-exact.
-    "sim_knn_graph" -> ((s, d) => knnGraphFrom(s, Tables.embeddings(s, d))),
+    Query("sim_knn_graph", (s, d) => knnGraphFrom(s, Tables.embeddings(s, d)),
+      // same kmeans CTEs as dedup_semantic (a2 = final assignment), then
+      // within-cluster exact ranking — the (icos DESC, nbr_id) tie rule
+      // mirrors the engine's window exactly
+      s"""
+      ${kmeansCtesSql(SEMDEDUP_K_SQL)},
+           ev AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                  FROM embeddings),
+           p AS (SELECT aa.vec_id AS q_id, bb.vec_id AS nbr_id,
+                        ${sqlCos.format("a.v", "b.v")} AS icos_e6
+                 FROM ev a JOIN a2 aa ON a.vec_id = aa.vec_id
+                 JOIN a2 bb ON aa.c = bb.c AND aa.vec_id <> bb.vec_id
+                 JOIN ev b ON b.vec_id = bb.vec_id),
+           ranked AS (
+             SELECT q_id, nbr_id, icos_e6,
+                    row_number() OVER (PARTITION BY q_id
+                                       ORDER BY icos_e6 DESC, nbr_id) AS rk
+             FROM p)
+      SELECT q_id, rk, nbr_id, icos_e6
+      FROM ranked WHERE rk <= $KNNG_K
+      ORDER BY q_id, rk"""),
 
     // -- brute-force exact top-k ------------------------------------------
-    "sim_brute_topk" -> ((s, d) => bruteTopkFrom(s, Tables.embeddings(s, d))),
+    Query("sim_brute_topk", (s, d) => bruteTopkFrom(s, Tables.embeddings(s, d)),
+      s"""
+      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings),
+           q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < $NQUERIES),
+           scored AS (
+             SELECT q.q_id, e.vec_id,
+                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
+             FROM e CROSS JOIN q
+             WHERE e.vec_id <> q.q_id),
+           ranked AS (
+             SELECT q_id, vec_id, icos_e6,
+                    row_number() OVER (PARTITION BY q_id
+                                       ORDER BY icos_e6 DESC, vec_id) AS rk
+             FROM scored)
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $TOPK
+      ORDER BY q_id, rk"""),
 
     // -- FILTERED vector search: metadata predicate applied BELOW the
     //    distance computation (pre-filter), not over its results ---------
@@ -610,7 +692,7 @@ object Similarity extends QueryModule {
     //    label — the scan does 1/|labels| of the unfiltered pair work;
     //    at 100 TB with label-partitioned storage the filter prunes
     //    whole partitions before a single dot product runs.
-    "sim_filtered_topk" -> ((s, d) => {
+    Query("sim_filtered_topk", (s, d) => {
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < NQUERIES)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
@@ -626,13 +708,60 @@ object Similarity extends QueryModule {
         .filter(col("rk") <= TOPK)
         .select(col("q_id"), col("rk"), col("vec_id"), col("icos_e6"))
         .orderBy("q_id", "rk")
-    }),
+    },
+      // pre-filter semantics: the label predicate restricts the corpus
+      // BEFORE ranking, so each probe's top-k is exact over its label
+      s"""
+      WITH e AS (SELECT vec_id, label,
+                        list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings),
+           q AS (SELECT vec_id AS q_id, label AS q_label, v AS q_v
+                 FROM e WHERE vec_id < $NQUERIES),
+           scored AS (
+             SELECT q.q_id, e.vec_id,
+                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
+             FROM e JOIN q ON e.label = q.q_label
+             WHERE e.vec_id <> q.q_id),
+           ranked AS (
+             SELECT q_id, vec_id, icos_e6,
+                    row_number() OVER (PARTITION BY q_id
+                                       ORDER BY icos_e6 DESC, vec_id) AS rk
+             FROM scored)
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $TOPK
+      ORDER BY q_id, rk"""),
 
     // -- MMR diversity re-ranking over the ANN shortlist (see
     //    mmrRerankFrom): the greedy λ-mix pass that keeps near-dup
     //    hits from crowding a RAG context window ------------------------
-    "sim_mmr_rerank" -> ((s, d) =>
-      mmrRerankFrom(s, Tables.embeddings(s, d))),
+    Query("sim_mmr_rerank", (s, d) =>
+      mmrRerankFrom(s, Tables.embeddings(s, d)),
+      s"""
+      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings),
+           q AS (SELECT vec_id AS q_id, v AS q_v FROM e
+                 WHERE vec_id < $NQUERIES),
+           scored AS (
+             SELECT q.q_id, e.vec_id, e.v,
+                    ${sqlCos.format("q.q_v", "e.v")} AS rel
+             FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
+           sl AS (SELECT q_id, vec_id, v, rel FROM (
+                    SELECT *, row_number() OVER (PARTITION BY q_id
+                      ORDER BY rel DESC, vec_id) AS rk
+                    FROM scored) WHERE rk <= $MMR_SHORTLIST),
+           pair AS (SELECT a.q_id, a.vec_id AS a_id, b.vec_id AS b_id,
+                           ${sqlCos.format("a.v", "b.v")} AS sim
+                    FROM sl a JOIN sl b
+                      ON a.q_id = b.q_id AND a.vec_id <> b.vec_id),
+           p1 AS (SELECT q_id, vec_id, score, 1::BIGINT AS pick FROM (
+                    SELECT q_id, vec_id, (7 * rel) // 10 AS score,
+                           row_number() OVER (PARTITION BY q_id
+                             ORDER BY (7 * rel) // 10 DESC, vec_id) AS rn
+                    FROM sl) WHERE rn = 1),
+           ${(2 to MMR_PICKS).map(mmrRoundSql).mkString(",\n")}
+      SELECT q_id, pick, vec_id, score AS mmr_score
+      FROM p$MMR_PICKS
+      ORDER BY q_id, pick"""),
 
     // -- exact RANGE search: every neighbor above a similarity floor ------
     //    The other retrieval contract besides top-k ("all vectors at
@@ -642,7 +771,7 @@ object Similarity extends QueryModule {
     //    scales better than top-k (which needs the rank). Result exact;
     //    at 100 TB the same plan runs unchanged with the probe frame
     //    broadcast per executor.
-    "sim_range_search" -> ((s, d) => {
+    Query("sim_range_search", (s, d) => {
       val e = Tables.embeddings(s, d)
       val q = e.filter(col("vec_id") < NQUERIES)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
@@ -651,7 +780,17 @@ object Similarity extends QueryModule {
           Vectors.cosineScaled(s, col("q_v"), col("embedding")).as("icos_e6"))
         .filter(col("icos_e6") >= RANGE_TAU)
         .orderBy("q_id", "vec_id")
-    }),
+    },
+      s"""
+      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings),
+           q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < $NQUERIES)
+      SELECT q.q_id, e.vec_id,
+             ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
+      FROM e CROSS JOIN q
+      WHERE e.vec_id <> q.q_id
+        AND ${sqlCos.format("q.q_v", "e.v")} >= $RANGE_TAU
+      ORDER BY q_id, vec_id"""),
 
     // -- multi-table LSH approximate top-k (random hyperplane signs) ------
     // Index: NTABLES independent 4-plane sign signatures per vector
@@ -662,7 +801,7 @@ object Similarity extends QueryModule {
     // empty and recall@5 at ~0 (caught by AnnRecallSpec, which gates
     // recall against sim_brute_topk). Candidates are deduped across
     // tables BEFORE ranking so each pair is scored once.
-    "sim_lsh_topk" -> ((s, d) => {
+    Query("sim_lsh_topk", (s, d) => {
       val e = Tables.embeddings(s, d)
       def bucketT(v: Column, t: Int): Column = (0 until LSH_PLANES_PER).map { jj =>
         val hp = array(hyperplanes(t * LSH_PLANES_PER + jj).map(lit): _*)
@@ -691,17 +830,57 @@ object Similarity extends QueryModule {
         .filter(col("rk") <= IVFK)
         .select(col("q_id"), col("rk"), col("vec_id"), col("icos_e6"))
         .orderBy("q_id", "rk")
+    },
+      {
+      def bucketExpr(t: Int) = (0 until LSH_PLANES_PER).map { jj =>
+        val hpList = hyperplanes(t * LSH_PLANES_PER + jj).mkString("[", ", ", "]")
+        s"""(CASE WHEN list_aggregate(list_transform(range(1, ${DIM + 1}),
+             i -> v[i]::DOUBLE * ($hpList)[i]::DOUBLE), 'sum') > 0
+             THEN ${1L << jj} ELSE 0 END)"""
+      }.mkString(" + ")
+      val tables = (0 until LSH_TABLES).map(t =>
+        s"SELECT vec_id, v, $t AS tbl, (${bucketExpr(t)})::BIGINT AS bucket FROM e")
+        .mkString("\n           UNION ALL\n           ")
+      s"""
+      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
+                 FROM embeddings),
+           sigs AS ($tables),
+           q AS (SELECT tbl, bucket, vec_id AS q_id, v AS q_v FROM sigs
+                 WHERE vec_id < $NQUERIES),
+           cand AS (
+             SELECT DISTINCT q.q_id, s.vec_id,
+                    ${sqlCos.format("q.q_v", "s.v")} AS icos_e6
+             FROM sigs s JOIN q ON s.tbl = q.tbl AND s.bucket = q.bucket
+             WHERE s.vec_id <> q.q_id),
+           ranked AS (
+             SELECT q_id, vec_id, icos_e6,
+                    row_number() OVER (PARTITION BY q_id
+                                       ORDER BY icos_e6 DESC, vec_id) AS rk
+             FROM cand)
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $IVFK
+      ORDER BY q_id, rk"""
     }),
 
     // -- product-quantization top-k (see pqTopkFrom) -----------------------
-    "sim_pq_topk" -> ((s, d) => pqTopkFrom(Tables.embeddings(s, d))),
+    Query("sim_pq_topk", (s, d) => pqTopkFrom(Tables.embeddings(s, d)),
+      pqTopkSql),
 
     // -- scalar-quantization top-k (see sqTopkFrom): the train-free
     //    8-bit point on the compression curve next to IVF and PQ ------
-    "sim_sq_topk" -> ((s, d) => sqTopkFrom(Tables.embeddings(s, d))),
+    Query("sim_sq_topk", (s, d) => sqTopkFrom(Tables.embeddings(s, d)),
+      // SQ8 mirrored integer-for-integer: per-dim [lo,hi] stats, affine
+      // code, dequantized squared-L2 shortlist, exact re-rank — every
+      // division operand non-negative, so // ≡ DIV
+      s"""
+      WITH $sqRankedCtes
+      SELECT q_id, rk, vec_id, l2_dist
+      FROM sranked WHERE rk <= $IVFK
+      ORDER BY q_id, rk"""),
 
     // -- seeded-IVF approximate top-k (see ivfTopkFrom) -------------------
-    "sim_ivf_topk" -> ((s, d) => ivfTopkFrom(s, Tables.embeddings(s, d))),
+    Query("sim_ivf_topk", (s, d) => ivfTopkFrom(s, Tables.embeddings(s, d)),
+      ivfTopkSql),
 
     // -- PERSISTED-index ANN: build once, serve many -----------------------
     //    The operational contract of a production vector store — the
@@ -715,13 +894,16 @@ object Similarity extends QueryModule {
     //    artifact carries raw float vectors + integer labels, both
     //    exact through a parquet round-trip — which is also why the
     //    inline oracle stays valid for the loaded path).
-    "sim_index_persist" -> ((s, d) => {
+    Query("sim_index_persist", (s, d) => {
       val e = Tables.embeddings(s, d)
       val (cent, asg) = gateIvfIndex(s, e, d)
       ivfServe(s, cent, asg,
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))
-    }),
+    },
+      // the persisted-index serve path is bit-equal to the inline build
+      // (IndexPersistSpec), so the SAME oracle gates it
+      ivfTopkSql),
 
     // -- INCREMENTAL index maintenance: append a batch to the
     //    persisted IVF artifact WITHOUT retraining -----------------------
@@ -737,7 +919,7 @@ object Similarity extends QueryModule {
     //    and bit-equality with the inline frozen-centroid build; the
     //    oracle mirrors the frozen rule (seeds from the base slice,
     //    assignment over the full corpus).
-    "sim_index_append" -> ((s, d) => {
+    Query("sim_index_append", (s, d) => {
       val e = Tables.embeddings(s, d)
       val (root, centSch, asgSch) = ivfAppendArtifact(s, d)
       val cent = s.read.schema(centSch).parquet(s"$root/v1/centroids")
@@ -747,7 +929,17 @@ object Similarity extends QueryModule {
       ivfServe(s, cent, asg,
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))
-    }),
+    },
+      // frozen-centroid append: seeds come from the BASE slice only
+      // (vec_id % 10 <> 7 — the pre-append corpus), assignment runs over
+      // the FULL corpus against those frozen centroids — exactly the
+      // v1-train + v2-assign union the engine serves
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
+        baseCond = "vec_id % 10 <> 7")}
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $IVFK
+      ORDER BY q_id, rk"""),
 
     // -- STREAMING ingest into the index: the continuous twin of
     //    sim_index_append ---------------------------------------------------
@@ -762,7 +954,7 @@ object Similarity extends QueryModule {
     //    append computes — one oracle gates both, and
     //    StreamIngestSpec pins engine-level equality with
     //    sim_index_append's loaded-artifact serve.
-    "sim_stream_ingest" -> ((s, d) => {
+    Query("sim_stream_ingest", (s, d) => {
       val e = Tables.embeddings(s, d)
       val isDelta = pmod(col("vec_id"), lit(10L)) === 7
       val (cent, asgBase) = ivfIndexFrames(s, e.filter(!isDelta))
@@ -781,7 +973,16 @@ object Similarity extends QueryModule {
       ivfServe(s, cent, asgBase.unionByName(delta),
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))
-    }),
+    },
+      // the streaming ingest computes the SAME frozen-centroid
+      // assignment as the batch append (stream-static scoring + batch
+      // argmax), so the append oracle gates it verbatim
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
+        baseCond = "vec_id % 10 <> 7")}
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $IVFK
+      ORDER BY q_id, rk"""),
 
     // -- index DELETE + COMPACTION: the third leg of the lifecycle ------
     //    (build: sim_index_persist; append: sim_index_append). A
@@ -798,7 +999,7 @@ object Similarity extends QueryModule {
     //    zero training jobs at serve-plan time, bit-equality with the
     //    inline filtered build, and that no tombstoned id ever
     //    surfaces in a result.
-    "sim_index_compact" -> ((s, d) => {
+    Query("sim_index_compact", (s, d) => {
       val e = Tables.embeddings(s, d)
       val isDead = pmod(col("vec_id"), lit(10L)) === 3
       val (centB, asgB) = ivfIndexFrames(s, e)
@@ -816,7 +1017,16 @@ object Similarity extends QueryModule {
         s.read.schema(asgB.schema).parquet(s"$root/v3/assigned"),
         e.filter(col("vec_id") < NQUERIES)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v")))
-    }),
+    },
+      // compaction: centroids from the FULL corpus (frozen — deletion
+      // never retrains), assignment filtered BEFORE ranking so deleted
+      // vectors occupy no ranks — the compacted artifact's physical form
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
+        servedCond = "vec_id % 10 <> 3")}
+      SELECT q_id, rk, vec_id, icos_e6
+      FROM ranked WHERE rk <= $IVFK
+      ORDER BY q_id, rk"""),
 
     // -- IVF recall@k as a GATED METRIC (the dedup_lsh_recall pattern
     //    applied to the ANN surface): the approximate top-k is scored
@@ -825,30 +1035,59 @@ object Similarity extends QueryModule {
     //    or assignment regression breaks the driver compare, not just a
     //    local spec. AnnRecallSpec pins the floor; this row makes the
     //    number part of the correctness artifact.
-    "sim_ivf_recall" -> ((s, d) => {
+    Query("sim_ivf_recall", (s, d) => {
       val e = Tables.embeddings(s, d)
       recallRow(ivfTopkFrom(s, e).select(col("q_id"), col("vec_id")),
         bruteTopkFrom(s, e, topK = IVFK).select(col("q_id"), col("vec_id")))
-    }),
+    },
+      // approximate (ivf chain) vs exact (brute chain over the same e/q
+      // CTEs) top-k overlap, reduced to the one-row integer metric
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
+           bscored AS (
+             SELECT q.q_id, e.vec_id,
+                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
+             FROM e CROSS JOIN q
+             WHERE e.vec_id <> q.q_id),
+           branked AS (
+             SELECT q_id, vec_id,
+                    row_number() OVER (PARTITION BY q_id
+                                       ORDER BY icos_e6 DESC, vec_id) AS rk
+             FROM bscored),
+           a AS (SELECT q_id, vec_id FROM ranked WHERE rk <= $IVFK),
+           x AS (SELECT q_id, vec_id FROM branked WHERE rk <= $IVFK),
+           h AS (SELECT count(1) AS n_hit FROM a JOIN x USING (q_id, vec_id)),
+           tt AS (SELECT count(1) AS n_true FROM x)
+      SELECT tt.n_true, h.n_hit,
+             ((1000 * h.n_hit) // tt.n_true)::BIGINT AS recall_mille
+      FROM tt, h"""),
 
     // -- PQ recall@k as a GATED METRIC (r16 verdict #1: sim_ivf_recall
     //    made IVF recall part of the correctness artifact, but a PQ
     //    codebook-training regression could only fail the local
     //    AnnRecallSpec floor — this row puts the number in front of
     //    the driver's oracle compare, so it breaks CORRECTNESS) -------
-    "sim_pq_recall" -> ((s, d) => {
+    Query("sim_pq_recall", (s, d) => {
       val e = Tables.embeddings(s, d)
       recallRow(pqTopkFrom(e).select(col("q_id"), col("vec_id")),
         bruteTopkFrom(s, e, topK = IVFK).select(col("q_id"), col("vec_id")))
-    }),
+    },
+      // approximate (PQ/SQ CTE chain, same as the topk oracles) vs exact
+      // brute cosine top-k, reduced to the sim_ivf_recall one-row metric
+      s"""
+      WITH $pqRankedCtes,
+           ${recallTailSql("ranked")}"""),
 
     // -- SQ recall@k, same contract: a quantization-range regression
     //    (per-dim [lo,hi] stats) now breaks the driver compare --------
-    "sim_sq_recall" -> ((s, d) => {
+    Query("sim_sq_recall", (s, d) => {
       val e = Tables.embeddings(s, d)
       recallRow(sqTopkFrom(e).select(col("q_id"), col("vec_id")),
         bruteTopkFrom(s, e, topK = IVFK).select(col("q_id"), col("vec_id")))
-    }),
+    },
+      s"""
+      WITH $sqRankedCtes,
+           ${recallTailSql("sranked")}"""),
 
     // -- SEMANTIC drift between releases: PSI over frozen-IVF-cell
     //    occupancy ---------------------------------------------------------
@@ -864,13 +1103,19 @@ object Similarity extends QueryModule {
     //    integer ppm occupancy, DetMath bit-exact ln in micronats.
     //    The unpartitioned window is over the |cells| post-agg frame
     //    (= nlist, constant-size — the pipe_drift 16-bucket shape).
-    "pipe_embed_drift" -> ((s, d) => {
+    Query("pipe_embed_drift", (s, d) => {
       // sim_index_persist's artifact: whichever runs first pays the
       // one-time build, the other serves from it
       val (_, asg) = gateIvfIndex(s, Tables.embeddings(s, d), d)
       psiOverCells(asg.select(col("c_label"),
         pmod(col("vec_id"), lit(2L)).as("half")))
-    }),
+    },
+      // the IVF assignment CTEs (unreferenced probe/rank CTEs inline
+      // away) + pipe_drift's PSI chain over (c_label, vec_id % 2)
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
+           h AS (SELECT c_label, vec_id % 2 AS half FROM assigned),
+           $psiCellsSqlTail"""),
 
     // -- RELEASE-over-release semantic drift (r16 verdict #3): v1 base
     //    vs the v2 append delta — the artifacts sim_index_append
@@ -886,14 +1131,25 @@ object Similarity extends QueryModule {
     //    ~10% of the corpus, which is exactly why the Laplace +1 and
     //    the ppm NORMALIZATION matter: occupancy shares, not counts,
     //    are compared.
-    "pipe_embed_drift_v2" -> ((s, d) => {
+    Query("pipe_embed_drift_v2", (s, d) => {
       val (root, _, asgSch) = ivfAppendArtifact(s, d)
       val v1 = s.read.schema(asgSch).parquet(s"$root/v1/assigned")
         .select(col("c_label"), lit(0L).as("half"))
       val v2 = s.read.schema(asgSch).parquet(s"$root/v2/assigned_delta")
         .select(col("c_label"), lit(1L).as("half"))
       psiOverCells(v1.unionByName(v2))
-    }),
+    },
+      // release-over-release: assignment of the FULL corpus against
+      // frozen BASE-slice centroids (the append oracle's CTEs), halved
+      // by release membership — base rows are v1, the appended batch
+      // (vec_id % 10 = 7, assigned to the same frozen cells) is v2
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
+        baseCond = "vec_id % 10 <> 7")},
+           h AS (SELECT c_label,
+                        CASE WHEN vec_id % 10 = 7 THEN 1 ELSE 0 END AS half
+                 FROM assigned),
+           $psiCellsSqlTail"""),
 
     // -- IVF posting-list BALANCE audit over the persisted index -----------
     //    The index-health check a vector store runs after every
@@ -907,7 +1163,7 @@ object Similarity extends QueryModule {
     //    artifact — whichever runs first pays the build); the
     //    windows run over the |cells| post-agg frame (= nlist,
     //    constant-size).
-    "sim_index_stats" -> ((s, d) => {
+    Query("sim_index_stats", (s, d) => {
       val (_, asg) = gateIvfIndex(s, Tables.embeddings(s, d), d)
       val w = org.apache.spark.sql.expressions.Window
         .rowsBetween(Long.MinValue, Long.MaxValue)
@@ -918,7 +1174,22 @@ object Similarity extends QueryModule {
           expr("(1000000 * n_vecs) DIV n_total").as("share_ppm"),
           expr("(1000 * n_vecs * n_cells) DIV n_total").as("balance_mille"))
         .orderBy("c_label")
-    }),
+    },
+      // per-cell occupancy + share/balance over the same frozen IVF
+      // assignment (windows over the constant-size post-agg frame)
+      s"""
+      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
+           g AS (SELECT c_label, count(1)::BIGINT AS n_vecs
+                 FROM assigned GROUP BY c_label),
+           t AS (SELECT c_label, n_vecs,
+                        sum(n_vecs) OVER () AS n_total,
+                        count(1) OVER () AS n_cells
+                 FROM g)
+      SELECT c_label, n_vecs,
+             ((1000000 * n_vecs) // n_total)::BIGINT AS share_ppm,
+             ((1000 * n_vecs * n_cells) // n_total)::BIGINT AS balance_mille
+      FROM t
+      ORDER BY c_label"""),
 
     // -- persisted PQ codes + codebooks, served via ADC --------------------
     //    Same build-once/probe-many contract for the compressed index:
@@ -926,7 +1197,7 @@ object Similarity extends QueryModule {
     //    inside the one-time artifact write; the serve path reads the
     //    integer codes/codebooks back (exact: all-integer columns) and
     //    pays only the ADC scan + PQ_R exact re-rank.
-    "sim_pq_persist" -> ((s, d) => {
+    Query("sim_pq_persist", (s, d) => {
       val e = Tables.embeddings(s, d)
       val base = jvmOnce("pq_index", d) { p =>
         val (codes, books) = pqIndex(e)
@@ -938,7 +1209,8 @@ object Similarity extends QueryModule {
       pqServe(e,
         s.read.schema(PQ_CODES_DDL).parquet(s"$base/codes"),
         s.read.schema(PQ_BOOKS_DDL).parquet(s"$base/books"))
-    })
+    },
+      pqTopkSql)
   )
 
   /** Ensure the VERSIONED append artifact exists (v1 = centroids +
@@ -1348,301 +1620,6 @@ object Similarity extends QueryModule {
   private def sqlNgrams3(t: String): String =
     s"CASE WHEN len($t) >= 3 THEN list_transform(range(1, len($t) - 1), " +
       s"i -> $t[i] || ' ' || $t[i+1] || ' ' || $t[i+2]) ELSE [] END"
-
-  override def oracles: Map[String, String] = Map(
-    "sim_sparse_pairs" -> s"""
-      WITH tok AS (SELECT doc_id, unnest(${sqlNgrams3(Text.sqlTokens("lower(text)"))}) AS t
-                   FROM documents),
-           terms AS (SELECT doc_id, t, count(1) AS tf
-                     FROM tok GROUP BY doc_id, t),
-           dfr AS (SELECT t, count(1) AS df FROM terms
-                   GROUP BY t HAVING count(1) <= $SPARSE_DF_CAP),
-           w AS (SELECT doc_id, terms.t AS t, tf * (1000 // df) AS w
-                 FROM terms JOIN dfr ON terms.t = dfr.t),
-           norms AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS n2
-                     FROM w GROUP BY doc_id),
-           dots AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                           CAST(sum(a.w * b.w) AS BIGINT) AS dot,
-                           count(1) AS n_shared
-                    FROM w a JOIN w b ON a.t = b.t AND a.doc_id < b.doc_id
-                    GROUP BY 1, 2)
-      SELECT d.a_id, d.b_id, d.n_shared, d.dot,
-             CAST(floor(((d.dot::DOUBLE / sqrt(na.n2::DOUBLE))
-               / sqrt(nb.n2::DOUBLE)) * 1e6) AS BIGINT) AS cos_e6
-      FROM dots d JOIN norms na ON d.a_id = na.doc_id
-                  JOIN norms nb ON d.b_id = nb.doc_id
-      WHERE d.n_shared >= 3
-        AND (d.dot::DOUBLE / sqrt(na.n2::DOUBLE)) / sqrt(nb.n2::DOUBLE) >= 0.5
-      ORDER BY a_id, b_id""",
-
-    "sim_kmeans" -> s"""
-      ${kmeansCtesSql("4")}
-      SELECT c, count(1) AS n, min(vec_id) AS min_vec,
-             CAST(sum(vec_id) AS BIGINT) AS id_sum
-      FROM a2
-      GROUP BY c
-      ORDER BY c""",
-
-    "dedup_semantic" -> s"""
-      ${kmeansCtesSql(SEMDEDUP_K_SQL)},
-           ev AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                  FROM embeddings),
-           p AS (SELECT aa.c, b.vec_id AS b_id,
-                        ${sqlCos.format("a.v", "b.v")} AS icos_e6
-                 FROM ev a JOIN a2 aa ON a.vec_id = aa.vec_id
-                 JOIN a2 bb ON aa.c = bb.c AND aa.vec_id < bb.vec_id
-                 JOIN ev b ON b.vec_id = bb.vec_id)
-      SELECT b_id AS vec_id, c, count(1) AS n_dups, max(icos_e6) AS icos_max
-      FROM p
-      WHERE icos_e6 >= $SEMDEDUP_TAU
-      GROUP BY b_id, c
-      ORDER BY vec_id""",
-
-    // same kmeans CTEs as dedup_semantic (a2 = final assignment), then
-    // within-cluster exact ranking — the (icos DESC, nbr_id) tie rule
-    // mirrors the engine's window exactly
-    "sim_knn_graph" -> s"""
-      ${kmeansCtesSql(SEMDEDUP_K_SQL)},
-           ev AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                  FROM embeddings),
-           p AS (SELECT aa.vec_id AS q_id, bb.vec_id AS nbr_id,
-                        ${sqlCos.format("a.v", "b.v")} AS icos_e6
-                 FROM ev a JOIN a2 aa ON a.vec_id = aa.vec_id
-                 JOIN a2 bb ON aa.c = bb.c AND aa.vec_id <> bb.vec_id
-                 JOIN ev b ON b.vec_id = bb.vec_id),
-           ranked AS (
-             SELECT q_id, nbr_id, icos_e6,
-                    row_number() OVER (PARTITION BY q_id
-                                       ORDER BY icos_e6 DESC, nbr_id) AS rk
-             FROM p)
-      SELECT q_id, rk, nbr_id, icos_e6
-      FROM ranked WHERE rk <= $KNNG_K
-      ORDER BY q_id, rk""",
-
-    "sim_brute_topk" -> s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings),
-           q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < $NQUERIES),
-           scored AS (
-             SELECT q.q_id, e.vec_id,
-                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
-             FROM e CROSS JOIN q
-             WHERE e.vec_id <> q.q_id),
-           ranked AS (
-             SELECT q_id, vec_id, icos_e6,
-                    row_number() OVER (PARTITION BY q_id
-                                       ORDER BY icos_e6 DESC, vec_id) AS rk
-             FROM scored)
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $TOPK
-      ORDER BY q_id, rk""",
-
-    // pre-filter semantics: the label predicate restricts the corpus
-    // BEFORE ranking, so each probe's top-k is exact over its label
-    "sim_filtered_topk" -> s"""
-      WITH e AS (SELECT vec_id, label,
-                        list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings),
-           q AS (SELECT vec_id AS q_id, label AS q_label, v AS q_v
-                 FROM e WHERE vec_id < $NQUERIES),
-           scored AS (
-             SELECT q.q_id, e.vec_id,
-                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
-             FROM e JOIN q ON e.label = q.q_label
-             WHERE e.vec_id <> q.q_id),
-           ranked AS (
-             SELECT q_id, vec_id, icos_e6,
-                    row_number() OVER (PARTITION BY q_id
-                                       ORDER BY icos_e6 DESC, vec_id) AS rk
-             FROM scored)
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $TOPK
-      ORDER BY q_id, rk""",
-
-    "sim_mmr_rerank" -> s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings),
-           q AS (SELECT vec_id AS q_id, v AS q_v FROM e
-                 WHERE vec_id < $NQUERIES),
-           scored AS (
-             SELECT q.q_id, e.vec_id, e.v,
-                    ${sqlCos.format("q.q_v", "e.v")} AS rel
-             FROM e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-           sl AS (SELECT q_id, vec_id, v, rel FROM (
-                    SELECT *, row_number() OVER (PARTITION BY q_id
-                      ORDER BY rel DESC, vec_id) AS rk
-                    FROM scored) WHERE rk <= $MMR_SHORTLIST),
-           pair AS (SELECT a.q_id, a.vec_id AS a_id, b.vec_id AS b_id,
-                           ${sqlCos.format("a.v", "b.v")} AS sim
-                    FROM sl a JOIN sl b
-                      ON a.q_id = b.q_id AND a.vec_id <> b.vec_id),
-           p1 AS (SELECT q_id, vec_id, score, 1::BIGINT AS pick FROM (
-                    SELECT q_id, vec_id, (7 * rel) // 10 AS score,
-                           row_number() OVER (PARTITION BY q_id
-                             ORDER BY (7 * rel) // 10 DESC, vec_id) AS rn
-                    FROM sl) WHERE rn = 1),
-           ${(2 to MMR_PICKS).map(mmrRoundSql).mkString(",\n")}
-      SELECT q_id, pick, vec_id, score AS mmr_score
-      FROM p$MMR_PICKS
-      ORDER BY q_id, pick""",
-
-    "sim_range_search" -> s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings),
-           q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < $NQUERIES)
-      SELECT q.q_id, e.vec_id,
-             ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
-      FROM e CROSS JOIN q
-      WHERE e.vec_id <> q.q_id
-        AND ${sqlCos.format("q.q_v", "e.v")} >= $RANGE_TAU
-      ORDER BY q_id, vec_id""",
-
-    "sim_lsh_topk" -> {
-      def bucketExpr(t: Int) = (0 until LSH_PLANES_PER).map { jj =>
-        val hpList = hyperplanes(t * LSH_PLANES_PER + jj).mkString("[", ", ", "]")
-        s"""(CASE WHEN list_aggregate(list_transform(range(1, ${DIM + 1}),
-             i -> v[i]::DOUBLE * ($hpList)[i]::DOUBLE), 'sum') > 0
-             THEN ${1L << jj} ELSE 0 END)"""
-      }.mkString(" + ")
-      val tables = (0 until LSH_TABLES).map(t =>
-        s"SELECT vec_id, v, $t AS tbl, (${bucketExpr(t)})::BIGINT AS bucket FROM e")
-        .mkString("\n           UNION ALL\n           ")
-      s"""
-      WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v
-                 FROM embeddings),
-           sigs AS ($tables),
-           q AS (SELECT tbl, bucket, vec_id AS q_id, v AS q_v FROM sigs
-                 WHERE vec_id < $NQUERIES),
-           cand AS (
-             SELECT DISTINCT q.q_id, s.vec_id,
-                    ${sqlCos.format("q.q_v", "s.v")} AS icos_e6
-             FROM sigs s JOIN q ON s.tbl = q.tbl AND s.bucket = q.bucket
-             WHERE s.vec_id <> q.q_id),
-           ranked AS (
-             SELECT q_id, vec_id, icos_e6,
-                    row_number() OVER (PARTITION BY q_id
-                                       ORDER BY icos_e6 DESC, vec_id) AS rk
-             FROM cand)
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $IVFK
-      ORDER BY q_id, rk"""
-    },
-
-    "sim_ivf_topk" -> ivfTopkSql,
-    // the persisted-index serve path is bit-equal to the inline build
-    // (IndexPersistSpec), so the SAME oracle gates it
-    "sim_index_persist" -> ivfTopkSql,
-
-    // compaction: centroids from the FULL corpus (frozen — deletion
-    // never retrains), assignment filtered BEFORE ranking so deleted
-    // vectors occupy no ranks — the compacted artifact's physical form
-    "sim_index_compact" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
-        servedCond = "vec_id % 10 <> 3")}
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $IVFK
-      ORDER BY q_id, rk""",
-
-    // frozen-centroid append: seeds come from the BASE slice only
-    // (vec_id % 10 <> 7 — the pre-append corpus), assignment runs over
-    // the FULL corpus against those frozen centroids — exactly the
-    // v1-train + v2-assign union the engine serves
-    "sim_index_append" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
-        baseCond = "vec_id % 10 <> 7")}
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $IVFK
-      ORDER BY q_id, rk""",
-
-    // the streaming ingest computes the SAME frozen-centroid
-    // assignment as the batch append (stream-static scoring + batch
-    // argmax), so the append oracle gates it verbatim
-    "sim_stream_ingest" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
-        baseCond = "vec_id % 10 <> 7")}
-      SELECT q_id, rk, vec_id, icos_e6
-      FROM ranked WHERE rk <= $IVFK
-      ORDER BY q_id, rk""",
-
-    // the IVF assignment CTEs (unreferenced probe/rank CTEs inline
-    // away) + pipe_drift's PSI chain over (c_label, vec_id % 2)
-    "pipe_embed_drift" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
-           h AS (SELECT c_label, vec_id % 2 AS half FROM assigned),
-           $psiCellsSqlTail""",
-
-    // release-over-release: assignment of the FULL corpus against
-    // frozen BASE-slice centroids (the append oracle's CTEs), halved
-    // by release membership — base rows are v1, the appended batch
-    // (vec_id % 10 = 7, assigned to the same frozen cells) is v2
-    "pipe_embed_drift_v2" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "",
-        baseCond = "vec_id % 10 <> 7")},
-           h AS (SELECT c_label,
-                        CASE WHEN vec_id % 10 = 7 THEN 1 ELSE 0 END AS half
-                 FROM assigned),
-           $psiCellsSqlTail""",
-
-    // per-cell occupancy + share/balance over the same frozen IVF
-    // assignment (windows over the constant-size post-agg frame)
-    "sim_index_stats" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
-           g AS (SELECT c_label, count(1)::BIGINT AS n_vecs
-                 FROM assigned GROUP BY c_label),
-           t AS (SELECT c_label, n_vecs,
-                        sum(n_vecs) OVER () AS n_total,
-                        count(1) OVER () AS n_cells
-                 FROM g)
-      SELECT c_label, n_vecs,
-             ((1000000 * n_vecs) // n_total)::BIGINT AS share_ppm,
-             ((1000 * n_vecs * n_cells) // n_total)::BIGINT AS balance_mille
-      FROM t
-      ORDER BY c_label""",
-
-    // approximate (ivf chain) vs exact (brute chain over the same e/q
-    // CTEs) top-k overlap, reduced to the one-row integer metric
-    "sim_ivf_recall" -> s"""
-      WITH ${ivfCtesSql(s"vec_id < $NQUERIES", "")},
-           bscored AS (
-             SELECT q.q_id, e.vec_id,
-                    ${sqlCos.format("q.q_v", "e.v")} AS icos_e6
-             FROM e CROSS JOIN q
-             WHERE e.vec_id <> q.q_id),
-           branked AS (
-             SELECT q_id, vec_id,
-                    row_number() OVER (PARTITION BY q_id
-                                       ORDER BY icos_e6 DESC, vec_id) AS rk
-             FROM bscored),
-           a AS (SELECT q_id, vec_id FROM ranked WHERE rk <= $IVFK),
-           x AS (SELECT q_id, vec_id FROM branked WHERE rk <= $IVFK),
-           h AS (SELECT count(1) AS n_hit FROM a JOIN x USING (q_id, vec_id)),
-           tt AS (SELECT count(1) AS n_true FROM x)
-      SELECT tt.n_true, h.n_hit,
-             ((1000 * h.n_hit) // tt.n_true)::BIGINT AS recall_mille
-      FROM tt, h""",
-
-    "sim_pq_topk" -> pqTopkSql,
-    "sim_pq_persist" -> pqTopkSql,
-
-    // SQ8 mirrored integer-for-integer: per-dim [lo,hi] stats, affine
-    // code, dequantized squared-L2 shortlist, exact re-rank — every
-    // division operand non-negative, so // ≡ DIV
-    "sim_sq_topk" -> s"""
-      WITH $sqRankedCtes
-      SELECT q_id, rk, vec_id, l2_dist
-      FROM sranked WHERE rk <= $IVFK
-      ORDER BY q_id, rk""",
-
-    // approximate (PQ/SQ CTE chain, same as the topk oracles) vs exact
-    // brute cosine top-k, reduced to the sim_ivf_recall one-row metric
-    "sim_pq_recall" -> s"""
-      WITH $pqRankedCtes,
-           ${recallTailSql("ranked")}""",
-
-    "sim_sq_recall" -> s"""
-      WITH $sqRankedCtes,
-           ${recallTailSql("sranked")}"""
-  )
 
   /** DuckDB mirror of [[psiOverCells]] from an `h(c_label, half)` CTE
     * — shared by pipe_embed_drift (parity halves) and

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryModule, Scratch, Tables}
+import graft.{Query, QueryModule, Scratch, Tables}
 import graft.functions.Text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -398,15 +398,24 @@ object TextAnalysis extends QueryModule {
       .orderBy("doc_id")
   }
 
-  override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  override def rows: Seq[Query] = Seq(
     // -- BPE tokenizer TRAINING (Sennrich et al.): the learned merge
     //    table itself, value-exact vs an oracle that unrolls the same
     //    rounds as CTEs (see bpeTrain for the shape) ------------------
-    "txt_bpe_merges" -> ((s, d) => {
+    Query("txt_bpe_merges", (s, d) => {
       import s.implicits._
       bpeTrain(bpeWords(s, d), BPE_MERGES)
         .toDF("rank", "l", "r", "cnt")
         .orderBy("rank")
+    },
+      {
+      val rows = (1 to BPE_MERGES).map(k =>
+        s"SELECT ${k}::BIGINT AS rank, l, r, cnt FROM m$k")
+        .mkString("\n      UNION ALL ")
+      s"""
+      ${bpeCtesSql(BPE_MERGES)}
+      $rows
+      ORDER BY rank"""
     }),
 
     // -- tokenizer-AWARE token counting: encode every doc with the
@@ -414,11 +423,12 @@ object TextAnalysis extends QueryModule {
     //    txt_token_estimate's chars/4 heuristic). Encode runs on the
     //    distinct-word table and joins back by word — the corpus-scale
     //    application never re-segments repeated words ------------------
-    "txt_token_bpe" -> ((s, d) => {
+    Query("txt_token_bpe", (s, d) => {
       val words = bpeWords(s, d).localCheckpoint() // train + encode share it
       bpeDocCounts(s, d,
         bpeWordSubwords(words, bpeTrain(words, BPE_MERGES)))
-    }),
+    },
+      tokenBpeSql),
 
     // -- PERSISTED tokenizer: train the merge table ONCE into a
     //    parquet artifact, apply it many times (r16 verdict #2) --------
@@ -434,9 +444,13 @@ object TextAnalysis extends QueryModule {
     //    runs per training batch. BpePersistSpec pins bit-equality
     //    with the inline train and that serving runs no training jobs
     //    (no localCheckpoint round chain, exactly one artifact read).
-    "txt_bpe_persist" -> ((s, d) =>
+    Query("txt_bpe_persist", (s, d) =>
       bpeDocCounts(s, d,
-        bpeWordSubwords(bpeWords(s, d), loadBpeMerges(s, d)))),
+        bpeWordSubwords(bpeWords(s, d), loadBpeMerges(s, d))),
+      // the loaded-artifact tokenizer is bit-equal to the inline train
+      // (BpePersistSpec — the sim_index_persist discipline), so the SAME
+      // oracle gates it
+      tokenBpeSql),
 
     // -- tokenizer MERGE-UTILIZATION audit over the persisted merge
     //    table: per merge rank, the freq-weighted number of times the
@@ -452,7 +466,7 @@ object TextAnalysis extends QueryModule {
     //    table. Oracle: per-round delta of the unrolled s{k-1}/s{k}
     //    segmentation CTEs — identical left-to-right replace semantics
     //    make it bit-exact.
-    "txt_bpe_stats" -> ((s, d) => {
+    Query("txt_bpe_stats", (s, d) => {
       val merges = loadBpeMerges(s, d)
       var df = bpeWords(s, d)
         .select(col("freq"), segInit(col("w")).as("seg0"))
@@ -477,6 +491,24 @@ object TextAnalysis extends QueryModule {
         .select(col("rank"), col("l"), col("r"), col("cnt"),
           col("n_applied"))
         .orderBy("rank")
+    },
+      // per-round application count = freq-weighted symbol-count delta
+      // between the unrolled s{k-1} and s{k} segmentation states (each
+      // merge application removes exactly one symbol; the word key is
+      // unique, so USING (w) pairs the states row-for-row)
+      {
+      val rows = (1 to BPE_MERGES).map(k =>
+        s"""SELECT ${k}::BIGINT AS rank, m.l, m.r, m.cnt, u.n_applied
+      FROM m$k m, (SELECT sum(a.freq * (
+                 (length(a.seg) - length(replace(a.seg, '|', ''))) // 2
+               - (length(b.seg) - length(replace(b.seg, '|', ''))) // 2
+             ))::BIGINT AS n_applied
+           FROM s${k - 1} a JOIN s$k b USING (w)) u""")
+        .mkString("\n      UNION ALL ")
+      s"""
+      ${bpeCtesSql(BPE_MERGES)}
+      $rows
+      ORDER BY rank"""
     }),
 
     // -- context-window chunking (width 64 tokens, stride 48) -------------
@@ -484,31 +516,55 @@ object TextAnalysis extends QueryModule {
     //    as a fused Generator (ChunkExplode): token boundaries found
     //    in one byte scan, one buffer copy per window. Chunks compare
     //    as md5 so rows stay small.
-    "txt_chunk" -> ((s, d) =>
+    Query("txt_chunk", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           graft.functions.ChunkExplode.chunks(s, col("text"), 64, 48)
             .as(Seq("chunk_idx", "chunk", "n_tokens")))
         .select(col("doc_id"), col("chunk_idx"),
           md5(col("chunk").cast("binary")).as("chunk_md5"), col("n_tokens"))
-        .orderBy("doc_id", "chunk_idx")),
+        .orderBy("doc_id", "chunk_idx"),
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM documents),
+           idx AS (SELECT doc_id, ts, len(ts) AS n,
+                          CASE WHEN len(ts) <= 64 THEN 1
+                               ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
+                   FROM t WHERE len(ts) > 0),
+           ch AS (SELECT doc_id, g.k AS chunk_idx,
+                         array_to_string(
+                           ts[g.k * 48 + 1 : least(g.k * 48 + 64, n)], ' ')
+                           AS chunk,
+                         least(g.k * 48 + 64, n) - g.k * 48 AS n_tokens
+                  FROM idx
+                  CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
+                  WHERE g.k < nch)
+      SELECT doc_id, chunk_idx, md5(chunk) AS chunk_md5, n_tokens
+      FROM ch
+      ORDER BY doc_id, chunk_idx"""),
 
     // -- token-budget packing: assign docs to ~1000-token batches ---------
     //    Greedy prefix-sum packing: pack = floor(preceding-total /
     //    budget), with the running total computed as a distributed
     //    two-pass prefix sum (shardedCum) — no single-partition window
     //    anywhere in the plan.
-    "txt_pack" -> ((s, d) => {
+    Query("txt_pack", (s, d) => {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), size(toks).cast("long").as("n_tok"))
       shardedCum(base, expr("doc_id DIV 64"), Seq("doc_id"), "n_tok")
         .select(col("doc_id"), col("n_tok"),
           expr("(cum - n_tok) DIV 1000").as("pack_id"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""
+      SELECT doc_id, n_tok, CAST(cum - n_tok AS BIGINT) // 1000 AS pack_id
+      FROM (SELECT doc_id, len(${Text.sqlTokens("text")}) AS n_tok,
+                   sum(len(${Text.sqlTokens("text")})) OVER (ORDER BY doc_id
+                     ROWS UNBOUNDED PRECEDING) AS cum
+            FROM documents)
+      ORDER BY doc_id"""),
 
     // -- per-document token statistics ------------------------------------
-    "txt_token_stats" -> ((s, d) =>
+    Query("txt_token_stats", (s, d) =>
       Tables.documents(s, d)
         .select(
           col("doc_id"),
@@ -521,10 +577,20 @@ object TextAnalysis extends QueryModule {
           when(size(toks) > 0,
             length(regexp_replace(col("text"), "[^A-Za-z0-9]", ""))
               .cast("double") / size(toks)).as("avg_token_len"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      SELECT doc_id,
+             len(${Text.sqlTokens("text")}) AS n_tokens,
+             len(list_distinct(${Text.sqlTokens("text")})) AS n_distinct,
+             length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS n_alnum_chars,
+             CASE WHEN len(${Text.sqlTokens("text")}) = 0 THEN NULL
+                  ELSE length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))::DOUBLE
+                         / len(${Text.sqlTokens("text")}) END AS avg_token_len
+      FROM documents
+      ORDER BY doc_id"""),
 
     // -- quality scoring: stopword ratio, distinct ratio, length ----------
-    "txt_quality" -> ((s, d) => {
+    Query("txt_quality", (s, d) => {
       val nTok = size(toks).cast("long")
       val nStop = stopCount(toks)
       val nDist = size(array_distinct(toks)).cast("long")
@@ -540,14 +606,33 @@ object TextAnalysis extends QueryModule {
             + (nDist.cast("double") / nTok) * 0.3
             + when(nTok >= 50, 0.2).otherwise(0.0)).as("quality"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""
+      WITH t AS (
+        SELECT doc_id,
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
+        FROM documents)
+      SELECT doc_id, n_tokens,
+             CASE WHEN n_tokens = 0 THEN NULL
+                  ELSE n_stop::DOUBLE / n_tokens END AS stop_ratio,
+             CASE WHEN n_tokens = 0 THEN NULL
+                  ELSE n_dist::DOUBLE / n_tokens END AS distinct_ratio,
+             CASE WHEN n_tokens = 0 THEN NULL
+                  ELSE (n_stop::DOUBLE / n_tokens) * 0.5
+                         + (n_dist::DOUBLE / n_tokens) * 0.3
+                         + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END)
+                  END AS quality
+      FROM t
+      ORDER BY doc_id"""),
 
     // -- language-ID heuristic: argmax of per-language stopword hits.
     // Scalable shape: ONE tokenize pass (fused generator) + conditional
     // sums in a single codegen'd hash agg, left-joined back so empty
     // docs keep their 'und' verdict. (The HOF formulation re-evaluated
     // the interpreted token filter ~15x per row.)
-    "txt_lang_id" -> ((s, d) => {
+    Query("txt_lang_id", (s, d) => {
       val docs = Tables.documents(s, d)
       val hitAggs = langProfiles.map { case (lg, ws) =>
         sum(when(col("w").isin(ws: _*), 1L).otherwise(0L)).as(s"n_$lg")
@@ -571,10 +656,31 @@ object TextAnalysis extends QueryModule {
         .select(col("doc_id"), col("lang"), pred.as("pred_lang"),
           en.as("n_en"), es.as("n_es"), de.as("n_de"), fr.as("n_fr"))
         .orderBy("doc_id")
+    },
+      {
+      val hitCols = langProfiles.map { case (lg, ws) =>
+        val set = ws.map(w => s"'$w'").mkString(", ")
+        s"len(list_filter(${Text.sqlTokens("lower(text)")}, t -> t IN ($set))) AS n_$lg"
+      }.mkString(",\n               ")
+      s"""
+      WITH t AS (
+        SELECT doc_id, lang, len(${Text.sqlTokens("lower(text)")}) AS n_tokens,
+               $hitCols
+        FROM documents)
+      SELECT doc_id, lang,
+             CASE WHEN n_tokens = 0 THEN 'und'
+                  WHEN greatest(n_en, n_es, n_de, n_fr) = 0 THEN 'unk'
+                  WHEN n_en >= greatest(n_es, n_de, n_fr) THEN 'en'
+                  WHEN n_es >= greatest(n_de, n_fr) THEN 'es'
+                  WHEN n_de >= n_fr THEN 'de'
+                  ELSE 'fr' END AS pred_lang,
+             n_en, n_es, n_de, n_fr
+      FROM t
+      ORDER BY doc_id"""
     }),
 
     // -- BPE-ish token-count estimation (chars/4 + word heuristic) --------
-    "txt_token_estimate" -> ((s, d) => {
+    Query("txt_token_estimate", (s, d) => {
       val nWords = size(toks).cast("long")
       val nChars = length(col("text")).cast("long")
       Tables.documents(s, d)
@@ -585,10 +691,18 @@ object TextAnalysis extends QueryModule {
           // subword estimate, same arithmetic both engines
           (nWords + floor(nChars.cast("double") / 8).cast("long")).as("est_bpe_blend"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""
+      SELECT doc_id,
+             len(${Text.sqlTokens("text")}) AS n_words,
+             length(text) AS n_chars,
+             ceil(length(text)::DOUBLE / 4)::BIGINT AS est_bpe_chars4,
+             len(${Text.sqlTokens("text")}) + floor(length(text)::DOUBLE / 8)::BIGINT AS est_bpe_blend
+      FROM documents
+      ORDER BY doc_id"""),
 
     // -- rolling polynomial hash fingerprint (exact fold, mod 1e9+7) ------
-    "txt_rolling_hash" -> ((s, d) => {
+    Query("txt_rolling_hash", (s, d) => {
       val canon = array_join(Text.tokensLower(col("text")), " ")
       val codes = transform(split(canon, ""), c => ascii(c).cast("long"))
       val rolled = aggregate(codes, lit(0L),
@@ -596,31 +710,124 @@ object TextAnalysis extends QueryModule {
       Tables.documents(s, d)
         .select(col("doc_id"), rolled.as("rhash"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""
+      SELECT doc_id,
+             list_reduce(
+               list_prepend(0::BIGINT,
+                 list_transform(string_split(array_to_string(${Text.sqlTokens("lower(text)")}, ' '), ''),
+                                c -> ord(c)::BIGINT)),
+               (a, b) -> (a * 31 + b) % 1000000007) AS rhash
+      FROM documents
+      ORDER BY doc_id"""),
 
     // -- document fingerprint: md5 of canonical token stream --------------
-    "txt_fingerprint" -> ((s, d) =>
+    Query("txt_fingerprint", (s, d) =>
       Tables.documents(s, d)
         .select(
           col("doc_id"),
           md5(trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))
             .cast("binary")).as("fingerprint"))
-        .orderBy("doc_id")),
+        .orderBy("doc_id"),
+      s"""
+      SELECT doc_id,
+             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint
+      FROM documents
+      ORDER BY doc_id"""),
 
     // -- n-gram mining: top bigrams corpus-wide (fused generator) ---------
-    "txt_bigrams" -> ((s, d) =>
+    Query("txt_bigrams", (s, d) =>
       Tables.documents(s, d)
         .select(graft.functions.NgramExplode.ngrams(s, col("text"), 2).as("bigram"))
         .groupBy("bigram")
         .agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("bigram"))
-        .limit(30)),
+        .limit(30),
+      s"""
+      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
+           b AS (SELECT unnest(list_transform(range(1, len(toks)),
+                        i -> toks[i] || ' ' || toks[i + 1])) AS bigram
+                 FROM t WHERE len(toks) >= 2)
+      SELECT bigram, count(1) AS cnt
+      FROM b
+      GROUP BY bigram
+      ORDER BY cnt DESC, bigram
+      LIMIT 30"""),
 
     // -- collocation mining: top adjacent pairs by PMI (see pmiFrom) ----
-    "txt_pmi" -> ((s, d) => pmiFrom(Tables.documents(s, d))),
+    Query("txt_pmi", (s, d) => pmiFrom(Tables.documents(s, d)),
+      s"""
+      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
+           b AS (SELECT unnest(list_transform(range(1, len(toks)),
+                        i -> toks[i] || ' ' || toks[i + 1])) AS bg
+                 FROM t WHERE len(toks) >= 2),
+           c12 AS (SELECT bg, count(1)::BIGINT AS c12 FROM b GROUP BY bg),
+           uni AS (SELECT w, count(1)::BIGINT AS c1
+                   FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
+           n AS (SELECT sum(c1)::BIGINT AS nw FROM uni),
+           p0 AS (SELECT c.bg, c.c12,
+                         (c.c12 * n.nw)::DOUBLE AS xa,
+                         (ua.c1 * ub.c1)::DOUBLE AS xb
+                  FROM c12 c
+                  CROSS JOIN n
+                  JOIN uni ua ON split_part(c.bg, ' ', 1) = ua.w
+                  JOIN uni ub ON split_part(c.bg, ' ', 2) = ub.w
+                  WHERE c.c12 >= $PMI_MIN_SUPPORT),
+           p1 AS (SELECT *, ${graft.functions.DetMath.eSql("xa")} AS ea,
+                         ${graft.functions.DetMath.eSql("xb")} AS eb
+                  FROM p0),
+           p2 AS (SELECT *, ${graft.functions.DetMath.ySql("xa", "ea")} AS ya,
+                         ${graft.functions.DetMath.ySql("xb", "eb")} AS yb
+                  FROM p1),
+           p3 AS (SELECT *, ${graft.functions.DetMath.zSql("ya")} AS za,
+                         ${graft.functions.DetMath.zSql("yb")} AS zb
+                  FROM p2),
+           p4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM p3)
+      SELECT bg AS bigram, c12 AS cnt,
+             floor((${graft.functions.DetMath.lnSqlFromParts("ea", "za", "za2")}
+               - ${graft.functions.DetMath.lnSqlFromParts("eb", "zb", "zb2")})
+               * 1e6)::BIGINT AS pmi_micronat
+      FROM p4
+      ORDER BY pmi_micronat DESC, bigram
+      LIMIT 50"""),
 
     // -- RAKE keyphrase extraction (see rakeFrom) ------------------------
-    "txt_rake" -> ((s, d) => rakeFrom(Tables.documents(s, d))),
+    Query("txt_rake", (s, d) => rakeFrom(Tables.documents(s, d)),
+      // PMI mirrored margin-for-margin: the same bigram/unigram counts,
+      // the same integer products cast to exact doubles, the DetMath ln
+      // staging for BOTH arguments, floor (sign-uniform — PMI goes
+      // negative) to micronats
+      // islands differ by a constant per doc (1-based vs 0-based
+      // positions) — grouping keys, not values, so the phrases agree
+      s"""
+      WITH d AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
+           pos AS (SELECT doc_id, ts,
+                          unnest(range(1, len(ts) + 1)) AS i FROM d),
+           tok AS (SELECT doc_id, i, ts[i] AS w FROM pos),
+           ns AS (SELECT doc_id, i, w,
+                         i - row_number() OVER (PARTITION BY doc_id
+                           ORDER BY i) AS island
+                  FROM tok WHERE w NOT IN ($stopwordsSql)),
+           phr AS (SELECT doc_id, island,
+                          string_agg(w, ' ' ORDER BY i) AS phrase,
+                          count(1)::BIGINT AS len
+                   FROM ns GROUP BY doc_id, island
+                   HAVING count(1) <= $RAKE_MAX_PHRASE),
+           pw AS (SELECT len, unnest(string_split(phrase, ' ')) AS w
+                  FROM phr),
+           ws AS (SELECT w, ((1000 * sum(len)) // count(1))::BIGINT
+                    AS wscore_mille
+                  FROM pw GROUP BY w),
+           pt AS (SELECT phrase, count(1) AS n_occ FROM phr
+                  GROUP BY phrase),
+           ptw AS (SELECT phrase, n_occ,
+                          unnest(string_split(phrase, ' ')) AS w FROM pt)
+      SELECT ptw.phrase, any_value(ptw.n_occ) AS n_occ,
+             sum(ws.wscore_mille)::BIGINT AS score_mille
+      FROM ptw JOIN ws ON ptw.w = ws.w
+      GROUP BY ptw.phrase
+      ORDER BY score_mille DESC, phrase
+      LIMIT 25"""),
 
     // -- exact heavy hitters via the two-phase sketch pattern ------------
     //    Phase 1: one scan through the Misra-Gries aggregate (constant
@@ -632,7 +839,7 @@ object TextAnalysis extends QueryModule {
     //    guaranteed-superset property is consumed. At 100 TB this
     //    replaces a full-vocabulary groupBy with O(k) state + a
     //    100-item filtered recount.
-    "txt_heavy_hitters" -> ((s, d) => {
+    Query("txt_heavy_hitters", (s, d) => {
       val tokens = Tables.documents(s, d)
         .select(graft.functions.TokenizeExplode
           .tokenize(s, lower(col("text"))).as("w"))
@@ -653,7 +860,15 @@ object TextAnalysis extends QueryModule {
         .filter(col("word").isNotNull && col("cnt") * 50 > lit(nTotal))
         .select(col("word"), col("cnt"))
         .orderBy("word")
-    }),
+    },
+      s"""
+      WITH w AS (SELECT unnest(${Text.sqlTokens("lower(text)")}) AS word FROM documents),
+           c AS (SELECT word, count(1) AS cnt FROM w GROUP BY word),
+           t AS (SELECT sum(cnt) AS n FROM c)
+      SELECT word, cnt
+      FROM c, t
+      WHERE cnt * 50 > n
+      ORDER BY word"""),
 
     // -- cross-document duplicated 8-grams (exact-substring dedup signal,
     //    cf. Lee et al., "Deduplicating Training Data Makes Language
@@ -661,7 +876,7 @@ object TextAnalysis extends QueryModule {
     //    with occurrence counts — the report that locates boilerplate /
     //    shared passages. One generator pass + one hash agg; at 100 TB
     //    the ngram key would be hashed (md5) before the shuffle.
-    "txt_dup_ngrams" -> ((s, d) =>
+    Query("txt_dup_ngrams", (s, d) =>
       Tables.documents(s, d)
         .select(col("doc_id"),
           graft.functions.NgramExplode.ngrams(s, col("text"), 8).as("ngram"))
@@ -670,13 +885,28 @@ object TextAnalysis extends QueryModule {
           count(lit(1)).as("n_occ"))
         .filter(col("n_docs") >= 2)
         .orderBy(col("n_occ").desc, col("ngram"))
-        .limit(50)),
+        .limit(50),
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
+           g AS (SELECT doc_id,
+                        unnest(list_transform(range(1, len(toks) - 6),
+                          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                               || ' ' || toks[i+3] || ' ' || toks[i+4] || ' '
+                               || toks[i+5] || ' ' || toks[i+6] || ' '
+                               || toks[i+7])) AS ngram
+                 FROM t WHERE len(toks) >= 8)
+      SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(1) AS n_occ
+      FROM g
+      GROUP BY ngram
+      HAVING count(DISTINCT doc_id) >= 2
+      ORDER BY n_occ DESC, ngram
+      LIMIT 50"""),
 
     // -- within-document repetition (Gopher/MassiveText-style quality
     //    signal): duplicated-trigram fraction per doc. Generator pass ->
     //    count + count-distinct per doc; docs shorter than one trigram
     //    join back with zero counts ---------------------------------------
-    "txt_repetition" -> ((s, d) => {
+    Query("txt_repetition", (s, d) => {
       val docs = Tables.documents(s, d)
       val tri = docs
         .select(col("doc_id"),
@@ -691,12 +921,27 @@ object TextAnalysis extends QueryModule {
             .otherwise(lit(1.0) - col("nd").cast("double") / col("nt"))
             .as("dup_ratio"))
         .orderBy("doc_id")
-    }),
+    },
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS toks FROM documents),
+      g AS (SELECT doc_id,
+                   unnest(list_transform(range(1, len(toks) - 1),
+                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
+            FROM t WHERE len(toks) >= 3),
+      agg AS (SELECT doc_id, count(1) AS nt, count(DISTINCT g) AS nd
+              FROM g GROUP BY doc_id)
+      SELECT d.doc_id,
+             coalesce(a.nt, 0) AS n_trigrams,
+             coalesce(a.nd, 0) AS n_distinct,
+             CASE WHEN coalesce(a.nt, 0) = 0 THEN 0.0
+                  ELSE 1.0 - a.nd::DOUBLE / a.nt END AS dup_ratio
+      FROM documents d LEFT JOIN agg a USING (doc_id)
+      ORDER BY d.doc_id"""),
 
     // -- PII-style normalization pass: count + redact emails, URLs and
     //    digit runs (one regexp_count/replace chain, codegen'd; patterns
     //    chosen to mean the same thing in Java regex and RE2) -------------
-    "txt_redact" -> ((s, d) => {
+    Query("txt_redact", (s, d) => {
       val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
       val url = "https?://[^ \\t\\n]+"
       val num = "[0-9]+"
@@ -712,7 +957,19 @@ object TextAnalysis extends QueryModule {
           regexp_count(col("text"), lit(num)).cast("long").as("n_nums"),
           md5(redacted.cast("binary")).as("redacted_hash"))
         .orderBy("doc_id")
-    }),
+    },
+      """
+      SELECT doc_id,
+             len(regexp_extract_all(text,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
+             len(regexp_extract_all(text, 'https?://[^ \t\n]+')) AS n_urls,
+             len(regexp_extract_all(text, '[0-9]+')) AS n_nums,
+             md5(regexp_replace(regexp_replace(regexp_replace(text,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+               'https?://[^ \t\n]+', '<URL>', 'g'),
+               '[0-9]+', '<NUM>', 'g')) AS redacted_hash
+      FROM documents
+      ORDER BY doc_id"""),
 
     // -- incremental corpus upsert: latest-wins merge of a base snapshot
     //    and a delta batch by key — the ingestion primitive behind every
@@ -722,7 +979,7 @@ object TextAnalysis extends QueryModule {
     //    upserts pay no re-shuffle. Delta rows carry version 1 and a
     //    rewritten text; survivors = delta where keys overlap, base
     //    elsewhere (md5 keeps the compare rows small) -----------------------
-    "pipe_upsert" -> ((s, d) => {
+    Query("pipe_upsert", (s, d) => {
       val base = Tables.documents(s, d)
         .select(col("doc_id"), col("text"), lit(0L).as("version"))
       val delta = Tables.documents(s, d)
@@ -737,7 +994,21 @@ object TextAnalysis extends QueryModule {
         .select(col("doc_id"), col("version"),
           md5(col("text").cast("binary")).as("text_md5"))
         .orderBy("doc_id")
-    }),
+    },
+      """
+      WITH u AS (
+        SELECT doc_id, text, 0 AS version FROM documents
+        UNION ALL
+        SELECT doc_id, text || ' [revised]' AS text, 1 AS version
+        FROM documents WHERE doc_id % 5 = 0),
+      r AS (
+        SELECT doc_id, version, text,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY version DESC) AS rn
+        FROM u)
+      SELECT doc_id, CAST(version AS BIGINT) AS version, md5(text) AS text_md5
+      FROM r WHERE rn = 1
+      ORDER BY doc_id"""),
 
     // -- CDC merge apply (MERGE INTO semantics, one step past the
     //    latest-wins upsert): a change feed with explicit ops — D
@@ -747,7 +1018,7 @@ object TextAnalysis extends QueryModule {
     //    snapshot in ONE full-outer join by key. No driver state, one
     //    shuffle; at scale the same shape rides a bucketed layout so
     //    periodic CDC batches pay no base re-shuffle ----------------------
-    "pipe_cdc_apply" -> ((s, d) => {
+    Query("pipe_cdc_apply", (s, d) => {
       val docs = Tables.documents(s, d)
       val base = docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id").as("b_id"), col("text").as("b_text"))
@@ -771,13 +1042,44 @@ object TextAnalysis extends QueryModule {
         .select(col("doc_id"), col("src"),
           md5(col("text").cast("binary")).as("text_md5"))
         .orderBy("doc_id")
-    }),
+    },
+      // MERGE rules mirrored clause-for-clause: unmatched U and matched I
+      // fall through to no-op/base exactly as in the engine
+      """
+      WITH base AS (
+        SELECT doc_id AS b_id, text AS b_text
+        FROM documents WHERE doc_id % 2 = 0),
+      changes AS (
+        SELECT doc_id AS c_id,
+               CASE WHEN doc_id % 10 = 0 THEN 'D'
+                    WHEN doc_id % 10 = 2 THEN 'U'
+                    ELSE 'I' END AS op,
+               text || ' [cdc]' AS c_text
+        FROM documents WHERE doc_id % 10 IN (0, 1, 2)),
+      j AS (SELECT * FROM base FULL OUTER JOIN changes ON b_id = c_id),
+      r AS (SELECT coalesce(b_id, c_id) AS doc_id,
+                   CASE WHEN coalesce(op, 'N') = 'U' AND b_id IS NOT NULL
+                          THEN 'U'
+                        WHEN coalesce(op, 'N') = 'I' AND b_id IS NULL
+                          THEN 'I'
+                        WHEN b_id IS NOT NULL
+                             AND coalesce(op, 'N') NOT IN ('D', 'U')
+                          THEN 'B'
+                   END AS src,
+                   b_text, c_text
+            FROM j)
+      SELECT doc_id, src,
+             md5(CASE WHEN src IN ('U', 'I') THEN c_text
+                      ELSE b_text END) AS text_md5
+      FROM r
+      WHERE src IS NOT NULL
+      ORDER BY doc_id"""),
 
     // -- end-to-end corpus curation (the composed pipeline a training-data
     //    user actually runs): quality-filter -> fingerprint-dedup (keep
     //    lowest doc_id) -> per-language corpus stats. One tokenize pass,
     //    one dedup shuffle, one agg -----------------------------------------
-    "pipe_curation" -> ((s, d) => {
+    Query("pipe_curation", (s, d) => {
       val nTok = size(toks).cast("long")
       val nStop = stopCount(toks)
       val nDist = size(array_distinct(toks)).cast("long")
@@ -801,7 +1103,31 @@ object TextAnalysis extends QueryModule {
         .groupBy("lang")
         .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("total_tokens"))
         .orderBy("lang")
-    }),
+    },
+      s"""
+      WITH t AS (
+        SELECT doc_id, lang, text,
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
+        FROM documents),
+      scored AS (
+        SELECT doc_id, lang, text, n_tokens,
+               (n_stop::DOUBLE / n_tokens) * 0.5
+                 + (n_dist::DOUBLE / n_tokens) * 0.3
+                 + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END) AS q
+        FROM t WHERE n_tokens > 0),
+      kept AS (
+        SELECT lang, n_tokens,
+               row_number() OVER (
+                 PARTITION BY md5(trim(regexp_replace(lower(text),
+                   '[^a-z0-9]+', ' ', 'g')))
+                 ORDER BY doc_id) AS rn
+        FROM scored WHERE q >= 0.30)
+      SELECT lang, count(1) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
+      FROM kept WHERE rn = 1
+      GROUP BY lang
+      ORDER BY lang"""),
 
     // -- the full training-data path in ONE query: quality-filter ->
     //    fingerprint-dedup -> context-window chunking -> token-budget
@@ -810,7 +1136,7 @@ object TextAnalysis extends QueryModule {
     //    above, composed. Shapes: one tokenize pass, one dedup
     //    shuffle, one generator pass, one (per-shard at scale) packing
     //    window, one agg. ---------------------------------------------------
-    "pipe_training_batches" -> ((s, d) => {
+    Query("pipe_training_batches", (s, d) => {
       val nTok = size(toks).cast("long")
       val nStop = stopCount(toks)
       val nDist = size(array_distinct(toks)).cast("long")
@@ -838,10 +1164,53 @@ object TextAnalysis extends QueryModule {
         .groupBy("pack_id")
         .agg(count(lit(1)).as("n_chunks"), sum("n_tokens").as("pack_tokens"))
         .orderBy("pack_id")
-    }),
+    },
+      s"""
+      WITH t AS (
+        SELECT doc_id, text,
+               len(${Text.sqlTokens("text")}) AS n_tokens,
+               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
+               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
+        FROM documents),
+      scored AS (
+        SELECT doc_id, text,
+               (n_stop::DOUBLE / n_tokens) * 0.5
+                 + (n_dist::DOUBLE / n_tokens) * 0.3
+                 + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END) AS q
+        FROM t WHERE n_tokens > 0),
+      kept AS (
+        SELECT doc_id, text FROM (
+          SELECT doc_id, text,
+                 row_number() OVER (
+                   PARTITION BY md5(trim(regexp_replace(lower(text),
+                     '[^a-z0-9]+', ' ', 'g')))
+                   ORDER BY doc_id) AS rn
+          FROM scored WHERE q >= 0.30)
+        WHERE rn = 1),
+      ktoks AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM kept),
+      idx AS (SELECT doc_id, len(ts) AS n,
+                     CASE WHEN len(ts) <= 64 THEN 1
+                          ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
+              FROM ktoks WHERE len(ts) > 0),
+      ch AS (SELECT doc_id, g.k AS chunk_idx,
+                    least(g.k * 48 + 64, n) - g.k * 48 AS n_tokens
+             FROM idx
+             CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
+             WHERE g.k < nch),
+      packed AS (
+        SELECT n_tokens,
+               CAST(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
+                      ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT)
+                 // 1000 AS pack_id
+        FROM ch)
+      SELECT pack_id, count(1) AS n_chunks,
+             CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
+      FROM packed
+      GROUP BY pack_id
+      ORDER BY pack_id"""),
 
     // -- TF-IDF: top terms per document (integer-scaled scores) -----------
-    "txt_tfidf" -> ((s, d) => {
+    Query("txt_tfidf", (s, d) => {
       val docs = Tables.documents(s, d)
       // corpus size folded into the DAG as a broadcast 1-row agg (no
       // plan-time count job); idf ln via DetMath so both engines
@@ -865,7 +1234,34 @@ object TextAnalysis extends QueryModule {
         .filter(col("rk") <= 3)
         .select(col("doc_id"), col("rk"), col("term"), col("iscore"))
         .orderBy("doc_id", "rk")
-    }),
+    },
+      s"""
+      WITH tf AS (
+        SELECT doc_id, term, count(1) AS tf
+        FROM (SELECT doc_id, unnest(${Text.sqlTokens("text")}) AS term FROM documents)
+        GROUP BY doc_id, term),
+      df AS (SELECT term, count(1) AS df FROM tf GROUP BY term),
+      n AS (SELECT count(1)::DOUBLE AS n_docs FROM documents),
+      s0 AS (SELECT tf.doc_id, tf.term, tf.tf, (n.n_docs / df.df) AS x
+             FROM tf JOIN df USING (term) CROSS JOIN n),
+      s1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM s0),
+      s2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM s1),
+      s3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM s2),
+      s4 AS (SELECT *, (z * z) AS z2 FROM s3),
+      scored AS (
+        SELECT doc_id, term,
+               round(tf * ${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
+                     * 1e6)::BIGINT AS iscore
+        FROM s4),
+      ranked AS (
+        SELECT doc_id, term, iscore,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY iscore DESC, term) AS rk
+        FROM scored)
+      SELECT doc_id, rk, term, iscore
+      FROM ranked
+      WHERE rk <= 3
+      ORDER BY doc_id, rk"""),
 
     // -- BM25 retrieval scoring (Robertson & Zaragoza, "The
     //    Probabilistic Relevance Framework: BM25 and Beyond", FnTIR
@@ -879,7 +1275,20 @@ object TextAnalysis extends QueryModule {
     //    token stream, then broadcast-only attaches (query terms,
     //    1-row corpus stats) — the corpus never re-shuffles on
     //    anything wider than (doc_id, term) ---------------------------------
-    "txt_bm25" -> ((s, d) => bm25From(Tables.documents(s, d))),
+    Query("txt_bm25", (s, d) => bm25From(Tables.documents(s, d)),
+      // BM25 with the idf ln computed via DetMath (bit-identical across
+      // engines) and identical association of the division chain;
+      // constants forced through '…'::DOUBLE so DuckDB's DECIMAL literal
+      // path (exact-rational, ≠ double product in ~half of tf values)
+      // never enters; per-term weights integer-scaled BEFORE the per-doc
+      // sum so the aggregate is order-free exact arithmetic.
+      s"""
+      WITH $bm25CtesSql
+      SELECT doc_id, sum(w_e6)::BIGINT AS score_e6, count(1) AS n_hit
+      FROM w
+      GROUP BY doc_id
+      ORDER BY score_e6 DESC, doc_id
+      LIMIT 20"""),
 
     // -- hybrid sparse+dense retrieval: reciprocal-rank fusion (Cormack,
     //    Clarke & Buettcher, SIGIR 2009) of the BM25 top-20 and the IVF
@@ -891,7 +1300,7 @@ object TextAnalysis extends QueryModule {
     //    operators composed unchanged; the fusion itself is a full
     //    outer join of two 20-row lists — broadcast-trivial at any
     //    corpus scale (the arms do the heavy lifting) ------------------
-    "txt_hybrid_retrieval" -> ((s, d) => {
+    Query("txt_hybrid_retrieval", (s, d) => {
       val ws = org.apache.spark.sql.expressions.Window
         .orderBy(col("score_e6").desc, col("doc_id"))
       val sparse = bm25From(Tables.documents(s, d)) // top-20: bounded window
@@ -910,7 +1319,35 @@ object TextAnalysis extends QueryModule {
             .as("rrf_e6"))
         .orderBy(col("rrf_e6").desc, col("doc_id"))
         .limit(15)
-    }),
+    },
+      // RRF fusion (Cormack, Clarke & Buettcher, SIGIR 2009): the BM25
+      // top-20 and the IVF dense top-20 for query vector 0, fused as
+      // 1e6 DIV (60 + rank) per arm — integer-exact, distinct per rank.
+      // Missing from one arm contributes 0 (rank sentinel 0). Composes
+      // the two proven CTE chains verbatim (bm25CtesSql + Similarity's
+      // prefixed ivfCtesSql).
+      s"""
+      WITH $bm25CtesSql,
+      bmtop AS (SELECT doc_id, sum(w_e6)::BIGINT AS score_e6
+                FROM w GROUP BY doc_id
+                ORDER BY score_e6 DESC, doc_id LIMIT 20),
+      brank AS (SELECT doc_id,
+                       row_number() OVER (ORDER BY score_e6 DESC, doc_id)
+                         AS rank_s
+                FROM bmtop),
+      ${Similarity.ivfCtesSql("vec_id = 0", "iv")},
+      drank AS (SELECT vec_id AS doc_id, rk AS rank_d
+                FROM ivranked WHERE rk <= 20)
+      SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
+             coalesce(b.rank_s, 0)::BIGINT AS rank_sparse,
+             coalesce(d.rank_d, 0)::BIGINT AS rank_dense,
+             (CASE WHEN b.rank_s IS NULL THEN 0
+                   ELSE 1000000 // (60 + b.rank_s) END
+              + CASE WHEN d.rank_d IS NULL THEN 0
+                     ELSE 1000000 // (60 + d.rank_d) END)::BIGINT AS rrf_e6
+      FROM brank b FULL OUTER JOIN drank d ON b.doc_id = d.doc_id
+      ORDER BY rrf_e6 DESC, doc_id
+      LIMIT 15"""),
 
     // -- per-document n-gram novelty (the "how much of this doc is new
     //    text" curation signal, cf. Lee et al.'s dedup ablations):
@@ -923,8 +1360,30 @@ object TextAnalysis extends QueryModule {
     //    back) rather than checkpointed: at corpus scale a re-scan is
     //    cheaper than materializing the gram stream. Docs shorter than
     //    8 tokens emit nothing ---------------------------------------------
-    "txt_ngram_novelty" -> ((s, d) =>
-      ngramNoveltyFrom(Tables.documents(s, d))),
+    Query("txt_ngram_novelty", (s, d) =>
+      ngramNoveltyFrom(Tables.documents(s, d)),
+      // Novelty over raw grams (the Spark side's xxhash64 key is an
+      // internal fixed-width shuffle key, transparent to the result).
+      s"""
+      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
+           g0 AS (SELECT doc_id,
+                         unnest(list_transform(range(1, len(toks) - 6),
+                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
+                                || ' ' || toks[i+3] || ' ' || toks[i+4] || ' '
+                                || toks[i+5] || ' ' || toks[i+6] || ' '
+                                || toks[i+7])) AS ngram
+                  FROM t WHERE len(toks) >= 8),
+           g AS (SELECT DISTINCT doc_id, ngram FROM g0),
+           f AS (SELECT ngram, min(doc_id) AS first_doc FROM g GROUP BY ngram)
+      SELECT g.doc_id,
+             count(1) AS n_grams,
+             sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)::BIGINT
+               AS n_novel,
+             (sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)::BIGINT
+               * 1000) // count(1) AS novel_mille
+      FROM g JOIN f USING (ngram)
+      GROUP BY g.doc_id
+      ORDER BY doc_id"""),
 
     // -- character-class entropy (quality signal: gibberish and
     //    boilerplate sit at the distribution's extremes). Two-step
@@ -933,7 +1392,7 @@ object TextAnalysis extends QueryModule {
     //    evaluate the identical expression tree left-to-right, so the
     //    1e6-scaled result is stable (same argument as the ln-based
     //    TF-IDF scores, see module scaladoc) -------------------------------
-    "txt_entropy" -> ((s, d) => {
+    Query("txt_entropy", (s, d) => {
       val classes = ('a' to 'z') ++ ('0' to '9')
       val lt = lower(col("text"))
       val counted = Tables.documents(s, d).select(
@@ -951,16 +1410,45 @@ object TextAnalysis extends QueryModule {
           when(col("n_alnum") === 0, 0L)
             .otherwise(round(ent * 1e6).cast("long")).as("entropy_e6"))
         .orderBy("doc_id")
+    },
+      {
+      val classes = ('a' to 'z') ++ ('0' to '9')
+      val cnts = classes.map(c =>
+        s"(length(lower(text)) - length(replace(lower(text), '$c', '')))::BIGINT AS c_$c")
+        .mkString(",\n               ")
+      val total = classes.map(c => s"c_$c").mkString(" + ")
+      val ent = classes.map(c =>
+        s"(CASE WHEN c_$c > 0 THEN -((c_$c::DOUBLE / n_alnum) * ln(c_$c::DOUBLE / n_alnum)) ELSE 0.0 END)")
+        .mkString("\n               + ")
+      s"""
+      WITH counted AS (
+        SELECT doc_id,
+               $cnts
+        FROM documents),
+      tot AS (SELECT *, ($total)::BIGINT AS n_alnum FROM counted)
+      SELECT doc_id, n_alnum,
+             CASE WHEN n_alnum = 0 THEN 0
+                  ELSE round(($ent) * 1e6)::BIGINT END AS entropy_e6
+      FROM tot
+      ORDER BY doc_id"""
     }),
 
     // -- length histogram -------------------------------------------------
-    "txt_length_hist" -> ((s, d) =>
+    Query("txt_length_hist", (s, d) =>
       Tables.documents(s, d)
         .groupBy(floor(col("n_chars") / 100).cast("long").as("bucket"))
         .agg(count(lit(1)).as("n"),
           min("n_chars").as("min_chars"),
           max("n_chars").as("max_chars"))
-        .orderBy("bucket")),
+        .orderBy("bucket"),
+      """
+      SELECT floor(n_chars / 100)::BIGINT AS bucket,
+             count(1) AS n,
+             min(n_chars) AS min_chars,
+             max(n_chars) AS max_chars
+      FROM documents
+      GROUP BY 1
+      ORDER BY bucket"""),
 
     // -- winnowing fingerprints (Schleimer et al., SIGMOD'03 — the MOSS
     //    algorithm): hash every token 3-gram with the exact polynomial
@@ -971,18 +1459,87 @@ object TextAnalysis extends QueryModule {
     //    density sketch for exact-substring-match detection at corpus
     //    scale. Per-row map-only HOF work + one distinct; docs shorter
     //    than 6 tokens have no complete window and emit nothing --------------
-    "txt_winnow" -> ((s, d) => winnowFrom(Tables.documents(s, d))),
+    Query("txt_winnow", (s, d) => winnowFrom(Tables.documents(s, d)),
+      s"""
+      SELECT doc_id, fp FROM $sqlWinnowFps
+      ORDER BY doc_id, fp"""),
 
     // -- Gopher quality rules (Rae et al. 2021, §A1.1): the document-
     //    level heuristic gate every large text pipeline runs before
     //    training. All thresholds compared in exact integer arithmetic
     //    (3n <= chars <= 10n instead of a double mean) so both engines
     //    agree bit-for-bit; one tokenize pass, map-only -------------------
-    "txt_gopher" -> ((s, d) => gopherFrom(Tables.documents(s, d))),
+    Query("txt_gopher", (s, d) => gopherFrom(Tables.documents(s, d)),
+      s"""
+      SELECT doc_id, n_tokens, word_chars, n_alpha_words, n_stop,
+             r_wordcount, r_meanwordlen, r_alphafrac, r_stopwords,
+             gopher_pass
+      FROM $sqlGopherFlags
+      ORDER BY doc_id"""),
 
     // -- Naive-Bayes quality classifier (see nbQualityFrom): the
     //    model-based filter pass over Gopher weak labels ---------------
-    "txt_nb_quality" -> ((s, d) => nbQualityFrom(Tables.documents(s, d))),
+    Query("txt_nb_quality", (s, d) => nbQualityFrom(Tables.documents(s, d)),
+      // weak labels from the gopher gate; two lnDet staging chains (one
+      // for the per-term llr, one for the 1-row prior), then all-integer
+      // scoring — the exact mirror of nbQualityFrom
+      {
+      val dm = graft.functions.DetMath
+      s"""
+      WITH lab AS (SELECT doc_id, gopher_pass FROM $sqlGopherFlags),
+           tf AS (SELECT doc_id, w, count(1)::BIGINT AS tf
+                  FROM (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS w
+                        FROM documents)
+                  GROUP BY doc_id, w),
+           byc AS (SELECT w,
+                          sum(CASE WHEN gopher_pass THEN tf ELSE 0 END)::BIGINT AS cp,
+                          sum(CASE WHEN gopher_pass THEN 0 ELSE tf END)::BIGINT AS cn
+                   FROM tf JOIN lab USING (doc_id)
+                   GROUP BY w),
+           tot AS (SELECT sum(cp)::BIGINT AS tp, sum(cn)::BIGINT AS tn,
+                          count(1)::BIGINT AS v
+                   FROM byc),
+           pr0 AS (SELECT (sum(CASE WHEN gopher_pass THEN 1 ELSE 0 END) + 1)::DOUBLE AS xa,
+                          (sum(CASE WHEN gopher_pass THEN 0 ELSE 1 END) + 1)::DOUBLE AS xb
+                   FROM lab),
+           pr1 AS (SELECT *, ${dm.eSql("xa")} AS ea, ${dm.eSql("xb")} AS eb
+                   FROM pr0),
+           pr2 AS (SELECT *, ${dm.ySql("xa", "ea")} AS ya,
+                          ${dm.ySql("xb", "eb")} AS yb FROM pr1),
+           pr3 AS (SELECT *, ${dm.zSql("ya")} AS za, ${dm.zSql("yb")} AS zb
+                   FROM pr2),
+           pr4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM pr3),
+           prior AS (SELECT round((${dm.lnSqlFromParts("ea", "za", "za2")}
+                       - ${dm.lnSqlFromParts("eb", "zb", "zb2")})
+                       * 1e6)::BIGINT AS prior_mu
+                     FROM pr4),
+           l0 AS (SELECT w, ((cp + 1) * (tn + v))::DOUBLE AS xa,
+                         ((cn + 1) * (tp + v))::DOUBLE AS xb
+                  FROM byc, tot),
+           l1 AS (SELECT *, ${dm.eSql("xa")} AS ea, ${dm.eSql("xb")} AS eb
+                  FROM l0),
+           l2 AS (SELECT *, ${dm.ySql("xa", "ea")} AS ya,
+                         ${dm.ySql("xb", "eb")} AS yb FROM l1),
+           l3 AS (SELECT *, ${dm.zSql("ya")} AS za, ${dm.zSql("yb")} AS zb
+                  FROM l2),
+           l4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM l3),
+           llr AS (SELECT w, round((${dm.lnSqlFromParts("ea", "za", "za2")}
+                     - ${dm.lnSqlFromParts("eb", "zb", "zb2")})
+                     * 1e6)::BIGINT AS llr_mu
+                   FROM l4),
+           sc AS (SELECT doc_id, count(1)::BIGINT AS n_terms,
+                         sum(tf * llr_mu)::BIGINT AS tok_mu
+                  FROM tf JOIN llr USING (w)
+                  GROUP BY doc_id)
+      SELECT s.doc_id, s.n_terms,
+             (p.prior_mu + s.tok_mu)::BIGINT AS nb_micronat,
+             (p.prior_mu + s.tok_mu > 0) AS nb_pass,
+             l.gopher_pass
+      FROM sc s
+      CROSS JOIN prior p
+      JOIN lab l ON s.doc_id = l.doc_id
+      ORDER BY s.doc_id"""
+    }),
 
     // -- code-vs-prose detection: symbol/digit density classifier --------
     //    The curation signal that routes code OUT of a prose corpus
@@ -996,7 +1553,7 @@ object TextAnalysis extends QueryModule {
     //    flag. One scan, two codegen'd regexp_replace strips, all
     //    integer — per-row regex cost rides the same WholeStageCodegen
     //    path the PII scan times.
-    "txt_code_detect" -> ((s, d) => {
+    Query("txt_code_detect", (s, d) => {
       val aug = concat(col("text"),
         when(col("doc_id") % 5 === 0,
           lit(" if (x < y) { return arr[i]; }")).otherwise(lit("")),
@@ -1015,7 +1572,29 @@ object TextAnalysis extends QueryModule {
           expr("(1000 * sym_chars) DIV n_chars").as("sym_mille"),
           (expr("(1000 * sym_chars) DIV n_chars") >= 10).as("is_code"))
         .orderBy("doc_id")
-    }),
+    },
+      // injected fragments mirrored verbatim; DuckDB regexp_replace
+      // needs the 'g' flag for the replace-all Spark does by default
+      """
+      WITH a AS (SELECT doc_id,
+                   text || (CASE WHEN doc_id % 5 = 0
+                              THEN ' if (x < y) { return arr[i]; }'
+                              ELSE '' END)
+                        || (CASE WHEN doc_id % 7 = 0
+                              THEN ' for i in range(10): total += vals[i]'
+                              ELSE '' END) AS t
+                 FROM documents),
+           m AS (SELECT doc_id, length(t)::BIGINT AS n_chars,
+                        (length(t) - length(regexp_replace(t,
+                          '[{}\[\]();=<>+*/&|#:]', '', 'g')))::BIGINT
+                          AS sym_chars,
+                        (length(t) - length(regexp_replace(t,
+                          '[0-9]', '', 'g')))::BIGINT AS digit_chars
+                 FROM a)
+      SELECT doc_id, n_chars, sym_chars, digit_chars,
+             ((1000 * sym_chars) // n_chars)::BIGINT AS sym_mille,
+             (((1000 * sym_chars) // n_chars) >= 10) AS is_code
+      FROM m ORDER BY doc_id"""),
 
     // -- bigram-LM document scoring (the CCNet/KenLM-shaped quality
     //    signal): train a maximum-likelihood bigram model on the corpus
@@ -1029,7 +1608,11 @@ object TextAnalysis extends QueryModule {
     //    both corpus-bounded), two equi-joins back to the bigram
     //    stream — at 100 TB the unigram table broadcasts and the
     //    bigram join shuffles once on the gram key -----------------------
-    "txt_lm_score" -> ((s, d) => lmScoreFrom(Tables.documents(s, d))),
+    Query("txt_lm_score", (s, d) => lmScoreFrom(Tables.documents(s, d)),
+      s"""
+      SELECT doc_id, n_bigrams, nll_micronat, avg_micronat
+      FROM $sqlLmScores
+      ORDER BY doc_id"""),
 
     // -- DATASET CARD: the per-source datasheet a corpus release ships
     //    with — doc/lang/char/token counts, Gopher-quality pass count,
@@ -1047,7 +1630,7 @@ object TextAnalysis extends QueryModule {
     //    out for good here: at 100 TB a redundant counting scan is
     //    real money). The observed map becomes the 1-row result; the
     //    oracle computes the identical aggregates explicitly ------------
-    "pipe_observe_metrics" -> ((s, d) => {
+    Query("pipe_observe_metrics", (s, d) => {
       val keep = col("n_chars").between(200, 3000)
       val obs = org.apache.spark.sql.Observation("pipe_gate")
       val observed = Tables.documents(s, d)
@@ -1072,9 +1655,24 @@ object TextAnalysis extends QueryModule {
           .as("kept_per_mille"),
         lit(g("chars_in")).as("chars_in"),
         lit(g("chars_kept")).as("chars_kept"))
-    }),
+    },
+      // the observe() counters, recomputed as plain aggregates: the
+      // Spark side reports what its accumulators saw in one pass; the
+      // oracle proves those numbers ARE the explicit aggregates
+      """
+      SELECT count(1)::BIGINT AS n_in,
+             (count(1) FILTER (WHERE n_chars BETWEEN 200 AND 3000))::BIGINT
+               AS n_kept,
+             (CASE WHEN count(1) = 0 THEN 0
+                   ELSE (count(1) FILTER (WHERE n_chars BETWEEN 200
+                     AND 3000)) * 1000 // count(1) END)::BIGINT
+               AS kept_per_mille,
+             COALESCE(sum(n_chars), 0)::BIGINT AS chars_in,
+             COALESCE(sum(n_chars) FILTER (WHERE n_chars BETWEEN 200
+               AND 3000), 0)::BIGINT AS chars_kept
+      FROM documents"""),
 
-    "pipe_dataset_card" -> ((s, d) => {
+    Query("pipe_dataset_card", (s, d) => {
       val docs = Tables.documents(s, d)
       val g = gopherFrom(docs).select("doc_id", "n_tokens", "gopher_pass")
       val h = docs.select(col("doc_id"), col("source"), col("lang"),
@@ -1090,7 +1688,26 @@ object TextAnalysis extends QueryModule {
           sum(when(col("gopher_pass"), 1L).otherwise(0L)).as("n_quality"),
           sum(when(col("nh") >= 2, 1L).otherwise(0L)).as("n_dup_docs"))
         .orderBy("source")
-    }),
+    },
+      s"""
+      WITH g AS (SELECT doc_id, n_tokens, gopher_pass FROM $sqlGopherFlags),
+           h AS (SELECT doc_id, source, lang, n_chars, md5(text) AS h
+                 FROM documents),
+           hc AS (SELECT h, count(1) AS nh FROM h GROUP BY h)
+      SELECT source,
+             count(1) AS n_docs,
+             count(DISTINCT lang)::BIGINT AS n_langs,
+             sum(n_chars)::BIGINT AS total_chars,
+             sum(n_tokens)::BIGINT AS total_tokens,
+             sum(CASE WHEN gopher_pass THEN 1 ELSE 0 END)::BIGINT
+               AS n_quality,
+             sum(CASE WHEN nh >= 2 THEN 1 ELSE 0 END)::BIGINT
+               AS n_dup_docs
+      FROM h
+      JOIN hc USING (h)
+      JOIN g USING (doc_id)
+      GROUP BY source
+      ORDER BY source"""),
 
     // -- deterministic output sharding + release manifest: the step
     //    that writes a curated corpus as N fixed shards. Shard = md5
@@ -1116,7 +1733,53 @@ object TextAnalysis extends QueryModule {
     //    number passes Luhn is emergent arithmetic, not a planted flag
     //    — both engines must compute the same checksum to agree. One
     //    scan, one aggregate; regexes run per row inside codegen. -----
-    "pipe_pii_scan" -> ((s, d) => piiScanFrom(Tables.documents(s, d))),
+    Query("pipe_pii_scan", (s, d) => piiScanFrom(Tables.documents(s, d)),
+      // shard assignment + xor digest mirrored hash-for-hash: DuckDB's
+      // bit_xor over the same 48-bit text-md5 longs is the same
+      // order-free fold
+      // fragment construction + Luhn fold mirrored step-for-step
+      """
+      WITH a AS (
+        SELECT text ||
+               (CASE WHEN doc_id % 4 = 0 THEN ' contact user' ||
+                 (doc_id % 1000)::VARCHAR || '@example.com' ELSE '' END) ||
+               (CASE WHEN doc_id % 6 = 0 THEN ' call +1-555-' ||
+                 lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END) ||
+               (CASE WHEN doc_id % 5 = 0 THEN ' host 10.' ||
+                 (doc_id % 256)::VARCHAR || '.0.' ||
+                 (doc_id % 100)::VARCHAR ELSE '' END) ||
+               (CASE WHEN doc_id % 3 = 0 THEN ' card 4' ||
+                 lpad(((doc_id * 7919) % 1000000000000000)::VARCHAR,
+                   15, '0') ELSE '' END) AS aug
+        FROM documents),
+      f AS (
+        SELECT regexp_matches(aug,
+                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}') AS e,
+               regexp_matches(aug, '\+1-555-\d{4}') AS p,
+               regexp_matches(aug,
+                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b') AS ip,
+               regexp_extract(aug, '\b(\d{16})\b', 1) AS cc
+        FROM a),
+      l AS (
+        SELECT e, p, ip, cc <> '' AS c,
+               CASE WHEN cc <> '' THEN
+                 (list_aggregate(list_transform(range(1, 17), i ->
+                    CASE WHEN (17 - i) % 2 = 0 THEN
+                      CASE WHEN cc[i]::INT * 2 > 9 THEN cc[i]::INT * 2 - 9
+                           ELSE cc[i]::INT * 2 END
+                    ELSE cc[i]::INT END), 'sum') % 10 = 0)
+               ELSE false END AS cv
+        FROM f)
+      SELECT count(1) AS n_docs,
+             coalesce(sum(CASE WHEN e THEN 1 END), 0)::BIGINT AS n_email,
+             coalesce(sum(CASE WHEN p THEN 1 END), 0)::BIGINT AS n_phone,
+             coalesce(sum(CASE WHEN ip THEN 1 END), 0)::BIGINT AS n_ipv4,
+             coalesce(sum(CASE WHEN c THEN 1 END), 0)::BIGINT AS n_card,
+             coalesce(sum(CASE WHEN cv THEN 1 END), 0)::BIGINT
+               AS n_card_luhn_valid,
+             coalesce(sum(CASE WHEN NOT e AND NOT p AND NOT ip AND NOT c
+               THEN 1 END), 0)::BIGINT AS n_clean
+      FROM l"""),
 
     // -- dataset release DIFF: what changed between two corpus drops --
     //    The audit a consumer runs before retraining: added / removed /
@@ -1129,7 +1792,7 @@ object TextAnalysis extends QueryModule {
     //    corpus: the previous drop misses doc_id % 7 == 0 (since
     //    added), the current drop dropped % 5 == 0 (removed), and
     //    % 3 == 0 docs were re-crawled (changed text). -----------------
-    "pipe_dataset_diff" -> ((s, d) => {
+    Query("pipe_dataset_diff", (s, d) => {
       val docs = Tables.documents(s, d)
       val prev = docs.filter(col("doc_id") % 7 =!= 0)
         .select(col("doc_id"), md5(col("text")).as("h_prev"))
@@ -1155,9 +1818,33 @@ object TextAnalysis extends QueryModule {
             col("h_cur").isNotNull &&
             col("h_prev") =!= col("h_cur"), col("n_chars"))), lit(0L))
             .as("changed_chars"))
-    }),
+    },
+      """
+      WITH prev AS (SELECT doc_id, md5(text) AS h_prev FROM documents
+                    WHERE doc_id % 7 <> 0),
+           cur AS (SELECT doc_id,
+                          md5(CASE WHEN doc_id % 3 = 0
+                              THEN text || ' [recrawl v2]'
+                              ELSE text END) AS h_cur,
+                          n_chars
+                   FROM documents WHERE doc_id % 5 <> 0),
+           j AS (SELECT prev.h_prev, cur.h_cur, cur.n_chars
+                 FROM prev FULL OUTER JOIN cur USING (doc_id))
+      SELECT coalesce(sum(CASE WHEN h_prev IS NULL THEN 1 END), 0)::BIGINT
+               AS n_added,
+             coalesce(sum(CASE WHEN h_cur IS NULL THEN 1 END), 0)::BIGINT
+               AS n_removed,
+             coalesce(sum(CASE WHEN h_prev IS NOT NULL
+               AND h_cur IS NOT NULL AND h_prev <> h_cur THEN 1 END),
+               0)::BIGINT AS n_changed,
+             coalesce(sum(CASE WHEN h_prev = h_cur THEN 1 END), 0)::BIGINT
+               AS n_unchanged,
+             coalesce(sum(CASE WHEN h_prev IS NOT NULL
+               AND h_cur IS NOT NULL AND h_prev <> h_cur
+               THEN n_chars END), 0)::BIGINT AS changed_chars
+      FROM j"""),
 
-    "pipe_shard_manifest" -> ((s, d) => {
+    Query("pipe_shard_manifest", (s, d) => {
       val shard = conv(substring(md5(concat(lit("shard|"),
         col("doc_id").cast("string")).cast("binary")), 1, 12), 16, 10)
         .cast("long") % 64
@@ -1170,7 +1857,20 @@ object TextAnalysis extends QueryModule {
           sum("n_chars").as("total_chars"),
           expr("bit_xor(th)").as("content_digest"))
         .orderBy("shard")
-    }),
+    },
+      """
+      WITH s AS (
+        SELECT ('0x' || substr(md5('shard|' || doc_id), 1, 12))::BIGINT
+                 % 64 AS shard,
+               n_chars,
+               ('0x' || substr(md5(text), 1, 12))::BIGINT AS th
+        FROM documents)
+      SELECT shard, count(1) AS n_docs,
+             sum(n_chars)::BIGINT AS total_chars,
+             bit_xor(th)::BIGINT AS content_digest
+      FROM s
+      GROUP BY shard
+      ORDER BY shard"""),
 
     // -- per-column data-quality profile (the Deequ/whylogs-style audit
     //    a pipeline runs before training on a new drop): one row per
@@ -1185,7 +1885,7 @@ object TextAnalysis extends QueryModule {
     //    jobs, no per-column rescans. min/max of text are compared on
     //    a 40-char prefix AFTER the full-string min/max (binary
     //    collation in both engines), keeping the result row narrow. ----
-    "pipe_profile" -> ((s, d) => {
+    Query("pipe_profile", (s, d) => {
       val doc = Tables.documents(s, d)
       def nulls(c: String) =
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"${c}_nulls")
@@ -1214,7 +1914,37 @@ object TextAnalysis extends QueryModule {
            'text',    n, text_nulls,    text_d,    text_min,    text_max)
            AS (col_name, n_rows, n_null, n_distinct, min_val, max_val)"""))
         .orderBy("col_name")
-    }),
+    },
+      """
+      SELECT 'doc_id' AS col_name, count(1) AS n_rows,
+             sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END)::BIGINT
+               AS n_null,
+             count(DISTINCT doc_id) AS n_distinct,
+             min(doc_id)::VARCHAR AS min_val, max(doc_id)::VARCHAR AS max_val
+      FROM documents
+      UNION ALL
+      SELECT 'lang', count(1),
+             sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT,
+             count(DISTINCT lang), min(lang), max(lang)
+      FROM documents
+      UNION ALL
+      SELECT 'n_chars', count(1),
+             sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
+             count(DISTINCT n_chars),
+             min(n_chars)::VARCHAR, max(n_chars)::VARCHAR
+      FROM documents
+      UNION ALL
+      SELECT 'source', count(1),
+             sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
+             count(DISTINCT source), min(source), max(source)
+      FROM documents
+      UNION ALL
+      SELECT 'text', count(1),
+             sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END)::BIGINT,
+             count(DISTINCT md5(text)),
+             substr(min(text), 1, 40), substr(max(text), 1, 40)
+      FROM documents
+      ORDER BY col_name"""),
 
     // -- unicode NFC normalization (own codegen'd Catalyst expression,
     //    functions/UnicodeNorm.scala): the ingest step that makes the
@@ -1230,7 +1960,7 @@ object TextAnalysis extends QueryModule {
     //    isNormalized fast path makes already-clean rows free). Oracle:
     //    DuckDB nfc_normalize (utf8proc) — same Unicode canonical
     //    composition, byte-identical outputs. --------------------------
-    "txt_unicode_norm" -> ((s, d) => {
+    Query("txt_unicode_norm", (s, d) => {
       val frag = substring(col("text"), 1, 24)
       val dec = concat(frag, lit(SUFFIX_DECOMPOSED))
       val pre = concat(frag, lit(SUFFIX_PRECOMPOSED))
@@ -1247,7 +1977,24 @@ object TextAnalysis extends QueryModule {
           sum(length(col("md"))).as("chars_dec"),
           sum(length(col("nd"))).as("chars_norm"),
           countDistinct(md5(col("nd").cast("binary"))).as("d_norm"))
-    }),
+    },
+      // the canonically-equivalent suffix pair is embedded verbatim (the
+      // JSON dump carries the raw UTF-8; DuckDB's nfc_normalize is the
+      // same Unicode canonical composition java.text.Normalizer applies)
+      s"""
+      WITH b AS (SELECT substr(text, 1, 24) || '$SUFFIX_DECOMPOSED' AS md,
+                        substr(text, 1, 24) || '$SUFFIX_PRECOMPOSED' AS mp
+                 FROM documents),
+           n AS (SELECT md, mp, nfc_normalize(md) AS nd,
+                        nfc_normalize(mp) AS np
+                 FROM b)
+      SELECT count(1) AS n_docs,
+             sum(CASE WHEN md = mp THEN 1 ELSE 0 END)::BIGINT AS n_raw_eq,
+             sum(CASE WHEN nd = np THEN 1 ELSE 0 END)::BIGINT AS n_norm_eq,
+             sum(length(md))::BIGINT AS chars_dec,
+             sum(length(nd))::BIGINT AS chars_norm,
+             count(DISTINCT md5(nd)) AS d_norm
+      FROM n"""),
 
     // -- distribution drift between two corpus halves (PSI, the
     //    population-stability-index audit a pipeline runs between two
@@ -1261,7 +2008,7 @@ object TextAnalysis extends QueryModule {
     //    the bit-exact DetMath ln — order-free, so the oracle matches
     //    bit-for-bit. Totals attach as a window over the ≤17 bucket
     //    rows (post-agg: trivially small at any corpus size). ----------
-    "pipe_drift" -> ((s, d) => {
+    Query("pipe_drift", (s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .rowsBetween(Long.MinValue, Long.MaxValue)
       val ln = graft.functions.DetMath.lnColumn _
@@ -1286,7 +2033,41 @@ object TextAnalysis extends QueryModule {
                ln(col("fb_ppm").cast("double"))))
             .cast("long").as("psi_micro"))
         .orderBy("bucket")
-    }),
+    },
+      s"""
+      WITH b AS (SELECT (least(n_chars, 4095) * 16) // 4096 AS bucket,
+                        doc_id % 2 AS half
+                 FROM documents),
+           c AS (SELECT bucket,
+                        sum(CASE WHEN half = 0 THEN 1 ELSE 0 END)::BIGINT AS ca,
+                        sum(CASE WHEN half = 1 THEN 1 ELSE 0 END)::BIGINT AS cb
+                 FROM b GROUP BY bucket),
+           t AS (SELECT bucket, ca, cb,
+                        sum(ca + 1) OVER () AS na,
+                        sum(cb + 1) OVER () AS nb
+                 FROM c),
+           f AS (SELECT bucket, ca, cb,
+                        greatest((1000000 * (ca + 1)) // na, 1)::BIGINT AS fa_ppm,
+                        greatest((1000000 * (cb + 1)) // nb, 1)::BIGINT AS fb_ppm
+                 FROM t),
+           p1 AS (SELECT *, ${graft.functions.DetMath.eSql("fa_ppm")} AS ea,
+                         ${graft.functions.DetMath.eSql("fb_ppm")} AS eb
+                  FROM f),
+           p2 AS (SELECT *,
+                    ${graft.functions.DetMath.ySql("fa_ppm::DOUBLE", "ea")} AS ya,
+                    ${graft.functions.DetMath.ySql("fb_ppm::DOUBLE", "eb")} AS yb
+                  FROM p1),
+           p3 AS (SELECT *, ${graft.functions.DetMath.zSql("ya")} AS za,
+                         ${graft.functions.DetMath.zSql("yb")} AS zb
+                  FROM p2),
+           p4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM p3)
+      SELECT bucket, ca, cb, fa_ppm, fb_ppm,
+             floor((fa_ppm - fb_ppm)::DOUBLE *
+               (${graft.functions.DetMath.lnSqlFromParts("ea", "za", "za2")}
+                - ${graft.functions.DetMath.lnSqlFromParts("eb", "zb", "zb2")}))::BIGINT
+               AS psi_micro
+      FROM p4
+      ORDER BY bucket"""),
 
     // -- the MODERN curation pipeline, composed from this round's gates:
     //    Gopher rule gate -> bigram-LM score filter (drop the
@@ -1301,7 +2082,7 @@ object TextAnalysis extends QueryModule {
     //    engine choice (same md5 idiom as q_sample), so a re-ingested
     //    corpus never leaks val/test docs into train. Per-split
     //    manifest; the assignment itself is the `when` expression -------
-    "pipe_split" -> ((s, d) => {
+    Query("pipe_split", (s, d) => {
       val mille = conv(substring(md5(concat(lit("split|"),
         col("doc_id").cast("string")).cast("binary")), 1, 12), 16, 10)
         .cast("long") % 1000
@@ -1313,7 +2094,23 @@ object TextAnalysis extends QueryModule {
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"),
           min("doc_id").as("first_doc"), max("doc_id").as("last_doc"))
         .orderBy("split")
-    }),
+    },
+      """
+      WITH s AS (
+        SELECT doc_id, n_chars,
+               ('0x' || substr(md5('split|' || doc_id), 1, 12))::BIGINT
+                 % 1000 AS m
+        FROM documents)
+      SELECT CASE WHEN m < 980 THEN 'train'
+                  WHEN m < 990 THEN 'val'
+                  ELSE 'test' END AS split,
+             count(1) AS n_docs,
+             sum(n_chars)::BIGINT AS total_chars,
+             min(doc_id) AS first_doc,
+             max(doc_id) AS last_doc
+      FROM s
+      GROUP BY 1
+      ORDER BY split"""),
 
     // -- curriculum staging: per-language EXACT score quartiles (the
     //    q_median_exact order-statistics idiom: lang-partitioned
@@ -1325,7 +2122,7 @@ object TextAnalysis extends QueryModule {
     //    over the scores -> (lang, stage) agg. The boundary frame is
     //    |langs|-sized, so the assignment join broadcasts at any corpus
     //    scale ---------------------------------------------------------
-    "pipe_curriculum" -> ((s, d) => {
+    Query("pipe_curriculum", (s, d) => {
       val docs = Tables.documents(s, d)
       val scored = lmScoreFrom(docs).select("doc_id", "avg_micronat")
         .join(docs.select("doc_id", "lang"), "doc_id")
@@ -1349,7 +2146,32 @@ object TextAnalysis extends QueryModule {
           min("avg_micronat").as("min_score"),
           max("avg_micronat").as("max_score"))
         .orderBy("lang", "stage")
-    }),
+    },
+      s"""
+      WITH sc AS (SELECT s.doc_id, s.avg_micronat, d.lang
+                  FROM $sqlLmScores s JOIN documents d ON s.doc_id = d.doc_id),
+           r AS (SELECT lang, avg_micronat,
+                        row_number() OVER (PARTITION BY lang
+                                           ORDER BY avg_micronat) AS rn,
+                        count(1) OVER (PARTITION BY lang) AS n
+                 FROM sc),
+           b AS (SELECT lang,
+                        min(CASE WHEN rn = (n + 3) // 4 THEN avg_micronat END) AS q1,
+                        min(CASE WHEN rn = (n + 1) // 2 THEN avg_micronat END) AS q2,
+                        min(CASE WHEN rn = (3 * n + 3) // 4 THEN avg_micronat END) AS q3
+                 FROM r GROUP BY lang),
+           st AS (SELECT sc.lang, sc.avg_micronat,
+                         CAST(1 + CASE WHEN avg_micronat > q1 THEN 1 ELSE 0 END
+                                + CASE WHEN avg_micronat > q2 THEN 1 ELSE 0 END
+                                + CASE WHEN avg_micronat > q3 THEN 1 ELSE 0 END
+                              AS BIGINT) AS stage
+                  FROM sc JOIN b ON sc.lang = b.lang)
+      SELECT lang, stage, count(1) AS n_docs,
+             min(avg_micronat) AS min_score,
+             max(avg_micronat) AS max_score
+      FROM st
+      GROUP BY lang, stage
+      ORDER BY lang, stage"""),
 
     // -- data-mixture balancing: per-source downsampling weights that
     //    equalize the token budget across sources (the Pile-style mix
@@ -1358,7 +2180,7 @@ object TextAnalysis extends QueryModule {
     //    everything (weight 1000), oversized sources downsample. One
     //    agg over the corpus + a 1-row total broadcast — the weights
     //    frame is |sources|-sized at any corpus scale -------------------
-    "pipe_mix_weights" -> ((s, d) => {
+    Query("pipe_mix_weights", (s, d) => {
       val perSource = Tables.documents(s, d)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -1376,7 +2198,22 @@ object TextAnalysis extends QueryModule {
         .withColumn("sampled_tokens",
           expr("(n_tokens * weight_mille) DIV 1000"))
         .orderBy("source")
-    }),
+    },
+      s"""
+      WITH ps AS (SELECT source, count(1) AS n_docs,
+                         CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) AS n_tokens
+                  FROM documents GROUP BY source
+                  HAVING CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) > 0),
+           t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+                        count(1) AS n_sources
+                 FROM ps)
+      SELECT source, n_docs, n_tokens,
+             least(1000, ((total_tokens // n_sources) * 1000) // n_tokens)
+               AS weight_mille,
+             (n_tokens * least(1000, ((total_tokens // n_sources) * 1000) // n_tokens)) // 1000
+               AS sampled_tokens
+      FROM ps CROSS JOIN t
+      ORDER BY source"""),
 
     // -- weighted sampling WITHOUT replacement (Efraimidis & Spirakis,
     //    "Weighted random sampling with a reservoir", IPL 2006): each
@@ -1389,7 +2226,7 @@ object TextAnalysis extends QueryModule {
     //    — built only from correctly-rounded double ops, so the key is
     //    BIT-IDENTICAL across engines (no libm-vs-JVM last-ulp flake;
     //    ln(u) = lnDet(h+1) - 48·ln2 since u = (h+1)/2^48) ----------------
-    "pipe_sample_weighted" -> ((s, d) => {
+    Query("pipe_sample_weighted", (s, d) => {
       val h = conv(substring(md5(concat(lit("wsamp|"),
         col("doc_id").cast("string")).cast("binary")), 1, 12), 16, 10)
         .cast("long")
@@ -1401,9 +2238,29 @@ object TextAnalysis extends QueryModule {
           round(key * lit(1e9)).cast("long").as("key_e9"))
         .orderBy(col("key_e9").desc, col("doc_id"))
         .limit(10)
-    }),
+    },
+      // DetMath deterministic ln, staged as named columns (one eval per
+      // stage, like Catalyst subexpr elim): ln(u) = lnDet(h+1) − 48·ln2,
+      // then / w → * 1e9, identical association — every double op is
+      // correctly rounded on both engines, so key_e9 is bit-exact
+      s"""
+      WITH s0 AS (SELECT doc_id, n_chars,
+                    (('0x' || substr(md5('wsamp|' || doc_id::VARCHAR),
+                       1, 12))::BIGINT::DOUBLE + '1.0'::DOUBLE) AS x
+                  FROM documents),
+      s1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM s0),
+      s2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM s1),
+      s3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM s2),
+      s4 AS (SELECT *, (z * z) AS z2 FROM s3)
+      SELECT doc_id, n_chars,
+             round(((${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
+                     - '$LN_2P48'::DOUBLE)
+                    / greatest(n_chars, 1)::DOUBLE) * 1e9)::BIGINT AS key_e9
+      FROM s4
+      ORDER BY key_e9 DESC, doc_id
+      LIMIT 10"""),
 
-    "pipe_modern_curation" -> ((s, d) => {
+    Query("pipe_modern_curation", (s, d) => {
       val docs = Tables.documents(s, d)
       val gate = gopherFrom(docs).filter(col("gopher_pass")).select("doc_id")
       val lmOk = lmScoreFrom(docs)
@@ -1417,7 +2274,22 @@ object TextAnalysis extends QueryModule {
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("total_chars"))
         .orderBy("source")
-    })
+    },
+      s"""
+      WITH gate AS (SELECT doc_id FROM $sqlGopherFlags WHERE gopher_pass),
+           lmok AS (SELECT doc_id FROM $sqlLmScores
+                    WHERE avg_micronat <= $LM_TAU),
+           dup AS (SELECT DISTINCT b_id AS doc_id
+                   FROM ${graft.queries.Dedup.sqlWinnowPairs}),
+           kept AS (SELECT d.source, d.n_chars
+                    FROM documents d
+                    WHERE d.doc_id IN (SELECT doc_id FROM gate)
+                      AND d.doc_id IN (SELECT doc_id FROM lmok)
+                      AND d.doc_id NOT IN (SELECT doc_id FROM dup))
+      SELECT source, count(1) AS n_docs, sum(n_chars)::BIGINT AS total_chars
+      FROM kept
+      GROUP BY source
+      ORDER BY source""")
   )
 
   /** Bigram-LM NLL cutoff for pipe_modern_curation (micronats) —
@@ -1841,926 +2713,6 @@ object TextAnalysis extends QueryModule {
              coalesce(a.n_bpe, 0)::BIGINT AS n_bpe
       FROM documents d LEFT JOIN agg a USING (doc_id)
       ORDER BY d.doc_id"""
-
-  override def oracles: Map[String, String] = Map(
-    "txt_chunk" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM documents),
-           idx AS (SELECT doc_id, ts, len(ts) AS n,
-                          CASE WHEN len(ts) <= 64 THEN 1
-                               ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
-                   FROM t WHERE len(ts) > 0),
-           ch AS (SELECT doc_id, g.k AS chunk_idx,
-                         array_to_string(
-                           ts[g.k * 48 + 1 : least(g.k * 48 + 64, n)], ' ')
-                           AS chunk,
-                         least(g.k * 48 + 64, n) - g.k * 48 AS n_tokens
-                  FROM idx
-                  CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
-                  WHERE g.k < nch)
-      SELECT doc_id, chunk_idx, md5(chunk) AS chunk_md5, n_tokens
-      FROM ch
-      ORDER BY doc_id, chunk_idx""",
-
-    "txt_pack" -> s"""
-      SELECT doc_id, n_tok, CAST(cum - n_tok AS BIGINT) // 1000 AS pack_id
-      FROM (SELECT doc_id, len(${Text.sqlTokens("text")}) AS n_tok,
-                   sum(len(${Text.sqlTokens("text")})) OVER (ORDER BY doc_id
-                     ROWS UNBOUNDED PRECEDING) AS cum
-            FROM documents)
-      ORDER BY doc_id""",
-
-    "txt_token_stats" -> s"""
-      SELECT doc_id,
-             len(${Text.sqlTokens("text")}) AS n_tokens,
-             len(list_distinct(${Text.sqlTokens("text")})) AS n_distinct,
-             length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g')) AS n_alnum_chars,
-             CASE WHEN len(${Text.sqlTokens("text")}) = 0 THEN NULL
-                  ELSE length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))::DOUBLE
-                         / len(${Text.sqlTokens("text")}) END AS avg_token_len
-      FROM documents
-      ORDER BY doc_id""",
-
-    "txt_quality" -> s"""
-      WITH t AS (
-        SELECT doc_id,
-               len(${Text.sqlTokens("text")}) AS n_tokens,
-               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
-        FROM documents)
-      SELECT doc_id, n_tokens,
-             CASE WHEN n_tokens = 0 THEN NULL
-                  ELSE n_stop::DOUBLE / n_tokens END AS stop_ratio,
-             CASE WHEN n_tokens = 0 THEN NULL
-                  ELSE n_dist::DOUBLE / n_tokens END AS distinct_ratio,
-             CASE WHEN n_tokens = 0 THEN NULL
-                  ELSE (n_stop::DOUBLE / n_tokens) * 0.5
-                         + (n_dist::DOUBLE / n_tokens) * 0.3
-                         + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END)
-                  END AS quality
-      FROM t
-      ORDER BY doc_id""",
-
-    "txt_lang_id" -> {
-      val hitCols = langProfiles.map { case (lg, ws) =>
-        val set = ws.map(w => s"'$w'").mkString(", ")
-        s"len(list_filter(${Text.sqlTokens("lower(text)")}, t -> t IN ($set))) AS n_$lg"
-      }.mkString(",\n               ")
-      s"""
-      WITH t AS (
-        SELECT doc_id, lang, len(${Text.sqlTokens("lower(text)")}) AS n_tokens,
-               $hitCols
-        FROM documents)
-      SELECT doc_id, lang,
-             CASE WHEN n_tokens = 0 THEN 'und'
-                  WHEN greatest(n_en, n_es, n_de, n_fr) = 0 THEN 'unk'
-                  WHEN n_en >= greatest(n_es, n_de, n_fr) THEN 'en'
-                  WHEN n_es >= greatest(n_de, n_fr) THEN 'es'
-                  WHEN n_de >= n_fr THEN 'de'
-                  ELSE 'fr' END AS pred_lang,
-             n_en, n_es, n_de, n_fr
-      FROM t
-      ORDER BY doc_id"""
-    },
-
-    "txt_token_estimate" -> s"""
-      SELECT doc_id,
-             len(${Text.sqlTokens("text")}) AS n_words,
-             length(text) AS n_chars,
-             ceil(length(text)::DOUBLE / 4)::BIGINT AS est_bpe_chars4,
-             len(${Text.sqlTokens("text")}) + floor(length(text)::DOUBLE / 8)::BIGINT AS est_bpe_blend
-      FROM documents
-      ORDER BY doc_id""",
-
-    "txt_bpe_merges" -> {
-      val rows = (1 to BPE_MERGES).map(k =>
-        s"SELECT ${k}::BIGINT AS rank, l, r, cnt FROM m$k")
-        .mkString("\n      UNION ALL ")
-      s"""
-      ${bpeCtesSql(BPE_MERGES)}
-      $rows
-      ORDER BY rank"""
-    },
-
-    "txt_token_bpe" -> tokenBpeSql,
-    // the loaded-artifact tokenizer is bit-equal to the inline train
-    // (BpePersistSpec — the sim_index_persist discipline), so the SAME
-    // oracle gates it
-    "txt_bpe_persist" -> tokenBpeSql,
-
-    // per-round application count = freq-weighted symbol-count delta
-    // between the unrolled s{k-1} and s{k} segmentation states (each
-    // merge application removes exactly one symbol; the word key is
-    // unique, so USING (w) pairs the states row-for-row)
-    "txt_bpe_stats" -> {
-      val rows = (1 to BPE_MERGES).map(k =>
-        s"""SELECT ${k}::BIGINT AS rank, m.l, m.r, m.cnt, u.n_applied
-      FROM m$k m, (SELECT sum(a.freq * (
-                 (length(a.seg) - length(replace(a.seg, '|', ''))) // 2
-               - (length(b.seg) - length(replace(b.seg, '|', ''))) // 2
-             ))::BIGINT AS n_applied
-           FROM s${k - 1} a JOIN s$k b USING (w)) u""")
-        .mkString("\n      UNION ALL ")
-      s"""
-      ${bpeCtesSql(BPE_MERGES)}
-      $rows
-      ORDER BY rank"""
-    },
-
-    "txt_rolling_hash" -> s"""
-      SELECT doc_id,
-             list_reduce(
-               list_prepend(0::BIGINT,
-                 list_transform(string_split(array_to_string(${Text.sqlTokens("lower(text)")}, ' '), ''),
-                                c -> ord(c)::BIGINT)),
-               (a, b) -> (a * 31 + b) % 1000000007) AS rhash
-      FROM documents
-      ORDER BY doc_id""",
-
-    "txt_fingerprint" -> s"""
-      SELECT doc_id,
-             md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS fingerprint
-      FROM documents
-      ORDER BY doc_id""",
-
-    "txt_repetition" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS toks FROM documents),
-      g AS (SELECT doc_id,
-                   unnest(list_transform(range(1, len(toks) - 1),
-                     i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) AS g
-            FROM t WHERE len(toks) >= 3),
-      agg AS (SELECT doc_id, count(1) AS nt, count(DISTINCT g) AS nd
-              FROM g GROUP BY doc_id)
-      SELECT d.doc_id,
-             coalesce(a.nt, 0) AS n_trigrams,
-             coalesce(a.nd, 0) AS n_distinct,
-             CASE WHEN coalesce(a.nt, 0) = 0 THEN 0.0
-                  ELSE 1.0 - a.nd::DOUBLE / a.nt END AS dup_ratio
-      FROM documents d LEFT JOIN agg a USING (doc_id)
-      ORDER BY d.doc_id""",
-
-    "txt_redact" -> """
-      SELECT doc_id,
-             len(regexp_extract_all(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_emails,
-             len(regexp_extract_all(text, 'https?://[^ \t\n]+')) AS n_urls,
-             len(regexp_extract_all(text, '[0-9]+')) AS n_nums,
-             md5(regexp_replace(regexp_replace(regexp_replace(text,
-               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-               'https?://[^ \t\n]+', '<URL>', 'g'),
-               '[0-9]+', '<NUM>', 'g')) AS redacted_hash
-      FROM documents
-      ORDER BY doc_id""",
-
-    "pipe_upsert" -> """
-      WITH u AS (
-        SELECT doc_id, text, 0 AS version FROM documents
-        UNION ALL
-        SELECT doc_id, text || ' [revised]' AS text, 1 AS version
-        FROM documents WHERE doc_id % 5 = 0),
-      r AS (
-        SELECT doc_id, version, text,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY version DESC) AS rn
-        FROM u)
-      SELECT doc_id, CAST(version AS BIGINT) AS version, md5(text) AS text_md5
-      FROM r WHERE rn = 1
-      ORDER BY doc_id""",
-
-    // MERGE rules mirrored clause-for-clause: unmatched U and matched I
-    // fall through to no-op/base exactly as in the engine
-    "pipe_cdc_apply" -> """
-      WITH base AS (
-        SELECT doc_id AS b_id, text AS b_text
-        FROM documents WHERE doc_id % 2 = 0),
-      changes AS (
-        SELECT doc_id AS c_id,
-               CASE WHEN doc_id % 10 = 0 THEN 'D'
-                    WHEN doc_id % 10 = 2 THEN 'U'
-                    ELSE 'I' END AS op,
-               text || ' [cdc]' AS c_text
-        FROM documents WHERE doc_id % 10 IN (0, 1, 2)),
-      j AS (SELECT * FROM base FULL OUTER JOIN changes ON b_id = c_id),
-      r AS (SELECT coalesce(b_id, c_id) AS doc_id,
-                   CASE WHEN coalesce(op, 'N') = 'U' AND b_id IS NOT NULL
-                          THEN 'U'
-                        WHEN coalesce(op, 'N') = 'I' AND b_id IS NULL
-                          THEN 'I'
-                        WHEN b_id IS NOT NULL
-                             AND coalesce(op, 'N') NOT IN ('D', 'U')
-                          THEN 'B'
-                   END AS src,
-                   b_text, c_text
-            FROM j)
-      SELECT doc_id, src,
-             md5(CASE WHEN src IN ('U', 'I') THEN c_text
-                      ELSE b_text END) AS text_md5
-      FROM r
-      WHERE src IS NOT NULL
-      ORDER BY doc_id""",
-
-    "pipe_curation" -> s"""
-      WITH t AS (
-        SELECT doc_id, lang, text,
-               len(${Text.sqlTokens("text")}) AS n_tokens,
-               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
-        FROM documents),
-      scored AS (
-        SELECT doc_id, lang, text, n_tokens,
-               (n_stop::DOUBLE / n_tokens) * 0.5
-                 + (n_dist::DOUBLE / n_tokens) * 0.3
-                 + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END) AS q
-        FROM t WHERE n_tokens > 0),
-      kept AS (
-        SELECT lang, n_tokens,
-               row_number() OVER (
-                 PARTITION BY md5(trim(regexp_replace(lower(text),
-                   '[^a-z0-9]+', ' ', 'g')))
-                 ORDER BY doc_id) AS rn
-        FROM scored WHERE q >= 0.30)
-      SELECT lang, count(1) AS n_docs, sum(n_tokens)::BIGINT AS total_tokens
-      FROM kept WHERE rn = 1
-      GROUP BY lang
-      ORDER BY lang""",
-
-    "txt_entropy" -> {
-      val classes = ('a' to 'z') ++ ('0' to '9')
-      val cnts = classes.map(c =>
-        s"(length(lower(text)) - length(replace(lower(text), '$c', '')))::BIGINT AS c_$c")
-        .mkString(",\n               ")
-      val total = classes.map(c => s"c_$c").mkString(" + ")
-      val ent = classes.map(c =>
-        s"(CASE WHEN c_$c > 0 THEN -((c_$c::DOUBLE / n_alnum) * ln(c_$c::DOUBLE / n_alnum)) ELSE 0.0 END)")
-        .mkString("\n               + ")
-      s"""
-      WITH counted AS (
-        SELECT doc_id,
-               $cnts
-        FROM documents),
-      tot AS (SELECT *, ($total)::BIGINT AS n_alnum FROM counted)
-      SELECT doc_id, n_alnum,
-             CASE WHEN n_alnum = 0 THEN 0
-                  ELSE round(($ent) * 1e6)::BIGINT END AS entropy_e6
-      FROM tot
-      ORDER BY doc_id"""
-    },
-
-    // PMI mirrored margin-for-margin: the same bigram/unigram counts,
-    // the same integer products cast to exact doubles, the DetMath ln
-    // staging for BOTH arguments, floor (sign-uniform — PMI goes
-    // negative) to micronats
-    // islands differ by a constant per doc (1-based vs 0-based
-    // positions) — grouping keys, not values, so the phrases agree
-    "txt_rake" -> s"""
-      WITH d AS (SELECT doc_id, ${Text.sqlTokens("lower(text)")} AS ts FROM documents),
-           pos AS (SELECT doc_id, ts,
-                          unnest(range(1, len(ts) + 1)) AS i FROM d),
-           tok AS (SELECT doc_id, i, ts[i] AS w FROM pos),
-           ns AS (SELECT doc_id, i, w,
-                         i - row_number() OVER (PARTITION BY doc_id
-                           ORDER BY i) AS island
-                  FROM tok WHERE w NOT IN ($stopwordsSql)),
-           phr AS (SELECT doc_id, island,
-                          string_agg(w, ' ' ORDER BY i) AS phrase,
-                          count(1)::BIGINT AS len
-                   FROM ns GROUP BY doc_id, island
-                   HAVING count(1) <= $RAKE_MAX_PHRASE),
-           pw AS (SELECT len, unnest(string_split(phrase, ' ')) AS w
-                  FROM phr),
-           ws AS (SELECT w, ((1000 * sum(len)) // count(1))::BIGINT
-                    AS wscore_mille
-                  FROM pw GROUP BY w),
-           pt AS (SELECT phrase, count(1) AS n_occ FROM phr
-                  GROUP BY phrase),
-           ptw AS (SELECT phrase, n_occ,
-                          unnest(string_split(phrase, ' ')) AS w FROM pt)
-      SELECT ptw.phrase, any_value(ptw.n_occ) AS n_occ,
-             sum(ws.wscore_mille)::BIGINT AS score_mille
-      FROM ptw JOIN ws ON ptw.w = ws.w
-      GROUP BY ptw.phrase
-      ORDER BY score_mille DESC, phrase
-      LIMIT 25""",
-
-    "txt_pmi" -> s"""
-      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
-           b AS (SELECT unnest(list_transform(range(1, len(toks)),
-                        i -> toks[i] || ' ' || toks[i + 1])) AS bg
-                 FROM t WHERE len(toks) >= 2),
-           c12 AS (SELECT bg, count(1)::BIGINT AS c12 FROM b GROUP BY bg),
-           uni AS (SELECT w, count(1)::BIGINT AS c1
-                   FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
-           n AS (SELECT sum(c1)::BIGINT AS nw FROM uni),
-           p0 AS (SELECT c.bg, c.c12,
-                         (c.c12 * n.nw)::DOUBLE AS xa,
-                         (ua.c1 * ub.c1)::DOUBLE AS xb
-                  FROM c12 c
-                  CROSS JOIN n
-                  JOIN uni ua ON split_part(c.bg, ' ', 1) = ua.w
-                  JOIN uni ub ON split_part(c.bg, ' ', 2) = ub.w
-                  WHERE c.c12 >= $PMI_MIN_SUPPORT),
-           p1 AS (SELECT *, ${graft.functions.DetMath.eSql("xa")} AS ea,
-                         ${graft.functions.DetMath.eSql("xb")} AS eb
-                  FROM p0),
-           p2 AS (SELECT *, ${graft.functions.DetMath.ySql("xa", "ea")} AS ya,
-                         ${graft.functions.DetMath.ySql("xb", "eb")} AS yb
-                  FROM p1),
-           p3 AS (SELECT *, ${graft.functions.DetMath.zSql("ya")} AS za,
-                         ${graft.functions.DetMath.zSql("yb")} AS zb
-                  FROM p2),
-           p4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM p3)
-      SELECT bg AS bigram, c12 AS cnt,
-             floor((${graft.functions.DetMath.lnSqlFromParts("ea", "za", "za2")}
-               - ${graft.functions.DetMath.lnSqlFromParts("eb", "zb", "zb2")})
-               * 1e6)::BIGINT AS pmi_micronat
-      FROM p4
-      ORDER BY pmi_micronat DESC, bigram
-      LIMIT 50""",
-
-    "txt_bigrams" -> s"""
-      WITH t AS (SELECT ${Text.sqlTokens("text")} AS toks FROM documents),
-           b AS (SELECT unnest(list_transform(range(1, len(toks)),
-                        i -> toks[i] || ' ' || toks[i + 1])) AS bigram
-                 FROM t WHERE len(toks) >= 2)
-      SELECT bigram, count(1) AS cnt
-      FROM b
-      GROUP BY bigram
-      ORDER BY cnt DESC, bigram
-      LIMIT 30""",
-
-    "txt_heavy_hitters" -> s"""
-      WITH w AS (SELECT unnest(${Text.sqlTokens("lower(text)")}) AS word FROM documents),
-           c AS (SELECT word, count(1) AS cnt FROM w GROUP BY word),
-           t AS (SELECT sum(cnt) AS n FROM c)
-      SELECT word, cnt
-      FROM c, t
-      WHERE cnt * 50 > n
-      ORDER BY word""",
-
-    "pipe_training_batches" -> s"""
-      WITH t AS (
-        SELECT doc_id, text,
-               len(${Text.sqlTokens("text")}) AS n_tokens,
-               len(list_filter(${Text.sqlTokens("text")}, t -> t IN ($stopwordsSql))) AS n_stop,
-               len(list_distinct(${Text.sqlTokens("text")})) AS n_dist
-        FROM documents),
-      scored AS (
-        SELECT doc_id, text,
-               (n_stop::DOUBLE / n_tokens) * 0.5
-                 + (n_dist::DOUBLE / n_tokens) * 0.3
-                 + (CASE WHEN n_tokens >= 50 THEN 0.2 ELSE 0.0 END) AS q
-        FROM t WHERE n_tokens > 0),
-      kept AS (
-        SELECT doc_id, text FROM (
-          SELECT doc_id, text,
-                 row_number() OVER (
-                   PARTITION BY md5(trim(regexp_replace(lower(text),
-                     '[^a-z0-9]+', ' ', 'g')))
-                   ORDER BY doc_id) AS rn
-          FROM scored WHERE q >= 0.30)
-        WHERE rn = 1),
-      ktoks AS (SELECT doc_id, ${Text.sqlTokens("text")} AS ts FROM kept),
-      idx AS (SELECT doc_id, len(ts) AS n,
-                     CASE WHEN len(ts) <= 64 THEN 1
-                          ELSE (len(ts) - 64 + 47) // 48 + 1 END AS nch
-              FROM ktoks WHERE len(ts) > 0),
-      ch AS (SELECT doc_id, g.k AS chunk_idx,
-                    least(g.k * 48 + 64, n) - g.k * 48 AS n_tokens
-             FROM idx
-             CROSS JOIN (SELECT unnest(range(0, (SELECT CAST(max(nch) AS BIGINT) FROM idx))) AS k) g
-             WHERE g.k < nch),
-      packed AS (
-        SELECT n_tokens,
-               CAST(sum(n_tokens) OVER (ORDER BY doc_id, chunk_idx
-                      ROWS UNBOUNDED PRECEDING) - n_tokens AS BIGINT)
-                 // 1000 AS pack_id
-        FROM ch)
-      SELECT pack_id, count(1) AS n_chunks,
-             CAST(sum(n_tokens) AS BIGINT) AS pack_tokens
-      FROM packed
-      GROUP BY pack_id
-      ORDER BY pack_id""",
-
-    "txt_dup_ngrams" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
-           g AS (SELECT doc_id,
-                        unnest(list_transform(range(1, len(toks) - 6),
-                          i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                               || ' ' || toks[i+3] || ' ' || toks[i+4] || ' '
-                               || toks[i+5] || ' ' || toks[i+6] || ' '
-                               || toks[i+7])) AS ngram
-                 FROM t WHERE len(toks) >= 8)
-      SELECT ngram, count(DISTINCT doc_id) AS n_docs, count(1) AS n_occ
-      FROM g
-      GROUP BY ngram
-      HAVING count(DISTINCT doc_id) >= 2
-      ORDER BY n_occ DESC, ngram
-      LIMIT 50""",
-
-    "txt_tfidf" -> s"""
-      WITH tf AS (
-        SELECT doc_id, term, count(1) AS tf
-        FROM (SELECT doc_id, unnest(${Text.sqlTokens("text")}) AS term FROM documents)
-        GROUP BY doc_id, term),
-      df AS (SELECT term, count(1) AS df FROM tf GROUP BY term),
-      n AS (SELECT count(1)::DOUBLE AS n_docs FROM documents),
-      s0 AS (SELECT tf.doc_id, tf.term, tf.tf, (n.n_docs / df.df) AS x
-             FROM tf JOIN df USING (term) CROSS JOIN n),
-      s1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM s0),
-      s2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM s1),
-      s3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM s2),
-      s4 AS (SELECT *, (z * z) AS z2 FROM s3),
-      scored AS (
-        SELECT doc_id, term,
-               round(tf * ${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
-                     * 1e6)::BIGINT AS iscore
-        FROM s4),
-      ranked AS (
-        SELECT doc_id, term, iscore,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY iscore DESC, term) AS rk
-        FROM scored)
-      SELECT doc_id, rk, term, iscore
-      FROM ranked
-      WHERE rk <= 3
-      ORDER BY doc_id, rk""",
-
-    // BM25 with the idf ln computed via DetMath (bit-identical across
-    // engines) and identical association of the division chain;
-    // constants forced through '…'::DOUBLE so DuckDB's DECIMAL literal
-    // path (exact-rational, ≠ double product in ~half of tf values)
-    // never enters; per-term weights integer-scaled BEFORE the per-doc
-    // sum so the aggregate is order-free exact arithmetic.
-    "txt_bm25" -> s"""
-      WITH $bm25CtesSql
-      SELECT doc_id, sum(w_e6)::BIGINT AS score_e6, count(1) AS n_hit
-      FROM w
-      GROUP BY doc_id
-      ORDER BY score_e6 DESC, doc_id
-      LIMIT 20""",
-
-    // RRF fusion (Cormack, Clarke & Buettcher, SIGIR 2009): the BM25
-    // top-20 and the IVF dense top-20 for query vector 0, fused as
-    // 1e6 DIV (60 + rank) per arm — integer-exact, distinct per rank.
-    // Missing from one arm contributes 0 (rank sentinel 0). Composes
-    // the two proven CTE chains verbatim (bm25CtesSql + Similarity's
-    // prefixed ivfCtesSql).
-    "txt_hybrid_retrieval" -> s"""
-      WITH $bm25CtesSql,
-      bmtop AS (SELECT doc_id, sum(w_e6)::BIGINT AS score_e6
-                FROM w GROUP BY doc_id
-                ORDER BY score_e6 DESC, doc_id LIMIT 20),
-      brank AS (SELECT doc_id,
-                       row_number() OVER (ORDER BY score_e6 DESC, doc_id)
-                         AS rank_s
-                FROM bmtop),
-      ${Similarity.ivfCtesSql("vec_id = 0", "iv")},
-      drank AS (SELECT vec_id AS doc_id, rk AS rank_d
-                FROM ivranked WHERE rk <= 20)
-      SELECT coalesce(b.doc_id, d.doc_id) AS doc_id,
-             coalesce(b.rank_s, 0)::BIGINT AS rank_sparse,
-             coalesce(d.rank_d, 0)::BIGINT AS rank_dense,
-             (CASE WHEN b.rank_s IS NULL THEN 0
-                   ELSE 1000000 // (60 + b.rank_s) END
-              + CASE WHEN d.rank_d IS NULL THEN 0
-                     ELSE 1000000 // (60 + d.rank_d) END)::BIGINT AS rrf_e6
-      FROM brank b FULL OUTER JOIN drank d ON b.doc_id = d.doc_id
-      ORDER BY rrf_e6 DESC, doc_id
-      LIMIT 15""",
-
-    // Novelty over raw grams (the Spark side's xxhash64 key is an
-    // internal fixed-width shuffle key, transparent to the result).
-    "txt_ngram_novelty" -> s"""
-      WITH t AS (SELECT doc_id, ${Text.sqlTokens("text")} AS toks FROM documents),
-           g0 AS (SELECT doc_id,
-                         unnest(list_transform(range(1, len(toks) - 6),
-                           i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]
-                                || ' ' || toks[i+3] || ' ' || toks[i+4] || ' '
-                                || toks[i+5] || ' ' || toks[i+6] || ' '
-                                || toks[i+7])) AS ngram
-                  FROM t WHERE len(toks) >= 8),
-           g AS (SELECT DISTINCT doc_id, ngram FROM g0),
-           f AS (SELECT ngram, min(doc_id) AS first_doc FROM g GROUP BY ngram)
-      SELECT g.doc_id,
-             count(1) AS n_grams,
-             sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)::BIGINT
-               AS n_novel,
-             (sum(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)::BIGINT
-               * 1000) // count(1) AS novel_mille
-      FROM g JOIN f USING (ngram)
-      GROUP BY g.doc_id
-      ORDER BY doc_id""",
-
-    "txt_length_hist" -> """
-      SELECT floor(n_chars / 100)::BIGINT AS bucket,
-             count(1) AS n,
-             min(n_chars) AS min_chars,
-             max(n_chars) AS max_chars
-      FROM documents
-      GROUP BY 1
-      ORDER BY bucket""",
-
-    "txt_winnow" -> s"""
-      SELECT doc_id, fp FROM $sqlWinnowFps
-      ORDER BY doc_id, fp""",
-
-    "txt_gopher" -> s"""
-      SELECT doc_id, n_tokens, word_chars, n_alpha_words, n_stop,
-             r_wordcount, r_meanwordlen, r_alphafrac, r_stopwords,
-             gopher_pass
-      FROM $sqlGopherFlags
-      ORDER BY doc_id""",
-
-    "txt_lm_score" -> s"""
-      SELECT doc_id, n_bigrams, nll_micronat, avg_micronat
-      FROM $sqlLmScores
-      ORDER BY doc_id""",
-
-    // injected fragments mirrored verbatim; DuckDB regexp_replace
-    // needs the 'g' flag for the replace-all Spark does by default
-    "txt_code_detect" -> """
-      WITH a AS (SELECT doc_id,
-                   text || (CASE WHEN doc_id % 5 = 0
-                              THEN ' if (x < y) { return arr[i]; }'
-                              ELSE '' END)
-                        || (CASE WHEN doc_id % 7 = 0
-                              THEN ' for i in range(10): total += vals[i]'
-                              ELSE '' END) AS t
-                 FROM documents),
-           m AS (SELECT doc_id, length(t)::BIGINT AS n_chars,
-                        (length(t) - length(regexp_replace(t,
-                          '[{}\[\]();=<>+*/&|#:]', '', 'g')))::BIGINT
-                          AS sym_chars,
-                        (length(t) - length(regexp_replace(t,
-                          '[0-9]', '', 'g')))::BIGINT AS digit_chars
-                 FROM a)
-      SELECT doc_id, n_chars, sym_chars, digit_chars,
-             ((1000 * sym_chars) // n_chars)::BIGINT AS sym_mille,
-             (((1000 * sym_chars) // n_chars) >= 10) AS is_code
-      FROM m ORDER BY doc_id""",
-
-    // weak labels from the gopher gate; two lnDet staging chains (one
-    // for the per-term llr, one for the 1-row prior), then all-integer
-    // scoring — the exact mirror of nbQualityFrom
-    "txt_nb_quality" -> {
-      val dm = graft.functions.DetMath
-      s"""
-      WITH lab AS (SELECT doc_id, gopher_pass FROM $sqlGopherFlags),
-           tf AS (SELECT doc_id, w, count(1)::BIGINT AS tf
-                  FROM (SELECT doc_id, unnest(${Text.sqlTokens("lower(text)")}) AS w
-                        FROM documents)
-                  GROUP BY doc_id, w),
-           byc AS (SELECT w,
-                          sum(CASE WHEN gopher_pass THEN tf ELSE 0 END)::BIGINT AS cp,
-                          sum(CASE WHEN gopher_pass THEN 0 ELSE tf END)::BIGINT AS cn
-                   FROM tf JOIN lab USING (doc_id)
-                   GROUP BY w),
-           tot AS (SELECT sum(cp)::BIGINT AS tp, sum(cn)::BIGINT AS tn,
-                          count(1)::BIGINT AS v
-                   FROM byc),
-           pr0 AS (SELECT (sum(CASE WHEN gopher_pass THEN 1 ELSE 0 END) + 1)::DOUBLE AS xa,
-                          (sum(CASE WHEN gopher_pass THEN 0 ELSE 1 END) + 1)::DOUBLE AS xb
-                   FROM lab),
-           pr1 AS (SELECT *, ${dm.eSql("xa")} AS ea, ${dm.eSql("xb")} AS eb
-                   FROM pr0),
-           pr2 AS (SELECT *, ${dm.ySql("xa", "ea")} AS ya,
-                          ${dm.ySql("xb", "eb")} AS yb FROM pr1),
-           pr3 AS (SELECT *, ${dm.zSql("ya")} AS za, ${dm.zSql("yb")} AS zb
-                   FROM pr2),
-           pr4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM pr3),
-           prior AS (SELECT round((${dm.lnSqlFromParts("ea", "za", "za2")}
-                       - ${dm.lnSqlFromParts("eb", "zb", "zb2")})
-                       * 1e6)::BIGINT AS prior_mu
-                     FROM pr4),
-           l0 AS (SELECT w, ((cp + 1) * (tn + v))::DOUBLE AS xa,
-                         ((cn + 1) * (tp + v))::DOUBLE AS xb
-                  FROM byc, tot),
-           l1 AS (SELECT *, ${dm.eSql("xa")} AS ea, ${dm.eSql("xb")} AS eb
-                  FROM l0),
-           l2 AS (SELECT *, ${dm.ySql("xa", "ea")} AS ya,
-                         ${dm.ySql("xb", "eb")} AS yb FROM l1),
-           l3 AS (SELECT *, ${dm.zSql("ya")} AS za, ${dm.zSql("yb")} AS zb
-                  FROM l2),
-           l4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM l3),
-           llr AS (SELECT w, round((${dm.lnSqlFromParts("ea", "za", "za2")}
-                     - ${dm.lnSqlFromParts("eb", "zb", "zb2")})
-                     * 1e6)::BIGINT AS llr_mu
-                   FROM l4),
-           sc AS (SELECT doc_id, count(1)::BIGINT AS n_terms,
-                         sum(tf * llr_mu)::BIGINT AS tok_mu
-                  FROM tf JOIN llr USING (w)
-                  GROUP BY doc_id)
-      SELECT s.doc_id, s.n_terms,
-             (p.prior_mu + s.tok_mu)::BIGINT AS nb_micronat,
-             (p.prior_mu + s.tok_mu > 0) AS nb_pass,
-             l.gopher_pass
-      FROM sc s
-      CROSS JOIN prior p
-      JOIN lab l ON s.doc_id = l.doc_id
-      ORDER BY s.doc_id"""
-    },
-
-    // the observe() counters, recomputed as plain aggregates: the
-    // Spark side reports what its accumulators saw in one pass; the
-    // oracle proves those numbers ARE the explicit aggregates
-    "pipe_observe_metrics" -> """
-      SELECT count(1)::BIGINT AS n_in,
-             (count(1) FILTER (WHERE n_chars BETWEEN 200 AND 3000))::BIGINT
-               AS n_kept,
-             (CASE WHEN count(1) = 0 THEN 0
-                   ELSE (count(1) FILTER (WHERE n_chars BETWEEN 200
-                     AND 3000)) * 1000 // count(1) END)::BIGINT
-               AS kept_per_mille,
-             COALESCE(sum(n_chars), 0)::BIGINT AS chars_in,
-             COALESCE(sum(n_chars) FILTER (WHERE n_chars BETWEEN 200
-               AND 3000), 0)::BIGINT AS chars_kept
-      FROM documents""",
-
-    "pipe_dataset_card" -> s"""
-      WITH g AS (SELECT doc_id, n_tokens, gopher_pass FROM $sqlGopherFlags),
-           h AS (SELECT doc_id, source, lang, n_chars, md5(text) AS h
-                 FROM documents),
-           hc AS (SELECT h, count(1) AS nh FROM h GROUP BY h)
-      SELECT source,
-             count(1) AS n_docs,
-             count(DISTINCT lang)::BIGINT AS n_langs,
-             sum(n_chars)::BIGINT AS total_chars,
-             sum(n_tokens)::BIGINT AS total_tokens,
-             sum(CASE WHEN gopher_pass THEN 1 ELSE 0 END)::BIGINT
-               AS n_quality,
-             sum(CASE WHEN nh >= 2 THEN 1 ELSE 0 END)::BIGINT
-               AS n_dup_docs
-      FROM h
-      JOIN hc USING (h)
-      JOIN g USING (doc_id)
-      GROUP BY source
-      ORDER BY source""",
-
-    // shard assignment + xor digest mirrored hash-for-hash: DuckDB's
-    // bit_xor over the same 48-bit text-md5 longs is the same
-    // order-free fold
-    // fragment construction + Luhn fold mirrored step-for-step
-    "pipe_pii_scan" -> """
-      WITH a AS (
-        SELECT text ||
-               (CASE WHEN doc_id % 4 = 0 THEN ' contact user' ||
-                 (doc_id % 1000)::VARCHAR || '@example.com' ELSE '' END) ||
-               (CASE WHEN doc_id % 6 = 0 THEN ' call +1-555-' ||
-                 lpad((doc_id % 10000)::VARCHAR, 4, '0') ELSE '' END) ||
-               (CASE WHEN doc_id % 5 = 0 THEN ' host 10.' ||
-                 (doc_id % 256)::VARCHAR || '.0.' ||
-                 (doc_id % 100)::VARCHAR ELSE '' END) ||
-               (CASE WHEN doc_id % 3 = 0 THEN ' card 4' ||
-                 lpad(((doc_id * 7919) % 1000000000000000)::VARCHAR,
-                   15, '0') ELSE '' END) AS aug
-        FROM documents),
-      f AS (
-        SELECT regexp_matches(aug,
-                 '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}') AS e,
-               regexp_matches(aug, '\+1-555-\d{4}') AS p,
-               regexp_matches(aug,
-                 '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b') AS ip,
-               regexp_extract(aug, '\b(\d{16})\b', 1) AS cc
-        FROM a),
-      l AS (
-        SELECT e, p, ip, cc <> '' AS c,
-               CASE WHEN cc <> '' THEN
-                 (list_aggregate(list_transform(range(1, 17), i ->
-                    CASE WHEN (17 - i) % 2 = 0 THEN
-                      CASE WHEN cc[i]::INT * 2 > 9 THEN cc[i]::INT * 2 - 9
-                           ELSE cc[i]::INT * 2 END
-                    ELSE cc[i]::INT END), 'sum') % 10 = 0)
-               ELSE false END AS cv
-        FROM f)
-      SELECT count(1) AS n_docs,
-             coalesce(sum(CASE WHEN e THEN 1 END), 0)::BIGINT AS n_email,
-             coalesce(sum(CASE WHEN p THEN 1 END), 0)::BIGINT AS n_phone,
-             coalesce(sum(CASE WHEN ip THEN 1 END), 0)::BIGINT AS n_ipv4,
-             coalesce(sum(CASE WHEN c THEN 1 END), 0)::BIGINT AS n_card,
-             coalesce(sum(CASE WHEN cv THEN 1 END), 0)::BIGINT
-               AS n_card_luhn_valid,
-             coalesce(sum(CASE WHEN NOT e AND NOT p AND NOT ip AND NOT c
-               THEN 1 END), 0)::BIGINT AS n_clean
-      FROM l""",
-
-    "pipe_dataset_diff" -> """
-      WITH prev AS (SELECT doc_id, md5(text) AS h_prev FROM documents
-                    WHERE doc_id % 7 <> 0),
-           cur AS (SELECT doc_id,
-                          md5(CASE WHEN doc_id % 3 = 0
-                              THEN text || ' [recrawl v2]'
-                              ELSE text END) AS h_cur,
-                          n_chars
-                   FROM documents WHERE doc_id % 5 <> 0),
-           j AS (SELECT prev.h_prev, cur.h_cur, cur.n_chars
-                 FROM prev FULL OUTER JOIN cur USING (doc_id))
-      SELECT coalesce(sum(CASE WHEN h_prev IS NULL THEN 1 END), 0)::BIGINT
-               AS n_added,
-             coalesce(sum(CASE WHEN h_cur IS NULL THEN 1 END), 0)::BIGINT
-               AS n_removed,
-             coalesce(sum(CASE WHEN h_prev IS NOT NULL
-               AND h_cur IS NOT NULL AND h_prev <> h_cur THEN 1 END),
-               0)::BIGINT AS n_changed,
-             coalesce(sum(CASE WHEN h_prev = h_cur THEN 1 END), 0)::BIGINT
-               AS n_unchanged,
-             coalesce(sum(CASE WHEN h_prev IS NOT NULL
-               AND h_cur IS NOT NULL AND h_prev <> h_cur
-               THEN n_chars END), 0)::BIGINT AS changed_chars
-      FROM j""",
-
-    "pipe_shard_manifest" -> """
-      WITH s AS (
-        SELECT ('0x' || substr(md5('shard|' || doc_id), 1, 12))::BIGINT
-                 % 64 AS shard,
-               n_chars,
-               ('0x' || substr(md5(text), 1, 12))::BIGINT AS th
-        FROM documents)
-      SELECT shard, count(1) AS n_docs,
-             sum(n_chars)::BIGINT AS total_chars,
-             bit_xor(th)::BIGINT AS content_digest
-      FROM s
-      GROUP BY shard
-      ORDER BY shard""",
-
-    "pipe_profile" -> """
-      SELECT 'doc_id' AS col_name, count(1) AS n_rows,
-             sum(CASE WHEN doc_id IS NULL THEN 1 ELSE 0 END)::BIGINT
-               AS n_null,
-             count(DISTINCT doc_id) AS n_distinct,
-             min(doc_id)::VARCHAR AS min_val, max(doc_id)::VARCHAR AS max_val
-      FROM documents
-      UNION ALL
-      SELECT 'lang', count(1),
-             sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT,
-             count(DISTINCT lang), min(lang), max(lang)
-      FROM documents
-      UNION ALL
-      SELECT 'n_chars', count(1),
-             sum(CASE WHEN n_chars IS NULL THEN 1 ELSE 0 END)::BIGINT,
-             count(DISTINCT n_chars),
-             min(n_chars)::VARCHAR, max(n_chars)::VARCHAR
-      FROM documents
-      UNION ALL
-      SELECT 'source', count(1),
-             sum(CASE WHEN source IS NULL THEN 1 ELSE 0 END)::BIGINT,
-             count(DISTINCT source), min(source), max(source)
-      FROM documents
-      UNION ALL
-      SELECT 'text', count(1),
-             sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END)::BIGINT,
-             count(DISTINCT md5(text)),
-             substr(min(text), 1, 40), substr(max(text), 1, 40)
-      FROM documents
-      ORDER BY col_name""",
-
-    // the canonically-equivalent suffix pair is embedded verbatim (the
-    // JSON dump carries the raw UTF-8; DuckDB's nfc_normalize is the
-    // same Unicode canonical composition java.text.Normalizer applies)
-    "txt_unicode_norm" -> s"""
-      WITH b AS (SELECT substr(text, 1, 24) || '$SUFFIX_DECOMPOSED' AS md,
-                        substr(text, 1, 24) || '$SUFFIX_PRECOMPOSED' AS mp
-                 FROM documents),
-           n AS (SELECT md, mp, nfc_normalize(md) AS nd,
-                        nfc_normalize(mp) AS np
-                 FROM b)
-      SELECT count(1) AS n_docs,
-             sum(CASE WHEN md = mp THEN 1 ELSE 0 END)::BIGINT AS n_raw_eq,
-             sum(CASE WHEN nd = np THEN 1 ELSE 0 END)::BIGINT AS n_norm_eq,
-             sum(length(md))::BIGINT AS chars_dec,
-             sum(length(nd))::BIGINT AS chars_norm,
-             count(DISTINCT md5(nd)) AS d_norm
-      FROM n""",
-
-    "pipe_drift" -> s"""
-      WITH b AS (SELECT (least(n_chars, 4095) * 16) // 4096 AS bucket,
-                        doc_id % 2 AS half
-                 FROM documents),
-           c AS (SELECT bucket,
-                        sum(CASE WHEN half = 0 THEN 1 ELSE 0 END)::BIGINT AS ca,
-                        sum(CASE WHEN half = 1 THEN 1 ELSE 0 END)::BIGINT AS cb
-                 FROM b GROUP BY bucket),
-           t AS (SELECT bucket, ca, cb,
-                        sum(ca + 1) OVER () AS na,
-                        sum(cb + 1) OVER () AS nb
-                 FROM c),
-           f AS (SELECT bucket, ca, cb,
-                        greatest((1000000 * (ca + 1)) // na, 1)::BIGINT AS fa_ppm,
-                        greatest((1000000 * (cb + 1)) // nb, 1)::BIGINT AS fb_ppm
-                 FROM t),
-           p1 AS (SELECT *, ${graft.functions.DetMath.eSql("fa_ppm")} AS ea,
-                         ${graft.functions.DetMath.eSql("fb_ppm")} AS eb
-                  FROM f),
-           p2 AS (SELECT *,
-                    ${graft.functions.DetMath.ySql("fa_ppm::DOUBLE", "ea")} AS ya,
-                    ${graft.functions.DetMath.ySql("fb_ppm::DOUBLE", "eb")} AS yb
-                  FROM p1),
-           p3 AS (SELECT *, ${graft.functions.DetMath.zSql("ya")} AS za,
-                         ${graft.functions.DetMath.zSql("yb")} AS zb
-                  FROM p2),
-           p4 AS (SELECT *, (za * za) AS za2, (zb * zb) AS zb2 FROM p3)
-      SELECT bucket, ca, cb, fa_ppm, fb_ppm,
-             floor((fa_ppm - fb_ppm)::DOUBLE *
-               (${graft.functions.DetMath.lnSqlFromParts("ea", "za", "za2")}
-                - ${graft.functions.DetMath.lnSqlFromParts("eb", "zb", "zb2")}))::BIGINT
-               AS psi_micro
-      FROM p4
-      ORDER BY bucket""",
-
-    "pipe_split" -> """
-      WITH s AS (
-        SELECT doc_id, n_chars,
-               ('0x' || substr(md5('split|' || doc_id), 1, 12))::BIGINT
-                 % 1000 AS m
-        FROM documents)
-      SELECT CASE WHEN m < 980 THEN 'train'
-                  WHEN m < 990 THEN 'val'
-                  ELSE 'test' END AS split,
-             count(1) AS n_docs,
-             sum(n_chars)::BIGINT AS total_chars,
-             min(doc_id) AS first_doc,
-             max(doc_id) AS last_doc
-      FROM s
-      GROUP BY 1
-      ORDER BY split""",
-
-    "pipe_mix_weights" -> s"""
-      WITH ps AS (SELECT source, count(1) AS n_docs,
-                         CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) AS n_tokens
-                  FROM documents GROUP BY source
-                  HAVING CAST(sum(len(${Text.sqlTokens("text")})) AS BIGINT) > 0),
-           t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-                        count(1) AS n_sources
-                 FROM ps)
-      SELECT source, n_docs, n_tokens,
-             least(1000, ((total_tokens // n_sources) * 1000) // n_tokens)
-               AS weight_mille,
-             (n_tokens * least(1000, ((total_tokens // n_sources) * 1000) // n_tokens)) // 1000
-               AS sampled_tokens
-      FROM ps CROSS JOIN t
-      ORDER BY source""",
-
-    // DetMath deterministic ln, staged as named columns (one eval per
-    // stage, like Catalyst subexpr elim): ln(u) = lnDet(h+1) − 48·ln2,
-    // then / w → * 1e9, identical association — every double op is
-    // correctly rounded on both engines, so key_e9 is bit-exact
-    "pipe_sample_weighted" -> s"""
-      WITH s0 AS (SELECT doc_id, n_chars,
-                    (('0x' || substr(md5('wsamp|' || doc_id::VARCHAR),
-                       1, 12))::BIGINT::DOUBLE + '1.0'::DOUBLE) AS x
-                  FROM documents),
-      s1 AS (SELECT *, ${graft.functions.DetMath.eSql("x")} AS e FROM s0),
-      s2 AS (SELECT *, ${graft.functions.DetMath.ySql("x", "e")} AS y FROM s1),
-      s3 AS (SELECT *, ${graft.functions.DetMath.zSql("y")} AS z FROM s2),
-      s4 AS (SELECT *, (z * z) AS z2 FROM s3)
-      SELECT doc_id, n_chars,
-             round(((${graft.functions.DetMath.lnSqlFromParts("e", "z", "z2")}
-                     - '$LN_2P48'::DOUBLE)
-                    / greatest(n_chars, 1)::DOUBLE) * 1e9)::BIGINT AS key_e9
-      FROM s4
-      ORDER BY key_e9 DESC, doc_id
-      LIMIT 10""",
-
-    "pipe_curriculum" -> s"""
-      WITH sc AS (SELECT s.doc_id, s.avg_micronat, d.lang
-                  FROM $sqlLmScores s JOIN documents d ON s.doc_id = d.doc_id),
-           r AS (SELECT lang, avg_micronat,
-                        row_number() OVER (PARTITION BY lang
-                                           ORDER BY avg_micronat) AS rn,
-                        count(1) OVER (PARTITION BY lang) AS n
-                 FROM sc),
-           b AS (SELECT lang,
-                        min(CASE WHEN rn = (n + 3) // 4 THEN avg_micronat END) AS q1,
-                        min(CASE WHEN rn = (n + 1) // 2 THEN avg_micronat END) AS q2,
-                        min(CASE WHEN rn = (3 * n + 3) // 4 THEN avg_micronat END) AS q3
-                 FROM r GROUP BY lang),
-           st AS (SELECT sc.lang, sc.avg_micronat,
-                         CAST(1 + CASE WHEN avg_micronat > q1 THEN 1 ELSE 0 END
-                                + CASE WHEN avg_micronat > q2 THEN 1 ELSE 0 END
-                                + CASE WHEN avg_micronat > q3 THEN 1 ELSE 0 END
-                              AS BIGINT) AS stage
-                  FROM sc JOIN b ON sc.lang = b.lang)
-      SELECT lang, stage, count(1) AS n_docs,
-             min(avg_micronat) AS min_score,
-             max(avg_micronat) AS max_score
-      FROM st
-      GROUP BY lang, stage
-      ORDER BY lang, stage""",
-
-    "pipe_modern_curation" -> s"""
-      WITH gate AS (SELECT doc_id FROM $sqlGopherFlags WHERE gopher_pass),
-           lmok AS (SELECT doc_id FROM $sqlLmScores
-                    WHERE avg_micronat <= $LM_TAU),
-           dup AS (SELECT DISTINCT b_id AS doc_id
-                   FROM ${graft.queries.Dedup.sqlWinnowPairs}),
-           kept AS (SELECT d.source, d.n_chars
-                    FROM documents d
-                    WHERE d.doc_id IN (SELECT doc_id FROM gate)
-                      AND d.doc_id IN (SELECT doc_id FROM lmok)
-                      AND d.doc_id NOT IN (SELECT doc_id FROM dup))
-      SELECT source, count(1) AS n_docs, sum(n_chars)::BIGINT AS total_chars
-      FROM kept
-      GROUP BY source
-      ORDER BY source"""
-  )
 
   /** DuckDB subquery yielding the txt_gopher flag columns per doc —
     * shared between the txt_gopher oracle and pipe_modern_curation's.

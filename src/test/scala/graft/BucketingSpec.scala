@@ -11,15 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def dropTable(t: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    // a fresh JVM's in-memory catalog doesn't know prior runs' dirs
-    val dir = new java.io.File(s"spark-warehouse/$t")
-    if (dir.exists()) {
-      import scala.reflect.io.Directory
-      new Directory(dir).deleteRecursively()
-    }
-  }
+  private def dropTable(t: String): Unit = spark.sql(s"DROP TABLE IF EXISTS $t")
 
   test("bucketed join plans without Exchange and matches shuffled join") {
     dropTable("graft_li_b")

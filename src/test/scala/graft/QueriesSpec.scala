@@ -14,12 +14,20 @@ class QueriesSpec extends AnyFunSuite {
     // testdata-encoding drift that drops queries from the gate) fails
     // loudly. Update the pin ONLY when deliberately adding queries.
     val expected = 262
-    val n = SparkEntry.queries.size
-    assert(n == expected,
-      s"query registry has $n entries, expected $expected; " +
-        s"names: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    assert(SparkEntry.oracleSql.size == expected,
-      s"oracleSql has ${SparkEntry.oracleSql.size} entries, expected $expected")
+    val rows = SparkEntry.modules.flatMap(_.rows)
+    assert(rows.size == expected,
+      s"query registry has ${rows.size} rows, expected $expected; " +
+        s"names: ${rows.map(_.name).sorted.mkString(", ")}")
+  }
+
+  test("a name given by two rows fails SparkEntry's views, naming it") {
+    val twice = new QueryModule {
+      def rows: Seq[Query] = Seq("SELECT 1", "SELECT 2")
+        .map(Query("dup_q", (s, d) => Tables.documents(s, d), _))
+    }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.byName(Seq(graft.queries.Core, twice)))
+    assert(e.getMessage.contains("dup_q"), e.getMessage)
   }
 
   test("every query runs and returns rows at sf0.001") {
@@ -28,11 +36,6 @@ class QueriesSpec extends AnyFunSuite {
       if (n == 0) Some(name) else None
     }
     assert(empty.isEmpty, s"queries with 0 rows: $empty")
-  }
-
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
   test("every registry query is documented in README's coverage map") {

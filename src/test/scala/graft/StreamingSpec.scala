@@ -216,20 +216,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("file sink is exactly-once across restarts: a re-run commits nothing") {
     val d = TestSpark.sf0001
-    val outDir = new java.io.File(
-      graft.queries.EventsTime.replayScratch(spark, d)._2 + "_fsink_out")
+    val ev = graft.queries.EventsTime
+    val outDir = new java.io.File(ev.fileSinkDir(ev.replayScratch(spark, d)._2, "out"))
     def partFiles(): Map[String, Int] =
       Seq(outDir).filter(_.isDirectory)
         .map(dd => dd.getName ->
           Option(dd.listFiles()).getOrElse(Array.empty)
             .count(_.getName.endsWith(".parquet"))).toMap
-    val first = graft.queries.EventsTime.streamFileSinkReplay(spark, d)
-      .collect().map(_.toString).toSeq
+    val first = ev.streamFileSinkReplay(spark, d).collect().map(_.toString).toSeq
     val files1 = partFiles()
     assert(files1.nonEmpty && files1.values.sum > 0, s"no sink output: $files1")
+    // an empty read-back would also pass the restart checks below; the
+    // memory-sink replay computes the same closed windows
+    assert(first.nonEmpty, "file sink read back no rows")
+    assert(first === SparkEntry.queries("ev_stream_replay")(spark, d)
+      .collect().map(_.toString).toSeq)
     // restart against the completed checkpoint: same rows, ZERO new files
-    val second = graft.queries.EventsTime.streamFileSinkReplay(spark, d)
-      .collect().map(_.toString).toSeq
+    val second = ev.streamFileSinkReplay(spark, d).collect().map(_.toString).toSeq
     assert(second === first)
     assert(partFiles() === files1, "sink grew on a no-new-data restart")
   }
