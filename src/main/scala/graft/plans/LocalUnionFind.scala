@@ -33,60 +33,22 @@ object LocalUnionFind {
   }
 }
 
-/** Open-addressing (id -> node) table over primitive arrays with a parent
-  * array on the node indices — no boxed map, and O(distinct ids) state.
-  * Linear probing; doubles at 60% load.
+/** Union-find over a [[LongIdTable]]'s node indices — no boxed map, and
+  * O(distinct ids) state.
   */
 private final class LocalUnionFind {
-  private var cap = 2048
-  private var mask = cap - 1
-  private var table = new Array[Int](cap) // 0 = empty, node n stored as n+1
-  private var size = 0
+  private val nodes = new LongIdTable
+  private var parent = new Array[Int](1024)
 
-  // parallel node arrays (index = insertion order)
-  private var ids = new Array[Long](cap / 2)
-  private var parent = new Array[Int](cap / 2)
-
-  @inline private def hash(id: Long): Int = {
-    val h = id * 0x9E3779B97F4A7C15L // Fibonacci mix: sequential ids spread
-    (h ^ (h >>> 32)).toInt
-  }
-
-  /** The node index of `id`, inserted as its own root when new. */
+  /** The node index of `id`, its own root when new. */
   private def node(id: Long): Int = {
-    var idx = hash(id) & mask
-    while (true) {
-      val slot = table(idx)
-      if (slot == 0) return insert(idx, id)
-      if (ids(slot - 1) == id) return slot - 1
-      idx = (idx + 1) & mask
+    val known = nodes.size
+    val n = nodes.node(id)
+    if (n == known) {
+      if (n == parent.length) parent = java.util.Arrays.copyOf(parent, n * 2)
+      parent(n) = n
     }
-    -1 // unreachable
-  }
-
-  private def insert(idx: Int, id: Long): Int = {
-    if (size == ids.length) {
-      ids = java.util.Arrays.copyOf(ids, size * 2)
-      parent = java.util.Arrays.copyOf(parent, size * 2)
-    }
-    val n = size
-    ids(n) = id; parent(n) = n
-    table(idx) = n + 1
-    size += 1
-    if (size * 5 > cap * 3) grow()
     n
-  }
-
-  private def grow(): Unit = {
-    cap *= 2; mask = cap - 1
-    table = new Array[Int](cap)
-    var n = 0
-    while (n < size) {
-      var idx = hash(ids(n)) & mask
-      while (table(idx) != 0) idx = (idx + 1) & mask
-      table(idx) = n + 1
-      n += 1
-    }
   }
 
   /** Root of `n0`, halving the path on the way up. */
@@ -103,13 +65,72 @@ private final class LocalUnionFind {
     val ra = find(node(a))
     val rb = find(node(b))
     // the smaller id is always the root: each root is its set's minimum
-    if (ra != rb) { if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb }
+    if (ra != rb) {
+      if (nodes.id(ra) < nodes.id(rb)) parent(rb) = ra else parent(ra) = rb
+    }
   }
 
   def stars: Iterator[(Long, Long)] =
-    Iterator.range(0, size).flatMap { n =>
+    Iterator.range(0, nodes.size).flatMap { n =>
       val r = find(n)
       if (r == n) Iterator.empty
-      else Iterator((ids(n), ids(r)), (ids(r), ids(n)))
+      else Iterator((nodes.id(n), nodes.id(r)), (nodes.id(r), nodes.id(n)))
     }
+}
+
+/** Open-addressing (id -> node index) table over primitive arrays: node
+  * indices are dense, in insertion order, so callers keep per-node state
+  * in plain arrays beside it. Linear probing; doubles at 60% load.
+  */
+private[plans] final class LongIdTable {
+  private var cap = 2048
+  private var mask = cap - 1
+  private var table = new Array[Int](cap) // 0 = empty, node n stored as n+1
+  private var ids = new Array[Long](cap / 2)
+  private var count = 0
+
+  /** Number of distinct ids seen. */
+  def size: Int = count
+
+  /** The id of node index `n`. */
+  def id(n: Int): Long = ids(n)
+
+  @inline private def hash(id: Long): Int = {
+    val h = id * 0x9E3779B97F4A7C15L // Fibonacci mix: sequential ids spread
+    (h ^ (h >>> 32)).toInt
+  }
+
+  /** The node index of `id`, appended as index `size` when new. */
+  def node(id: Long): Int = {
+    var idx = hash(id) & mask
+    while (true) {
+      val slot = table(idx)
+      if (slot == 0) return insert(idx, id)
+      if (ids(slot - 1) == id) return slot - 1
+      idx = (idx + 1) & mask
+    }
+    -1 // unreachable
+  }
+
+  private def insert(idx: Int, id: Long): Int = {
+    if (count == ids.length) ids = java.util.Arrays.copyOf(ids, count * 2)
+    val n = count
+    ids(n) = id
+    table(idx) = n + 1
+    count += 1
+    if (count * 5 > cap * 3) grow()
+    n
+  }
+
+  private def grow(): Unit = {
+    cap *= 2; mask = cap - 1
+    table = new Array[Int](cap)
+    var n = 0
+    while (n < count) {
+      var idx = hash(ids(n)) & mask
+      while (table(idx) != 0) idx = (idx + 1) & mask
+      table(idx) = n + 1
+      n += 1
+    }
+  }
 }

@@ -19,9 +19,10 @@ import org.apache.spark.sql.GraftShims.releaseLocalCheckpoint
   * conflict count on its initial state, and its rounds only stitch the
   * components that span partitions — no round when none does.
   *
-  * Fused loops (lpa/bfs/harmonic) are plain folds instead: their rounds
+  * Fused loops (bfs/harmonic) are plain folds instead: their rounds
   * compile into one query whose edge exchange is reused across rounds,
-  * which a per-round checkpoint would break.
+  * which a per-round checkpoint would break. Label propagation runs its
+  * rounds in memory per component ([[LocalLpa]]), so it has no loop.
   */
 object RoundLoop {
 

@@ -3,7 +3,7 @@ package graft.queries
 import graft.{Query, QueryModule, Tables}
 import graft.functions.Text
 import graft.operators.DedupOps
-import graft.plans.{LocalUnionFind, RoundLoop}
+import graft.plans.{LocalLpa, LocalUnionFind, RoundLoop}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -437,12 +437,27 @@ object Dedup extends QueryModule {
     */
   def ccFromPairs(docs: DataFrame, pairs: DataFrame,
       ordered: Boolean = true): DataFrame = {
-    // label frames are <= |corpus| keys — broadcast them into the edge
-    // scan when the corpus is within broadcast reach (size-gated via
-    // DedupOps.sizeHint); the EDGE set, |pairs|-sized,
-    // must never be the build side. Past reach the hint drops away and
-    // every loop join runs as a key shuffle.
-    val hint = DedupOps.sizeHint(docs)
+    val out = componentRoots(pairs, Some(docs))
+      .select(col("id").as("doc_id"), col("label").as("cluster"))
+    if (ordered) out.orderBy("doc_id") else out
+  }
+
+  /** `(id, label)`: each node's component root, the smallest id of its
+    * component, by [[ccFromPairs]]' three steps over `pairs` (a pair
+    * with a null endpoint is ignored). With `docs` every doc_id is
+    * labeled, isolated ones by themselves; without, only the nodes of a
+    * pair between two distinct ids — a node whose only pairs are
+    * self-loops is its own root and gets no row. The result reads the
+    * loop state's checkpoint, the one frame the call leaves pinned.
+    */
+  private def componentRoots(pairs: DataFrame,
+      docs: Option[DataFrame]): DataFrame = {
+    // label frames are <= |nodes| keys — broadcast them into the edge
+    // scan when the corpus (or, without one, the pair set) is within
+    // broadcast reach (size-gated via DedupOps.sizeHint); the EDGE set,
+    // |pairs|-sized, must never be the build side. Past reach the hint
+    // drops away and every loop join runs as a key shuffle.
+    val hint = DedupOps.sizeHint(docs.getOrElse(pairs))
     val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     // The star set (at most two rows per input pair, far fewer on
     // clique-ish near-dup graphs) is the loop's retained edge frame; the
@@ -468,8 +483,12 @@ object Dedup extends QueryModule {
     // the convergence count and the next frontier read the checkpoint
     // instead of re-executing the join; before round 1 "previous" is the
     // node's own id.
-    val init = docs.select(col("doc_id").as("id"))
-      .join(hint(starNbr), col("id") === col("src"), "left")
+    val nodes = docs match {
+      case Some(d) => d.select(col("doc_id").as("id"))
+        .join(hint(starNbr), col("id") === col("src"), "left")
+      case None => starNbr.withColumn("id", col("src"))
+    }
+    val init = nodes
       .select(col("id"), col("id").as("old_label"),
         least(col("id"), coalesce(col("nbr_min"), col("id"))).as("label"),
         col("conflict"))
@@ -524,8 +543,7 @@ object Dedup extends QueryModule {
     // the state checkpoint has no lineage back to the stars: only it
     // outlives the call, whatever the caller does with the labels
     org.apache.spark.sql.GraftShims.releaseLocalCheckpoint(stars)
-    val out = res.state.select(col("id").as("doc_id"), col("label").as("cluster"))
-    if (ordered) out.orderBy("doc_id") else out
+    res.state.select("id", "label")
   }
 
   /** Prefix-block size cap for the verification-grade pair ops
@@ -1744,7 +1762,7 @@ object Dedup extends QueryModule {
     * per-round state table is a SHUFFLE join against the edge list, NOT
     * a broadcast — r17's per-round state broadcast paid a broadcast-
     * build job per round that re-executed the entire state subplan
-    * (the same pattern doubled scaled_lpa_x20, see [[lpaFromPairs]]).
+    * (the same pattern doubled scaled_lpa_x20's old round plan).
     * [[corenessFromPairs]] keeps its broadcast because it materializes
     * every round, so there is no cross-round exchange reuse to lose.
     * The symmetrized edge checkpoint stays pinned while the lazy result
@@ -1758,8 +1776,10 @@ object Dedup extends QueryModule {
       .select(col("id"), lit(0L).as("dist"))
     (1 to rounds).foldLeft(seed) { (dist, _) =>
       edges
-        // SHUFFLE_HASH on the nodes-bounded state side — same
-        // sort-elision rationale as the LPA round join (guide §3.1)
+        // SHUFFLE_HASH on the nodes-bounded state side (guide §3.1):
+        // the edge exchange is reused across rounds, but SortMergeJoin
+        // would still re-sort the m-row edge partitions every round; a
+        // per-partition hash build of the state table replaces the sorts
         .join(dist.select(col("id").as("dst"), col("dist"))
           .hint("shuffle_hash"), "dst")
         .select(col("src").as("id"), (col("dist") + 1L).as("dist"))
@@ -1791,7 +1811,7 @@ object Dedup extends QueryModule {
         lit(0L).as("dist"))) { (dist, _) =>
       edges
         // SHUFFLE_HASH on the (seeds x nodes)-bounded state side —
-        // same sort-elision rationale as the LPA round join
+        // same sort-elision rationale as the BFS round join
         .join(dist.select(col("seed"), col("id").as("dst"),
           col("dist")).hint("shuffle_hash"), "dst")
         .select(col("seed"), col("src").as("id"),
@@ -1869,55 +1889,51 @@ object Dedup extends QueryModule {
     * cluster-dedup keep-one-per-cluster rule can act per family
     * instead of per component.
     *
-    * Scale shape: the symmetrized edge list is checkpointed ONCE; each
-    * round is one edges-to-labels join, one exchange of the joined
-    * (src, lab) rows on `src`, then a (src, lab) hash count and the
-    * argmax over it, both on that one `src` partitioning — the PageRank
-    * round cost, never a window, and the (src, lab) frequency rows are
-    * bounded by the edge count. The argmax is `max(struct(n, -lab))`,
-    * one agg and no window rank; its struct buffer plans as a
-    * SortAggregate (a struct max has no fixed-width hash-agg buffer).
-    * Its output is already hashed on `src`, which the next round's
-    * label side needs. Mirrored in the oracle as
-    * max-count-then-min-label.
+    * Solved where the components are: a node's label after R rounds
+    * depends only on its own component, so [[graft.plans.LocalLpa]]
+    * runs exactly R rounds in memory over partitions that hold whole
+    * components. Three steps:
+    *  1. pin: the pairs with two non-null endpoints (a pair with a null
+    *     endpoint is ignored, as in [[ccFromPairs]]) are checkpointed
+    *     once, so the check and the solve read the same partitions;
+    *  2. check: one aggregate over the distinct (node, partition) rows
+    *     counts the nodes that appear in two partitions. A node shared
+    *     by two partitions is the only way a component's pairs can be
+    *     split: `(1,2)` and `(1,3)` in two partitions split a star even
+    *     though each partition's union-find is conflict-free;
+    *  3. solve: with no shared node the local solve runs over the
+    *     pinned partitions with no exchange. Otherwise every pair gets
+    *     its component root from [[ccFromPairs]]' machinery, attached
+    *     by the size-gated broadcast, and one `repartition(root)`
+    *     exchange puts each component in one partition (adaptive
+    *     coalescing merges whole partitions, never splits one).
     *
-    * @return (doc_id, community) for every non-isolated node
+    * Its state, per task, is the partition's nodes plus 2 x its pairs,
+    * so the largest component must fit one task.
     *
-    * Join shape (r18, measured — the r17 regression): each round's
-    * label re-attach is a SHUFFLE join, not a broadcast. The rounds
-    * are a plain fold, so they compile into ONE query and
-    * ReusedExchange pays the m-row edge exchange ONCE for all of them;
-    * r17's per-round label broadcast traded that single amortized
-    * exchange for 4 broadcast-build jobs, each re-executing the whole
-    * un-checkpointed label subplan — driver-measured 9.5 -> 18.0 s at
-    * identical stage load (r17 VERDICT). See [[corenessFromPairs]] for
-    * why ITS broadcast stays (per-round materialization means no
-    * exchange reuse to lose).
+    * @return (doc_id, community) for every non-isolated node, ordered
+    *         by doc_id
     */
   def lpaFromPairs(pairs0: DataFrame, rounds: Int = LPA_ROUNDS): DataFrame = {
-    val edges = symmetrized(pairs0)
-    (1 to rounds).foldLeft(edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("lab"))) { (lab, _) =>
-      edges
-        // SHUFFLE_HASH on the nodes-sized label side (guide §3.1): the
-        // edge exchange is reused across rounds, but SortMergeJoin
-        // still re-SORTS the m-row edge partitions EVERY round — a
-        // per-partition hash build of the label table replaces those
-        // sorts (label rows per partition = nodes/shuffle-partitions,
-        // the size a cluster tunes its partition count to anyway)
-        .join(lab.select(col("id").as("dst"), col("lab"))
-          .hint("shuffle_hash"), "dst")
-        // one exchange per round: hashed on src, the count, the argmax
-        // and the next round's label side all share it (no (src, lab)
-        // exchange in front of the count)
-        .select(col("src"), col("lab"))
-        .repartition(col("src"))
-        .groupBy(col("src"), col("lab"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy("src")
-        .agg(max(struct(col("n"), (-col("lab")).as("neg"))).as("m"))
-        .select(col("src").as("id"), (-col("m.neg")).as("lab"))
-    }.select(col("id").as("doc_id"), col("lab").as("community"))
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    val pairs = pairs0
+      .filter(col("a_id").isNotNull && col("b_id").isNotNull)
+      .select("a_id", "b_id")
+      .localCheckpoint(true,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val shared = pairs.as(longPair)
+      .mapPartitions(LocalLpa.nodes)(Encoders.scalaLong).toDF("id")
+      .groupBy("id").count().filter(col("count") > 1).count()
+    val whole = if (shared == 0) pairs else {
+      // a node whose only pairs are self-loops has no root row: it is
+      // its own component
+      val roots = componentRoots(pairs, None)
+      pairs.join(DedupOps.sizeHint(pairs)(roots), col("a_id") === col("id"), "left")
+        .repartition(coalesce(col("label"), col("a_id")))
+        .select("a_id", "b_id")
+    }
+    whole.as(longPair).mapPartitions(LocalLpa.labels(rounds))(longPair)
+      .toDF("doc_id", "community")
       .orderBy("doc_id")
   }
 

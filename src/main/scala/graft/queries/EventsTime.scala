@@ -546,45 +546,33 @@ object EventsTime extends QueryModule {
   private[graft] def fileSinkDir(scratch: String, part: String): String =
     new java.io.File(Scratch.jvm, s"${new java.io.File(scratch).getName}_fsink_$part").getPath
 
+  /** The append-mode emission rule in SQL, the oracle of every replay
+    * that emits exactly the windows its final watermark closed: a
+    * tumbling window materializes iff the final watermark
+    * (max ts - 30 min) passed its end. */
+  private val closedWindowsSql = """
+      WITH m AS (SELECT max(ts) AS mx FROM events)
+      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
+             event_type, count(1) AS n
+      FROM events, m
+      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
+      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
+               <= mx - INTERVAL 30 MINUTE
+      ORDER BY hour, event_type"""
+
   override def rows: Seq[Query] = Seq(
     // -- watermark semantics, oracle-checked (see windowedReplayOn) -----------
     Query("ev_stream_replay", onScratch(windowedReplayOn),
-      // append-mode emission rule in SQL: a tumbling window materializes
-      // iff the final watermark (max ts - 30 min) passed its end
-      """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type"""),
+      closedWindowsSql),
     Query("ev_stream_file_sink", (s, d) => streamFileSinkReplay(s, d),
       // file sink: same emission rule as the memory-sink replay — the
       // sink changes durability (commit log + checkpoint), not content
-      """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type"""),
+      closedWindowsSql),
     Query("ev_stream_multibatch", (s, d) => streamMultiBatchReplay(s, d),
       // multi-batch replay over time-monotone chunks drops nothing and
       // emits exactly the windows the FINAL watermark closed — the same
       // batching-invariant emission rule as the single-batch replay
-      """
-      WITH m AS (SELECT max(ts) AS mx FROM events)
-      SELECT strftime(date_trunc('hour', ts::TIMESTAMP), '%Y-%m-%d %H') AS hour,
-             event_type, count(1) AS n
-      FROM events, m
-      GROUP BY date_trunc('hour', ts::TIMESTAMP), event_type, mx
-      HAVING date_trunc('hour', ts::TIMESTAMP) + INTERVAL 1 HOUR
-               <= mx - INTERVAL 30 MINUTE
-      ORDER BY hour, event_type"""),
+      closedWindowsSql),
     Query("ev_stream_late_drop", (s, d) => streamLateDropReplay(s, d),
       // the late-data path, drop rule EXPLICIT: the three synthetic
       // chunk-5/6 rows (see lateDropScratch) are reconstructed from

@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * break naive blocking must stay bounded.
   */
 class DedupGuardSpec extends AnyFunSuite {
+  import DedupGuardSpec.component
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -285,22 +286,8 @@ class DedupGuardSpec extends AnyFunSuite {
     assert(got === Seq(1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 
-  test("ccFromPairs runs no stitching round when each component sits in one partition") {
-    // 4 partitions, each generating 5 whole components (a 12-node path
-    // plus chords), so the local pass solves everything and the conflict
-    // count on the initial labels is 0. A stitching round costs a
-    // frontier join, a min aggregate, a lookup join and a checkpoint:
-    // several jobs on top of the stars checkpoint, the star aggregate
-    // and the initial checkpoint.
-    def component(c: Long): Seq[(Long, Long)] = {
-      val base = c * 100
-      (0L until 11L).map(i => (base + i + 1, base + i)) ++
-        Seq((base + 11, base), (base + 3, base + 9))
-    }
-    val pairs = spark.range(0, 20, 1, 4).as[Long]
-      .flatMap(component).toDF("a_id", "b_id")
-    val edges = (0L until 20L).flatMap(component)
-    val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+  /** `body`'s result and the number of jobs started while it ran. */
+  private def jobsIn[T](body: => T): (T, Int) = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val counter = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -309,14 +296,50 @@ class DedupGuardSpec extends AnyFunSuite {
       }
     }
     spark.sparkContext.addSparkListener(counter)
-    val labels = try {
-      val out = Dedup.ccFromPairs(ids.toDF("doc_id"), pairs, ordered = false)
+    val out = try {
+      val out = body
       org.apache.spark.sql.GraftShims.waitListenerBusEmpty(spark)
       out
     } finally spark.sparkContext.removeSparkListener(counter)
+    (out, jobs.get)
+  }
+
+  test("ccFromPairs runs no stitching round when each component sits in one partition") {
+    // 4 partitions, each generating 5 whole components, so the local
+    // pass solves everything and the conflict count on the initial
+    // labels is 0. A stitching round costs a frontier join, a min
+    // aggregate, a lookup join and a checkpoint: several jobs on top of
+    // the stars checkpoint, the star aggregate and the initial
+    // checkpoint.
+    val pairs = spark.range(0, 20, 1, 4).as[Long]
+      .flatMap(component).toDF("a_id", "b_id")
+    val edges = (0L until 20L).flatMap(component)
+    val ids = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val (labels, jobs) = jobsIn(
+      Dedup.ccFromPairs(ids.toDF("doc_id"), pairs, ordered = false))
     assert(labels.as[(Long, Long)].collect().toMap === unionFind(ids, edges))
     // Measured: 4 jobs with no round, 9 with one forced round.
-    assert(jobs.get <= 6, s"ccFromPairs ran ${jobs.get} jobs")
+    assert(jobs <= 6, s"ccFromPairs ran $jobs jobs")
+  }
+
+  test("lpaFromPairs solves in place, with no CC, when each component sits in one partition") {
+    // the same 4 partitions of 5 whole components each as above: no node
+    // appears in two partitions, so the check finds none and the rounds
+    // run over the pinned partitions; spread over 16 partitions, the same
+    // pairs go through the CC and the exchange by component root
+    val pairs = spark.range(0, 20, 1, 4).as[Long]
+      .flatMap(component).toDF("a_id", "b_id")
+    def labels(p: org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) =
+      jobsIn(Dedup.lpaFromPairs(p).as[(Long, Long)].collect().toMap)
+    val (local, localJobs) = labels(pairs)
+    val (spread, spreadJobs) = labels(pairs.repartition(16))
+    assert(local === spread)
+    assert(local.size === 20 * 12)
+    // Measured, call and collect together: 7 jobs on the partition-local
+    // path (pin, check, sorted collect), 28 with the CC and the exchange;
+    // the CC's no-round minimum alone is 4 more.
+    assert(localJobs <= 9, s"lpaFromPairs ran $localJobs jobs")
+    assert(spreadJobs > localJobs)
   }
 
   test("local union-find pass: stars rooted at each set's minimum") {
@@ -377,5 +400,16 @@ class DedupGuardSpec extends AnyFunSuite {
     val maxSize = labeled.groupBy("cluster")
       .agg(count(lit(1)).as("n")).agg(max("n")).collect()(0).getLong(0)
     assert(maxSize >= 2L, "testdata has no near-dup family; guard untested")
+  }
+}
+
+object DedupGuardSpec {
+  /** 12-node path plus two chords, ids `c * 100 + 0..11`. Kept out of
+    * the spec class so the task closures that call it stay serializable.
+    */
+  private def component(c: Long): Seq[(Long, Long)] = {
+    val base = c * 100
+    (0L until 11L).map(i => (base + i + 1, base + i)) ++
+      Seq((base + 11, base), (base + 3, base + 9))
   }
 }

@@ -1,20 +1,44 @@
 package graft
 
 import graft.queries.Dedup
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Deterministic synchronous label propagation: hand-traced rounds on
   * a bridged two-triangle graph, a brute-force equivalence property on
-  * random graphs, and the community-vs-component split LPA exists for.
+  * random graphs (solved in place when every component sits in one
+  * partition, and after the exchange by component root when the pairs
+  * are spread), and the community-vs-component split LPA exists for.
   */
 class LpaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import spark.implicits._
 
   private def run(edges: Seq[(Long, Long)], rounds: Int = Dedup.LPA_ROUNDS)
+      : Map[Long, Long] = runOn(edges.toDF("a_id", "b_id"), rounds)
+
+  private def runOn(pairs: DataFrame, rounds: Int = Dedup.LPA_ROUNDS)
       : Map[Long, Long] = {
-    import spark.implicits._
-    Dedup.lpaFromPairs(edges.toDF("a_id", "b_id"), rounds)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rows = Dedup.lpaFromPairs(pairs, rounds).as[(Long, Long)].collect()
+    assert(rows.map(_._1).toSeq === rows.map(_._1).toSeq.sorted.distinct,
+      "rows not one per node in doc_id order")
+    rows.toMap
+  }
+
+  /** One partition per slice of pairs, in order. */
+  private def sliced(slices: Seq[Seq[(Long, Long)]]): DataFrame =
+    spark.sparkContext.parallelize(slices, slices.size max 1)
+      .flatMap(identity).toDF("a_id", "b_id")
+
+  /** `edges` with each connected component's pairs in one partition. */
+  private def wholeComponents(edges: Seq[(Long, Long)]): DataFrame = {
+    val root = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = root.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); root(x) = r; r }
+    }
+    edges.foreach { case (a, b) => root(find(a)) = find(b) }
+    sliced(edges.groupBy { case (a, _) => find(a) }.values.toSeq)
   }
 
   /** Reference implementation: synchronous rounds, most frequent
@@ -50,14 +74,44 @@ class LpaSpec extends AnyFunSuite {
   test("matches the brute-force reference on random graphs") {
     val rng = new scala.util.Random(42)
     for (seed <- 1 to 5) {
-      val edges = Seq.fill(25)((rng.nextLong(10), rng.nextLong(10)))
-        .filter { case (a, b) => a != b }
-        .map { case (a, b) => if (a < b) (a, b) else (b, a) }
-        .distinct
-      if (edges.nonEmpty)
-        assert(run(edges) === brute(edges, Dedup.LPA_ROUNDS),
-          s"seed=$seed edges=$edges")
+      // duplicate pairs, both orientations and self-loops kept: each
+      // copy counts as one more neighbor, a self-loop as two
+      val edges = Seq.fill(25)((rng.nextLong(10), rng.nextLong(10))) ++
+        Seq.fill(10)((10L + rng.nextLong(30), 10L + rng.nextLong(30)))
+      val want = brute(edges, Dedup.LPA_ROUNDS)
+      assert(runOn(wholeComponents(edges)) === want,
+        s"whole components, seed=$seed edges=$edges")
+      assert(runOn(edges.toDF("a_id", "b_id").repartition(16)) === want,
+        s"repartition(16), seed=$seed edges=$edges")
     }
+  }
+
+  test("duplicate pairs and self-loops count with their multiplicity") {
+    val edges = Seq((1L, 1L), (1L, 2L), (2L, 3L), (2L, 3L))
+    val got = run(edges)
+    assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    assert(got === brute(edges, Dedup.LPA_ROUNDS))
+  }
+
+  test("a star split over two partitions is solved as one component") {
+    // no node pair conflicts inside either partition's union-find, yet
+    // node 1's neighbors are in both: solving each partition alone
+    // would label node 1 twice
+    val edges = Seq((1L, 2L), (1L, 3L))
+    val got = runOn(sliced(Seq(Seq((1L, 2L)), Seq((1L, 3L)))))
+    assert(got === brute(edges, Dedup.LPA_ROUNDS))
+    assert(got === Map(1L -> 1L, 2L -> 2L, 3L -> 2L))
+  }
+
+  test("pairs with a null endpoint are ignored") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (None, Some(5L)), (Some(5L), Some(6L)), (Some(1L), Some(2L)),
+      (Some(2L), Some(3L))).toDF("a_id", "b_id")
+    assert(runOn(pairs) ===
+      brute(Seq((5L, 6L), (1L, 2L), (2L, 3L)), Dedup.LPA_ROUNDS))
+    val alone = Seq[(Option[Long], Option[Long])]((Some(7L), None))
+      .toDF("a_id", "b_id")
+    assert(runOn(alone).isEmpty)
   }
 
   test("labels are node ids from the node's own component") {

@@ -414,20 +414,25 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), p)
   }
 
-  test("lpa: round argmax is one struct-max aggregate, never a window") {
+  test("lpa: never a window") {
     val p = plan("graph_lpa")
-    assert(!p.contains("Window"),
-      "max(struct(n, -lab)) argmax replaced by a window rank:\n" + p)
+    assert(!p.contains("Window"), "label argmax planned as a window:\n" + p)
   }
 
-  test("lpa: one exchange per round, keyed on src alone") {
-    // the (src, lab) count and the argmax share the src partitioning;
-    // an exchange keyed on (src, lab) in front of the count is the
-    // extra per-round shuffle this shape removes
-    val p = plan("graph_lpa")
-    assert("""hashpartitioning\(src#\d+L?, \d+""".r.findFirstIn(p).isDefined, p)
-    assert("""hashpartitioning\(src#\d+L?, lab#""".r.findFirstIn(p).isEmpty,
-      "(src, lab) exchange in front of the round count:\n" + p)
+  test("lpa: the plan's exchange count does not grow with the round count") {
+    // the rounds run inside one task per partition of whole components,
+    // so doubling them adds no exchange (a per-round join + aggregate
+    // plan adds one or more per round)
+    def exchanges(rounds: Int): Int = {
+      val pairs = graft.queries.Dedup.minhashPairsFrom(
+        Tables.documents(spark, sf), ordered = false).select("a_id", "b_id")
+      val p = graft.queries.Dedup.lpaFromPairs(pairs, rounds)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      """(?m)^\(\d+\) Exchange""".r.findAllIn(p).size
+    }
+    val four = exchanges(4)
+    assert(four >= 1, "no exchange at all: the doc_id sort is one")
+    assert(exchanges(8) === four)
   }
 
   test("bfs: relaxation is equi-joins + min aggs, never a window") {
